@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
+import graft.ingest.Toa5
 import graft.pipeline.Site
 import graft.sink.{NetCdf, Writers}
 
@@ -92,17 +93,39 @@ object Cli {
   def l2DefaultPath(root: String, site: String): String =
     s"$root/firn_stations/level-2/$site.csv"
 
-  private def loadL1(spark: SparkSession, path: String,
-                     tsCol: String): DataFrame = {
-    // load_level1_dataset (fs_pp.py:168-183): header CSV, parse the
-    // index column as timestamps, everything else numeric
-    val raw = spark.read.option("header", "true")
-      .option("inferSchema", "true")
+  /** load_level1_dataset (fs_pp.py:168-183): the Level-1 CSV read back
+    * with the schema Level-1 wrote (`Toa5.schema`), built from the CSV's
+    * own header line — no `inferSchema`, which costs a full extra read
+    * and types an all-empty column as string. Cells that do not parse
+    * (non-numeric text, the TOA5 'NAN' sentinel) read as null. */
+  private[graft] def loadL1(spark: SparkSession, path: String,
+                            tsCol: String): DataFrame = {
+    val cols = Toa5.namesAtLine(spark, firstDataFile(spark, path), 1,
+      "Level-1 CSV")
+    require(cols.contains(tsCol),
+      s"Level-1 CSV $path has no time column $tsCol")
+    spark.read.option("header", "true")
+      .schema(Toa5.schema(cols, tsCol))
       // nullValue, NOT nanValue: the TOA5 'NAN' sentinel must read as
       // null (Toa5.read's convention) — as Double.NaN it is non-null,
       // so quality-flag imputation skips it and NaN poisons medians
       .option("nullValue", "NAN").csv(path)
-    raw.withColumn(tsCol, col(tsCol).cast("timestamp"))
+  }
+
+  /** `path` itself, or for a directory (Spark's CSV output) its first
+    * visible file in name order — every part file carries the header. */
+  private def firstDataFile(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.getFileStatus(p).isDirectory) path
+    else {
+      val files = fs.listStatus(p).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.map(_.getPath.toString).sorted
+      require(files.nonEmpty, s"Level-1 CSV directory $path has no data file")
+      files.head
+    }
   }
 
   def main(argv: Array[String]): Unit = {
@@ -135,15 +158,23 @@ object Cli {
           guard(spark, outCsv, a.ow, "Level-2")
           guard(spark, outNc, a.ow, "Level-2 NetCDF")
           val l1Path = a.l1file.getOrElse(l1DefaultPath(a.dataRoot, a.site))
+          // ONE Level-2 execution feeds both sinks, as the reference
+          // exports one in-memory dataset (fs_process_l2.py:177-204).
+          // Cached in time order, so both sinks' own time sorts are
+          // satisfied by the cache and do not shuffle again. Released
+          // even when the session is the caller's.
           val l2 = site.level2(loadL1(spark, l1Path, site.cfg.tsCol))
-          Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
-          // export-sized driver-side NetCDF (S8) with the reference's
-          // site attribution (fs_process_l2.py:177-192)
-          NetCdf.writeWide(outNc, l2, site.cfg.tsCol,
-            globalAtts = Seq(
-              NetCdf.Att("site", a.site),
-              NetCdf.Att("source", "graft level-2 pipeline"),
-              NetCdf.Att("timezone", "UTC")))
+            .orderBy(col(site.cfg.tsCol)).persist()
+          try {
+            Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
+            // export-sized driver-side NetCDF (S8) with the reference's
+            // site attribution (fs_process_l2.py:177-192)
+            NetCdf.writeWide(outNc, l2, site.cfg.tsCol,
+              globalAtts = Seq(
+                NetCdf.Att("site", a.site),
+                NetCdf.Att("source", "graft level-2 pipeline"),
+                NetCdf.Att("timezone", "UTC")))
+          } finally l2.unpersist()
           println(s"[cli] level-2 written: $outCsv, $outNc")
       }
     } finally if (pre.isEmpty) spark.stop()

@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,22 +34,39 @@ object Toa5 {
   val FileOrderCol = "__file_seq"
 
   /** Column names from line 2 of a TOA5 file (driver-side probe). */
-  def header(spark: SparkSession, path: String): Seq[String] = {
+  def header(spark: SparkSession, path: String): Seq[String] =
+    namesAtLine(spark, path, 2, "TOA5")
+
+  /** Comma-separated, optionally quoted column names on line `lineNo`
+    * (1-based) of `path` — one tiny sequential driver-side read. */
+  private[graft] def namesAtLine(spark: SparkSession, path: String,
+                                 lineNo: Int, what: String): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val in = fs.open(new org.apache.hadoop.fs.Path(path))
     try {
       val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, "UTF-8"))
-      reader.readLine() // environment header
+      (1 until lineNo).foreach(_ => reader.readLine())
       val names = reader.readLine()
       // a zero-byte / truncated file would NPE on the split with no
       // clue which file lacked its header
       require(names != null,
-        s"TOA5 header: $path has fewer than 2 lines — not a TOA5 file")
+        s"$what header: $path has fewer than $lineNo lines — not a " +
+          s"$what file")
       names.split(",").map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
     } finally in.close()
   }
+
+  /** The column typing `read` applies, and so the schema Level-1 writes:
+    * the time column as timestamp, `RECORD` as bigint, every other
+    * column as double. */
+  def schema(cols: Seq[String], timestampCol: String): StructType =
+    StructType(cols.map(c => StructField(c, c match {
+      case `timestampCol` => TimestampType
+      case "RECORD" => LongType
+      case _ => DoubleType
+    })))
 
   /** Read an ordered list of TOA5 files (bales) into one DataFrame with
     * typed columns plus `__file_seq` preserving bale order (S2). All
@@ -59,9 +78,8 @@ object Toa5 {
            nrows: Option[Int] = None): DataFrame = {
     require(paths.nonEmpty, "no TOA5 files given")
     val cols = header(spark, paths.head)
-    val schema = StructType(cols.map(c => StructField(c, StringType)))
     val raw = spark.read
-      .schema(schema)
+      .schema(StructType(cols.map(c => StructField(c, StringType))))
       .option("header", "false")
       .option("nullValue", "NAN")
       .option("quote", "\"")
@@ -72,7 +90,6 @@ object Toa5 {
     // regardless of file count (a chained CASE would be O(#files) per
     // row and degenerate at thousands of bales). First occurrence wins
     // on duplicate basenames; unmatched files sort last.
-    import spark.implicits._
     // Keys are the last TWO path segments, URI-ENCODED like
     // input_file_name()'s output. Two segments, not one: a serviced
     // file usually KEEPS its bale name (serviced/MainTable5.dat), and
@@ -91,7 +108,12 @@ object Toa5 {
       new org.apache.hadoop.fs.Path(p).toString
         .split("/").takeRight(2).map(uriEncodedSeg).mkString("/")
     }.zipWithIndex.groupMapReduce(_._1)(_._2)(math.min)
-    val orderDf = broadcast(order.toSeq.toDF("__pathkey", FileOrderCol))
+    // an explicit schema, not toDF: deriving a tuple encoder by Scala
+    // reflection costs most of a second on a cold JVM (every CLI run)
+    val orderDf = broadcast(spark.createDataFrame(
+      order.toSeq.map { case (k, i) => Row(k, i) }.asJava,
+      StructType(Seq(StructField("__pathkey", StringType),
+        StructField(FileOrderCol, IntegerType)))))
     // try_* variants: ANSI mode (Spark 4 default) would otherwise throw
     // on the metadata rows / non-numeric cells instead of nulling them
     val data = raw
@@ -107,10 +129,11 @@ object Toa5 {
         coalesce(col(FileOrderCol), lit(1000000000)))
       .drop("__path", "__pathkey")
     val typed = data.select(
-      (cols.map {
-        case c if c == timestampCol => try_to_timestamp(col(c)).as(c)
-        case c if c == "RECORD" => expr(s"try_cast(`$c` AS bigint)").as(c)
-        case c => expr(s"try_cast(`$c` AS double)").as(c)
+      (schema(cols, timestampCol).fields.toSeq.map { f =>
+        (f.dataType match {
+          case TimestampType => try_to_timestamp(col(f.name))
+          case t => col(f.name).try_cast(t)
+        }).as(f.name)
       } :+ col(FileOrderCol)): _*)
     // nrows means the reference's FIRST n rows in ingest order: a
     // bare limit over the multi-file scan takes n ARBITRARY rows

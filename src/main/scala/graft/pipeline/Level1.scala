@@ -15,7 +15,10 @@ import graft.ops.{Cleaning, Joins}
   * is undefined (SURVEY §2.4 D2).
   *
   * Plan shape: read → union → one aggregate (null-column probe) → one
-  * shuffle (row dedup) → one shuffle (keyed window dedup) → result.
+  * shuffle (keyed window dedup) → result. The reference's full-row dedup
+  * needs no shuffle of its own here: exact duplicate rows share a
+  * timestamp, so keep-first-per-timestamp already collapses them to one
+  * of several identical rows.
   */
 object Level1 {
 
@@ -78,8 +81,7 @@ object Level1 {
   }
 
   private def clean(unioned: DataFrame, tsCol: String): DataFrame = {
-    val dropped = Cleaning.dropDuplicateRows(
-      Cleaning.dropAllNullColumns(unioned))
+    val dropped = Cleaning.dropAllNullColumns(unioned)
     // order columns from the POST-drop schema: an all-null RECORD
     // (every cell the NAN sentinel) is removed above, and a window
     // ordering by the vanished column would fail UNRESOLVED_COLUMN

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -25,19 +25,6 @@ object Level2 {
     heightChanges: Seq[Udg.HeightChange],
     ecFamilyRegex: String = """EC\([0-9]+\)""",
     ecCal: Map[String, (Double, Double)] = Map.empty) // col -> (m, c)
-
-  /** Steps 1–3: clamp → drop → regex rename. The renames apply
-    * SIMULTANEOUSLY (one withColumnsRenamed — pandas df.rename
-    * semantics, one projection) rather than a per-column fold, which
-    * cascaded when one rule's target equaled another column's source
-    * and re-analyzed the plan once per column. */
-  def cleanAndRename(l1: DataFrame, cfg: Config): DataFrame = {
-    val clamped = Ranges.applyValidRanges(l1, cfg.validRanges)
-    val dropped = Cleaning.dropColumns(clamped, cfg.removeColumns)
-    val renames = Reshape.regexRenameMap(dropped.columns.toSeq,
-      cfg.renameRules)
-    dropped.withColumnsRenamed(renames)
-  }
 
   /** UDG chain on the RAW level-1 frame: normalise for mount changes,
     * then quality/outlier filter; returns (ts, <udgTarget>) to join back

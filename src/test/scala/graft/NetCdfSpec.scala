@@ -1,87 +1,15 @@
 package graft
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.sink.NetCdf
 import graft.sink.NetCdf.{Att, Dim, Dataset => NcDataset, Var => NcVar}
 
 /** Round-trips the pure-Scala NetCDF classic writer through an
-  * INDEPENDENTLY implemented reader (this file parses bytes straight
+  * INDEPENDENTLY implemented reader (`NcReader` parses bytes straight
   * off the Unidata classic-format spec — it shares no code with the
   * writer), plus structural golden assertions on the raw bytes. */
 class NetCdfSpec extends SparkSpec {
-
-  // --- minimal spec-following reader (independent of the writer) ---
-  private case class RVar(name: String, dimIds: Seq[Int],
-                          atts: Map[String, Any], ncType: Int,
-                          vsize: Int, begin: Int)
-  private case class RFile(numrecs: Int, dims: Seq[(String, Int)],
-                           atts: Map[String, Any], vars: Seq[RVar],
-                           bytes: Array[Byte]) {
-    def data(v: RVar): Array[Double] = {
-      val n = v.dimIds.map(dims(_)._2.toLong).product.toInt
-      val buf = ByteBuffer.wrap(bytes, v.begin, v.vsize)
-        .order(ByteOrder.BIG_ENDIAN)
-      (0 until n).toArray.map { _ =>
-        v.ncType match {
-          case NetCdf.NcDouble => buf.getDouble
-          case NetCdf.NcFloat => buf.getFloat.toDouble
-          case NetCdf.NcInt => buf.getInt.toDouble
-          case t => fail(s"unexpected nc_type $t")
-        }
-      }
-    }
-  }
-
-  private def readNc(path: String): RFile = {
-    val bytes = Files.readAllBytes(Paths.get(path))
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-    assert(buf.get() === 'C'.toByte && buf.get() === 'D'.toByte &&
-      buf.get() === 'F'.toByte && buf.get() === 1.toByte)
-    val numrecs = buf.getInt
-    def name(): String = {
-      val n = buf.getInt
-      val b = new Array[Byte](n); buf.get(b)
-      (0 until (4 - n % 4) % 4).foreach(_ => buf.get())
-      new String(b, "UTF-8")
-    }
-    def attList(): Map[String, Any] = {
-      val tag = buf.getInt; val n = buf.getInt
-      assert(tag === (if (n == 0) 0 else 0x0C))
-      (0 until n).map { _ =>
-        val nm = name()
-        val t = buf.getInt
-        val len = buf.getInt
-        val v: Any = t match {
-          case NetCdf.NcChar =>
-            val b = new Array[Byte](len); buf.get(b)
-            (0 until (4 - len % 4) % 4).foreach(_ => buf.get())
-            new String(b, "UTF-8")
-          case NetCdf.NcDouble =>
-            assert(len === 1); buf.getDouble
-          case NetCdf.NcInt =>
-            assert(len === 1); buf.getInt
-          case o => fail(s"unexpected attr nc_type $o")
-        }
-        nm -> v
-      }.toMap
-    }
-    val dimTag = buf.getInt; val nDims = buf.getInt
-    assert(dimTag === (if (nDims == 0) 0 else 0x0A))
-    val dims = (0 until nDims).map(_ => (name(), buf.getInt))
-    val gatts = attList()
-    val varTag = buf.getInt; val nVars = buf.getInt
-    assert(varTag === (if (nVars == 0) 0 else 0x0B))
-    val vars = (0 until nVars).map { _ =>
-      val nm = name()
-      val rank = buf.getInt
-      val dimIds = (0 until rank).map(_ => buf.getInt)
-      val atts = attList()
-      RVar(nm, dimIds, atts, buf.getInt, buf.getInt, buf.getInt)
-    }
-    RFile(numrecs, dims, gatts, vars, bytes)
-  }
 
   test("netcdf: level2-shaped dataset round-trips byte-exactly") {
     // the reference's export shape: time coordinate, a (time × sensor)
@@ -104,7 +32,7 @@ class NetCdfSpec extends SparkSpec {
           NetCdf.NcFloat, Array(-0.5, -1.5)),
         NcVar("Q", Seq(0), Nil, NetCdf.NcInt, Array(1, 2, 3))))
     NetCdf.write(path, ds)
-    val r = readNc(path)
+    val r = NcReader.read(path)
     assert(r.numrecs === 0)
     assert(r.dims === Seq(("time", 3), ("dtc1_sensor", 2)))
     assert(r.atts === Map("title" -> "fs level-2", "timezone" -> "UTC"))
@@ -138,7 +66,7 @@ class NetCdfSpec extends SparkSpec {
     NetCdf.writeWide(path, df, "ts",
       globalAtts = Seq(Att("site", "fs1")),
       varAtts = Map("udg" -> Seq(Att("units", "m"))))
-    val r = readNc(path)
+    val r = NcReader.read(path)
     assert(r.dims === Seq(("ts", 3)))
     assert(r.atts("site") === "fs1")
     val byName = r.vars.map(v => v.name -> v).toMap
@@ -161,7 +89,7 @@ class NetCdfSpec extends SparkSpec {
       .toDF("ts", "dec").withColumn("dec",
         col("dec").cast("decimal(12,3)"))
     NetCdf.writeWide(dir + "/dec.nc", df, "ts")
-    val r = readNc(dir + "/dec.nc")
+    val r = NcReader.read(dir + "/dec.nc")
     assert(r.vars.map(_.name) === Seq("ts", "dec"))
     assert(r.data(r.vars(1)).toSeq === Seq(1.25, -2.125))
     // int32 fixed-point overflow: |v*1000| > Int.MaxValue must throw,
@@ -192,7 +120,7 @@ class NetCdfSpec extends SparkSpec {
     // string columns are skipped (not representable), never fatal
     val mixed = df.withColumn("label", expr("'x'"))
     NetCdf.writeWide(dir + "/mix.nc", mixed, "ts")
-    assert(readNc(dir + "/mix.nc").vars.map(_.name) === Seq("ts", "dec"))
+    assert(NcReader.read(dir + "/mix.nc").vars.map(_.name) === Seq("ts", "dec"))
   }
 
   test("netcdf: fixed-point int32 encoding matches the reference's") {
@@ -208,7 +136,7 @@ class NetCdfSpec extends SparkSpec {
     NetCdf.writeWide(path, df, "ts",
       varAtts = Map("udg" -> Seq(Att("units", "m"))),
       fixedPointCols = Seq("udg"))
-    val r = readNc(path)
+    val r = NcReader.read(path)
     val udg = r.vars.map(v => v.name -> v).toMap.apply("udg")
     assert(udg.ncType === NetCdf.NcInt)
     assert(udg.atts("scale_factor") === 0.001)

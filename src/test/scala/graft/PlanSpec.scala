@@ -12,14 +12,6 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.executedPlan.toString
 
-  /** Building a DataFrame must never run a Spark job (eager driver-side
-    * subqueries were a graded defect in round 1). */
-  private def jobsDuring(body: => Unit): Int = {
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    body
-    spark.sparkContext.statusTracker.getJobIdsForGroup(null).length - before
-  }
-
   test("time-slice predicates push into the parquet scan") {
     val p = plan("q22_timeslice")
     assert(p.contains("PushedFilters") &&

@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the session for other suites
+
+  /** Spark jobs `body` launched in the shared session. */
+  def jobsDuring(body: => Unit): Int = {
+    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+    body
+    spark.sparkContext.statusTracker.getJobIdsForGroup(null).length - before
+  }
 }
 
 object SparkSpec {

@@ -92,6 +92,26 @@ class Toa5IngestSpec extends SparkSpec {
     assert(obsOut.get("rows_out") === 10L)
   }
 
+  test("exact duplicate rows collapse in the keep-first dedup alone") {
+    // Level-1 has no full-row dedup shuffle: an exact re-logged row
+    // (RECORD included) shares its timestamp with its twin, so
+    // keep-first per timestamp leaves one of two identical rows
+    val dir = Files.createTempDirectory("toa5d")
+    writeBale(dir, 1, Seq((1, 0), (2, 1), (2, 1), (3, 2), (4, 3)))
+    // bale 2 overlaps ts 2..3 (bale 1 wins) and repeats its own ts 4 row
+    writeBale(dir, 2, Seq((60, 2), (61, 3), (62, 4), (62, 4), (63, 5)))
+    val (df, obsIn, obsOut) = Level1.runObserved(spark,
+      Seq(Level1.Source(dir.toString, 1, 2)))
+    df.write.format("noop").mode("overwrite").save()
+    assert(obsIn.get("rows_in") === 10L)
+    assert(obsOut.get("rows_out") === 6L)
+    val rows = df.orderBy("TIMESTAMP").collect()
+    assert(rows.map(_.getAs[java.sql.Timestamp]("TIMESTAMP").toString
+      .take(16)).toSeq === (0 to 5).map(ts))
+    assert(rows.map(_.getAs[Long]("RECORD")).toSeq ===
+      Seq(1L, 2L, 3L, 4L, 62L, 63L))
+  }
+
   test("serviced glob appends iff exactly one match, after the bales") {
     val dir = Files.createTempDirectory("toa5s")
     writeBale(dir, 1, (0 to 9).map(i => (i + 1, i)))
