@@ -201,28 +201,12 @@ object SparkEntry {
     Dedup.clusterLabels(docs, "doc_id", "shingles", k = 8, bands = 4)
   }
 
-  /** Materialize-once cluster labels — `Dedup.clusterLabels`' scaladoc
-    * contract made real instead of prose: the first caller per (JVM,
-    * corpus dir) computes the t12 label table ONCE and persists it via
-    * `Writers.writeWithManifest` (16 cluster-hash shards, min/max
-    * stats); every d5/t56/t57/t72/t86-style report then derives from
-    * the ARTIFACT scan — the LSH shingle/signature pass and the CC
-    * fixpoint never re-run per consumer (plan-locked: the derived
-    * plans contain zero graft_minhash/word_shingles work). t12 itself
-    * stays on the live pipeline so the machinery keeps its own
-    * oracle + bench measurement. The memo is per-JVM: a fresh process
-    * recomputes once (labels are deterministic, so an overwrite is
-    * idempotent); within a process the artifact is reused, which is
-    * exactly the production cadence (one labeling per corpus
-    * snapshot, many consumers). */
-  /** Memoized 8-merge tokenizer per corpus dir. Training is
+  /** Memoized 8-merge tokenizer per corpus snapshot. Training is
     * deterministic (count desc, binary pair-order ties), so
-    * compute-once-per-JVM is an identity — and t71 (ships the table),
-    * t73 (applies it) and t111 (per-source fit) otherwise each re-run
-    * the same 8 driver-looped training jobs for identical output:
-    * the stagedNeardupLabels argument at tokenizer size. */
-  private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String, Long)]]()
+    * compute-once is an identity — and t71 (ships the table), t73
+    * (applies it) and t111 (per-source fit) otherwise each re-run the
+    * same 8 driver-looped training jobs for identical output. */
+  private val mergeMemo = new Stage.Memo[Seq[(String, String, Long)]]
   private def corpusWordCounts(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents")
       .select(explode(TextOps.tokensLower(col("text"))).as("w"))
@@ -230,15 +214,9 @@ object SparkEntry {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
   private def trainedMerges(s: SparkSession,
                             dir: String): Seq[(String, String, Long)] =
-    // keyed by (dir, CONTENT fingerprint), not the path alone — the
-    // same staleness hazard the staged label artifact fixes: an
-    // in-place corpus rewrite (CDC/compaction sinks) must not serve a
-    // stale merge table to t71/t73/t111/d6/t114 for the JVM's
-    // lifetime. The fingerprint is metadata-only (one listing call).
-    mergeMemo.computeIfAbsent(dir + "@" + corpusFingerprint(s, dir),
-      _ => TextOps.bpeTrainMerges(
-        corpusWordCounts(s, dir).localCheckpoint(false), "w", "cnt",
-        numMerges = 8))
+    mergeMemo(s, dir)(TextOps.bpeTrainMerges(
+      corpusWordCounts(s, dir).localCheckpoint(false), "w", "cnt",
+      numMerges = 8))
 
   /** Memoized unigram-LM tokenizer (SentencePiece shape, Kudo 2018)
     * per corpus dir — hard-EM over the bounded word-count table, the
@@ -268,87 +246,32 @@ object SparkEntry {
   private val UnigramSeedCap = 512
   private val UnigramRounds = 3
   private val UnigramMaxWordLen = 16
-  // per-JVM memo: artifact path -> (corpus fingerprint, table). Like
-  // stagedNeardupLabels, the trained table is ALSO staged on disk
-  // as a fingerprint-NAMED file (r14 verdict item #4): training costs
-  // 3 EM rounds of Spark jobs, and the production cadence is one
-  // training per corpus snapshot with many consumers across many
-  // JVMs (t133/t134 encodes, t131's release export). A fresh JVM
-  // whose corpus snapshot is unchanged parses the ~500-row TSV
-  // instead of re-training; an in-place corpus rewrite changes the
-  // metadata fingerprint and forces a rebuild mid-JVM too.
-  private val unigramStaged = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[(String, Long, Long)])]()
   private def unigramWords(s: SparkSession, dir: String): DataFrame =
     corpusWordCounts(s, dir)
       .where(length(col("w")) <= UnigramMaxWordLen)
-  /** Overwrite `path` atomically: write a temp sibling, rename into
-    * place (delete-first for FSes whose rename won't clobber). */
-  private def atomicWrite(fs: org.apache.hadoop.fs.FileSystem,
-                          path: org.apache.hadoop.fs.Path,
-                          bytes: Array[Byte]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (fs.exists(path)) fs.delete(path, false)
-    if (!fs.rename(tmp, path)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(path)) // concurrent writer's identical bytes won
-        throw new java.io.IOException(s"atomic write $path failed")
-    }
-  }
+  /** The trained table, staged per corpus snapshot as `table.tsv` in
+    * the `unigram_table` artifact (r14 verdict item #4): training
+    * costs 3 EM rounds of Spark jobs, and the production cadence is
+    * one training per snapshot with many consumers across many JVMs
+    * (t133/t134 encodes, t131's release export). Every call reads the
+    * ~500-row TSV on the driver — zero Spark jobs, no in-JVM memo. */
   private def trainedUnigram(s: SparkSession,
                              dir: String): Seq[(String, Long, Long)] = {
-    val base = "/tmp/graft_staged/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString + "/unigram_table"
-    val fp = corpusFingerprint(s, dir)
-    // compute() serializes concurrent builders of the same artifact
-    unigramStaged.compute(base, (_, cached) => {
-      if (cached != null && cached._1 == fp) cached
-      else {
-        val conf = s.sparkContext.hadoopConfiguration
-        // ONE atomic file per corpus snapshot, NAMED by the snapshot
-        // fingerprint (r15 advice): a table.tsv + _corpus_fp pair is
-        // two separately-atomic writes, and two JVMs training against
-        // different snapshots can interleave as A.table, B.table,
-        // B.fp, A.fp — pairing B's table with A's sidecar and serving
-        // a wrong trained table silently. Keying the FILENAME by the
-        // fingerprint makes (identity, content) one atomic rename:
-        // readers of fp X only ever see a complete table trained for
-        // X, and writers of different snapshots cannot collide.
-        val tablePath =
-          new org.apache.hadoop.fs.Path(base, s"table.$fp.tsv")
-        val fs = tablePath.getFileSystem(conf)
-        def readFile(p: org.apache.hadoop.fs.Path): Option[String] =
-          try {
-            val in = fs.open(p)
-            try {
-              val buf = new java.io.ByteArrayOutputStream()
-              val chunk = new Array[Byte](8192)
-              var n = in.read(chunk)
-              while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-              Some(buf.toString("UTF-8"))
-            } finally in.close()
-          } catch { case _: java.io.IOException => None }
-        val fromDisk: Option[Seq[(String, Long, Long)]] =
-          readFile(tablePath).map(_.split("\n").iterator
-            .filter(_.nonEmpty).map { line =>
-              val Array(p, c, k) = line.split("\t", 3)
-              (p, c.toLong, k.toLong)
-            }.toSeq)
-        val table = fromDisk.getOrElse {
-          val trained = trainUnigram(s, dir)
-          atomicWrite(fs, tablePath, trained.map { case (p, c, k) =>
-            s"$p\t$c\t$k" }.mkString("\n").getBytes("UTF-8"))
-          trained
-        }
-        (fp, table)
-      }
-    })._2
+    val conf = s.sparkContext.hadoopConfiguration
+    val table = new org.apache.hadoop.fs.Path(
+      Stage.artifact(s, dir, "unigram_table") { tmp =>
+        val tsv = trainUnigram(s, dir).map { case (p, c, k) =>
+          s"$p\t$c\t$k" }.mkString("\n")
+        val f = new org.apache.hadoop.fs.Path(tmp, "table.tsv")
+        val out = f.getFileSystem(conf).create(f, true)
+        try out.write(tsv.getBytes("UTF-8")) finally out.close()
+      }, "table.tsv")
+    val in = table.getFileSystem(conf).open(table)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    text.split("\n").iterator.filter(_.nonEmpty).map { line =>
+      val Array(p, c, k) = line.split("\t", 3)
+      (p, c.toLong, k.toLong)
+    }.toSeq
   }
 
   /** UTF-8 byte order (unsigned lexicographic) — the collation vocab
@@ -422,12 +345,6 @@ object SparkEntry {
         table.map { case (p, cost) => (p, lastCounts(p), cost) }
   }
 
-  /** TEST hook: drop the per-JVM unigram memo so a spec can prove
-    * the on-disk artifact round-trips across "fresh JVM" boundaries
-    * (the disk sidecar, not this map, is the cross-process cache). */
-  private[graft] def resetUnigramMemoForTest(): Unit =
-    unigramStaged.clear()
-
   /** Distinct corpus words (≤16 chars) with their Viterbi piece
     * arrays under the trained table — the shared encode intermediate
     * of t133/t134 (vocabulary-sized; docs join it back by word). */
@@ -452,16 +369,12 @@ object SparkEntry {
     nQuar: Long, docs: DataFrame, gatePass: DataFrame, kb: DataFrame,
     kept: DataFrame, art: DataFrame, vocabSize: Long)
 
-  // per-JVM memo: release root -> (appId, corpus fingerprint, run).
   // The chain is deterministic per (dir, corpus snapshot), and before
   // r16 each of t131 and t135 ran it INDEPENDENTLY — the suite paid
   // the whole ingest→gates→dedup→redact→budget chain twice per corpus
-  // (~40 s duplicated at 100×). Same discipline as trainedUnigram:
-  // metadata fingerprint keys the snapshot (an in-place corpus
-  // rewrite rebuilds), the appId guards against serving checkpointed
-  // frames from a stopped session.
-  private val releaseMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, ReleaseRun)]()
+  // (~40 s duplicated at 100×). The memo's appId guard keeps it from
+  // serving checkpointed frames of a stopped session.
+  private val releaseMemo = new Stage.Memo[ReleaseRun]
   // each chain EXECUTION owns a fresh, never-rewritten run dir
   // (appId + a per-JVM sequence): once a dir is published via
   // _latest, NOTHING writes under it again — a same-session re-run
@@ -475,27 +388,14 @@ object SparkEntry {
   // the export + publish completes
   private val releaseExported = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.Boolean]()
-  /** TEST hook (ReleasePipelineSpec): drop the per-JVM release memo
-    * so a spec can prove rebuild-on-corpus-rewrite within one JVM. */
-  private[graft] def resetReleaseMemoForTest(): Unit = releaseMemo.clear()
   /** TEST hook: the run dir the chain currently resolves to. */
   private[graft] def releaseRunDirForTest(s: SparkSession,
                                           dir: String): String =
     releaseChain(s, dir).relDir
 
-  private def releaseChain(s: SparkSession, dir: String): ReleaseRun = {
-    val relRoot = "/tmp/graft_release/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString
-    val fp = corpusFingerprint(s, dir)
-    val appId = s.sparkContext.applicationId
-    releaseMemo.compute(relRoot, (_, cached) => {
-      if (cached != null && cached._1 == appId && cached._2 == fp) cached
-      else (appId, fp, runReleaseChain(s, dir, relRoot))
-    })._3
-  }
+  private def releaseChain(s: SparkSession, dir: String): ReleaseRun =
+    releaseMemo(s, dir)(
+      runReleaseChain(s, dir, s"/tmp/graft_release/${Stage.key(dir)}"))
 
   private def runReleaseChain(s: SparkSession, dir: String,
                               relRoot: String): ReleaseRun = {
@@ -657,48 +557,20 @@ object SparkEntry {
     })
   }
 
-  /** Cheap corpus fingerprint: md5 over the (name, length, mtime) of
-    * every file under `dir/documents.parquet` — pure filesystem
-    * metadata, zero data read, O(#part-files) namenode/listing calls
-    * (the same cost class as planning a scan of the corpus). An
-    * in-place rewrite by the engine's own CDC/compaction sinks
-    * changes lengths/mtimes, so stale labels can't survive it; a
-    * pure re-read never invalidates. */
-  private def corpusFingerprint(s: SparkSession, dir: String,
-                                table: String = "documents"): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(conf)
-    val sb = new StringBuilder
-    val it = fs.listFiles(p, true)
-    var entries = List.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      entries = s"${st.getPath}:${st.getLen}:${st.getModificationTime}" ::
-        entries
-    }
-    entries.sorted.foreach(e => sb.append(e).append('\n'))
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sb.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
   /** Table row count from parquet FOOTER stats — the snapshot-
     * manifest lookup a production engine does (r14 verdict #6), not
     * a scan: one driver-side footer read per part-file (the same
     * metadata I/O class as planning the scan), memoized per corpus
-    * fingerprint so repeat executions in a JVM cost zero jobs.
+    * snapshot so repeat executions in a session cost zero jobs.
     * t10/t62 size their SRP-plane / centroid counts from this;
     * previously each EXECUTION re-ran a full-scan `count()` job.
     * Falls back to `count()` for sources without readable footers. */
-  private val rowCountMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Long]()
+  private val rowCountMemo = new Stage.Memo[Long]
   /** t10's adaptive-banding density sweep, memoized per corpus
     * snapshot: the per-plane pair masses are a pure function of the
     * corpus bytes, so one probe job per snapshot serves every later
     * plan construction (bench pass 2, repeated runs). */
-  private val srpPlanesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Integer]()
+  private val srpPlanesMemo = new Stage.Memo[Int]
 
   /** Measured SRP plane sweep (r19, after the 1000× probe killed the
     * modeled single-shot correction): ONE ids-only histogram at
@@ -737,132 +609,43 @@ object SparkEntry {
   }
   private def tableRowCount(s: SparkSession, dir: String,
                             table: String): Long =
-    rowCountMemo.computeIfAbsent(
-      s"$dir/$table@" + corpusFingerprint(s, dir, table),
-      _ => try {
-        val conf = s.sparkContext.hadoopConfiguration
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-        val fs = p.getFileSystem(conf)
-        val it = fs.listFiles(p, true)
-        var total = 0L
-        while (it.hasNext) {
-          val st = it.next()
-          val name = st.getPath.getName
-          if (st.isFile && name.endsWith(".parquet") &&
-              !name.startsWith("_") && !name.startsWith(".")) {
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(st.getPath, conf))
-            try total += r.getRecordCount finally r.close()
-          }
-        }
-        java.lang.Long.valueOf(total)
-      } catch { case scala.util.control.NonFatal(_) =>
-        java.lang.Long.valueOf(T(s, dir, table).count())
-      })
-
-  // per-JVM memo: path -> corpus fingerprint the artifact was built
-  // from. Every call re-stats the corpus (cheap — metadata only) and
-  // rebuilds on mismatch, so an in-place corpus rewrite mid-JVM can
-  // never serve stale cluster labels; a fresh JVM reuses a previous
-  // process's artifact when the on-disk fingerprint sidecar still
-  // matches (the production cadence: one labeling per corpus
-  // snapshot, many consumers across many jobs).
-  /** Shared staging protocol for the per-corpus-snapshot /tmp
-    * artifacts (r17 advice): ensure `path` holds an artifact built
-    * from fingerprint `fp`.
-    *  - Serve only when the on-disk `_corpus_fp` sidecar still
-    *    matches — the in-process memo alone is not enough, because an
-    *    external /tmp cleaner deleting the artifact mid-JVM would
-    *    otherwise fail every subsequent read until restart; the
-    *    sidecar re-check turns that into a rebuild.
-    *  - Build into a process-private `.tmp.<pid>` dir renamed into
-    *    place, so two JVMs staging the same path never interleave
-    *    partial writes: each rename lands a COMPLETE artifact (same
-    *    fingerprint → identical bytes), and a lost race just defers
-    *    to the winner's copy.
-    * The ConcurrentHashMap.compute still serializes in-JVM builders
-    * of the same artifact. */
-  private val stagedFpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def ensureStaged(s: SparkSession, path: String, fp: String)
-                          (build: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    stagedFpMemo.compute(path, (_, _) => {
-      val target = new org.apache.hadoop.fs.Path(path)
-      val fpPath = new org.apache.hadoop.fs.Path(path, "_corpus_fp")
-      val fs = fpPath.getFileSystem(conf)
-      def readFp(): Option[String] =
-        try {
-          val in = fs.open(fpPath)
-          try {
-            val buf = new Array[Byte](64)
-            val n = in.read(buf)
-            Some(new String(buf, 0, math.max(n, 0), "UTF-8"))
-          } finally in.close()
-        } catch { case _: java.io.IOException => None }
-      if (!readFp().contains(fp)) {
-        val tmp = new org.apache.hadoop.fs.Path(
-          path + ".tmp." + ProcessHandle.current().pid())
-        fs.delete(tmp, true)
-        build(tmp.toString)
-        val out = fs.create(
-          new org.apache.hadoop.fs.Path(tmp, "_corpus_fp"), true)
-        try out.write(fp.getBytes("UTF-8")) finally out.close()
-        // rename onto a FRESH path only: it lands atomically with no
-        // window where a concurrent reader of `path` sees nothing
-        // (the old unconditional delete-then-rename had one even when
-        // nothing was stale). An EXISTING target must be deleted
-        // first — Hadoop's FileSystem rename onto an existing
-        // directory does NOT refuse, it moves the source INSIDE the
-        // destination (and returns true), nesting the fresh build
-        // under the stale one; `renamedClean` detects that case and
-        // undoes it. A lost cross-process race (the target appearing
-        // with OUR fingerprint → identical bytes) defers to the
-        // winner instead of clobbering it; any other rename failure
-        // throws rather than silently discarding the fresh build.
-        def renamedClean(): Boolean = fs.rename(tmp, target) && {
-          val nested =
-            new org.apache.hadoop.fs.Path(target, tmp.getName)
-          if (fs.exists(nested)) { fs.delete(nested, true); false }
-          else true
-        }
-        if (fs.exists(target) && readFp().contains(fp)) {
-          // a race winner already staged these exact bytes
-          fs.delete(tmp, true)
-        } else {
-          if (fs.exists(target)) fs.delete(target, true)
-          if (!renamedClean()) {
-            if (readFp().contains(fp)) fs.delete(tmp, true)
-            else {
-              fs.delete(target, true)
-              if (!renamedClean()) {
-                if (readFp().contains(fp)) fs.delete(tmp, true)
-                else throw new java.io.IOException(
-                  s"ensureStaged: rename $tmp -> $target failed and " +
-                    "the target does not hold the expected fingerprint")
-              }
-            }
-          }
+    rowCountMemo(s, dir, table)(try {
+      val conf = s.sparkContext.hadoopConfiguration
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+      val fs = p.getFileSystem(conf)
+      val it = fs.listFiles(p, true)
+      var total = 0L
+      while (it.hasNext) {
+        val st = it.next()
+        val name = st.getPath.getName
+        if (st.isFile && name.endsWith(".parquet") &&
+            !name.startsWith("_") && !name.startsWith(".")) {
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(st.getPath, conf))
+          try total += r.getRecordCount finally r.close()
         }
       }
-      fp
+      total
+    } catch { case scala.util.control.NonFatal(_) =>
+      T(s, dir, table).count()
     })
-  }
 
+  /** Materialize-once cluster labels — `Dedup.clusterLabels`' scaladoc
+    * contract made real instead of prose: the first caller per corpus
+    * snapshot computes the t12 label table ONCE and stages it via
+    * `Writers.writeWithManifest` (16 cluster-hash shards, min/max
+    * stats); every d5/t56/t57/t72/t86-style report then derives from
+    * the ARTIFACT scan — the LSH shingle/signature pass and the CC
+    * fixpoint never re-run per consumer (plan-locked: the derived
+    * plans contain zero graft_minhash/word_shingles work). t12 itself
+    * stays on the live pipeline so the machinery keeps its own
+    * oracle + bench measurement. A fresh JVM reuses the artifact of
+    * an unchanged snapshot — the production cadence: one labeling per
+    * corpus snapshot, many consumers across many jobs. */
   private def stagedNeardupLabels(s: SparkSession,
                                   dir: String): DataFrame = {
-    // readable prefix + an md5 suffix of the RAW dir: the character
-    // sanitization alone is lossy ("/tmp/a/b" and "/tmp/a_b" collide)
-    // and colliding keys would silently serve one corpus's labels to
-    // another's queries
-    val path = "/tmp/graft_staged/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString + "/cluster_labels"
-    val fp = corpusFingerprint(s, dir)
-    ensureStaged(s, path, fp) { tmp =>
+    val path = Stage.artifact(s, dir, "cluster_labels") { tmp =>
       graft.sink.Writers.writeWithManifest(
         neardupLabels(s, dir)
           .withColumn("shard", pmod(col("cluster_id"), lit(16L))),
@@ -874,26 +657,19 @@ object SparkEntry {
   /** Trained bitext IVF centroids STAGED per corpus snapshot (r16
     * verdict #4): the Lloyd retrain is a corpus-sized pass, and t137 /
     * t137b / t137c each re-ran it per query (and per bench pass) over
-    * the same corpus. Same discipline as `stagedNeardupLabels`: the
-    * artifact lives under /tmp keyed by the corpus FINGERPRINT (plus
-    * the index shape — tag, k, and the hierarchical floor, because the
-    * retrain's own assignment dispatches on the floor), every call
-    * re-stats the corpus and rebuilds on mismatch, and a fresh JVM
-    * reuses a previous process's centroids. Parquet round-trips the
-    * trained doubles exactly (they are micro-quantized integer means),
-    * so staged == inline values. `corpus` is by-name: only a cache
-    * miss pays its construction. */
+    * the same corpus. Same discipline as `stagedNeardupLabels`, keyed
+    * by the embeddings snapshot plus the index shape — tag, k, and the
+    * hierarchical floor, because the retrain's own assignment
+    * dispatches on the floor. Parquet round-trips the trained doubles
+    * exactly (they are micro-quantized integer means), so staged ==
+    * inline values. `corpus` is by-name: only a cache miss pays its
+    * construction. */
   private def stagedBitextCents(s: SparkSession, dir: String,
                                 tag: String, corpus: => DataFrame,
                                 k: Long): DataFrame = {
-    val path = "/tmp/graft_staged/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString +
-      s"/bitext_cents_${tag}_k${k}_f${graft.ops.Vectors.HierarchicalFloor}"
-    val fp = corpusFingerprint(s, dir, "embeddings")
-    ensureStaged(s, path, fp) { tmp =>
+    val name =
+      s"bitext_cents_${tag}_k${k}_f${graft.ops.Vectors.HierarchicalFloor}"
+    val path = Stage.artifact(s, dir, name, "embeddings") { tmp =>
       val e = corpus
       lloydCentroids(e,
         e.where(col("vec_id") < k).select(col("vec_id").as("cid"),
@@ -2570,20 +2346,19 @@ object SparkEntry {
       TextOps.gopherPass(TextOps.tokensLower(col("text")))
         .cast("long").as("y"))
 
-  /** Memoized 8-step GD training per corpus dir (the trainedMerges
-    * argument: training is deterministic, so compute-once-per-JVM is
-    * an identity and t115 (ships the model) + t116 (audits it) share
-    * one run). Returns (bucket → w_micro, bias_micro, the
+  /** Memoized 8-step GD training per corpus snapshot (the
+    * trainedMerges argument: training is deterministic, so
+    * compute-once is an identity and t115 (ships the model) + t116
+    * (audits it) share one run). Returns (bucket → w_micro, bias_micro, the
     * checkpointed feature table) — the features ride along so the
     * audit's scoring pass reuses the materialization instead of
     * re-tokenizing the corpus. All integer truncating division —
     * see the t115 query comment for the cross-engine exactness
     * contract. */
-  private val distillMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Map[String, Long], Long, DataFrame)]()
+  private val distillMemo = new Stage.Memo[(Map[String, Long], Long, DataFrame)]
   private def distilledModel(
       s: SparkSession, dir: String): (Map[String, Long], Long, DataFrame) =
-    distillMemo.computeIfAbsent(dir, _ => {
+    distillMemo(s, dir) {
       val x = hashedFeaturePpm(s, dir).localCheckpoint(false)
       // The trained model is STAGED per corpus snapshot (r18 verdict
       // #5 — the 8 GD steps are ~12 corpus-sized jobs, and they made
@@ -2592,15 +2367,9 @@ object SparkEntry {
       // cluster labels and bitext centroids). Training is
       // deterministic integer arithmetic, and parquet round-trips
       // the 256 bucket weights + bias exactly, so staged == inline
-      // values. The feature table `x` still materializes per JVM —
-      // the scoring consumers read it either way.
-      val path = "/tmp/graft_staged/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString + "/distill_model"
-      val fp = corpusFingerprint(s, dir)
-      ensureStaged(s, path, fp) { tmp =>
+      // values. The feature table `x` still materializes per session
+      // — the scoring consumers read it either way.
+      val path = Stage.artifact(s, dir, "distill_model") { tmp =>
         val lblm = teacherLabels(s, dir)
           .join(x.select("doc_id").distinct(), Seq("doc_id"))
           .localCheckpoint(false)
@@ -2653,7 +2422,7 @@ object SparkEntry {
       val bias = rows.collectFirst { case ("__bias", v) => v }.get
       val w = rows.filterNot(_._1 == "__bias").toMap
       (w, bias, x)
-    })
+    }
 
   /** Per-doc student verdict (doc_id, z, sp, st) off the memoized
     * model — the scoring kernel shared by t116 (confusion audit) and
@@ -4555,11 +4324,8 @@ object SparkEntry {
       // sweep is a pure function of the corpus bytes, so repeated
       // plan constructions (bench pass 2, re-runs in one JVM) skip
       // the scan.
-      val planes = srpPlanesMemo.computeIfAbsent(
-        s"$dir@" + corpusFingerprint(s, dir, "embeddings") +
-          "#" + basePlanes,
-        _ => Integer.valueOf(
-          srpPlaneSweep(corpus, "v", basePlanes, nCorpus))).intValue()
+      val planes = srpPlanesMemo(s, dir, "embeddings", basePlanes.toString)(
+        srpPlaneSweep(corpus, "v", basePlanes, nCorpus))
       val pairs = Dedup.srpCandidatePairs(corpus, "vec_id", "v",
         dims = 64, planes = planes)
       val va = corpus.select(col("vec_id").as("id_a"), col("v").as("__va"))
@@ -7483,11 +7249,7 @@ object SparkEntry {
     // the gated output — the oracle pins it to 0.
     "t124_tfrecord_export" -> ((s, dir) => {
       import s.implicits._
-      val out = "/tmp/graft_tfrec/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString
+      val out = s"/tmp/graft_tfrec/${Stage.key(dir)}"
       val docs = T(s, dir, "documents").select(
         col("doc_id"),
         substring(md5(col("doc_id").cast("string")), 1, 1).as("shard"),

@@ -10,6 +10,11 @@ object Verify {
     // iteration aid; the driver always runs the full set)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, // a typo'd filter silently dumping nothing
+        s"Verify: unknown queries ${unknown.mkString(", ")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

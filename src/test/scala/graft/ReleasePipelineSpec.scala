@@ -149,11 +149,7 @@ class ReleasePipelineSpec extends SparkSpec {
     "TFRecord export is readable") {
     import graft.sink.Release
     run().collect()
-    val relRoot = "/tmp/graft_release/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(sfDir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString
+    val relRoot = s"/tmp/graft_release/${Stage.key(sfDir)}"
     val latest = Release.resolveLatest(
       spark.sparkContext.hadoopConfiguration, relRoot)
     assert(latest.isDefined, s"no _latest under $relRoot")

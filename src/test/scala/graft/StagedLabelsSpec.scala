@@ -66,6 +66,30 @@ class StagedLabelsSpec extends SparkSpec {
       "stale staged labels served after an in-place corpus rewrite")
   }
 
+  test("the distilled model tracks corpus CONTENT — after an in-place " +
+    "rewrite t115/t116 equal a run on a fresh dir holding the new corpus") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-distill-spec").toString
+    val fresh = java.nio.file.Files
+      .createTempDirectory("graft-distill-fresh").toString
+    val src = spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+    src.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def result(q: String, d: String): Seq[String] =
+      SparkEntry.queries(q)(spark, d).collect().map(_.toString).sorted.toSeq
+    val before = result("t115_logreg_distill", dir)
+    // in-place rewrite with a different subset; the path-keyed memo
+    // would keep serving the model trained on the full corpus
+    val subset = src.where(col("doc_id") % 3 =!= 0)
+    subset.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    subset.write.mode("overwrite").parquet(s"$fresh/documents.parquet")
+    for (q <- Seq("t115_logreg_distill", "t116_distill_audit"))
+      assert(result(q, dir) === result(q, fresh),
+        s"$q served a stale distilled model after an in-place rewrite")
+    assert(result("t115_logreg_distill", fresh) !== before,
+      "the subset must train a different model for this test to bite")
+  }
+
   test("staged bitext centroids track corpus content and round-trip " +
     "the trained values exactly") {
     import spark.implicits._

@@ -80,8 +80,9 @@ class UnigramSpec extends SparkSpec {
     assert(first.getAs[Long]("n_pieces") === 3L)
   }
 
-  test("staged artifact: a fresh JVM (memo cleared) reuses the " +
-    "on-disk trained table; an in-place corpus rewrite rebuilds it") {
+  test("staged artifact: a reuse run serves the on-disk table " +
+    "untouched; an in-place corpus rewrite stages a new snapshot dir " +
+    "and removes the old one") {
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-unigram-stage").toString
@@ -89,47 +90,41 @@ class UnigramSpec extends SparkSpec {
       (30 until 40).map(i => (i.toLong, "web", "qr")))
       .toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val staged = new java.io.File("/tmp/graft_staged/" +
-      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8"))
-        .take(6).map("%02x".format(_)).mkString + "/unigram_table")
     def run() = SparkEntry.queries("t132_unigram_train")(spark, dir)
       .collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    // the artifact is ONE file NAMED by the corpus fingerprint
-    // (table.<fp>.tsv — identity and content land in one atomic
-    // rename, so cross-JVM writers of different snapshots can never
-    // pair one snapshot's table with another's identity)
-    def stagedTables(): Seq[java.io.File] =
-      Option(staged.listFiles()).getOrElse(Array.empty).toSeq
-        .filter(f => f.getName.startsWith("table.") &&
-          f.getName.endsWith(".tsv"))
+        (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    // the current snapshot's artifact dir (<name>/<fp>), which the
+    // query must already have staged
+    def artifact(): java.io.File = new java.io.File(
+      Stage.artifact(spark, dir, "unigram_table")(_ =>
+        fail("t132 did not stage the unigram table")))
+    def snapshots(): Set[String] =
+      Option(artifact().getParentFile.listFiles()).getOrElse(Array.empty)
+        .map(_.getName).filterNot(_.startsWith(".")).toSet
     val r1 = run()
-    val tsvs1 = stagedTables()
-    assert(tsvs1.size === 1, s"expected one staged table: $tsvs1")
-    val tsv = tsvs1.head
+    val a1 = artifact()
+    val tsv = new java.io.File(a1, "table.tsv")
+    assert(tsv.isFile, s"no table.tsv in $a1")
     val mtime1 = tsv.lastModified()
-    // "fresh JVM": only the DISK artifact survives a memo clear —
-    // the re-run must parse it back, not re-train (mtime unchanged)
-    SparkEntry.resetUnigramMemoForTest()
+    // there is no in-JVM memo: the re-run parses the disk artifact
+    // back, and must not re-train (mtime unchanged)
     Thread.sleep(1100) // fs mtime granularity
     val r2 = run()
-    assert(r2.toSeq === r1.toSeq, "staged table drifted on reuse")
+    assert(r2 === r1, "staged table drifted on reuse")
     assert(tsv.lastModified() === mtime1,
       "reuse path rewrote the artifact (re-trained?)")
-    // in-place corpus rewrite → metadata fingerprint changes → the
-    // stale table must NOT be served, from memo or disk: a NEW
-    // fingerprint-named artifact appears (the stale one may linger —
-    // its name can never match the new snapshot)
+    // in-place corpus rewrite → metadata fingerprint changes → a NEW
+    // <fp> dir is staged and the stale snapshot's dir is removed
     ((0 until 40).map(i => (i.toLong, "web", "mn mn mn")))
       .toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    SparkEntry.resetUnigramMemoForTest()
     val r3 = run()
-    assert(stagedTables().map(_.getName).toSet.size === 2,
-      s"corpus rewrite did not stage a new table: ${stagedTables()}")
-    assert(r3.exists(_._1 == "mn") && !r3.exists(_._1 == "xyxy"),
-      s"rebuilt table still reflects the old corpus: ${r3.map(_._1)}")
+    val a3 = artifact()
+    assert(a3 !== a1, "corpus rewrite did not stage a new snapshot dir")
+    assert(!a1.exists(), s"stale snapshot dir $a1 survived the rebuild")
+    assert(snapshots() === Set(a3.getName))
+    assert(r3.map(_._1).toSet.subsetOf(Set("m", "n", "mn")) &&
+      r3.exists(_._1 == "mn"),
+      s"rebuilt table does not reflect only the new corpus: ${r3.map(_._1)}")
   }
 }
