@@ -112,6 +112,13 @@ object Cli {
       .option("nullValue", "NAN").csv(path)
   }
 
+  /** The Level-2 frame `l2` persists: the site's Level-2 plan over the
+    * Level-1 CSV at `l1Path`, in time order. */
+  private[graft] def level2Frame(spark: SparkSession, site: Site.Spec,
+                                 l1Path: String): DataFrame =
+    site.level2(loadL1(spark, l1Path, site.cfg.tsCol))
+      .orderBy(col(site.cfg.tsCol))
+
   /** `path` itself, or for a directory (Spark's CSV output) its first
     * visible file in name order — every part file carries the header. */
   private def firstDataFile(spark: SparkSession, path: String): String = {
@@ -163,8 +170,7 @@ object Cli {
           // Cached in time order, so both sinks' own time sorts are
           // satisfied by the cache and do not shuffle again. Released
           // even when the session is the caller's.
-          val l2 = site.level2(loadL1(spark, l1Path, site.cfg.tsCol))
-            .orderBy(col(site.cfg.tsCol)).persist()
+          val l2 = level2Frame(spark, site, l1Path).persist()
           try {
             Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
             // export-sized driver-side NetCDF (S8) with the reference's

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Cleaning operators: all-null column drop (P1), full-row dedup (D1),
-  * ordered keep-first key dedup (D2).
+/** Cleaning operators: all-null column drop (P1) and ordered keep-first
+  * key dedup (D2). The reference's full-row dedup (D1) needs no operator
+  * of its own: exact duplicates share a timestamp, so D2 collapses them
+  * on Level-1, and `Udg.filterMasked` emits them once on Level-2.
   *
   * Reference semantics: cassandra_fs_pp/fs_pp.py:92-106 — after the bale
   * union the pipeline drops columns that are entirely NaN, drops exact
@@ -14,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: P1 is one aggregate pass (map-side combinable counts) and a
   * driver decision — O(cols) driver state, no data movement beyond the agg.
-  * D1/D2 shuffle on their keys once; D2 uses a window over the key only
+  * D2 shuffles on its keys once and uses a window over the key only
   * (hash partition by key, no global sort). Keep-first requires an explicit
   * arrival-order tiebreak — Spark row order is otherwise undefined.
   */
@@ -34,9 +36,6 @@ object Cleaning {
     if (keep.length == df.columns.length) df
     else df.select(keep.map(col).toSeq: _*)
   }
-
-  /** D1 — exact full-row deduplication (fs_pp.py:98-101). */
-  def dropDuplicateRows(df: DataFrame): DataFrame = df.dropDuplicates()
 
   /** D2 — keep the FIRST row per key in `orderCols` order
     * (fs_pp.py:102-104, `~index.duplicated()`). A bare

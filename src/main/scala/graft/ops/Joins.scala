@@ -5,12 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Join operators J1–J6: union-by-name, time alignment, broadcast lookup
-  * with fallback, reindex (semi join), and as-of join.
+  * with fallback, and as-of join (J5, the UDG reindex, is part of
+  * `Udg.filterMasked`'s one pass).
   *
   * Reference semantics: fs_pp.py:92,149,216 (vertical concat across bales),
   * fs_process_l2.py:113 (horizontal concat on the time index),
   * fs_pp.py:584-594 (per-sensor calibration lookup with mean fallback),
-  * fs_pp.py:566 (reindex filtered series at original sample times),
   * fs_pp.py:621-625 (first UDG reading at/after a TDR install date).
   *
   * Scale notes: dim tables here are ≤ thousands of rows → `broadcast()`
@@ -66,12 +66,6 @@ object Joins {
       d.withColumn(c, coalesce(col(c), lit(fb(i))))
     }
   }
-
-  /** J5 — reindex: keep only rows of `df` whose key exists in `keys`
-    * (pandas `filt[udg.index]`). Left-semi join — no column duplication,
-    * broadcastable when `keys` is small. */
-  def reindexTo(df: DataFrame, keys: DataFrame, on: Seq[String]): DataFrame =
-    df.join(keys.select(on.map(col): _*).distinct(), on, "left_semi")
 
   /** J6 — as-of join: for each left row, attach the most recent right row
     * with `right.ts <= left.ts` within the same key. Implemented as a

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Time-window operators W1–W6: rolling median/mean over time-range frames,
-  * resample-to-grid, limited forward-fill, linear interpolation, lag-diff,
-  * modal sampling interval.
+  * resample-to-grid, limited forward-fill, linear interpolation, lag-diff
+  * (the modal sampling interval, A2, is `Udg.modalIntervalSec`).
   *
   * Reference semantics: pandas `rolling('2D').median()` (fs_pp.py:562),
   * `rolling('3D', center=True).median()` (fs_process_l2.py:71),
@@ -282,36 +282,5 @@ object Windows {
       .withColumn(out,
         col("__tloff") + coalesce(sum(col("__tlv")).over(wIn), lit(0L)))
       .drop("__tlb", "__tlv", "__tloff")
-  }
-
-  /** A2 — modal spacing between consecutive timestamps, in seconds
-    * (fs_pp.py:557-558 infers the logger cadence). Returns the most common
-    * positive gap; ties break toward the smaller gap. Driver scalar. */
-  def modalIntervalSec(df: DataFrame, tsCol: String,
-                       partCols: Seq[String]): Long = {
-    val part = partCols.map(col)
-    val w = Window.partitionBy(part: _*).orderBy(col(tsCol))
-    val gaps = df
-      .select((unix_micros(col(tsCol)) -
-        lag(unix_micros(col(tsCol)), 1).over(w)).as("__gap"))
-      .where(col("__gap").isNotNull)
-      .groupBy("__gap").count()
-      .orderBy(desc("count"), asc("__gap"))
-      .limit(1).collect()
-    // fail with CONTEXT, not a bare NoSuchElementException from
-    // head(): no gaps means no key has two readings to infer from
-    require(gaps.nonEmpty,
-      "modalIntervalSec: no consecutive-reading gaps — every key " +
-        "has fewer than 2 rows; a cadence cannot be inferred")
-    val modal = gaps(0).getLong(0)
-    // a sub-second or fractional-second cadence would silently
-    // truncate (500 ms → 0, feeding resampleGrid an illegal
-    // zero-second step; 1.5 s → a wrong 1 s grid): reject loudly —
-    // the second-granular API is the TOA5-logger contract
-    require(modal > 0 && modal % MicrosPerSec == 0,
-      s"modalIntervalSec: modal gap is $modal µs — not a whole " +
-        "positive number of seconds; this API is second-granular " +
-        "(TOA5 cadences); resample such data on a µs grid instead")
-    modal / MicrosPerSec
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 
 /** Level-1 → Level-2: physical-range clamping, schema rename, UDG
-  * normalisation + filtering, EC calibration, dedup — then long-form
+  * normalisation + filtering, EC calibration — then long-form
   * export and the per-sensor depth recurrence.
   *
   * Reference lifecycle §3.2 (fs_pp.py:263-299, bin/fs_process_l2.py).
@@ -25,18 +25,6 @@ object Level2 {
     heightChanges: Seq[Udg.HeightChange],
     ecFamilyRegex: String = """EC\([0-9]+\)""",
     ecCal: Map[String, (Double, Double)] = Map.empty) // col -> (m, c)
-
-  /** UDG chain on the RAW level-1 frame: normalise for mount changes,
-    * then quality/outlier filter; returns (ts, <udgTarget>) to join back
-    * (fs_pp.py:283-288). `keyCols` empty = single station. */
-  def udgSeries(l1: DataFrame, cfg: Config, udgTarget: String): DataFrame = {
-    val base = l1.select(col(cfg.tsCol), col(cfg.udgKey), col(cfg.qKey))
-    val normed = Udg.normalise(base, cfg.udgKey, cfg.tsCol,
-      cfg.heightChanges)
-    val filtered = Udg.filter(normed, cfg.udgKey, cfg.qKey, cfg.tsCol,
-      keyCols = Nil)
-    filtered.select(col(cfg.tsCol), col(cfg.udgKey).as(udgTarget))
-  }
 
   /** EC calibration on wide columns: per-column (m, c) with mean
     * fallback, y = m·(1−x) + c — driver map → pure expressions, no join
@@ -57,24 +45,40 @@ object Level2 {
     }
   }
 
+  /** The filtered UDG series' working column until it takes
+    * `udgTarget`'s name. */
+  private val UdgIn = "__udg_l2"
+
   /** Full wide-table L2 in the REFERENCE's step order: clamp/drop →
     * EC calibration on the RAW EC(n) names (fs_pp.py runs
     * _calibrate_ec against level-1 and renames afterwards — which is
     * why Config's default ecFamilyRegex is the raw pattern; the old
     * order calibrated after the rename, where the default regex
     * matched nothing and calibration silently skipped) → rename →
-    * UDG series at its renamed target → final dedup. */
+    * UDG series at its renamed target (fs_pp.py:283-288).
+    *
+    * The UDG input is normalised and quality-masked on the RAW
+    * Level-1 row, so clamping, `removeColumns` and the rename cannot
+    * touch it; it rides through the wide projections and ONE
+    * `Udg.filterMasked` pass filters it in place — one scan of
+    * Level-1, no join back. That pass also emits exact duplicate rows
+    * once, which is all the reference's final dedup does on a
+    * timestamp-unique Level-1. */
   def run(l1: DataFrame, cfg: Config, udgTarget: String): DataFrame = {
-    val clamped = Ranges.applyValidRanges(l1, cfg.validRanges)
+    require(!l1.columns.contains(UdgIn),
+      s"Level2.run: Level-1 already has a $UdgIn column")
+    val normed = Udg.normalise(l1.withColumn(UdgIn, col(cfg.udgKey)),
+      UdgIn, cfg.tsCol, cfg.heightChanges)
+    val withUdg = normed.withColumn(UdgIn,
+      Udg.qualityMasked(col(UdgIn), col(cfg.qKey)))
+    val clamped = Ranges.applyValidRanges(withUdg, cfg.validRanges)
     val dropped = Cleaning.dropColumns(clamped, cfg.removeColumns)
     val calibrated = calibrateEcWide(dropped, cfg)
     val renames = Reshape.regexRenameMap(calibrated.columns.toSeq,
       cfg.renameRules)
     val renamed = calibrated.withColumnsRenamed(renames)
-    val udg = udgSeries(l1, cfg, udgTarget)
-    val withUdg = renamed.drop(udgTarget)
-      .join(udg, Seq(cfg.tsCol), "left")
-    Cleaning.dropDuplicateRows(withUdg)
+    Udg.filterMasked(renamed.drop(udgTarget), UdgIn, cfg.tsCol,
+      keyCols = Nil).withColumnRenamed(UdgIn, udgTarget)
   }
 
   /** R1 — long-form export of one sensor family plus its install-depth

@@ -97,11 +97,11 @@ class CliSpec extends SparkSpec {
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val jobs = jobsDuring { Cli.main(Array("l2", "fs9", "-data_root", root)) }
-    // 13 on this fixture: the UDG chain's build-time probes, ONE
-    // Level-2 execution into the time-sorted cache, and the two sinks
-    // reading it. A sink that re-executes the Level-2 plan passes 15
-    // (20); with a schema-inferring read-back on top it is 22.
-    assert(jobs <= 15, s"Cli l2 ran $jobs jobs")
+    // 4 on this fixture: the adaptive stages of ONE Level-2 execution
+    // into the time-sorted cache, and the two sinks reading it. The
+    // window-chain UDG filter with its join back and final dedup ran
+    // 13.
+    assert(jobs <= 4, s"Cli l2 ran $jobs jobs")
     assert(spark.sharedState.cacheManager.isEmpty,
       "Cli l2 left its Level-2 frame in the cache manager")
     assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
@@ -124,6 +124,68 @@ class CliSpec extends SparkSpec {
       if (r.isNullAt(1)) assert(udg(i).isNaN, s"row $i")
       else assert(udg(i) === r.getDouble(1), s"row $i")
     }
+  }
+
+  test("the Level-2 plan scans Level-1 once, with no window and no " +
+    "join") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val root = siteTree().toString
+    Cli.main(Array("l1", "fs9", "-data_root", root))
+    val site = graft.pipeline.Site.fromToml(spark,
+      s"$root/firn_stations/ppconfig/fs9.toml", root)
+    val plan = Cli.level2Frame(spark, site, Cli.l1DefaultPath(root, "fs9"))
+      .queryExecution.sparkPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size === 1, plan.toString)
+    assert(scans.head.relation.location.rootPaths.map(_.getName) ===
+      Seq("fs9.csv"))
+    val banned = plan.collect {
+      case w: WindowExec => w
+      case j: SortMergeJoinExec => j
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(banned.isEmpty, plan.toString)
+  }
+
+  /** Level-2 over a hand-made Level-1 CSV built from `lines` (header
+    * first); returns the Level-2 CSV's lines. */
+  private def l2Of(root: String, name: String, lines: Seq[String]): Seq[String] = {
+    val dir = Files.createTempDirectory("clidup")
+    val l1 = dir.resolve(s"$name.csv")
+    Files.write(l1, lines.mkString("\n").getBytes("UTF-8"))
+    val out = dir.resolve("l2/fs9.csv").toString
+    Cli.main(Array("l2", "fs9", "-data_root", root,
+      "-l1file", l1.toString, "-outfile", out))
+    new String(Files.readAllBytes(partFile(out)), "UTF-8").split("\n").toSeq
+  }
+
+  test("l2 emits full-row duplicates once and fails on distinct rows " +
+    "sharing a timestamp") {
+    val root = siteTree().toString
+    Cli.main(Array("l1", "fs9", "-data_root", root))
+    val lines = new String(Files.readAllBytes(
+      partFile(Cli.l1DefaultPath(root, "fs9"))), "UTF-8").split("\n").toSeq
+    // every 10th data row twice, one of them three times
+    val dups = lines.head +: lines.tail.zipWithIndex.flatMap {
+      case (l, i) => Seq.fill(if (i == 40) 3 else if (i % 10 == 0) 2 else 1)(l)
+    }
+    assert(dups.length > lines.length)
+    assert(l2Of(root, "dups", dups) === l2Of(root, "unique", lines))
+
+    // the same instant twice with different readings
+    val ts = lines(5).takeWhile(_ != ',')
+    val other = lines(5).split(",", -1)
+      .updated(lines.head.split(",").indexOf("T107_C"), "-9.5").mkString(",")
+    val e = intercept[Exception] {
+      l2Of(root, "clash", lines.patch(6, Seq(other), 0))
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("distinct rows share one timestamp"), msgs)
+    assert(msgs.contains(ts.take(10)), msgs)
   }
 
   test("l2 reads the Level-1 CSV back with Level-1's own schema") {

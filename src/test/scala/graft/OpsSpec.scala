@@ -34,9 +34,19 @@ class OpsSpec extends SparkSpec {
   }
 
   test("modalIntervalSec infers the dominant cadence") {
-    val ts = Seq(0, 15, 30, 45, 60, 90, 105).map(m =>
-      Tuple1(new java.sql.Timestamp(t(0).getTime + m * 60000L)))
-    assert(Windows.modalIntervalSec(ts.toDF("ts"), "ts", Nil) === 900L)
+    val us = Seq(0, 15, 30, 45, 60, 90, 105).map(_ * 60000000L).toArray
+    assert(Udg.modalIntervalSec(us) === 900L)
+    // a tie breaks toward the smaller gap
+    assert(Udg.modalIntervalSec(Array(0L, 10L, 30L, 40L, 60L)
+      .map(_ * 1000000L)) === 10L)
+    val one = intercept[IllegalArgumentException] {
+      Udg.modalIntervalSec(Array(0L))
+    }
+    assert(one.getMessage.contains("fewer than 2 rows"))
+    val sub = intercept[IllegalArgumentException] {
+      Udg.modalIntervalSec(Array(0L, 500000L, 1000000L))
+    }
+    assert(sub.getMessage.contains("second-granular"))
   }
 
   test("regexRenameMap expands sensor families") {

@@ -324,6 +324,74 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("UDG filter kernel equals the window-chain reference on random " +
+    "keyed series") {
+    // one cadence per draw, shared by the keys so the reference's one
+    // mode over all keys is also each key's own; per key a regular
+    // series with gaps, off-grid samples, null values, null and
+    // out-of-band Q and spikes, anchored at its own first instant
+    val keyGen = for {
+      n <- Gen.choose(40, 120)
+      anchor <- Gen.choose(0L, 86400L)
+      kinds <- Gen.listOfN(n, Gen.frequency(
+        8 -> 0, 1 -> 1, 1 -> 2)) // 0 on grid, 1 skip a point, 2 off-grid
+      vals <- Gen.listOfN(n, Gen.frequency(
+        6 -> Gen.choose(-0.3, 0.3).map(x => Some(2.0 + x)),
+        1 -> Gen.choose(-3.0, 3.0).map(x => Some(2.0 + x)),
+        1 -> Gen.const(None)))
+      qs <- Gen.listOfN(n, Gen.frequency(
+        6 -> Gen.const(Some(170.0)), 1 -> Gen.const(None),
+        1 -> Gen.oneOf(Some(120.0), Some(250.0))))
+    } yield (anchor, kinds, vals, qs)
+    val gen = for {
+      stepSec <- Gen.oneOf(600L, 900L, 3600L)
+      keys <- Gen.listOfN(3, keyGen)
+      ffillLimit <- Gen.choose(0, 4)
+      medianDays <- Gen.oneOf(0.1, 0.25, 0.5, 2.0)
+      tol <- Gen.oneOf(0.2, 0.5, 1.0)
+    } yield (stepSec, keys, ffillLimit, medianDays, tol)
+    forAll(gen, n = 8) { case (stepSec, keys, ffillLimit, medianDays, tol) =>
+      val rows = keys.zipWithIndex.flatMap {
+        case ((anchor, kinds, vals, qs), ki) =>
+          var k = 0L
+          kinds.zip(vals).zip(qs).zipWithIndex.flatMap {
+            case (((kind, v), q), i) =>
+              val sec = anchor + k * stepSec +
+                (if (kind == 2 && i > 0) stepSec / 3 else 0L)
+              k += (if (kind == 1) 2 else 1)
+              // an off-grid sample sits between grid points: the next
+              // one stays on the grid
+              if (kind == 2 && i > 0) k -= 1
+              Seq((s"st$ki", new java.sql.Timestamp(
+                1620000000000L + sec * 1000L), v, q))
+          }
+      }.distinctBy(r => (r._1, r._2))
+      val df = rows.toDF("station", "ts", "udg", "q")
+      // the reference's global mode must equal every key's own
+      rows.groupBy(_._1).values.foreach { rs =>
+        val us = rs.map(_._2.getTime * 1000L).sorted.toArray
+        assert(graft.ops.Udg.modalIntervalSec(us) === stepSec)
+      }
+      def values(out: org.apache.spark.sql.DataFrame) =
+        out.select("station", "ts", "udg").collect().map { r =>
+          (r.getString(0), r.getTimestamp(1)) ->
+            Option(r.getAs[java.lang.Double](2)).map(_.doubleValue)
+        }
+      val got = values(graft.ops.Udg.filter(df, "udg", "q", "ts",
+        Seq("station"), ffillLimit, medianDays, tol))
+      val want = values(UdgReference.filter(df, "udg", "q", "ts",
+        Seq("station"), ffillLimit, medianDays, tol)).toMap
+      assert(got.length === rows.length)
+      assert(want.keySet.subsetOf(got.map(_._1).toSet))
+      // the reference drops off-grid instants; the kernel reports them
+      // null
+      got.foreach { case (at, v) =>
+        assert(v === want.getOrElse(at, None), s"at $at")
+      }
+      assert(got.exists(_._2.isDefined))
+    }
+  }
+
   test("t52b overlap estimate tracks exact t52 (ε contract)") {
     // Controlled-J regime: two single-doc sources over a shared token
     // run. A = t0..t999, B = t300..t1299; 8-token windows ⇒ 993 grams

@@ -159,6 +159,27 @@ class Toa5IngestSpec extends SparkSpec {
     assert(sp.isNullAt(sp.fieldIndex("udg")))
   }
 
+  test("UDG filter infers each station's own cadence") {
+    import graft.ops.Udg
+    import spark.implicits._
+    // st1 logs every 15 min (the mode over both stations), st2 every
+    // 10 min: on a 15-min grid only every third st2 sample lands
+    val t0 = java.sql.Timestamp.valueOf("2021-05-01 00:00:00").getTime
+    def at(i: Int, stepMin: Int) = new java.sql.Timestamp(t0 + i * stepMin * 60000L)
+    val st1 = (0 until 200).map(i => ("st1", at(i, 15), 2.0, 170.0))
+    val st2 = (0 until 150).map(i =>
+      ("st2", at(i, 10), if (i == 70) 9.0 else 3.0, 170.0))
+    val out = Udg.filter((st1 ++ st2).toDF("station", "ts", "udg", "q"),
+      "udg", "q", "ts", keyCols = Seq("station"))
+      .where($"station" === "st2").orderBy("ts").collect()
+      .map(r => Option(r.getAs[java.lang.Double]("udg")).map(_.doubleValue))
+    assert(out.length === 150)
+    out.zipWithIndex.foreach { case (v, i) =>
+      if (i == 70) assert(v === None, "the st2 spike must be masked")
+      else assert(v === Some(3.0), s"st2 sample $i lost")
+    }
+  }
+
   test("file order holds across 100 bales (broadcast order map)") {
     val dir = Files.createTempDirectory("toa5m")
     // every bale re-sends timestamp 0 with a record equal to its bale
