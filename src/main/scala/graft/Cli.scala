@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.ingest.Toa5
-import graft.pipeline.Site
+import graft.pipeline.{Level1, Site}
 import graft.sink.{NetCdf, Writers}
 
 /** Operational CLI wrappers — the engine twin of the reference's
@@ -97,7 +97,9 @@ object Cli {
     * with the schema Level-1 wrote (`Toa5.schema`), built from the CSV's
     * own header line — no `inferSchema`, which costs a full extra read
     * and types an all-empty column as string. Cells that do not parse
-    * (non-numeric text, the TOA5 'NAN' sentinel) read as null. */
+    * (non-numeric text, the TOA5 'NAN' sentinel) read as null. Level-1
+    * writes one CSV file, so the read is coalesced into one partition:
+    * the unkeyed Level-2 pass then needs no shuffle. */
   private[graft] def loadL1(spark: SparkSession, path: String,
                             tsCol: String): DataFrame = {
     val cols = Toa5.namesAtLine(spark, firstDataFile(spark, path), 1,
@@ -110,10 +112,12 @@ object Cli {
       // null (Toa5.read's convention) — as Double.NaN it is non-null,
       // so quality-flag imputation skips it and NaN poisons medians
       .option("nullValue", "NAN").csv(path)
+      .coalesce(1)
   }
 
   /** The Level-2 frame `l2` persists: the site's Level-2 plan over the
-    * Level-1 CSV at `l1Path`, in time order. */
+    * Level-1 CSV at `l1Path`, in time order (the order its UDG pass
+    * keeps, so the sort adds no work). */
   private[graft] def level2Frame(spark: SparkSession, site: Site.Spec,
                                  l1Path: String): DataFrame =
     site.level2(loadL1(spark, l1Path, site.cfg.tsCol))
@@ -157,7 +161,11 @@ object Cli {
         case "l1" =>
           val out = a.outfile.getOrElse(l1DefaultPath(a.dataRoot, a.site))
           guard(spark, out, a.ow, "Level-1")
-          Writers.csvSingle(site.level1(), out, sortCols = Seq(site.cfg.tsCol))
+          // one read of the bales; written from the cache in the time
+          // order the pass keeps
+          Level1.withProduct(spark, site.sources, site.cfg.tsCol) { l1 =>
+            Writers.csvSingle(l1, out, sortCols = Seq(site.cfg.tsCol))
+          }
           println(s"[cli] level-1 written: $out")
         case "l2" =>
           val outCsv = a.outfile.getOrElse(l2DefaultPath(a.dataRoot, a.site))

@@ -17,13 +17,19 @@ import org.apache.spark.sql.types._
   * Spark CSV cannot skip arbitrary row indices, so the shim:
   *  1. reads line 2 of the first file driver-side for the column names
   *     (one tiny sequential read);
-  *  2. reads all files as headerless CSV (distributed);
-  *  3. drops the three per-file metadata rows by predicate — they are
-  *     exactly the rows whose first column does not parse as a timestamp
-  *     (units/aggregation rows are non-temporal by construction);
-  *  4. casts measurement columns to double (the `"NAN"` sentinel maps to
-  *     null via `nullValue`), `RECORD` to long, `TIMESTAMP` to timestamp;
-  *  5. tags each row with a file sequence number (arrival order across
+  *  2. reads all files as headerless CSV with the typed schema
+  *     (`schema`), so the CSV reader types each cell: the `"NAN"`
+  *     sentinel (`nullValue`), an empty cell and a cell that does not
+  *     parse as its column's type read as null, and the row keeps its
+  *     other cells. `"INF"`/`"-INF"` (the logger's overrange cells),
+  *     `"Infinity"`/`"-Infinity"` and `"NaN"` read as ±Infinity and
+  *     NaN; other spellings of these (`"inf"`, `"+INF"`, `"nan"`) do
+  *     not parse and read as null;
+  *  3. drops each file's four header rows by predicate — they are
+  *     exactly the rows whose first column does not parse as a
+  *     timestamp (environment, names, units and aggregation rows are
+  *     non-temporal by construction), so their time cell reads as null;
+  *  4. tags each row with a file sequence number (arrival order across
   *     bales) so keep-first dedup downstream is deterministic.
   *
   * Scale: the header probe is O(1); everything else is a plain
@@ -79,9 +85,13 @@ object Toa5 {
     require(paths.nonEmpty, "no TOA5 files given")
     val cols = header(spark, paths.head)
     val raw = spark.read
-      .schema(StructType(cols.map(c => StructField(c, StringType))))
+      .schema(schema(cols, timestampCol))
       .option("header", "false")
       .option("nullValue", "NAN")
+      // the logger's overrange cells; the reader's own spellings are
+      // "Inf"/"-Inf", and a cell it cannot parse reads as null
+      .option("positiveInf", "INF")
+      .option("negativeInf", "-INF")
       .option("quote", "\"")
       .csv(paths: _*)
       .withColumn("__path", input_file_name())
@@ -114,10 +124,8 @@ object Toa5 {
       order.toSeq.map { case (k, i) => Row(k, i) }.asJava,
       StructType(Seq(StructField("__pathkey", StringType),
         StructField(FileOrderCol, IntegerType)))))
-    // try_* variants: ANSI mode (Spark 4 default) would otherwise throw
-    // on the metadata rows / non-numeric cells instead of nulling them
-    val data = raw
-      .where(try_to_timestamp(col(timestampCol)).isNotNull) // drops rows 1,3,4
+    val typed = raw
+      .where(col(timestampCol).isNotNull) // drops rows 1,2,3,4
       .withColumn("__pathkey", substring_index(col("__path"), "/", -2))
       .join(orderDf, Seq("__pathkey"), "left")
       // sentinel 10⁹, NOT Int.MaxValue: Level1 adds a per-source
@@ -127,14 +135,7 @@ object Toa5 {
       // dedup (the exact inversion of the documented contract)
       .withColumn(FileOrderCol,
         coalesce(col(FileOrderCol), lit(1000000000)))
-      .drop("__path", "__pathkey")
-    val typed = data.select(
-      (schema(cols, timestampCol).fields.toSeq.map { f =>
-        (f.dataType match {
-          case TimestampType => try_to_timestamp(col(f.name))
-          case t => col(f.name).try_cast(t)
-        }).as(f.name)
-      } :+ col(FileOrderCol)): _*)
+      .select((cols :+ FileOrderCol).map(col): _*)
     // nrows means the reference's FIRST n rows in ingest order: a
     // bare limit over the multi-file scan takes n ARBITRARY rows
     // (Spark lists the largest split first). TOA5 bales are written

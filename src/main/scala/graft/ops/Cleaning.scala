@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Cleaning operators: all-null column drop (P1) and ordered keep-first
-  * key dedup (D2). The reference's full-row dedup (D1) needs no operator
+/** Cleaning operators: ordered keep-first key dedup (D2) and column
+  * drops (P2). The reference's full-row dedup (D1) needs no operator
   * of its own: exact duplicates share a timestamp, so D2 collapses them
   * on Level-1, and `Udg.filterMasked` emits them once on Level-2.
   *
@@ -14,28 +14,18 @@ import org.apache.spark.sql.functions._
   * duplicate rows, then keeps the FIRST occurrence per timestamp
   * (`ds[~ds.index.duplicated()]`).
   *
-  * Scale notes: P1 is one aggregate pass (map-side combinable counts) and a
-  * driver decision — O(cols) driver state, no data movement beyond the agg.
-  * D2 shuffles on its keys once and uses a window over the key only
-  * (hash partition by key, no global sort). Keep-first requires an explicit
-  * arrival-order tiebreak — Spark row order is otherwise undefined.
+  * Scale notes: on Level-1, the all-null column drop (P1) and D2 are one
+  * ordered kernel pass (`Level1`): the rows move once into one sorted
+  * partition, the kernel counts every column's non-null cells over all
+  * ingested rows and emits the first row per timestamp, and the driver
+  * drops the columns whose count is zero once that pass has run — O(cols)
+  * driver state, no aggregate and no window. `dedupKeepFirst` is the
+  * general D2 for keyed data: it shuffles on its keys once and uses a
+  * window over the key only (hash partition by key, no global sort).
+  * Keep-first requires an explicit arrival-order tiebreak — Spark row
+  * order is otherwise undefined.
   */
 object Cleaning {
-
-  /** P1 — drop columns whose values are all null.
-    * One aggregate job computes non-null counts for every column (a single
-    * map-reduce pass, partial aggregation on the map side), then the plan is
-    * rebuilt with only the surviving columns so downstream scans prune.
-    */
-  def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val counts = df.select(df.columns.map(c => count(col(c)).as(c)).toSeq: _*)
-      .head()
-    val keep = df.columns.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i) > 0L => c
-    }
-    if (keep.length == df.columns.length) df
-    else df.select(keep.map(col).toSeq: _*)
-  }
 
   /** D2 — keep the FIRST row per key in `orderCols` order
     * (fs_pp.py:102-104, `~index.duplicated()`). A bare

@@ -2,10 +2,13 @@ package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DoubleType, TimestampType}
+
+import graft.plans.{OrderedKernel, RowKernel}
 
 /** The UDG (sonic-ranger surface height) processing chain:
   * piecewise normalisation for sensor re-mounts (C3) and the
@@ -88,16 +91,18 @@ object Udg {
 
   /** Steps 2–6 of `filter` on an already quality-masked `udgCol`, as
     * ONE ordered pass per key — the reference's `_filter_udg` is one
-    * pass over one station's series. Rows are hash-partitioned by
-    * `keyCols` (one partition when there are none), sorted by
-    * (keys, ts) within each partition, and each key's run goes through
-    * `UdgKernel`, which computes in order: the key's own modal gap
-    * (`modalIntervalSec`), the min(ts)-anchored grid, the
-    * ≤ `ffillLimit` forward fill, the trailing (t − medianDays, t]
-    * median and the |median − value| < `tol` mask.
+    * pass over one station's series. An `OrderedKernel` clusters the
+    * rows by `keyCols` (one partition when there are none; an input
+    * already in one partition is not shuffled), sorts them by
+    * (keys, ts) and runs each key's run through `UdgKernel`, which
+    * computes in order: the key's own modal gap (`modalIntervalSec`),
+    * the min(ts)-anchored grid, the ≤ `ffillLimit` forward fill, the
+    * trailing (t − medianDays, t] median and the |median − value| <
+    * `tol` mask. The result keeps the (keys, ts) order, so a time sort
+    * of an unkeyed result needs no sort of its own.
     *
     * Every input column passes through; only `udgCol` is replaced (as
-    * a double). Exact duplicate rows are emitted once; distinct rows
+    * a nullable double). Exact duplicate rows are emitted once; distinct rows
     * that share a (key, ts) fail with "distinct rows share one
     * timestamp" — the series needs one sample per instant (Level-1
     * keeps the first row per timestamp). A row with a null ts has no
@@ -124,17 +129,15 @@ object Udg {
         "timestamp — the grid is built on UTC instants")
     require(ffillLimit >= 0, s"Udg.filter: ffillLimit $ffillLimit < 0")
     val in = df.withColumn(udgCol, col(udgCol).cast(DoubleType))
-    val parted =
-      if (keyCols.isEmpty) in.repartition(1)
-      else in.repartition(keyCols.map(col): _*)
     val schema = in.schema
-    val kernel = new UdgKernel(keyCols.map(schema.fieldIndex),
+    val kernel = new UdgKernel(
+      keyCols.map(k => schema.fieldIndex(k) -> schema(k).dataType),
       schema.fieldIndex(tsCol), schema.fieldIndex(udgCol), ffillLimit,
       // the (t − w, t] frame bound in µs, computed as the window
       // operators do (Windows.timeRange) so the edges agree exactly
       (medianDays * 86400 * MicrosPerSec).toLong, tol)
-    parted.sortWithinPartitions((keyCols :+ tsCol).map(col): _*)
-      .mapPartitions(kernel.run)(Encoders.row(schema))
+    OrderedKernel(in, kernel, keys = keyCols, orderBy = Seq(tsCol),
+      replaced = Seq(udgCol))
   }
 
   /** A2 — modal spacing between consecutive timestamps (µs, ascending
@@ -187,35 +190,42 @@ object Udg {
 
   /** The per-key pass of `filterMasked` over rows sorted by
     * (keys, ts). */
-  private final class UdgKernel(keyIdx: Seq[Int], tsIdx: Int, udgIdx: Int,
-                                ffillLimit: Int, windowMicros: Long,
-                                tol: Double) extends Serializable {
+  private final class UdgKernel(keys: Seq[(Int, DataType)], tsIdx: Int,
+                                udgIdx: Int, ffillLimit: Int,
+                                windowMicros: Long, tol: Double)
+      extends RowKernel {
 
-    def run(rows: Iterator[Row]): Iterator[Row] = {
+    def run(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
       val in = rows.buffered
-      def key(r: Row): Row = Row.fromSeq(keyIdx.map(r.get))
-      new Iterator[Iterator[Row]] {
+      def key(r: InternalRow): Seq[Any] = keys.map { case (i, t) => r.get(i, t) }
+      new Iterator[Iterator[InternalRow]] {
         def hasNext: Boolean = in.hasNext
-        def next(): Iterator[Row] = {
-          val first = in.next()
+        def next(): Iterator[InternalRow] = {
+          val first = in.next().copy()
           val k = key(first)
           val run = ArrayBuffer(first)
-          while (in.hasNext && key(in.head) == k) run += in.next()
+          while (in.hasNext && key(in.head) == k) run += in.next().copy()
           filterKey(k, run)
         }
       }.flatten
     }
 
-    private def filterKey(k: Row, run: ArrayBuffer[Row]): Iterator[Row] = {
+    private def sameTs(a: InternalRow, b: InternalRow): Boolean =
+      if (a.isNullAt(tsIdx)) b.isNullAt(tsIdx)
+      else !b.isNullAt(tsIdx) && a.getLong(tsIdx) == b.getLong(tsIdx)
+
+    private def filterKey(k: Seq[Any],
+                          run: ArrayBuffer[InternalRow]): Iterator[InternalRow] = {
       // exact duplicates once; distinct rows at one instant fail
-      val rows = new ArrayBuffer[Row](run.length)
+      val rows = new ArrayBuffer[InternalRow](run.length)
       run.foreach { r =>
         val prev = if (rows.isEmpty) null else rows.last
-        if (prev != null && prev.get(tsIdx) == r.get(tsIdx)) {
+        if (prev != null && sameTs(prev, r)) {
           if (prev != r) throw new IllegalArgumentException(
             s"Udg.filter: distinct rows share one timestamp " +
-              s"${r.get(tsIdx)}" +
-              (if (keyIdx.isEmpty) "" else s" of key ${k.mkString(", ")}") +
+              (if (r.isNullAt(tsIdx)) "null"
+               else DateTimeUtils.microsToInstant(r.getLong(tsIdx))) +
+              (if (keys.isEmpty) "" else s" of key ${k.mkString(", ")}") +
               " — the UDG series needs one sample per instant; keep " +
               "one row per timestamp first (Level-1 keeps the first)")
         } else rows += r
@@ -226,15 +236,17 @@ object Udg {
         case i => i
       }
       val n = rows.length - nullTs
-      val t = Array.tabulate(n)(i =>
-        DateTimeUtils.anyToMicros(rows(nullTs + i).get(tsIdx)))
-      val out = filterSeries(t, Array.tabulate(n) { i =>
-        val r = rows(nullTs + i)
-        if (r.isNullAt(udgIdx)) None else Some(r.getDouble(udgIdx))
-      })
+      val out = filterSeries(
+        Array.tabulate(n)(i => rows(nullTs + i).getLong(tsIdx)),
+        Array.tabulate(n) { i =>
+          val r = rows(nullTs + i)
+          if (r.isNullAt(udgIdx)) None else Some(r.getDouble(udgIdx))
+        })
       rows.iterator.zipWithIndex.map { case (r, i) =>
         val v = if (i < nullTs) null else out(i - nullTs)
-        Row.fromSeq(r.toSeq.updated(udgIdx, v))
+        if (v == null) r.setNullAt(udgIdx)
+        else r.setDouble(udgIdx, v.asInstanceOf[Double])
+        r
       }
     }
 

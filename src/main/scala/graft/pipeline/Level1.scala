@@ -1,10 +1,13 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 import graft.ingest.Toa5
-import graft.ops.{Cleaning, Joins}
+import graft.ops.Joins
+import graft.plans.{OrderedKernel, RowKernel}
 
 /** Level-0 → Level-1: ingest raw TOA5 bales, union, clean, dedup.
   *
@@ -14,11 +17,14 @@ import graft.ops.{Cleaning, Joins}
   * logger's RECORD counter — threaded explicitly because Spark row order
   * is undefined (SURVEY §2.4 D2).
   *
-  * Plan shape: read → union → one aggregate (null-column probe) → one
-  * shuffle (keyed window dedup) → result. The reference's full-row dedup
-  * needs no shuffle of its own here: exact duplicate rows share a
-  * timestamp, so keep-first-per-timestamp already collapses them to one
-  * of several identical rows.
+  * Plan shape: typed bale scan → union → one exchange into a single
+  * partition sorted by (timestamp, file sequence, RECORD) → one ordered
+  * kernel (`OrderedKernel`) that counts every column's non-null cells
+  * over all ingested rows (P1) and emits the first row per timestamp
+  * (D2). The counts are taken before the dedup, as the reference drops
+  * all-NaN columns before it dedups. The reference's full-row dedup
+  * needs no step of its own: exact duplicate rows share a timestamp, so
+  * keep-first already collapses them to one of several identical rows.
   */
 object Level1 {
 
@@ -42,26 +48,71 @@ object Level1 {
         serviced = serviced)
   }
 
+  /** Runs the Level-1 pass once into the cache, then hands `f` the
+    * Level-1 product, read from that cache in time order; the cache is
+    * released when `f` returns or throws, even when the session is the
+    * caller's. The bales are read once. */
+  def withProduct[A](spark: SparkSession, sources: Seq[Source],
+                     tsCol: String = "TIMESTAMP")(f: DataFrame => A): A = {
+    val p = keepFirst(ingest(spark, sources, tsCol), tsCol)
+    p.frame.persist()
+    try {
+      p.frame.count()
+      f(p.product)
+    } finally p.frame.unpersist()
+  }
+
   /** Observability parity: the reference PRINTS row counts around each
     * dedup stage (fs_pp.py:98-104). Spark-first equivalent: `Observation`
-    * metrics collected during the job itself — zero extra passes, unlike
-    * driver-side count()s. Returns (df, observations); read
-    * `obs.get("rows_in"/"rows_out")` after the first action. */
+    * metrics collected during the job itself, unlike driver-side
+    * count()s. Returns (df, observations) like `run`, so the whole pass
+    * runs once here and `obs.get("rows_in"/"rows_out")` is ready on
+    * return. */
   def runObserved(spark: SparkSession, sources: Seq[Source],
                   tsCol: String = "TIMESTAMP")
                  : (DataFrame, Observation, Observation) = {
     val obsIn = Observation("l1_rows_in")
     val obsOut = Observation("l1_rows_out")
-    val raw = ingest(spark, sources, tsCol)
-      .observe(obsIn, count(lit(1)).as("rows_in"))
-    val cleaned = clean(raw, tsCol)
-      .observe(obsOut, count(lit(1)).as("rows_out"))
-    (cleaned, obsIn, obsOut)
+    val p = keepFirst(ingest(spark, sources, tsCol)
+      .observe(obsIn, count(lit(1)).as("rows_in")), tsCol)
+    (runOnce(p, p.frame.observe(obsOut, count(lit(1)).as("rows_out"))),
+      obsIn, obsOut)
   }
 
+  /** The Level-1 product as a plan. Which columns it drops is only
+    * known once the pass has run, so this call runs the whole pass
+    * (scan, exchange, sort and kernel) once to the end, and every
+    * action on the returned plan runs it again from the bales. A caller
+    * that acts on the product once should use `withProduct`, which
+    * reads the bales once. */
   def run(spark: SparkSession, sources: Seq[Source],
-          tsCol: String = "TIMESTAMP"): DataFrame =
-    clean(ingest(spark, sources, tsCol), tsCol)
+          tsCol: String = "TIMESTAMP"): DataFrame = {
+    val p = keepFirst(ingest(spark, sources, tsCol), tsCol)
+    runOnce(p, p.frame)
+  }
+
+  /** Level-1 as one ordered pass, before its all-null column drop:
+    * `frame` holds the first row per timestamp with every ingested
+    * column plus `Toa5.FileOrderCol`. Once `frame` has run to the end,
+    * `allNull` names the columns that no ingested row fills and
+    * `product` is the Level-1 product. */
+  private final class Pass(val frame: DataFrame, cols: Seq[String],
+                           probe: NonNullCounts) {
+    def allNull: Seq[String] = {
+      val counts = probe.value
+      require(counts != null, "Level1: the ingest pass has not run to " +
+        "the end — run `frame` first (an ingest with no rows never does)")
+      cols.zip(counts).collect { case (c, 0L) => c }
+    }
+    def product: DataFrame = frame.drop(Toa5.FileOrderCol +: allNull: _*)
+  }
+
+  /** Runs `frame` (`p.frame`, perhaps observed) to the end, then
+    * returns `p`'s product. */
+  private def runOnce(p: Pass, frame: DataFrame): DataFrame = {
+    frame.write.format("noop").mode("overwrite").save()
+    p.product
+  }
 
   private def ingest(spark: SparkSession, sources: Seq[Source],
                      tsCol: String): DataFrame = {
@@ -80,15 +131,80 @@ object Level1 {
     Joins.unionAll(parts)
   }
 
-  private def clean(unioned: DataFrame, tsCol: String): DataFrame = {
-    val dropped = Cleaning.dropAllNullColumns(unioned)
-    // order columns from the POST-drop schema: an all-null RECORD
-    // (every cell the NAN sentinel) is removed above, and a window
-    // ordering by the vanished column would fail UNRESOLVED_COLUMN
-    // at plan build instead of degrading to file-order tiebreak
-    val ordered = Seq(col(Toa5.FileOrderCol)) ++
-      (if (dropped.columns.contains("RECORD")) Seq(col("RECORD")) else Nil)
-    Cleaning.dedupKeepFirst(dropped, Seq(tsCol), ordered)
-      .drop(Toa5.FileOrderCol)
+  private def keepFirst(ingested: DataFrame, tsCol: String): Pass = {
+    val cols = ingested.columns.filter(_ != Toa5.FileOrderCol).toSeq
+    val probe = new NonNullCounts
+    ingested.sparkSession.sparkContext.register(probe, "l1_non_null")
+    // by position in the ingested row: a column that only a later
+    // source has is unioned in AFTER the file order column
+    val frame = OrderedKernel(ingested,
+      new KeepFirstKernel(ingested.columns.indexOf(tsCol),
+        cols.map(c => ingested.columns.indexOf(c)).toArray, probe),
+      keys = Nil, orderBy = Seq(tsCol, Toa5.FileOrderCol) ++
+        (if (cols.contains("RECORD")) Seq("RECORD") else Nil))
+    new Pass(frame, cols, probe)
+  }
+
+  /** P1 and D2 over rows sorted by (ts, file order, RECORD), none with
+    * a null ts: counts the non-null cells at each of the positions
+    * `counted` over every row, emits the first row per timestamp, and
+    * adds the counts, in `counted`'s order, to `probe` once the rows
+    * run out. */
+  private final class KeepFirstKernel(tsIdx: Int, counted: Array[Int],
+                                      probe: NonNullCounts)
+      extends RowKernel {
+    def run(rows: Iterator[InternalRow]): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private val counts = new Array[Long](counted.length)
+        private var last = 0L
+        private var started = false
+        private var pending: InternalRow = null
+        private var published = false
+
+        def hasNext: Boolean = {
+          while (pending == null && rows.hasNext) {
+            val r = rows.next()
+            var i = 0
+            while (i < counts.length) {
+              if (!r.isNullAt(counted(i))) counts(i) += 1
+              i += 1
+            }
+            val t = r.getLong(tsIdx)
+            if (!started || t != last) {
+              started = true; last = t; pending = r
+            }
+          }
+          if (pending == null && !published) {
+            probe.add(counts); published = true
+          }
+          pending != null
+        }
+
+        def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException
+          val r = pending
+          pending = null
+          r
+        }
+      }
+  }
+
+  /** Per-column non-null counts; null until a pass has run to the end. */
+  private final class NonNullCounts
+      extends AccumulatorV2[Array[Long], Array[Long]] {
+    private var counts: Array[Long] = null
+    def isZero: Boolean = counts == null
+    def copy(): NonNullCounts = {
+      val c = new NonNullCounts
+      if (counts != null) c.counts = counts.clone()
+      c
+    }
+    def reset(): Unit = counts = null
+    def add(v: Array[Long]): Unit =
+      if (counts == null) counts = v.clone()
+      else v.indices.foreach(i => counts(i) += v(i))
+    def merge(other: AccumulatorV2[Array[Long], Array[Long]]): Unit =
+      Option(other.value).foreach(add)
+    def value: Array[Long] = counts
   }
 }

@@ -8,12 +8,14 @@ import graft.ops.Udg
 /** The reference's library API surface: construct from a site TOML
   * metafile, then run level0→level1→level2
   * (cassandra_fs_pp/__init__.py:1, fs_pp.py:29-65 `_load_config`,
-  * README.md "Metadata files") — but holding lazy DataFrames instead of
-  * mutable eager state.
+  * README.md "Metadata files") — but holding DataFrames instead of
+  * mutable eager state. `level1()` runs the Level-1 pass once to learn
+  * which all-null columns it drops (see `Level1.run`); an action on its
+  * result runs the pass again.
   *
   * {{{
   *   val site = Site.fromToml(spark, "/data/ppconfig/fs1.toml", dataRoot)
-  *   val l1 = site.level1()            // lazy plan
+  *   val l1 = site.level1()            // runs the Level-1 pass once
   *   val l2 = site.level2(l1)          // lazy plan
   * }}}
   */

@@ -126,6 +126,75 @@ class CliSpec extends SparkSpec {
     }
   }
 
+  test("l1 reads the bales in one scan stage, runs no window and " +
+    "releases its cache") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val root = siteTree().toString
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val scanStages = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanStages.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val tracker = spark.sparkContext.statusTracker
+    val before = tracker.getJobIdsForGroup(null).toSet
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Cli.main(Array("l1", "fs9", "-data_root", root))
+      val jobs = tracker.getJobIdsForGroup(null).toSet -- before
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.forall(ended.contains) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      // 5 on this fixture: the broadcast file-order map; the count
+      // that fills the cache (the exchange's map stage, the kernel
+      // into the cache, the final count); the write from the cache.
+      // A null-column aggregate before a window dedup ran 8.
+      assert(jobs.size <= 5, s"Cli l1 ran ${jobs.size} jobs")
+      assert(scanStages.get === 1, "the bales must be read by one stage")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "Cli l1 left its Level-1 frame in the cache manager")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
+      "Cli l1 left persisted blocks behind")
+
+    val site = graft.pipeline.Site.fromToml(spark,
+      s"$root/firn_stations/ppconfig/fs9.toml", root)
+    val plan = graft.pipeline.Level1.run(spark, site.sources,
+      site.cfg.tsCol).queryExecution.sparkPlan
+    assert(plan.collect { case w: WindowExec => w }.isEmpty, plan.toString)
+  }
+
+  test("the Level-2 plan sorts once, below its UDG kernel, and shuffles " +
+    "nothing") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.OrderedKernelExec
+    val root = siteTree().toString
+    Cli.main(Array("l1", "fs9", "-data_root", root))
+    val site = graft.pipeline.Site.fromToml(spark,
+      s"$root/firn_stations/ppconfig/fs9.toml", root)
+    val plan = Cli.level2Frame(spark, site, Cli.l1DefaultPath(root, "fs9"))
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def hasKernel(p: SparkPlan): Boolean =
+      p.exists(_.isInstanceOf[OrderedKernelExec])
+    assert(hasKernel(plan), plan.toString)
+    assert(plan.collect { case s: SortExec if hasKernel(s) => s }.isEmpty,
+      plan.toString)
+    assert(plan.collect { case s: SortExec => s }.size === 1, plan.toString)
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      plan.toString)
+  }
+
   test("the Level-2 plan scans Level-1 once, with no window and no " +
     "join") {
     import org.apache.spark.sql.execution.FileSourceScanExec

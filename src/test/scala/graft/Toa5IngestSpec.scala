@@ -112,6 +112,108 @@ class Toa5IngestSpec extends SparkSpec {
       Seq(1L, 2L, 3L, 4L, 62L, 63L))
   }
 
+  test("typed scan under ANSI: a cell that does not parse reads as " +
+    "null and its row is kept; the header rows drop") {
+    val dir = Files.createTempDirectory("toa5t")
+    val header = Seq(
+      """"TOA5","99999","CR800","99999","CR800.Std.32.03","CPU:test.CR8","1","MainTable"""",
+      """"TIMESTAMP","RECORD","BattV_Min","T107_C","TCDT"""",
+      """"TS","RN","Volts","Deg C","m"""",
+      """"","","Min","Smp","Smp"""")
+    Files.write(dir.resolve("MainTable1.dat"), (header ++ Seq(
+      s""""${ts(0)}",1,12.5,-5.0,2.0""",
+      s""""${ts(1)}",2,volts,-5.1,2.1""", // non-numeric double cell
+      s""""${ts(2)}",3,12.7,,2.2""", // empty cell
+      s""""${ts(3)}",4,12.8,-5.3,NAN""", // the NAN sentinel
+      s""""${ts(4)}",4.5,12.9,-5.4,2.4""", // non-integer RECORD
+      s""""${ts(5)}",6,INF,-INF,Infinity""") // the logger's overrange cells
+    ).mkString("\n").getBytes("UTF-8"))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val rows = Toa5.read(spark, Toa5.balePaths(dir.toString, 1, 1))
+        .orderBy("TIMESTAMP").collect()
+      assert(rows.length === 6, rows.mkString("\n"))
+      def cell(i: Int, c: String): Option[Any] =
+        Option(rows(i).getAs[Any](c))
+      assert(rows.map(r => r.getAs[java.sql.Timestamp]("TIMESTAMP")
+        .toString.take(16)).toSeq === (0 to 5).map(ts))
+      assert(cell(1, "BattV_Min") === None && cell(1, "T107_C") === Some(-5.1))
+      assert(cell(2, "T107_C") === None && cell(2, "BattV_Min") === Some(12.7))
+      assert(cell(3, "TCDT") === None && cell(3, "RECORD") === Some(4L))
+      assert(cell(4, "RECORD") === None && cell(4, "TCDT") === Some(2.4))
+      assert(cell(0, "RECORD") === Some(1L) && cell(0, "TCDT") === Some(2.0))
+      assert(cell(5, "BattV_Min") === Some(Double.PositiveInfinity) &&
+        cell(5, "T107_C") === Some(Double.NegativeInfinity) &&
+        cell(5, "TCDT") === Some(Double.PositiveInfinity))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("all-null probe runs before keep-first: a column filled only in " +
+    "rows that lose keep-first is kept") {
+    val dir = Files.createTempDirectory("toa5p")
+    writeBale(dir, 1, (0 to 5).map(i => (i + 1, i)))
+    // bale 2 re-sends ts 4..5 with AllNan filled: those rows lose
+    writeBale(dir, 2, Seq((50, 4), (51, 5)))
+    val b2 = dir.resolve("MainTable2.dat")
+    Files.writeString(b2, Files.readString(b2).replace(",NAN", ",7.5"))
+    val l1 = Level1.run(spark, Seq(Level1.Source(dir.toString, 1, 2)))
+    assert(l1.columns.contains("AllNan"))
+    val rows = l1.orderBy("TIMESTAMP").collect()
+    assert(rows.map(_.getAs[Long]("RECORD")).toSeq === (1L to 6L).toSeq)
+    assert(rows.forall(_.isNullAt(l1.columns.indexOf("AllNan"))))
+  }
+
+  test("a column only a later source has: the all-null drop and the " +
+    "values follow each column, not its position") {
+    def bale(dir: Path, cols: Seq[String],
+             rows: Seq[(Int, Seq[String])]): Unit = Files.write(
+      dir.resolve("MainTable1.dat"), (Seq(
+        """"TOA5","99999","CR800","99999","CR800.Std.32.03","CPU:test.CR8","1","MainTable"""",
+        cols.map(c => s""""$c"""").mkString(","),
+        cols.map(_ => "\"\"").mkString(","),
+        cols.map(_ => "\"\"").mkString(",")) ++ rows.map { case (i, vs) =>
+        (s""""${ts(i)}",${i + 1}""" +: vs).mkString(",") })
+        .mkString("\n").getBytes("UTF-8"))
+    val a = Files.createTempDirectory("toa5a")
+    val b = Files.createTempDirectory("toa5b")
+    bale(a, Seq("TIMESTAMP", "RECORD", "T107_C"),
+      (0 to 2).map(i => i -> Seq(s"-${i + 1}.0")))
+    // the later logger program adds an empty Y and a filled Z; the
+    // union puts both after the file order column
+    bale(b, Seq("TIMESTAMP", "RECORD", "T107_C", "Y", "Z"),
+      (3 to 4).map(i => i -> Seq(s"-${i + 1}.0", "NAN", s"$i.5")))
+    val (cols, rows) = Level1.withProduct(spark, Seq(
+      Level1.Source(a.toString, 1, 1), Level1.Source(b.toString, 1, 1))) {
+      l1 => (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
+    }
+    assert(cols === Seq("TIMESTAMP", "RECORD", "T107_C", "Z"))
+    assert(rows.map(r => Option(r.getAs[Any]("Z"))).toSeq ===
+      Seq(None, None, None, Some(3.5), Some(4.5)))
+    assert(rows.map(_.getAs[Double]("T107_C")).toSeq ===
+      Seq(-1.0, -2.0, -3.0, -4.0, -5.0))
+  }
+
+  test("an all-NAN RECORD column: keep-first falls back to file order, " +
+    "and the column drops") {
+    val dir = Files.createTempDirectory("toa5r")
+    def bale(n: Int, rows: Seq[(Int, Double)]): Unit = Files.write(
+      dir.resolve(s"MainTable$n.dat"), (Seq(
+        """"TOA5","99999","CR800","99999","CR800.Std.32.03","CPU:test.CR8","1","MainTable"""",
+        """"TIMESTAMP","RECORD","T107_C"""",
+        """"TS","RN","Deg C"""",
+        """"","","Smp"""") ++ rows.map { case (i, v) =>
+        s""""${ts(i)}",NAN,$v""" }).mkString("\n").getBytes("UTF-8"))
+    bale(1, (0 to 3).map(i => (i, -1.0)))
+    bale(2, (2 to 5).map(i => (i, -2.0))) // ts 2..3 lose to bale 1
+    bale(3, (5 to 6).map(i => (i, -3.0))) // ts 5 loses to bale 2
+    val l1 = Level1.run(spark, Seq(Level1.Source(dir.toString, 1, 3)))
+    assert(!l1.columns.contains("RECORD"))
+    val rows = l1.orderBy("TIMESTAMP").collect()
+    assert(rows.map(_.getAs[Double]("T107_C")).toSeq ===
+      Seq(-1.0, -1.0, -1.0, -1.0, -2.0, -2.0, -3.0))
+  }
+
   test("serviced glob appends iff exactly one match, after the bales") {
     val dir = Files.createTempDirectory("toa5s")
     writeBale(dir, 1, (0 to 9).map(i => (i + 1, i)))

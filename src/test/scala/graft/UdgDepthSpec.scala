@@ -71,6 +71,22 @@ class UdgDepthSpec extends SparkSpec {
     assert(ok.getDouble(ok.fieldIndex("udg")) === 2.0)
   }
 
+  test("filterMasked on a non-nullable column masks a spike as null, " +
+    "not 0.0") {
+    val rows = (0 until 96).map { i => // 15-min cadence, one spike
+      (new java.sql.Timestamp(d(1).getTime + i * 900000L),
+        if (i == 60) 12.0 else 2.0)
+    }
+    val in = rows.toDF("ts", "udg")
+    assert(!in.schema("udg").nullable)
+    val out = Udg.filterMasked(in, "udg", "ts", keyCols = Nil)
+    assert(out.schema("udg").nullable)
+    val got = out.orderBy("ts").collect()
+      .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+    assert(got(60) === None, "the spike must read as null")
+    assert(got.zipWithIndex.forall { case (v, i) => i == 60 || v == Some(2.0) })
+  }
+
   test("X1 depth recurrence: min-0 clamp and melt-out ratchet") {
     val series = Seq(
       (t(0), -1.0), (t(1), -0.5), (t(2), 0.3), (t(3), -0.2))
