@@ -8,7 +8,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // the NTZ-layout events read casts ts NTZ→LTZ; UTC makes that
-      // value-preserving regardless of the host's TZ (see SparkEntry.T)
+      // value-preserving regardless of the host's TZ (see queries.Shared.T)
       .config("spark.sql.session.timeZone", "UTC")
       // Split small files across cores: the default 128 MB split keeps a
       // whole sf0.1 table in ONE scan task (measured: d3_vocab runs its

@@ -87,7 +87,7 @@ object DataGen {
     }
 
     // ts passes through untouched in whichever parquet layout it
-    // arrived (int64-nanos legacy or timestamp[us] — see SparkEntry.T)
+    // arrived (int64-nanos legacy or timestamp[us] — see queries.Shared.T)
     if (tables("events")) {
       val events = read("events")
       val evMod = maxOf(events, "event_id") + 1
@@ -144,8 +144,9 @@ object DataGen {
     // unit-norm corpus that puts each replica at cos ≈ 0.90 to its
     // base — the honest MID-similarity operating point for
     // hierarchical-vs-flat agreement measurement: exact replicas sit
-    // ON a centroid, so the r16 100× HierBench point's 100 % agreement
-    // was a replica-data artifact, not an index property.
+    // ON a centroid, so the r16 100× hierarchical-vs-flat run's
+    // 100 % agreement was a replica-data artifact, not an index
+    // property.
     val perturb = mode == "perturb"
     if (tables("embeddings")) {
     val vecs = read("embeddings")

@@ -1,12410 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops._
+import graft.queries.Query
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, with a DuckDB-runnable `oracleSql` twin for every
-  * SQL-expressible one. Column names/aliases match between the two (the
-  * driver sorts columns by name before hashing). Floating aggregates are
-  * rounded identically on both sides so cross-engine summation order
-  * cannot flip the hash.
-  */
+/** Driver contract: every query of the registry (`graft.queries.Query`)
+  * by name, and its DuckDB oracle by the same name. Both views are
+  * built once, from the same entries. */
 object SparkEntry {
 
-  /** Table loader. The `events` table's `ts` has shipped in two parquet
-    * layouts across driver testdata generations, and both must read:
-    *  - timestamp[ns], which Spark 4 only reads as a long
-    *    (spark.sql.legacy.parquet.nanosAsLong) — converted to
-    *    TimestampType (µs) with integer division (`ns / 1000` as doubles
-    *    would lose precision above 2^53; DuckDB likewise truncates
-    *    ns → µs, so the engines agree);
-    *  - timestamp[us] without UTC adjustment, which Spark reads as
-    *    TIMESTAMP_NTZ — cast to TimestampType, value-preserving because
-    *    every entrypoint pins spark.sql.session.timeZone=UTC.
-    * Either way downstream code sees one canonical TimestampType µs
-    * column. */
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    df.schema.fields.find(_.name == "ts").map(_.dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }).getOrElse(df)
-  }
+  private val registry: Map[String, Query] = Query.byName(Query.all)
 
-  /** Cross-engine-stable rounded mean of a NON-NEGATIVE double column:
-    * exact integer HALF_UP end-to-end. A plain double avg differs from
-    * DuckDB's in the last ulp (partial-agg tree vs sequential
-    * summation) and even identical doubles round ties differently
-    * (Spark rounds the shortest decimal repr, DuckDB the binary
-    * value), so any double-domain round diverges when a group's mean
-    * sits exactly on the boundary — observed at sf0.1 on q10/q24
-    * (means like 1083.87/24 = 45.16125).
-    *
-    * Here: I = Σ round8(v)·10⁸ (exact, order-independent),
-    * rounded mean = floor((2I + n·10^{8-scale}) / (2n·10^{8-scale}))
-    * / 10^scale. The floor's double division is exact while the
-    * NUMERATOR 2I + n·10^{8-scale} < 2^53, i.e. per-group Σv below
-    * ~4.5·10⁷ — fine here; a larger corpus lifts I into decimal DIV.
-    * Other rounded means in this file keep plain round(): integer-
-    * valued inputs sum exactly in doubles, so only an exact .5-tie
-    * (denominator 2^a·5^b group counts) can diverge — migrate any
-    * that ever fails the sf0.1 spot-check to this helper. DuckDB twin:
-    * CAST((2*CAST(sum(CAST(v AS DECIMAL(24,8)))*100000000 AS HUGEINT)
-    * + count(v)*10^{8-scale}) // (2*count(v)*10^{8-scale}) AS DOUBLE)
-    * / 10^scale. */
-  private def stableAvg(c: Column, scale: Int): Column = {
-    val down = math.pow(10, 8 - scale).toLong // 10^{8-scale}
-    val I = sum((c.cast("decimal(24,8)") * lit(100000000L))
-      .cast("decimal(38,0)"))
-    val n = count(c)
-    val num = I * 2 + n * down // decimal: exact, cannot wrap to a long
-    // The preconditions above are ENFORCED, not just documented: a
-    // negative input makes floor-based HALF_UP round toward +inf
-    // (the oracle's // rounds toward −inf ⇒ silent divergence), and a
-    // numerator at/over 2^53 loses integer precision in the double
-    // divide. assert_true rides along in the aggregate output row
-    // (null when the guard holds, added as 0.0), so a violation makes
-    // the query ERROR instead of returning a subtly wrong mean.
-    // both legs null-safe: an all-null group has min/num null, which
-    // must keep returning a null mean (as before the guard), not error.
-    // negativity is tested in the decimal(24,8) domain the sum actually
-    // uses — raw double noise like -1e-9 rounds to 0 there and computes
-    // an exact, oracle-identical mean, so it must not trip the guard
-    // the third leg catches PER-VALUE decimal(24,8) overflow: a value
-    // >= 1e16 casts to null under non-ANSI (silently dropping out of
-    // the sum while staying in count(c) — the mean would skew with
-    // both other legs green); under Spark 4's default ANSI the cast
-    // throws outright — loud either way
-    val guard = assert_true(
-      coalesce(min(c.cast("decimal(24,8)")) >= 0, lit(true)) &&
-        coalesce(abs(num) < lit(9.007199254740992e15), lit(true)) &&
-        count(c) === count(c.cast("decimal(24,8)")),
-      lit(s"stableAvg: negative input or numerator >= 2^53 " +
-        s"(scale=$scale) — result would silently diverge from the " +
-        "integer-exact oracle twin"))
-    floor(num.cast("double") / (n * down * 2).cast("double"))
-      .cast("double") / math.pow(10, scale) +
-      coalesce(guard.cast("double"), lit(0.0))
-  }
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
-  /** Cross-engine-stable rounded SUM of a money-valued double
-    * expression: per-row HALF_UP quantization to 8 dp via the decimal
-    * cast (deterministic from identical doubles — the stableAvg
-    * pattern), EXACT decimal summation (no float summation order),
-    * round to cents, back to double. A plain `round(sum(double), 2)`
-    * flips its last cent once group sums reach ~1e10 over 1e5+ rows:
-    * Spark's partial-agg tree and DuckDB's sequential sum then differ
-    * in the final ulp exactly at a .xx5 boundary — observed on
-    * q11/q12 at the sf1 (10×) scale point, invisible at the sf0.1
-    * gate. Decimal(24,8) holds 1e16 per row and the sum widens to
-    * decimal(34,8): no overflow this side of 1e26. */
-  private def moneySum(c: Column): Column =
-    round(sum(c.cast("decimal(24,8)")), 2).cast("double")
-
-  /** Time-sliced events read with the range predicate applied to the RAW
-    * int64(ns) column BEFORE the µs conversion — so it pushes into the
-    * parquet scan (PushedFilters: GreaterThanOrEqual/LessThan on ts) and
-    * prunes row groups / partitions. Filtering the derived timestamp
-    * would read everything at 100 TB. */
-  /** The x1 fixture's smoothed UDG series — the exact input
-    * `Depths.tdrDepth` consumes (also the streaming parity spec's
-    * fixture, StreamingMultimodalSpec). */
-  private[graft] def x1UdgSeries(s: SparkSession,
-                                 dir: String): DataFrame =
-    T(s, dir, "events")
-      .where(col("user_id") === 0)
-      .groupBy(date_trunc("hour", col("ts")).as("ts"))
-      .agg(((avg("value") - 30.0) / 10.0).as("udg"))
-
-  private def eventsBetween(s: SparkSession, dir: String,
-                            lo: String, hi: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // UTC-anchored, NOT java.sql.Timestamp.valueOf (which parses in
-    // the JVM default timezone): on a non-UTC host that would shift
-    // the nanos-layout window while the NTZ branch and the DuckDB
-    // oracle compare wall-clock — same query, layout-dependent rows
-    def ns(t: String) =
-      java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000000L
-    val df = s.read.parquet(s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // timestamp[ns] layout
-        df.where(col("ts") >= ns(lo) && col("ts") < ns(hi))
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case t => // timestamp[us] (NTZ) layout: compare in the column's own
-        // domain so the predicate still reaches the parquet scan
-        df.where(col("ts") >= lit(lo).cast(t) && col("ts") < lit(hi).cast(t))
-          .withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
-
-  /** Near-dup cluster labels for the documents table — the ONE place
-    * the shingle→LSH-star-edge→connected-components pipeline is invoked
-    * (t12/d5/t56/t57 all consume this). Returns (doc_id, cluster_id),
-    * singletons self-labeled. See `Dedup.clusterLabels` for the
-    * materialize-once contract at corpus scale. */
-  /** Deterministic train-order shuffle (t67's engine): shard = the
-    * first `shardHexWidth` hex chars of md5("shuf42:" + doc_id) →
-    * 16^width shards, position = rank within shard. Each shard sorts
-    * as ONE task, so the width must track the corpus: target
-    * corpusBytes / 16^width ≲ ~1.5 GB for a spill-free single-task
-    * sort. Width 2 → 256 shards (fine to ~400 GB of corpus; at
-    * 100 TB that is ~400 GB PER SHARD — too big); width 4 → 65,536
-    * shards ≈ 1.6 GB each at 100 TB (right); width 5 → ~100 MB.
-    * Output is reproducible for a fixed (salt, width) — the knob is
-    * data-independent. */
-  private[graft] def trainShuffle(docs: DataFrame,
-                                  shardHexWidth: Int): DataFrame = {
-    require(shardHexWidth >= 1 && shardHexWidth <= 32,
-      s"shardHexWidth must be in [1, 32], got $shardHexWidth")
-    val w = Window.partitionBy("shard").orderBy("key", "doc_id")
-    docs
-      .select(col("doc_id"),
-        md5(concat(lit("shuf42:"), col("doc_id").cast("string")))
-          .as("key"))
-      .withColumn("shard", substring(col("key"), 1, shardHexWidth))
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .select(col("doc_id"), col("shard"), col("pos"))
-  }
-
-  /** The deterministic CDC demo feed shared by t79 (full merge) and
-    * t120 (time travel) — one definition so the two queries and both
-    * oracles describe the same change log: seq 1 updates %10==3,
-    * deletes %10==5, inserts %10==7 (shifted ids); seq 2 deletes
-    * %100==3 (overriding their seq-1 update). */
-  private def cdcDemoDelta(base: DataFrame): DataFrame = {
-    val upd = base.where(col("doc_id") % 10 === 3)
-      .withColumn("text", concat(col("text"), lit(" [rev2]")))
-      .withColumn("__op", lit("update")).withColumn("__seq", lit(1L))
-    val del = base.where(col("doc_id") % 10 === 5)
-      .withColumn("__op", lit("delete")).withColumn("__seq", lit(1L))
-    val ins = base.where(col("doc_id") % 10 === 7)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-      .withColumn("__op", lit("insert")).withColumn("__seq", lit(1L))
-    val del2 = base.where(col("doc_id") % 100 === 3)
-      .withColumn("__op", lit("delete")).withColumn("__seq", lit(2L))
-    upd.unionByName(del).unionByName(ins).unionByName(del2)
-  }
-
-  private def neardupLabels(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"),
-      graft.functions.SketchExpressions
-        .wordShingles(TextOps.tokens(col("text")), 3).as("shingles"))
-    Dedup.clusterLabels(docs, "doc_id", "shingles", k = 8, bands = 4)
-  }
-
-  /** Memoized 8-merge tokenizer per corpus snapshot. Training is
-    * deterministic (count desc, binary pair-order ties), so
-    * compute-once is an identity — and t71 (ships the table), t73
-    * (applies it) and t111 (per-source fit) otherwise each re-run the
-    * same 8 driver-looped training jobs for identical output. */
-  private val mergeMemo = new Stage.Memo[Seq[(String, String, Long)]]
-  private def corpusWordCounts(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
-      .select(explode(TextOps.tokensLower(col("text"))).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-  private def trainedMerges(s: SparkSession,
-                            dir: String): Seq[(String, String, Long)] =
-    mergeMemo(s, dir)(TextOps.bpeTrainMerges(
-      corpusWordCounts(s, dir).localCheckpoint(false), "w", "cnt",
-      numMerges = 8))
-
-  /** Memoized unigram-LM tokenizer (SentencePiece shape, Kudo 2018)
-    * per corpus dir — hard-EM over the bounded word-count table, the
-    * t115/t122 driver-loop pattern, with every quantity either an
-    * exact integer or a quantized ln (micro-nats, the t97 lp_micro
-    * precedent) so the DuckDB twin reproduces it bit-for-bit:
-    *
-    *  - words: ≤[[UnigramMaxWordLen]] chars (SentencePiece's own
-    *    max-sentencepiece-length discipline — longer tokens are
-    *    format noise: URLs, base64);
-    *  - seed: all substrings up to 6 chars, weight = Σ word-count ×
-    *    occurrences; top-[[UnigramSeedCap]] by (weight desc, piece)
-    *    PLUS every single character (coverage guarantee — singles
-    *    are never pruned);
-    *  - [[UnigramRounds]]× hard EM: E = per-word Viterbi split under
-    *    current integer costs (`UnigramExpressions.unigramEncode`,
-    *    the piece-table-as-data kernel idiom of t73); M = prune to
-    *    the top ⌈80%⌉ by (count desc, piece) keeping singles, then
-    *    re-cost with Laplace +1: cost = round(ln(T/(c+1))·10⁶),
-    *    T = Σ(c+1) over survivors.
-    *
-    * Driver state is piece-table-bounded (≤ seed cap + alphabet) per
-    * round — the same collect class as t122's cell table. Scale: the
-    * E-step runs over DISTINCT words (vocabulary-sized, not
-    * corpus-sized), and the kernel's per-row cost is O(len·6) hash
-    * lookups independent of the table size. */
-  private val UnigramSeedCap = 512
-  private val UnigramRounds = 3
-  private val UnigramMaxWordLen = 16
-  private def unigramWords(s: SparkSession, dir: String): DataFrame =
-    corpusWordCounts(s, dir)
-      .where(length(col("w")) <= UnigramMaxWordLen)
-  /** The trained table, staged per corpus snapshot as `table.tsv` in
-    * the `unigram_table` artifact (r14 verdict item #4): training
-    * costs 3 EM rounds of Spark jobs, and the production cadence is
-    * one training per snapshot with many consumers across many JVMs
-    * (t133/t134 encodes, t131's release export). Every call reads the
-    * ~500-row TSV on the driver — zero Spark jobs, no in-JVM memo. */
-  private def trainedUnigram(s: SparkSession,
-                             dir: String): Seq[(String, Long, Long)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val table = new org.apache.hadoop.fs.Path(
-      Stage.artifact(s, dir, "unigram_table") { tmp =>
-        val tsv = trainUnigram(s, dir).map { case (p, c, k) =>
-          s"$p\t$c\t$k" }.mkString("\n")
-        val f = new org.apache.hadoop.fs.Path(tmp, "table.tsv")
-        val out = f.getFileSystem(conf).create(f, true)
-        try out.write(tsv.getBytes("UTF-8")) finally out.close()
-      }, "table.tsv")
-    val in = table.getFileSystem(conf).open(table)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    text.split("\n").iterator.filter(_.nonEmpty).map { line =>
-      val Array(p, c, k) = line.split("\t", 3)
-      (p, c.toLong, k.toLong)
-    }.toSeq
-  }
-
-  /** UTF-8 byte order (unsigned lexicographic) — the collation vocab
-    * ids are defined under (r15 advice): Scala's default String order
-    * is UTF-16 code-unit order, which diverges from binary/UTF-8
-    * order for [U+E000,U+FFFF] vs supplementary-plane characters, so
-    * a sortBy(_._1) table would assign different ids than the DuckDB
-    * twin's row_number() OVER (ORDER BY p) on a non-ASCII corpus.
-    * Comparing the UTF-8 byte sequences makes the id scheme match
-    * binary collation for ALL inputs (identical on ASCII). */
-  private val utf8Order: Ordering[String] = (a: String, b: String) => {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    var r = 0
-    while (r == 0 && i < n) {
-      r = (x(i) & 0xff) - (y(i) & 0xff)
-      i += 1
-    }
-    if (r != 0) r else x.length - y.length
-  }
-  private def trainUnigram(s: SparkSession,
-                           dir: String): Seq[(String, Long, Long)] = {
-        def isSingle(p: String): Boolean =
-          p.codePointCount(0, p.length) == 1
-        val words = unigramWords(s, dir).localCheckpoint(false)
-        val seedAll = words
-          .select(col("cnt"), explode(expr(
-            """flatten(transform(sequence(1, char_length(w)),
-                 i -> transform(
-                   sequence(1, least(6, char_length(w) - i + 1)),
-                   k -> substring(w, i, k))))""")).as("p"))
-          .groupBy("p").agg(sum("cnt").as("wgt"))
-        val seed = (seedAll
-            .orderBy(col("wgt").desc, col("p")).limit(UnigramSeedCap)
-            .collect() ++
-          seedAll.where(length(col("p")) === 1).collect())
-          .map(r => (r.getString(0), r.getLong(1))).distinct
-        val seedTotal = seed.map(_._2).sum
-        // all piece orderings under utf8Order (binary collation):
-        // the table's final order IS the vocab id assignment, and the
-        // prune tie-break decides vocabulary membership — both must
-        // match the DuckDB twin's binary string comparisons for
-        // non-ASCII corpora, not just this testdata's ASCII
-        var table: Seq[(String, Long)] = seed.map { case (p, w) =>
-          (p, math.round(math.log(seedTotal.toDouble / w) * 1e6))
-        }.sortBy(_._1)(utf8Order)
-        var lastCounts = Map.empty[String, Long]
-        for (_ <- 1 to UnigramRounds) {
-          val counts = words
-            .select(col("cnt"),
-              explode(graft.functions.UnigramExpressions
-                .unigramEncode(col("w"), table)).as("p"))
-            .groupBy("p").agg(sum("cnt").as("c"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val withC = table.map { case (p, _) =>
-            (p, counts.getOrElse(p, 0L)) }
-          val nKeep = (4 * withC.size + 4) / 5
-          val kept = withC.sortBy { case (p, c) => (-c, p) }(
-              Ordering.Tuple2(implicitly[Ordering[Long]], utf8Order))
-            .zipWithIndex
-            .collect { case ((p, c), i) if i < nKeep || isSingle(p) =>
-              (p, c) }
-          val t = kept.map(_._2 + 1).sum
-          table = kept.map { case (p, c) =>
-            (p, math.round(math.log(t.toDouble / (c + 1)) * 1e6))
-          }.sortBy(_._1)(utf8Order)
-          lastCounts = kept.toMap
-        }
-        table.map { case (p, cost) => (p, lastCounts(p), cost) }
-  }
-
-  /** Distinct corpus words (≤16 chars) with their Viterbi piece
-    * arrays under the trained table — the shared encode intermediate
-    * of t133/t134 (vocabulary-sized; docs join it back by word). */
-  private def unigramWordPieces(s: SparkSession, dir: String): DataFrame =
-    unigramWords(s, dir).select(col("w"),
-      graft.functions.UnigramExpressions.unigramEncode(col("w"),
-        trainedUnigram(s, dir).map { case (p, _, c) => (p, c) })
-        .as("ps"))
-
-  /** The composed release chain S0–S5 (ingest → gates → keep-best
-    * dedup → span decontam/redact → token budget → shuffle + REAL
-    * tokenizer ids), shared by t131 (TFRecord export + decoded-shard
-    * gate) and t135 (data card), MEMOIZED per (corpus snapshot, JVM):
-    * one run per snapshot, both consumers read its checkpointed
-    * frames. Directory protocol: each chain execution owns a fresh
-    * immutable run dir under the corpus-keyed root (`Release.runDir`,
-    * keyed by applicationId + sequence), so concurrent sessions — and
-    * successive snapshots within one session — never touch each
-    * other's files; t131 publishes the run via the atomic `_latest`
-    * pointer after the export lands, exactly once per run dir. */
-  private case class ReleaseRun(relRoot: String, relDir: String,
-    nQuar: Long, docs: DataFrame, gatePass: DataFrame, kb: DataFrame,
-    kept: DataFrame, art: DataFrame, vocabSize: Long)
-
-  // The chain is deterministic per (dir, corpus snapshot), and before
-  // r16 each of t131 and t135 ran it INDEPENDENTLY — the suite paid
-  // the whole ingest→gates→dedup→redact→budget chain twice per corpus
-  // (~40 s duplicated at 100×). The memo's appId guard keeps it from
-  // serving checkpointed frames of a stopped session.
-  private val releaseMemo = new Stage.Memo[ReleaseRun]
-  // each chain EXECUTION owns a fresh, never-rewritten run dir
-  // (appId + a per-JVM sequence): once a dir is published via
-  // _latest, NOTHING writes under it again — a same-session re-run
-  // serves the memo, and a corpus rewrite lands in a NEW dir and only
-  // then swaps the pointer (r15 advice: the old scheme reused the
-  // appId dir, so a re-run's stale-shard clear could briefly empty a
-  // dir a concurrent reader had just resolved).
-  private val releaseSeq = new java.util.concurrent.atomic.AtomicLong()
-  // export-once latch keyed by run dir: computeIfAbsent both
-  // serializes concurrent exporters of one run and blocks them until
-  // the export + publish completes
-  private val releaseExported = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Boolean]()
-  /** TEST hook: the run dir the chain currently resolves to. */
-  private[graft] def releaseRunDirForTest(s: SparkSession,
-                                          dir: String): String =
-    releaseChain(s, dir).relDir
-
-  private def releaseChain(s: SparkSession, dir: String): ReleaseRun =
-    releaseMemo(s, dir)(
-      runReleaseChain(s, dir, s"/tmp/graft_release/${Stage.key(dir)}"))
-
-  private def runReleaseChain(s: SparkSession, dir: String,
-                              relRoot: String): ReleaseRun = {
-    import s.implicits._
-    val relDir = graft.sink.Release.runDir(relRoot,
-      s"${s.sparkContext.applicationId}_${releaseSeq.incrementAndGet()}")
-    // S0 — write the corpus as sharded .jsonl.gz, read it back with
-    // the quarantine contract; all downstream TEXT flows from here
-    val cols = Seq("doc_id", "source", "text")
-    graft.ingest.Jsonl.write(
-      T(s, dir, "documents").select(cols.map(col): _*),
-      cols, s"$relDir/jsonl")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val (clean, corrupt) =
-      graft.ingest.Jsonl.readCounted(s, s"$relDir/jsonl", schema)
-    val nQuar = corrupt.count() // bounded: corruption count scalar
-    // ingested docs feed gates-join, q-score, spans AND the redact
-    // join — materialize the parse once (t114 idiom)
-    val docs = clean.localCheckpoint(false)
-    // S1 — gate flags (shared gateFlags kernel; flag tables key by
-    // doc_id onto the ingested rows, whose identity S0 just proved).
-    // The classifier gate is SELF-CALIBRATED here: score_ppm above
-    // the corpus median (the CCNet percentile-cut shape, integer-
-    // exact via the t114 histogram-median idiom) — the demo
-    // classifier's absolute 500000 threshold passes zero docs on
-    // this corpus (max ≈ 120k ppm), which would gate an empty
-    // release. t127/t128 keep the absolute flag; a release keeps
-    // the top half.
-    val gf = gateFlags(s, dir)
-      .select("doc_id", "g", "r", "score_ppm")
-      .localCheckpoint(false) // feeds the median AND the row gate
-    val med = gf.groupBy("score_ppm").agg(count(lit(1)).as("__c"))
-      .agg(expr("percentile(score_ppm, 0.5D, __c)").as("__med"))
-    val gatePass = gf.where(col("g") && col("r"))
-      .crossJoin(broadcast(med))
-      .where(col("score_ppm") > col("__med"))
-      .select("doc_id")
-    val q = docs.select(col("doc_id"),
-      TextOps.qualityScoreFrom(
-        graft.functions.SketchExpressions.textStats(col("text")))
-        .as("q"))
-    // S2 — keep-best per near-dup cluster among gate survivors
-    val wkb = Window.partitionBy("cluster_id")
-      .orderBy(col("q").desc, col("doc_id"))
-    val kb = docs.select("doc_id").join(gatePass, Seq("doc_id"))
-      .join(stagedNeardupLabels(s, dir), Seq("doc_id"))
-      .join(q, Seq("doc_id"))
-      .withColumn("__rk", row_number().over(wkb))
-      .where(col("__rk") === 1)
-      .select("doc_id", "q")
-    // S3 — span decontam vs the full eval slice, then t47 redaction
-    val spans = Spans.decontamSpans(docs, "doc_id", "text",
-      n = 8, isEval = col("doc_id") % 7 === 0)
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("span_start").as("s"),
-        col("span_end").as("e"))).as("spans"))
-    val red = kb.where(col("doc_id") % 7 =!= 0)
-      .join(docs.select("doc_id", "text"), Seq("doc_id"))
-      .join(spans, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("q"),
-        TextOps.tokens(col("text")).as("toks"),
-        coalesce(col("spans"),
-          array().cast("array<struct<s:bigint,e:bigint>>")).as("sp"))
-      .select(col("doc_id"), col("q"),
-        filter(col("toks"), (t, i) =>
-          !exists(col("sp"),
-            sp => (i + 1) >= sp("s") && (i + 1) <= sp("e"))).as("kept"))
-      .withColumn("tok", size(col("kept")).cast("long"))
-    // S4 — t95 budget cut: keep the top-quality quarter of tokens
-    val started = Windows.twoLevelPrefixSum(red, Seq.empty,
-      (-round(col("q") * lit(10000.0))).cast("long"),
-      Seq(col("q").desc, col("doc_id")), col("tok"), "start")
-    val total = red.agg(sum(col("tok")).cast("long").as("__total"))
-    val kept = started.crossJoin(broadcast(total))
-      .where(col("start") * 4 < col("__total"))
-      .select("doc_id", "kept", "tok")
-      // feeds trainShuffle AND the artifact join — run the
-      // gates/dedup/redact/budget chain exactly once
-      .localCheckpoint(false)
-    // S5 — t67 shuffle + the release columns. input_ids are the
-    // TRAINED unigram tokenizer's vocab ids (t132's table; id =
-    // sorted-piece rank, the twin's row_number()-1) — real ids, not
-    // the r14 md5-hash checksum, so the decoded-shard gate covers
-    // the tokenizer → export seam. Tokens beyond the trainer's
-    // 16-char word cap map to the single UNK id (= vocab size);
-    // everything shorter is segmentable by construction (singles are
-    // never pruned, and the release corpus IS the training corpus).
-    // Per-token in-row Viterbi (O(len·6) hash lookups) keeps
-    // tokenization inside the same map stage as the shuffle columns —
-    // embarrassingly parallel, no distinct-word join/shuffle.
-    val uni = trainedUnigram(s, dir)
-    val uniCosts = uni.map { case (p, _, c) => (p, c) }
-    val unkId = uni.size.toLong
-    val art = kept
-      .join(trainShuffle(kept.select("doc_id"), shardHexWidth = 1),
-        Seq("doc_id"))
-      .withColumn("key",
-        md5(concat(lit("shuf42:"), col("doc_id").cast("string"))))
-      .withColumn("input_ids", flatten(transform(
-        filter(col("kept"), t => length(t) > 0),
-        t => when(length(lower(t)) <= lit(16),
-          graft.functions.UnigramExpressions
-            .unigramEncodeIds(lower(t), uniCosts))
-          .otherwise(array(lit(unkId))))))
-      .withColumn("__ch",
-        conv(substring(md5(concat_ws(" ", col("kept"))), 1, 9), 16, 10)
-          .cast("long"))
-      .localCheckpoint(false) // manifest + export both read this
-    ReleaseRun(relRoot, relDir, nQuar, docs, gatePass, kb, kept, art,
-      unkId)
-  }
-
-  /** The release manifest a shipped artifact carries: per shard the
-    * record/token/piece counts, the decoded-id sum, the content
-    * checksum, and the key range — everything a consumer can
-    * re-verify without the corpus (counts, id sums, keys, CRCs) plus
-    * what it audits WITH the corpus (token totals, content sums).
-    * `id_sum` (r17): the sum of every exported vocab id — with it, a
-    * CRC-valid rewrite that preserves record and piece counts but
-    * swaps content still fails the consumer's artifact-only check. */
-  private def releaseManifest(art: DataFrame): DataFrame =
-    art.groupBy("shard")
-      .agg(count(lit(1)).as("n_records"),
-        sum(col("tok")).as("n_tokens"),
-        coalesce(sum(size(col("input_ids"))).cast("long"), lit(0L))
-          .as("n_pieces"),
-        coalesce(sum(aggregate(col("input_ids"), lit(0L),
-          (a, x) => a + x)), lit(0L)).as("id_sum"),
-        sum(col("__ch")).as("content_sum"),
-        min(col("key")).as("key_min"), max(col("key")).as("key_max"))
-
-  /** TFRecord export + on-disk manifest + `_latest` publish, EXACTLY
-    * ONCE per run dir (the computeIfAbsent latch both serializes
-    * concurrent exporters and blocks them until the artifact is
-    * complete): a published dir is never written again, so a reader
-    * that resolved `_latest` can never glob a mid-rewrite shard set.
-    * The manifest lands BEFORE the pointer swap — a resolvable
-    * artifact always carries its own verification data. Shared by the
-    * t131 producer and the t139 consumer, so whichever runs first in
-    * a fresh JVM publishes and the other reads the same artifact. */
-  private def exportAndPublishOnce(s: SparkSession,
-                                   run: ReleaseRun): Unit = {
-    releaseExported.computeIfAbsent(run.relDir, _ => {
-      graft.sink.TfRecord.write(
-        run.art.select("shard", "pos", "doc_id", "input_ids"),
-        s"${run.relDir}/tfrec", "shard", "pos",
-        Seq("doc_id", "input_ids"), Nil)
-      releaseManifest(run.art).coalesce(1).write.mode("overwrite")
-        .parquet(s"${run.relDir}/manifest")
-      graft.sink.Release.publishLatest(
-        s.sparkContext.hadoopConfiguration, run.relRoot, run.relDir)
-      java.lang.Boolean.TRUE
-    })
-  }
-
-  /** Table row count from parquet FOOTER stats — the snapshot-
-    * manifest lookup a production engine does (r14 verdict #6), not
-    * a scan: one driver-side footer read per part-file (the same
-    * metadata I/O class as planning the scan), memoized per corpus
-    * snapshot so repeat executions in a session cost zero jobs.
-    * t10/t62 size their SRP-plane / centroid counts from this;
-    * previously each EXECUTION re-ran a full-scan `count()` job.
-    * Falls back to `count()` for sources without readable footers. */
-  private val rowCountMemo = new Stage.Memo[Long]
-  /** t10's adaptive-banding density sweep, memoized per corpus
-    * snapshot: the per-plane pair masses are a pure function of the
-    * corpus bytes, so one probe job per snapshot serves every later
-    * plan construction (bench pass 2, repeated runs). */
-  private val srpPlanesMemo = new Stage.Memo[Int]
-
-  /** Measured SRP plane sweep (r19, after the 1000× probe killed the
-    * modeled single-shot correction): ONE ids-only histogram at
-    * base+20 planes; since plane p's hyperplane depends only on p, a
-    * bucket at q planes is a strict PREFIX of the bucket at q' > q,
-    * so prefix rollups give the EXACT candidate pair mass at every
-    * even step in [base, base+20]. Returns the smallest plane count
-    * whose measured mass fits the 8·n budget, else base+20 (the cap
-    * bounds the planted-pair recall give-back at ~1.4%/plane). No
-    * decay model anywhere: observed mass decay on mixed corpora is
-    * ~0.65×/plane — between the random 0.5 and the cos-0.93 near-dup
-    * 0.88 — so any fixed model misprices one regime (the random
-    * model under-corrected 7× at 1000× and filled the disk). */
-  private[graft] def srpPlaneSweep(corpus: DataFrame, vecCol: String,
-                                   basePlanes: Int,
-                                   nCorpus: Long): Int = {
-    val sweepCap = 20
-    val budget = 8L * math.max(nCorpus, 1L)
-    val masses = corpus
-      .select(Vectors.srpBucket(col(vecCol), 64,
-        basePlanes + sweepCap).as("__b"))
-      .groupBy("__b").agg(count(lit(1)).as("m"))
-      .select(explode(array((0 to sweepCap by 2)
-        .map(lit(_)): _*)).as("e"), col("__b"), col("m"))
-      .groupBy(col("e"),
-        expr(s"substring(__b, 1, $basePlanes + e)").as("__p"))
-      .agg(sum("m").as("mg"))
-      .groupBy("e")
-      .agg(coalesce(sum(expr("mg * (mg - 1) DIV 2")), lit(0L))
-        .as("mass"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val extra = (0 to sweepCap by 2)
-      .find(e => masses.getOrElse(e, 0L) <= budget)
-      .getOrElse(sweepCap)
-    basePlanes + extra
-  }
-  private def tableRowCount(s: SparkSession, dir: String,
-                            table: String): Long =
-    rowCountMemo(s, dir, table)(try {
-      val conf = s.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-      val fs = p.getFileSystem(conf)
-      val it = fs.listFiles(p, true)
-      var total = 0L
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith(".")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try total += r.getRecordCount finally r.close()
-        }
-      }
-      total
-    } catch { case scala.util.control.NonFatal(_) =>
-      T(s, dir, table).count()
-    })
-
-  /** Materialize-once cluster labels — `Dedup.clusterLabels`' scaladoc
-    * contract made real instead of prose: the first caller per corpus
-    * snapshot computes the t12 label table ONCE and stages it via
-    * `Writers.writeWithManifest` (16 cluster-hash shards, min/max
-    * stats); every d5/t56/t57/t72/t86-style report then derives from
-    * the ARTIFACT scan — the LSH shingle/signature pass and the CC
-    * fixpoint never re-run per consumer (plan-locked: the derived
-    * plans contain zero graft_minhash/word_shingles work). t12 itself
-    * stays on the live pipeline so the machinery keeps its own
-    * oracle + bench measurement. A fresh JVM reuses the artifact of
-    * an unchanged snapshot — the production cadence: one labeling per
-    * corpus snapshot, many consumers across many jobs. */
-  private def stagedNeardupLabels(s: SparkSession,
-                                  dir: String): DataFrame = {
-    val path = Stage.artifact(s, dir, "cluster_labels") { tmp =>
-      graft.sink.Writers.writeWithManifest(
-        neardupLabels(s, dir)
-          .withColumn("shard", pmod(col("cluster_id"), lit(16L))),
-        tmp, Seq("shard"), Seq("doc_id", "cluster_id"))
-    }
-    s.read.parquet(path).select("doc_id", "cluster_id")
-  }
-
-  /** Trained bitext IVF centroids STAGED per corpus snapshot (r16
-    * verdict #4): the Lloyd retrain is a corpus-sized pass, and t137 /
-    * t137b / t137c each re-ran it per query (and per bench pass) over
-    * the same corpus. Same discipline as `stagedNeardupLabels`, keyed
-    * by the embeddings snapshot plus the index shape — tag, k, and the
-    * hierarchical floor, because the retrain's own assignment
-    * dispatches on the floor. Parquet round-trips the trained doubles
-    * exactly (they are micro-quantized integer means), so staged ==
-    * inline values. `corpus` is by-name: only a cache miss pays its
-    * construction. */
-  private def stagedBitextCents(s: SparkSession, dir: String,
-                                tag: String, corpus: => DataFrame,
-                                k: Long): DataFrame = {
-    val name =
-      s"bitext_cents_${tag}_k${k}_f${graft.ops.Vectors.HierarchicalFloor}"
-    val path = Stage.artifact(s, dir, name, "embeddings") { tmp =>
-      val e = corpus
-      lloydCentroids(e,
-        e.where(col("vec_id") < k).select(col("vec_id").as("cid"),
-          col("v")), k, "vec_id", "cid", "v")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
-    s.read.parquet(path).select("cid", "v")
-  }
-
-  /** TEST hook (StagedLabelsSpec): the staged organic-tag centroids
-    * for `dir` at its production k, plus the inline retrain for
-    * value comparison. */
-  private[graft] def stagedBitextCentsForTest(s: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val n = tableRowCount(s, dir, "embeddings")
-    val k = math.max(16L, n / 256L)
-    def e = T(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val inline = lloydCentroids(e,
-      e.where(col("vec_id") < k).select(col("vec_id").as("cid"),
-        col("v")), k, "vec_id", "cid", "v")
-    (stagedBitextCents(s, dir, "organic", e, k), inline)
-  }
-
-  /** t137's candidate generator: cross-side (even vec_id = "source
-    * language", odd = "target") pairs sharing an IVF cell — the x
-    * side multi-probes its nProbe nearest cells, the y side sits in
-    * its top-1 cell — with the pair cosine pre-quantized to integer
-    * micro units (order-free sums downstream). Cell count scales with
-    * the corpus (k = max(16, n/256), t62's discipline) so cell
-    * occupancy — and the candidate join and per-key windows it feeds
-    * — stays flat at any corpus size. Checkpointed: three consumers
-    * (both k-NN aggs + the margin join). */
-  private def bitextIvfCandidates(s: SparkSession, dir: String,
-                                  nProbe: Int = 2,
-                                  xFilter: Column = lit(true))
-      : DataFrame = {
-    val n = tableRowCount(s, dir, "embeddings")
-    val k = math.max(16L, n / 256L)
-    def e = T(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cents = stagedBitextCents(s, dir, "organic", e, k)
-    bitextCellCandidates(e, cents, k, nProbe, xFilter)
-  }
-
-  /** Candidate tables for an nProbe SWEEP (t137b/t137c): below the
-    * hierarchical floor ONE nProbe=max run serves every smaller r by
-    * a probe_rank prefix filter — flat probe ranks nest, so the
-    * rank-≤r slice IS the nProbe=r run. At/above the floor they do
-    * NOT nest: `hierProbeCells` at n probes the n nearest SUPERS, so
-    * an n=4 probe's rank-1/2 cells can differ from (and dominate) a
-    * true nProbe=1/2 run's — prefix-slicing there overstated the
-    * production operating points and diverged from the twin's
-    * per-nProbe blocks (r16 advice #2). Above the floor each r
-    * generates its own candidates; the staged trained centroids are
-    * shared, so the Lloyd retrain is still paid once. */
-  private def bitextCandSweep(e: => DataFrame, cents: DataFrame,
-                              k: Long, rs: Seq[Int], xFilter: Column)
-      : Int => DataFrame =
-    if (k < graft.ops.Vectors.HierarchicalFloor) {
-      // deliberately NOT cut (r19 probe): the three nProbe curves
-      // re-enter through the same assignment/cell-join exchanges and
-      // AQE reuses them at runtime — a localCheckpoint here measured
-      // SLOWER (t137b 2.75 → 3.23 s isolated), the same barrier-for-
-      // nothing as q40/t107
-      val cand = bitextCellCandidates(e, cents, k, rs.max, xFilter)
-      r => cand.where(col("probe_rank") <= r)
-    } else
-      rs.map(r =>
-        r -> bitextCellCandidates(e, cents, k, r, xFilter)).toMap
-
-  /** SQ8 base (t140/t141/t142): the corpus micro-quantized
-    * (`vu` array<long>), the per-dimension min/max trained over it
-    * (`mnu`/`mxu`, one broadcast row — the scalar quantizer's whole
-    * model is 2·dims longs), and the 8-bit `codes`:
-    * (v−mn)·255 DIV max(mx−mn, 1). Integer end to end, so DuckDB
-    * replays every code exactly. The trainer is a posexplode →
-    * per-dim partial min/max (64 groups regardless of corpus size);
-    * the encode is map-side. */
-  /** Micro-quantization of a double vector column (the SQ8 domain). */
-  private def sq8Vu(v: Column): Column =
-    transform(v, x => round(x * lit(1000000.0)).cast("long"))
-
-  /** The 8-bit codes from `vu`/`mnu`/`mxu` columns in scope:
-    * (v−mn)·255 DIV max(mx−mn, 1). floor(x/y) on nonnegative doubles
-    * below 2^53 IS integer division (the quotient sits ≥ 1/y > one
-    * ulp from the next integer), matching the twin's `//`. */
-  private def sq8CodesCol: Column =
-    transform(sequence(lit(1), lit(64)), i =>
-      floor(((element_at(col("vu"), i) - element_at(col("mnu"), i)) *
-        lit(255L)).cast("double") /
-        greatest(element_at(col("mxu"), i) - element_at(col("mnu"), i),
-          lit(1L)).cast("double")).cast("long"))
-
-  /** The scalar quantizer's whole model — per-dimension min/max over
-    * the micro-quantized corpus, one broadcast row (2·dims longs).
-    * The trainer is a posexplode → per-dim partial min/max (64 groups
-    * regardless of corpus size). */
-  private def sq8Stats(e2: DataFrame): DataFrame =
-    // outer + null drop ≡ inner (vu is 64 non-null longs for every
-    // row), but avoids the inferred size(transform(…))>0 filter that
-    // re-ran the vu micro-quantization transform below the projection
-    e2.select(posexplode_outer(col("vu")))
-      .where(col("col").isNotNull)
-      .groupBy(col("pos"))
-      .agg(min(col("col")).as("mn"), max(col("col")).as("mx"))
-      .groupBy()
-      .agg(
-        transform(array_sort(collect_list(struct(col("pos"), col("mn")))),
-          f => f.getField("mn")).as("mnu"),
-        transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-          f => f.getField("mx")).as("mxu"))
-
-  private def sq8Encoded(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings").select(col("vec_id"),
-      sq8Vu(transform(col("embedding"), x => x.cast("double")))
-        .as("vu"))
-    e.crossJoin(broadcast(sq8Stats(e)))
-      .select(col("vec_id"), col("vu"), col("mnu"), col("mxu"),
-        sq8CodesCol.as("codes"))
-  }
-
-  /** The SQ8 base CTEs shared by the three twins: micro-quantized
-    * corpus `e` (vec_id, vu), the one-row trained stats `st`
-    * (mnu, mxu), and the encoded corpus `enc`. */
-  private lazy val sq8BaseSql: String =
-    """e AS MATERIALIZED (
-         SELECT vec_id,
-           -- cast BEFORE the multiply: float4 * 1e6 in float precision
-           -- drifts from Spark's double multiply on ~1 µ per 10⁶ values
-           [CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-            FOR x IN embedding] AS vu
-         FROM embeddings),
-       st AS MATERIALIZED (
-         SELECT list(mn ORDER BY d) AS mnu, list(mx ORDER BY d) AS mxu
-         FROM (
-           SELECT d, min(vu[d]) AS mn, max(vu[d]) AS mx
-           FROM e, unnest(generate_series(1, 64)) AS u(d)
-           GROUP BY d)),
-       enc AS MATERIALIZED (
-         SELECT vec_id, vu, mnu, mxu,
-           [((vu[i] - mnu[i]) * 255) // greatest(mxu[i] - mnu[i], 1)
-            FOR i IN generate_series(1, 64)] AS codes
-         FROM e, st)"""
-
-  /** `sq8Recon`'s SQL: bin-midpoint reconstruction of coordinate `i`
-    * from code array `$arr` (mnu/mxu in scope). */
-  private def sq8ReconSql(arr: String): String =
-    s"(mnu[i] + ((2 * ${arr}[i] + 1) * (mxu[i] - mnu[i])) // 512)"
-
-  /** IVF-PQ twin base (t143/t144): `ivfPqApprox`'s exact replay at
-    * the corpus-scaled operating point — scaled cell count / nProbe /
-    * codebook stride in `kk`, floor-dispatched coarse assignment
-    * (`scaledAssignSql`, prefix `pq`), residuals, the STRIDED-sample
-    * residual codebook, per-subspace codes (t28's shape on
-    * residuals), reconstruction (t29's shape), floor-dispatched probe
-    * list with per-cell query residuals, and the cell-restricted ADC
-    * scores `sadc`. */
-  private lazy val ivfPqBaseSql: String =
-    s"""e AS MATERIALIZED (
-         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-         FROM embeddings),
-       kk AS MATERIALIZED (
-         SELECT greatest(16, count(*) // 256) AS k,
-           greatest(1, count(*) // 256) AS st,
-           greatest(2, CAST(ceil(sqrt(CAST(greatest(16, count(*) // 256)
-             AS DOUBLE)) / 2) AS BIGINT)) AS np
-         FROM e),
-       c AS MATERIALIZED (
-         SELECT vec_id AS cid, v AS cv FROM e, kk WHERE vec_id < kk.k),
-       ${scaledAssignSql("pq", "e", "c", "(SELECT k FROM kk)")},
-       res AS MATERIALIZED (
-         SELECT a.vec_id, a.cid AS cell,
-           [a.v[i] - c.cv[i] FOR i IN generate_series(1, 64)] AS r
-         FROM pqasg a JOIN c ON c.cid = a.cid),
-       cb AS MATERIALIZED (
-         -- seeds (vec_id < k) excluded: their residual is the zero
-         -- vector, a degenerate codebook entry
-         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS pcid,
-           r AS pcv
-         FROM res, kk WHERE vec_id % kk.st = 0 AND vec_id >= kk.k
-         QUALIFY pcid <= 255),
-       d AS (
-         SELECT res.vec_id, j, cb.pcid,
-           list_sum([(res.r[(j-1)*8+i] - cb.pcv[(j-1)*8+i])
-                     * (res.r[(j-1)*8+i] - cb.pcv[(j-1)*8+i])
-                     FOR i IN generate_series(1, 8)]) AS dist
-         FROM res, cb, unnest(generate_series(1, 8)) AS u(j)),
-       codes AS MATERIALIZED (
-         SELECT vec_id, j, pcid FROM d
-         QUALIFY row_number() OVER (PARTITION BY vec_id, j
-           ORDER BY dist, pcid) = 1),
-       recon AS MATERIALIZED (
-         SELECT c2.vec_id,
-           flatten(list(b.pcv[(c2.j-1)*8+1:(c2.j-1)*8+8] ORDER BY c2.j))
-             AS rv
-         FROM codes c2 JOIN cb b ON b.pcid = c2.pcid
-         GROUP BY c2.vec_id),
-       q AS MATERIALIZED (
-         SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-       q2 AS (SELECT qid AS vec_id, qv AS v FROM q),
-       ${flatProbeSql("pqq", "q2", "c", "(SELECT np FROM kk)",
-          flatPred("(SELECT k FROM kk)"))},
-       ${hierProbeSql("pqq", "q2", "pq", "(SELECT np FROM kk)",
-          hierPredSql("(SELECT k FROM kk)"))},
-       pc0 AS (
-         SELECT vec_id AS qid, cell FROM pqqfp
-         WHERE ${flatPred("(SELECT k FROM kk)")}
-         UNION ALL
-         SELECT vec_id AS qid, cell FROM pqqph
-         WHERE ${hierPredSql("(SELECT k FROM kk)")}),
-       pr AS MATERIALIZED (
-         SELECT p.qid, p.cell,
-           [q.qv[i] - c.cv[i] FOR i IN generate_series(1, 64)] AS qr
-         FROM pc0 p JOIN q ON q.qid = p.qid JOIN c ON c.cid = p.cell),
-       sadc AS MATERIALIZED (
-         SELECT pr.qid, res.vec_id,
-           list_sum([(pr.qr[i] - recon.rv[i]) * (pr.qr[i] - recon.rv[i])
-                     FOR i IN generate_series(1, 64)]) AS dist
-         FROM pr JOIN res ON res.cell = pr.cell
-           JOIN recon ON recon.vec_id = res.vec_id
-         WHERE pr.qid <> res.vec_id)"""
-
-  /** IVF+SQ8 twin base (t145/t146): `ivfSq8Approx`'s exact replay —
-    * t140's SQ8 encode (`sq8BaseSql`: e/st/enc), the corpus-scaled
-    * floor-dispatched coarse assignment over the double vectors
-    * (prefix `sq`), the cell-keyed posting table, the
-    * floor-dispatched probe list, and the cell-restricted
-    * integer-micro ADC scores `ssc`. */
-  private lazy val ivfSq8BaseSql: String =
-    s"""$sq8BaseSql,
-       ed AS MATERIALIZED (
-         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-         FROM embeddings),
-       kk AS MATERIALIZED (
-         SELECT greatest(16, count(*) // 256) AS k,
-           greatest(2, CAST(ceil(sqrt(CAST(greatest(16, count(*) // 256)
-             AS DOUBLE)) / 2) AS BIGINT)) AS np
-         FROM ed),
-       c AS MATERIALIZED (
-         SELECT vec_id AS cid, v AS cv FROM ed, kk WHERE vec_id < kk.k),
-       ${scaledAssignSql("sq", "ed", "c", "(SELECT k FROM kk)")},
-       post AS MATERIALIZED (
-         SELECT enc.vec_id, a.cid AS cell, enc.vu, enc.mnu, enc.mxu,
-           enc.codes
-         FROM enc JOIN sqasg a USING (vec_id)),
-       q AS MATERIALIZED (
-         SELECT vec_id AS qid, vu AS qu FROM enc WHERE vec_id < 10),
-       q2 AS (SELECT vec_id, v FROM ed WHERE vec_id < 10),
-       ${flatProbeSql("sqq", "q2", "c", "(SELECT np FROM kk)",
-          flatPred("(SELECT k FROM kk)"))},
-       ${hierProbeSql("sqq", "q2", "sq", "(SELECT np FROM kk)",
-          hierPredSql("(SELECT k FROM kk)"))},
-       spc AS (
-         SELECT vec_id AS qid, cell FROM sqqfp
-         WHERE ${flatPred("(SELECT k FROM kk)")}
-         UNION ALL
-         SELECT vec_id AS qid, cell FROM sqqph
-         WHERE ${hierPredSql("(SELECT k FROM kk)")}),
-       ssc AS MATERIALIZED (
-         SELECT q.qid, post.vec_id,
-           CAST(list_sum([(q.qu[i] - ${sq8ReconSql("post.codes")}) *
-                          (q.qu[i] - ${sq8ReconSql("post.codes")})
-                          FOR i IN generate_series(1, 64)]) AS BIGINT)
-             AS adc
-         FROM spc p JOIN q ON q.qid = p.qid
-           JOIN post ON post.cell = p.cell
-         WHERE q.qid <> post.vec_id)"""
-
-  /** Probe-cell dispatch shared by the composite indexes (IVF-PQ,
-    * IVF-SQ8): each query row's `nProbe` nearest cells — the flat
-    * top-n kernel over the one-row centroid array below the
-    * hierarchical floor, `hierProbeCells` above it (the same
-    * scale/floor discipline as the assignments). Returns
-    * (qid, v, cell). */
-  private def probeCellsScaled(q: DataFrame, cents: DataFrame,
-                               kCells: Long, nProbe: Int): DataFrame =
-    if (kCells < Vectors.HierarchicalFloor) {
-      val centArr = broadcast(cents.groupBy().agg(
-        collect_list(struct(col("cid").cast("long").as("cid"),
-          col("v").as("cv"))).as("__cents")))
-      q.crossJoin(centArr)
-        .select(col("qid"), col("v"),
-          explode(graft.functions.VectorExpressions
-            .topNCentroid(col("v"), col("__cents"), nProbe))
-            .as("cell"))
-    } else
-      Vectors.hierProbeCells(q, cents, Vectors.hierGroups(kCells),
-        nProbe, "qid", "cid", "v", dims = 64)
-        .select(col("qid"), col("v"), col("cell"))
-
-  /** The IVF-PQ index build + search shared by t143/t144, at a
-    * CORPUS-SCALED operating point (r17 verdict #1 — the r17 landing
-    * pinned 16 cells / nProbe 2 / a prefix codebook slice, and its own
-    * recall row showed the consequence: refined recall@5 fell 90%→54%
-    * from sf0.01 to sf0.1, because at 100× a fixed 16-cell index
-    * degenerates toward a brute scan with dead recall):
-    *  - coarse cells k = max(16, n/256) (t62's discipline), assignment
-    *    routed through `ivfAssignWithVecScaled` — two-level above the
-    *    hierarchical floor, so the floored gate exercises the at-scale
-    *    branch of BOTH engines;
-    *  - nProbe = max(2, ⌈√k/2⌉) — probes grow with the cell count so
-    *    the probed corpus fraction stays roughly flat (FAISS's
-    *    √k-proportional rule);
-    *  - residual codebook (m=8, ≤256 entries) trained on a STRIDED
-    *    sample of the residuals (vec_id % (n/256) == 0, first 256 by
-    *    id) — corpus-representative at any scale where the old prefix
-    *    slice saw only the first cells' residuals, and the slice size
-    *    stays ~256 rows independent of n;
-    *  - probe cells dispatch on the floor exactly like the
-    *    assignment: flat top-n kernel below, `hierProbeCells` above.
-    * Refine-N stays a fixed multiple of the final k (t144 reranks the
-    * ADC top-50 exactly — 10·k, FAISS IndexRefineFlat's usual
-    * k_factor; measured on this corpus the true top-5's worst ADC
-    * rank at sf0.1 is 151 with median well under 50, so 25 capped
-    * refined recall at 62% where 50 reaches 86%).
-    * SQL twin: `ivfPqBaseSql`. */
-  private def ivfPqApprox(s: SparkSession, dir: String,
-                          k: Int = 5): DataFrame = {
-    val n = tableRowCount(s, dir, "embeddings")
-    val kCells = math.max(16L, n / 256L)
-    val nProbe = math.max(2, math.ceil(
-      math.sqrt(kCells.toDouble) / 2.0).toInt)
-    val stride = math.max(1L, n / 256L)
-    val e = T(s, dir, "embeddings").select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cents = e.where(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v"))
-    val resid = Vectors
-      .ivfAssignWithVecScaled(e, cents, kCells, "vec_id", "cid", "v",
-        dims = 64)
-      .join(broadcast(cents.select(col("cid"), col("v").as("__cv"))),
-        Seq("cid"))
-      .select(col("vec_id"), col("cid").as("cell"),
-        zip_with(col("v"), col("__cv"), (a, b) => a - b).as("r"))
-    // ≤256-entry residual codebook (8-bit codes, the standard PQ
-    // operating point; 16 entries measured 0-40 % recall@5 — 4-bit
-    // codes are too coarse for an unstructured corpus). The global
-    // row_number window re-bases ids to 0..255 (the element_at
-    // reconstruction contract) over a ~256-row slice — bounded at any
-    // corpus size by the stride. Coarse seeds (vec_id < kCells) are
-    // excluded from the sample: a seed's residual against its own
-    // cell is the zero vector, a degenerate codebook entry (r18
-    // advice — at gate SFs where stride = 1 the old sample spent 16
-    // of its 256 entries on identical zeros).
-    val cbW = Window.orderBy(col("vec_id"))
-    val cb = resid.where(pmod(col("vec_id"), lit(stride)) === 0 &&
-        col("vec_id") >= kCells)
-      .select(col("vec_id"), col("r"))
-      .withColumn("__rk", row_number().over(cbW))
-      .where(col("__rk") <= 256)
-      .select((col("__rk") - 1).cast("long").as("cid"), col("r"))
-    // the posting table IS the index: built once, searched by every
-    // query — materialize it (also: t129's checkpoint idiom)
-    val enc = Vectors.pqEncodeKeep(resid, cb, "vec_id", "cid", "r",
-      m = 8, dims = 64, keep = Seq("cell"))
-      .localCheckpoint(false)
-    val q = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v"))
-    val probeCells = probeCellsScaled(q, cents, kCells, nProbe)
-    // the query's residual against each probed centroid — the vector
-    // the ADC compares to
-    val probes = probeCells
-      .join(broadcast(cents.select(col("cid").as("cell"),
-        col("v").as("__cv"))), Seq("cell"))
-      .select(col("qid"), col("cell"),
-        zip_with(col("v"), col("__cv"), (a, b) => a - b).as("__qr"))
-    Vectors.ivfPqTopKProbed(probes, enc,
-      cb.withColumnRenamed("r", "v"), "qid", "vec_id", "cell", "cid",
-      "v", "codes", m = 8, dims = 64, k = k,
-      probeRows = 10L * nProbe)
-  }
-
-  /** Bin-midpoint reconstruction of coordinate `i` from the `codes` /
-    * `mnu` / `mxu` columns in scope: mn + (2·code+1)·(mx−mn) DIV 512,
-    * integer micros. */
-  private def sq8Recon(i: Column): Column =
-    element_at(col("mnu"), i) +
-      floor(((element_at(col("codes"), i) * lit(2L) + lit(1L)) *
-        (element_at(col("mxu"), i) - element_at(col("mnu"), i)))
-        .cast("double") / lit(512.0)).cast("long")
-
-  /** The full reconstructed vector as one array column — computed ONCE
-    * per corpus row (before any query join) so the ADC pair loop is a
-    * plain integer array distance. Folding `sq8Recon` inside the
-    * per-pair aggregate recomputed the 64-coordinate reconstruction
-    * for every (query, row) pair — nProbe·queries× redundant work in
-    * the hottest loop of the SQ8 search family (r19, guide §4).
-    *
-    * ONLY reference this where `codes` is a MATERIALIZED attribute
-    * (after a localCheckpoint): when `codes` is still an alias in the
-    * same projection, CollapseProject inlines the whole codes
-    * transform into each element — element_at(transform(vu…), i)
-    * rebuilds the 64-entry code array PER COORDINATE, a measured 64×
-    * blowup (r19: t141 2.0 → 3.3 s). Transient frames use
-    * `sq8ReconArrFromVu`. */
-  private def sq8ReconArr: Column =
-    transform(sequence(lit(1), lit(64)), i => sq8Recon(i))
-
-  /** `sq8ReconArr` with the code FUSED per coordinate — O(1) in
-    * vu/mnu/mxu per element, safe in transient frames where `codes`
-    * is an un-materialized sibling alias (see sq8ReconArr's inlining
-    * trap). Arithmetic-identical to recon-from-codes: same integer
-    * code (floor-div on nonnegative doubles < 2^53 IS integer
-    * division, the sq8CodesCol contract), same bin midpoint. */
-  private def sq8ReconArrFromVu: Column =
-    transform(sequence(lit(1), lit(64)), { i =>
-      val mn = element_at(col("mnu"), i)
-      val mx = element_at(col("mxu"), i)
-      val code = floor(((element_at(col("vu"), i) - mn) * lit(255L))
-        .cast("double") / greatest(mx - mn, lit(1L)).cast("double"))
-        .cast("long")
-      mn + floor(((code * lit(2L) + lit(1L)) * (mx - mn))
-        .cast("double") / lit(512.0)).cast("long")
-    })
-
-  /** Test hook pinning the two reconstruction paths to each other
-    * (r19 advice #3): the fused-from-vu form re-derives the 8-bit code
-    * inline, so an encoding change that only touches `sq8CodesCol`
-    * would silently desynchronize it. Returns, per corpus row, both
-    * reconstructions over a CHECKPOINTED encoded frame (so `codes` is
-    * a materialized attribute and sq8ReconArr is safe to reference) —
-    * Sq8ReconParitySpec asserts element-wise equality. */
-  private[graft] def sq8ReconPairForTest(s: SparkSession,
-                                         dir: String): DataFrame =
-    sq8Encoded(s, dir).localCheckpoint(false)
-      .select(col("vec_id"), sq8ReconArr.as("recon_codes"),
-        sq8ReconArrFromVu.as("recon_vu"))
-
-  /** IVF+SQ8 composite search (FAISS IndexIVFScalarQuantizer QT_8bit
-    * — the other common production tier next to IVF-PQ, r17 verdict
-    * #6: 4× compression with near-exact per-coordinate
-    * reconstruction, where PQ's 32× trades much more recall): SQ8
-    * codes stored KEYED BY the coarse cell, a query probes its
-    * `nProbe` nearest cells and ADC-scores only those cells'
-    * postings at the t141 integer-micro reconstruction distance —
-    * exact replay on both engines. Same corpus-scaled operating
-    * point and floor dispatch as `ivfPqApprox` (cells = max(16,
-    * n/256), nProbe = max(2, ⌈√k/2⌉)). 100 TB shape: ONE map-side
-    * pass both assigns the cell and encodes the codes (no
-    * corpus-sized join — the stats and centroids are broadcast
-    * models), the posting scan reads codes keyed by cell
-    * (partition-prunable), and only the bounded per-query top-k
-    * window shuffles candidates. SQL twin: `ivfSq8BaseSql`. */
-  private def ivfSq8Approx(s: SparkSession, dir: String,
-                           k: Int = 5): DataFrame = {
-    val n = tableRowCount(s, dir, "embeddings")
-    val kCells = math.max(16L, n / 256L)
-    val nProbe = math.max(2, math.ceil(
-      math.sqrt(kCells.toDouble) / 2.0).toInt)
-    val e = T(s, dir, "embeddings").select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cents = e.where(col("vec_id") < kCells)
-      .select(col("vec_id").as("cid"), col("v"))
-    val stats = broadcast(sq8Stats(e.select(col("vec_id"),
-      sq8Vu(col("v")).as("vu"))))
-    // the index build: assignment + encode in one map-side pass; the
-    // posting table is built once and searched by every query
-    val posting = Vectors
-      .ivfAssignWithVecScaled(e, cents, kCells, "vec_id", "cid", "v",
-        dims = 64)
-      .withColumn("vu", sq8Vu(col("v")))
-      .crossJoin(stats)
-      .select(col("vec_id"), col("cid").as("cell"), col("vu"),
-        col("mnu"), col("mxu"), sq8CodesCol.as("codes"))
-      .localCheckpoint(false)
-      // reconstruction AFTER the checkpoint: codes is a materialized
-      // attribute there, so the per-row recon reads the STORED codes
-      // (the production search path) and CollapseProject cannot inline
-      // the codes transform into it (see sq8ReconArr). The Project
-      // stays below the probe join — once per posting row, never per
-      // scored pair.
-      .withColumn("__ru", sq8ReconArr)
-    val q = e.where(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("v"))
-    val probes = probeCellsScaled(q, cents, kCells, nProbe)
-      .select(col("qid"), col("cell"), sq8Vu(col("v")).as("qu"))
-    val scored = posting.join(broadcast(probes), Seq("cell"))
-      .where(col("qid") =!= col("vec_id"))
-      // single-pass integer kernel ≡ the index-order long fold
-      // (SketchExprSpec) — the interpreted per-coordinate lambda was
-      // the search loop's dominant CPU term
-      .withColumn("adc",
-        graft.functions.VectorExpressions
-          .sqDistLong(col("qu"), col("__ru")))
-    val w = Window.partitionBy("qid").orderBy(col("adc"), col("vec_id"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("vec_id"), col("adc"), col("rn"))
-  }
-
-  /** ONE Lloyd re-centering round over the first-k seeds — the IVF
-    * retrain step (q39's kmeans step, r15 verdict #7: first-k seeds
-    * are deterministic but arbitrary; one round measurably tightens
-    * cells, which buys recall at the same nProbe). Engine-portable by
-    * QUANTIZATION: each coordinate is quantized to integer micros
-    * BEFORE summation (order-free integer sums), and the new centroid
-    * coordinate is floor(sum_micro / count) / 1e6 — exact integer
-    * arithmetic inside doubles on both engines, where a raw double
-    * avg would differ in the LSB by summation order and flip
-    * near-boundary assignments. Empty cells keep their seed (the
-    * kmeansStep convention). Assignment routes through the scaled
-    * dispatch, so the retrain itself is two-level above the floor.
-    * Returns (cidCol, vecCol double). SQL twin: `lloydCentSql`. */
-  private def lloydCentroids(corpus: DataFrame, seeds: DataFrame,
-                             k: Long, idCol: String, cidCol: String,
-                             vecCol: String): DataFrame = {
-    val asg = Vectors.ivfAssignWithVecScaled(corpus, seeds, k, idCol,
-      cidCol, vecCol, dims = 64)
-    val means = asg.select(col(cidCol), posexplode(col(vecCol)))
-      .groupBy(col(cidCol), col("pos"))
-      .agg(sum(round(col("col").cast("double") * lit(1000000.0))
-        .cast("long")).as("__s"), count(lit(1)).as("__c"))
-      .select(col(cidCol), col("pos"),
-        (floor(col("__s").cast("double") / col("__c")) /
-          lit(1000000.0)).as("__v"))
-      .groupBy(col(cidCol))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("__v")))),
-        s => s.getField("__v")).as("__new"))
-    seeds.select(col(cidCol).cast("long").as(cidCol),
-        transform(col(vecCol), x => x.cast("double")).as("__prev"))
-      .join(means, Seq(cidCol), "left")
-      .select(col(cidCol), coalesce(col("__new"), col("__prev"))
-        .as(vecCol))
-  }
-
-  /** TEST hook (VectorHierSpec): the candidate generator at an
-    * explicit k, so a spec can exercise the above-floor hierarchical
-    * branch on a small corpus (gate SFs sit below the floor — the
-    * first 100× run caught a column-name bug there). Trains inline
-    * (no backing table to fingerprint). */
-  private[graft] def bitextCandidatesForTest(e: DataFrame, k: Long,
-                                             nProbe: Int): DataFrame = {
-    val cents = lloydCentroids(e,
-      e.where(col("vec_id") < k).select(col("vec_id").as("cid"),
-        col("v")), k, "vec_id", "cid", "v")
-      .localCheckpoint(false)
-    bitextCellCandidates(e, cents, k, nProbe, lit(true))
-  }
-
-  /** `bitextIvfCandidates` over an explicit (vec_id, v) corpus with
-    * explicit trained centroids and cell count — the t137c
-    * planted-recall harness mines a corpus it constructs (organic ∪
-    * planted translation twins), so the candidate generator cannot
-    * read the table itself; `cents` comes staged
-    * (`stagedBitextCents`) so the Lloyd retrain runs once per corpus
-    * snapshot, not once per query (r16 verdict #4). */
-  private def bitextCellCandidates(e: DataFrame, cents: DataFrame,
-                                   k: Long, nProbe: Int,
-                                   xFilter: Column): DataFrame = {
-    // IVF cells, not SRP buckets: the bitext operating point is
-    // MID-similarity (a translation pair sits at cos ≈ 0.8, far from
-    // the near-dup band where t10's sign-random projections excel),
-    // and a single SRP table's per-plane agreement decays
-    // exponentially there — measured: radius-0 recall ~10 % on this
-    // corpus. Coarse Voronoi cells + multi-probe is what production
-    // bitext miners (FAISS IVF, Artetxe & Schwenk's own setup) use:
-    // the x side probes its nProbe nearest cells via the map-side
-    // top-n kernel (the probe side is corpus-sized — t9's
-    // broadcast-probes shape doesn't apply), the y side sits in its
-    // top-1 cell, candidates join on the cell id. Cell count scales
-    // with the corpus (k = max(16, n/256), t62's discipline) so cell
-    // occupancy — and the candidate join — stays flat. t137b
-    // MEASURES recall per nProbe against an exact probe slice.
-    // Output: (x_id, y_id, cos_micro, probe_rank) where probe_rank is
-    // the rank of the pair's shared cell in x's probe list — so ONE
-    // top-nProbe assignment pass serves every smaller nProbe by a
-    // cheap rank filter (t137b's sweep: one assignment, three
-    // curves). `xFilter` pushes a probe-slice restriction BEFORE the
-    // assignment (per-x candidates are independent of other xs, so
-    // filter-then-assign ≡ assign-then-filter — the twin filters cp).
-    // No distinct: y sits in exactly one cell and x's probed cells
-    // are distinct, so a pair occurs at most once by construction.
-    //
-    // Cells are TRAINED (one quantized Lloyd round over the first-k
-    // seeds, r16): tighter cells put a pair's two sides in the same
-    // cell more often — measured on the planted corpus (t137c),
-    // recall at nProbe 1/2/4 moves 46/67/85 % (seeds) → 59/78/93 %
-    // (trained) at sf0.1, 52/70/86 → 72/87/97 % at sf0.01; the
-    // structureless curve (t137b) moves 49 → 60 % at nProbe 4
-    // (sf0.01). The retrain itself arrives staged per corpus
-    // snapshot via `stagedBitextCents` (r17), so it runs once per
-    // snapshot across all consumers, queries, and bench passes.
-    val xRows = e.where(pmod(col("vec_id"), lit(2)) === 0 && xFilter)
-    val yRows = e.where(pmod(col("vec_id"), lit(2)) === 1)
-    // scale dispatch (Vectors.HierarchicalFloor): below the floor the
-    // flat single-row centroid array is exact and join-free; at/above
-    // it both sides route through the two-level quantizer (O(√k) per
-    // row, centroids as a g-row broadcast table — the flat one-row
-    // collect_list would hit the 2 GB ceiling near k ≈ 4M)
-    val (x, y) =
-      if (k < graft.ops.Vectors.HierarchicalFloor) {
-        val centArr = broadcast(cents
-          .groupBy().agg(collect_list(struct(
-            col("cid").cast("long").as("cid"), col("v").as("cv")))
-            .as("__cents")))
-        (xRows.crossJoin(centArr)
-          .select(col("vec_id").as("x_id"), col("v").as("xv"),
-            posexplode(graft.functions.VectorExpressions
-              .topNCentroid(col("v"), col("__cents"), nProbe)))
-          .select(col("x_id"), col("xv"), col("col").as("cell"),
-            (col("pos") + 1).cast("long").as("probe_rank")),
-          yRows.crossJoin(centArr)
-            .select(col("vec_id").as("y_id"), col("v").as("yv"),
-              graft.functions.VectorExpressions
-                .argminCentroid(col("v"), col("__cents")).as("cell")))
-      } else {
-        val g = graft.ops.Vectors.hierGroups(k)
-        // cidCol names the CENTROID table's id column ("cid" in
-        // `cents`) — the r16 100× run caught this call passing the
-        // output alias instead (gate SFs sit below the floor, so only
-        // an at-scale execution exercises this branch)
-        (graft.ops.Vectors
-          .hierProbeCells(xRows, cents, g, nProbe, "vec_id", "cid", "v",
-            dims = 64)
-          .select(col("vec_id").as("x_id"), col("v").as("xv"),
-            col("cell"), col("probe_rank")),
-          graft.ops.Vectors
-            .ivfAssignWithVecHier(yRows, cents, g, "vec_id", "cid",
-              "v", dims = 64)
-            .select(col("vec_id").as("y_id"), col("v").as("yv"),
-              col("cid").as("cell")))
-      }
-    x.join(y, Seq("cell"))
-      .withColumn("cos_micro",
-        round(Vectors.cosine(col("xv"), col("yv")) * lit(1000000.0))
-          .cast("long"))
-      .where(col("cos_micro") > 0) // negatives never mine as bitext
-      .select("x_id", "y_id", "cos_micro", "probe_rank")
-      .localCheckpoint(false)
-  }
-
-  /** The ratio-margin top-1 selection over a (x_id, y_id, cos_micro)
-    * candidate table (Artetxe & Schwenk 2019): margin = cos over the
-    * mean cosine of both sides' k-NN neighborhoods (computed over
-    * the SAME candidates), in pure integer arithmetic —
-    * margin_ppm = cos·2·kx·ky·10⁶ DIV (Σx·ky + Σy·kx) — and keep the
-    * best target per source above margin 1.0. Shared by t137 (bucket
-    * candidates) and t137b (exact probe candidates), so the miner
-    * and its recall harness cannot drift. */
-  private def bitextTop1(cand: DataFrame, k: Int): DataFrame = {
-    // Every window here is the GROUP-LIMITED shape — rank, then
-    // filter on the rank IMMEDIATELY, then aggregate — so Spark's
-    // WindowGroupLimit prunes each key to its top-k rows map-side
-    // BEFORE the exchange. The r15-r17 shape computed the
-    // neighborhood sums as unordered aggregate windows over the full
-    // partition (sum(when(rx <= k, cm)) OVER (PARTITION BY x_id)),
-    // which buffers the ENTIRE candidate table in the window sorts:
-    // measured at the organic 1000× point (2M vectors, 512M candidate
-    // rows, 8 GiB heap) that shape dies in SparkOutOfMemoryError
-    // while this one completes — the stats only ever need k rows per
-    // key, and group-limit keeps exactly those. Values are identical:
-    // the same (cos desc, id) rank order, the same integer sums; the
-    // margin join-back re-attaches the compact per-key stats
-    // (x-keyed and y-keyed, ~one row per corpus row) to the candidate
-    // table, and the final top-1-by-margin window is group-limited
-    // to 1 row per x.
-    val wxo = Window.partitionBy("x_id")
-      .orderBy(col("cos_micro").desc, col("y_id"))
-    val wyo = Window.partitionBy("y_id")
-      .orderBy(col("cos_micro").desc, col("x_id"))
-    val wtop = Window.partitionBy("x_id")
-      .orderBy(col("margin_ppm").desc, col("y_id"))
-    val xs = cand
-      .withColumn("__rx", row_number().over(wxo))
-      .where(col("__rx") <= k)
-      .groupBy(col("x_id"))
-      .agg(sum(col("cos_micro")).as("sx"), count(lit(1)).as("kx"))
-    val ys = cand
-      .withColumn("__ry", row_number().over(wyo))
-      .where(col("__ry") <= k)
-      .groupBy(col("y_id"))
-      .agg(sum(col("cos_micro")).as("sy"), count(lit(1)).as("ky"))
-    cand
-      .join(xs, Seq("x_id"))
-      .join(ys, Seq("y_id"))
-      .where(col("sx") * col("ky") + col("sy") * col("kx") > 0)
-      .withColumn("margin_ppm", expr(
-        "cos_micro * 2 * kx * ky * 1000000 DIV (sx * ky + sy * kx)"))
-      .withColumn("rk", row_number().over(wtop))
-      .where(col("rk") === 1 && col("margin_ppm") > 1000000L)
-      .select(col("x_id"), col("y_id"), col("cos_micro"),
-        col("margin_ppm"))
-  }
-
-  /** The 16 deterministic seed centroids shared by q36/q39/t69 (first
-    * 16 vectors as seeds; the SQL twins carry the same `vec_id < 16`
-    * literal — ONE Scala definition so the seeding scheme cannot
-    * desynchronize between its three consumers). */
-  private def seedCentroids(e: DataFrame): DataFrame =
-    e.where(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("embedding"))
-
-  /** (vec_id, cid, __dist) — each vector's IVF cell and its squared
-    * distance to the cell centroid, shared by t129 (pack order) and
-    * t130 (order-coherence audit): q36's broadcast-centroid map-side
-    * assignment plus one more bounded centroid join for the distance.
-    * Fold-order parity with the DuckDB list_sum twin (q36/t9
-    * precedent) keeps the (dist, vec_id) order cross-engine exact. */
-  private def packDistances(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "embeddings")
-    val cents = seedCentroids(e)
-    graft.ops.Vectors
-      .ivfAssignWithVec(e, cents, "vec_id", "cid", "embedding")
-      .join(broadcast(cents.select(col("cid"),
-        col("embedding").as("__cv"))), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        graft.ops.Vectors
-          .sqDistDeclarative(col("embedding"), col("__cv"))
-          .as("__dist"))
-  }
-
-  /** The IVF-assignment CTE block shared by the q36 and t69 oracles
-    * (`a` = per-vector nearest seed centroid, dist/cid tie-break
-    * matching `Vectors.ivfAssign`). */
-  private val ivfAssignSql: String =
-    """WITH e AS (
-         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-         FROM embeddings),
-       c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-       d AS (
-         SELECT vec_id, cid,
-           list_sum([(v[i]-cv[i])*(v[i]-cv[i])
-                     FOR i IN generate_series(1, 64)]) AS dist
-         FROM e, c),
-       a AS (
-         SELECT vec_id, cid FROM d
-         QUALIFY row_number() OVER (PARTITION BY vec_id
-           ORDER BY dist, cid) = 1)"""
-
-  /** Morton bit-spread of a 16-bit value to the even bit positions —
-    * the classic fixed-shift mask cascade ((x|x<<8)&m, (x|x<<4)&m, …),
-    * emitted as a SQL string so the Spark query and the DuckDB twin
-    * compute the IDENTICAL integer expression (pure &/|/<< — both
-    * engines bit-exact on non-negative longs). Textual inlining
-    * duplicates the base subexpression; that is deliberate — the ops
-    * are integer-cheap and a single shared definition beats a
-    * hand-tuned but divergent pair. */
-  private def zSpread(c: String): String = {
-    val a = s"((($c) | (($c) << 8)) & 16711935)"
-    val b = s"(($a | ($a << 4)) & 252645135)"
-    val d = s"(($b | ($b << 2)) & 858993459)"
-    s"(($d | ($d << 1)) & 1431655765)"
-  }
-
-  /** Minhash/band CTE block — 3-token shingles, 8 hashes, 4 bands
-    * over `documents`: the SQL twin of the production LSH index
-    * surface (`Dedup.lshBandKeys` / `minhashSig`). ONE definition
-    * shared by every oracle that probes that surface (t2/t20/t31/
-    * t56/t57/t58/t76/d5 and the cluster-label block behind t12/t72)
-    * so a change to the index scheme cannot leave a stale twin
-    * behind. */
-  private val minhashBandsSql: String =
-    """t AS (
-         SELECT doc_id, string_split_regex(text, '\s+') AS toks
-         FROM documents),
-       sh AS (
-         SELECT doc_id,
-           [array_to_string(toks[i:i+2], ' ')
-            FOR i IN generate_series(1, len(toks)-2)] AS s
-         FROM t WHERE len(toks) >= 3),
-       mh AS (
-         SELECT doc_id,
-           [list_min([md5(k::VARCHAR || '|' || x) FOR x IN s])
-            FOR k IN generate_series(1, 8)] AS sig
-         FROM sh),
-       bands AS (
-         SELECT doc_id, b, md5(sig[2*b-1] || sig[2*b]) AS bh
-         FROM mh, unnest(generate_series(1, 4)) AS u(b))"""
-
-  /** Reference-bigram-LM scoring CTE block (`sc` = (doc_id, lang,
-    * lm_lp)) — the SQL twin of `TextOps.bigramLm` + `bigramLmScore`,
-    * shared by the t75 and t78 oracles so the scoring scheme cannot
-    * drift between the tercile split and the rank fusion. */
-  private val bigramScoreSql: String =
-    """t AS (
-         SELECT doc_id, lang, source,
-           string_split_regex(lower(text), '\s+') AS toks
-         FROM documents),
-       b AS (
-         SELECT doc_id, lang, source,
-           unnest([array_to_string(toks[i:i+1], ' ')
-                   FOR i IN generate_series(1, len(toks)-1)]) AS bg
-         FROM t WHERE len(toks) >= 2),
-       bg0 AS (
-         SELECT lang, bg, count(*) AS cb FROM b
-         WHERE source = 'src0' GROUP BY 1, 2),
-       ug0 AS (
-         SELECT lang, w, count(*) AS cu FROM (
-           SELECT lang, source, unnest(toks) AS w FROM t)
-         WHERE source = 'src0' GROUP BY 1, 2),
-       v AS (SELECT lang, count(*) AS v FROM ug0 GROUP BY 1),
-       sc AS (
-         SELECT doc_id, b.lang,
-           round(avg(ln((coalesce(cb, 0) + 1)::DOUBLE
-             / (coalesce(cu, 0) + v.v)::DOUBLE)), 6) + 0.0 AS lm_lp
-         FROM b
-         LEFT JOIN bg0 ON bg0.lang = b.lang AND bg0.bg = b.bg
-         LEFT JOIN ug0 ON ug0.lang = b.lang
-           AND ug0.w = split_part(b.bg, ' ', 1)
-         JOIN v ON v.lang = b.lang
-         GROUP BY 1, 2)"""
-
-  /** Planted-URL augmentation + domain extraction CTEs (`a`, `u` with
-    * column `domain`) — the SQL twin of `urlAugmented` +
-    * `TextOps.urlDomains`, shared by t19, t66 and the t74/t77 host
-    * graph so the planted-URL scheme cannot desynchronize between its
-    * SQL consumers (it is already a single definition on the Scala
-    * side). */
-  /** Binary-quantized ANN CTE chain (sign-bit signatures → Hamming
-    * top-20 → exact-cosine rerank top-5, ending in `approx`
-    * (qid, vec_id, hamming, c0, rn) and exposing `q`
-    * (qid, qv, qh1, qh2)) — shared by the t88 result twin and t92's
-    * recall measurement so the quantization scheme cannot drift
-    * between them. Sign bits pack by the same MSB-first two-half
-    * polynomial the Spark side uses. */
-  private val binaryAnnSql: String =
-    """e AS (
-         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-         FROM embeddings),
-       sig AS (
-         SELECT vec_id, v,
-           CAST(list_sum([CASE WHEN v[d] >= 0
-               THEN (1::BIGINT << (32 - d)) ELSE 0 END
-             FOR d IN generate_series(1, 32)]) AS BIGINT) AS h1,
-           CAST(list_sum([CASE WHEN v[d] >= 0
-               THEN (1::BIGINT << (64 - d)) ELSE 0 END
-             FOR d IN generate_series(33, 64)]) AS BIGINT) AS h2
-         FROM e),
-       q AS (SELECT vec_id AS qid, v AS qv, h1 AS qh1, h2 AS qh2
-             FROM sig WHERE vec_id < 10),
-       h AS (
-         SELECT qid, vec_id, qv, v,
-           CAST(bit_count(xor(h1, qh1)) + bit_count(xor(h2, qh2))
-             AS BIGINT) AS hamming
-         FROM sig, q WHERE vec_id <> qid),
-       c AS (
-         SELECT qid, vec_id, hamming, qv, v,
-           row_number() OVER (PARTITION BY qid
-             ORDER BY hamming, vec_id) AS hrn
-         FROM h QUALIFY hrn <= 20),
-       s AS (
-         SELECT qid, vec_id, hamming,
-           list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-           (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-            sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-           AS c0
-         FROM c),
-       approx AS (
-         SELECT qid, vec_id, hamming, c0,
-           row_number() OVER (PARTITION BY qid ORDER BY c0 DESC, vec_id)
-             AS rn
-         FROM s QUALIFY rn <= 5)"""
-
-  private val urlAugSql: String =
-    """a AS (
-         SELECT doc_id,
-           CASE WHEN doc_id % 5 = 0
-                THEN text || ' see https://site' || (doc_id % 7)
-                     || '.example.org/p' || doc_id
-                     || ' and http://host' || (doc_id % 3) || '.net/q'
-                ELSE text END AS aug
-         FROM documents),
-       u AS (
-         SELECT doc_id,
-           unnest(regexp_extract_all(aug,
-             '(?i)https?://([A-Za-z0-9.-]+)', 1)) AS domain
-         FROM a)"""
-
-  /** The near-dup cluster-label CTE block shared by the t12 and t72
-    * oracles (`lbl` = per-doc min-reachable-id component label via the
-    * recursive CTE — the SQL twin of `Dedup.clusterLabels`). ONE
-    * definition so the two oracles cannot drift. */
-  private val neardupLabelSql: String =
-    s"""WITH RECURSIVE $minhashBandsSql,
-       pairs AS (
-         SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         FROM bands a JOIN bands b
-           ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       sym AS (
-         SELECT id_a AS src, id_b AS dst FROM pairs
-         UNION SELECT id_b, id_a FROM pairs),
-       reach(id, r) AS (
-         SELECT src, dst FROM sym
-         UNION
-         SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-       lbl AS (
-         SELECT d.doc_id,
-           CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin THEN d.doc_id
-                ELSE m.rmin END AS cluster_id
-         FROM documents d
-         LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-           ON m.id = d.doc_id)"""
-
-  /** PageRank iteration CTEs for the t74 oracle — the SQL twin of
-    * `Graph.pageRankPpm`'s loop, unrolled (one c/d/r CTE triple per
-    * Jacobi round; DuckDB `//` ≡ Spark `div` on the all-positive
-    * operands here). Generated from one template so the three rounds
-    * cannot drift from each other; expects CTEs `en` (src, dst,
-    * p = ppb edge probability), `outw` (src), `nodes` (node),
-    * `nn` (n) and `r0` (node, r) to be in scope. */
-  private def pageRankIterSql(iters: Int): String =
-    (1 to iters).map { i =>
-      val prev = s"r${i - 1}"
-      s"""c$i AS (
-           SELECT en.dst AS node,
-             sum((85 * $prev.r * en.p) // 100000000000) AS c
-           FROM $prev JOIN en ON $prev.node = en.src GROUP BY 1),
-         d$i AS (
-           SELECT coalesce(sum(r), 0) AS d FROM $prev
-           WHERE node NOT IN (SELECT src FROM outw)),
-         r$i AS (
-           SELECT nodes.node,
-             (1000000 * 15) // (100 * nn.n)
-               + (85 * d$i.d) // (100 * nn.n)
-               + coalesce(c$i.c, 0) AS r
-           FROM nodes CROSS JOIN nn CROSS JOIN d$i
-           LEFT JOIN c$i ON c$i.node = nodes.node)"""
-    }.mkString(",\n         ")
-
-  /** Unrolled BPE-training iteration CTEs for the t73 oracle — the
-    * SQL twin of `TextOps.bpeTrainMerges`'s loop (pair counts →
-    * deterministic top-1 by (count desc, a, b) → merge fold), one
-    * sy/pc/best/st CTE quadruple per merge, generated from one
-    * template so the rounds cannot drift (the pageRankIterSql
-    * precedent). Each word's symbol list rides as a chr(30)-delimited
-    * string — SEP + join(syms, SEP·SEP) + SEP — where every symbol
-    * carries its OWN bracketing separators, so a single replace() of
-    * SEP·a·SEP·SEP·b·SEP with SEP·ab·SEP IS the leftmost-
-    * non-overlapping merge: consecutive same-pair merges cannot
-    * starve ("aaaa" → [aa, aa], exactly `TextOps.bpeMergeOnce`'s
-    * fold). chr(30) cannot collide with token bytes (tokens are
-    * whitespace-split text; the corpus carries no control chars).
-    * Expects CTE `st0` (w, cnt, s) in scope; leaves `st<iters>` and
-    * the per-round winners `best1..best<iters>` (a, b, c) — t71
-    * reads the winners, t73 reads the final state. */
-  private val bpeSep = "chr(30)"
-  private val bpeSepSep = s"($bpeSep || $bpeSep)"
-  private def bpeTrainIterSql(iters: Int): String =
-    (1 to iters).map { i =>
-      val prev = s"st${i - 1}"
-      s"""sy$i AS (
-           SELECT cnt, string_split(substr(s, 2, length(s) - 2),
-             $bpeSepSep) AS y
-           FROM $prev),
-         pc$i AS (
-           SELECT u.p.a AS a, u.p.b AS b, sum(cnt) AS c
-           FROM sy$i, unnest([{'a': y[j], 'b': y[j+1]}
-             FOR j IN generate_series(1, len(y) - 1)]) AS u(p)
-           GROUP BY 1, 2),
-         best$i AS (SELECT a, b, c FROM pc$i
-           ORDER BY c DESC, a, b LIMIT 1),
-         st$i AS (
-           SELECT w, cnt,
-             replace(s,
-               $bpeSep || best.a || $bpeSepSep || best.b || $bpeSep,
-               $bpeSep || best.a || best.b || $bpeSep) AS s
-           FROM $prev CROSS JOIN best$i best)"""
-    }.mkString(",\n         ")
-
-  /** Unigram-LM twins (t132/t133/t134): the hard-EM of
-    * `trainedUnigram` unrolled into sequential DuckDB CTEs. `uw` is
-    * the ≤16-char word-count table; the seed lands `ut0`/`um0`
-    * (piece table / piece→cost MAP); each round r appends a 16-step
-    * Viterbi DP (uv{r}_i: dp list grows one position per CTE), a
-    * 16-step backtrack (ub{r}_j: longest-k tie-break, the kernel's
-    * rule), the count/prune/re-cost tail (uc/usv/ut/um). Block 4 is
-    * the final ENCODE pass under um3 (a fresh E-step — the trained
-    * costs, not round 3's pre-prune path). */
-  private val unigramBaseSql: String =
-    raw"""uw AS (
-         SELECT w, CAST(count(*) AS BIGINT) AS cnt
-         FROM (SELECT unnest(string_split_regex(lower(text), '\s+'))
-                 AS w
-               FROM documents)
-         WHERE len(w) > 0 AND len(w) <= 16
-         GROUP BY w),
-       us0 AS (
-         SELECT p, CAST(sum(cnt) AS BIGINT) AS wgt
-         FROM (SELECT cnt,
-                 unnest(flatten([[substr(w, i, k)
-                   FOR k IN generate_series(1,
-                     least(6, len(w) - i + 1))]
-                   FOR i IN generate_series(1, len(w))])) AS p
-               FROM uw)
-         GROUP BY p),
-       us1 AS (
-         SELECT p, wgt FROM us0
-         QUALIFY row_number() OVER (ORDER BY wgt DESC, p) <= 512),
-       us AS (
-         SELECT p, wgt FROM us1
-         UNION
-         SELECT p, wgt FROM us0 WHERE len(p) = 1),
-       ut0 AS (
-         SELECT p,
-           CAST(round(ln((SELECT sum(wgt) FROM us)::DOUBLE / wgt)
-             * 1000000) AS BIGINT) AS cost
-         FROM us),
-       um0 AS (SELECT map(list(p ORDER BY p), list(cost ORDER BY p))
-                 AS m
-               FROM ut0)"""
-
-  private def unigramViterbiSql(r: Int): String = {
-    val dp = (1 to 16).map { i =>
-      s"""uv${r}_$i AS (
-           SELECT w, cnt, m, list_append(dp,
-             CASE WHEN len(w) >= $i THEN
-               list_min([dp[$i - k + 1]
-                   + m[substr(w, $i - k + 1, k)][1]
-                 FOR k IN generate_series(1, least(6, $i))])
-             ELSE NULL END) AS dp
-           FROM uv${r}_${i - 1})"""
-    }.mkString(",\n         ")
-    val bt = (1 to 16).map { j =>
-      s"""ub${r}_$j AS (
-           SELECT w, cnt, m, dp,
-             CASE WHEN b > 0 THEN b - kk ELSE b END AS b,
-             CASE WHEN b > 0
-               THEN list_prepend(substr(w, b - kk + 1, kk), ps)
-               ELSE ps END AS ps
-           FROM (SELECT *,
-               CASE WHEN b > 0 THEN
-                 list_max([k FOR k IN generate_series(1, least(6, b))
-                   IF dp[b - k + 1] IS NOT NULL
-                     AND m[substr(w, b - k + 1, k)][1] IS NOT NULL
-                     AND dp[b - k + 1]
-                       + m[substr(w, b - k + 1, k)][1] = dp[b + 1]])
-               ELSE NULL END AS kk
-             FROM ub${r}_${j - 1}) z)"""
-    }.mkString(",\n         ")
-    s"""uv${r}_0 AS (
-         SELECT uw.w, uw.cnt, um${r - 1}.m, [CAST(0 AS BIGINT)] AS dp
-         FROM uw CROSS JOIN um${r - 1}),
-       $dp,
-       ub${r}_0 AS (
-         SELECT w, cnt, m, dp, len(w) AS b,
-           CAST([] AS VARCHAR[]) AS ps
-         FROM uv${r}_16),
-       $bt"""
-  }
-
-  private def unigramRoundSql(r: Int): String =
-    s"""${unigramViterbiSql(r)},
-       uc$r AS (
-         SELECT piece, CAST(sum(cnt) AS BIGINT) AS c
-         FROM (SELECT cnt, unnest(ps) AS piece FROM ub${r}_16)
-         GROUP BY piece),
-       usv$r AS (
-         SELECT p, c FROM (
-           SELECT t.p AS p, coalesce(u.c, 0) AS c
-           FROM ut${r - 1} t LEFT JOIN uc$r u ON t.p = u.piece) z
-         QUALIFY row_number() OVER (ORDER BY c DESC, p)
-           <= (4 * count(*) OVER () + 4) // 5 OR len(p) = 1),
-       ut$r AS (
-         SELECT p, c,
-           CAST(round(ln((SELECT sum(c + 1) FROM usv$r)::DOUBLE
-             / (c + 1)) * 1000000) AS BIGINT) AS cost
-         FROM usv$r),
-       um$r AS (SELECT map(list(p ORDER BY p), list(cost ORDER BY p))
-                  AS m
-                FROM ut$r)"""
-
-  private lazy val unigramTrainSql: String =
-    s"""$unigramBaseSql,
-       ${(1 to 3).map(unigramRoundSql).mkString(",\n       ")}"""
-
-  /** The release-chain twin (S1–S5 through the shuffled `po` rows and
-    * the per-doc tokenizer sums) — shared VERBATIM by the t131 and
-    * t135 oracles so the export gate and the data card describe the
-    * same artifact by construction. Expects `unigramTrainSql` +
-    * `unigramViterbiSql(4)` CTEs in scope (vocab ids = sorted-piece
-    * rank over ut3, the Spark side's table order; UNK = vocab size
-    * for words past the 16-char trainer cap). Each composed stage
-    * reuses its verified twin verbatim, scope-isolated in a nested
-    * WITH so the snippets' CTE names (several define `t`/`f`/`h`)
-    * cannot collide. Stage landing names: gp (gate pass) → kb
-    * (keep-best) → red (redacted kept-token lists, non-eval docs) →
-    * keep (budget survivors) → po (t67 shuffle pos) → tsum (per-doc
-    * vocab-id sums). The JSONL ingest has no DuckDB half — its
-    * identity is t118's gate; here `documents` IS the ingested
-    * corpus. */
-  private lazy val releaseChainSql: String =
-    raw"""gp AS (
-         SELECT doc_id FROM (
-           WITH $gateFlagsSql,
-           mdn AS (SELECT median(score_ppm) AS med FROM gates)
-           SELECT doc_id FROM gates CROSS JOIN mdn
-           WHERE g AND r AND score_ppm > med) gg),
-       lab AS (
-         SELECT doc_id, cluster_id FROM (
-           WITH RECURSIVE $minhashBandsSql,
-           pairs AS (
-             SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a JOIN bands b
-               ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-           sym AS (
-             SELECT id_a AS src, id_b AS dst FROM pairs
-             UNION SELECT id_b, id_a FROM pairs),
-           reach(id, r) AS (
-             SELECT src, dst FROM sym
-             UNION
-             SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id)
-           SELECT d.doc_id,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id) ll),
-       qs AS (SELECT doc_id, $qScoreSql AS q FROM documents),
-       kb AS (
-         SELECT doc_id, q FROM (
-           SELECT l.doc_id, qs.q,
-             row_number() OVER (PARTITION BY l.cluster_id
-               ORDER BY qs.q DESC, l.doc_id) AS rk
-           FROM lab l JOIN gp USING (doc_id) JOIN qs USING (doc_id)) x
-         WHERE rk = 1),
-       red AS (
-         SELECT doc_id, kept FROM (
-           WITH t AS (
-             SELECT doc_id, string_split_regex(text, '\s+') AS toks
-             FROM documents),
-           f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-           g AS (
-             SELECT doc_id,
-               unnest([{'p': i,
-                        'g': substr(md5(array_to_string(toks[i:i+7],
-                                    ' ')), 1, 16)}
-                       FOR i IN generate_series(1, len(toks)-7)],
-                      recursive := true)
-             FROM f),
-           d AS (SELECT DISTINCT g FROM g WHERE doc_id % 7 = 0),
-           h AS (SELECT doc_id, p AS pos, p + 7 AS e
-                 FROM g JOIN d USING (g) WHERE doc_id % 7 <> 0),
-           i AS (SELECT doc_id, pos, e,
-                   CASE WHEN pos > coalesce(max(e) OVER (
-                          PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING),
-                        -1) + 1
-                        THEN 1 ELSE 0 END AS nw
-                 FROM h),
-           j AS (SELECT doc_id, pos, e,
-                   sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                     ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS isl
-                 FROM i),
-           sp AS (SELECT doc_id, min(pos) AS s, max(e) AS e
-                  FROM j GROUP BY doc_id, isl),
-           r AS (SELECT doc_id, list({'s': s, 'e': e}) AS spans
-                 FROM sp GROUP BY doc_id),
-           base AS (SELECT t.doc_id, t.toks,
-                      coalesce(r.spans, []) AS spans
-                    FROM t LEFT JOIN r USING (doc_id)
-                    WHERE t.doc_id % 7 <> 0)
-           SELECT doc_id,
-             list_filter(toks, (x, ix) ->
-               len(list_filter(spans,
-                 s -> ix >= s.s AND ix <= s.e)) = 0) AS kept
-           FROM base) rr),
-       surv AS (
-         SELECT kb.doc_id, red.kept,
-           CAST(len(red.kept) AS BIGINT) AS tok, kb.q
-         FROM kb JOIN red USING (doc_id)),
-       tot AS (SELECT sum(tok) AS total FROM surv),
-       st AS (
-         SELECT *, coalesce(sum(tok) OVER (ORDER BY q DESC, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS start
-         FROM surv),
-       keep AS (
-         SELECT doc_id, kept, tok FROM st CROSS JOIN tot
-         WHERE start * 4 < total),
-       sh AS (
-         SELECT doc_id, kept, tok,
-           md5('shuf42:' || doc_id) AS key,
-           substr(md5('shuf42:' || doc_id), 1, 1) AS shard
-         FROM keep),
-       po AS (
-         SELECT *, row_number() OVER (PARTITION BY shard
-           ORDER BY key, doc_id) AS pos
-         FROM sh),
-       uid AS (
-         SELECT p, CAST(row_number() OVER (ORDER BY p) - 1 AS BIGINT)
-           AS pid
-         FROM ut3),
-       uvn AS (SELECT CAST(count(*) AS BIGINT) AS unk FROM ut3),
-       uidm AS (SELECT map(list(p ORDER BY p), list(pid ORDER BY p))
-                  AS im
-                FROM uid),
-       wiv AS (
-         SELECT w, CAST(len(ps) AS BIGINT) AS np,
-           CAST(coalesce(list_sum(list_transform(ps,
-             pp -> im[pp][1])), 0) AS BIGINT) AS psum
-         FROM ub4_16 CROSS JOIN uidm),
-       tokx AS (
-         SELECT doc_id, lower(u.tk) AS w
-         FROM po, unnest(list_filter(kept, x -> len(x) > 0)) AS u(tk)),
-       tsum AS (
-         SELECT t.doc_id,
-           CAST(sum(CASE WHEN len(t.w) <= 16 THEN v.psum
-                    ELSE uvn.unk END) AS BIGINT) AS id_sum_doc,
-           CAST(sum(CASE WHEN len(t.w) <= 16 THEN v.np
-                    ELSE 1 END) AS BIGINT) AS np_doc
-         FROM tokx t LEFT JOIN wiv v ON t.w = v.w CROSS JOIN uvn
-         GROUP BY 1)"""
-
-  // ---- IVF assignment twin blocks with the hierarchical-floor
-  // dispatch (r16 advice #1). The Spark side routes every
-  // corpus-scaled assignment through Vectors.ivfAssignWithVecScaled:
-  // flat argmin below HierarchicalFloor, the two-level super/child
-  // quantizer at/above it. The twins previously replayed the flat
-  // argmin unconditionally — oracle-valid at gate SFs (k stays below
-  // the floor) but silently divergent at exactly the 100× scale the
-  // hierarchy exists for. Every block below now computes BOTH
-  // branches and a `k < floor` predicate picks one, so a floored
-  // validation run (SPARK_GRAFT_HIER_FLOOR, read by both engines)
-  // hash-gates the above-floor branch at gate scale.
-
-  /** The dispatch predicates over the SQL scalar `$kExpr`. */
-  private def flatPred(kExpr: String): String =
-    s"($kExpr) < ${graft.ops.Vectors.HierarchicalFloor}"
-  private def hierPredSql(kExpr: String): String =
-    s"($kExpr) >= ${graft.ops.Vectors.HierarchicalFloor}"
-
-  /** Two-level index over centroid CTE `$c` (cid, cv): `${p}hs` =
-    * the g = ⌈√k⌉ smallest-cid centroids as supers (scid, sv),
-    * `${p}hcs` = every centroid routed to its nearest super by
-    * (dist, scid) — `Vectors.hierIndex`'s twin. */
-  private def hierIndexSql(p: String, c: String, kExpr: String,
-                           pred: String = "TRUE"): String =
-    s"""${p}hs AS MATERIALIZED (
-         SELECT cid AS scid, cv AS sv FROM $c
-         WHERE $pred
-         QUALIFY row_number() OVER (ORDER BY cid) <=
-           CAST(ceil(sqrt(CAST(($kExpr) AS DOUBLE))) AS BIGINT)),
-       ${p}hcs AS MATERIALIZED (
-         SELECT cid, cv, scid FROM (
-           SELECT cc.cid, cc.cv, s.scid,
-             list_sum([(cc.cv[i]-s.sv[i])*(cc.cv[i]-s.sv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM (SELECT * FROM $c WHERE $pred) cc, ${p}hs s)
-         QUALIFY row_number() OVER (PARTITION BY cid
-           ORDER BY dist, scid) = 1)"""
-
-  /** Flat argmin of rows CTE `$rows` (vec_id, v) against `$c`
-    * (cid, cv) → `${p}fasg` (vec_id, v, cid). */
-  private def flatAssignSql(p: String, rows: String, c: String,
-                            pred: String = "TRUE"): String =
-    s"""${p}fasg AS (
-         -- NOTE: single-referenced; the union below is MATERIALIZED.
-         -- The dispatch predicate is pushed into the row scan so the
-         -- dead branch's cross join sees zero rows instead of being
-         -- computed and discarded (a scalar subquery the optimizer
-         -- cannot statically prune cost the r16 twin a disk spill).
-         SELECT vec_id, v, cid FROM (
-           SELECT r.vec_id, r.v, cc.cid,
-             list_sum([(r.v[i]-cc.cv[i])*(r.v[i]-cc.cv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM (SELECT * FROM $rows WHERE $pred) r, $c cc)
-         QUALIFY row_number() OVER (PARTITION BY vec_id
-           ORDER BY dist, cid) = 1)"""
-
-  /** Two-level argmin of `$rows` via the `${hx}hs`/`${hx}hcs` index
-    * → `${p}hasg` (vec_id, v, cid): nearest super by (dist, scid),
-    * then nearest of that super's children by (dist, cid) —
-    * `Vectors.ivfAssignWithVecHier`'s twin. */
-  private def hierAssignSql(p: String, rows: String,
-                            hx: String,
-                            pred: String = "TRUE"): String =
-    s"""${p}ha1 AS (
-         SELECT vec_id, v, scid FROM (
-           SELECT r.vec_id, r.v, s.scid,
-             list_sum([(r.v[i]-s.sv[i])*(r.v[i]-s.sv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM (SELECT * FROM $rows WHERE $pred) r, ${hx}hs s)
-         QUALIFY row_number() OVER (PARTITION BY vec_id
-           ORDER BY dist, scid) = 1),
-       ${p}hasg AS (
-         SELECT vec_id, v, cid FROM (
-           SELECT a.vec_id, a.v, cs.cid,
-             list_sum([(a.v[i]-cs.cv[i])*(a.v[i]-cs.cv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM ${p}ha1 a JOIN ${hx}hcs cs ON a.scid = cs.scid)
-         QUALIFY row_number() OVER (PARTITION BY vec_id
-           ORDER BY dist, cid) = 1)"""
-
-  /** Floor-dispatched assignment → `${p}asg` (vec_id, v, cid):
-    * `Vectors.ivfAssignWithVecScaled`'s twin (builds its own index
-    * on `$c`). Both branches are written and the k predicate picks
-    * one — at gate SFs both are tiny. */
-  private def scaledAssignSql(p: String, rows: String, c: String,
-                              kExpr: String): String =
-    s"""${hierIndexSql(p, c, kExpr, hierPredSql(kExpr))},
-       ${flatAssignSql(p, rows, c, flatPred(kExpr))},
-       ${hierAssignSql(p, rows, p, hierPredSql(kExpr))},
-       ${p}asg AS MATERIALIZED (
-         SELECT vec_id, v, cid FROM ${p}fasg
-         WHERE ${flatPred(kExpr)}
-         UNION ALL
-         SELECT vec_id, v, cid FROM ${p}hasg
-         WHERE ${hierPredSql(kExpr)})"""
-
-  /** Flat multi-probe: each row's `$n` nearest cells by (dist, cid)
-    * → `${p}fp` (vec_id, cell, probe_rank). */
-  private def flatProbeSql(p: String, rows: String, c: String,
-                           nExpr: String,
-                           pred: String = "TRUE"): String =
-    s"""${p}fp AS MATERIALIZED (
-         SELECT vec_id, cell, rk AS probe_rank FROM (
-           SELECT r.vec_id, cc.cid AS cell,
-             row_number() OVER (PARTITION BY r.vec_id ORDER BY
-               list_sum([(r.v[i]-cc.cv[i])*(r.v[i]-cc.cv[i])
-                         FOR i IN generate_series(1, 64)]), cc.cid)
-               AS rk
-           FROM (SELECT * FROM $rows WHERE $pred) r, $c cc)
-         WHERE rk <= ($nExpr))"""
-
-  /** Two-level multi-probe → `${p}ph` (vec_id, cell, probe_rank):
-    * the `$n` nearest supers, each super's top-`$n` children by
-    * (dist, cid), re-ranked globally by (dist, cell) —
-    * `Vectors.hierProbeCells`' twin. */
-  private def hierProbeSql(p: String, rows: String, hx: String,
-                           nExpr: String,
-                           pred: String = "TRUE"): String =
-    s"""${p}ps AS (
-         SELECT vec_id, v, scid FROM (
-           SELECT r.vec_id, r.v, s.scid,
-             row_number() OVER (PARTITION BY r.vec_id ORDER BY
-               list_sum([(r.v[i]-s.sv[i])*(r.v[i]-s.sv[i])
-                         FOR i IN generate_series(1, 64)]), s.scid)
-               AS rk
-           FROM (SELECT * FROM $rows WHERE $pred) r, ${hx}hs s)
-         WHERE rk <= ($nExpr)),
-       ${p}pc AS (
-         SELECT vec_id, cid, dist FROM (
-           SELECT ps.vec_id, ps.scid, cs.cid,
-             list_sum([(ps.v[i]-cs.cv[i])*(ps.v[i]-cs.cv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM ${p}ps ps JOIN ${hx}hcs cs ON ps.scid = cs.scid)
-         QUALIFY row_number() OVER (PARTITION BY vec_id, scid
-           ORDER BY dist, cid) <= ($nExpr)),
-       ${p}ph AS MATERIALIZED (
-         SELECT vec_id, cid AS cell, pr AS probe_rank FROM (
-           SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id
-               ORDER BY dist, cid) AS pr
-           FROM ${p}pc)
-         WHERE pr <= ($nExpr))"""
-
-  /** t137's IVF base CTEs (e / kk / cent / ya) — vectors, the
-    * corpus-scaled cell count (k = max(16, n/256), t62's formula),
-    * the deterministic seed centroids (vec_id < k), and the y side's
-    * floor-dispatched top-1 cell assignment. */
-  /** One quantized-Lloyd re-centering round: from corpus CTE `$e`
-    * (vec_id, v) and seed CTE `$c0` (cid, cv), lands trained cells as
-    * `$out` (cid, cv) — `lloydCentroids`' exact twin, including the
-    * floor dispatch of its assignment (the retrain itself routes
-    * two-level above the floor). Coordinates are quantized to
-    * integer micros BEFORE summation and the mean is
-    * floor(sum/count)/1e6, so the trained centroids are bit-identical
-    * doubles on both engines (a raw avg would differ in the LSB by
-    * summation order). Empty cells keep their seed. */
-  private def lloydCentSql(p: String, e: String, c0: String,
-                           out: String, kExpr: String): String =
-    s"""${scaledAssignSql(s"${p}l", e, c0, kExpr)},
-       ${p}la AS MATERIALIZED (SELECT vec_id, cid FROM ${p}lasg),
-       ${p}lm AS (
-         SELECT cid, d,
-           floor(CAST(sum(CAST(round(v[d] * 1000000) AS BIGINT))
-                 AS DOUBLE) / count(*)) / 1000000.0 AS c
-         FROM ${p}la JOIN $e USING (vec_id),
-           unnest(generate_series(1, 64)) AS u(d)
-         GROUP BY 1, 2),
-       $out AS MATERIALIZED (
-         SELECT $c0.cid, coalesce(t.cv, $c0.cv) AS cv
-         FROM $c0 LEFT JOIN (
-           SELECT cid, list(c ORDER BY d) AS cv
-           FROM ${p}lm GROUP BY cid) t USING (cid))"""
-
-  /** The shared tail of both bitext bases (organic and planted): the
-    * trained cells, their two-level index, the side CTEs, and the
-    * floor-dispatched y-side top-1 assignment. Expects `e` and `kk`
-    * already defined. */
-  private lazy val bitextIndexSql: String = {
-    val k = "(SELECT k FROM kk)"
-    s"""c0 AS MATERIALIZED (
-         SELECT vec_id AS cid, v AS cv FROM e, kk
-         WHERE vec_id < kk.k),
-       ${lloydCentSql("bx", "e", "c0", "cent", k)},
-       ${hierIndexSql("b", "cent", k, hierPredSql(k))},
-       ex AS MATERIALIZED (
-         SELECT vec_id, v FROM e WHERE vec_id % 2 = 0),
-       ey AS MATERIALIZED (
-         SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
-       ${flatAssignSql("y", "ey", "cent", flatPred(k))},
-       ${hierAssignSql("y", "ey", "b", hierPredSql(k))},
-       ya AS MATERIALIZED (
-         SELECT vec_id AS y_id, cid AS cell FROM yfasg
-         WHERE ${flatPred(k)}
-         UNION ALL
-         SELECT vec_id AS y_id, cid AS cell FROM yhasg
-         WHERE ${hierPredSql(k)})"""
-  }
-
-  private lazy val bitextBaseSql: String =
-    s"""e AS MATERIALIZED (
-         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-         FROM embeddings),
-       kk AS MATERIALIZED (
-         SELECT greatest(16, count(*) // 256) AS k FROM e),
-       $bitextIndexSql"""
-
-  /** Cell-candidate block at `nProbe` probed cells on the x side —
-    * lands `${p}cp` (x_id, y_id, cm); the exact twin of
-    * `bitextIvfCandidates`, prefix-parameterized so t137b sweeps
-    * nProbe values in one statement (one block per nProbe — which is
-    * exactly what the Spark side does above the floor too, where
-    * probe ranks don't nest). The x probe dispatches on the floor
-    * like every assignment. LATE materialization (r16):
-    * the assignment windows and the pair join flow only ids/cells,
-    * and the cosine joins the (small) corpus back per side — carrying
-    * the 64-double vectors through the 10×-scale candidate pipeline
-    * OOM'd DuckDB where ints stream fine. Same values. */
-  private def bitextCandSql(p: String, nProbe: Int,
-                            src: String = "ex"): String =
-    s"""${flatProbeSql(s"${p}x", src, "cent", nProbe.toString,
-           flatPred("(SELECT k FROM kk)"))},
-       ${hierProbeSql(s"${p}x", src, "b", nProbe.toString,
-           hierPredSql("(SELECT k FROM kk)"))},
-       ${p}xa AS MATERIALIZED (
-         SELECT vec_id AS x_id, cell FROM ${p}xfp
-         WHERE ${flatPred("(SELECT k FROM kk)")}
-         UNION ALL
-         SELECT vec_id AS x_id, cell FROM ${p}xph
-         WHERE ${hierPredSql("(SELECT k FROM kk)")}),
-       ${p}cand AS (
-         SELECT DISTINCT a.x_id, y.y_id,
-           CAST(round(
-             list_sum([ex.v[i]*ey.v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([ex.v[i]*ex.v[i]
-                             FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([ey.v[i]*ey.v[i]
-                             FOR i IN generate_series(1,64)])))
-             * 1000000) AS BIGINT) AS cm
-         FROM ${p}xa a JOIN ya y USING (cell)
-           JOIN e ex ON ex.vec_id = a.x_id
-           JOIN e ey ON ey.vec_id = y.y_id),
-       ${p}cp AS MATERIALIZED (
-         SELECT * FROM ${p}cand WHERE cm > 0)"""
-
-  /** The ratio-margin top-1 block over candidate CTE `base`
-    * (x_id, y_id, cm) — lands `<p>t1`; `bitextTop1`'s exact twin,
-    * prefix-parameterized so t137b can run it on two candidate
-    * universes in one statement. */
-  private def bitextTop1Sql(p: String, base: String): String =
-    s"""${p}nx AS (
-         SELECT x_id, CAST(sum(cm) AS BIGINT) AS sx,
-           CAST(count(*) AS BIGINT) AS kx
-         FROM (SELECT *, row_number() OVER (PARTITION BY x_id
-                 ORDER BY cm DESC, y_id) AS rk FROM $base) z
-         WHERE rk <= 4 GROUP BY 1),
-       ${p}ny AS (
-         SELECT y_id, CAST(sum(cm) AS BIGINT) AS sy,
-           CAST(count(*) AS BIGINT) AS ky
-         FROM (SELECT *, row_number() OVER (PARTITION BY y_id
-                 ORDER BY cm DESC, x_id) AS rk FROM $base) z
-         WHERE rk <= 4 GROUP BY 1),
-       ${p}mg AS (
-         SELECT c.x_id, c.y_id, c.cm,
-           CAST(c.cm * 2 * kx * ky * 1000000
-             // (sx * ky + sy * kx) AS BIGINT) AS margin_ppm
-         FROM $base c JOIN ${p}nx USING (x_id) JOIN ${p}ny USING (y_id)
-         WHERE sx * ky + sy * kx > 0),
-       ${p}t1 AS (
-         SELECT x_id, y_id, cm, margin_ppm FROM (
-           SELECT *, row_number() OVER (PARTITION BY x_id
-             ORDER BY margin_ppm DESC, y_id) AS rk FROM ${p}mg) t
-         WHERE rk = 1 AND margin_ppm > 1000000)"""
-
-  /** t7's quality-score formula as a DuckDB expression over `text` —
-    * one definition shared by the t7 twin and every oracle that
-    * orders by quality (t95), so the consumers cannot drift from the
-    * artifact. Plain (non-interpolated) literal: the regex
-    * backslashes must reach DuckDB verbatim. */
-  private val qScoreSql: String =
-    """round(
-           least(CAST(len(string_split_regex(text,'\s+')) AS DOUBLE)/100.0,
-                 1.0) * 0.4
-           + CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-             / greatest(CAST(len(text) AS DOUBLE), 1.0) * 0.3
-           + CAST(len(list_filter(string_split_regex(lower(text),'\s+'),
-               x -> list_contains(
-                 ['the','and','of','to','in','is','that','it'], x)))
-               AS DOUBLE)
-             / greatest(CAST(len(string_split_regex(text,'\s+')) AS DOUBLE),
-                        1.0) * 0.2
-           + least((CAST(len(text) AS DOUBLE)
-                    - len(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                   / greatest(CAST(len(text) AS DOUBLE), 1.0) * 10.0, 1.0)
-             * 0.1, 6)"""
-
-  /** d6's BPE-ish token count as a DuckDB expression over `text` —
-    * the shared tokens-per-document yardstick (d6, t90, t95 budget). */
-  private val bpeCountSql: String =
-    """len(regexp_extract_all(text,
-           '''(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s'']+'))"""
-
-  /** The classifier family's per-doc bucket-count table
-    * (doc_id, source, b, __c): unigram + 2-shingle features into 256
-    * md5-prefix buckets — ONE definition for the whole family (t81/
-    * t107 scoring, t115/t116 distillation) so the bucketing scheme
-    * cannot desynchronize between consumers; the SQL twin is
-    * hashClfSql's t/f/h block. Since r20 the counts come from the
-    * one-pass `featureBucketCounts` kernel instead of exploding every
-    * feature occurrence into a row and hash-aggregating the 2M-row
-    * stream (guide §4; kernel ≡ explode path pinned in
-    * SketchExprSpec). posexplode_OUTER of the 256-long histogram +
-    * the c>0 filter keeps only occupied buckets — outer, because an
-    * inner generate lets InferFiltersFromGenerate push a
-    * `size(kernel(…)) > 0 AND isnotnull(kernel(…))` filter below the
-    * projection, RE-EVALUATING the md5 kernel once more per scan
-    * (measured in the r20 plans: 2 evals/scan; the outer form has 1 —
-    * the only extra outer rows are null-__h docs, which `__c > 0`
-    * drops exactly as the inner generate did); b = "%02x" of the
-    * bucket index ≡ substring(md5(f), 1, 2). The groupBy below is
-    * value-wise an identity (one row per (doc, b) already) but
-    * re-establishes the exchange every consumer (Bayes model,
-    * t115/t116's ppm features) re-enters through — the AQE-reuse
-    * contract the old shape had. */
-  private def docBucketCounts(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        graft.functions.SketchExpressions
-          .featureBucketCounts(TextOps.tokensLower(col("text")))
-          .as("__h"))
-      .select(col("doc_id"), col("source"),
-        posexplode_outer(col("__h")).as(Seq("__pos", "__c")))
-      .where(col("__c") > 0)
-      .select(col("doc_id"), col("source"),
-        format_string("%02x", col("__pos")).as("b"), col("__c"))
-      .groupBy("doc_id", "source", "b")
-      .agg(sum(col("__c")).as("__c"))
-
-  /** t81's hashed-feature classifier scores, per doc WITH the source
-    * column (t81 drops it; t107's calibration audit bins on it) — one
-    * definition so the audit scores exactly the classifier it audits.
-    * Laplace-smoothed positive rate per bucket in integer ppm, per-doc
-    * mean over a broadcast of the 256-row model. */
-  /** The trained 256-bucket model as ONE broadcastable row
-    * (warr[i] = w_ppm of bucket i): the Bayes aggregation over
-    * docBucketCounts (unchanged arithmetic), pivoted into an array
-    * indexed by bucket position. Buckets no document occupies get 0 —
-    * score-neutral, since every doc's histogram is 0 there. */
-  private def classifierModelArr(s: SparkSession, dir: String): DataFrame =
-    docBucketCounts(s, dir).groupBy("b")
-      .agg(sum(when(col("source").isin("src0", "src1"), col("__c"))
-        .otherwise(0L)).as("cpos"),
-        sum(col("__c")).as("ctot"))
-      .select(conv(col("b"), 16, 10).cast("int").as("__pos"),
-        expr("(1000000 * (cpos + 1)) div (ctot + 2)").as("w_ppm"))
-      .agg(map_from_entries(
-        collect_list(struct(col("__pos"), col("w_ppm")))).as("__m"))
-      .select(transform(sequence(lit(0), lit(255)),
-        i => coalesce(element_at(col("__m"), i), lit(0L))).as("warr"))
-
-  private def hashClassifierScores(s: SparkSession,
-                                   dir: String): DataFrame = {
-    // Scoring is a MAP-SIDE dot product against the broadcast 256-long
-    // weight array (r20, guide §2.3/§2.4): with the histogram kernel
-    // in place, sw = Σ_b hist[b]·warr[b] and n_feats = Σ_b hist[b] —
-    // exact long sums of the same terms the old posexplode → groupBy →
-    // broadcast-join → re-agg pipeline produced (order-free integer
-    // addition; corpus-unoccupied buckets contribute hist[b]·0 = 0,
-    // matching their absence from the old inner join). That drops the
-    // per-doc exchange and join from every scoring consumer; only the
-    // model pass still aggregates the occupied-bucket rows. The
-    // text-IS-NOT-NULL filter reproduces the old membership (null
-    // text → null histogram → no exploded rows → absent from scores)
-    // with a scan-pushable predicate instead of a filter on the kernel
-    // output, which pushdown would duplicate.
-    T(s, dir, "documents")
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        graft.functions.SketchExpressions
-          .featureBucketCounts(TextOps.tokensLower(col("text")))
-          .as("__h"))
-      .crossJoin(broadcast(classifierModelArr(s, dir)))
-      .select(col("doc_id"), col("source"),
-        aggregate(col("__h"), lit(0L), (a, c) => a + c).as("n_feats"),
-        aggregate(zip_with(col("__h"), col("warr"), (c, w) => c * w),
-          lit(0L), (a, x) => a + x).as("sw"))
-      .select(col("doc_id"), col("source"), col("n_feats"),
-        expr("sw div n_feats").as("score_ppm"))
-  }
-
-  /** Per-doc quality-gate flags shared by t127 (agreement matrix) and
-    * t128 (contingency cube): ONE corpus pass computes all three
-    * gates — Gopher rules (t46's predicate), the hashed Bayes
-    * classifier (t81's score > 0.5), and the integer 3-gram
-    * repetition gate (t16's metric, dup fraction ≤ 20% in ppm) —
-    * plus the doc's token count. One definition so the two reports
-    * can never disagree about what a gate means. */
-  private def gateFlags(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextOps.tokensLower(col("text"))
-    val grams3 = expr("""CASE WHEN size(__toks) >= 3 THEN
-        transform(sequence(0, size(__toks) - 3),
-          i -> concat_ws(' ', slice(__toks, i + 1, 3)))
-        ELSE CAST(array() AS array<string>) END""")
-    // Gopher/repetition gates and the classifier score stay TWO scans
-    // joined on doc_id — a single fused projection carrying the gopher
-    // composite + the 3-gram CASE + the 256-bucket kernel + the dot
-    // was MEASURED SLOWER (r20: t127 1.78 → 2.19 s isolated; the
-    // marginal cost of the gopher expressions more than doubles inside
-    // the giant projection — generated-code/JIT degradation), while
-    // the join's score side is now the cheap map-side-dot scorer (one
-    // kernel scan, no per-doc aggregate exchange).
-    T(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        size(split(col("text"), "\\s+")).cast("long").as("n_tok"),
-        TextOps.gopherPass(toks).as("g"), toks.as("__toks"))
-      .withColumn("__g3", grams3)
-      .withColumn("r",
-        expr("""size(__g3) = 0 OR
-          1000000 - CAST(size(array_distinct(__g3)) AS BIGINT)
-            * 1000000 DIV size(__g3) <= 200000"""))
-      .join(hashClassifierScores(s, dir)
-        .select(col("doc_id"), col("score_ppm"),
-          (col("score_ppm") > 500000).as("c")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("source"), col("n_tok"),
-        col("g"), col("c"), col("r"), col("score_ppm"))
-  }
-
-  /** t115/t116's shared per-doc feature table (doc_id, b, x):
-    * t81's hashed unigram+bigram buckets normalized to ppm of the
-    * doc's feature total, PLUS two capped structural scalars under
-    * reserved bucket names (`_nw` word count ×2000, `_ns` stopword
-    * hits ×50000 — the t46 metric expressions, so the student's
-    * feature space can actually express the teacher's binding
-    * rules; ppm-normalized bag-of-buckets alone is length-blind and
-    * the best linear student collapses to majority voting, which
-    * the t116 audit showed). All integers ≤10⁶. The doc-partitioned
-    * window is hash-partitioned on the high-cardinality doc key
-    * (t44's precedent), never a global sort. */
-  private def hashedFeaturePpm(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "documents")
-      .select(col("doc_id"), TextOps.tokensLower(col("text")).as("toks"))
-    // docBucketCounts rows are already unique per (doc_id, b) —
-    // source is functionally determined by doc_id — so dropping the
-    // source column IS the old groupBy(doc_id, b).count()
-    val hashed = docBucketCounts(s, dir)
-      .select(col("doc_id"), col("b"), col("__c").as("c"))
-      .withColumn("n",
-        sum(col("c")).over(Window.partitionBy("doc_id")))
-      .select(col("doc_id"), col("b"), expr("c * 1000000 DIV n").as("x"))
-    val structural = base.where(col("toks").isNotNull)
-      .select(col("doc_id"), lit("_nw").as("b"),
-        (least(TextOps.gopherNWords(col("toks")), lit(500))
-          * 2000L).cast("long").as("x"))
-      .union(base.where(col("toks").isNotNull)
-        .select(col("doc_id"), lit("_ns").as("b"),
-          (least(TextOps.gopherNStop(col("toks")), lit(20))
-            * 50000L).cast("long").as("x")))
-    hashed.union(structural)
-  }
-
-  /** Teacher labels for the distillation pair t115/t116: the Gopher
-    * rule gate's verdict per doc (t46's pass flag). */
-  private def teacherLabels(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").select(col("doc_id"),
-      TextOps.gopherPass(TextOps.tokensLower(col("text")))
-        .cast("long").as("y"))
-
-  /** Memoized 8-step GD training per corpus snapshot (the
-    * trainedMerges argument: training is deterministic, so
-    * compute-once is an identity and t115 (ships the model) + t116
-    * (audits it) share one run). Returns (bucket → w_micro, bias_micro, the
-    * checkpointed feature table) — the features ride along so the
-    * audit's scoring pass reuses the materialization instead of
-    * re-tokenizing the corpus. All integer truncating division —
-    * see the t115 query comment for the cross-engine exactness
-    * contract. */
-  private val distillMemo = new Stage.Memo[(Map[String, Long], Long, DataFrame)]
-  private def distilledModel(
-      s: SparkSession, dir: String): (Map[String, Long], Long, DataFrame) =
-    distillMemo(s, dir) {
-      val x = hashedFeaturePpm(s, dir).localCheckpoint(false)
-      // The trained model is STAGED per corpus snapshot (r18 verdict
-      // #5 — the 8 GD steps are ~12 corpus-sized jobs, and they made
-      // the family's first pass 15× its second at sf0.1 and 95 s at
-      // 100×; training once per snapshot is the same contract as
-      // cluster labels and bitext centroids). Training is
-      // deterministic integer arithmetic, and parquet round-trips
-      // the 256 bucket weights + bias exactly, so staged == inline
-      // values. The feature table `x` still materializes per session
-      // — the scoring consumers read it either way.
-      val path = Stage.artifact(s, dir, "distill_model") { tmp =>
-        val lblm = teacherLabels(s, dir)
-          .join(x.select("doc_id").distinct(), Seq("doc_id"))
-          .localCheckpoint(false)
-        val nd = lblm.count()
-        var bias = 0L
-        var w: Map[String, Long] = Map.empty
-        // 8 full-batch steps with a 1/step-decayed rate (integer:
-        // lw = 1024 DIV step). The ×1024 base scale compensates each
-        // bucket seeing only a slice of the ppm feature mass (a raw
-        // average gradient moves the weight axis ~10³ too slowly and
-        // the student never leaves bias-only majority voting); the
-        // decay is what makes the full-batch iteration SETTLE — at a
-        // constant rate the bounded rational sigmoid keeps per-doc
-        // error near ±5·10⁵ and the trajectory oscillates between
-        // all-positive and all-negative instead of converging (probed
-        // on sf0.1: fixed lr lands at a knife-edge, decayed lr is
-        // stable from step 5 on). Both rates are exact integer
-        // divisions, so the unrolled twin reproduces every step.
-        for (it <- 1 to 8) {
-          val z =
-            if (w.isEmpty) // step 1: all-zero weights, z ≡ bias (= 0)
-              x.select(col("doc_id")).distinct()
-                .withColumn("z", lit(bias))
-            else x.join(
-              broadcast(s.createDataFrame(w.toSeq).toDF("b", "w")),
-              Seq("b"))
-              .groupBy("doc_id")
-              .agg((expr("sum(w * x) DIV 1000000") + lit(bias)).as("z"))
-          val e = z.join(lblm, Seq("doc_id"))
-            .select(col("doc_id"),
-              (lit(500000L) + expr("z * 500000 DIV (1000000 + abs(z))")
-                - col("y") * lit(1000000L)).as("e"))
-            .localCheckpoint(false)
-          val g = x.join(e, Seq("doc_id"))
-            .groupBy("b").agg(sum(expr("e * x DIV 1000000")).as("g"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val ge = e.agg(sum("e")).collect()(0).getLong(0)
-          val lw = 1024L / it
-          w = g.map { case (b, gb) =>
-            b -> (w.getOrElse(b, 0L) - (gb * lw) / nd) }
-          bias = bias - (ge / it) / nd
-        }
-        // bias rides as a sentinel row — one 257-row file, no sidecar
-        s.createDataFrame((w.toSeq :+ ("__bias" -> bias)))
-          .toDF("b", "w").coalesce(1).write.mode("overwrite")
-          .parquet(tmp)
-      }
-      val rows = s.read.parquet(path)
-        .collect().map(r => r.getString(0) -> r.getLong(1))
-      val bias = rows.collectFirst { case ("__bias", v) => v }.get
-      val w = rows.filterNot(_._1 == "__bias").toMap
-      (w, bias, x)
-    }
-
-  /** Per-doc student verdict (doc_id, z, sp, st) off the memoized
-    * model — the scoring kernel shared by t116 (confusion audit) and
-    * t117 (mix shift): ONE definition so the decision rule cannot
-    * drift between consumers. Weight broadcast → per-doc partial-
-    * agged margin → rational sigmoid → t81's keep convention. */
-  private def studentVerdicts(s: SparkSession, dir: String): DataFrame = {
-    val (w, bias, x) = distilledModel(s, dir)
-    x.join(broadcast(s.createDataFrame(w.toSeq).toDF("b", "w")),
-        Seq("b"))
-      .groupBy("doc_id")
-      .agg((expr("sum(w * x) DIV 1000000") + lit(bias)).as("z"))
-      .withColumn("sp",
-        lit(500000L) + expr("z * 500000 DIV (1000000 + abs(z))"))
-      .withColumn("st", (col("sp") > 500000L).cast("long"))
-  }
-
-  /** DuckDB CTE block for [[hashClassifierScores]] — ends in `sc`
-    * (doc_id, source, n_feats, score_ppm); shared by the t81 and
-    * t107 twins. Plain literal for the regex backslash. */
-  private val hashClfSql: String =
-    """t AS (
-           SELECT doc_id, source,
-             string_split_regex(lower(text), '\s+') AS toks
-           FROM documents),
-         f AS (
-           SELECT doc_id, source, unnest(toks) AS f FROM t
-           UNION ALL
-           SELECT doc_id, source,
-             unnest([array_to_string(toks[i:i+1], ' ')
-                     FOR i IN generate_series(1, len(toks)-1)]) AS f
-           FROM t WHERE len(toks) >= 2),
-         h AS (SELECT doc_id, source, substr(md5(f), 1, 2) AS b FROM f),
-         m AS (
-           SELECT b, CAST((1000000 *
-               (sum(CASE WHEN source IN ('src0', 'src1')
-                    THEN 1 ELSE 0 END) + 1))
-             // (count(*) + 2) AS BIGINT) AS w_ppm
-           FROM h GROUP BY b),
-         sc AS (
-           SELECT doc_id, source, count(*) AS n_feats,
-             CAST(sum(w_ppm) // count(*) AS BIGINT) AS score_ppm
-           FROM h JOIN m USING (b)
-           GROUP BY doc_id, source)"""
-
-  /** The gate-flags CTE chain shared by the t127/t128 twins: rides
-    * hashClfSql's t/h/m/sc and gopherMetricSql's gm, adds the g3/rep
-    * repetition gate and lands `gates(doc_id, source, n_tok, g, c,
-    * r)` — the SQL twin of the Scala `gateFlags`. Defined lazily at
-    * the use sites via string interpolation (hashClfSql/gopher vals
-    * are declared below). */
-  private lazy val gateFlagsSql: String =
-    raw"""$hashClfSql,
-         $gopherMetricSql,
-         g3 AS (
-           SELECT doc_id, CASE WHEN len(toks) >= 3
-             THEN [array_to_string(toks[i:i+2], ' ')
-                   FOR i IN generate_series(1, len(toks) - 2)]
-             ELSE [] END AS grams
-           FROM t),
-         rep AS (
-           SELECT doc_id,
-             (len(grams) = 0 OR 1000000
-               - CAST(len(list_distinct(grams)) AS BIGINT) * 1000000
-                 // len(grams) <= 200000) AS r
-           FROM g3),
-         nt AS (
-           SELECT doc_id, CAST(len(string_split_regex(text, '\s+'))
-             AS BIGINT) AS n_tok
-           FROM documents),
-         gates AS (
-           SELECT sc.doc_id, sc.source, nt.n_tok,
-             ($gopherPassSql) AS g,
-             sc.score_ppm > 500000 AS c, rep.r AS r, sc.score_ppm
-           FROM sc JOIN gm ON gm.doc_id = sc.doc_id
-             JOIN rep ON rep.doc_id = sc.doc_id
-             JOIN nt ON nt.doc_id = sc.doc_id)"""
-
-  /** Gopher metric CTE `gm` (doc_id, nw, ml, af, ns) over a `t`
-    * CTE's (doc_id, toks), plus the pass predicate over gm's
-    * columns — the SQL twins of TextOps.gopherNWords/MeanLen/
-    * AlphaFrac/NStop/gopherPass. ONE definition (the minhashBandsSql
-    * pattern) shared by the t46 twin and logregBaseSql so a
-    * threshold tweak cannot desynchronize the rule gate from the
-    * distillation teacher. */
-  private val gopherMetricSql: String =
-    """gm AS (SELECT doc_id,
-             len(toks) AS nw,
-             CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-               / len(toks) AS ml,
-             CAST(len(list_filter(toks,
-                 x -> regexp_matches(x, '[a-z]'))) AS DOUBLE)
-               / len(toks) AS af,
-             len(list_filter(toks, x -> x IN ('the','be','to','of',
-                 'and','that','have','with','it','in'))) AS ns
-           FROM t)"""
-  private val gopherPassSql: String =
-    """nw BETWEEN 50 AND 100000 AND ml BETWEEN 3 AND 10
-                  AND af >= 0.8 AND ns >= 2"""
-
-  /** Shared base CTEs for the t115/t116 twins (rides hashClfSql's
-    * t/h): teacher metrics + label, per-doc feature totals, the
-    * feature table x with the two structural rows, and the doc
-    * count. Plain \s regex literals reach DuckDB verbatim via raw
-    * interpolation at the use site. */
-  private val logregBaseSql: String =
-    s"""$gopherMetricSql,
-         lbl AS MATERIALIZED (SELECT doc_id,
-             CAST($gopherPassSql AS BIGINT) AS y
-           FROM gm),
-         ft AS (SELECT doc_id, b, CAST(count(*) AS BIGINT) AS c
-                FROM h GROUP BY 1, 2),
-         nf AS MATERIALIZED (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n
-                FROM ft GROUP BY 1),
-         x AS MATERIALIZED (SELECT doc_id, b, c * 1000000 // n AS x
-               FROM ft JOIN nf USING (doc_id)
-               UNION ALL
-               SELECT doc_id, '_nw' AS b,
-                 CAST(least(len(toks), 500) * 2000 AS BIGINT) AS x
-               FROM t WHERE toks IS NOT NULL
-               UNION ALL
-               SELECT doc_id, '_ns' AS b,
-                 CAST(least(len(list_filter(toks,
-                     tk -> tk IN ('the','be','to','of','and','that',
-                       'have','with','it','in'))), 20)
-                   * 50000 AS BIGINT) AS x
-               FROM t WHERE toks IS NOT NULL),
-         nd AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM nf)"""
-
-  /** The t115/t116 GD loop UNROLLED into per-step CTE rounds
-    * (bpeTrainIterSql's discipline): step k emits z$k (margins from
-    * the previous weights), e$k (error through the rational
-    * sigmoid), w$k and b$k (decayed update; the per-step rates
-    * 1024 DIV k and the bias divisor k are embedded as literals, so
-    * the twin replays the exact integer schedule the Scala loop
-    * runs). */
-  private def logregStepSql(steps: Int): String =
-    (1 to steps).map { k =>
-      val lw = 1024L / k
-      val z =
-        if (k == 1)
-          "z1 AS MATERIALIZED (SELECT doc_id, CAST(0 AS BIGINT) AS z FROM nf)"
-        else
-          s"""z$k AS MATERIALIZED (SELECT x.doc_id,
-                  (sum(w * x) // 1000000) + bias AS z
-                FROM x JOIN w${k - 1} USING (b), b${k - 1}
-                GROUP BY x.doc_id, bias)"""
-      val wPrev = if (k == 1) "0" else "w"
-      val wJoin = if (k == 1) "" else s" JOIN w${k - 1} USING (b)"
-      val wGrp = if (k == 1) "" else ", w"
-      val bPrev = if (k == 1) "0" else "bias"
-      val bFrom = if (k == 1) "" else s", b${k - 1}"
-      val bGrp = if (k == 1) "" else "bias, "
-      s"""$z,
-         e$k AS MATERIALIZED (SELECT z$k.doc_id,
-                  (500000 + (z * 500000 // (1000000 + abs(z))))
-                    - y * 1000000 AS e
-                FROM z$k JOIN lbl USING (doc_id)),
-         w$k AS MATERIALIZED (SELECT x.b,
-                  $wPrev - (($lw * sum(e * x // 1000000)) // nd) AS w
-                FROM x JOIN e$k USING (doc_id)$wJoin, nd
-                GROUP BY x.b$wGrp, nd),
-         b$k AS MATERIALIZED (SELECT $bPrev - ((sum(e) // $k) // nd) AS bias
-                FROM e$k$bFrom, nd GROUP BY ${bGrp}nd)"""
-    }.mkString(",\n         ")
-
-  /** Canonical-text md5 (t54's normalization) as a DuckDB expression
-    * over `text` — shared by the t98/t105 twins so the dedup key
-    * cannot drift from the t54 artifact. Plain literal: the regex
-    * backslash must reach DuckDB verbatim. */
-  private val canonHashSql: String =
-    """md5(trim(regexp_replace(lower(nfc_normalize(text)),
-               '\s+', ' ', 'g')))"""
-
-  /** Kneser–Ney trigram statistic tables (c3/k/ctx/mid/midk/midctx/
-    * uni/tot) as a DuckDB CTE block — ONE definition shared by the
-    * t97 model twin and the t104 held-out scorer twin so the scorer's
-    * statistics cannot drift from the model artifact. Kept as a plain
-    * (non-interpolated) literal so the regex backslash reaches DuckDB
-    * verbatim; `__WHERE__` is substituted with the training-split
-    * predicate ('' = whole corpus). */
-  private val knStatsSqlTemplate: String =
-    """t AS (SELECT string_split_regex(lower(text), '\s+')
-             AS toks FROM documents __WHERE__),
-         g AS (SELECT
-             unnest([array_to_string(toks[i:i+2], ' ')
-                     FOR i IN generate_series(1, len(toks)-2)]) AS tg
-           FROM t WHERE len(toks) >= 3),
-         c3 AS (SELECT tg, count(*) AS c3 FROM g GROUP BY tg),
-         k AS (SELECT tg, c3,
-             split_part(tg,' ',1) || ' ' || split_part(tg,' ',2)
-               AS ctx12,
-             split_part(tg,' ',2) || ' ' || split_part(tg,' ',3)
-               AS w23,
-             split_part(tg,' ',3) AS w3
-           FROM c3),
-         ctx AS (SELECT ctx12, sum(c3) AS c12, count(*) AS n1ctx
-           FROM k GROUP BY ctx12),
-         mid AS (SELECT w23, count(*) AS cc23 FROM k GROUP BY w23),
-         midk AS (SELECT w23, cc23,
-             split_part(w23,' ',1) AS w2,
-             split_part(w23,' ',2) AS w3u
-           FROM mid),
-         midctx AS (SELECT w2, sum(cc23) AS ccdot2, count(*) AS n2w2
-           FROM midk GROUP BY w2),
-         uni AS (SELECT w3u AS w3, count(*) AS n1w3
-           FROM midk GROUP BY w3u),
-         tot AS (SELECT CAST(count(*) AS DOUBLE) AS nbt FROM mid)"""
-
-  private def knStatsSql(where: String): String =
-    knStatsSqlTemplate.replace("__WHERE__", where)
-
-  /** Per-document trigram stream for the t104 scorer (doc_id kept,
-    * unlike the model side's type tables). Same __WHERE__ contract. */
-  private val knDocTrigramsSqlTemplate: String =
-    """tt AS (SELECT doc_id,
-             string_split_regex(lower(text), '\s+') AS toks
-           FROM documents __WHERE__),
-         gt AS (SELECT doc_id,
-             unnest([array_to_string(toks[i:i+2], ' ')
-                     FOR i IN generate_series(1, len(toks)-2)]) AS tg
-           FROM tt WHERE len(toks) >= 3)"""
-
-  /** Host link-graph + 3-round PageRank CTE block shared by the t74,
-    * t77 and t94 oracles (`r3` = (node, r) final integer-ppm ranks).
-    * ONE definition so the rank artifact its consumers join cannot
-    * drift from the artifact itself. */
-  private val hostRankSql: String =
-    s"""$urlAugSql,
-         edges AS (
-           SELECT 'site' || (doc_id % 7) || '.example.org' AS src,
-             lower(domain) AS dst, count(*) AS w
-           FROM u
-           WHERE lower(domain) <> 'site' || (doc_id % 7)
-             || '.example.org'
-           GROUP BY 1, 2),
-         outw AS (SELECT src, sum(w) AS ow FROM edges GROUP BY 1),
-         en AS (
-           SELECT e.src, e.dst, (1000000000 * e.w) // o.ow AS p
-           FROM edges e JOIN outw o USING (src)),
-         nodes AS (
-           SELECT src AS node FROM edges
-           UNION SELECT dst FROM edges),
-         nn AS (SELECT count(*) AS n FROM nodes),
-         r0 AS (SELECT node, 1000000 // n AS r FROM nodes CROSS JOIN nn),
-         ${pageRankIterSql(3)}"""
-
-  /** Each document's hosting site under the t19/t66 planted-URL
-    * convention — the doc→host key shared by t74 (edge sources) and
-    * t77 (curation grouping). */
-  private def hostingSite: Column =
-    concat(lit("site"), (col("doc_id") % 7).cast("string"),
-      lit(".example.org"))
-
-  /** The host link-graph rank artifact (node, rank_ppm) shared by t74
-    * (the artifact itself) and t77 (its per-host consumer): citation
-    * edges from each doc's hosting site to every domain its text
-    * cites, ranked by `Graph.pageRankPpm`. Materialize-once contract
-    * at corpus scale — the table is host-cardinality. */
-  private def hostRanks(s: SparkSession, dir: String): DataFrame = {
-    // domains lower()ed per RFC 4343 (the t66 rule) BEFORE the
-    // self-link gate and the edge rollup: a doc citing its own host
-    // in uppercase must not mint a phantom graph node that siphons
-    // rank mass (urlDomains preserves case; hosting sites are
-    // lowercase literals)
-    val edges = T(s, dir, "documents")
-      .select(hostingSite.as("src_host"),
-        explode(TextOps.urlDomains(urlAugmented)).as("__d"))
-      .select(col("src_host"), lower(col("__d")).as("dst_host"))
-      .where(col("src_host") =!= col("dst_host"))
-      .groupBy("src_host", "dst_host").agg(count(lit(1)).as("w"))
-    Graph.pageRankPpm(edges, "src_host", "dst_host", "w", iters = 3)
-  }
-
-  /** Deterministic URL augmentation shared by t19 and t66 (the
-    * synthetic corpus has no URLs, so every 5th doc gets a planted
-    * footer; both engines build the same augmented text). ONE Scala
-    * definition so the planted-URL scheme cannot desynchronize
-    * between the two queries' Spark sides; their SQL twins carry the
-    * same literal. */
-  private def urlAugmented: Column = {
-    val footer = concat(
-      lit(" see https://site"), (col("doc_id") % 7).cast("string"),
-      lit(".example.org/p"), col("doc_id").cast("string"),
-      lit(" and http://host"), (col("doc_id") % 3).cast("string"),
-      lit(".net/q"))
-    when(col("doc_id") % 5 === 0, concat(col("text"), footer))
-      .otherwise(col("text"))
-  }
+  val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * A pricing-summary aggregate: scan → filter → groupBy, the shape the
     * whole engine is built around. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A4/A6 — grouped aggregation (sums, avg, count) with partial (map-side)
-    // aggregation; single shuffle on the two low-cardinality keys.
-    "q1_agg" -> ((s, dir) => {
-      T(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          moneySum(col("l_extendedprice")).as("sum_base"),
-          moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .as("sum_disc"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          count(lit(1)).as("n"))
-    }),
-
-    // D1 — exact dedup as DISTINCT projection (dropDuplicates over the
-    // projected key set; shuffle on both columns, map-side combine).
-    "q2_dedup_distinct" -> ((s, dir) =>
-      T(s, dir, "events").select("user_id", "event_type").distinct()),
-
-    // D2 — ordered keep-first dedup: first event per user in (ts, event_id)
-    // arrival order. Deterministic, unlike bare dropDuplicates(key).
-    "q3_dedup_keepfirst" -> ((s, dir) =>
-      Cleaning.dedupKeepFirst(
-        T(s, dir, "events").select("user_id", "event_id", "event_type", "ts"),
-        Seq("user_id"), Seq(col("ts"), col("event_id")))
-        .select("user_id", "event_id", "event_type")),
-
-    // P4 — valid-range clamp to null, row kept. Pure expression: stays in
-    // whole-stage codegen, no shuffle.
-    "q4_clamp" -> ((s, dir) =>
-      T(s, dir, "events").select(col("event_id"),
-        Ranges.clampToNull(col("value"), 0.0, 50.0).as("value_clamped"))),
-
-    // A4 — time-bucketed aggregate (resample-to-hour): date_trunc + groupBy.
-    "q5_hourly" -> ((s, dir) =>
-      T(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"))
-        .agg(stableAvg(col("value"), 4).as("avg_value"),
-          count(lit(1)).as("n"))),
-
-    // W1 — trailing 2-day rolling median per key over a time-range frame.
-    // Exact median as a window aggregate; frame is (t-2d, t] in µs matching
-    // pandas' right-closed offset windows.
-    "q6_rolling_median" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.select(col("user_id"), col("event_id"),
-        round(Windows.rollingTrailing(Windows.med, col("value"), col("ts"),
-          Seq(col("user_id")), 2 * 86400), 4).as("med_2d"))
-    }),
-
-    // W2 — centered 4-day rolling median with min_periods=5.
-    "q6c_rolling_centered" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.select(col("user_id"), col("event_id"),
-        round(Windows.rollingCentered(Windows.med, col("value"), col("ts"),
-          Seq(col("user_id")), 4 * 86400, minPeriods = 5), 4).as("med_c"))
-    }),
-
-    // W6 — lag difference: microseconds since the user's previous event.
-    "q7_lag_diff" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.select(col("user_id"), col("event_id"),
-        Windows.lagDiff(unix_micros(col("ts")), Seq(col("user_id")),
-          Seq(col("ts"), col("event_id"))).as("dt_us"))
-    }),
-
-    // W3 — limited forward-fill: clamp >30 to null, then ffill at most 3
-    // consecutive nulls per user in event-time order.
-    "q8_ffill_limit" -> ((s, dir) => {
-      val base = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("ts"), Ranges.clampToNull(col("value"), Double.MinValue, 30.0)
-          .as("v"))
-      Windows.ffillLimited(base, "v", "ts", Seq("user_id"), limit = 3,
-        tiebreakCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"), col("v").as("v_filled"))
-    }),
-
-    // W5 — linear interpolation over event-time of the nulled-out values;
-    // leading nulls stay null, trailing nulls carry the last value.
-    "q9_interpolate" -> ((s, dir) => {
-      val base = T(s, dir, "events").select(col("user_id"), col("event_id"),
-        col("ts"), Ranges.clampToNull(col("value"), Double.MinValue, 30.0)
-          .as("v"))
-      Windows.interpolateLinear(base, "v", "ts", Seq("user_id"),
-        tiebreakCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          round(col("v"), 6).as("v_interp"))
-    }),
-
-    // W3 (grid) — hourly aggregate, then a per-key regular grid spanning
-    // each key's range so empty buckets surface as null rows.
-    "q10_grid" -> ((s, dir) => {
-      val h = T(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-        .agg(stableAvg(col("value"), 4).as("v"))
-      Windows.resampleGrid(h, "hour", Seq("event_type"), 3600)
-        .select("event_type", "hour", "v")
-    }),
-
-    // J4 — broadcast dim join: lineitem ⋈ broadcast(part), revenue per
-    // brand. The big side never shuffles; only the 6-row result does.
-    "q11_join_broadcast" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .join(broadcast(T(s, dir, "part")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n"))),
-
-    // Multi-join with filter (TPC-H Q5 shape): customer⋈nation⋈orders⋈
-    // lineitem; the status filter pushes into the orders scan, nation
-    // broadcasts, and Catalyst/AQE order the rest.
-    "q12_join_multi" -> ((s, dir) =>
-      T(s, dir, "customer")
-        .join(broadcast(T(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(T(s, dir, "orders").where(col("o_orderstatus") === "F"),
-          col("o_custkey") === col("c_custkey"))
-        .join(T(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("n_name")
-        .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("revenue"), count(lit(1)).as("n"))),
-
-    // J6 — as-of join: each click gets the user's most recent purchase
-    // value at-or-before it. Union-tag + one window pass — no range probe.
-    "q13_asof" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val clicks = e.where(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val purchases = Cleaning.dedupKeepFirst(
-        e.where(col("event_type") === "purchase")
-          .select("user_id", "ts", "value", "event_id"),
-        Seq("user_id", "ts"), Seq(col("event_id").desc))
-        .select("user_id", "ts", "value")
-      Joins.asOfJoin(clicks, purchases, Seq("user_id"), "ts", Seq("value"))
-        .select(col("event_id"), col("user_id"),
-          col("value").as("last_purchase_value"))
-    }),
-
-    // J1 — union-by-name across drifting column sets (missing → null).
-    "q14_union" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      e.select("event_id", "user_id").unionByName(
-        e.select("event_id", "value"), allowMissingColumns = true)
-    }),
-
-    // Anti join — customers with no pending orders (NOT EXISTS shape);
-    // the status filter pushes below the anti join into the orders scan.
-    "q15_antijoin" -> ((s, dir) =>
-      T(s, dir, "customer").join(
-        T(s, dir, "orders").where(col("o_orderstatus") === "P"),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")),
-
-    // A1/A2 — exact per-key median + deterministic mode (ties → smallest)
-    // fused into ONE aggregation: a single shuffle on user_id, no join.
-    // mode(col, deterministic=true) breaks count ties by smallest value,
-    // matching the reference's (count DESC, value ASC) modal pick.
-    "q16_median_mode" -> ((s, dir) =>
-      T(s, dir, "events").groupBy("user_id")
-        .agg(round(median(col("value")), 4).as("med"),
-          mode(col("event_type"), deterministic = true).as("mode_type"))),
-
-    // C3 — piecewise step correction: cumulative offsets applied to all
-    // data at/after each change point (pure chained CASE, codegen'd).
-    "q17_piecewise" -> ((s, dir) => {
-      val off = Joins.piecewiseOffset(col("ts"), Seq(
-        java.sql.Timestamp.valueOf("2024-01-10 00:00:00") -> 0.5,
-        java.sql.Timestamp.valueOf("2024-01-20 00:00:00") -> 0.25))
-      T(s, dir, "events").select(col("event_id"),
-        round(col("value") - off, 4).as("value_corrected"))
-    }),
-
-    // C1+J4 — linear calibration y = m·(1−x)+c with per-key coefficients
-    // and mean fallback for keys missing from the dim table.
-    "q18_calibration" -> ((s, dir) => {
-      import s.implicits._
-      val coef = Seq(("click", 2.0, 0.5), ("view", 1.5, -0.2))
-        .toDF("event_type", "m", "c")
-      Joins.lookupWithFallback(T(s, dir, "events"), coef, "event_type",
-        Seq("m", "c"))
-        .select(col("event_id"),
-          round(Calibration.linear(col("value"), col("m"), col("c"),
-            oneMinus = true), 6).as("cal"))
-    }),
-
-    // R1 — wide → long unpivot of measure columns (Generate, no shuffle).
-    "q19_unpivot" -> ((s, dir) =>
-      Reshape.toLong(T(s, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber"),
-        Seq("l_quantity", "l_discount", "l_tax"), "metric", "mval")),
-
-    // Top-k per group — row_number with deterministic tiebreak.
-    "q20_topk" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      T(s, dir, "orders")
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    }),
-
-    // Rollup — hierarchical subtotals in one pass.
-    "q21_rollup" -> ((s, dir) =>
-      T(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"),
-          count(lit(1)).as("n"))),
-
-    // P8 — time-range slice; the predicate reaches the parquet scan
-    // (PushedFilters on the raw int64 ts) and prunes row groups at scale.
-    "q22_timeslice" -> ((s, dir) =>
-      eventsBetween(s, dir, "2024-01-10 00:00:00", "2024-01-15 00:00:00")
-        .select("event_id", "ts", "value")),
-
-    // A5 — daily profile: per-type stats of one calendar day (the
-    // date_trunc-equality is expressed as a pushable [day, day+1) range).
-    "q23_daily_profile" -> ((s, dir) =>
-      eventsBetween(s, dir, "2024-01-05 00:00:00", "2024-01-06 00:00:00")
-        .groupBy("event_type")
-        .agg(stableAvg(col("value"), 4).as("avg_value"),
-          count(lit(1)).as("n"))),
-
-    // J2 — horizontal alignment of two per-type hourly series on the time
-    // axis (full-outer join on the hour key).
-    "q24_align" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      def hourly(t: String, alias: String) =
-        e.where(col("event_type") === t)
-          .groupBy(date_trunc("hour", col("ts")).as("hour"))
-          .agg(stableAvg(col("value"), 4).as(alias))
-      Joins.alignOnTime(Seq(hourly("click", "click_avg"),
-        hourly("purchase", "purchase_avg")), "hour")
-    }),
-
-    // Sessionization: 30-min inactivity gap, per-session rollup (the
-    // batch counterpart of streaming session windows).
-    "q30_sessions" -> ((s, dir) =>
-      Sessions.sessionStats(T(s, dir, "events"), "ts", Seq("user_id"),
-        gapSec = 1800, tiebreakCols = Seq("event_id"))
-        .select("user_id", "session_id", "session_start", "session_end",
-          "n_events", "duration_us")),
-
-    // Bucketed range join: clicks within 1h after each purchase —
-    // bucket-equi-join instead of the quadratic theta join.
-    "q31_range_join" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      val clicks = e.where(col("event_type") === "click")
-        .select("user_id", "ts")
-      val purchases = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"))
-      val matched = Joins.rangeJoinBucketed(clicks, purchases,
-        Seq("user_id"), "ts", "purchase_id", windowSec = 3600)
-        .groupBy("purchase_id").agg(count(lit(1)).as("__m"))
-      purchases.select("purchase_id")
-        .join(matched, Seq("purchase_id"), "left")
-        .select(col("purchase_id"),
-          coalesce(col("__m"), lit(0L)).as("n_clicks"))
-    }),
-
-    // Skew-salted two-phase aggregation — semantically identical to the
-    // plain groupBy (the oracle), shuffle spread over 16 sub-keys.
-    "q34_salted_agg" -> ((s, dir) =>
-      Skew.saltedSumCount(T(s, dir, "events"), Seq("event_type"), "value",
-        salt = 16)
-        .select(col("event_type"),
-          round(col("sum_value"), 2).as("sum_v"), col("n"))),
-
-    // Per-label centroid of the embedding corpus (the k-means / IVF
-    // training building block), long-form (label, d, c).
-    "q35_centroids" -> ((s, dir) =>
-      T(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")))
-        .groupBy(col("label"), (col("pos") + 1).cast("long").as("d"))
-        .agg(round(avg(col("col").cast("double")), 6).as("c"))),
-
-    // IVF coarse quantization: nearest of 16 seed centroids per vector.
-    "q36_ivf_assign" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      Vectors.ivfAssign(e, seedCentroids(e), "vec_id", "cid", "embedding")
-    }),
-
-    // One Lloyd's iteration (the k-means / IVF re-train step), long-form
-    // for the oracle: map-side assignment to the 16 seed centroids, then
-    // the per-(cell, dim) mean via posexplode + partial aggregation.
-    "q39_kmeans_step" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      Vectors.kmeansStep(e, seedCentroids(e), "vec_id", "cid", "embedding")
-        .select(col("cid"), posexplode(col("embedding")))
-        .select(col("cid"), (col("pos") + 1).cast("long").as("d"),
-          round(col("col"), 6).as("c"))
-    }),
-
-    // Scalar subquery: orders priced above the global average. Fully
-    // lazy: the 1-row aggregate joins back via broadcast, so the whole
-    // thing is one plan (AQE/reuse eligible, no job at plan build).
-    "q32_scalar_subquery" -> ((s, dir) => {
-      val o = T(s, dir, "orders")
-      val avgPrice = o.agg(avg("o_totalprice").as("__avg"))
-      o.join(broadcast(avgPrice))
-        .where(col("o_totalprice") > col("__avg"))
-        .select("o_orderkey", "o_totalprice")
-    }),
-
-    // IN-subquery (left-semi): lineitems of pending orders.
-    "q33_in_subquery" -> ((s, dir) => {
-      val pending = T(s, dir, "orders")
-        .where(col("o_orderstatus") === "P").select("o_orderkey")
-      T(s, dir, "lineitem")
-        .join(pending, col("l_orderkey") === col("o_orderkey"),
-          "left_semi")
-        .groupBy("l_returnflag")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"),
-          count(lit(1)).as("n"))
-    }),
-
-    // Exact distinct-count per group (partial aggregation both phases).
-    "q25_distinct_count" -> ((s, dir) =>
-      T(s, dir, "events").groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n"))),
-
-    // Cube — all grouping-set combinations. NOT a single-pass cube:
-    // Expand×decimal-sum measured 3× slower than the same aggregate
-    // without grouping sets (decimal accumulation runs 4× per row
-    // under Expand and off the fast path — r10's one cross-round
-    // regression, after moneySum switched this from double to exact
-    // decimal). Instead aggregate ONCE at the finest grain, then cube
-    // the group-cardinality pre-aggregate — decimal addition is exact
-    // and associative, so every grouping set's total is bit-identical
-    // (asserted vs the single-pass plan at sf0.1), and the Expand
-    // runs over |flags×statuses| rows instead of the corpus. This is
-    // also the only shape that survives 100 TB: the wide scan feeds
-    // one partial-agged groupBy; the lattice work is driver-trivial.
-    "q26_cube" -> ((s, dir) => {
-      val base = T(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(sum(col("l_extendedprice").cast("decimal(24,8)")).as("__s"),
-          count(lit(1)).as("__n"))
-      base.cube("l_returnflag", "l_linestatus")
-        .agg(round(sum("__s"), 2).cast("double").as("sum_price"),
-          sum("__n").as("n"))
-    }),
-
-    // Exact interpolating quantiles per group (Spark `percentile` ≡
-    // DuckDB `quantile_cont`). ONE percentile aggregate over the array
-    // of fractions — a single per-group value buffer, where three
-    // scalar percentile() calls would each collect their own copy.
-    "q27_quantiles" -> ((s, dir) =>
-      T(s, dir, "events").groupBy("event_type")
-        .agg(percentile(col("value"),
-          array(lit(0.25), lit(0.5), lit(0.9))).as("__p"))
-        .select(col("event_type"),
-          round(element_at(col("__p"), 1), 4).as("p25"),
-          round(element_at(col("__p"), 2), 4).as("p50"),
-          round(element_at(col("__p"), 3), 4).as("p90"))),
-
-    // JSON field extraction (codegen'd path expression, no UDF).
-    "q28_json" -> ((s, dir) =>
-      T(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(round(avg("k"), 4).as("avg_k"), count(lit(1)).as("n"))),
-
-    // String function surface: split/first-token, case, length.
-    "q29_strings" -> ((s, dir) =>
-      T(s, dir, "part").select(col("p_partkey"),
-        element_at(split(col("p_name"), " "), 1).as("w1"),
-        upper(col("p_brand")).as("ub"),
-        length(col("p_name")).cast("long").as("n"))),
-
-    // R1 inverse — long → wide pivot with a STATIC key list (no
-    // column-discovery scan) lowered to codegen'd conditional
-    // aggregation: per-user summed value per event type.
-    "q37_pivot" -> ((s, dir) =>
-      Reshape.toWide(
-        T(s, dir, "events").select("user_id", "event_type", "value"),
-        Seq("user_id"), "event_type",
-        Seq("click", "error", "purchase", "signup", "view"),
-        "value", c => round(sum(c), 2))),
-
-    // Set operations (distinct semantics), tagged long-form: users who
-    // clicked but never erred (EXCEPT) and users who both clicked and
-    // purchased (INTERSECT).
-    "q38_setops" -> ((s, dir) => {
-      val e = T(s, dir, "events")
-      def ids(t: String) = e.where(col("event_type") === t)
-        .select("user_id")
-      ids("click").except(ids("error"))
-        .select(lit("click_not_error").as("op"), col("user_id"))
-        .unionByName(ids("click").intersect(ids("purchase"))
-          .select(lit("click_and_purchase").as("op"), col("user_id")))
-    }),
-
-    // Exact text dedup (training-data op): content hash → keep-min doc id.
-    "d1_docs_exact_dedup" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .groupBy(md5(col("text")).as("h"))
-        .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))),
-
-    // Token counting (training-data op): whitespace tokenizer, codegen'd
-    // split — no UDF.
-    "d2_token_count" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))),
-
-    // Vocabulary building: corpus-wide token frequencies, top-20 with a
-    // deterministic (count desc, token) total order — explode is a
-    // Generate (no shuffle), the count is one partial-aggregated
-    // shuffle, and TakeOrderedAndProject keeps the global sort at k
-    // rows, not corpus scale.
-    "d3_vocab" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(explode(split(lower(col("text")), "\\s+")).as("tok"))
-        .where(length(col("tok")) > 0)
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok"))
-        .limit(20)),
-
-    // MinHash signature: 8 salted-md5 min-hashes over word 3-gram
-    // shingles. Map-side only — each doc reduces to a fixed-size sketch.
-    // Shingles are projected as a column first: the signature references
-    // them 8× and Spark inlines expression args per reference.
-    "t1_minhash_sig" -> ((s, dir) =>
-      T(s, dir, "documents")
-        // size(tokens) >= 3 ⇔ size(3-shingles) > 0 (WordShinglesExpr:
-        // empty iff len < n, null iff tokens null) — filtering on the
-        // CHEAP token count keeps pushdown from inlining the shingle
-        // kernel into the filter (r20 plans: the size(__sh) form
-        // evaluated graft_word_shingles twice per scan)
-        .where(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("__sh"))
-        .select(col("doc_id"),
-          array_join(graft.functions.SketchExpressions.minhashSig(col("__sh"), 8),
-            "|").as("mh"))),
-
-    // MinHash+LSH near-dup candidate pairs, verified with exact n-gram
-    // Jaccard on the distinct shingle sets (the full near-dedup pipeline).
-    // Shingles are recomputed per consumer (signatures + both sides of
-    // the pair→set join) rather than cached: the single-pass shingle
-    // kernel is map-side cheap, and at 100 TB a corpus-sized cache is
-    // infeasible anyway — recompute is the scale-correct plan (and no
-    // executor memory is pinned across a long-lived session).
-    "t2_lsh_jaccard" -> ((s, dir) => {
-      // token-count pre-gate ≡ bandedKeys' size(shingles) > 0 for
-      // 3-shingles (t1's rationale) — gated docs that feed `sets` are
-      // only ever read through the INNER join on pairs, which the gate
-      // already excludes, so output is identical
-      val docs = T(s, dir, "documents")
-        .where(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("shingles"))
-      val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "shingles",
-        k = 8, bands = 4, preGated = true)
-      val sets = docs.select(col("doc_id"),
-        array_distinct(col("shingles")).as("ss"))
-      pairs
-        .join(sets.select(col("doc_id").as("id_a"), col("ss").as("__sa")),
-          Seq("id_a"))
-        .join(sets.select(col("doc_id").as("id_b"), col("ss").as("__sb")),
-          Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(graft.functions.SketchExpressions
-            .jaccard(col("__sa"), col("__sb")), 6).as("jac"))
-    }),
-
-    // Near-dup threshold tuning curve: exact-Jaccard histogram over
-    // the LSH candidate pairs (decile bins) — where you LOOK before
-    // picking the 0.5 cut every dedup query inherits: a bimodal
-    // histogram separates true near-dups from band-collision noise; a
-    // flat one says re-tune k/bands, not the threshold. Same candidate
-    // machinery as t2 (bucketed, never all-pairs) + a 10-row agg; the
-    // bin edges are floor(10·j) on the SAME IEEE division both engines
-    // compute, so the twin is exact.
-    "t85_jaccard_sweep" -> ((s, dir) => {
-      // pre-gate ≡ internal size gate (t2's rationale)
-      val docs = T(s, dir, "documents")
-        .where(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("shingles"))
-      val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "shingles",
-        k = 8, bands = 4, preGated = true)
-      val sets = docs.select(col("doc_id"),
-        array_distinct(col("shingles")).as("ss"))
-      pairs
-        .join(sets.select(col("doc_id").as("id_a"), col("ss").as("__sa")),
-          Seq("id_a"))
-        .join(sets.select(col("doc_id").as("id_b"), col("ss").as("__sb")),
-          Seq("id_b"))
-        .select(graft.functions.SketchExpressions
-          .jaccard(col("__sa"), col("__sb")).as("__jac"))
-        .where(col("__jac").isNotNull)
-        .select(least(floor(col("__jac") * 10), lit(9.0)).cast("long")
-          .as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as("n_pairs"))
-    }),
-
-    // SimHash 32-bit signature as a portable bitstring (custom
-    // expression: one digest per token in a tight loop).
-    "t3_simhash" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .simhash32(TextOps.tokens(col("text"))).as("sh"))),
-
-    // SimHash dedup DECISIONS: group by the full 32-bit signature and
-    // keep the smallest doc id per cluster. Output is cluster-sized
-    // (one row per distinct signature), never pair-sized — a banded
-    // pair listing goes quadratic on homogeneous corpora (measured
-    // 187 s at sf0.1: vocabulary-sharing docs collapse onto few
-    // signatures), while the keep-decision table is one partial-
-    // aggregated shuffle at any scale. Hamming-radius *search* is the
-    // multi-probe ANN path (Vectors.bucketedTopK), not a pair dump.
-    "t11_simhash_dedup" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .simhash32(TextOps.tokens(col("text"))).as("sh"))
-        .groupBy("sh")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_docs"))),
-
-    // Duplicate-CLUSTER assignment: connected components over LSH
-    // co-bucket STAR edges (bucket-min → member; identical components
-    // to the clique pairs at b−1 vs b(b−1)/2 edges per bucket — see
-    // Dedup.lshStarEdges), then every document labeled with its
-    // cluster's minimum doc id (singletons label themselves). This is
-    // the step pairwise dedup can't express: A~B~C collapses to one
-    // cluster even though (A,C) was never a candidate pair.
-    "t12_dup_clusters" -> ((s, dir) => neardupLabels(s, dir)),
-
-    // Dedup savings report — the "what did near-dedup buy" artifact
-    // you read before paying for a corpus-wide dedup materialization:
-    // cluster-size histogram with total vs kept tokens (keep-min
-    // convention, d5's). Reads the ONE staged cluster-label artifact
-    // (stagedNeardupLabels — materialized once per corpus snapshot)
-    // + a cluster-keyed agg + a histogram-sized agg; the only new
-    // shuffles are cluster-count-sized.
-    "t86_dedup_savings" -> ((s, dir) => {
-      val toks = T(s, dir, "documents").select(col("doc_id"),
-        size(split(col("text"), "\\s+")).cast("long").as("n_tok"))
-      val per = stagedNeardupLabels(s, dir).join(toks, Seq("doc_id"))
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("sz"), sum(col("n_tok")).as("tok"),
-          min(struct(col("doc_id"), col("n_tok"))).as("__keep"))
-      per.groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"),
-          sum(col("tok")).as("total_tokens"),
-          (sum(col("tok")) - sum(col("__keep.n_tok")))
-            .as("tokens_saved"))
-    }),
-
-    // END-TO-END crawl pipeline — every stage is individually green;
-    // this query runs them COMPOSED, because composition (column
-    // collisions, layout drift, ordering assumptions) is where
-    // pipelines break. The crawl itself is synthesized in-engine from
-    // `documents` so the DuckDB twin can verify the whole chain:
-    // each doc wraps into HTML (script/style/comment junk included) →
-    // an HTTP response → a WARC/1.0 record; records (plus a STALE
-    // re-crawl capture for every doc_id%3==0, which latest-capture
-    // must drop, and an exact-content MIRROR under a second URL for
-    // doc_id%11==7, which content-dedup must drop) concatenate into 8
-    // in-memory segments that round-trip through the REAL byte parser
-    // (`Warc.records` — the same flatMap file ingest uses). Then:
-    // latest-capture per URL → httpBody → htmlToText → t66 blocklist
-    // gate → exact-content dedup (keep min url) → t68's packing
-    // prefix-sum over the survivors. A stale capture surviving, a
-    // mirror kept, or an extraction drift all surface as value
-    // mismatches against the oracle, which computes the end state
-    // directly from `documents`. Production swaps the synthesis for
-    // `readWarcFiles(segments)`; everything downstream is identical.
-    "t87_warc_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents")
-      val pUrl = concat(lit("https://site"),
-        (col("doc_id") % 7).cast("string"),
-        lit(".example.org/p"), col("doc_id").cast("string"))
-      val qUrl = concat(lit("https://site"),
-        (col("doc_id") % 7).cast("string"),
-        lit(".example.org/q"), col("doc_id").cast("string"))
-      def html(body: Column): Column = concat(
-        lit("<html><head><script>var x = 1;</script><style>p{}" +
-          "</style></head><body><p>"), body,
-        lit("</p><!-- crawler junk --></body></html>"))
-      def http(h: Column): Column = concat(
-        lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; " +
-          "charset=utf-8\r\nX-Crawler: graft\r\n\r\n"), h)
-      def rec(u: Column, date: String, payload: Column): Column = concat(
-        lit("WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "), u,
-        lit(s"\r\nWARC-Date: $date\r\nContent-Type: application/http; " +
-          "msgtype=response\r\nContent-Length: "),
-        octet_length(payload).cast("string"),
-        lit("\r\n\r\n"), payload, lit("\r\n\r\n"))
-      val live = rec(pUrl, "2026-01-01T00:00:00Z", http(html(urlAugmented)))
-      val stale = rec(pUrl, "2025-06-01T00:00:00Z",
-        http(html(concat(lit("STALE CAPTURE "), urlAugmented))))
-      val mirror = rec(qUrl, "2026-01-01T00:00:00Z",
-        http(html(urlAugmented)))
-      val recs = docs.select(col("doc_id"), live.as("rec"))
-        .unionByName(docs.where(col("doc_id") % 3 === 0)
-          .select(col("doc_id"), stale.as("rec")))
-        .unionByName(docs.where(col("doc_id") % 11 === 7)
-          .select(col("doc_id"), mirror.as("rec")))
-      // 32 segments (the local parallelism grain; real crawls ship
-      // thousands of files); record order inside a segment is sorted
-      // (doc_id, bytes) so the synthesized content is deterministic —
-      // Content-Length framing makes parse order-insensitive anyway,
-      // but the bytes themselves must not depend on task order
-      val segments = recs
-        .withColumn("path",
-          concat(lit("mem://seg"), (col("doc_id") % 32).cast("string")))
-        .groupBy("path")
-        .agg(array_sort(collect_list(struct(col("doc_id"), col("rec"))))
-          .as("rs"))
-        .select(col("path"),
-          // concat_ws builds the segment in ONE pass; the old
-          // aggregate-fold re-copied the accumulated buffer per
-          // record — quadratic bytes per segment, 510 s at 100×
-          // for what is fixture synthesis, not pipeline work (r14
-          // full-suite 100× finding)
-          concat_ws("", transform(col("rs"), x => x.getField("rec")))
-            .cast("binary").as("content"))
-      val parsed = graft.ingest.Warc.records(segments)
-      val latest = graft.ingest.Warc.latestCapture(parsed)
-      // deliberately NOT cut (r19 probe): both consumers re-enter
-      // through the segment/capture exchanges AQE reuses at runtime —
-      // a localCheckpoint measured flat at sf0.1 AND at 10× (4.16 s
-      // both ways), so the double-extract this would save is not real
-      val txt = latest.select(col("url"),
-        TextOps.htmlToText(TextOps.httpBody(col("payload"))).as("text"))
-      // t66 gate on the EXTRACTED text (the real pipeline order:
-      // extraction feeds curation)
-      val blockDf = Seq("site0.example.org", "site3.example.org",
-        "host2.net").toDF("domain")
-      val hits = txt
-        .select(col("url"), explode(TextOps.urlDomains(col("text")))
-          .as("__d"))
-        .select(col("url"), lower(col("__d")).as("domain"))
-        .join(broadcast(blockDf), Seq("domain"))
-        .select("url").distinct()
-      // the hit set is blocked-docs-sized — corpus-proportional on a
-      // real crawl, so no broadcast hint: AQE size-gates at runtime
-      val gated = txt.join(hits, Seq("url"), "left_anti")
-      // exact-content dedup, keep-min-URL (the mirror's /q loses to
-      // /p on the same host; a real cross-doc text collision resolves
-      // by URL order on both sides)
-      val wDup = Window.partitionBy(col("__h")).orderBy(col("url"))
-      val kept = gated.withColumn("__h", md5(col("text")))
-        .withColumn("__rk", row_number().over(wDup))
-        .where(col("__rk") === 1)
-        .select(
-          regexp_extract(col("url"), "/p([0-9]+)$", 1).cast("long")
-            .as("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tok"))
-      // t68's two-level prefix sum (no global one-reducer sort)
-      val bucketed = kept.withColumn("__b", expr("doc_id DIV 64"))
-      val bucketOff = bucketed.groupBy("__b")
-        .agg(sum(col("n_tok")).as("__bs"))
-        .withColumn("__off", coalesce(
-          sum(col("__bs")).over(Window.orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__b", "__off")
-      val wIn = Window.partitionBy("__b").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      bucketed.join(bucketOff, Seq("__b"))
-        .withColumn("start", col("__off") +
-          coalesce(sum(col("n_tok")).over(wIn), lit(0L)))
-        .select(col("doc_id"), col("n_tok"), col("start"),
-          expr("start DIV 2048").as("first_seq"),
-          expr("(start + greatest(n_tok, 1) - 1) DIV 2048")
-            .as("last_seq"))
-    }),
-
-    // Binary (sign-bit) embedding quantization + Hamming-prefilter ANN:
-    // each 64-dim vector compresses map-side to TWO longs (one sign bit
-    // per dim — 16 bytes, a 16× cut vs the stored float32 and 32× vs
-    // float64 working form), Hamming distance is bit_count(xor) on
-    // those longs, and only the 20 Hamming-nearest candidates per
-    // probe pay the exact-cosine rerank. This is the memory-bound ANN
-    // scale path (the signature table fits where the vectors don't);
-    // the 100 TB shape is identical to t4 — bounded probe set
-    // broadcast against one linear pass — but the linear pass carries
-    // 16 bytes/vector, and the rerank touches only 20 vectors/probe.
-    // Sign bits pack by polynomial accumulation (acc*2+bit, MSB =
-    // lowest dim) over two 32-dim halves so neither engine needs a
-    // 1<<63 literal; the twin packs the same way.
-    "t88_binary_ann" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      def half(lo: Int): Column =
-        aggregate(slice(col("embedding"), lo, 32), lit(0L),
-          (acc, x) => acc * 2 + when(x >= 0, 1L).otherwise(0L))
-      // the linear pass carries ONLY (vec_id, h1, h2) — 16 bytes of
-      // signature, never the 512-byte vector (that would forfeit the
-      // advertised memory cut; vectors rejoin below, candidates only)
-      val sig = e.select(col("vec_id"),
-        half(1).as("h1"), half(33).as("h2"))
-      val probes = sig.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"),
-          col("h1").as("__qh1"), col("h2").as("__qh2"))
-      val wH = Window.partitionBy("qid")
-        .orderBy(col("hamming"), col("vec_id"))
-      val cand = sig.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("qid"))
-        .withColumn("hamming",
-          expr("CAST(bit_count(h1 ^ __qh1) + bit_count(h2 ^ __qh2)" +
-            " AS BIGINT)"))
-        .withColumn("__hrn", row_number().over(wH))
-        .where(col("__hrn") <= 20)
-        .select("qid", "vec_id", "hamming")
-      // rerank: the probes×20 candidate ids broadcast back against the
-      // embeddings table (BroadcastHashJoin — the corpus streams, only
-      // matched rows materialize their vector), then probe vectors
-      // (10 rows) broadcast by qid
-      val qvecs = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding").as("__qv"))
-      val wC = Window.partitionBy("qid")
-        .orderBy(col("__cos").desc, col("vec_id"))
-      e.select(col("vec_id"), col("embedding"))
-        .join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(qvecs), Seq("qid"))
-        .withColumn("__cos", Vectors.cosine(col("__qv"), col("embedding")))
-        .withColumn("rn", row_number().over(wC).cast("long"))
-        .where(col("rn") <= 5)
-        .select(col("qid"), col("vec_id"), col("hamming"),
-          round(col("__cos"), 6).as("cos"), col("rn"))
-    }),
-
-    // Crawl-frontier URL canonicalization + dedup-by-URL: five messy
-    // variants of each logical URL (case soup, www., default port,
-    // trailing slash, utm_* tracking params, fragments) are planted
-    // deterministically, canonicalized (`TextOps.canonicalUrl` — pure
-    // per-row string work), and grouped on the canonical key. Variants
-    // r∈{0..3} collapse to one URL; r=4 keeps its real `id=` param and
-    // stays distinct — stripping must be selective, not "drop the
-    // query". At corpus scale this is the frontier-dedup kernel: the
-    // canonical key derives map-side, so the whole operator is ONE
-    // aggregation shuffle, and the same key is what a 100 TB crawl
-    // partitions its URL-seen table by.
-    "t89_url_canonical" -> ((s, dir) => {
-      val g = expr("CAST(doc_id DIV 5 AS STRING)")
-      val h = expr("CAST((doc_id DIV 5) % 7 AS STRING)")
-      val r = col("doc_id") % 5
-      val base = concat(lit("https://site"), h, lit(".example.com/p/"), g)
-      val messy = when(r === 0, base)
-        .when(r === 1, concat(lit("HTTPS://Site"), h,
-          lit(".Example.COM/p/"), g))
-        .when(r === 2, concat(lit("https://www.site"), h,
-          lit(".example.com:443/p/"), g))
-        .when(r === 3, concat(base, lit("/?utm_source=feed&utm_medium=rss")))
-        .otherwise(concat(base, lit("?id="), h, lit("&utm_campaign=x#frag")))
-      T(s, dir, "documents")
-        .select(col("doc_id"), messy.as("url"))
-        .withColumn("curl", TextOps.canonicalUrl(col("url")))
-        .groupBy("curl")
-        .agg(count(lit(1)).as("n_dups"),
-          min(col("doc_id")).as("keep_id"),
-          countDistinct(col("url")).as("n_variants"))
-    }),
-
-    // Inference micro-batching: bucket sequences by length (width-64
-    // buckets bound intra-batch padding), pack each bucket into batches
-    // under a 2048-token budget via t68's two-level prefix sum — the
-    // outer partition is the bucket, the inner grain is doc_id DIV 64,
-    // so no per-bucket one-reducer sort exists even though bucket
-    // cardinality is tiny (the classic skew trap for "partition by
-    // bucket" windows). Per (bucket, batch): sequence count, real
-    // tokens, max length, and padding waste in ppm — the number a
-    // serving stack actually optimizes (padded slots are burned FLOPs).
-    "t90_length_batches" -> ((s, dir) => {
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"), TextOps.bpeTokenCount(col("text")).as("n_tok"))
-        .withColumn("bucket", expr("(greatest(n_tok, 1L) - 1L) DIV 64"))
-        .withColumn("__b", expr("doc_id DIV 64"))
-      val off = toks.groupBy("bucket", "__b")
-        .agg(sum(col("n_tok")).as("__bs"))
-        .withColumn("__off", coalesce(
-          sum(col("__bs")).over(Window.partitionBy("bucket").orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bucket", "__b", "__off")
-      val wIn = Window.partitionBy("bucket", "__b").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      toks.join(off, Seq("bucket", "__b"))
-        .withColumn("start", col("__off") +
-          coalesce(sum(col("n_tok")).over(wIn), lit(0L)))
-        .withColumn("batch", expr("start DIV 2048"))
-        .groupBy("bucket", "batch")
-        .agg(count(lit(1)).as("n_seqs"),
-          sum(col("n_tok")).as("n_tokens"),
-          max(col("n_tok")).as("max_len"))
-        .withColumn("pad_ppm", expr(
-          // greatest(...,1): a batch of all-empty docs has max_len 0;
-          // Spark DIV-by-zero yields null but DuckDB errors — pin both
-          "(n_seqs * max_len - n_tokens) * 1000000" +
-            " DIV greatest(n_seqs * max_len, 1L)"))
-    }),
-
-    // MMR-diversified retrieval (Carbonell & Goldstein 1998) — the
-    // RAG rerank that stops top-k from returning five near-copies of
-    // the same passage: greedily pick argmax of
-    // 0.7·sim(q,d) − 0.3·max_{s∈picked} sim(d,s), k=3 picks from the
-    // 10 cosine-nearest candidates per probe. The scale contract: ONE
-    // linear corpus pass builds the candidate pool (t4's broadcast
-    // shape + WindowGroupLimit prune), one shuffle groups each
-    // probe's pool, and the sequential-by-definition greedy runs as a
-    // local kernel over the BOUNDED pool (`MmrPicksExpr`) — which is
-    // how MMR always deploys (it reranks a page, never a corpus).
-    // Unrolling the k rounds as plan nodes instead re-derives the
-    // candidate scan each round (the pre-kernel form planned 22
-    // nested-loop joins and 69 exchanges for k=3). Constants 0.7/0.3
-    // are written literally on BOTH sides: deriving 0.3 as 1−λ gives
-    // 0.30000000000000004 and a cross-engine rank flip. collect_list
-    // order is non-deterministic; the kernel's argmax tie-breaks on
-    // vec_id, so pool order cannot reach the result.
-    "t91_mmr_diversify" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      val probes = e.where(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("__qv"))
-      val wQ = Window.partitionBy("qid")
-        .orderBy(col("simq").desc, col("vec_id"))
-      val cand = e.crossJoin(broadcast(probes))
-        .where(col("vec_id") =!= col("qid"))
-        .withColumn("simq", Vectors.cosine(col("__qv"), col("v")))
-        .withColumn("__rn", row_number().over(wQ))
-        .where(col("__rn") <= 10)
-        .select("qid", "vec_id", "simq", "v")
-      cand.groupBy("qid")
-        .agg(collect_list(struct(col("vec_id"), col("simq"), col("v")))
-          .as("__cands"))
-        .select(col("qid"),
-          explode(graft.functions.VectorExpressions
-            .mmrPicks(col("__cands"), 0.7, 0.3, 3)).as("__p"))
-        .select(col("qid"), col("__p.pick").as("pick"),
-          col("__p.vec_id").as("vec_id"),
-          round(col("__p.mmr"), 6).as("mmr"))
-    }),
-
-    // Recall@5 of the t88 sign-bit prefilter vs the exact cosine
-    // truth — the ANN-quality measurement pattern (t60 for IVF, here
-    // for binary quantization). Reuses the REGISTERED t88 query so
-    // the measured thing is exactly the shipped thing; the exact side
-    // is one linear corpus pass (the deliberate baseline, priced as
-    // such). Integer ppm keeps the compare engine-portable.
-    "t92_binary_recall" -> ((s, dir) => {
-      val approx = queries("t88_binary_ann")(s, dir)
-        .select(col("qid"), col("vec_id"))
-      val e = T(s, dir, "embeddings")
-      val probes = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val exact = Vectors.bruteForceTopK(probes, e,
-          "qid", "vec_id", "embedding", k = 5)
-        .select(col("qid"), col("vec_id"))
-      val hits = approx.join(exact, Seq("qid", "vec_id"))
-        .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-      probes.select("qid").join(hits, Seq("qid"), "left")
-        .select(col("qid"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          expr("CAST(coalesce(n_hit, 0) * 1000000 DIV 5 AS BIGINT)")
-            .as("recall_ppm"))
-    }),
-
-    // Robots-exclusion gate with LONGEST-MATCH precedence (the Google
-    // robots.txt semantics: all rules whose prefix matches the path
-    // compete, longest prefix wins, a length tie goes to allow, no
-    // match means allow) — the crawl-politeness step between frontier
-    // dedup (t89) and fetch. Planted rules per host: disallow /p/,
-    // re-allow /p/1 (longest-match must override), and on even hosts
-    // disallow /p/12 (a 3-deep precedence chain). Scale shape: the
-    // rule table is robots.txt-sized and broadcasts; the winner is an
-    // ARGMAX-BY-STRUCT aggregation (partial map-side) rather than a
-    // per-URL window — at 100 TB the gate is one broadcast join plus
-    // one partial-agged shuffle on doc_id.
-    "t93_robots_gate" -> ((s, dir) => {
-      import s.implicits._
-      val docs = T(s, dir, "documents").select(col("doc_id"),
-        concat(lit("site"), (col("doc_id") % 7).cast("string"),
-          lit(".example.com")).as("host"),
-        concat(lit("/p/"), col("doc_id").cast("string")).as("path"))
-      val ruleDf = (0 until 7).flatMap { g =>
-        Seq((s"site$g.example.com", "disallow", "/p/"),
-          (s"site$g.example.com", "allow", "/p/1")) ++
-          (if (g % 2 == 0)
-            Seq((s"site$g.example.com", "disallow", "/p/12")) else Nil)
-      }.toDF("host", "rtype", "prefix")
-      val matched = docs.join(broadcast(ruleDf), Seq("host"))
-        .where(col("path").startsWith(col("prefix")))
-        .groupBy("doc_id")
-        .agg(max(struct(length(col("prefix")).as("l"),
-          when(col("rtype") === "allow", 1).otherwise(0).as("a"),
-          col("prefix").as("p"))).as("m"))
-        .select(col("doc_id"), col("m.a").as("__a"),
-          col("m.p").as("matched"))
-      docs.join(matched, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("host"),
-          when(col("__a").isNull || col("__a") === 1, "allow")
-            .otherwise("block").as("verdict"),
-          coalesce(col("matched"), lit("")).as("matched"))
-    }),
-
-    // Crawl-frontier scheduling — the artifact a polite priority
-    // crawler (the Heritrix/Frontera frontier shape) actually
-    // executes: discovered URLs canonicalize and dedup (t89's key),
-    // each host forms a FIFO queue ordered by canonical URL, and
-    // `fetch_round` r takes the r-th URL of EVERY host — at most one
-    // fetch per host per round, the politeness constraint as a
-    // per-host window. WITHIN a round, hosts are served by t74's link
-    // rank (`pos_in_round`) so important sites drain first; hosts
-    // outside the link graph rank 0 and fetch last. Composes three
-    // shipped artifacts — canonicalUrl, the t74 rank table (unhinted
-    // join: host-cardinality), t89's dedup — because the composed
-    // schedule is what a crawler runs, and composition bugs (key
-    // drift, column collisions) are what this repo's history says to
-    // test. Scale shape: canonical key derives map-side; one agg
-    // shuffle dedups; both windows hash-partition on host-cardinality
-    // keys (host, then round) — no global sort anywhere.
-    "t94_frontier_schedule" -> ((s, dir) => {
-      val g = expr("CAST(doc_id DIV 14 AS STRING)")
-      val h = expr("CAST(doc_id % 7 AS STRING)")
-      // two spellings per canonical URL (doc_id and doc_id+7 land on
-      // the same key; %3 sprinkles www/bare across both) — enough to
-      // prove the dedup seam without re-testing t89's full matrix
-      val messy = when(col("doc_id") % 3 === 0,
-          concat(lit("https://www.site"), h, lit(".example.org/p/"), g))
-        .otherwise(
-          concat(lit("https://site"), h, lit(".example.org/p/"), g))
-      val frontier = T(s, dir, "documents")
-        .select(col("doc_id"), messy.as("url"))
-        .withColumn("curl", TextOps.canonicalUrl(col("url")))
-        .groupBy("curl").agg(min(col("doc_id")).as("keep_id"))
-        .withColumn("host",
-          regexp_extract(col("curl"), "^https?://([^/]+)", 1))
-      // the rank table is HOST-cardinality (~10⁸ rows × ~30 B at CC
-      // scale — GBs, near Spark's broadcast ceiling): no forced hint;
-      // AQE broadcasts while it fits and degrades to a host-keyed
-      // shuffle (linear, high-cardinality key) past the ceiling
-      val ranked = frontier
-        .join(hostRanks(s, dir)
-          .select(col("node").as("host"), col("rank_ppm")),
-          Seq("host"), "left")
-        .na.fill(0L, Seq("rank_ppm"))
-      // per-host queue position: host is a HIGH-cardinality key with
-      // politeness-bounded queues — a plain window is right. The
-      // per-round serving order is NOT: round 1 contains every host
-      // (10⁸ rows through one task at crawl scale — the same
-      // one-task-per-group trap t101/t103 shed this round), so the
-      // position comes from twoLevelRank bucketed on the rank score.
-      val queueW = Window.partitionBy("host").orderBy(col("curl"))
-      val queued = ranked
-        .withColumn("fetch_round", row_number().over(queueW).cast("long"))
-      Windows.twoLevelRank(queued, Seq("fetch_round"),
-          expr("-(rank_ppm DIV 1000)"),
-          Seq(col("rank_ppm").desc, col("host")), "pos_in_round")
-        .select("curl", "host", "keep_id", "rank_ppm",
-          "fetch_round", "pos_in_round")
-    }),
-
-    // Token-budget corpus selection — "give me the best B tokens":
-    // rank every document by the t7 quality score and keep documents
-    // in score order until the cumulative token count crosses B
-    // (here B = total/4, i.e. the best quarter of the corpus by
-    // tokens). The greedy-by-score prefix IS the optimal selection
-    // for a budget knapsack with uniform value-per-token, and the
-    // cumulative cutoff is a GLOBAL ordered prefix sum — the classic
-    // one-reducer trap — computed here by `Windows.twoLevelPrefixSum`
-    // (level 1 windows over the distinct-score bucket table, level 2
-    // hash-partitions by bucket). The threshold compares integers
-    // (start·4 < total, no division, no doubles) so the cut is exact
-    // cross-engine. Output: what the budget does to the source mix —
-    // kept docs/tokens and admitted fraction per source. Bucket key =
-    // −round(q·10⁴): monotone and exact (round of a round), and 4 dp
-    // bounds the level-1 bucket table at ≤10⁴+1 rows REGARDLESS of
-    // corpus size — at 6 dp it tracked distinct scores and grew with
-    // the corpus (measured 17.8× wall on 100× data; the bucket-table
-    // SinglePartition window was the growing term). Ties within a
-    // bucket fall to `order` (full 6-dp q, then doc_id), so the cut
-    // order is unchanged — the knob trades bucket count, never
-    // exactness.
-    "t95_token_budget_select" -> ((s, dir) => {
-      // null text pins q=−1 (after every real score) and tok=0 on
-      // BOTH sides: twoLevelPrefixSum rejects null buckets (null keys
-      // can't join/order consistently), and the two engines disagree
-      // on where NULL sorts under DESC anyway — the sentinel makes
-      // the cut order explicit instead of engine-defined
-      // cut the narrow (id, source, tok, q) projection (t103's
-      // rationale: map-side top, prefix-sum internals + the total agg
-      // re-scan it; uncut, 14 in-filter textStats copies plus repeated
-      // BPE token counts per consumer)
-      val docs = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"),
-          coalesce(TextOps.bpeTokenCount(col("text")), lit(0L)).as("tok"))
-        .withColumn("q",
-          coalesce(TextOps.qualityScoreFrom(col("__st")), lit(-1.0)))
-        .drop("__st")
-        .localCheckpoint(false)
-      val started = Windows.twoLevelPrefixSum(docs, Seq.empty,
-        (-round(col("q") * lit(10000.0))).cast("long"),
-        Seq(col("q").desc, col("doc_id")), col("tok"), "start")
-      val total = docs.agg(sum(col("tok")).cast("long").as("__total"))
-      started.crossJoin(broadcast(total))
-        .withColumn("__keep", col("start") * 4 < col("__total"))
-        .groupBy("source")
-        .agg(count(when(col("__keep"), 1)).as("n_kept"),
-          coalesce(sum(when(col("__keep"), col("tok"))), lit(0L))
-            .as("tok_kept"),
-          expr("CAST(count(CASE WHEN __keep THEN 1 END) * 1000000" +
-            " DIV count(*) AS BIGINT)").as("kept_ppm"))
-    }),
-
-    // Coherent-context packing (the In-Context Pretraining recipe,
-    // Shi et al. 2023: fill each context window with RELATED
-    // documents instead of random concatenation, so long-range
-    // attention sees coherent text). Relatedness key here = source
-    // (in production: link-cluster or host); within a source,
-    // documents pack in doc_id order into 8192-token windows by START
-    // position — t68's concat-and-chunk, PER GROUP. The prefix sum is
-    // `Windows.twoLevelPrefixSum` with a real `partition` (source),
-    // so even a source with most of the corpus never serializes
-    // through one task: level 1 is (source × doc_id-block)-
-    // cardinality, level 2 hash-partitions on the block. Per (source,
-    // ctx): docs starting there, their tokens, and how many spill
-    // into the next window (the fragmentation the ICP paper trades
-    // against coherence).
-    "t96_context_stitch" -> ((s, dir) => {
-      val ctxLen = 8192L
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          TextOps.bpeTokenCount(col("text")).as("tok"))
-      val packed = Windows.twoLevelPrefixSum(toks, Seq("source"),
-        expr("doc_id DIV 64"), Seq(col("doc_id")), col("tok"), "start",
-        broadcastBuckets = false) // doc-block buckets grow with the corpus
-        .withColumn("ctx", expr(s"start DIV $ctxLen"))
-        .withColumn("__spill", (expr(
-          s"(start + greatest(tok, 1L) - 1L) DIV $ctxLen") >
-          col("ctx")).cast("long"))
-      packed.groupBy("source", "ctx")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("tok")).as("n_tokens"),
-          sum(col("__spill")).as("n_spill"),
-          min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"))
-    }),
-
-    // Interpolated Kneser–Ney trigram table (Chen & Goodman 1998) —
-    // the count-based LM corpora still train for perplexity-based
-    // data scoring (CCNet's filter is exactly such a model). The
-    // corpus shuffles ONCE, on the trigram key with map-side partial
-    // agg; every other statistic reaggregates the TYPE-level count
-    // table c3 (orders of magnitude smaller): context totals c(w1w2)
-    // and follower-type counts N1+(w1w2·) by prefix, the middle
-    // order's continuation counts N1+(·w2w3) / their per-w2 totals /
-    // follower types, and the unigram continuation distribution
-    // N1+(·w3)/N1+(··). Convention: all orders count from the trigram
-    // table (a bigram at a document edge that never appears inside a
-    // trigram context doesn't vote) — the standard choice when
-    // training from an n-gram count file. The report keeps the 50
-    // most frequent trigrams (TakeOrdered, no global sort); each
-    // stats join streams its type table once against the BROADCAST
-    // top-50, so nothing type-cardinality ever shuffles for the
-    // report. D = 0.75 (the Chen–Goodman default); probabilities
-    // ship as HALF_UP ppm so the twin comparison is integer-exact.
-    "t97_kn_trigram" -> ((s, dir) => {
-      val D = 0.75
-      val c3 = T(s, dir, "documents")
-        .select(explode(graft.functions.SketchExpressions
-          .wordShingles(TextOps.tokensLower(col("text")), 3)).as("tg"))
-        .groupBy("tg").agg(count(lit(1)).as("c3"))
-      val keyed = c3
-        .withColumn("ctx12", substring_index(col("tg"), " ", 2))
-        .withColumn("w23", substring_index(col("tg"), " ", -2))
-        .withColumn("w3", substring_index(col("tg"), " ", -1))
-      val ctx = keyed.groupBy("ctx12")
-        .agg(sum("c3").as("c12"), count(lit(1)).as("n1ctx"))
-      val mid = keyed.groupBy("w23").agg(count(lit(1)).as("cc23"))
-      val midK = mid
-        .withColumn("w2", substring_index(col("w23"), " ", 1))
-        .withColumn("w3u", substring_index(col("w23"), " ", -1))
-      val midCtx = midK.groupBy("w2")
-        .agg(sum("cc23").as("ccdot2"), count(lit(1)).as("n2w2"))
-      val uni = midK.groupBy(col("w3u").as("w3"))
-        .agg(count(lit(1)).as("n1w3"))
-      val tot = mid.agg(count(lit(1)).cast("double").as("nbt"))
-      val top = keyed.orderBy(col("c3").desc, col("tg")).limit(50)
-      val j1 = ctx.join(broadcast(top), "ctx12")
-      val j2 = mid.join(broadcast(j1), "w23")
-        .withColumn("w2", substring_index(col("w23"), " ", 1))
-      val j3 = midCtx.join(broadcast(j2), "w2")
-      val j4 = uni.join(broadcast(j3), "w3")
-      j4.crossJoin(broadcast(tot))
-        .withColumn("pc", col("n1w3") / col("nbt"))
-        .withColumn("p2",
-          (greatest(col("cc23") - lit(D), lit(0.0)) +
-            lit(D) * col("n2w2") * col("pc")) / col("ccdot2"))
-        .withColumn("p3",
-          (greatest(col("c3") - lit(D), lit(0.0)) +
-            lit(D) * col("n1ctx") * col("p2")) / col("c12"))
-        .select(col("tg"), col("c3"),
-          round(col("p3") * lit(1000000.0)).cast("long").as("kn_ppm"),
-          round(col("p2") * lit(1000000.0)).cast("long").as("backoff_ppm"),
-          round(col("pc") * lit(1000000.0)).cast("long").as("cont_ppm"))
-    }),
-
-    // Fill-in-the-middle transformation (Bavarian et al. 2022: train
-    // on prefix/suffix/middle re-orderings so the model learns to
-    // infill — applied to ~half the corpus at data-prep time, which
-    // is exactly this query). Pure per-row expression work over the
-    // token array — NO shuffle, codegen'd, trivially 100 TB. The two
-    // cut points must be deterministic AND identical cross-engine, so
-    // they are integer arithmetic on doc_id modulo n+1 (no RNG, no
-    // hash-library dependence); the FIM half is doc_id parity. Docs
-    // ship in PSM order (<fim_prefix> pre <fim_suffix> suf
-    // <fim_middle> mid) with the span token counts a loss-masking
-    // step needs. Null/short docs pass through as mode plain.
-    "t99_fim_transform" -> ((s, dir) => {
-      val toks = split(lower(coalesce(col("text"), lit(""))), "\\s+")
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), toks.as("toks"))
-        .withColumn("n", size(col("toks")).cast("long"))
-        .withColumn("fim",
-          (pmod(col("doc_id"), lit(2)) === 0 && col("n") >= 2)
-            .cast("long"))
-        .withColumn("c1", pmod(col("doc_id") * lit(31L) + lit(7L),
-          col("n") + lit(1L)))
-        .withColumn("c2", pmod(col("doc_id") * lit(17L) + lit(3L),
-          col("n") + lit(1L)))
-        .withColumn("lo", least(col("c1"), col("c2")))
-        .withColumn("hi", greatest(col("c1"), col("c2")))
-      d.select(col("doc_id"), col("fim"),
-        when(col("fim") === 1, col("lo")).otherwise(col("n"))
-          .as("n_pre"),
-        when(col("fim") === 1, col("hi") - col("lo")).otherwise(lit(0L))
-          .as("n_mid"),
-        when(col("fim") === 1, col("n") - col("hi")).otherwise(lit(0L))
-          .as("n_suf"),
-        when(col("fim") === 1, concat(
-          lit("<fim_prefix>"),
-          array_join(slice(col("toks"), lit(1), col("lo").cast("int")), " "),
-          lit("<fim_suffix>"),
-          array_join(slice(col("toks"), col("hi").cast("int") + 1,
-            (col("n") - col("hi")).cast("int")), " "),
-          lit("<fim_middle>"),
-          array_join(slice(col("toks"), col("lo").cast("int") + 1,
-            (col("hi") - col("lo")).cast("int")), " ")))
-          .otherwise(array_join(col("toks"), " ")).as("packed"))
-    }),
-
-    // Negative-sampling table (word2vec/NCE, Mikolov et al. 2013:
-    // draw negatives ∝ count^0.75). The artifact is the broadcastable
-    // sampler: per token its damped weight and HALF-OPEN cumulative
-    // range [cum_lo, cum_hi) in milliweight units — a sampler binary-
-    // searches a uniform draw into the ranges. One corpus shuffle
-    // (unigram counts, map-side partial agg); the vocab-cardinality
-    // cumsum runs through `Windows.twoLevelPrefixSum` bucketed by the
-    // token's first code point (monotone in the binary string order —
-    // UTF-8 preserves code-point order; widen to a 2-char prefix if
-    // one initial dominates the vocab), so no single-reducer window.
-    // count^0.75 is computed as sqrt(sqrt(c³)): sqrt is IEEE-
-    // correctly-rounded in both engines where pow() is not, and c³ is
-    // exact in doubles up to c ~ 2×10⁵ — the twin is bit-identical by
-    // construction, not by libm luck. Report: top-100 tokens by count
-    // (TakeOrdered), ranges kept from the FULL vocab scan.
-    "t100_neg_sampling" -> ((s, dir) => {
-      val ugc = T(s, dir, "documents")
-        .select(explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("term").agg(count(lit(1)).as("c"))
-        .withColumn("w_milli", round(
-          sqrt(sqrt((col("c") * col("c") * col("c")).cast("double")))
-            * lit(1000.0)).cast("long"))
-      val ranged = Windows.twoLevelPrefixSum(ugc, Seq.empty,
-        ascii(substring(col("term"), 1, 1)).cast("long"),
-        Seq(col("term")), col("w_milli"), "cum_lo")
-        .withColumn("cum_hi", col("cum_lo") + col("w_milli"))
-      ranged.orderBy(col("c").desc, col("term")).limit(100)
-        .select("term", "c", "w_milli", "cum_lo", "cum_hi")
-    }),
-
-    // Held-out perplexity filter (the CCNet/Wikipedia-LM gate, Wenzek
-    // et al. 2020 — score documents with a smoothed LM trained on a
-    // reference split, drop the worst): train the t97 interpolated-KN
-    // trigram model on the EVEN doc_ids, score the ODD ones with the
-    // full backoff chain — seen trigram → KN p3; unseen trigram in a
-    // seen context → the context's reserved mass times p2; unseen
-    // context → p2; unseen (w2 ·) → OOV-floored continuation
-    // probability (n1w3 + 0.5)/(nbt + 0.5). Per-trigram log-probs
-    // round to integer MICRO units before the per-doc sum (BIGINT
-    // addition is order-free; summing raw doubles would hash-differ
-    // cross-engine), and the keep gate compares integers —
-    // sum_lp ≥ −8·10⁶·n_tg, i.e. avg logprob ≥ −8 — so no division
-    // semantics (Spark div truncates, DuckDB // floors — they differ
-    // on NEGATIVES) can leak in. Scale shape: the held-out trigram
-    // stream pays exactly TWO keyed shuffle joins — (1) ctx12 against
-    // the context table, which carries c12/n1ctx AND a per-context
-    // continuation map w3→c3 (folding what was a separate trigram-
-    // keyed join; map size = the context's trigram-type count, the
-    // n1ctx it already stores — Zipf-bounded per context, far smaller
-    // than a per-unigram map would be), and (2) w23 against the
-    // bigram-type table. The three UNIGRAM-scale stats (midCtx, uni)
-    // and the 1-row total broadcast: vocab ~10⁶-10⁷ rows of two
-    // numerics at 100 TB — low-GB broadcast territory; if a corpus
-    // ever pushed past that, these two joins degrade gracefully to
-    // keyed shuffles by dropping the hint. Docs with no trigram
-    // (< 3 tokens) have no perplexity and are not scored.
-    "t104_kn_doc_ppl" -> ((s, dir) => {
-      val D = 0.75
-      val docs = T(s, dir, "documents")
-      def tgs(df: DataFrame): DataFrame = df.select(col("doc_id"),
-        explode(graft.functions.SketchExpressions
-          .wordShingles(TextOps.tokensLower(col("text")), 3)).as("tg"))
-      // abs % 2, not pmod: DuckDB's % keeps the sign (−1 % 2 = −1),
-      // so a negative odd doc_id would land in NEITHER split there
-      // while pmod scores it — abs() on both sides makes the twins
-      // agree for any doc_id, not just the testdata's non-negatives
-      val c3 = tgs(docs.where(abs(col("doc_id")) % 2 === 0))
-        .groupBy("tg").agg(count(lit(1)).as("c3"))
-      val keyed = c3
-        .withColumn("ctx12", substring_index(col("tg"), " ", 2))
-        .withColumn("w23", substring_index(col("tg"), " ", -2))
-      val ctx = keyed.groupBy("ctx12")
-        .agg(sum("c3").as("c12"), count(lit(1)).as("n1ctx"),
-          map_from_entries(collect_list(struct(
-            substring_index(col("tg"), " ", -1).as("k"),
-            col("c3").as("v")))).as("__cmap"))
-      val mid = keyed.groupBy("w23").agg(count(lit(1)).as("cc23"))
-      val midK = mid
-        .withColumn("w2", substring_index(col("w23"), " ", 1))
-        .withColumn("w3u", substring_index(col("w23"), " ", -1))
-      val midCtx = midK.groupBy("w2")
-        .agg(sum("cc23").as("ccdot2"), count(lit(1)).as("n2w2"))
-      val uni = midK.groupBy(col("w3u").as("w3"))
-        .agg(count(lit(1)).as("n1w3"))
-      val tot = mid.agg(count(lit(1)).cast("double").as("nbt"))
-      tgs(docs.where(abs(col("doc_id")) % 2 === 1))
-        .withColumn("ctx12", substring_index(col("tg"), " ", 2))
-        .withColumn("w23", substring_index(col("tg"), " ", -2))
-        .withColumn("w3", substring_index(col("tg"), " ", -1))
-        .join(ctx, Seq("ctx12"), "left")
-        // c3 off the context's continuation map: null when the ctx is
-        // unseen (cmap null) or the trigram is (key miss) — exactly
-        // the old tg-keyed left join's nullness
-        .withColumn("c3", element_at(col("__cmap"), col("w3")))
-        .drop("__cmap")
-        .join(mid, Seq("w23"), "left")
-        .join(broadcast(midCtx.withColumnRenamed("w2", "__w2")),
-          col("__w2") === substring_index(col("w23"), " ", 1), "left")
-        .join(broadcast(uni), Seq("w3"), "left")
-        .crossJoin(broadcast(tot))
-        .withColumn("pc", (coalesce(col("n1w3"), lit(0L)) + lit(0.5))
-          / (col("nbt") + lit(0.5)))
-        .withColumn("p2", when(col("ccdot2").isNotNull,
-          (greatest(coalesce(col("cc23"), lit(0L)) - lit(D), lit(0.0))
-            + lit(D) * col("n2w2") * col("pc")) / col("ccdot2"))
-          .otherwise(col("pc")))
-        .withColumn("p3", when(col("c12").isNotNull,
-          (greatest(coalesce(col("c3"), lit(0L)) - lit(D), lit(0.0))
-            + lit(D) * col("n1ctx") * col("p2")) / col("c12"))
-          .otherwise(col("p2")))
-        .withColumn("lp_micro",
-          round(log(col("p3")) * lit(1000000.0)).cast("long"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tg"), sum("lp_micro").as("sum_lp_micro"))
-        .withColumn("keep",
-          (col("sum_lp_micro") >= lit(-8000000L) * col("n_tg"))
-            .cast("long"))
-    }),
-
-    // Per-source dataset card (the release artifact a corpus ships
-    // with — Datasheets for Datasets, Gebru et al. 2021): one row per
-    // source carrying the signals every curation decision reads —
-    // volume (docs, BPE tokens, chars), exact-dup rate on the t54
-    // canonical hash, dominant language, mean quality. Every mean
-    // ships as an integer ratio (sum div count on non-negative
-    // BIGINTs — exact in both engines, no double summation); the
-    // dominant language is a (source, lang) agg + top-1 window joined
-    // back as a broadcast (source cardinality). ONE corpus scan feeds
-    // both aggs; countDistinct plans the standard two-phase exact
-    // distinct — at 100 TB the same card computes with the hash
-    // distinct partially aggregated map-side.
-    "t105_data_card" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("source"), col("lang"), col("n_chars"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"),
-          TextOps.bpeTokenCount(col("text")).cast("long").as("tok"),
-          md5(graft.functions.SketchExpressions
-            .canonicalizeText(col("text"))).as("h"))
-        .withColumn("qm",
-          round(TextOps.qualityScoreFrom(col("__st")) * lit(1000000.0))
-            .cast("long"))
-      val agg = d.groupBy("source").agg(
-        count(lit(1)).as("n_docs"),
-        sum("tok").as("n_tok"),
-        countDistinct(col("h")).as("n_uniq"),
-        sum("qm").as("sum_qm"),
-        sum("n_chars").as("sum_chars"))
-      // asc_nulls_last: DuckDB's ASC default is NULLS LAST where
-      // Spark's is NULLS FIRST — a NULL lang tied with a named one
-      // must pick the same top_lang in both engines
-      val langTop = d.groupBy("source", "lang")
-        .agg(count(lit(1)).as("lc"))
-        .withColumn("rn", row_number().over(Window.partitionBy("source")
-          .orderBy(col("lc").desc, col("lang").asc_nulls_last)))
-        .where(col("rn") === 1)
-        .select(col("source"), col("lang").as("top_lang"))
-      agg.join(broadcast(langTop), Seq("source"))
-        .select(col("source"), col("n_docs"), col("n_tok"),
-          expr("(n_docs - n_uniq) * 1000000 div n_docs").as("dup_ppm"),
-          col("top_lang"),
-          expr("sum_qm div n_docs").as("mean_q_micro"),
-          expr("(sum_chars * 100) div n_docs").as("mean_chars_x100"))
-    }),
-
-    // Dedup-scope audit (the FineWeb finding, Penedo et al. 2024:
-    // deduplicating each crawl snapshot individually can beat one
-    // global pass — the audit that decides the scope is this table).
-    // Per snapshot: docs a within-snapshot exact dedup keeps vs a
-    // global (all-snapshots) dedup, split into within-snapshot
-    // copies and cross-snapshot copies of EARLIER snapshots.
-    // Snapshot = doc_id % 3 (the testdata carries no crawl date;
-    // deterministic stand-in, documented). Both keep flags fall out
-    // of one window family PARTITIONED BY the canonical hash — the
-    // corpus shuffles once on h, never through a global window — and
-    // the report is one snapshot-cardinality agg. Keep order is
-    // (snapshot, doc_id): the earliest crawl owns the document, so
-    // kept_global ≤ kept_scoped per snapshot by construction.
-    "t98_dedup_scope" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"), (col("doc_id") % 3).as("snap"),
-          md5(graft.functions.SketchExpressions
-            .canonicalizeText(col("text"))).as("h"))
-      val wG = Window.partitionBy("h").orderBy(col("snap"), col("doc_id"))
-      val wS = Window.partitionBy("h", "snap").orderBy(col("doc_id"))
-      d.withColumn("keep_g", (row_number().over(wG) === 1).cast("long"))
-        .withColumn("keep_s", (row_number().over(wS) === 1).cast("long"))
-        .groupBy("snap")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("keep_s").as("kept_scoped"),
-          sum("keep_g").as("kept_global"),
-          (sum("keep_s") - sum("keep_g")).as("cross_dups"),
-          (count(lit(1)) - sum("keep_s")).as("within_dups"))
-        .withColumn("scoped_keep_ppm",
-          expr("kept_scoped * 1000000L div n_docs"))
-        .withColumn("global_keep_ppm",
-          expr("kept_global * 1000000L div n_docs"))
-    }),
-
-    // SFT chat-template assembly + loss-mask spans (the instruction-
-    // tuning data-prep step: render multi-turn conversations into one
-    // training string and record WHICH token spans the loss applies
-    // to — assistant turns train, user turns are context-only). The
-    // testdata carries no conversations, so they are synthesized
-    // deterministically: within each source, docs in doc_id order
-    // become turns, 4 turns per conversation, roles alternating
-    // user/assistant. Token positions are a per-conversation prefix
-    // sum (conversations are bounded, so the window partitions by
-    // (source, conv) — never globally); each role tag costs 1 token.
-    // Span/render aggregation goes through sort_array(collect_list(
-    // struct(turn, …))) so shuffle nondeterminism cannot reorder the
-    // rendered string. Turn numbers come from `Windows.twoLevelRank`
-    // (bucket = doc_id block), NOT a per-source row_number window: a
-    // pretraining corpus has O(10) sources with one routinely 80% of
-    // the data, and a single-level Window.partitionBy(source) would
-    // serialize that source's entire document set through ONE task's
-    // sort — the t95/t96 trap. Corpus shuffles stay keyed on
-    // (source × block) and (source, conv); both high-cardinality.
-    // Empty span lists render as '' (Spark array_join convention;
-    // the twin COALESCEs DuckDB's NULL string_agg to match).
-    "t101_chat_template" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("text"), lit("")).as("text"))
-      val turns = Windows.twoLevelRank(docs, Seq("source"),
-          expr("doc_id DIV 64"), Seq(col("doc_id")), "rn",
-          broadcastBuckets = false) // doc-block buckets grow with the corpus
-        .withColumn("conv", expr("(rn - 1) div 4"))
-        .withColumn("turn", (col("rn") - lit(1L)) % 4 + 1)
-        .withColumn("role",
-          when(col("turn") % 2 === 1, lit("user"))
-            .otherwise(lit("assistant")))
-        .withColumn("n_tok",
-          size(TextOps.tokensLower(col("text"))).cast("long") + lit(1L))
-      val wConv = Window.partitionBy("source", "conv").orderBy("turn")
-      val sp = turns
-        .withColumn("end", sum("n_tok").over(wConv))
-        .withColumn("piece",
-          concat(lit("<|"), col("role"), lit("|>"), col("text")))
-        .withColumn("span", concat_ws(":",
-          (col("end") - col("n_tok")).cast("string"),
-          col("end").cast("string")))
-      sp.groupBy("source", "conv")
-        .agg(count(lit(1)).as("n_turns"),
-          sum("n_tok").as("n_tokens"),
-          sum(when(col("role") === "assistant", col("n_tok"))
-            .otherwise(0L)).as("n_loss_tokens"),
-          array_join(transform(
-            array_sort(collect_list(when(col("role") === "assistant",
-              struct(col("turn"), col("span"))))),
-            x => x.getField("span")), ";").as("loss_spans"),
-          array_join(transform(
-            array_sort(collect_list(struct(col("turn"), col("piece")))),
-            x => x.getField("piece")), "").as("rendered"))
-    }),
-
-    // Deterministic per-step batch composition — the step-level
-    // realisation of the t26/t70 mixture weights: WHICH source feeds
-    // each optimizer step. Largest-remainder / Bresenham
-    // apportionment in pure integer arithmetic: source i contributes
-    // floor((s+1)·tok_i·B/T) − floor(s·tok_i·B/T) samples at step s,
-    // so every schedule prefix is within one sample of its exact
-    // quota — no RNG, no drift, cross-engine exact by construction.
-    // One corpus pass (per-source token counts, map-side partial
-    // agg); the schedule itself is steps × sources — driver-bounded
-    // cardinality built from two broadcast sides, never a shuffle.
-    "t102_batch_schedule" -> ((s, dir) => {
-      val tok = T(s, dir, "documents")
-        .select(col("source"),
-          size(TextOps.tokensLower(coalesce(col("text"), lit(""))))
-            .cast("long").as("nt"))
-        .groupBy("source").agg(sum("nt").as("tok"))
-      // t_all via a global window over the SOURCE-CARDINALITY agg
-      // table (bounded, like the bucket tables elsewhere) — a
-      // separate .agg would re-derive the corpus scan twice
-      val wAll = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      val withTot = tok.withColumn("t_all",
-        greatest(sum("tok").over(wAll), lit(1L)))
-      val steps = s.range(0, 100).select(col("id").as("step"))
-      withTot.crossJoin(broadcast(steps))
-        .withColumn("cum_slots",
-          expr("((step + 1) * tok * 8) div t_all"))
-        .withColumn("slots",
-          col("cum_slots") - expr("(step * tok * 8) div t_all"))
-        .where(col("slots") > 0)
-        .select("step", "source", "slots", "cum_slots")
-    }),
-
-    // Preference-pair mining for DPO/RLHF reward data: within each
-    // source, rank docs by the t7 quality score and pair the top half
-    // (chosen) against the bottom half (rejected), aligned at rank
-    // offset ⌈n/2⌉ — pair r is (rank r, rank r+⌈n/2⌉), so margins are
-    // non-negative by construction and the middle element of an odd
-    // group sits out. Margins ship in exact micro-units (the score is
-    // 6-dp-rounded, so round(q·10⁶) is integer-exact cross-engine and
-    // ORDER BY qm ≡ ORDER BY q); `strong` flags pairs clearing 0.05.
-    // Shapes: one text scan; per-source ranks via
-    // `Windows.twoLevelRank` (bucket = −qm block, monotone in the
-    // qm-desc order — a single-level per-source rank window would
-    // sort a dominant source through ONE task at 100 TB); per-source
-    // counts as a source-cardinality agg broadcast back; one
-    // (source, rank)-keyed equi self-join. Nothing global; skew
-    // bounded by the qm-bucket size, not the source size.
-    "t103_dpo_pairs" -> ((s, dir) => {
-      // cut the NARROW score projection (r19 t78 rule: no shared
-      // exchange at its top — it is a map-side scan — and 3+ consumers
-      // via twoLevelRank's internals + counts; uncut, the r20 plans
-      // carried 28 in-filter copies of the textStats kernel)
-      val scored = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"))
-        .withColumn("q", TextOps.qualityScoreFrom(col("__st")))
-        .withColumn("qm", round(col("q") * lit(1000000.0)).cast("long"))
-        .select("doc_id", "source", "qm")
-        .localCheckpoint(false)
-      val counts = scored.groupBy("source").agg(count(lit(1)).as("n"))
-      // coalesce(−1) in bucket AND order: a NULL qm would silently
-      // drop out of twoLevelRank's bucket join; −1 sits below every
-      // real micro-score, reproducing qm-desc NULLS LAST exactly
-      val ranked = Windows.twoLevelRank(scored, Seq("source"),
-          expr("-(coalesce(qm, -1L) DIV 1000)"), // ascending in qm desc
-          Seq(coalesce(col("qm"), lit(-1L)).desc, col("doc_id")), "r")
-        .join(broadcast(counts), Seq("source"))
-        .select("doc_id", "source", "qm", "r", "n")
-      val chosen = ranked.where(col("r") <= expr("n div 2"))
-        .select(col("source"), col("r").as("pair_id"),
-          col("doc_id").as("chosen_doc"), col("qm").as("chosen_qm"),
-          (col("r") + expr("n - (n div 2)")).as("rj"))
-      val rejected = ranked
-        .select(col("source"), col("r").as("rj"),
-          col("doc_id").as("rejected_doc"), col("qm").as("rejected_qm"))
-      chosen.join(rejected, Seq("source", "rj"))
-        .withColumn("margin_micro", col("chosen_qm") - col("rejected_qm"))
-        .withColumn("strong",
-          (col("margin_micro") >= 50000L).cast("long"))
-        .select("source", "pair_id", "chosen_doc", "rejected_doc",
-          "chosen_qm", "rejected_qm", "margin_micro", "strong")
-    }),
-
-    // Brute-force exact cosine top-5 for 10 query vectors (ANN baseline):
-    // corpus never shuffles; queries broadcast.
-    "t4_knn_cosine" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Vectors.bruteForceTopK(q, e, "qid", "vec_id", "embedding", k = 5)
-    }),
-
-    // Hard-negative mining for contrastive embedding training (the
-    // DPR/E5 curation step): for each probe, the top-k most-similar
-    // vectors with a DIFFERENT label — "close but wrong" examples, the
-    // ones a contrastive loss learns most from. Same shape as t4: the
-    // bounded probe set broadcasts against one linear corpus pass
-    // (BroadcastNestedLoopJoin — the label filter is non-equi), per-
-    // probe top-k via a probe-partitioned window. At corpus scale the
-    // IVF route (t9) replaces the linear pass; the label-mismatch
-    // filter composes unchanged.
-    "t84_hard_negatives" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("embedding").as("__qv"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("__cos").desc, col("vec_id"))
-      e.crossJoin(broadcast(q))
-        .where(col("label") =!= col("qlabel"))
-        .withColumn("__cos", Vectors.cosine(col("__qv"), col("embedding")))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 5)
-        .select(col("qid"), col("qlabel").cast("long").as("qlabel"),
-          col("vec_id"), col("label").cast("long").as("label"),
-          round(col("__cos"), 6).as("cos"), col("rn"))
-    }),
-
-    // SRP-LSH bucket histogram: 8 pseudo-random ±1 hyperplanes (md5-
-    // derived), bucket assigned map-side — the scale path for ANN.
-    "t5_srp_buckets" -> ((s, dir) =>
-      T(s, dir, "embeddings")
-        .groupBy(Vectors.srpBucket(col("embedding"), 64, 8).as("bucket"))
-        .agg(count(lit(1)).as("n"))),
-
-    // Embedding-cosine near-dedup: the corpus is augmented with planted
-    // perturbed copies (+0.05 on dim 1 → cosine ≈ 0.9998), then
-    // SRP-LSH buckets generate candidate pairs in-bucket and a cosine
-    // ≥ 0.99 join verifies — the vector twin of the t2 text pipeline.
-    // The synthetic corpus has no natural near-dups (max cosine 0.51),
-    // so the expected answer is exactly the planted pairs that share an
-    // SRP bucket (the oracle replays the same bucketing).
-    "t10_embed_neardup" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      val dup = e.select((col("vec_id") + 100000).as("vec_id"),
-        concat(array(element_at(col("v"), 1) + 0.05),
-          slice(col("v"), 2, 63)).as("v"))
-      val corpus = e.unionByName(dup)
-      // Planes SCALE with the corpus (r14, found by the full-suite
-      // 100× run): fixed 8 planes = 256 buckets means occupancy grows
-      // linearly with the corpus and in-bucket all-pairs QUADRATICALLY
-      // — 414M candidate pairs at 100×. Target ~64 ids/bucket:
-      // planes = max(8, ceil_log2(corpus/64)), integer-exact on both
-      // engines (ceil_log2(m) = length(bin(m−1)); the oracle uses the
-      // same formula — no float log at an integer boundary). Floor 8
-      // keeps every gate-SF corpus on the historical bucketing.
-      // Recall stays governed: the planted twins at cos 0.9998
-      // disagree per plane with prob θ/π ≈ 0.006, so even 13 planes
-      // keep P(same bucket) ≈ 0.92 — and the oracle replays the SAME
-      // bucketing, so correctness gates at any plane count.
-      // footer-stat count (no scan job; memoized per snapshot) — the
-      // corpus is e ∪ its planted-twin copy, hence 2×
-      val nCorpus = 2L * tableRowCount(s, dir, "embeddings")
-      val basePlanes = math.max(8,
-        64 - java.lang.Long.numberOfLeadingZeros(
-          math.max((nCorpus + 63) / 64, 2L) - 1)).toInt
-      // ADAPTIVE banding (r18 verdict #6, redesigned after the r19
-      // 1000× probe): occupancy-targeted planes assume uniform
-      // hashing, but a DENSE near-dup corpus (100× perturbed:
-      // replicas at cos ≈ 0.93 co-bucket with prob ~0.19 at 13
-      // planes) concentrates buckets and the in-bucket pair mass —
-      // the verify join's real cost — explodes past the occupancy
-      // model. The first r19 cut probed mass ONCE at the base plane
-      // count and added ceil_log2(mass/budget) planes, assuming each
-      // plane HALVES the mass — true for random collisions, false
-      // for near-dup mass, which shrinks only ×0.88/plane at
-      // cos 0.93. At 1000× (4M-row corpus) that under-correction
-      // left ~274M realized pairs and the verify join's shuffle
-      // spill filled the disk (SPILL_OUT_OF_MEMORY / no space —
-      // caught by the standing 1000× probe, NOT by the 100× suite,
-      // where the model's error was only 1.3×). So: MEASURE, don't
-      // model. Plane p's hyperplane depends only on p, so a bucket
-      // at q planes is a strict prefix of the bucket at q' > q —
-      // one histogram at base+20 planes rolls up to the EXACT pair
-      // mass at every even step in [base, base+20] (ids only, no
-      // vectors, no pairs; the rollup shuffles 11 small keyed
-      // copies of the histogram, not the corpus). Pick the smallest
-      // plane count whose MEASURED mass fits the 8·n budget; the
-      // +20 cap bounds the planted-pair cost (per-plane agree
-      // ≈ 0.9858 at cos 0.9998, ~1.4%/plane) and a corpus still
-      // over budget there proceeds at the cap with its measured
-      // mass on record. Gate SFs sit at ≤ 8 pairs/row (sf0.01 ≈ 2,
-      // sf0.1 ≈ 7.8) so the sweep picks step 0 — the historical
-      // bucketing, bit-identical by the prefix property; the oracle
-      // replays the SAME histogram + rollup + selection. Memoized
-      // per corpus SNAPSHOT (tableRowCount's key discipline): the
-      // sweep is a pure function of the corpus bytes, so repeated
-      // plan constructions (bench pass 2, re-runs in one JVM) skip
-      // the scan.
-      val planes = srpPlanesMemo(s, dir, "embeddings", basePlanes.toString)(
-        srpPlaneSweep(corpus, "v", basePlanes, nCorpus))
-      val pairs = Dedup.srpCandidatePairs(corpus, "vec_id", "v",
-        dims = 64, planes = planes)
-      val va = corpus.select(col("vec_id").as("id_a"), col("v").as("__va"))
-      val vb = corpus.select(col("vec_id").as("id_b"), col("v").as("__vb"))
-      pairs.join(va, "id_a").join(vb, "id_b")
-        .withColumn("__cos", Vectors.cosine(col("__va"), col("__vb")))
-        .where(col("__cos") >= 0.99)
-        .select(col("id_a"), col("id_b"),
-          round(col("__cos"), 6).as("cos"))
-    }),
-
-    // Margin-based bitext mining (Artetxe & Schwenk 2019,
-    // arXiv:1811.01136 — the multilingual-corpus curation step that
-    // pairs translation candidates across languages): for each
-    // "source-language" vector (even vec_id) find the best
-    // "target-language" (odd vec_id) match by the RATIO margin —
-    // cos(x,y) normalized by the mean cosine of each side's k-NN
-    // neighborhood — which suppresses hub vectors that look close to
-    // everything. Candidates come from shared IVF cells with
-    // multi-probe on the x side (the oracle replays the same cell
-    // assignment; see bitextIvfCandidates for why SRP was rejected at
-    // this operating point), neighborhoods are computed over the SAME
-    // candidate sets, and the margin is INTEGER-exact end to end: cos
-    // quantized to micro units before any summation (order-free
-    // sums), then
-    //   margin_ppm = cos·2·kx·ky·10⁶ DIV (Σx·ky + Σy·kx)
-    // (the ratio with both k-NN means over common denominator
-    // 2·kx·ky). Keep the top-1 target per source with margin > 1.0.
-    //
-    // Scale shape: the cell count grows with the corpus
-    // (k = max(16, n/256), t62's discipline) so cell occupancy — and
-    // with it the candidate join and both per-key windows — stays
-    // ~256·2 rows per key at any corpus size; the windows key on
-    // x_id/y_id (high-cardinality, skew-free). One candidate table is
-    // checkpointed and feeds both k-NN aggs and the margin join.
-    "t137_bitext_margin" -> ((s, dir) =>
-      bitextTop1(bitextIvfCandidates(s, dir)
-        .select("x_id", "y_id", "cos_micro"), k = 4)),
-
-    // Miner duplicate-saturation pre-flight (r17 verdict #4, carried
-    // r16 #5): on a replica-saturated corpus the ratio-margin miner
-    // mines 0 pairs WITH NO SIGNAL — margin_ppm pins to exactly
-    // 1000000, never above t137's strict > threshold. TWO distinct
-    // mechanisms produce that pin, and the diagnostic measures both
-    // from the SAME candidate table the miner consumes:
-    //  - NEAR-DUP BAND (sat_*): x's top-1 candidate is itself a
-    //    near-identical replica (cm ≥ 0.99) — the shape when replicas
-    //    cross sides;
-    //  - NEIGHBORHOOD DEGENERACY (deg_*): x's top-4 candidates all
-    //    share ONE cosine — 4 copies of the same partner, so top-1
-    //    equals the neighborhood mean at ANY similarity level. This
-    //    is the DataGen-replica shape (vec_id shifts preserve parity,
-    //    so copies never cross sides: measured on the exact-replica
-    //    10× corpus the miner mines 0 pairs while every top-1 cm is
-    //    an unremarkable 0.33 — the band signal alone misses it).
-    // `saturated` fires when either fraction crosses half the x side
-    // — the operator a pipeline runs BEFORE paying the margin pass
-    // (MinerPreflightSpec pins all three corpus shapes). Integer
-    // micros end to end; one row.
-    //
-    // SAMPLED (r18 verdict #1): both signals are population FRACTIONS
-    // over x, estimable from a bounded slice — the full-table shape
-    // cost ~65% of the miner it guards at 1000× (314 s vs 485 s),
-    // which defeats a pre-flight. The slice is ~2048 x's chosen by a
-    // Knuth multiplicative hash of x_id (stride = n_x DIV 2048),
-    // pushed BEFORE the cell assignment via `xFilter`, so the gate
-    // pays O(sample · cell occupancy) at any corpus size. Hash, not
-    // an id prefix/stride: replica corpora (the exact shape this gate
-    // exists to catch) place copies at fixed id SHIFTS, so an
-    // arithmetic slice could correlate with the replica structure and
-    // systematically miss the saturated rows — the 2^20 pre-mask
-    // keeps the multiply overflow-free at any id, and the hash
-    // decorrelates sampledness from shift arithmetic. At the gate SFs
-    // the stride is 1 (sample ≡ every x), so small corpora are
-    // measured exactly; MinerPreflightSpec pins a 10k-vector corpus
-    // where the stride is ≥2 and the sampled estimate must still
-    // fire. `saturated` is coalesced to false on an empty candidate
-    // table (r18 advice: the integer DIVs ride a null through the OR
-    // otherwise, and getAs[Boolean] reads a silent false while the
-    // emitted column stays null).
-    "t147_miner_preflight" -> ((s, dir) => {
-      val n = tableRowCount(s, dir, "embeddings")
-      val stride = math.max(1L, (n / 2L) / 2048L)
-      // Knuth multiplicative hash, HIGH half of the 32-bit product:
-      // the low bits of vec_id·odd are a bijection of vec_id's own
-      // low bits (an odd multiplier can't mix upward), and the x side
-      // is all-even — a low-bits mod would degenerate back into an
-      // id-arithmetic stride. Bits 16..31 depend on every masked bit.
-      val sampled = expr(
-        "((((vec_id % 1048576) * 2654435761) % 4294967296) DIV 65536)" +
-          s" % $stride = 0")
-      val w = Window.partitionBy("x_id")
-        .orderBy(col("cos_micro").desc, col("y_id"))
-      val perX = bitextIvfCandidates(s, dir, xFilter = sampled)
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") <= 4)
-        .groupBy(col("x_id"))
-        .agg(max(col("cos_micro")).as("__top1"),
-          min(col("cos_micro")).as("__mn4"),
-          count(lit(1)).as("__cnt4"))
-      perX
-        .agg(count(lit(1)).as("n_x"),
-          sum(col("__top1")).as("__sum_cm"),
-          sum(when(col("__top1") >= 990000L, 1L).otherwise(0L))
-            .as("sat_x"),
-          sum(when(col("__cnt4") >= 2 && col("__mn4") === col("__top1"),
-            1L).otherwise(0L)).as("deg_x"))
-        .withColumn("mean_top1_cm",
-          expr("__sum_cm DIV nullif(n_x, 0)"))
-        .withColumn("sat_ppm",
-          expr("sat_x * 1000000 DIV nullif(n_x, 0)"))
-        .withColumn("deg_ppm",
-          expr("deg_x * 1000000 DIV nullif(n_x, 0)"))
-        .withColumn("saturated",
-          coalesce(col("sat_ppm") >= 500000L ||
-            col("deg_ppm") >= 500000L, lit(false)))
-        .select("n_x", "mean_top1_cm", "sat_x", "sat_ppm", "deg_x",
-          "deg_ppm", "saturated")
-    }),
-
-    // Recall harness for t137's IVF miner (the t60/t92 discipline:
-    // every approximate scale path ships with its measured recall —
-    // here as a CURVE over nProbe, the IVF recall/cost knob).
-    // Exact side: the SAME margin pipeline over ALL cross-side pairs
-    // of a bounded PROBE slice (x_id < 400 — at 100 TB the exact
-    // side always runs on a probe sample, never the corpus); approx
-    // sides: the cell candidates on the same slice at nProbe 1 and
-    // 2. recall_ppm = mined-pair overlap / exact mined set, integer.
-    "t137b_bitext_recall" -> ((s, dir) => {
-      val probeCap = 400L // even x_ids below this = ~200 probes
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      val px = e.where(pmod(col("vec_id"), lit(2)) === 0 &&
-          col("vec_id") < probeCap)
-        .select(col("vec_id").as("x_id"), col("v").as("xv"))
-      val y = e.where(pmod(col("vec_id"), lit(2)) === 1)
-        .select(col("vec_id").as("y_id"), col("v").as("yv"))
-      val exactCand = px.crossJoin(y)
-        .withColumn("cos_micro",
-          round(Vectors.cosine(col("xv"), col("yv")) * lit(1000000.0))
-            .cast("long"))
-        .where(col("cos_micro") > 0)
-        .select("x_id", "y_id", "cos_micro")
-        .localCheckpoint(false)
-      // mined sets are probe-bounded (≤ ~200 rows) — checkpoint so
-      // the semi-joins and counts read them without re-running the
-      // margin pipeline
-      val exact = bitextTop1(exactCand, k = 4)
-        .select(col("x_id"), col("y_id"))
-        .localCheckpoint(false)
-      // below the floor ONE top-4 assignment pass serves all three
-      // curves (rank-≤r slice); above it each r probes for real —
-      // see bitextCandSweep
-      val n = tableRowCount(s, dir, "embeddings")
-      val k = math.max(16L, n / 256L)
-      val cents = stagedBitextCents(s, dir, "organic", e, k)
-      val candFor = bitextCandSweep(e, cents, k, Seq(1, 2, 4),
-        xFilter = col("vec_id") < probeCap)
-      Seq(1, 2, 4).map { r =>
-        val approx = bitextTop1(
-          candFor(r).select("x_id", "y_id", "cos_micro"), k = 4)
-          .select(col("x_id"), col("y_id"))
-          .localCheckpoint(false)
-        exact.join(approx, Seq("x_id", "y_id"), "left_semi")
-          .agg(count(lit(1)).as("__hit"))
-          .crossJoin(broadcast(
-            exact.agg(count(lit(1)).as("n_exact"))))
-          .crossJoin(broadcast(
-            approx.agg(count(lit(1)).as("n_approx"))))
-          .select(lit(r.toLong).as("nprobe"),
-            col("n_exact"), col("n_approx"),
-            expr("__hit * 1000000 DIV greatest(n_exact, 1)")
-              .as("recall_ppm"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // PLANTED-pair recall for the bitext miner (r15 verdict: t137b's
-    // honest-but-weak curve was measured on a corpus with NO locality
-    // structure — best matches sit at cos ≈ 0.45, so 19/27/45 % at
-    // nProbe 1/2/4 says nothing about the miner's REAL operating
-    // point). Here every even vector gets a planted cross-side
-    // "translation" twin: v + 0.75·rotate(v, 1), which lands at
-    // cos ≈ 0.8 for near-iid embeddings (the Artetxe & Schwenk
-    // operating band) — far above the organic max ≈ 0.51, so the twin
-    // IS x's true best match and recall against the planted truth is
-    // the number a production miner is judged by. Same one-assignment
-    // rank-filter sweep as t137b (nProbe 1/2/4). The cell count uses
-    // the n/256 discipline on the PLANTED corpus size (3n/2, evens
-    // doubled): k = max(16, 3n/512) — at 100× (n = 200k → k = 1171)
-    // this crosses HierarchicalFloor, so the planted recall ALSO
-    // exercises the two-level quantizer at scale (gate SFs sit below
-    // the floor; the twin replays the flat assignment they use).
-    "t137c_bitext_planted" -> ((s, dir) => {
-      // Probe-SLICED recall (the t137b discipline, and the fix for
-      // the one 8 GiB/100× OOM the r16 full-suite probe found):
-      // recall is estimated over the x_id < 4000 probe slice — a
-      // 2,000-probe sample at 100× (±2 % at 95 %), EVERY source at
-      // the gate SFs (ids < 2,000 there, so gate hashes are
-      // unchanged). The unsliced form built a 68M-pair candidate
-      // table at 100× (667 s, then heap death at 8 GiB); at 100 TB
-      // nobody computes full-corpus recall — the miner runs ONE
-      // nProbe and recall is always sampled.
-      val probeCap = 4000L
-      val n = tableRowCount(s, dir, "embeddings")
-      val k = math.max(16L, (3L * n) / 512L)
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      val twins = e.where(pmod(col("vec_id"), lit(2)) === 0)
-        .select((col("vec_id") + lit(10000001L)).as("vec_id"),
-          transform(sequence(lit(1), lit(64)), i =>
-            element_at(col("v"), i) +
-              lit(0.75) * element_at(col("v"), pmod(i, lit(64)) + 1))
-            .as("v"))
-      val corpus = e.unionByName(twins)
-      // trained centroids staged per corpus snapshot ("planted" tag —
-      // the planted corpus is a deterministic function of the
-      // embeddings table, so its fingerprint covers this construction)
-      val cents = stagedBitextCents(s, dir, "planted", corpus, k)
-      val candFor = bitextCandSweep(corpus, cents, k, Seq(1, 2, 4),
-        xFilter = col("vec_id") < probeCap)
-      val truth = e.where(pmod(col("vec_id"), lit(2)) === 0 &&
-          col("vec_id") < probeCap)
-        .select(col("vec_id").as("x_id"),
-          (col("vec_id") + lit(10000001L)).as("y_id"))
-        .localCheckpoint(false) // 3 consumers per nProbe row
-      Seq(1, 2, 4).map { r =>
-        val mined = bitextTop1(
-          candFor(r).select("x_id", "y_id", "cos_micro"), k = 4)
-          .select(col("x_id"), col("y_id"))
-          .localCheckpoint(false)
-        truth.join(mined, Seq("x_id", "y_id"), "left_semi")
-          .agg(count(lit(1)).as("__hit"))
-          .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-          .crossJoin(broadcast(mined.agg(count(lit(1)).as("n_mined"))))
-          .select(lit(r.toLong).as("nprobe"),
-            col("n_truth"), col("n_mined"),
-            expr("__hit * 1000000 DIV greatest(n_truth, 1)")
-              .as("recall_ppm"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // Hierarchical (two-level) IVF coarse assignment — the 100 TB
-    // index structure (FAISS's two-level quantizer shape): route each
-    // vector to one of g = ⌈√k⌉ SUPER-cells, then argmin only that
-    // super's children. O(n·2√k) total work vs the flat scan's O(n·k),
-    // and the model is a g-row broadcast TABLE (each row O(√k·dims)),
-    // never one collect_list row (which ceilings at 2 GB near k ≈ 4M).
-    // k here is corpus-scaled AGGRESSIVELY (n/8, vs production's
-    // n/256) precisely so the two-level path is exercised and
-    // oracle-gated at every SF — the production call sites (t62,
-    // t137) dispatch to this same code above Vectors.HierarchicalFloor.
-    // The oracle replays the identical two-level argmin (supers = g
-    // smallest-cid centroids, ties → smallest id at both levels).
-    // Output: per super-cell (vecs routed, distinct child cells hit,
-    // integer-quantized total distortion) — distortion sums pin every
-    // assignment without a corpus-sized result.
-    "t138_hier_assign" -> ((s, dir) => {
-      val n = tableRowCount(s, dir, "embeddings")
-      val k = math.max(64L, n / 8L)
-      val g = graft.ops.Vectors.hierGroups(k)
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      // NOT checkpointed (r20 negative probe): cutting cent to erase
-      // the vec_id<k constraint (whose InferFiltersFromConstraints
-      // echo pushes one `argmin(...) < k` copy into a filter) measured
-      // 0.32 → 1.00 s — the materialization + lost parquet pruning
-      // cost more than the duplicated argmin, and the inferred filter
-      // survives anyway via the hier-index subtree's own constraints
-      val cent = e.where(col("vec_id") < k)
-        .select(col("vec_id").as("cid"), col("v"))
-      val asg = graft.ops.Vectors
-        .ivfAssignWithVecHier(e, cent, g, "vec_id", "cid", "v",
-          dims = 64)
-      asg.join(broadcast(cent.select(col("cid"), col("v").as("__cv"))),
-          Seq("cid"))
-        .select(col("scid"), col("cid"), col("vec_id"),
-          round(Vectors.sqDist(col("v"), col("__cv")) * lit(1000000.0))
-            .cast("long").as("__dist_micro"))
-        .groupBy("scid")
-        .agg(count(lit(1)).as("vecs"),
-          countDistinct(col("cid")).as("cells"),
-          sum(col("__dist_micro")).as("sum_dist_micro"))
-    }),
-
-    // Scalar quantization (SQ8, the FAISS IndexScalarQuantizer path):
-    // train per-DIMENSION min/max over the corpus, encode every
-    // coordinate to 8 bits — 8× smaller than float64 storage, the
-    // compression tier between raw vectors and PQ (t28's 2-code
-    // extreme). Everything is integer-exact cross-engine: coordinates
-    // micro-quantize first, codes are pure integer division, and the
-    // reconstruction is the bin midpoint in integer micros. Scale
-    // shape: the trainer is a posexplode → per-dim partial min/max (a
-    // 64-row shuffle regardless of corpus size), the encode is
-    // map-side against the one-row broadcast stats, and the corpus
-    // never shuffles. Output pins every code: positional weighting
-    // (Σ code·dim) catches swaps a plain sum would mask; err_sum is
-    // the quantizer's own distortion audit (Σ(v − recon)² in µ²).
-    "t140_sq8_encode" -> ((s, dir) =>
-      sq8Encoded(s, dir)
-        .select(col("vec_id"),
-          aggregate(col("codes"), lit(0L), (a, x) => a + x)
-            .as("code_sum"),
-          aggregate(sequence(lit(1), lit(64)), lit(0L), (a, i) =>
-            a + element_at(col("codes"), i) * i).as("poscode_sum"),
-          graft.functions.VectorExpressions
-            .sqDistLong(col("vu"), sq8ReconArrFromVu).as("err_sum"))),
-
-    // SQ8 asymmetric-distance search (the ADC query path over t140's
-    // codes): the query keeps its exact (micro-quantized) vector,
-    // each corpus vector is scored at its reconstruction — top-5 per
-    // probe by (distance, id), distances in integer µ² so the oracle
-    // replays them bit-exactly. The scan reads CODES, not vectors
-    // (the point of SQ8 at 100 TB); probes broadcast, the per-query
-    // top-k is the t4/t9 window-limit shape.
-    "t141_sq8_adc" -> ((s, dir) => {
-      val enc = sq8Encoded(s, dir)
-      val q = enc.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vu").as("qu"))
-        .localCheckpoint(false) // tiny probe set; hide the stats hint
-      // reconstruction once per corpus row (below the probe join),
-      // then the single-pass integer kernel per pair — ≡ the old
-      // per-pair recon fold (SketchExprSpec), ~10× less recon work
-      val scored = enc.withColumn("__ru", sq8ReconArrFromVu)
-        .crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        .withColumn("adc", graft.functions.VectorExpressions
-          .sqDistLong(col("qu"), col("__ru")))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("adc"), col("vec_id"))
-      scored.withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 5)
-        .select(col("qid"), col("vec_id"), col("adc"), col("rn"))
-    }),
-
-    // SQ8 recall@5 — the t60 discipline (every approximate path ships
-    // with its measured recall): ADC top-5 vs the EXACT top-5 by the
-    // same integer-micro L2 on the uncompressed vectors, per query.
-    // Both sides integer-exact, so the recall itself is hash-stable.
-    "t142_sq8_recall" -> ((s, dir) => {
-      val enc = sq8Encoded(s, dir)
-      val q = enc.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vu").as("qu"))
-        .localCheckpoint(false)
-      def top5(scoredD: DataFrame): DataFrame = {
-        val w = Window.partitionBy("qid")
-          .orderBy(col("__d"), col("vec_id"))
-        scoredD.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5).select(col("qid"), col("vec_id"))
-      }
-      // both sides score through the single-pass integer kernel (≡ the
-      // index-order long folds, SketchExprSpec); the ADC side
-      // reconstructs once per corpus row below the probe join instead
-      // of once per (query, row) pair
-      val exact = top5(enc.crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        .withColumn("__d", graft.functions.VectorExpressions
-          .sqDistLong(col("qu"), col("vu"))))
-      val approx = top5(enc.withColumn("__ru", sq8ReconArrFromVu)
-        .crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        .withColumn("__d", graft.functions.VectorExpressions
-          .sqDistLong(col("qu"), col("__ru"))))
-      exact
-        .join(approx.withColumn("__hit", lit(1)), Seq("qid", "vec_id"),
-          "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("__hit"), lit(0))).cast("long").as("hits"))
-        .withColumn("recall_ppm", expr("hits * 1000000 DIV 5"))
-    }),
-
-    // IVF-PQ composite search (FAISS IndexIVFPQ — the structure a
-    // production 100 TB ANN deployment actually runs, assembling the
-    // engine's existing pieces end to end): coarse-quantize to q36's
-    // 16 seed cells, PQ-encode the RESIDUAL v − centroid (residual
-    // codes carry ~the cell's local geometry — the reason IVFPQ beats
-    // plain PQ at equal bits), store only (cell, 8 codes); search
-    // probes the 2 nearest cells and ADC-scores just their postings
-    // against the query's per-cell residual, at the CORPUS-SCALED
-    // operating point (cells = max(16, n/256) through the floor
-    // dispatch, nProbe = max(2, ceil(sqrt(k)/2)), codebook = a
-    // strided residual sample — see ivfPqApprox). Distances replay
-    // exactly: same index-order double folds both engines, ties on
-    // ids.
-    "t143_ivfpq_search" -> ((s, dir) => ivfPqApprox(s, dir)),
-
-    // IVF-PQ recall@5 at BOTH production operating points (t60/t92
-    // discipline): raw ADC top-5 (probe misses + quantization noise
-    // compound — measured ~20-30 % on this unstructured corpus, where
-    // the true top-5 are near-ties ADC cannot order), and the
-    // REFINED point (FAISS IndexRefineFlat: ADC top-50 candidates
-    // reranked by exact distance — the standard fix at the usual
-    // k_factor=10; only the ≤50 candidate vectors per query are ever
-    // read exactly, which is the bounded-I/O contract that matters
-    // at 100 TB. Measured r18: probe ceiling at the scaled nProbe is
-    // 50/50 at sf0.1, and the true top-5's ADC ranks reach 151 —
-    // the refine pool, not the probe list, was the 90%→54% sf0.1
-    // recall cliff r17 recorded).
-    "t144_ivfpq_recall" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-        .localCheckpoint(false)
-      val w = Window.partitionBy("qid")
-        .orderBy(col("__d"), col("vec_id"))
-      def top5(scored: DataFrame): DataFrame =
-        scored.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5).select(col("qid"), col("vec_id"))
-      val exact = top5(e.crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        .withColumn("__d", Vectors.sqDist(col("qv"), col("v"))))
-        .localCheckpoint(false) // two recall joins read it
-      // ONE k=50 ADC ranking serves both points: its rank-5 prefix
-      // IS the ADC top-5 (same ordering), the full 50 feed refine
-      val cand50 = ivfPqApprox(s, dir, k = 50).localCheckpoint(false)
-      val adc5 = cand50.where(col("rn") <= 5)
-        .select(col("qid"), col("vec_id"))
-      val refined = top5(cand50.select("qid", "vec_id")
-        .join(e, Seq("vec_id")) // bounded candidates; AQE broadcasts
-        .join(broadcast(q), Seq("qid"))
-        .withColumn("__d", Vectors.sqDist(col("qv"), col("v"))))
-      def recallOf(got: DataFrame, hitsCol: String): DataFrame =
-        exact.join(got.withColumn("__hit", lit(1)),
-            Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("__hit"), lit(0))).cast("long")
-            .as(hitsCol))
-      recallOf(adc5, "hits_adc")
-        .join(recallOf(refined, "hits_ref"), Seq("qid"))
-        .withColumn("recall_adc_ppm", expr("hits_adc * 1000000 DIV 5"))
-        .withColumn("recall_ref_ppm", expr("hits_ref * 1000000 DIV 5"))
-    }),
-
-    // IVF+SQ8 composite search (FAISS IndexIVFScalarQuantizer
-    // QT_8bit — r17 verdict #6: t140-142's scalar quantizer existed
-    // standalone; the production tier stores SQ8 codes keyed by the
-    // coarse cell and ADC-scores probed cells only). Corpus-scaled
-    // cells/nProbe through the floor dispatch like t143; distances
-    // in integer µ² replay bit-exactly.
-    "t145_ivfsq8_search" -> ((s, dir) => ivfSq8Approx(s, dir)),
-
-    // IVF+SQ8 recall@5 vs the exact integer-micro top-5 (the t60/
-    // t142 discipline: every approximate path ships with measured
-    // recall). The IVF restriction adds probe misses on top of
-    // t142's reconstruction noise; at the scaled operating point the
-    // probe ceiling is ~92 % (sf0.01) / 100 % (sf0.1) — see t144's
-    // r18 measurement — and SQ8's near-exact reconstruction keeps
-    // the composite close to that ceiling (unlike PQ, no refine
-    // stage is needed).
-    "t146_ivfsq8_recall" -> ((s, dir) => {
-      val enc = sq8Encoded(s, dir)
-      val q = enc.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vu").as("qu"))
-        .localCheckpoint(false)
-      val exact = enc.crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        // single-pass integer kernel ≡ the long fold (SketchExprSpec)
-        .withColumn("__d", graft.functions.VectorExpressions
-          .sqDistLong(col("qu"), col("vu")))
-        .withColumn("rn", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("__d"), col("vec_id"))))
-        .where(col("rn") <= 5).select(col("qid"), col("vec_id"))
-      val approx = ivfSq8Approx(s, dir, k = 5)
-        .select(col("qid"), col("vec_id"))
-      exact
-        .join(approx.withColumn("__hit", lit(1)), Seq("qid", "vec_id"),
-          "left")
-        .groupBy("qid")
-        .agg(sum(coalesce(col("__hit"), lit(0))).cast("long").as("hits"))
-        .withColumn("recall_ppm", expr("hits * 1000000 DIV 5"))
-    }),
-
-    // IVF probe search: approximate top-5 by cosine probing the 2
-    // nearest of 16 cells per query — the query path over the q36
-    // coarse quantizer. Exact within probed cells (the oracle replays
-    // the same probe), candidate scoring is an equi-join on cell id.
-    "t9_ivf_probe" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      // MEASURED (r16): one Lloyd round over these 16 seeds HURTS
-      // probe recall on this unstructured corpus (t60: 0.92 → 0.86
-      // at sf0.01, 0.98 → 0.96 at sf0.1) — with small fixed k and no
-      // locality structure, re-centering pulls cells toward the data
-      // mean and splits query neighborhoods. Seeds stay. The bitext
-      // miner (corpus-scaled k, mid-similarity operating point)
-      // measures the OPPOSITE and trains its cells — see
-      // bitextCellCandidates.
-      val cent = e.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding"))
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      Vectors.ivfProbeTopK(q, e, cent, "qid", "vec_id", "cid",
-        "embedding", k = 5, nProbe = 2)
-    }),
-
-    // IVF+SQ8 with an exact refine tier (r18 verdict #7 — t144's
-    // IndexRefineFlat pattern composed onto the SQ8 composite): ONE
-    // ADC ranking at k=50 serves both measured points — its rank-5
-    // prefix IS the ADC top-5, and the full 50 get reranked by the
-    // exact integer-micro distance (bounded I/O: 50 candidates per
-    // query re-read their vu, nothing corpus-sized moves). Closes
-    // the gap between t146's ADC recall and the probe ceiling where
-    // SQ8's reconstruction noise flips near-boundary ranks.
-    "t148_ivfsq8_refine" -> ((s, dir) => {
-      val enc = sq8Encoded(s, dir).localCheckpoint(false)
-      val q = enc.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("vu").as("qu"))
-        .localCheckpoint(false)
-      // single-pass integer kernel ≡ the long fold (SketchExprSpec)
-      def microD: Column = graft.functions.VectorExpressions
-        .sqDistLong(col("qu"), col("vu"))
-      val w = Window.partitionBy("qid")
-        .orderBy(col("__d"), col("vec_id"))
-      def top5(scored: DataFrame): DataFrame =
-        scored.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5).select(col("qid"), col("vec_id"))
-      val exact = top5(enc.crossJoin(broadcast(q))
-        .where(col("qid") =!= col("vec_id"))
-        .withColumn("__d", microD))
-        .localCheckpoint(false) // two recall joins read it
-      val cand50 = ivfSq8Approx(s, dir, k = 50).localCheckpoint(false)
-      val adc5 = cand50.where(col("rn") <= 5)
-        .select(col("qid"), col("vec_id"))
-      val refined = top5(cand50.select("qid", "vec_id")
-        .join(enc.select("vec_id", "vu"), Seq("vec_id"))
-        .join(broadcast(q), Seq("qid"))
-        .withColumn("__d", microD))
-      def recallOf(got: DataFrame, hitsCol: String): DataFrame =
-        exact.join(got.withColumn("__hit", lit(1)),
-            Seq("qid", "vec_id"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("__hit"), lit(0))).cast("long")
-            .as(hitsCol))
-      recallOf(adc5, "hits_adc")
-        .join(recallOf(refined, "hits_ref"), Seq("qid"))
-        .withColumn("recall_adc_ppm", expr("hits_adc * 1000000 DIV 5"))
-        .withColumn("recall_ref_ppm", expr("hits_ref * 1000000 DIV 5"))
-    }),
-
-    // Index-quality measurement: recall@5 of the IVF probe (t9) vs the
-    // exact brute-force baseline (t4), per query — the metric that
-    // picks nProbe/cell-count at scale. At 100 TB the exact side runs
-    // over a SAMPLED query set (as here: 10 queries), never the corpus:
-    // recall estimation cost is queries × corpus, independent of index
-    // size. A left join from exact to approx keeps 0-recall queries.
-    "t60_ivf_recall" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      // the same seed cells as t9 (t60 measures t9's index; the
-      // Lloyd-round trade is measured in t9's comment)
-      val cent = e.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding"))
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val exact = Vectors.bruteForceTopK(q, e, "qid", "vec_id",
-        "embedding", k = 5).select(col("qid"), col("vec_id"))
-      val approx = Vectors.ivfProbeTopK(q, e, cent, "qid", "vec_id",
-        "cid", "embedding", k = 5, nProbe = 2)
-        .select(col("qid"), col("vec_id"))
-      exact
-        .join(approx.withColumn("__hit", lit(1)), Seq("qid", "vec_id"),
-          "left")
-        .groupBy("qid")
-        .agg(round(sum(coalesce(col("__hit"), lit(0))).cast("double") /
-          count(lit(1)), 6).as("recall_at_5"))
-    }),
-
-    // SemDeDup (Abbas et al. 2023): semantic dedup via cluster-scoped
-    // embedding cosine. Same planted-duplicate construction as t10
-    // (cosine ≈ 0.9998 twins; the organic corpus's max is 0.51), but
-    // where t10 finds PAIRS via SRP-LSH, this drops duplicates via
-    // the published cluster-then-pairwise shape: coarse cells bound
-    // the quadratic term by cluster size. Keep-min is deterministic.
-    "t62_semdedup" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-      val dup = e.select((col("vec_id") + 100000).as("vec_id"),
-        concat(array(element_at(col("v"), 1) + 0.05),
-          slice(col("v"), 2, 63)).as("v"))
-      val corpus = e.unionByName(dup)
-      // Centroid count SCALES with the corpus (r14, full-suite 100×
-      // finding): 16 fixed cells put 12.5k vectors in a cluster at
-      // 100× and the within-cluster pairwise term went QUADRATIC
-      // (1023 s). k = max(16, n/256) bounds clusters at ~256·2
-      // vectors, making the pair term linear in n — the SemDeDup
-      // paper's own guidance (cluster count tracks corpus). Floor 16
-      // keeps every gate-SF corpus on the historical clustering;
-      // the oracle computes the same k.
-      // footer-stat count (no scan job; memoized per snapshot)
-      val k = math.max(16L, tableRowCount(s, dir, "embeddings") / 256L)
-      val cent = e.where(col("vec_id") < k)
-        .select(col("vec_id").as("cid"), col("v"))
-      // k rides to the assignment so a true-scale corpus (k >= the
-      // hierarchical floor) routes through the two-level quantizer
-      Dedup.semDedupKeep(corpus, cent, "vec_id", "cid", "v", tau = 0.99,
-        k = k, dims = 64)
-    }),
-
-    // Language-ID heuristic: CJK scan + per-language stopword argmax
-    // (single-pass kernel; declarative twin in TextOps.langId).
-    "t6_lang_id" -> ((s, dir) =>
-      T(s, dir, "documents").select(col("doc_id"),
-        graft.functions.SketchExpressions.langId(col("text"))
-          .as("lang_pred"))),
-
-    // Quality scoring: length/alpha/stopword/punctuation blend over a
-    // one-scan text-stats kernel.
-    "t7_quality" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"))
-        .select(col("doc_id"),
-          TextOps.qualityScoreFrom(col("__st")).as("q_score"))),
-
-    // Document fingerprint: bottom-4 sketch of md5'd word 5-grams.
-    // Single-pass kernel: k-sized buffer straight off the token bytes —
-    // no shingle strings, no full hash array, no O(s log s) sort
-    // (equivalence vs the declarative sort form: SketchExprSpec).
-    "t8_fingerprint" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), col("text"),
-          graft.functions.SketchExpressions
-            .bottomKShingleHashes(TextOps.tokens(col("text")), 5, 4)
-            .as("__h"))
-        .select(col("doc_id"),
-          TextOps.fingerprintFrom(col("__h"), col("text")).as("fp"))),
-
-    // Decontamination: flag training documents sharing any word 3-gram
-    // with the (small) eval/benchmark set. The eval shingle set is
-    // distinct + broadcast — the 100 TB shape: benchmark suites are
-    // tiny, so contamination checking is a map-side broadcast join
-    // against the full corpus scan, never a corpus shuffle.
-    "t13_decontaminate" -> ((s, dir) => {
-      val sh = T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("sh"))
-      // explode_OUTER + the null-gram drop ≡ inner explode (shingle
-      // elements are never null), but stops InferFiltersFromGenerate
-      // from re-evaluating the shingle kernel in a pushed filter
-      // (r20 plans: 4 in-filter kernel copies on this query)
-      val evalGrams = sh.where(col("doc_id") % 97 === 0)
-        .select(explode_outer(col("sh")).as("g"))
-        .where(col("g").isNotNull).distinct()
-      sh.where(col("doc_id") % 97 =!= 0)
-        .select(col("doc_id"), explode_outer(col("sh")).as("g"))
-        .where(col("g").isNotNull)
-        .join(broadcast(evalGrams), Seq("g"))
-        .groupBy("doc_id")
-        .agg(countDistinct(col("g")).as("n_hits"))
-    }),
-
-    // TF-IDF: top-3 terms per document by tf·ln(N/df), deterministic
-    // (score desc, term) order. One Generate (explode — no shuffle),
-    // two partial-aggregated shuffles (tf, df), a vocabulary-sized join
-    // on term, and the per-doc top-k window pre-reduced map-side by
-    // WindowGroupLimit. The corpus count N is a lazy 1-row broadcast
-    // (same pattern as q32 — no job at plan build).
-    "t14_tfidf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, dir, "documents")
-      val tf = docs.select(col("doc_id"),
-          explode(split(lower(col("text")), "[^a-z0-9]+")).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("__n"))
-      val w = Window.partitionBy("doc_id")
-        .orderBy(col("__score").desc, col("term"))
-      tf.join(df, Seq("term")).crossJoin(broadcast(n))
-        .withColumn("__score", col("tf") * log(col("__n") / col("df")))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 3)
-        .select(col("doc_id"), col("term"),
-          round(col("__score"), 6).as("score"), col("rn"))
-    }),
-
-    // PII scrubbing: typed placeholder redaction (emails first, then
-    // phone-like runs — TextOps.piiScrub) with match counts. The
-    // synthetic corpus has no natural PII, so a deterministic footer is
-    // planted on every 7th doc inside the query (both engines build the
-    // same augmented text). Pure map-side scan transform.
-    "t15_pii_scrub" -> ((s, dir) => {
-      val footer = concat(lit(" contact user"),
-        col("doc_id").cast("string"), lit("@example.com or call 555-010-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"))
-      val aug = when(col("doc_id") % 7 === 0, concat(col("text"), footer))
-        .otherwise(col("text"))
-      val noEmail = regexp_replace(aug, TextOps.emailRe, "<EMAIL>")
-      T(s, dir, "documents").select(
-        col("doc_id"),
-        regexp_count(aug, lit(TextOps.emailRe)).cast("long")
-          .as("n_emails"),
-        regexp_count(noEmail, lit(TextOps.phoneRe)).cast("long")
-          .as("n_phones"),
-        length(regexp_replace(noEmail, TextOps.phoneRe, "<PHONE>"))
-          .cast("long").as("n_scrubbed"))
-    }),
-
-    // Gopher-style repetition: fraction of word 3-grams that repeat an
-    // earlier 3-gram of the same document. Map-side only; single-pass
-    // kernel (declarative twin TextOps.dupNgramFraction re-evaluates
-    // the interpreted shingle array per reference — was 11.7s of the
-    // 45s sf0.1 bench).
-    "t16_dup_ngram_frac" -> ((s, dir) =>
-      T(s, dir, "documents").select(col("doc_id"),
-        round(graft.functions.SketchExpressions
-          .dupNgramFraction(TextOps.tokens(col("text")), 3), 6)
-          .as("dup_frac"))),
-
-    // Deterministic stratified sampling: 5 docs per language, selected
-    // by md5(doc_id|text) rank — a seedless, engine-portable "random"
-    // sample (reservoir-equivalent) that any re-run or external engine
-    // reproduces exactly. Per-group top-k via WindowGroupLimit: only k
-    // rows per group survive the map side, so the shuffle is samples,
-    // not corpus.
-    "d4_hash_sample" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val rk = md5(concat(col("doc_id").cast("string"), lit("|"),
-        col("text")))
-      val w = Window.partitionBy("lang").orderBy(col("__rk"))
-      T(s, dir, "documents")
-        .select(col("lang"), col("doc_id"), rk.as("__rk"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 5)
-        .select(col("lang"), col("doc_id"), col("rn"))
-    }),
-
-    // Window-rank family: rank/dense_rank/percent_rank/cume_dist over
-    // the value ordering (tie-stable — rank functions depend only on
-    // the ORDER BY key values) plus lead over a fully-deterministic
-    // ordering. event_type has O(5) values — a single-level
-    // partitionBy(event_type) window is the one-task-per-group trap
-    // (the t101/t103/t94 class, just on a different key), so every
-    // rank derives from ONE two-level row_number rn over
-    // (value, event_id) with floor(value) buckets (monotone in the
-    // order, value-RANGE-bounded → the offset table broadcasts):
-    //   rank      = min rn among the row's value-peers
-    //   dense     = the value's two-level rank in the PEER table
-    //   pct/cd    = (rank−1)/(n−1), max-peer-rn/n — n broadcasts
-    //   lead      = the rn+1 row's value via an rn-keyed self-join
-    // The peer table (event_type, value) can scale with the corpus,
-    // so its joins stay shuffle joins; only the O(types) count table
-    // and the bucket offsets broadcast. Plan-locked: no per-type
-    // corpus sort, zero SinglePartition.
-    "q40_window_ranks" -> ((s, dir) => {
-      val ev = T(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-      // testdata value is never null; the sentinel keeps the bucket
-      // total (nulls sort first in Spark ASC, below every real floor)
-      val vBucket = coalesce(floor(col("value")).cast("long"),
-        lit(Long.MinValue))
-      // ranked feeds four consumers, but deliberately NOT
-      // localCheckpointed (r19 probe): all four re-enter through the
-      // same rank-window exchange, which AQE reuses at runtime — a cut
-      // measured SLOWER (1.82 → 2.24 s) by adding a materialization
-      // barrier for no saved work
-      val ranked = Windows.twoLevelRank(ev, Seq("event_type"), vBucket,
-        Seq(col("value"), col("event_id")), "__rn")
-      val n = ranked.groupBy("event_type").agg(count(lit(1)).as("__n"))
-      val peers = ranked.groupBy("event_type", "value")
-        .agg(min("__rn").as("__minrn"), max("__rn").as("__maxrn"))
-      val dr = Windows.twoLevelRank(peers, Seq("event_type"), vBucket,
-        Seq(col("value")), "__drnk")
-      val nxt = ranked.select(col("event_type"),
-        (col("__rn") - 1L).as("__rn"), col("value").as("nxt"))
-      ranked
-        .join(dr, Seq("event_type", "value"))
-        .join(broadcast(n), Seq("event_type"))
-        .join(nxt, Seq("event_type", "__rn"), "left")
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("__minrn").as("rnk"),
-          col("__drnk").cast("long").as("drnk"),
-          // SQL percent_rank pins the n = 1 partition to 0.0 (the
-          // (rank−1)/(n−1) form would be 0/0)
-          round(when(col("__n") === 1L, lit(0.0))
-            .otherwise((col("__minrn") - 1L).cast("double")
-              / (col("__n") - 1L).cast("double")), 6).as("prnk"),
-          round(col("__maxrn").cast("double")
-            / col("__n").cast("double"), 6).as("cd"),
-          col("nxt"))
-    }),
-
-    // GROUPING SETS beyond rollup/cube's fixed lattices (SQL-only
-    // surface in Spark — the Dataset API exposes rollup/cube).
-    "q41_grouping_sets" -> ((s, dir) => {
-      T(s, dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-      s.sql("""SELECT l_returnflag, l_linestatus,
-        round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""")
-    }),
-
-    // Deterministic train/val/test split (~90/5/5) by salted content
-    // hash: stable under re-sharding, re-runs and engine swaps (row
-    // order and partitioning never matter), and portable — the split
-    // decision is a lexicographic compare on the first hex byte of
-    // md5(doc_id|salt), which any engine reproduces. Map-side only.
-    "t17_train_split" -> ((s, dir) => {
-      val h2 = substring(
-        md5(concat(col("doc_id").cast("string"), lit("|split"))), 1, 2)
-      T(s, dir, "documents").select(col("doc_id"),
-        when(h2 < "e6", "train").when(h2 < "f3", "val")
-          .otherwise("test").as("split"))
-    }),
-
-    // Gopher repetition signals at line granularity: duplicate-line
-    // fraction and duplicate-line CHARACTER fraction over fixed
-    // 10-token pseudo-lines (corpus text has no newlines). Map-side.
-    "t18_dup_lines" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .tokenChunks(TextOps.tokens(col("text")), 10).as("__ln"))
-        .select(col("doc_id"),
-          round(TextOps.dupElementFraction(col("__ln")), 6)
-            .as("dup_line_frac"),
-          round(TextOps.dupCharFraction(col("__ln")), 6)
-            .as("dup_char_frac"))),
-
-    // Per-domain provenance stats: extract http(s) URL domains, count
-    // mentions and distinct documents. The synthetic corpus has no
-    // URLs, so a deterministic footer is planted on every 5th doc
-    // inside the query (both engines build the same augmented text —
-    // same trick as t15). Scan → explode → one agg shuffle keyed by
-    // domain (bounded by the domain vocabulary, not the corpus).
-    "t19_domain_stats" -> ((s, dir) => {
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextOps.urlDomains(urlAugmented)).as("domain"))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_urls"),
-          countDistinct(col("doc_id")).as("n_docs"))
-    }),
-
-    // MinHash accuracy audit: estimated Jaccard (fraction of agreeing
-    // signature positions) vs exact n-gram Jaccard on the LSH candidate
-    // pairs — the production knob for choosing k/bands. Pairs are tiny
-    // relative to the corpus, so the two signature joins broadcast at
-    // scale; signatures are map-side sketches.
-    "t20_minhash_est" -> ((s, dir) => {
-      // cheap token-count pre-filter ≡ size(sh) > 0 for 3-shingles
-      // (t1's rationale — keeps the shingle kernel out of the pushed
-      // filter)
-      val sh = T(s, dir, "documents")
-        .where(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("sh"))
-      val sig = sh.select(col("doc_id"),
-        graft.functions.SketchExpressions.minhashSig(col("sh"), 8)
-          .as("sig"),
-        array_distinct(col("sh")).as("ss"))
-      val pairs = Dedup.lshCandidatePairs(sh, "doc_id", "sh",
-        k = 8, bands = 4, preGated = true)
-      pairs
-        .join(sig.select(col("doc_id").as("id_a"), col("sig").as("siga"),
-          col("ss").as("ssa")), Seq("id_a"))
-        .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sigb"),
-          col("ss").as("ssb")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(aggregate(
-            zip_with(col("siga"), col("sigb"),
-              (x, y) => when(x === y, 1).otherwise(0)),
-            lit(0), (acc, v) => acc + v).cast("double") / 8.0, 6)
-            .as("est_jac"),
-          round(graft.functions.SketchExpressions
-            .jaccard(col("ssa"), col("ssb")), 6).as("jac"))
-    }),
-
-    // Quality-filter pipeline endpoint (C4/Gopher-style): language,
-    // quality score, repetition and length gates combined into a keep
-    // decision. One text scan — all signals come off the single-pass
-    // kernels; the stats struct is projected once (multi-referenced
-    // expressions inline per reference).
-    "t21_quality_filter" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"),
-          graft.functions.SketchExpressions.langId(col("text"))
-            .as("lang_pred"),
-          graft.functions.SketchExpressions
-            .dupNgramFraction(TextOps.tokens(col("text")), 3).as("__df"))
-        .select(col("doc_id"), col("lang_pred"),
-          col("__st").getField("n_tokens").cast("long").as("n_tokens"),
-          TextOps.qualityScoreFrom(col("__st")).as("q_score"),
-          round(col("__df"), 6).as("dup_frac"))
-        .withColumn("keep",
-          (col("lang_pred") === "en" && col("q_score") >= 0.5 &&
-            (col("dup_frac").isNull || col("dup_frac") <= 0.5) &&
-            col("n_tokens").between(10, 5000)).cast("long"))),
-
-    // Near-dedup resolution: one kept document per duplicate cluster
-    // (the cluster label IS the min doc_id by construction) with member
-    // counts — the step that turns t12's clusters into the deduped
-    // corpus. Reads the STAGED label artifact (stagedNeardupLabels —
-    // labels materialize once per corpus, plan-locked LSH/CC-free
-    // here), plus one cluster-keyed agg.
-    "d5_neardup_keep" -> ((s, dir) =>
-      stagedNeardupLabels(s, dir)
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_docs"))),
-
-    // Quality-aware canonical selection: d5 keeps each near-dup
-    // cluster's MIN doc_id; real pipelines keep the BEST copy — the
-    // member maximizing the quality kernel (doc_id tiebreak). Labels
-    // come off the staged artifact (materialize-once), then one
-    // per-cluster window over cluster-sized groups; singletons keep
-    // themselves via the left-join coalesce.
-    "t56_keep_best" -> ((s, dir) => {
-      val w = Window.partitionBy("cluster_id")
-        .orderBy(col("q_score").desc, col("doc_id"))
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"))
-        .select(col("doc_id"),
-          TextOps.qualityScoreFrom(col("__st")).as("q_score"))
-        .join(stagedNeardupLabels(s, dir), Seq("doc_id"))
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") === 1)
-        .select(col("cluster_id"), col("doc_id").as("kept_doc"),
-          col("q_score").as("q_kept"))
-    }),
-
-    // Per-source duplication health: what fraction of each source's
-    // documents are non-canonical members of a near-dup cluster (the
-    // metric that tells you which feed is paying for redundant
-    // storage/training). Canonical = cluster min id, d5's convention;
-    // the rate is dropped/total per source. Cluster labels read off
-    // the staged artifact; the per-source agg is a tiny shuffle.
-    "t57_source_dup_rate" -> ((s, dir) =>
-      T(s, dir, "documents").select(col("doc_id"), col("source"))
-        .join(stagedNeardupLabels(s, dir), Seq("doc_id"))
-        .select(col("source"),
-          (col("cluster_id") =!= col("doc_id")).cast("long").as("__dup"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("__dup")).as("n_dup"),
-          round(sum(col("__dup")).cast("double") / count(lit(1)), 6)
-            .as("dup_rate"))),
-
-    // BPE-ish token counting: GPT-2 pre-tokenizer shape (contractions,
-    // letter runs, digit runs, other non-space runs) via one RE2-safe
-    // regexp_extract_all — the whitespace-count twin is d2. Map-side.
-    "d6_bpe_tokens" -> ((s, dir) =>
-      T(s, dir, "documents").select(col("doc_id"),
-        TextOps.bpeTokenCount(col("text")).as("n_bpe"))),
-
-    // Tokenizer-fertility report: bytes per BPE-ish token by
-    // (source, lang) — the metric that tells you which corpus slices
-    // your tokenizer serves badly (high bytes/token = more compute per
-    // byte learned; the standard argument for tokenizer retraining on
-    // new domains/languages). Integer ppm output (bytes*10^6 DIV
-    // tokens): two exact-long sums, zero cross-engine float ties.
-    // One partial-aggregated shuffle on the tiny group set. The ppm
-    // scaling runs in decimal(38): a long n_bytes*10^6 wraps past
-    // ~9.2 TB of text per group — exactly the scale this targets —
-    // while DuckDB's HUGEINT sums stay exact.
-    "t65_tokenizer_fertility" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .groupBy("source", "lang")
-        .agg(sum(octet_length(col("text"))).cast("long").as("n_bytes"),
-          sum(TextOps.bpeTokenCount(col("text"))).cast("long")
-            .as("n_bpe"))
-        .withColumn("bytes_per_tok_ppm",
-          expr("CAST(CAST(n_bytes AS DECIMAL(38,0)) * 1000000" +
-            " DIV n_bpe AS BIGINT)"))),
-
-    // URL/domain blocklist filter (the UT1-blocklist shape — the
-    // standard crawl-curation step right after WARC extraction): drop
-    // every document citing a blocked domain. The blocklist is a
-    // broadcast (real UT1 is ~4M rows — still broadcast range,
-    // BOUNDED by the list, not the corpus). The hit set is NOT
-    // bounded — spam/blocklisted content is a sizable corpus fraction
-    // of a real crawl — so the doc-id anti-join carries no hint: AQE
-    // broadcasts it when it measures small and falls back to a
-    // doc_id-keyed shuffle (linear, skew-free) when it doesn't.
-    // Same deterministic URL augmentation as t19 so some docs hit.
-    "t66_url_blocklist" -> ((s, dir) => {
-      import s.implicits._
-      val blockDf = Seq("site0.example.org", "site3.example.org",
-        "host2.net").toDF("domain")
-      val hits = T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextOps.urlDomains(urlAugmented)).as("__d"))
-        // hostnames are case-insensitive (RFC 4343): normalize before
-        // the membership join or "BAD.example.org" bypasses the gate
-        .select(col("doc_id"), lower(col("__d")).as("domain"))
-        .join(broadcast(blockDf), Seq("domain"))
-        .select("doc_id").distinct()
-      T(s, dir, "documents")
-        .join(hits, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
-
-    // Deterministic corpus shuffle for training (the GPT-3/Pile
-    // "shuffle the corpus" step): an md5 key over a salt+id gives a
-    // reproducible pseudorandom order; the first `shardHexWidth` hex
-    // chars are the shard (the output-file/parallelism knob), rank
-    // within shard is the write position. One hash-partitioned window
-    // per shard — no global sort; each shard sorts independently and
-    // writes its own file. Width 2 here matches the oracle; see
-    // `trainShuffle` for the width-vs-corpus sizing math.
-    "t67_train_shuffle" -> ((s, dir) =>
-      trainShuffle(T(s, dir, "documents"), shardHexWidth = 2)),
-
-    // Shard MANIFEST for a reproducible data release (the
-    // Dolma/RedPajama release-artifact shape): per t67 training
-    // shard, the numbers a training run pins and a re-materialization
-    // must reproduce byte-for-byte — doc count, token total, an
-    // order-insensitive 36-bit-per-doc content checksum, and the
-    // shard's shuffle-key endpoints (the key range pins the shard's
-    // ORDER, since position is a pure function of the sorted keys).
-    // Shape: the key/shard derivation is t67's own map-side kernel
-    // (shared `trainShuffle` def — manifest and shuffle cannot
-    // drift); ONE shard-keyed partial-agged shuffle produces the
-    // whole manifest; output is 256 rows.
-    "t121_shard_manifest" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"),
-          md5(concat(lit("shuf42:"), col("doc_id").cast("string")))
-            .as("key"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tok"),
-          conv(substring(md5(col("text")), 1, 9), 16, 10).cast("long")
-            .as("__ch"))
-        .withColumn("shard", substring(col("key"), 1, 2))
-      d.groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_tok").as("n_tokens"),
-          sum("__ch").as("content_sum"),
-          min("key").as("key_min"),
-          max("key").as("key_max"))
-    }),
-
-    // Cluster-balanced diversity sampling (the MiniPile/DCLM-style
-    // selection step: embed → cluster → take a per-cell quota, so the
-    // subset preserves semantic coverage instead of letting the head
-    // domains dominate). Assignment is the broadcast-centroid map-side
-    // kernel q36 verifies; the per-cell quota is an md5-hash rank —
-    // uniform-without-replacement within each cell, deterministic.
-    // WindowGroupLimit prunes each cell to its quota before the full
-    // sort would materialize; cells partition the window, so the one
-    // shuffle is cid-keyed and skew-bounded by cell size.
-    "t69_cluster_sample" -> ((s, dir) => {
-      val quota = 4L
-      val e = T(s, dir, "embeddings")
-      val w = Window.partitionBy("cid")
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      Vectors.ivfAssign(e, seedCentroids(e), "vec_id", "cid", "embedding")
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .where(col("rk") <= quota)
-        .select(col("cid"), col("vec_id"), col("rk"))
-    }),
-
-    // UniMax language-balanced budget allocation (Chung et al. 2023):
-    // split a token budget as uniformly as possible across languages
-    // subject to a per-language epoch cap — the multilingual mixing
-    // policy that neither starves tail languages (proportional
-    // sampling) nor over-repeats them (pure uniform). Water-filling:
-    // alloc_l = min(cap_l, θ) with Σ alloc ≈ B, where cap_l =
-    // EPOCH_CAP × n_l and θ is the water level. Policy is defined in
-    // INTEGER arithmetic (θ = integer-div level at the pivot; the
-    // sub-token remainder — < #langs tokens — stays unallocated), so
-    // Spark and the oracle agree bit-for-bit: no float ties. Shape:
-    // ONE corpus pass builds the per-language token table; every
-    // window after that runs on #languages rows (the documented
-    // SinglePartition-is-fine bound, same as t64's bucket frame) —
-    // the 100 TB cost is the token scan, full stop. epochs_bp
-    // (basis points) overflows long only past ~9e14 tokens per
-    // language — two orders above a 100 TB corpus.
-    "t70_unimax" -> ((s, dir) => {
-      // 3 (not 4): on the testdata distribution this makes the
-      // smallest language saturate at cap while the rest take the
-      // water level — both policy branches live in the oracle check
-      val epochCap = 3L
-      val wOrd = Window.orderBy("cap", "lang")
-      val wAll = Window.partitionBy(lit(1))
-      T(s, dir, "documents")
-        .groupBy("lang")
-        .agg(sum(size(split(col("text"), " ")).cast("long"))
-          .as("n_tokens"))
-        .withColumn("cap", col("n_tokens") * epochCap)
-        .withColumn("idx", row_number().over(wOrd).cast("long"))
-        .withColumn("__cum", coalesce(sum("cap").over(
-          wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("__n", count(lit(1)).over(wAll))
-        // B = 2 average epochs, derived from the lang table itself —
-        // no second corpus scan (dsirLm's O(vocab)-not-O(corpus) rule)
-        .withColumn("__budget", sum("n_tokens").over(wAll) * lit(2L))
-        .withColumn("__theta",
-          expr("(__budget - __cum) DIV (__n - idx + 1L)"))
-        // pivot = first (cap-ascending) language whose fair share no
-        // longer covers its cap; everyone before it saturates at cap,
-        // everyone from it on gets the pivot's water level (which is
-        // < its cap by construction, caps being sorted)
-        .withColumn("__pivot",
-          min(when(col("__theta") < col("cap"), col("idx"))).over(wAll))
-        .withColumn("__ptheta",
-          max(when(col("idx") === col("__pivot"), col("__theta")))
-            .over(wAll))
-        .withColumn("alloc",
-          when(col("__pivot").isNull || col("idx") < col("__pivot"),
-            col("cap")).otherwise(col("__ptheta")))
-        .withColumn("epochs_bp", expr("alloc * 10000L DIV n_tokens"))
-        .select(col("lang"), col("n_tokens"), col("cap"), col("alloc"),
-          col("epochs_bp"))
-    }),
-
-    // BPE ENCODE with the learned tokenizer — closes the tokenizer
-    // loop (t71 trains, this applies): per-word symbol counts are
-    // computed ONCE on the vocab-sized word table (the merge table
-    // ships as DATA inside one BpeEncodeExpr kernel — plan size flat
-    // in merge count, so a 32k-merge vocab plans like this 8), then
-    // per-doc token counts come from the exploded corpus joining that
-    // vocab on the token key — dsirScore's exact join shape (vocab
-    // broadcasts at small corpora via AQE; at 100 TB it's a token-
-    // keyed shuffle join, still linear). fertility_bp = true
-    // BPE-tokens-per-word in basis points — the learned-tokenizer
-    // version of t65's regex proxy. Production trains once and
-    // materializes the merge table (clusterLabels' materialize-once
-    // contract); re-deriving it here keeps the query self-contained.
-    "t73_bpe_encode" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val merges = trainedMerges(s, dir)
-      val vocab = corpusWordCounts(s, dir).select(col("w"),
-        size(TextOps.bpeEncode(split(col("w"), ""), merges))
-          .cast("long").as("n_sym"))
-      docs.select(col("doc_id"),
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .where(length(col("w")) > 0)
-        .join(vocab, Seq("w"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_bpe"))
-        .withColumn("fertility_bp", expr("n_bpe * 10000L DIV n_words"))
-    }),
-
-    // Per-source TOKENIZER FIT — the data-card signal for "does the
-    // learned tokenizer suit this source": mean fertility (BPE tokens
-    // per word, t73's metric rolled up per source) and the fraction
-    // of word occurrences the tokenizer keeps WHOLE (n_sym = 1).
-    // A source with high fertility relative to the corpus is the one
-    // paying extra sequence length — the signal that drives
-    // per-domain vocab extension decisions. Same shapes as t73: the
-    // encode kernel runs ONCE on the vocab-sized word table, the
-    // corpus explode joins it on the token key (vocab broadcasts at
-    // small corpora via AQE, token-keyed shuffle at 100 TB), one
-    // source-keyed rollup.
-    "t111_tokenizer_fit" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val merges = trainedMerges(s, dir)
-      val vocab = corpusWordCounts(s, dir).select(col("w"),
-        size(TextOps.bpeEncode(split(col("w"), ""), merges))
-          .cast("long").as("n_sym"))
-      docs.select(col("source"),
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .where(length(col("w")) > 0)
-        .join(vocab, Seq("w"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_words"), sum("n_sym").as("n_bpe"),
-          sum(when(col("n_sym") === 1, 1L).otherwise(0L))
-            .as("n_whole"))
-        .withColumn("fertility_bp", expr("n_bpe * 10000L DIV n_words"))
-        .withColumn("whole_word_ppm",
-          expr("n_whole * 1000000 DIV n_words"))
-    }),
-
-    // Leakage-free train/val/test split: t17 assigns SPLITS by doc
-    // hash, which puts near-duplicate documents on both sides of the
-    // train/eval fence — the classic self-contamination bug. Here the
-    // hash is over the near-dup CLUSTER label (t12's machinery —
-    // Dedup.clusterLabels, materialize-once in production), so every
-    // cluster lands whole in one split. Purity is by construction:
-    // split = f(cluster_id). Same 90/5/5 hex thresholds as t17.
-    "t72_cluster_split" -> ((s, dir) => {
-      val h2 = substring(
-        md5(concat(col("cluster_id").cast("string"), lit("|csplit"))),
-        1, 2)
-      stagedNeardupLabels(s, dir).select(col("doc_id"), col("cluster_id"),
-        when(h2 < "e6", "train").when(h2 < "f3", "val")
-          .otherwise("test").as("split"))
-    }),
-
-    // Host-level PageRank over the crawl link graph — the link-based
-    // host-quality prior (Common Crawl ships exactly this artifact;
-    // curation pipelines join it back as a document quality signal).
-    // Edges: each document's hosting site (site{doc_id%7} — the t19/
-    // t66 URL convention) links to every domain its text cites, self-
-    // links dropped, weighted by citation count. Rank = 3 fixed
-    // Jacobi iterations in integer-ppm arithmetic (`Graph.pageRankPpm`
-    // — floor division end-to-end, so the DuckDB twin is bit-exact;
-    // see the operator's scaladoc for the per-iteration plan shape).
-    "t74_host_pagerank" -> ((s, dir) =>
-      hostRanks(s, dir).select(col("node").as("host"), col("rank_ppm"))),
-
-    // Per-host curation table — the FineWeb-style domain decision
-    // artifact: for every hosting site, its document count, exact-dup
-    // rate (docs whose text hash repeats WITHIN the host), mean doc
-    // size, and the t74 link rank — the four signals a keep/drop/
-    // downweight decision per domain reads together. Two partial-agged
-    // shuffles ((host,hash) then host); the rank artifact is
-    // host-cardinality and joins unhinted (AQE-sized). Integer outputs
-    // (ppm / x100 fixed-point floor division) — exact oracle twin,
-    // which shares the t74 rank CTE block so artifact and consumer
-    // cannot drift.
-    "t77_host_curation" -> ((s, dir) => {
-      val byHash = T(s, dir, "documents")
-        .select(hostingSite.as("host"), md5(col("text")).as("h"),
-          col("n_chars"))
-        .groupBy("host", "h")
-        .agg(count(lit(1)).as("c"), sum("n_chars").as("sc"))
-      val perHost = byHash.groupBy("host")
-        .agg(sum("c").as("n_docs"),
-          sum(when(col("c") > 1, col("c")).otherwise(0L)).as("nd"),
-          sum("sc").as("sch"))
-      // host-cardinality rank table (~10⁸ rows at CC scale, near the
-      // broadcast ceiling) — unhinted: AQE broadcasts while it fits
-      perHost.join(hostRanks(s, dir)
-          .select(col("node").as("host"), col("rank_ppm").as("__r")),
-          Seq("host"), "left")
-        .select(col("host"), col("n_docs"),
-          expr("(1000000 * nd) div n_docs").as("dup_ppm"),
-          expr("(100 * sch) div n_docs").as("chars_x100"),
-          coalesce(col("__r"), lit(0L)).as("rank_ppm"))
-    }),
-
-    // Reciprocal-rank fusion of independent curation signals (the
-    // standard multi-signal combiner — Cormack et al. 2009): each doc
-    // is ranked globally under three orthogonal signals (reference-LM
-    // quality, hosting-site link authority, document size), and the
-    // fused score Σ 1e6 div (60 + rank_i) selects the final top-50.
-    // All three rankings are exact and distributed: the two corpus-
-    // sized ones go through `Windows.twoLevelRank` (no one-reducer
-    // global sort); the host ranking is host-cardinality (a tiny
-    // window) inherited through a broadcast join. Integer floor
-    // division end-to-end — no float ties, exact DuckDB twin (which
-    // shares the LM-score and host-rank CTE blocks). Docs without an
-    // LM score (no bigrams / no reference LM for their language) drop,
-    // as in t75.
-    "t78_rrf_fusion" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (bg0, ug0, vsz) =
-        TextOps.bigramLm(docs.where(col("source") === "src0"),
-          "lang", "text")
-      // (doc_id, lm_lp) is narrow (~16 B/row) but its lineage is the
-      // whole LM train+score pipeline (two reference-corpus count
-      // passes + the corpus bigram explode/score pass); twoLevelRank
-      // consumes its input twice (bucket counts + join back), so
-      // without the cut the scoring pipeline executes twice (r19
-      // measured). localCheckpoint materializes the narrow score table
-      // once — the same two-consumer contract as t129/t137b.
-      val lm = TextOps.bigramLmScore(docs, "doc_id", "lang", "text",
-          bg0, ug0, vsz)
-        .select(col("doc_id"), col("lm_lp"))
-        .localCheckpoint(false)
-      val rLm = Windows.twoLevelRank(lm, Seq.empty,
-          (-floor(col("lm_lp") * 10)).cast("long"),
-          Seq(col("lm_lp").desc, col("doc_id")), "r_lm")
-        .select(col("doc_id"), col("r_lm"))
-      val hostPos = hostRanks(s, dir)
-        .withColumn("r_host", row_number().over(
-          Window.orderBy(col("rank_ppm").desc, col("node")))
-          .cast("long"))
-        .select(col("node").as("host"), col("r_host"))
-      val rHost = T(s, dir, "documents")
-        .select(col("doc_id"), hostingSite.as("host"))
-        .join(broadcast(hostPos), Seq("host"))
-        .select(col("doc_id"), col("r_host"))
-      val rSize = Windows.twoLevelRank(
-          T(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-          Seq.empty, expr("-(n_chars div 100)").cast("long"),
-          Seq(col("n_chars").desc, col("doc_id")), "r_size")
-        .select(col("doc_id"), col("r_size"))
-      rLm.join(rSize, Seq("doc_id")).join(rHost, Seq("doc_id"))
-        .select(col("doc_id"), col("r_lm"), col("r_host"), col("r_size"),
-          (expr("1000000 div (60 + r_lm)") +
-            expr("1000000 div (60 + r_host)") +
-            expr("1000000 div (60 + r_size)")).as("rrf_ppm"))
-        .orderBy(col("rrf_ppm").desc, col("doc_id")).limit(50)
-    }),
-
-    // Standing-corpus CDC merge (`Cdc.applyChanges`): re-crawl
-    // revisions, takedown deletes, and new-page inserts applied in one
-    // last-op-wins pass — the maintenance step t49's insert-only
-    // ingest leaves open. The synthetic feed exercises every path:
-    // updates (doc_id%10==3, revised text), deletes (%10==5), inserts
-    // (%10==7 under shifted ids), AND a second-op delete on %100==3
-    // keys so last-op-wins is observable (update at seq 1, delete at
-    // seq 2 — the delete must win). Output hashes the text so the
-    // compare stays narrow.
-    "t79_cdc_merge" -> ((s, dir) => {
-      val base = T(s, dir, "documents")
-      Cdc.applyChanges(base, cdcDemoDelta(base), "doc_id", "__op",
-          "__seq")
-        .select(col("doc_id"), md5(col("text")).as("text_md5"),
-          col("lang"), col("source"))
-    }),
-
-    // CDC TIME TRAVEL — "read the corpus as of change-log offset S":
-    // the audit every snapshot-versioned data release needs (which
-    // docs did train run X actually see?). One row per as-of point:
-    // row count, distinct languages, and an order-insensitive
-    // 36-bit-per-doc content checksum (sum of md5-prefix integers —
-    // exact in a long at any realistic corpus row count), so two
-    // reconstructions of the same offset are comparable without
-    // diffing rows. Shape: time travel at N audit points = N
-    // applyChanges merges (each the proven delta-window + anti-join +
-    // union shape) over the seq-filtered log — N is audit-sized
-    // (log offsets you care about), never corpus-sized; production
-    // serves FREQUENT as-of reads from materialized snapshots (t38's
-    // diff artifacts) and uses this op to verify them. Shares t79's
-    // deterministic delta feed so the two cannot drift.
-    "t120_time_travel" -> ((s, dir) => {
-      val base = T(s, dir, "documents")
-      val delta = cdcDemoDelta(base)
-      Seq(0L, 1L, 2L).map { asof =>
-        Cdc.applyChanges(base,
-            delta.where(col("__seq") <= asof), "doc_id", "__op",
-            "__seq")
-          .agg(count(lit(1)).as("n_docs"),
-            countDistinct(col("lang")).as("n_langs"),
-            // 9 hex chars = 36 bits/doc: the long sum stays exact
-            // past 10^8 rows per state (100x scale points included)
-            sum(conv(substring(md5(col("text")), 1, 9), 16, 10)
-              .cast("long")).as("content_sum"))
-          .select(lit(asof).as("asof_seq"), col("n_docs"),
-            col("n_langs"), col("content_sum"))
-      }.reduce(_ unionByName _)
-    }),
-
-    // Corpus line-level dedup REWRITE (the CCNet/FineWeb boilerplate
-    // scrub): t23 only REPORTS cross-document pseudo-lines; this
-    // rewrites every document with those lines removed — headers,
-    // footers, license blocks that repeat across pages. Shape: one
-    // corpus-line-keyed shuffle builds the line doc-frequency table.
-    // The df>1 "boilerplate" subset is CORPUS-PROPORTIONAL on the
-    // real web (boilerplate is a huge, growing set at CC scale), so
-    // it must never ride a forced broadcast; instead a FIXED-SIZE
-    // bloom (2^20 bits — constant whatever the corpus) built over the
-    // boilerplate hashes broadcasts as one row. Lines the bloom
-    // rejects are definitively clean and stay map-side (zero shuffle
-    // — the dominant branch: most corpus lines are unique); only the
-    // bloom-positive sliver (true boilerplate + the bounded
-    // false-positive rate) pays the exact anti-join, UNHINTED so AQE
-    // broadcasts it only when it measures small. Bloom false
-    // positives resolve in that exact join — bit-identical to a plain
-    // anti-join at any bloom size. Costs one extra corpus scan (the
-    // two branches) vs the old single-lineage shape; at 100 TB a
-    // rescan is linear IO while a corpus-proportional broadcast OOMs
-    // outright. The reassembly groupBy(doc_id) is the one remaining
-    // corpus-sized shuffle and carries only surviving line text.
-    // Documents whose every line is boilerplate drop out — the
-    // pipeline's drop-empty-docs step, folded in.
-    "t80_line_dedup" -> ((s, dir) => {
-      // posexplode_OUTER + the null-line drop ≡ the inner posexplode
-      // (chunk elements are never null; outer-only rows have a null
-      // line), but the outer form stops InferFiltersFromGenerate from
-      // pushing a size(tokenChunks(…))>0 filter below the projection —
-      // the r20 plans showed that inferred filter re-running the chunk
-      // kernel in EVERY one of this query's replicated scan branches
-      val lines = T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .tokenChunks(TextOps.tokens(col("text")), 10).as("chs"))
-        .select(col("doc_id"), size(col("chs")).cast("long").as("n_lines"),
-          posexplode_outer(col("chs")).as(Seq("pos", "line")))
-        .where(col("line").isNotNull)
-        .withColumn("lh", md5(col("line")))
-      val boiler = lines.groupBy("lh")
-        .agg(countDistinct(col("doc_id")).as("nd"))
-        .where(col("nd") > 1)
-        .select(col("lh"))
-      val bloom = boiler.agg(graft.functions.BloomExpressions
-        .bloomFilter(col("lh"), 1 << 20, 5).as("__bits"))
-      val tagged = lines.crossJoin(broadcast(bloom))
-        .withColumn("__maybe", graft.functions.BloomExpressions
-          .bloomMightContain(col("__bits"), col("lh")))
-        .drop("__bits")
-      val clean = tagged.where(!col("__maybe")).drop("__maybe")
-      val resolved = tagged.where(col("__maybe")).drop("__maybe")
-        .join(boiler, Seq("lh"), "left_anti")
-      clean.unionByName(resolved)
-        .groupBy("doc_id")
-        .agg(first(col("n_lines")).as("n_lines"),
-          concat_ws(" ",
-            transform(
-              array_sort(collect_list(struct(col("pos"), col("line")))),
-              c => c("line"))).as("text_clean"),
-          count(lit(1)).as("n_kept"))
-        .select(col("doc_id"), col("text_clean"), col("n_lines"),
-          (col("n_lines") - col("n_kept")).as("n_dropped"))
-    }),
-
-    // Hashed-feature linear quality classifier (the fastText/DCLM
-    // shape): unigram + bigram features hash into 256 buckets
-    // (md5-prefix — the hashing trick: model size is FIXED no matter
-    // the vocabulary, collisions are the accepted price), bucket
-    // weights are the seed-set purity — docs from src0/src1 stand in
-    // for the curated positive seed (wiki/books in a real pipeline) —
-    // and scoring is one broadcast join + a per-doc partial-agged sum.
-    // Everything is integer ppm floor division, so the DuckDB twin is
-    // bit-exact (no float ties, no ln ulp divergence). Train and
-    // apply are ONE job here for the oracle; production materializes
-    // the 256-row model once and only the broadcast-score side runs
-    // per corpus — the train pass is a single feature-keyed shuffle
-    // either way.
-    "t81_hash_classifier" -> ((s, dir) =>
-      hashClassifierScores(s, dir)
-        .select(col("doc_id"), col("n_feats"), col("score_ppm"),
-          expr("CAST(score_ppm > 500000 AS BIGINT)").as("keep"))),
-
-    // Classifier calibration audit (the reliability table every
-    // model-based quality filter should ship with — Guo et al. 2017):
-    // EQUAL-MASS decile bins of the t81 classifier's per-doc score
-    // (fixed-width bins are useless when scores concentrate — here
-    // the whole corpus lands in one 100k-ppm band), each comparing
-    // the bin's mean PREDICTED positive rate against the OBSERVED
-    // rate (membership in the curated seed t81 trained on). |gap| per
-    // bin is the ECE numerator; the threshold choice (t81's 0.5)
-    // reads straight off this table. Quantile binning needs a global
-    // rank — `twoLevelRank` keeps it hash-partitioned (no global
-    // sort, no one-reducer window); the doc total joins as a 1-row
-    // broadcast computed from a column-pruned count scan, NOT a
-    // second classifier pass. All integer ppm floor division on
-    // non-negative values — bit-exact cross-engine.
-    "t107_calibration_bins" -> ((s, dir) => {
-      // localCheckpointed SINCE the r20 map-side-dot rewrite: scoring
-      // no longer ends in an aggregate exchange, so the two
-      // twoLevelRank consumers have no shared stage to re-enter — each
-      // would re-run the kernel+dot corpus scan. The r19 probe that
-      // measured a cut SLOWER (2.14 → 2.57 s) was against the old
-      // exchange-terminated shape; the materialized rows are 4 narrow
-      // columns (the r19 t78 precedent), which is the case where a cut
-      // pays.
-      val scored = hashClassifierScores(s, dir).localCheckpoint(false)
-      // docs with null text produce no features and never score —
-      // the cheap count must use the same membership rule
-      val n1 = T(s, dir, "documents").where(col("text").isNotNull)
-        .agg(count(lit(1)).as("n"))
-      Windows.twoLevelRank(scored, Seq.empty,
-        expr("score_ppm div 1000"),
-        Seq(col("score_ppm"), col("doc_id")), "r")
-        .crossJoin(broadcast(n1))
-        .withColumn("bin", expr("((r - 1) * 10) div n"))
-        .withColumn("y", when(col("source").isin("src0", "src1"), 1L)
-          .otherwise(0L))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          min("score_ppm").as("min_pred_ppm"),
-          max("score_ppm").as("max_pred_ppm"),
-          sum("score_ppm").as("sp"), sum("y").as("sy"))
-        .select(col("bin"), col("n_docs"),
-          col("min_pred_ppm"), col("max_pred_ppm"),
-          expr("sp div n_docs").as("mean_pred_ppm"),
-          expr("(sy * 1000000) div n_docs").as("obs_pos_ppm"),
-          abs(expr("sp div n_docs") - expr("(sy * 1000000) div n_docs"))
-            .as("gap_ppm"))
-    }),
-
-    // Z-order data layout (the OPTIMIZE ZORDER shape): assign every
-    // event a Morton key interleaving the bits of its two query
-    // dimensions (user, value bucket), radix-split the key space into
-    // files, and report per-file min/max of BOTH dims — the column
-    // stats a scan prunes on. The point at 100 TB: a z-ordered write
-    // makes range predicates on EITHER dimension skip most files
-    // (linear-order sorting serves only its leading column). The bit
-    // spread uses the classic fixed-shift mask cascade, so both
-    // engines compute it in pure integer ops — no per-bit loop, no
-    // UDF; the whole key derivation is map-side, and the only shuffle
-    // is the per-file stats aggregation (file-count-sized).
-    "t82_zorder_layout" -> ((s, dir) =>
-      T(s, dir, "events")
-        .select(col("event_id"),
-          expr("user_id & 65535").as("ux"),
-          expr("CAST(floor(value) AS BIGINT) & 65535").as("vx"))
-        .withColumn("zkey",
-          expr(s"${zSpread("ux")} | (${zSpread("vx")} << 1)"))
-        .withColumn("file_id", expr("zkey div 16384")) // 2^14-key files
-        .groupBy("file_id")
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("ux")).as("min_user"), max(col("ux")).as("max_user"),
-          min(col("vx")).as("min_val"), max(col("vx")).as("max_val"))),
-
-    // RAG passage chunking with overlap: fixed-width token windows
-    // (w=30) at stride 20, so consecutive chunks share 10 tokens —
-    // the retrieval-ingestion step that keeps answers from being cut
-    // at chunk boundaries. Entirely map-side (per-row sequence +
-    // slice + explode); the deliberate ~1.5× text inflation is the
-    // documented storage trade — at corpus scale you materialize
-    // (doc_id, chunk_id, token offsets) and defer chunk text to read
-    // time if the index layer allows it.
-    "t83_chunk_overlap" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          posexplode(transform(
-            sequence(lit(0), expr("(size(toks) - 1) div 20")),
-            i => concat_ws(" ", slice(col("toks"), i * 20 + 1, lit(30)))))
-            .as(Seq("chunk_id", "chunk_text")))
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-          col("chunk_text"),
-          size(split(col("chunk_text"), " ")).cast("long").as("n_tokens"))),
-
-    // CCNet-style perplexity split (Wenzek et al. 2020): score every
-    // document under a reference-domain bigram LM (here source=src0 —
-    // the pipeline's "Wikipedia" stand-in — per language, add-one
-    // smoothed so OOV bigrams score finitely), then split each
-    // language into head/middle/tail terciles by score — the head
-    // tercile is what LLaMA-style pipelines keep. The LM tables are
-    // vocab-sized (Heaps' law) and join as broadcasts; the tercile
-    // needs each doc's exact per-language rank, which would be a
-    // one-reducer global sort per language — so ranks come from the
-    // t68 two-level scan: score-decibucket counts get per-lang
-    // exclusive offsets (a window over the tiny bucket table), docs
-    // rank within (lang, bucket) only. Languages with no reference
-    // docs drop out (inner join on the LM's lang set — documented).
-    // Ordering is on the ROUND-6 score (cross-engine stable, the t53
-    // precedent) with doc_id tiebreak, so ranks are deterministic.
-    "t75_ccnet_buckets" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val (bg0, ug0, vsz) =
-        TextOps.bigramLm(docs.where(col("source") === "src0"),
-          "lang", "text")
-      // scored is consumed three times (per-language totals + the
-      // two-level rank's bucket/join sides); its lineage is the full
-      // LM train+score pipeline, so cut it once — narrow (id, lang,
-      // score) rows, the t78/t129 two-consumer contract
-      val scored =
-        TextOps.bigramLmScore(docs, "doc_id", "lang", "text",
-          bg0, ug0, vsz)
-          .localCheckpoint(false)
-      val nLang = scored.groupBy("lang").agg(count(lit(1)).as("__nl"))
-      val ranked = Windows.twoLevelRank(scored, Seq("lang"),
-        (-floor(col("lm_lp") * 10)).cast("long"),
-        Seq(col("lm_lp").desc, col("doc_id")), "__rk")
-      val tb = expr("((__rk - 1) * 3) div __nl")
-      ranked.join(broadcast(nLang), Seq("lang"))
-        .select(col("doc_id"), col("lang"), col("lm_lp"),
-          when(tb === 0, "head").when(tb === 1, "middle")
-            .otherwise("tail").as("ppl_bucket"))
-    }),
-
-    // LSH index-quality metric — recall AND precision of the minhash
-    // band index against exact Jaccard ground truth (the dedup-side
-    // twin of t60_ivf_recall: the number that tunes k/bands before a
-    // corpus-wide dedup run believes its candidate set). t60's probe
-    // shape: an ABSOLUTE-bounded probe set (≤100 docs at any corpus
-    // size) is scored against the FULL corpus — truth is each probe's
-    // true Jaccard >= 0.5 neighbors anywhere in the corpus (probe side
-    // broadcast: one linear corpus pass, never corpus all-pairs), and
-    // candidates are the probes' `Dedup.lshBandKeys` joined to the
-    // corpus band keys — the exact index surface production dedup
-    // queries (8 hashes, 4 bands). Pairs keep probe orientation
-    // (probe_id, other_id), matching t60's per-query framing. Integer-
-    // ppm ratios; recall < 1 is expected by design (band-index hit
-    // probability 1-(1-J^2)^4 ≈ 0.68 at J = 0.5).
-    "t76_lsh_recall" -> ((s, dir) => {
-      val shingled = T(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("shingles"))
-      val isProbe = col("doc_id") % 20 === 0 && col("doc_id") < 2000
-      // ONE tokenize+shingle pass: sets is cut once and feeds all four
-      // consumers (truth probe + corpus sides, band-key probe + corpus
-      // sides) — uncut, the corpus re-tokenized per consumer (r19).
-      // Band keys derive from the DISTINCTed arrays: minhash is a min
-      // over per-element hashes, so duplicates cannot change any
-      // signature, and bandedKeys applies the same size>0 gate —
-      // identical keys, one pass.
-      val sets = shingled
-        .select(col("doc_id"), array_distinct(col("shingles")).as("ss"))
-        .where(size(col("ss")) > 0)
-        .localCheckpoint(false)
-      // Exact ground truth as an INTERSECTION COUNT, not a per-pair
-      // set kernel (r20, guide §2.3/§8 — decide with small rows): the
-      // old shape nested-loop-joined every (probe, corpus) pair and
-      // rebuilt a hash set per pair (O(probes · corpus · |set|) —
-      // measured 3.4 task-seconds at sf0.1, nearly all of t76).
-      // Shared shingles are an equi-join: explode both sides of the
-      // one cut `sets` pass, broadcast-hash-join on the shingle, and
-      // count matches per pair — the arrays are DISTINCTed upstream,
-      // so the match count IS |A∩B|, and J ≥ 0.5 ⇔ 2|A∩B| ≥ |A∪B| =
-      // |A|+|B|−|A∩B| ⇔ 3·|A∩B| ≥ |A|+|B|, exact integers. Pairs with
-      // J ≥ 0.5 share ≥ 1 shingle, so the equi-join loses nothing —
-      // result-identical, work O(shared shingles) not O(pairs·|set|),
-      // and the count aggregation parallelizes past the corpus scan's
-      // row-group count (isolated sf0.1: t76 2.9 → see plans/r20).
-      val truth = sets.where(isProbe)
-        .select(col("doc_id").as("probe_id"),
-          size(col("ss")).cast("long").as("__na"),
-          explode(col("ss")).as("__sh"))
-        .hint("broadcast")
-        .join(sets.select(col("doc_id").as("other_id"),
-          size(col("ss")).cast("long").as("__nb"),
-          explode(col("ss")).as("__sh")), Seq("__sh"))
-        .where(col("probe_id") =!= col("other_id"))
-        .groupBy("probe_id", "other_id")
-        .agg(count(lit(1)).as("__i"),
-          first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
-        .where(col("__i") * 3 >= col("__na") + col("__nb"))
-        .select("probe_id", "other_id")
-      val keys = Dedup.lshBandKeys(sets, "doc_id", "ss",
-        k = 8, bands = 4)
-      val cand = broadcast(keys.where(isProbe)
-          .select(col("doc_id").as("probe_id"), col("band"), col("bh")))
-        .join(keys.select(col("doc_id").as("other_id"),
-          col("band"), col("bh")), Seq("band", "bh"))
-        .where(col("probe_id") =!= col("other_id"))
-        .select("probe_id", "other_id").distinct()
-      // one full-outer join + one aggregate: truth and cand (the two
-      // expensive corpus passes) each compute exactly ONCE — separate
-      // count aggregates would re-derive both subtrees per scalar
-      truth.withColumn("__t", lit(1L))
-        .join(cand.withColumn("__c", lit(1L)),
-          Seq("probe_id", "other_id"), "full_outer")
-        .agg(count(col("__t")).as("n_truth"),
-          count(col("__c")).as("n_cand"),
-          count(when(col("__t").isNotNull && col("__c").isNotNull,
-            lit(1))).as("n_hit"))
-        .select(col("n_truth"), col("n_cand"), col("n_hit"),
-          when(col("n_truth") > 0,
-            expr("(1000000 * n_hit) div n_truth")).as("recall_ppm"),
-          when(col("n_cand") > 0,
-            expr("(1000000 * n_hit) div n_cand")).as("precision_ppm"))
-    }),
-
-    // BPE tokenizer TRAINING — learn the merge table itself (t37 only
-    // counts pairs; this is the step that BUILDS the tokenizer a
-    // pretraining pipeline ships). One corpus pass folds the corpus to
-    // the distinct-word count table; each of the 8 merge iterations
-    // runs on that vocab-sized table only (TextOps.bpeTrainMerges —
-    // the driver holds 8 scalar pairs, the q39 k-means precedent).
-    // Oracle: the training loop UNROLLED into SQL CTEs (one
-    // pair-count/top-1/merge round each — bpeTrainIterSql), bit-exact
-    // vs this side; the sequential-reference equivalence is
-    // additionally spec'd in TrainingPipelineSpec.
-    "t71_bpe_train" -> ((s, dir) => {
-      import s.implicits._
-      trainedMerges(s, dir)
-        .zipWithIndex
-        .map { case ((a, b, c), i) => (i + 1L, a, b, a + b, c) }
-        .toDF("rank", "first", "second", "merged", "cnt")
-    }),
-
-    // Sequence packing, concat-and-chunk policy (the corpus → fixed
-    // 2048-token training-window step; n_splits counts context-window
-    // boundary crossings — the fragmentation metric packing policies
-    // trade against). Each doc needs the exclusive prefix sum of token
-    // counts in doc_id order; a single global window is a one-reducer
-    // sort, so this uses the two-level distributed scan: per-bucket
-    // sums (64 docs/bucket; tiny) get bucket offsets via an exclusive
-    // cumsum over the bucket table, then each doc adds an IN-bucket
-    // exclusive cumsum (window partitioned by bucket — parallel). The
-    // bucket-level window is corpus/64-sized; for corpora where that
-    // itself is big, the same two-level step nests (buckets of
-    // buckets). The doc-side join and window share the bucket key, so
-    // the exchange is reused.
-    "t68_sequence_pack" -> ((s, dir) => {
-      val seqLen = 2048L
-      val toks = T(s, dir, "documents")
-        .select(col("doc_id"),
-          TextOps.bpeTokenCount(col("text")).as("n_tok"))
-        .withColumn("__b", expr("doc_id DIV 64"))
-      val bucketOff = toks.groupBy("__b")
-        .agg(sum(col("n_tok")).as("__bs"))
-        .withColumn("__off", coalesce(
-          sum(col("__bs")).over(Window.orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("__b", "__off")
-      val wIn = Window.partitionBy("__b").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      toks.join(bucketOff, Seq("__b"))
-        .withColumn("start", col("__off") +
-          coalesce(sum(col("n_tok")).over(wIn), lit(0L)))
-        .withColumn("first_seq", expr(s"start DIV $seqLen"))
-        .withColumn("last_seq",
-          expr(s"(start + greatest(n_tok, 1L) - 1L) DIV $seqLen"))
-        .select(col("doc_id"), col("n_tok"), col("start"),
-          col("first_seq"), col("last_seq"),
-          (col("last_seq") - col("first_seq")).as("n_splits"))
-    }),
-
-    // Inverted index: term → sorted distinct posting list + document
-    // frequency, posting lists serialized as csv strings so the compare
-    // is engine-portable. At 100 TB a stopword-grade term's posting
-    // list is a single-reducer OOM, so the cap is enforced BEFORE any
-    // collect_list buffer exists: pass 1 computes df per term (count
-    // only — partial map-side, skew-safe), pass 2 collects postings
-    // ONLY for terms whose df is under the cap (the join bounds every
-    // buffer by maxDf); over-cap terms keep their exact df, an empty
-    // list and truncated=1. Both joins/aggs share the term key, so
-    // AQE reuses the exchange.
-    "t22_inverted_index" -> ((s, dir) => {
-      val maxDf = 64L
-      val pairs = T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(array_distinct(TextOps.tokensLower(col("text"))))
-            .as("term"))
-        .where(length(col("term")) > 0)
-      val dfreq = pairs.groupBy("term").agg(count(lit(1)).as("df"))
-      val kept = pairs
-        .join(dfreq.where(col("df") <= maxDf), Seq("term"))
-        .groupBy("term")
-        .agg(max(col("df")).as("df"),
-          concat_ws(",", sort_array(collect_list(col("doc_id"))))
-            .as("postings"))
-        .withColumn("truncated", lit(0L))
-      val capped = dfreq.where(col("df") > maxDf)
-        .select(col("term"), col("df"),
-          lit("").as("postings"), lit(1L).as("truncated"))
-      kept.unionByName(capped)
-    }),
-
-    // Cross-document boilerplate: pseudo-lines (10-token chunks)
-    // occurring in more than one document — the corpus-level line-dedup
-    // signal (headers/footers/licenses at web scale). Line text never
-    // shuffles: lines hash map-side (md5) and only (hash, doc) pairs
-    // aggregate; output keeps one example line per hash via min.
-    "t23_boilerplate_lines" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(graft.functions.SketchExpressions
-            .tokenChunks(TextOps.tokens(col("text")), 10))
-            .as("line"))
-        .groupBy(md5(col("line")).as("line_hash"))
-        .agg(countDistinct(col("doc_id")).as("n_docs"),
-          count(lit(1)).as("n_occ"),
-          min(col("line")).as("line"))
-        .where(col("n_docs") > 1)),
-
-    // Sequence packing: assign documents to fixed-token-budget packs by
-    // an exclusive running token count, deterministically ordered by
-    // doc_id WITHIN each source shard — the standard layout for
-    // pretraining batch assembly. Greedy first-fit is order-dependent;
-    // the deterministic shard+cumsum form is reproducible anywhere.
-    // The running count is `Windows.twoLevelPrefixSum` keyed on
-    // (source × doc_id block): a single-level per-source cumsum
-    // window would serialize a dominant source through ONE task —
-    // the t95/t96 trap.
-    "t24_seq_packing" -> ((s, dir) => {
-      val toks = T(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tokens"))
-      Windows.twoLevelPrefixSum(toks, Seq("source"),
-          expr("doc_id DIV 64"), Seq(col("doc_id")),
-          col("n_tokens"), "__cum",
-          broadcastBuckets = false) // doc-block buckets grow with the corpus
-        .withColumn("pack_id",
-          floor(col("__cum") / lit(2000.0)).cast("long"))
-        .select(col("source"), col("doc_id"), col("n_tokens"),
-          col("pack_id"))
-    }),
-
-    // Quality-tiered sharding: ntile(4) per language by descending
-    // quality score (doc_id tiebreak) — curriculum/data-mixing shards.
-    // The quality signal comes off the single-pass textStats kernel.
-    // ntile is derived arithmetically from a `Windows.twoLevelRank`
-    // rank plus a lang-cardinality count broadcast (the SQL-standard
-    // tiling: the first n%k tiles take ⌈n/k⌉ rows — exactly Spark's
-    // and DuckDB's NTile), because the builtin ntile window needs a
-    // single-level per-lang sort: ONE task per language at 100 TB
-    // when one language dominates the corpus.
-    "t25_quality_shards" -> ((s, dir) => {
-      // cut the narrow (lang, id, q) projection (t103's rationale)
-      val scored = T(s, dir, "documents")
-        .select(col("lang"), col("doc_id"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"))
-        .select(col("lang"), col("doc_id"),
-          TextOps.qualityScoreFrom(col("__st")).as("q_score"))
-        .localCheckpoint(false)
-      val counts = scored.groupBy("lang").agg(count(lit(1)).as("__n"))
-      // coalesce(−1) in bucket AND order: NULL q_score would silently
-      // drop out of the bucket join; −1 sits below every real score,
-      // reproducing q-desc NULLS LAST exactly
-      Windows.twoLevelRank(scored, Seq("lang"),
-          -floor(coalesce(col("q_score"), lit(-1.0)) * lit(10000.0))
-            .cast("long"),
-          Seq(coalesce(col("q_score"), lit(-1.0)).desc, col("doc_id")),
-          "__r")
-        .join(broadcast(counts), Seq("lang"))
-        .withColumn("tier",
-          expr("""CASE WHEN __r <= (__n % 4) * (__n DIV 4 + 1)
-                  THEN (__r - 1) DIV (__n DIV 4 + 1) + 1
-                  ELSE __n % 4
-                    + (__r - (__n % 4) * (__n DIV 4 + 1) - 1)
-                      DIV (__n DIV 4) + 1 END""").cast("long"))
-        .select("lang", "doc_id", "q_score", "tier")
-    }),
-
-    // Data-mixing weights: per-source token share of the corpus (the
-    // sampling-weight table a pretraining mixer consumes). One agg
-    // shuffle keyed by source; the corpus total is a lazy 1-row
-    // broadcast (q32 pattern — no job at plan build). Integer sums
-    // keep the ratio engine-exact.
-    "t26_mix_weights" -> ((s, dir) => {
-      val per = T(s, dir, "documents")
-        .select(col("source"),
-          size(split(col("text"), "\\s+")).cast("long").as("__t"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("__t")).as("n_tokens"))
-      val tot = per.agg(sum(col("n_tokens")).as("__tot"))
-      per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("n_tokens"),
-          round(col("n_tokens").cast("double") / col("__tot"), 6)
-            .as("weight"))
-    }),
-
-    // Temperature-scaled mixing (t26's raw shares at α=0.7 — the
-    // standard multilingual sampling correction that up-weights tail
-    // sources without letting the head dominate): wᵢ = pᵢ^α / Σpⱼ^α.
-    // Same tiny-aggregate shape as t26 — two 1-row broadcasts, never
-    // a corpus shuffle beyond the per-source count.
-    "t55_temp_mixing" -> ((s, dir) => {
-      val alpha = 0.7
-      val per = T(s, dir, "documents")
-        .select(col("source"),
-          size(split(col("text"), "\\s+")).cast("long").as("__t"))
-        .groupBy("source")
-        .agg(sum(col("__t")).as("n_tokens"))
-      val tot = per.agg(sum(col("n_tokens")).as("__tot"))
-      // pa rounds to 12 decimals BEFORE the normalizing sum so the
-      // engines sum identical addends (pow/ulp differences otherwise
-      // feed an order-sensitive double sum into the exact compare)
-      val scaled = per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_tokens"),
-          round(pow(col("n_tokens").cast("double") / col("__tot"), alpha),
-            12).as("__pa"))
-      val z = scaled.agg(sum(col("__pa")).as("__z"))
-      scaled.crossJoin(broadcast(z))
-        .select(col("source"), col("n_tokens"),
-          round(col("__pa") / col("__z"), 6).as("temp_weight"))
-    }),
-
-    // Unigram-LM cross-entropy scoring: per-document average token
-    // surprisal ln(N/count(term)) against the corpus unigram model —
-    // the classic LM-quality proxy for filtering. Vocabulary agg +
-    // token⋈vocab join (AQE broadcasts when the vocab is small), corpus
-    // token count as a lazy 1-row broadcast.
-    "t27_unigram_logprob" -> ((s, dir) => {
-      val f = T(s, dir, "documents").select(col("doc_id"),
-        explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-      val v = f.groupBy("term").agg(count(lit(1)).as("n"))
-      val tot = f.agg(count(lit(1)).as("__nn"))
-      f.join(v, Seq("term")).crossJoin(broadcast(tot))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tok"),
-          round(avg(log(col("__nn").cast("double") / col("n"))), 6)
-            .as("xent"))
-    }),
-
-    // Product-quantization encode: 64-dim vectors → 8 codes (one per
-    // 8-dim subspace, nearest of the 16 seed sub-centroids, ties →
-    // smallest code). Fully map-side — broadcast codebook + argmin
-    // kernel per subspace; at 100 TB the index payload shrinks 32×
-    // (8 bytes of codes vs 256 bytes of floats). Long-form
-    // (vec_id, subspace, code) for the oracle.
-    "t28_pq_encode" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val cb = e.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding"))
-      Vectors.pqEncode(e, cb, "vec_id", "cid", "embedding",
-        m = 8, dims = 64)
-        .select(col("vec_id"), posexplode(col("codes")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("j"),
-          col("col").as("code"))
-    }),
-
-    // PQ asymmetric-distance search: exact queries scored against the
-    // CODES-only corpus (each doc vector stands in as its codebook
-    // reconstruction) — the scan half of IVF-PQ. Corpus side carries
-    // 8 codes/row, never the vectors; queries + codebook broadcast.
-    "t29_pq_adc" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val cb = e.where(col("vec_id") < 16)
-        .select(col("vec_id").as("cid"), col("embedding"))
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("qid"), col("embedding"))
-      val enc = Vectors.pqEncode(e, cb, "vec_id", "cid", "embedding",
-        m = 8, dims = 64)
-      Vectors.pqAdcTopK(q, enc, cb, "qid", "vec_id", "cid", "embedding",
-        "codes", m = 8, dims = 64, k = 5)
-    }),
-
-    // BM25 retrieval (k1=1.2, b=0.75, Lucene-style idf): score every
-    // document against the corpus's 3 highest-df terms. The query-term
-    // set and the (N, avgdl) stats are lazy 1-row/3-row broadcasts;
-    // the only corpus-sized shuffles are the tf and dl aggregations.
-    // At 100 TB the qt join stays broadcast for any real query; df/dl
-    // are the standard index-build aggs.
-    "t30_bm25" -> ((s, dir) => {
-      val g = T(s, dir, "documents").select(col("doc_id"),
-        explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-      val dl = g.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      val st = dl.agg(count(lit(1)).as("__n"),
-        avg(col("dl").cast("double")).as("__avgdl"))
-      val tf = g.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      val qt = tf.groupBy("term").agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("term")).limit(3)
-      tf.join(broadcast(qt), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(st))
-        .select(col("doc_id"),
-          (log((col("__n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * col("tf") * lit(2.2)
-            / (col("tf") + lit(1.2) *
-               (lit(0.25) + lit(0.75) * col("dl") / col("__avgdl"))))
-            .as("__s"))
-        .groupBy("doc_id")
-        .agg(round(sum(col("__s")), 6).as("bm25"))
-    }),
-
-    // Fuzzy decontamination: a training document is suspect iff it
-    // shares ANY MinHash-LSH band bucket with a held-out benchmark
-    // document (doc_id % 20 == 0 plays the benchmark). Semi-join on
-    // band keys — near-dup recall without ever materializing pairs;
-    // the exact-match twin is t13.
-    "t31_fuzzy_decontam" -> ((s, dir) => {
-      val keys = Dedup.lshBandKeys(
-        T(s, dir, "documents")
-          // pre-gate ≡ internal size gate (t2's rationale)
-          .where(size(TextOps.tokens(col("text"))) >= 3)
-          .select(col("doc_id"),
-            graft.functions.SketchExpressions
-              .wordShingles(TextOps.tokens(col("text")), 3).as("sh")),
-        "doc_id", "sh", k = 8, bands = 4, preGated = true)
-      val bench = keys.where(col("doc_id") % 20 === 0)
-        .select(col("band"), col("bh")).distinct()
-      val hits = keys.where(col("doc_id") % 20 =!= 0)
-        .join(bench, Seq("band", "bh"), "left_semi")
-        .select("doc_id").distinct()
-      T(s, dir, "documents").where(col("doc_id") % 20 =!= 0)
-        .select("doc_id")
-        .join(hits.withColumn("__hit", lit(1L)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("__hit"), lit(0L)).as("contaminated"))
-    }),
-
-    // Stratified deterministic sampling: keep the top 20% of each
-    // source by md5(doc_id) rank — reproducible anywhere (no RNG
-    // state), per-stratum quota honored exactly. The 100 TB shape:
-    // ranks via `Windows.twoLevelRank` bucketed on the hash's first
-    // 3 hex digits (fixed-width lowercase hex ⇒ lexical order ≡
-    // numeric order, so the bucket is monotone in the rank order); a
-    // single-level per-source window would sort a dominant stratum
-    // through ONE task. Stratum sizes are a source-cardinality agg
-    // broadcast back.
-    "t32_stratified_sample" -> ((s, dir) => {
-      val hashed = T(s, dir, "documents")
-        .select(col("source"), col("doc_id"))
-        .withColumn("__h", md5(col("doc_id").cast("string")))
-      val counts = hashed.groupBy("source").agg(count(lit(1)).as("__n"))
-      Windows.twoLevelRank(hashed, Seq("source"),
-          conv(substring(col("__h"), 1, 3), 16, 10).cast("long"),
-          Seq(col("__h"), col("doc_id")), "__rn")
-        .join(broadcast(counts), Seq("source"))
-        .where(col("__rn") <= ceil(col("__n") * 0.2))
-        .select(col("source"), col("doc_id"))
-    }),
-
-    // Overlapping token-window chunking (window 40, stride 30) — the
-    // context-length prep step before tokenization/embedding. Chunks
-    // are emitted as (doc, chunk_idx, token count, md5) so the compare
-    // is engine-portable; the chunk list is built map-side from ONE
-    // tokens array (no per-chunk re-scan of the text).
-    "t33_doc_chunks" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("__t"))
-        .select(col("doc_id"),
-          posexplode(transform(
-            sequence(lit(0),
-              greatest(lit(0),
-                ceil((size(col("__t")) - lit(40)).cast("double")
-                  / 30.0).cast("int"))),
-            j => concat_ws(" ", slice(col("__t"), j * 30 + 1, lit(40))))))
-        .select(col("doc_id"), (col("pos") + 1).cast("long").as("chunk_id"),
-          size(split(col("col"), " ")).cast("long").as("n_tok"),
-          md5(col("col")).as("chunk_hash"))),
-
-    // Sub-document dedup: global first-occurrence paragraph (10-token
-    // chunk) dedup — every chunk instance after the first occurrence
-    // of its hash (ordered by doc, then position) is dropped; output
-    // is each document's surviving fraction. The shuffle is keyed by
-    // chunk HASH (never chunk text) and each hash group is tiny, so
-    // the window is skew-safe at corpus scale.
-    "t34_paragraph_dedup" -> ((s, dir) => {
-      val w = Window.partitionBy(col("__h"))
-        .orderBy(col("doc_id"), col("pos"))
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          posexplode(graft.functions.SketchExpressions
-            .tokenChunks(TextOps.tokens(col("text")), 10)))
-        .select(col("doc_id"), col("pos"), md5(col("col")).as("__h"))
-        .withColumn("__rn", row_number().over(w))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(when(col("__rn") === 1, 1L).otherwise(0L)).as("n_kept"))
-        .select(col("doc_id"), col("n_chunks"), col("n_kept"),
-          round(col("n_kept").cast("double") / col("n_chunks"), 6)
-            .as("kept_frac"))
-    }),
-
-    // Asymmetric containment |A∩B|/|A| over LSH candidate pairs —
-    // catches quotation/subset duplication that symmetric Jaccard
-    // under-scores (a doc wholly contained in a bigger one has low
-    // Jaccard but containment 1). Same candidate generation as t2;
-    // the set intersection runs only on candidates, never all pairs.
-    "t35_containment" -> ((s, dir) => {
-      // pre-gate ≡ internal size gate (t2's rationale)
-      val docs = T(s, dir, "documents")
-        .where(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"),
-          graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3).as("shingles"))
-      val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "shingles",
-        k = 8, bands = 4, preGated = true)
-      val sets = docs.select(col("doc_id"),
-        array_distinct(col("shingles")).as("ss"))
-      pairs
-        .join(sets.select(col("doc_id").as("id_a"), col("ss").as("__sa")),
-          Seq("id_a"))
-        .join(sets.select(col("doc_id").as("id_b"), col("ss").as("__sb")),
-          Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(size(array_intersect(col("__sa"), col("__sb")))
-            .cast("double") / size(col("__sa")), 6).as("cont_ab"),
-          round(size(array_intersect(col("__sa"), col("__sb")))
-            .cast("double") / size(col("__sb")), 6).as("cont_ba"))
-    }),
-
-    // Corpus health dashboard: one pass over the corpus → one row of
-    // doc/unique/token/quality/language totals (the monitoring
-    // endpoint a pipeline run reports). All inputs come off map-side
-    // kernels; the agg is a single global reduce.
-    "d7_corpus_stats" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("lang"), md5(col("text")).as("__h"),
-          size(split(col("text"), "\\s+")).cast("long").as("__t"),
-          graft.functions.SketchExpressions.textStats(col("text"))
-            .as("__st"))
-        .select(col("lang"), col("__h"), col("__t"),
-          TextOps.qualityScoreFrom(col("__st")).as("__q"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("__h")).as("n_unique"),
-          sum(col("__t")).as("n_tokens"),
-          round(avg(col("__q")), 6).as("avg_quality"),
-          countDistinct(col("lang")).as("n_langs"))),
-
-    // Approximate aggregates, SELF-GATED (the ε bounds folded into
-    // the query itself — no rows-only category left): every estimate
-    // column emits the EXACT answer when the estimate sits inside its
-    // ε band, so the DuckDB oracle — which cannot reproduce
-    // engine-specific sketch internals — hash-gates the whole row;
-    // when an estimate drifts OUT of band the raw estimate is emitted
-    // instead, the hash compare fails loudly, and the drifting value
-    // sits inspectable in the dump. Bands (same as a1b, judge-gated
-    // since r12): HLL datasketches ≈1.6% rsd → 5%; HLL++ ≈5% rsd →
-    // 15%; approx-percentile accuracy 1000 → rank error ≤1/1000 ≈ 1%
-    // of the near-uniform value spread. The 100 TB shapes stand: HLL
-    // sketches are MERGEABLE (partial per partition/day, merged
-    // across the corpus without re-scanning), approx percentiles
-    // bound memory where exact percentile would collect per-group
-    // arrays — the exact aggregates alongside are the verification
-    // harness, not the production plan.
-    "a1_approx_sketches" -> ((s, dir) =>
-      T(s, dir, "events").groupBy("event_type")
-        .agg(
-          hll_sketch_estimate(hll_sketch_agg(col("user_id")))
-            .as("__hll"),
-          approx_count_distinct(col("user_id")).as("__hpp"),
-          percentile_approx(col("value"), lit(0.5), lit(1000))
-            .as("__p50a"),
-          percentile(col("value"), lit(0.5)).as("__p50"),
-          countDistinct(col("user_id")).as("__u"),
-          (max(col("value")) - min(col("value"))).as("__spread"),
-          count(lit(1)).as("n"))
-        .select(col("event_type"), col("n"),
-          when(abs(col("__hll") - col("__u")) / col("__u") < 0.05,
-            col("__u")).otherwise(col("__hll")).as("approx_users"),
-          when(abs(col("__hpp") - col("__u")) / col("__u") < 0.15,
-            col("__u")).otherwise(col("__hpp"))
-            .as("approx_users_hllpp"),
-          when(abs(col("__p50a") - col("__p50")) <=
-              col("__spread") * 0.01,
-            col("__p50")).otherwise(col("__p50a")).as("p50_approx"))),
-
-    // a1's boolean twin (kept distinct from a1's snapped-value
-    // surface): the same ε bounds evaluated INSIDE the query against
-    // exact aggregates over the same rows, emitting only the booleans
-    // plus the exact count — the at-a-glance health row a dashboard
-    // reads. PropertySpec holds the same bounds in-suite.
-    "a1b_sketch_bounds" -> ((s, dir) =>
-      T(s, dir, "events").groupBy("event_type")
-        .agg(
-          hll_sketch_estimate(hll_sketch_agg(col("user_id"))).as("__hll"),
-          approx_count_distinct(col("user_id")).as("__hpp"),
-          percentile_approx(col("value"), lit(0.5), lit(1000))
-            .as("__p50a"),
-          percentile(col("value"), lit(0.5)).as("__p50"),
-          countDistinct(col("user_id")).as("__u"),
-          (max(col("value")) - min(col("value"))).as("__spread"),
-          count(lit(1)).as("n"))
-        .select(col("event_type"), col("n"),
-          (abs(col("__hll") - col("__u")) / col("__u") < 0.05)
-            .as("hll_ok"),
-          (abs(col("__hpp") - col("__u")) / col("__u") < 0.15)
-            .as("hllpp_ok"),
-          (abs(col("__p50a") - col("__p50")) <= col("__spread") * 0.01)
-            .as("p50_ok"))),
-
-    // KMV (k-minimum-values) distinct-count sketch via the custom
-    // TypedImperativeAggregate: per group, the 8 smallest DISTINCT
-    // md5(user_id) hashes — O(k) state, mergeable partials — plus the
-    // (k-1)/F(h_k) estimator derived declaratively from the sketch.
-    // Unlike HLL (a1, rows-only) the sketch output is deterministic
-    // given the input set, so this custom AGGREGATE is exact-gated
-    // against DuckDB. 13 hex chars = 52 bits: exact in a double.
-    "a2_kmv_distinct" -> ((s, dir) => {
-      val bk = graft.functions.AggregateExpressions
-        .bottomKStrings(md5(col("user_id").cast("string")), 8)
-      T(s, dir, "events").groupBy("event_type")
-        .agg(bk.as("__bk"))
-        .select(col("event_type"),
-          concat_ws(",", col("__bk")).as("bottom_hashes"),
-          round(when(size(col("__bk")) < 8,
-            size(col("__bk")).cast("double"))
-            .otherwise(lit(7.0) * lit(4503599627370496.0) /
-              conv(substring(element_at(col("__bk"), 8), 1, 13), 16, 10)
-                .cast("double")), 6).as("est_distinct"))
-    }),
-
-    // Heavy hitters via the Misra–Gries TypedImperativeAggregate:
-    // the sketch ships ≤64 counters per partition (vs a full
-    // vocabulary shuffle), GUARANTEES every term with freq > n/64 is
-    // among its candidates, and one exact counting pass over just the
-    // broadcast candidate set makes the output exact — so the final
-    // result is deterministic (= the terms with cnt·64 > n) and
-    // oracle-gated even though the sketch itself is order-sensitive.
-    // The 100 TB shape for "top terms": candidates prune the exact agg
-    // to a broadcast semi-join, never a vocabulary-wide shuffle.
-    "t36_heavy_hitters" -> ((s, dir) => {
-      val toks = T(s, dir, "documents")
-        .select(explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-      val cand = toks.agg(graft.functions.AggregateExpressions
-          .misraGries(col("term"), 64).as("__c"))
-        .select(explode(col("__c")).as("term"))
-      val tot = toks.agg(count(lit(1)).as("__n"))
-      toks.join(broadcast(cand), Seq("term"), "left_semi")
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .crossJoin(broadcast(tot))
-        .where(col("cnt") * 64 > col("__n"))
-        .select(col("term"), col("cnt"))
-    }),
-
-    // BPE-training inner loop: adjacent token-pair frequencies, top 20
-    // (the merge-candidate table each BPE iteration consumes). Pairs
-    // are generated map-side by zipping the token array against its
-    // own tail — no self-join, no positional explode+rejoin; the only
-    // shuffle is the pair-count agg (map-side partial combine).
-    "t37_bpe_pairs" -> ((s, dir) => {
-      val toks = filter(TextOps.tokensLower(col("text")),
-        t => length(t) > 0)
-      T(s, dir, "documents")
-        .select(toks.as("__t")).where(size(col("__t")) >= 2)
-        .select(explode(zip_with(
-          slice(col("__t"), lit(1), size(col("__t")) - 1),
-          slice(col("__t"), lit(2), size(col("__t")) - 1),
-          (a, b) => concat_ws(" ", a, b))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(20)
-    }),
-
-    // Snapshot diff (CDC between two corpus versions): full outer join
-    // on doc_id comparing content hashes → added/removed/changed rows
-    // only. The join ships md5 hashes, never document text; at scale
-    // both snapshots sort-merge on the id they are already bucketed by,
-    // and the "unchanged" majority is filtered before any further
-    // processing — the incremental-pipeline primitive that avoids
-    // re-running dedup/quality over 100 TB when 0.1% changed.
-    // Re-crawl/churn detection over the snapshot diff: an ADDED
-    // document that shares an LSH band bucket with a REMOVED one is
-    // (with high probability) the same content resurfacing under a new
-    // id — near-dup, not just exact — the signal that separates corpus
-    // CHURN from genuinely new data before paying to re-ingest.
-    // Snapshot membership follows t38's convention (old ≡ id%4≠3,
-    // new ≡ id%4≠0 ⇒ removed ≡ id%4=0, added ≡ id%4=3); both sides of
-    // the band-key semi-join are delta-sized — the t49 shape, never a
-    // corpus re-cluster.
-    "t58_neardup_churn" -> ((s, dir) => {
-      val keys = Dedup.lshBandKeys(
-        T(s, dir, "documents")
-          // pre-gate ≡ internal size gate (t2's rationale)
-          .where(size(TextOps.tokens(col("text"))) >= 3)
-          .select(col("doc_id"),
-            graft.functions.SketchExpressions
-              .wordShingles(TextOps.tokens(col("text")), 3).as("sh")),
-        "doc_id", "sh", k = 8, bands = 4, preGated = true)
-      val removed = keys.where(col("doc_id") % 4 === 0)
-        .select(col("band"), col("bh")).distinct()
-      val hits = keys.where(col("doc_id") % 4 === 3)
-        .join(removed, Seq("band", "bh"), "left_semi")
-        .select("doc_id").distinct()
-      T(s, dir, "documents").where(col("doc_id") % 4 === 3)
-        .select("doc_id")
-        .join(hits.withColumn("__hit", lit(1L)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("__hit"), lit(0L)).as("recrawl"))
-    }),
-
-    // DSIR importance weights (Xie et al. 2023, "Data Selection for
-    // Language Models via Importance Resampling"): per-document mean
-    // token log-likelihood ratio ln(p_target/p_corpus) under Laplace-
-    // smoothed unigram LMs — positive ⇒ the doc "looks like" the
-    // target domain (src0 stands in for e.g. wiki) and gets upsampled
-    // when training data is resampled by exp(weight). Two vocab aggs
-    // (map-side partial), ONE term-keyed join shuffle over the token
-    // stream, then the per-doc agg; the (totS, totT, V) scalars ride a
-    // lazy 1-row broadcast. At 100 TB the published trick — hash terms
-    // into a fixed-width bucket vocab — keeps LM state O(buckets) with
-    // this exact plan shape.
-    "t59_dsir_weight" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val (vocab, scalars) = TextOps.dsirLm(d, "text", "source", "src0")
-      TextOps.dsirScore(d, "doc_id", "text", vocab, scalars)
-    }),
-
-    // Corpus-drift monitor: per-source KL divergence KL(new ‖ old)
-    // between the Laplace-smoothed unigram distributions of two crawl
-    // snapshots (t38's doc_id%4 convention) — the alarm that a feed
-    // changed character between crawls (template swap, spam flood,
-    // language shift) before it pollutes the mix. Two (source, term)
-    // aggs with map-side partials, one full-outer join on the union
-    // vocab, per-source scalar joins — all O(vocab), never O(corpus)
-    // beyond the token scan.
-    "t61_snapshot_kl" -> ((s, dir) => {
-      val f = T(s, dir, "documents").select(col("source"), col("doc_id"),
-        explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-      val old = f.where(col("doc_id") % 4 =!= 3)
-        .groupBy("source", "term").agg(count(lit(1)).as("__no"))
-      val nw = f.where(col("doc_id") % 4 =!= 0)
-        .groupBy("source", "term").agg(count(lit(1)).as("__nn"))
-      val vocab = old.join(nw, Seq("source", "term"), "full_outer")
-      val scal = vocab.groupBy("source").agg(
-        sum(coalesce(col("__no"), lit(0L))).cast("double").as("__to"),
-        sum(coalesce(col("__nn"), lit(0L))).cast("double").as("__tn"),
-        count(lit(1)).cast("double").as("__v"))
-      val pn = (coalesce(col("__nn"), lit(0L)).cast("double") + 1.0) /
-        (col("__tn") + col("__v"))
-      val po = (coalesce(col("__no"), lit(0L)).cast("double") + 1.0) /
-        (col("__to") + col("__v"))
-      vocab.join(scal, Seq("source"))
-        .groupBy("source")
-        .agg(round(sum(pn * log(pn / po)), 6).as("kl_new_old"))
-    }),
-
-    "t38_snapshot_diff" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-      val old = d.where(col("doc_id") % 4 =!= 3)
-        .select(col("doc_id"), md5(col("text")).as("__ho"))
-      val nw = d.where(col("doc_id") % 4 =!= 0)
-        .select(col("doc_id"),
-          md5(when(col("doc_id") % 7 === 0,
-            concat(col("text"), lit(" v2")))
-            .otherwise(col("text"))).as("__hn"))
-      old.join(nw, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          when(col("__ho").isNull, "added")
-            .when(col("__hn").isNull, "removed")
-            .when(col("__ho") =!= col("__hn"), "changed")
-            .otherwise("unchanged").as("change"))
-        .where(col("change") =!= "unchanged")
-    }),
-
-    // Sequence-length histogram: token counts bucketed by 16 (capped
-    // at bucket 15) → docs and total tokens per bucket. The planning
-    // input for context-length packing (t24) and truncation policy.
-    // Map-side bucketing, one 16-row agg — scan-bound at any scale.
-    "t39_len_histogram" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(size(filter(TextOps.tokensLower(col("text")),
-          t => length(t) > 0)).as("__nt"))
-        .select(least(floor(col("__nt") / 16), lit(15)).cast("long")
-          .as("bucket"), col("__nt"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("__nt")).cast("long").as("n_tokens"))),
-
-    // Bloom-prefiltered decontamination — same answer as the exact
-    // 3-gram join (t13), gated against the SAME exact-join oracle: a
-    // Bloom filter has no false negatives, so prefilter + exact
-    // confirm ≡ exact. The eval-set grams reduce to one 64 KiB bitmap
-    // (mergeable partial agg), broadcast as a 1-row cross join, and the
-    // corpus grams are filtered MAP-SIDE before the join — at 100 TB
-    // the shuffle carries only bloom-positive grams (FP rate ~0.6% at
-    // k=5, m/n≈10) instead of every gram in the corpus.
-    "t40_bloom_decontam" -> ((s, dir) => {
-      import graft.functions.{BloomExpressions, SketchExpressions}
-      val sh = T(s, dir, "documents")
-        .select(col("doc_id"),
-          SketchExpressions.wordShingles(TextOps.tokens(col("text")), 3)
-            .as("sh"))
-      // explode_OUTER + null-gram drop ≡ inner explode (t13's rationale)
-      val evalGrams = sh.where(col("doc_id") % 97 === 0)
-        .select(explode_outer(col("sh")).as("g"))
-        .where(col("g").isNotNull).distinct()
-      val bloom = evalGrams.agg(
-        BloomExpressions.bloomFilter(col("g"), 1 << 19, 5).as("__bf"))
-      sh.where(col("doc_id") % 97 =!= 0)
-        .select(col("doc_id"), explode_outer(col("sh")).as("g"))
-        .where(col("g").isNotNull)
-        .crossJoin(broadcast(bloom))
-        .where(BloomExpressions.bloomMightContain(col("__bf"), col("g")))
-        .join(broadcast(evalGrams), Seq("g"))
-        .groupBy("doc_id")
-        .agg(countDistinct(col("g")).as("n_hits"))
-    }),
-
-    // Per-document character entropy (CharEntropyExpr): the gibberish /
-    // boilerplate quality signal. Single map-side pass per document —
-    // the declarative twin would explode every character through two
-    // shuffles. Oracle recomputes H = log2(n) − Σc·log2(c)/n in DuckDB
-    // from exact per-char counts.
-    "t41_char_entropy" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          round(graft.functions.SketchExpressions.charEntropy(col("text")), 6)
-            .as("entropy"))),
-
-    // Weighted sampling without replacement (Efraimidis–Spirakis):
-    // rank by u^(1/w) ⇔ ln(u)/w with u a DETERMINISTIC per-doc uniform
-    // from the first 52 md5 bits (exact in a double on both engines —
-    // same trick as a2), w = token count. Top-25 is a
-    // TakeOrderedAndProject: map-side per-partition heaps, only 25
-    // rows per partition reach the driver — no global sort at 100 TB.
-    // The length-weighted variant of the quality-weighted subsampling
-    // a mixture builder runs.
-    "t42_weighted_sample" -> ((s, dir) => {
-      val w = size(filter(TextOps.tokensLower(col("text")),
-        t => length(t) > 0)).cast("double")
-      val u = (conv(substring(
-          md5(concat(col("doc_id").cast("string"), lit("|ws"))), 1, 13),
-          16, 10).cast("double") + 1.0) / lit(4503599627370496.0)
-      T(s, dir, "documents")
-        .select(col("doc_id"), w.as("__w"), (log(u) / w).as("__key"))
-        // w=0 (empty doc) ⇒ ln(u)/0 = -Inf/NaN, and NaN sorts differently
-        // in Spark vs DuckDB; a zero-weight item has sample probability 0
-        // under Efraimidis–Spirakis anyway, so drop it before ranking.
-        .where(col("__w") > 0)
-        .orderBy(col("__key").desc, col("doc_id"))
-        .limit(25)
-        .select(col("doc_id"), col("__w").cast("long").as("n_tokens"))
-    }),
-
-    // Vocabulary-growth (Heaps' law) curve over word BIGRAMS (the
-    // unigram vocab of the synthetic corpus saturates in <10 docs):
-    // new distinct bigrams per 50-doc bucket of first occurrence +
-    // the running vocabulary size. One vocabulary-keyed agg (min
-    // first_doc per bigram — partial map-side), then a bucket-count
-    // agg whose output is curve-sized, so the unpartitioned
-    // running-sum window is over ~n_docs/50 rows, never corpus-sized.
-    // The corpus-diversity diagnostic for dedup and mixture policy.
-    "t43_vocab_growth" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(array_distinct(graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 2))).as("term"))
-        .groupBy("term").agg(min("doc_id").as("__fd"))
-        .groupBy(floor(col("__fd") / 50).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("new_terms"))
-        .withColumn("vocab",
-          sum("new_terms").over(
-            Window.orderBy("bucket")
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("long"))
-    }),
-
-    // Cross-document duplicated-span detection (exact-substring dedup,
-    // Lee et al. 2021 "Deduplicating Training Data Makes Language
-    // Models Better"): 8-token windows whose gram occurs in ≥ 2
-    // distinct documents, merged into maximal spans per document.
-    // Gram df is one map-side-combined agg (vocabulary-sized shuffle);
-    // the span merge windows only over collision hits — the corpus
-    // never self-joins. Span-level output is what lets a pipeline
-    // REDACT duplicated regions instead of dropping whole documents.
-    "t44_dup_spans" -> ((s, dir) => {
-      val n = 8
-      // Grams hash to 64 bits (md5 prefix — engine-portable) MAP-SIDE
-      // in one kernel pass (Spans.gramHashes → WindowHashesExpr:
-      // window strings never materialize): the exploded window table
-      // is ~n× the corpus in gram-string bytes, so both
-      // collision-detection shuffles move 16-byte keys instead of
-      // ~50-byte strings. A 64-bit collision falsely marks one window
-      // duplicated — ~n²/2⁶⁵, negligible against the LSH layers'
-      // documented recall caps.
-      val grams = Spans.gramHashes(T(s, dir, "documents"),
-        "doc_id", "text", n)
-      val dup = grams.groupBy("gh")
-        .agg(countDistinct(col("doc_id")).as("__nd"))
-        .where(col("__nd") >= 2)
-      Spans.mergeSpans(
-        grams.join(dup.select("gh"), Seq("gh")).select("doc_id", "pos"),
-        "doc_id", "pos", n)
-    }),
-
-    // Span-level eval decontamination: exact 8-gram collisions against
-    // the held-out set (doc_id % 7 — a denser eval sample than t40's
-    // %97 so span structure is actually exercised), reported as merged
-    // token spans per training doc. Complements t13 (exact full-text),
-    // t31 (fuzzy LSH) and t40 (bloom gate): those flag DOCUMENTS; this
-    // locates the contaminated REGION for redaction. The eval gram set
-    // is eval-sized → broadcast left-semi; the corpus only shuffles
-    // its (few) colliding windows into the span merge.
-    "t45_decontam_spans" -> ((s, dir) =>
-      // Same 64-bit map-side gram hashing as t44: the broadcast eval
-      // set and the probe both carry 16-byte keys, not gram strings.
-      Spans.decontamSpans(T(s, dir, "documents"), "doc_id", "text",
-        n = 8, isEval = col("doc_id") % 7 === 0)),
-
-    // Span REDACTION — the consumer of t45's span detection: remove
-    // the contaminated token ranges and rebuild the document, keeping
-    // clean docs byte-identical (n_kept = token count, md5 over the
-    // re-joined text proves the reconstruction end-to-end). After the
-    // span join (contaminated-docs-sized, left), the rebuild is pure
-    // map-side expression work: filter-with-index over the tokens
-    // array vs the per-doc span list. Spark's lambda index is 0-based
-    // (DuckDB's is 1-based) — hence the i+1.
-    "t47_span_redact" -> ((s, dir) => {
-      val n = 8
-      val docs = T(s, dir, "documents")
-      val spans = Spans.decontamSpans(docs, "doc_id", "text",
-        n, isEval = col("doc_id") % 7 === 0)
-        .groupBy("doc_id")
-        .agg(collect_list(struct(col("span_start").as("s"),
-          col("span_end").as("e"))).as("spans"))
-      docs.where(col("doc_id") % 7 =!= 0)
-        .join(spans, Seq("doc_id"), "left")
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"),
-          coalesce(col("spans"),
-            array().cast("array<struct<s:bigint,e:bigint>>")).as("sp"))
-        .select(col("doc_id"),
-          filter(col("toks"), (t, i) =>
-            !exists(col("sp"),
-              sp => (i + 1) >= sp("s") && (i + 1) <= sp("e"))).as("kept"))
-        .select(col("doc_id"), size(col("kept")).cast("long").as("n_kept"),
-          md5(concat_ws(" ", col("kept"))).as("redacted_md5"))
-    }),
-
-    // Eval-integrity report — t45's transpose, the direction teams
-    // actually publish: for each HELD-OUT doc, how many training docs
-    // share an exact 8-gram with it and how much of it is exposed.
-    // The eval side of the join is eval-sized; the train side
-    // pre-distincts (train_id, gh) map-side so a boilerplate gram
-    // repeated 10⁶× in one doc contributes one row, and the groupBy
-    // is keyed by eval doc — output is eval-suite-sized.
-    "t51_eval_exposure" -> ((s, dir) => {
-      val n = 8
-      val grams = Spans.gramHashes(T(s, dir, "documents"),
-        "doc_id", "text", n)
-      val ev = grams.where(col("doc_id") % 7 === 0)
-        .select(col("doc_id").as("eval_id"), col("gh"))
-      // broadcast-filter the corpus windows to eval collisions BEFORE
-      // any distinct: the (train_id, gh) dedup then shuffles only the
-      // hits, not every window in the corpus
-      val evalSet = ev.select("gh").distinct()
-      val tr = grams.where(col("doc_id") % 7 =!= 0)
-        .join(broadcast(evalSet), Seq("gh"), "left_semi")
-        .select(col("doc_id").as("train_id"), col("gh")).distinct()
-      ev.join(tr, Seq("gh"))
-        .groupBy("eval_id")
-        .agg(countDistinct(col("train_id")).as("n_train_docs"),
-          countDistinct(col("gh")).as("n_shared_grams"))
-    }),
-
-    // Bigram-LM quality proxy (the CCNet shape, one order above t27's
-    // unigram): per-doc mean log P(w2|w1) under corpus-wide MLE bigram
-    // rates. Both count tables build with map-side partial aggs; the
-    // doc-bigram probe joins on the bigram/unigram keys — standard
-    // vocabulary-keyed shuffles, nothing corpus×corpus. Every probed
-    // bigram exists in the counts (they come from the same corpus), so
-    // no smoothing term is needed for totality.
-    "t53_bigram_logprob" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val big = docs.select(col("doc_id"),
-        explode(graft.functions.SketchExpressions
-          .wordShingles(TextOps.tokensLower(col("text")), 2)).as("bg"))
-      val bgc = big.groupBy("bg").agg(count(lit(1)).as("cb"))
-      val ugc = docs.select(
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cu"))
-      big.join(bgc, Seq("bg"))
-        .join(ugc, ugc("w") === substring_index(col("bg"), " ", 1))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          (round(avg(log(col("cb").cast("double") /
-            col("cu").cast("double"))), 6) + 0.0).as("avg_lp"))
-    }),
-
-    // Provenance overlap matrix: which SOURCES duplicate each other
-    // (crawl-vs-crawl redundancy — what you consult before paying to
-    // ingest a new feed). (source, gh) distincts MAP-SIDE first, so
-    // each source contributes a gram once no matter how often it
-    // repeats; the self-join fans out per gram only to the sources
-    // actually sharing it (≤ #sources, a constant) — never doc×doc.
-    "t52_source_overlap" -> ((s, dir) => {
-      val n = 8
-      val g = T(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.functions.SketchExpressions
-            .windowHashes(TextOps.tokens(col("text")), n)).as("__w"))
-        .select(col("source"), col("__w.gh").as("gh")).distinct()
-      g.select(col("source").as("source_a"), col("gh"))
-        .join(g.select(col("source").as("source_b"), col("gh")), Seq("gh"))
-        .where(col("source_a") < col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(countDistinct(col("gh")).as("n_shared_grams"))
-    }),
-
-    // t52's sketch tier, SELF-GATED (the ε bounds folded into the
-    // query — no rows-only category left). The production path is
-    // unchanged: per-source KMV sketches of the gram-hash stream
-    // (O(K) state per source, BottomKStringsAgg — mergeable partials,
-    // no corpus-wide distinct, ONE text pass), every pairwise
-    // estimate derived declaratively from the k-minimum values —
-    // J ≈ |U∩A∩B|/|U| with U the K smallest of the union,
-    // |A∪B| ≈ (K−1)/F(h_K) (a2's estimator), shared ≈ J·|A∪B|.
-    // The fold: each estimate column snaps to the EXACT answer when
-    // it sits inside its band — shared within t52c's resolution band
-    // (one union slot ≈ est_union/K grams → |est−exact| ≤
-    // 5·est_union/K + exact; disjoint pairs ≤ 5 structurally), union
-    // within 25% (≈4σ of the (K−1)/F estimator's ~1/√K rsd), J
-    // snapped when both hold — so the DuckDB oracle hash-gates the
-    // rows exactly, and an out-of-band estimate emits RAW, fails the
-    // hash loudly, and stays inspectable. The exact matrix here is
-    // the verification harness (same cost class as t52); the sketch
-    // tier alone remains the 100 TB artifact via kmvSourceSketches/
-    // kmvOverlapEstimates. ε contract also held in PropertySpec.
-    "t52b_source_overlap_est" -> ((s, dir) => {
-      val n = 8
-      val est = Dedup.kmvOverlapEstimates(
-        Dedup.kmvSourceSketches(T(s, dir, "documents"), "text", "source",
-          n = n, k = 256), k = 256)
-      // exact matrix + per-source gram counts for the snap bands —
-      // the same distinct (source, gh) stream t52/t52c read
-      val g = T(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.functions.SketchExpressions
-            .windowHashes(TextOps.tokens(col("text")), n)).as("__w"))
-        .select(col("source"), col("__w.gh").as("gh")).distinct()
-      val x = g.select(col("source").as("source_a"), col("gh"))
-        .join(g.select(col("source").as("source_b"), col("gh")),
-          Seq("gh"))
-        .where(col("source_a") < col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(countDistinct(col("gh")).as("__x"))
-      val cnt = g.groupBy("source").agg(count(lit(1)).as("__c"))
-      est
-        .join(x, Seq("source_a", "source_b"), "left")
-        .join(cnt.select(col("source").as("source_a"),
-          col("__c").as("__ca")), Seq("source_a"))
-        .join(cnt.select(col("source").as("source_b"),
-          col("__c").as("__cb")), Seq("source_b"))
-        .withColumn("__xs", coalesce(col("__x"), lit(0L)))
-        .withColumn("__un", col("__ca") + col("__cb") - col("__xs"))
-        .withColumn("__sh_ok",
-          when(col("__xs") === 0, col("est_shared_grams") <= 5.0)
-            .otherwise(abs(col("est_shared_grams") - col("__xs")) <=
-              col("est_union") / 256.0 * 5.0 + col("__xs")))
-        .withColumn("__un_ok",
-          abs(col("est_union") - col("__un")) <=
-            col("__un").cast("double") * 0.25)
-        .select(col("source_a"), col("source_b"),
-          when(col("__sh_ok") && col("__un_ok"),
-            round(col("__xs").cast("double") / col("__un"), 6))
-            .otherwise(col("j_est")).as("j_est"),
-          when(col("__sh_ok"), col("__xs").cast("double"))
-            .otherwise(col("est_shared_grams")).as("est_shared_grams"),
-          when(col("__un_ok"), col("__un").cast("double"))
-            .otherwise(col("est_union")).as("est_union"))
-    }),
-
-    // t52b's estimates graduated into the DRIVER's gate (the a1b
-    // pattern): disjoint pairs estimate EXACT zero-ish (≤5 grams —
-    // the KMV intersection of disjoint sketches is empty, so false
-    // positives are structural, not statistical); overlapping pairs
-    // must land within the estimator's own RESOLUTION — one
-    // union-sketch slot ≈ est_union/k grams, so the honest band is
-    // |est − exact| ≤ 5·(est_union/k) + exact. (A fixed relative
-    // band like [0.2x, 4x] is statistically IMPOSSIBLE in the tiny-J
-    // regime: at sf0.1 a pair sharing 112 of ~120k union grams sits
-    // below one slot's granularity — the sf0.1 spot-check caught
-    // exactly this, r12.) Evaluated INSIDE the query against the
-    // exact t52 matrix over the same rows, emitting only booleans
-    // plus the exact count; the DuckDB oracle (which cannot
-    // reproduce the KMV estimate) contributes the exact counts over
-    // ALL source pairs and the expectation that every bound HOLDS.
-    // Kept distinct from t52b's snapped-value surface: this is the
-    // at-a-glance boolean health row.
-    "t52c_overlap_bounds" -> ((s, dir) => {
-      val n = 8
-      val g = T(s, dir, "documents")
-        .select(col("source"),
-          explode(graft.functions.SketchExpressions
-            .windowHashes(TextOps.tokens(col("text")), n)).as("__w"))
-        .select(col("source"), col("__w.gh").as("gh")).distinct()
-      val exact = g.select(col("source").as("source_a"), col("gh"))
-        .join(g.select(col("source").as("source_b"), col("gh")),
-          Seq("gh"))
-        .where(col("source_a") < col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(countDistinct(col("gh")).as("__x"))
-      // sketches derive from the SAME distinct (source, gh) stream
-      // the exact matrix uses — one text scan for both tiers (KMV is
-      // a set sketch: bottom-k of the distinct stream ≡
-      // kmvSourceSketches' bottom-k of the raw stream, spec-held by
-      // t52b's own estimates staying unchanged)
-      val sketches = g
-        .select(col("source"), md5(col("gh")).as("__h"))
-        .groupBy("source")
-        .agg(graft.functions.AggregateExpressions
-          .bottomKStrings(col("__h"), 256).as("sk"))
-        .withColumn("k", lit(256))
-      Dedup.kmvOverlapEstimates(sketches, k = 256)
-        .join(exact, Seq("source_a", "source_b"), "left")
-        .withColumn("n_shared_grams", coalesce(col("__x"), lit(0L)))
-        .select(col("source_a"), col("source_b"),
-          col("n_shared_grams"),
-          when(col("n_shared_grams") === 0,
-            col("est_shared_grams") <= 5.0)
-            .otherwise(
-              abs(col("est_shared_grams") - col("n_shared_grams")) <=
-                col("est_union") / 256.0 * 5.0 +
-                  col("n_shared_grams")).as("est_ok"))
-    }),
-
-    // Per-document n-gram NOVELTY — the memorization-risk/diversity
-    // signal (what fraction of a doc's 8-gram types appears nowhere
-    // else in the corpus; low novelty = boilerplate/copy, the docs a
-    // dedup pass missed and an LM memorizes). Shapes, all keyed at
-    // gram cardinality with map-side partial agg — the honest 100 TB
-    // form, nothing broadcastable: per-doc DISTINCT grams (a doc
-    // repeating its own gram is repetition, t'd elsewhere — not
-    // corpus novelty), gram document-frequency agg, gram-keyed join
-    // back, doc-keyed rollup. Docs under 8 tokens have no grams and
-    // no novelty row (twin identical).
-    "t108_ngram_novelty" -> ((s, dir) => {
-      val dg = T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(graft.functions.SketchExpressions
-            .windowHashes(TextOps.tokens(col("text")), 8)).as("__w"))
-        .select(col("doc_id"), col("__w.gh").as("gh")).distinct()
-      val dfreq = dg.groupBy("gh").agg(count(lit(1)).as("df"))
-      dg.join(dfreq, Seq("gh"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_novel"))
-        .withColumn("novel_ppm", expr("n_novel * 1000000 div n_grams"))
-    }),
-
-    // Cross-source copy FLOW — t52's "how much do sources overlap"
-    // made directional: every non-canonical member of a near-dup
-    // cluster is attributed to its cluster's canonical doc (min
-    // doc_id — in production the earliest crawl timestamp), giving an
-    // (origin_source → copy_source) matrix: the provenance artifact
-    // that tells you which feed is just re-syndicating which (and
-    // which to stop paying for). Shapes: labels off the STAGED
-    // artifact (no LSH/CC re-run), two doc-id-keyed joins to attach
-    // the member and origin sources — corpus-keyed, partial-agged, no
-    // broadcast assumed; the output is source²-bounded.
-    "t109_copy_flow" -> ((s, dir) => {
-      val src = T(s, dir, "documents").select(col("doc_id"), col("source"))
-      stagedNeardupLabels(s, dir)
-        .where(col("cluster_id") =!= col("doc_id"))
-        .join(src, Seq("doc_id"))
-        .withColumnRenamed("source", "copy_source")
-        .join(src.withColumnRenamed("doc_id", "cluster_id")
-          .withColumnRenamed("source", "origin_source"),
-          Seq("cluster_id"))
-        .groupBy("origin_source", "copy_source")
-        .agg(count(lit(1)).as("n_copies"),
-          countDistinct(col("cluster_id")).as("n_clusters"))
-    }),
-
-    // Asymmetric CONTAINMENT within near-dup clusters: Jaccard (t12's
-    // machinery) treats a quote-plus-commentary doc and its source as
-    // mildly similar, but containment |member ∩ canonical| / |member|
-    // is what detects "this doc is mostly inside that one" —
-    // the wire-syndication/quotation case every news-heavy corpus
-    // hits. Scope: cluster members vs their canonical rep (labels off
-    // the STAGED artifact — no LSH/CC re-run), so the pair set is
-    // cluster-bounded, never doc×doc; the gram probe is a
-    // (cluster, gram)-keyed equi-join. Members under 8 tokens have
-    // no grams and no row.
-    "t110_containment" -> ((s, dir) => {
-      val dg = T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(graft.functions.SketchExpressions
-            .windowHashes(TextOps.tokens(col("text")), 8)).as("__w"))
-        .select(col("doc_id"), col("__w.gh").as("gh")).distinct()
-      val lab = dg.join(stagedNeardupLabels(s, dir), Seq("doc_id"))
-      val rep = lab.where(col("cluster_id") === col("doc_id"))
-        .select(col("cluster_id"), col("gh"), lit(1L).as("__r"))
-      lab.where(col("cluster_id") =!= col("doc_id"))
-        .join(rep, Seq("cluster_id", "gh"), "left")
-        .groupBy("doc_id", "cluster_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(coalesce(col("__r"), lit(0L))).as("n_shared"))
-        .withColumn("containment_ppm",
-          expr("n_shared * 1000000 div n_grams"))
-    }),
-
-    // EDIT-DISTANCE stratification within near-dup clusters: LSH+CC
-    // (t12) says these docs are related; the edit layer says HOW —
-    // byte-identical copy ("exact"), light touch-up ("near", ≤20%
-    // of chars changed), or a shared template with rewritten content
-    // ("template"). Curation stacks route the layers differently
-    // (drop exact, keep one near-edit, keep template families but
-    // strip the boilerplate), and t110's set-based containment can't
-    // see ORDER — a shuffled bag of the same 8-grams scores 100%
-    // there but lands in "template" here. Scope is cluster-bounded
-    // (members vs their canonical rep, labels off the STAGED
-    // artifact — no LSH/CC re-run, never doc×doc) and the O(n·m) DP
-    // is capped by comparing 160-char prefixes (the cheap tier; a
-    // full-text pass would only re-rank inside the 'near' band).
-    // levenshtein() is unit-cost DP in both engines over ASCII-safe
-    // text — bit-identical integers, no float anywhere.
-    "t112_edit_layers" -> ((s, dir) => {
-      val px = T(s, dir, "documents")
-        .select(col("doc_id"), substring(col("text"), 1, 160).as("__t"))
-      stagedNeardupLabels(s, dir)
-        .where(col("cluster_id") =!= col("doc_id"))
-        .join(px, Seq("doc_id"))
-        .join(px.select(col("doc_id").as("cluster_id"),
-          col("__t").as("__ct")), Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"),
-          levenshtein(col("__t"), col("__ct")).cast("long").as("lev"),
-          greatest(length(col("__t")), length(col("__ct")))
-            .cast("long").as("__mx"))
-        .withColumn("rel_ppm", expr("lev * 1000000 DIV __mx"))
-        .withColumn("layer",
-          when(col("lev") === 0, "exact")
-            .when(col("rel_ppm") <= lit(200000L), "near")
-            .otherwise("template"))
-        .drop("__mx")
-    }),
-
-    // Data-constrained budget accounting (Muennighoff et al. 2023,
-    // "Scaling Data-Constrained Language Models": repeated data decays
-    // in value; ~4 epochs is where returns run out). Given a token
-    // budget of 3× the corpus, give every source an equal share (the
-    // UniMax first-round allocation — the full iterative waterfill is
-    // t70), cap each source at 4 epochs of its own tokens, then price
-    // what it actually serves with a linear per-epoch decay (epoch k
-    // is worth 1 − 0.2·(k−1)): `eff_tok_milli` is the effective
-    // unique-token value the mix buys, the number a data-mix planner
-    // compares across candidate corpora. Arithmetic is INTEGER end to
-    // end (milli-token units; the closed form for the full-epoch sum
-    // is 1000f − 100f(f−1)), so the DuckDB twin is bit-exact. Shape:
-    // one corpus scan → per-source token sums (O(10) rows), a
-    // broadcast of two scalars, map-side arithmetic — trivially flat
-    // at 100 TB.
-    "t113_epoch_alloc" -> ((s, dir) => {
-      val u = T(s, dir, "documents")
-        .groupBy("source")
-        .agg(sum(size(TextOps.tokens(col("text"))).cast("long"))
-          .as("u_tokens"))
-      val tot = u.agg(sum("u_tokens").as("__tot"),
-        count(lit(1)).as("__ns"))
-      u.crossJoin(broadcast(tot))
-        .withColumn("alloc", expr("__tot * 3 DIV __ns"))
-        .withColumn("serve", least(col("alloc"), col("u_tokens") * 4))
-        .withColumn("epochs_milli", expr("serve * 1000 DIV u_tokens"))
-        .withColumn("__f", expr("serve DIV u_tokens"))
-        .withColumn("__r", expr("serve % u_tokens"))
-        .withColumn("eff_tok_milli",
-          expr("u_tokens * (1000 * __f - 100 * __f * (__f - 1))" +
-            " + __r * (1000 - 200 * __f)"))
-        .select("source", "u_tokens", "alloc", "serve",
-          "epochs_milli", "eff_tok_milli")
-    }),
-
-    // DoReMi-style domain reweighting (Xie et al. 2023) without the
-    // proxy-model training run: per-domain EXCESS LOSS is how much
-    // worse the corpus-global unigram LM prices a domain's tokens
-    // than the domain's own LM (a per-domain KL proxy — the quantity
-    // DoReMi's reference/proxy pair estimates), and the mix weights
-    // come from multiplicative-weights updates (Arora et al. 2012;
-    // the first-order form of DoReMi's exponentiated gradient) over
-    // K=4 deterministic minibatch slices (doc_id mod K), averaging
-    // the normalized iterates as the final mix — upweighting domains
-    // the shared model fits worst, exactly DoReMi's training signal.
-    //
-    // Cross-engine exactness: the per-token loss is the RATIONAL
-    // surrogate 10⁶ − ⌊10⁶·n/N⌋ (no transcendental anywhere — the
-    // t115 playbook), cell means use integer floor division, and the
-    // MWU loop runs in pure ppm integers, so the unrolled DuckDB twin
-    // is bit-exact. Overflow: Σ(cnt·loss) ≤ 10⁶ · corpus tokens —
-    // Long-safe to ~9·10¹² tokens; past that drop the loss scale to
-    // milli (the t113 convention).
-    //
-    // Scale shape: tokens collapse MAP-SIDE to the (source, slice,
-    // term) histogram BEFORE any join (vocab×sources×K-bounded — the
-    // corpus-proportional token stream never shuffles twice), the
-    // global/domain count tables join on their natural keys, and the
-    // MWU loop runs on the driver over the (source × K) cell table —
-    // a guarded, domain-bounded collect (q39 k-means / t115 GD
-    // precedent for bounded driver state in iterative ops).
-    "t122_doremi_weights" -> ((s, dir) => {
-      val K = 4
-      val f = T(s, dir, "documents")
-        .select(col("source"), (col("doc_id") % K).as("slice"),
-          explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("source", "slice", "term")
-        .agg(count(lit(1)).as("cnt"))
-      val gl = f.groupBy("term").agg(sum("cnt").as("ng"))
-      val gt = f.agg(sum("cnt").as("__ngt"))
-      val ow = f.groupBy("source", "term").agg(sum("cnt").as("no"))
-      val ot = f.groupBy("source").agg(sum("cnt").as("__not"))
-      val cell = f.join(gl, Seq("term"))
-        .join(ow, Seq("source", "term"))
-        .join(broadcast(ot), Seq("source"))
-        .crossJoin(broadcast(gt))
-        .withColumn("__ref", expr("1000000 - (1000000 * ng) DIV __ngt"))
-        .withColumn("__own", expr("1000000 - (1000000 * no) DIV __not"))
-        .groupBy("source", "slice")
-        .agg(expr("greatest(sum(cnt * __ref) DIV sum(cnt)" +
-          " - sum(cnt * __own) DIV sum(cnt), 0L)").as("excess"))
-      val rows = cell.collect()
-      require(rows.length <= 10000,
-        s"domain x slice cell table unexpectedly large (${rows.length})" +
-          " - the MWU driver loop assumes a bounded domain count")
-      val ex = rows.map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-        .toMap
-      val domains = rows.map(_.getString(0)).distinct.sorted
-      var w = domains.map(_ => 1000000L)
-      val acc = Array.fill(domains.length)(0L)
-      for (t <- 0 until K) {
-        w = domains.zip(w).map { case (d, wi) =>
-          wi * (1000000L + ex.getOrElse((d, t.toLong), 0L) / 2) / 1000000L
-        }
-        val tot = w.sum
-        w = w.map(_ * 1000000L / tot)
-        for (i <- domains.indices) acc(i) += w(i)
-      }
-      import s.implicits._
-      domains.zipWithIndex.map { case (d, i) =>
-        (d, (0 until K).map(t => ex.getOrElse((d, t.toLong), 0L)).sum,
-          acc(i) / K)
-      }.toSeq.toDF("source", "excess_micro", "weight_ppm")
-    }),
-
-    // Count-Min Sketch point queries (Cormode & Muthukrishnan 2005) —
-    // the streaming-counts member of the sketch family (HLL=a1,
-    // KMV=a2/t52, Misra–Gries=t36): d=4 rows × w=1024 counters, each
-    // row bucketing every term by an independent salted-md5 hash;
-    // est(term) = min over rows of its counter. CMS guarantees
-    // est ≥ exact always and est ≤ exact + εN w.h.p.; both sides are
-    // DIRECTLY verifiable here because the sketch build is pure
-    // relational arithmetic on a deterministic hash — the DuckDB twin
-    // reconstructs the identical 4×1024 counter table, so every
-    // estimate (not just a bound) hash-gates bit-exact. Probes are
-    // the top-20 exact-count terms (d3's deterministic order).
-    //
-    // Scale shape: the corpus-proportional token stream collapses
-    // map-side to the (term, cnt) histogram ONCE (vocab-bounded);
-    // the 4-row explode, counter agg (≤4×1024 rows) and probe joins
-    // all run on vocab-or-smaller tables. No hint anywhere: both
-    // join sides are bounded (probes=20×4, counters≤4096) and
-    // statistics pick the broadcast at any SF.
-    "t123_cms_counts" -> ((s, dir) => {
-      val w = 1024
-      val tf = T(s, dir, "documents")
-        .select(explode(TextOps.tokensLower(col("text"))).as("term"))
-        .where(length(col("term")) > 0)
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-      val bucketed = tf
-        .select(col("term"), col("cnt"),
-          explode(array((0 until 4).map(lit): _*)).as("r"))
-        .withColumn("bucket",
-          conv(substring(md5(concat(col("r").cast("string"), lit("|"),
-            col("term"))), 1, 9), 16, 10).cast("long") % w)
-      val counters = bucketed.groupBy("r", "bucket")
-        .agg(sum("cnt").as("c"))
-      val probes = tf.orderBy(col("cnt").desc, col("term")).limit(20)
-        .withColumnRenamed("cnt", "exact_cnt")
-        .select(col("term"), col("exact_cnt"),
-          explode(array((0 until 4).map(lit): _*)).as("r"))
-        .withColumn("bucket",
-          conv(substring(md5(concat(col("r").cast("string"), lit("|"),
-            col("term"))), 1, 9), 16, 10).cast("long") % w)
-      probes.join(counters, Seq("r", "bucket"))
-        .groupBy("term")
-        .agg(min("exact_cnt").as("exact_cnt"), min("c").as("est_cnt"))
-        .select(col("term"), col("exact_cnt"), col("est_cnt"),
-          (col("est_cnt") - col("exact_cnt")).as("overcount"))
-    }),
-
-    // TFRecord training-shard export, verified END TO END: tokenized
-    // docs write as tf.train.Examples (hand-rolled proto + CRC32C
-    // framing — sink/TfRecord.scala), the shards read BACK through
-    // the TFRecord scan (both CRCs checked per record), decode, and
-    // re-aggregate; the oracle recomputes the same per-shard totals
-    // straight from parquet. A single flipped bit anywhere in the
-    // binary path (varint packing, LE framing, masked CRC, map-entry
-    // encoding) breaks the hash gate. input_ids are 15-bit md5 vocab
-    // hashes so DuckDB can rebuild them exactly.
-    //
-    // Scale shape: 16 md5 shards, one sequential file write per shard
-    // task (t67's order-sensitive shard model; width is the caller's
-    // sizing knob), read-back one task per shard file. The manifest
-    // collect is shard-count-bounded (≤16 rows). crc_fail is part of
-    // the gated output — the oracle pins it to 0.
-    "t124_tfrecord_export" -> ((s, dir) => {
-      import s.implicits._
-      val out = s"/tmp/graft_tfrec/${Stage.key(dir)}"
-      val docs = T(s, dir, "documents").select(
-        col("doc_id"),
-        substring(md5(col("doc_id").cast("string")), 1, 1).as("shard"),
-        expr("""transform(
-            filter(split(lower(text), '\\s+'), t -> length(t) > 0),
-            t -> CAST(conv(substring(md5(t), 1, 9), 16, 10) AS BIGINT)
-              % 32768)""").as("input_ids"),
-        col("source"))
-      graft.sink.TfRecord.write(docs, out, "shard", "doc_id",
-        Seq("doc_id", "input_ids"), Seq("source"))
-        .collect() // force the write; one manifest row per shard (≤16)
-      graft.sink.TfRecord.read(s, out)
-        .as[(String, Long, Array[Byte], Boolean)]
-        .map { case (shard, _, data, crcOk) =>
-          val f = graft.sink.TfRecord.decodeExample(data)
-          def i64(n: String): Seq[Long] = f.get(n) match {
-            case Some(graft.sink.TfRecord.Int64Val(vs)) => vs
-            case _ => Nil
-          }
-          (shard, i64("doc_id").headOption.getOrElse(-1L),
-            i64("input_ids").sum, i64("input_ids").length.toLong,
-            if (crcOk) 0L else 1L)
-        }
-        .toDF("shard", "doc_id", "id_sum", "n_tokens", "crc_fail")
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_records"),
-          sum("doc_id").as("docid_sum"),
-          sum("id_sum").as("id_sum"),
-          sum("n_tokens").as("token_total"),
-          sum("crc_fail").as("crc_fail"))
-    }),
-
-    // Shuffle-QUALITY audit for the t67 training order: a shuffled
-    // corpus whose adjacent sequences still correlate by source leaks
-    // curriculum structure into training (and betrays a broken
-    // shuffle key). Measured: same-source ADJACENT pairs within each
-    // shard's write order vs the expectation under a uniform random
-    // order (Σ n_s(n_s−1) / (N(N−1)) — exact integers, no float).
-    // Cross-shard boundaries don't pair (shards are independent
-    // files). Shares trainShuffle's key kernel, so the audit can
-    // never drift from the artifact it audits.
-    //
-    // Scale shape: the adjacency is a lead() window per shard — the
-    // same 256-way hash-partitioned sort t67 itself runs, never a
-    // global order; the composition row is one tiny broadcast
-    // ([scalar]). Overflow: num DIV n ≤ N, ×10⁶ Long-safe to ~9·10¹²
-    // docs (two-step division, documented over the naive N·(N−1)).
-    "t125_shuffle_audit" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docsrc = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"))
-      val shuf = trainShuffle(T(s, dir, "documents"), shardHexWidth = 2)
-        .join(docsrc, Seq("doc_id"))
-      val w = Window.partitionBy("shard").orderBy("pos")
-      val pairs = shuf
-        .withColumn("__next", lead(col("source"), 1).over(w))
-        .where(col("__next").isNotNull)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("source") === col("__next"), 1L).otherwise(0L))
-            .as("same_pairs"))
-      val comp = docsrc.groupBy("source")
-        .agg(count(lit(1)).as("ns"))
-        .agg(sum(expr("ns * (ns - 1)")).as("__num"),
-          sum("ns").as("__n"))
-      pairs.crossJoin(broadcast(comp))
-        .select(col("n_pairs"), col("same_pairs"),
-          // greatest(…,1): a degenerate corpus (1 doc, or 1 doc per
-          // shard) has zero adjacent pairs — report 0, don't divide
-          // by zero (ANSI mode throws; the oracle twin mirrors this)
-          expr("same_pairs * 1000000 DIV greatest(n_pairs, 1L)")
-            .as("same_ppm"),
-          expr("(__num DIV __n) * 1000000 DIV greatest(__n - 1, 1L)")
-            .as("expected_ppm"))
-    }),
-
-    // Per-source n-gram diversity (type-token ratio at n=1,2,3): the
-    // corpus-health metric that catches diversity collapse — a source
-    // whose TTR craters between snapshots is being flooded by
-    // templated/near-duplicate text even when exact dedup (d1) and
-    // doc-level near-dup (d5) stay quiet, because repetition lives
-    // INSIDE the documents.
-    //
-    // SIZE-TIERED since r14 (r13 judge item #5 — the always-exact
-    // form cost 27 s at 100× and nothing stopped a 100 TB caller
-    // from running it): a cheap map-side pre-pass counts each
-    // (source, n) group's grams; groups at or under the cap run the
-    // exact two-phase distinct, larger groups ride the KMV bottom-k
-    // sketch (a2's TypedImperativeAggregate — O(k) mergeable state,
-    // and DETERMINISTIC given the input set, so unlike HLL the
-    // sketch tier hash-gates against DuckDB, which rebuilds the same
-    // 256 smallest md5 values). The exact tier's countDistinct state
-    // only ever builds over when(¬sketch)-routed rows — a big
-    // group's gram set is never held. Cap 10k exercises BOTH tiers
-    // at the gate SFs (unigram groups cross it at sf0.1); a
-    // production corpus sets it where a group's distinct-gram set
-    // stops fitting a reducer (~10⁷) — the routing is
-    // scale-independent.
-    //
-    // Scale shape: one explode per n (the n-gram stream IS the
-    // workload), generated twice (totals pre-pass + the routed agg —
-    // two streaming map passes beat one pass holding a corpus-sized
-    // gram set); totals broadcast back at sources×3 rows; one hash
-    // shuffle with map-side partials for both tiers. The 3-branch
-    // union stays DELIBERATELY (r20 negative probe): a one-pass
-    // variant tagging all three orders in a single projection
-    // (explode(concat(transform(grams_n, g → struct(n, g))…)))
-    // measured ~1.7× SLOWER isolated at sf0.1 (t126 1.49→2.77 s,
-    // t126b 1.56→2.29 s, paired) — materializing one struct array
-    // holding every gram of every order per row costs more than three
-    // cheap scan+split passes (the r19 t2/t44 fat-interim lesson).
-    "t126_ngram_diversity" -> ((s, dir) => {
-      val cap = 10000L
-      val k = 256
-      val docs = T(s, dir, "documents")
-        .select(col("source"), split(col("text"), "\\s+").as("toks"))
-      val grams = (1 to 3).map { n =>
-        docs.select(col("source"), lit(n.toLong).as("n"),
-          explode(when(size(col("toks")) >= n,
-            expr(s"""transform(sequence(0, size(toks) - $n),
-                i -> concat_ws(' ', slice(toks, i + 1, $n)))"""))
-            .otherwise(expr("CAST(array() AS array<string>)")))
-            .as("gram"))
-      }.reduce(_ unionByName _)
-      // group totals WITHOUT a second gram-stream pass: the n-gram
-      // count of a doc is arithmetic on its token count
-      // (max(len−n+1, 0)), so the routing table costs one map-side
-      // agg over doc token counts, not a 2nd explode of every gram
-      val totals = docs
-        .select(col("source"), size(col("toks")).cast("long").as("nt"))
-        .groupBy("source")
-        .agg(
-          sum(greatest(col("nt"), lit(0L))).as("t1"),
-          sum(when(col("nt") >= 2, col("nt") - 1).otherwise(0L)).as("t2"),
-          sum(when(col("nt") >= 3, col("nt") - 2).otherwise(0L)).as("t3"))
-        .select(col("source"), explode(array(
-          struct(lit(1L).as("n"), col("t1").as("total_ngrams")),
-          struct(lit(2L).as("n"), col("t2").as("total_ngrams")),
-          struct(lit(3L).as("n"), col("t3").as("total_ngrams")))).as("p"))
-        .select(col("source"), col("p.n").as("n"),
-          col("p.total_ngrams").as("total_ngrams"))
-      val routed = grams.join(broadcast(totals), Seq("source", "n"))
-        .withColumn("__sk", col("total_ngrams") > cap)
-      routed.groupBy("source", "n")
-        .agg(max(col("total_ngrams")).as("total_ngrams"),
-          countDistinct(when(!col("__sk"), col("gram"))).as("__exact"),
-          graft.functions.AggregateExpressions.bottomKStrings(
-            when(col("__sk"), md5(col("gram"))), k).as("__bk"))
-        .select(col("source"), col("n"), col("total_ngrams"),
-          (col("total_ngrams") > cap).as("sketched"),
-          when(col("total_ngrams") <= cap, col("__exact"))
-            .when(size(col("__bk")) < k,
-              size(col("__bk")).cast("long"))
-            .otherwise(round(lit((k - 1).toDouble) *
-              lit(4503599627370496.0) /
-              conv(substring(element_at(col("__bk"), k), 1, 13), 16, 10)
-                .cast("double")).cast("long"))
-            .as("distinct_ngrams"))
-        .withColumn("ttr_ppm",
-          expr("distinct_ngrams * 1000000 DIV total_ngrams"))
-    }),
-
-    // t126's PRODUCTION form: the distinct-n-gram count as a MERGEABLE
-    // HLL sketch (partials per partition/day, merged corpus-wide
-    // without holding the gram set — the shape that replaces t126's
-    // exact countDistinct at 100 TB), SELF-GATED the a1 way: the
-    // estimate snaps to the exact count when inside HLL++'s 15 % band
-    // so DuckDB hash-gates every row, and emits raw (failing loudly,
-    // inspectable in the dump) when it drifts out. The exact aggregate
-    // alongside is the verification harness, not the production plan.
-    "t126b_ttr_sketch" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-        .select(col("source"), split(col("text"), "\\s+").as("toks"))
-      val grams = (1 to 3).map { n =>
-        docs.select(col("source"), lit(n.toLong).as("n"),
-          explode(when(size(col("toks")) >= n,
-            expr(s"""transform(sequence(0, size(toks) - $n),
-                i -> concat_ws(' ', slice(toks, i + 1, $n)))"""))
-            .otherwise(expr("CAST(array() AS array<string>)")))
-            .as("gram"))
-      }.reduce(_ unionByName _)
-      grams.groupBy("source", "n")
-        .agg(countDistinct(col("gram")).as("__exact"),
-          approx_count_distinct(col("gram")).as("__est"),
-          count(lit(1)).as("total_ngrams"))
-        .select(col("source"), col("n"), col("total_ngrams"),
-          when(abs(col("__est") - col("__exact")) / col("__exact")
-            < 0.15, col("__exact")).otherwise(col("__est"))
-            .as("distinct_est"))
-    }),
-
-    // Quality-gate AGREEMENT matrix: pairwise per-source agreement of
-    // three independent quality gates — Gopher rules (t46), the hashed
-    // Bayes classifier (t81, >0.5), and an integer intra-doc
-    // repetition gate (dup 3-gram fraction ≤ 20%, t16's metric made
-    // rational). A pipeline stacking gates needs this table: near-1.0
-    // agreement means a gate is redundant; near-coin-flip on one
-    // source means the gates DISAGREE about what that source's
-    // quality even is — the signal to audit before multiplying
-    // filters (Gopher paper's own ablation practice).
-    //
-    // Scale shape: every gate is a map-side kernel over one corpus
-    // scan (the classifier adds its bounded [model] broadcast); the
-    // three gate columns compute in ONE pass, pairs unpivot from 1
-    // row to 3 per doc map-side, and the agg is (source × 3 pairs).
-    "t127_gate_agreement" -> ((s, dir) =>
-      gateFlags(s, dir)
-        .select(col("source"), explode(array(
-          struct(lit("gopher_clf").as("pair"), col("g").as("a"),
-            col("c").as("b")),
-          struct(lit("gopher_rep").as("pair"), col("g").as("a"),
-            col("r").as("b")),
-          struct(lit("clf_rep").as("pair"), col("c").as("a"),
-            col("r").as("b")))).as("p"))
-        .select(col("source"), col("p.*"))
-        .groupBy("source", "pair")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("a").cast("long")).as("pass_a"),
-          sum(col("b").cast("long")).as("pass_b"),
-          sum((col("a") === col("b")).cast("long")).as("n_agree"))
-        .withColumn("agree_ppm",
-          expr("n_agree * 1000000 DIV n_docs"))),
-
-    // The full gate CONTINGENCY CUBE with token budgets — t127 tells
-    // you whether gates agree; THIS tells you what stacking them
-    // costs: per source, each (gopher, classifier, repetition)
-    // pass/fail cell with its doc and token counts. Any gate-stack's
-    // surviving budget is a sum over cells (e.g. gopher∧rep = the 2
-    // cells with g∧r), so the mixing planner (t26/t113) reads its
-    // post-curation token supply straight off this table instead of
-    // re-running the corpus per candidate stack — 2^gates re-scans
-    // collapsed into one.
-    //
-    // Scale shape: same one-pass gateFlags kernel as t127 (bounded
-    // classifier-model broadcast); the agg keys on (source × 8
-    // cells) — output stays sources×8 at any corpus size.
-    "t128_gate_cube" -> ((s, dir) =>
-      gateFlags(s, dir)
-        .groupBy("source", "g", "c", "r")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .select(col("source"), col("g").cast("long").as("pass_gopher"),
-          col("c").cast("long").as("pass_clf"),
-          col("r").cast("long").as("pass_rep"),
-          col("n_docs"), col("n_tokens"))),
-
-    // In-context-pretraining PACK ORDER (Shi et al. 2024: training
-    // windows read better when ADJACENT documents are semantically
-    // related, instead of the i.i.d. t67 shuffle): cluster by the
-    // q36 IVF assignment, concatenate cells, order within a cell
-    // most-central-first (sq distance to the centroid, vec_id ties).
-    // pack_pos is the global stream position a packer consumes.
-    //
-    // Scale shape: assignment is q36's broadcast-centroid map-side
-    // kernel; the within-cell order is the ONE-TASK-PER-CELL trap (16
-    // cells hold the corpus), so it rides twoLevelRank with a
-    // VALUE-RANGE-bounded distance band (floor(dist·64) — embeddings
-    // are bounded, so the band table is a constant, never
-    // corpus-sized); cell offsets come off the O(cells) count table.
-    // The oracle reproduces pack_pos with a plain per-cell window —
-    // the two-level scan must be indistinguishable from it.
-    "t129_pack_order" -> ((s, dir) => {
-      val withDist = packDistances(s, dir)
-      // materialize once (disk-spillable, lineage-truncating — the
-      // t114/distilledModel precedent): the ranked subtree feeds BOTH
-      // sides of the offset join, and without the checkpoint the
-      // centroid-assign scan re-executes under each (r13 judge nit #1)
-      val ranked = Windows.twoLevelRank(withDist, Seq("cid"),
-        floor(col("__dist") * 64).cast("long"),
-        Seq(col("__dist"), col("vec_id")), "pos_in_cell")
-        .localCheckpoint(false)
-      val offs = ranked.groupBy("cid")
-        .agg(count(lit(1)).as("__n"))
-        .withColumn("__off", coalesce(
-          sum("__n").over(Window.orderBy("cid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("cid"), col("__off"))
-      ranked.join(broadcast(offs), Seq("cid"))
-        .select(col("vec_id"), col("cid"), col("pos_in_cell"),
-          (col("__off") + col("pos_in_cell")).as("pack_pos"))
-    }),
-
-    // Order-COHERENCE audit: does t129's pack order actually deliver
-    // what in-context pretraining wants — training windows that span
-    // FEW topics? Metric: distinct IVF cells touched per 2048-token
-    // concat-and-chunk window (t68's packing rule), under the t67
-    // i.i.d. shuffle vs the t129 pack order. Shuffle ≈ every window
-    // mixes many cells; pack ≈ 1-2 (only cell-boundary windows mix).
-    // A doc is attributed to the window its start token lands in —
-    // the t24 chunk convention. This is t129's value measured, the
-    // way t125 measures t67's (the two audits bracket the ordering
-    // family: decorrelation where you want it, coherence where you
-    // want that).
-    //
-    // Scale shape: both global prefix sums ride twoLevelPrefixSum
-    // (bucket = hex shard prefix / cid·10⁵+dist band — both bounded,
-    // both monotone in their order); window/cell pairs collapse in
-    // ONE distinct-agg keyed on win·10⁶+cid (tokens ≤ 9·10¹² keeps
-    // the key exact in a long); output is 2 rows.
-    "t130_order_coherence" -> ((s, dir) => {
-      val ntok = T(s, dir, "documents")
-        .select(col("doc_id").as("vec_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tok"))
-      // materialize once (t114 precedent): base feeds both ordering
-      // branches, and each twoLevelPrefixSum reads its input twice
-      // (rows + bucket table) — without the checkpoint the
-      // centroid-assign scan ran 4× per query (r13 judge nit #1)
-      val base = packDistances(s, dir).join(ntok, Seq("vec_id"))
-        .localCheckpoint(false)
-      val shuffled = base.withColumn("key",
-        md5(concat(lit("shuf42:"), col("vec_id").cast("string"))))
-      val aStart = Windows.twoLevelPrefixSum(shuffled, Seq(),
-        expr("conv(substring(key, 1, 2), 16, 10)").cast("long"),
-        Seq(col("key"), col("vec_id")), col("n_tok"), "start")
-        .select(lit("shuffle").as("ordering"),
-          expr("start DIV 2048").as("win"), col("cid"))
-      // cid·10⁵ + band is monotone in (cid, dist) only while the band
-      // fits its stride; embeddings are bounded in THIS corpus, but a
-      // corpus with larger norms would silently interleave buckets
-      // across cids — fail loudly instead (ADVICE r13).
-      val band = floor(col("__dist") * 64).cast("long")
-      val packBucket = when(band >= 100000L,
-        raise_error(concat(
-          lit("t130: floor(__dist*64) = "), band.cast("string"),
-          lit(" exceeds the 10^5 cid stride — pack bucket no longer " +
-            "monotone; raise the stride for this corpus"))))
-        .otherwise(col("cid") * 100000 + band)
-      val bStart = Windows.twoLevelPrefixSum(base, Seq(),
-        packBucket,
-        Seq(col("cid"), col("__dist"), col("vec_id")), col("n_tok"),
-        "start")
-        .select(lit("pack").as("ordering"),
-          expr("start DIV 2048").as("win"), col("cid"))
-      aStart.unionByName(bStart)
-        .groupBy("ordering")
-        .agg(countDistinct(col("win")).as("n_windows"),
-          countDistinct(expr("win * 1000000 + cid")).as("cell_windows"))
-        .select(col("ordering"), col("n_windows"), col("cell_windows"),
-          expr("cell_windows * 1000000 DIV n_windows")
-            .as("cells_per_window_ppm"))
-    }),
-
-    // ——— END-TO-END RELEASE PIPELINE (r13 verdict item #1) ————————
-    // Every stage below is individually oracle-verified; THIS query
-    // composes them into the one artifact run a data release actually
-    // ships, and hash-gates the FINAL decoded shard contents plus the
-    // manifest against a DuckDB twin of the whole chain — the
-    // cross-stage drift (gate order, dedup scope, pack boundaries,
-    // redaction-vs-tokenize order) per-op oracles can't see.
-    //
-    //   S0 JSONL ingest (S10)   — corpus enters as the interchange
-    //      artifact; quarantine accounted (gated 0)
-    //   S1 quality gates        — gateFlags kernel (t46 ∧ t81 ∧ rep),
-    //      keyed to the ingested rows
-    //   S2 near-dup keep-best   — staged LSH/CC labels + q-score
-    //      (t56), among gate survivors; a cluster whose best doc is
-    //      an eval doc drops entirely (decontam-correct)
-    //   S3 span decontam+redact — t45 spans vs the full eval slice,
-    //      t47 rebuild; eval docs themselves leave the corpus
-    //   S4 token budget         — t95's quality-ordered exclusive
-    //      prefix-sum cut (top quarter of surviving tokens)
-    //   S5 train shuffle        — t67's deterministic order, width 1,
-    //      plus REAL tokenizer ids: the trained unigram-LM vocab
-    //      (t132) encodes every kept token, so the exported
-    //      `input_ids` are actual vocab ids and the decoded-shard
-    //      gate covers the tokenizer → export seam (r14 verdict #1)
-    //   S6 shard manifest       — t121's numbers over the REDACTED
-    //      release text
-    //   S7 TFRecord export      — t124's write → read-back → decode;
-    //      order_sum gates that the BYTES ON DISK sit in the t67
-    //      order (rec_index is read from the files, never recomputed);
-    //      the run dir then publishes via the atomic _latest pointer
-    //
-    // Scale shape: each stage keeps its verified shape (broadcast
-    // eval grams, hash-partitioned cluster window, two-level prefix
-    // sum, per-shard sequential writes); the two reused frames
-    // (ingested docs, packed artifact) are localCheckpointed so no
-    // stage re-executes another's work; outputs are shard-count rows.
-    // Chain body: `releaseChain` (shared with t135's data card).
-    "t131_release_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val run = releaseChain(s, dir)
-      val art = run.art
-      val relDir = run.relDir
-      // S6 — t121 manifest over the redacted release corpus
-      val manifest = releaseManifest(art)
-        .select("shard", "n_tokens", "content_sum", "key_min",
-          "key_max")
-      // S7 — TFRecord export + manifest + publish (shared with the
-      // t139 consumer; see exportAndPublishOnce)
-      exportAndPublishOnce(s, run)
-      val decoded = graft.sink.TfRecord.read(s, s"$relDir/tfrec")
-        .as[(String, Long, Array[Byte], Boolean)]
-        .map { case (shard, idx, data, crcOk) =>
-          val f = graft.sink.TfRecord.decodeExample(data)
-          def i64(n: String): Seq[Long] = f.get(n) match {
-            case Some(graft.sink.TfRecord.Int64Val(vs)) => vs
-            case _ => Nil
-          }
-          val id = i64("doc_id").headOption.getOrElse(-1L)
-          // order term from the FILE's record index — gates that the
-          // bytes landed in t67 order, not just that they landed
-          (shard, id, i64("input_ids").sum,
-            i64("input_ids").length.toLong,
-            (idx + 1L) * (id % 997L), if (crcOk) 0L else 1L)
-        }
-        .toDF("shard", "doc_id", "id_sum", "n_tok", "ord", "crc_fail")
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_records"),
-          sum("doc_id").as("docid_sum"), sum("id_sum").as("id_sum"),
-          sum("n_tok").as("token_total"), sum("ord").as("order_sum"),
-          sum("crc_fail").as("crc_fail"))
-      decoded.join(manifest, Seq("shard"))
-        .withColumn("quarantined", lit(run.nQuar))
-        .select(col("shard"), col("n_records"), col("docid_sum"),
-          col("id_sum"), col("token_total"), col("order_sum"),
-          col("crc_fail"), col("quarantined"), col("n_tokens"),
-          col("content_sum"), col("key_min"), col("key_max"))
-    }),
-
-    // DATA CARD (r14 verdict item #8): the per-release report a
-    // 100 TB corpus ships with — ONE row composing, off the SAME
-    // release chain t131 exports, the funnel counts (ingested → gate
-    // pass → keep-best → released), the released token/piece totals,
-    // the trained-tokenizer fertility over the release, lexical
-    // diversity (exact release TTR — the release is budget-cut, so
-    // exact distinct is affordable where t126 needs its size-tiered
-    // sketch), dedup collapse, and shard count. Every input is an
-    // already-oracle-gated stage; the card's value is that the
-    // numbers are measured over ONE coherent artifact run, not
-    // stitched from per-query reruns that could drift.
-    //
-    // Scale shape: three aggregates over checkpointed release frames
-    // (corpus-scan work happened once in the chain); the distinct-
-    // token term aggregates the RELEASE (budget-cut) corpus only; the
-    // piece counts ride the in-row tokenizer already computed for
-    // input_ids. Output: 1 row.
-    "t135_release_card" -> ((s, dir) => {
-      val run = releaseChain(s, dir)
-      val funnel = run.docs.agg(count(lit(1)).as("docs_ingested"))
-        .crossJoin(run.gatePass.agg(count(lit(1)).as("docs_gate_pass")))
-        .crossJoin(run.kb.agg(count(lit(1)).as("docs_kept_best")))
-      // coalesce(…, 0): an empty release (100× replica corpora are
-      // ~100% eval-contaminated) must card as zeros, not NULLs —
-      // matching the twin's coalesced sums
-      val relStats = run.art.agg(
-        count(lit(1)).as("docs_released"),
-        coalesce(sum(col("tok")), lit(0L)).as("tokens_released"),
-        coalesce(sum(size(col("input_ids"))).cast("long"), lit(0L))
-          .as("pieces_released"),
-        coalesce(sum(size(filter(col("kept"), t => length(t) > 0)))
-          .cast("long"), lit(0L)).as("words_released"),
-        countDistinct(col("shard")).as("n_shards"))
-      val ttr = run.art
-        .select(explode(col("kept")).as("t"))
-        .where(length(col("t")) > 0)
-        .agg(countDistinct(lower(col("t"))).as("distinct_tokens"))
-      funnel.crossJoin(relStats).crossJoin(ttr)
-        .withColumn("dups_collapsed",
-          col("docs_gate_pass") - col("docs_kept_best"))
-        .withColumn("fertility_ppm",
-          expr("pieces_released * 1000000 DIV greatest(words_released, 1)"))
-        .withColumn("ttr_ppm",
-          expr("distinct_tokens * 1000000 DIV greatest(words_released, 1)"))
-        .withColumn("vocab_size", lit(run.vocabSize))
-        .withColumn("quarantined", lit(run.nQuar))
-    }),
-
-    // Release CONSUMER (the reader half of the publication protocol —
-    // r15 verdict item #4): everything after the publish reads ONLY
-    // through the public artifact surface — resolve `_latest`, read
-    // the published dir's manifest + TFRecord shards — never the
-    // producer's in-memory frames. Per shard it re-verifies record
-    // CRCs (TfRecord.read checks CRC32C per record), recounts records
-    // and decoded pieces against the shipped manifest, and emits the
-    // decoded doc-id/vocab-id sums the oracle audits against the
-    // corpus. A truncated shard recounts short (records_match false),
-    // a flipped byte fails CRC (crc_fail > 0), a missing shard
-    // surfaces through the full outer join with null counts — all
-    // hash-loud (ReleasePipelineSpec injects each fault).
-    "t139_release_consume" -> ((s, dir) => {
-      import s.implicits._
-      val run = releaseChain(s, dir)
-      exportAndPublishOnce(s, run)
-      val resolved = graft.sink.Release.resolveLatest(
-        s.sparkContext.hadoopConfiguration, run.relRoot)
-        .getOrElse(throw new IllegalStateException(
-          s"no published release under ${run.relRoot}"))
-      val man = s.read.parquet(s"$resolved/manifest")
-        .select(col("shard"), col("n_records").as("m_records"),
-          col("n_pieces").as("m_pieces"), col("id_sum").as("m_id_sum"),
-          col("key_min").as("m_key_min"), col("key_max").as("m_key_max"),
-          col("n_tokens"), col("content_sum"))
-      val decoded = graft.sink.TfRecord.read(s, s"$resolved/tfrec")
-        .as[(String, Long, Array[Byte], Boolean)]
-        .map { case (shard, _, data, crcOk) =>
-          // a CRC-failed record's bytes are untrusted — count the
-          // failure without decoding (a flipped byte must surface as
-          // crc_fail, not as a proto parse exception killing the audit)
-          if (!crcOk) (shard, 0L, 0L, 0L, 1L)
-          else {
-            val f = graft.sink.TfRecord.decodeExample(data)
-            def i64(n: String): Seq[Long] = f.get(n) match {
-              case Some(graft.sink.TfRecord.Int64Val(vs)) => vs
-              case _ => Nil
-            }
-            (shard, i64("doc_id").headOption.getOrElse(-1L),
-              i64("input_ids").sum, i64("input_ids").length.toLong, 0L)
-          }
-        }
-        .toDF("shard", "doc_id", "id_sum", "np", "crc_fail")
-        // the shard keys are derivable from the ARTIFACT alone
-        // (key = md5('shuf42:'||doc_id), the producer's scheme) — a
-        // CRC-failed record contributes no key (its doc_id is
-        // untrusted; min/max skip nulls and the crc flag already
-        // fails the shard loudly)
-        .withColumn("key", when(col("crc_fail") === 0,
-          md5(concat(lit("shuf42:"), col("doc_id").cast("string")))))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_records"),
-          sum("doc_id").as("docid_sum"), sum("id_sum").as("id_sum"),
-          sum("np").as("pieces_total"), sum("crc_fail").as("crc_fail"),
-          min("key").as("g_key_min"), max("key").as("g_key_max"))
-      // match EVERY manifest field (r16 verdict #3 closed the loop):
-      // counts, piece totals, id sums, and the key range come back
-      // out of the decoded artifact; token totals and content sums
-      // cannot (the raw text never ships) — those two are emitted
-      // from the manifest and the ORACLE recomputes them from the
-      // corpus through the full chain, so a manifest that lies about
-      // them hash-fails even though the artifact alone can't tell.
-      decoded.join(man, Seq("shard"), "full")
-        .select(col("shard"),
-          coalesce(col("n_records"), lit(0L)).as("n_records"),
-          coalesce(col("docid_sum"), lit(0L)).as("docid_sum"),
-          coalesce(col("id_sum"), lit(0L)).as("id_sum"),
-          coalesce(col("pieces_total"), lit(0L)).as("pieces_total"),
-          coalesce(col("crc_fail"), lit(0L)).as("crc_fail"),
-          // coalesce to FALSE: a shard missing from either side of
-          // the full join yields a NULL comparison, and a null gate
-          // flag reads as "unchecked" downstream (Row.getAs[Boolean]
-          // silently maps it to false in tests while the emitted
-          // column stays null) — a missing shard must FAIL loudly
-          coalesce(col("n_records") === col("m_records"), lit(false))
-            .as("records_match"),
-          coalesce(col("pieces_total") === col("m_pieces"), lit(false))
-            .as("pieces_match"),
-          coalesce(col("id_sum") === col("m_id_sum"), lit(false))
-            .as("ids_match"),
-          coalesce(col("g_key_min") === col("m_key_min") &&
-            col("g_key_max") === col("m_key_max"), lit(false))
-            .as("keys_match"),
-          col("n_tokens"), col("content_sum"))
-    }),
-
-    // Unigram-LM tokenizer TRAIN (SentencePiece shape, Kudo 2018 —
-    // r13 verdict item #3: the vocab the multilingual balance family
-    // t70/t55/t65 presumes, which BPE alone doesn't deliver). Ships
-    // the trained (piece, count, cost) table; `trainedUnigram` has
-    // the full algorithm. The oracle re-runs the ENTIRE hard EM
-    // sequentially in DuckDB: seed top-K substrings → 3 × [16-step
-    // unrolled Viterbi DP + backtrack + prune + Laplace re-cost] —
-    // every count exact, every cost a quantized ln both engines
-    // round identically.
-    "t132_unigram_train" -> ((s, dir) => {
-      import s.implicits._
-      trainedUnigram(s, dir).toDF("piece", "cnt", "cost")
-    }),
-
-    // Viterbi ENCODE under the t132 table, per doc: word/piece counts
-    // plus a piece-identity hash sum (t124's 15-bit id idiom) so the
-    // SEGMENTATION itself gates, not just its size. Scale shape: the
-    // kernel runs once per DISTINCT word (vocabulary-sized, piece
-    // table as data — one plan node); docs join back by word, an
-    // AQE-sized join (vocab can grow with a real corpus — no hint).
-    "t133_unigram_encode" -> ((s, dir) => {
-      val wstat = unigramWordPieces(s, dir).select(col("w"),
-        size(col("ps")).cast("long").as("np"),
-        expr("""aggregate(transform(ps,
-            p -> CAST(conv(substring(md5(p), 1, 9), 16, 10) AS BIGINT)
-              % 32768), CAST(0 AS BIGINT), (a, x) -> a + x)""")
-          .as("psum"))
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .where(length(col("w")) > 0 &&
-          length(col("w")) <= UnigramMaxWordLen)
-        .join(wstat, Seq("w"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"), sum("np").as("n_pieces"),
-          sum("psum").as("piece_sum"))
-    }),
-
-    // Unigram tokenizer FERTILITY by source (t65's metric under the
-    // t132 vocab): pieces per word in exact integer ppm — the
-    // cross-tokenizer comparison a vocab decision actually reads.
-    "t134_unigram_fertility" -> ((s, dir) => {
-      val wstat = unigramWordPieces(s, dir).select(col("w"),
-        size(col("ps")).cast("long").as("np"))
-      T(s, dir, "documents")
-        .select(col("source"),
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .where(length(col("w")) > 0 &&
-          length(col("w")) <= UnigramMaxWordLen)
-        .join(wstat, Seq("w"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_words"), sum("np").as("n_pieces"))
-        .withColumn("pieces_per_word_ppm",
-          expr("n_pieces * 1000000 DIV n_words"))
-    }),
-
-    // Tokenizer-COMPRESSION anomaly gate: a doc whose BPE tokens-per-
-    // char ratio sits far from its source's typical band is format
-    // noise — base64/minified blobs (ratio spikes) or wrong-language
-    // spillover the shared vocab can't compress. t65/t111 report
-    // corpus/source fertility health; THIS is the per-doc gate a
-    // pipeline runs after training the tokenizer. Fence is robust
-    // median + 3×MAD so the outliers being hunted cannot drag it.
-    //
-    // Scale shape: cr_ppm has a BOUNDED integer domain (≤10⁶ —
-    // a BPE symbol covers ≥1 char), so both medians aggregate a
-    // (source × value) HISTOGRAM via percentile(v, 0.5, cnt) — the
-    // agg state is distinct-value-sized and map-side combined, never
-    // a collect of the dominant source's rows (the same low-
-    // cardinality-group trap as the banned per-source sort windows,
-    // solved by domain-bounding instead of bucketing). Stats tables
-    // are O(sources) rows → explicit broadcast back. Integer-exact
-    // gate: medians of integers are multiples of 0.5, so dev4 =
-    // |4·cr − 4·med| and 3·mad4 are integer-valued doubles and the
-    // comparison cannot sit on a float boundary.
-    "t114_compression_gate" -> ((s, dir) => {
-      val merges = trainedMerges(s, dir)
-      val vocab = corpusWordCounts(s, dir).select(col("w"),
-        size(TextOps.bpeEncode(split(col("w"), ""), merges))
-          .cast("long").as("n_sym"))
-      val perDoc = T(s, dir, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          explode(TextOps.tokensLower(col("text"))).as("w"))
-        .where(length(col("w")) > 0)
-        .join(vocab, Seq("w"))
-        .groupBy("doc_id", "source", "n_chars")
-        .agg(sum("n_sym").as("n_bpe"))
-        .withColumn("cr_ppm", expr("n_bpe * 1000000 DIV n_chars"))
-        // materialize once (disk-spillable, lineage-truncating — the
-        // distilledModel precedent): med, dev and the output join all
-        // read this table, and without the checkpoint each reference
-        // re-plans the tokenize + vocab-encode pipeline
-        .localCheckpoint(false)
-      val med = perDoc.groupBy("source", "cr_ppm")
-        .agg(count(lit(1)).as("__c"))
-        .groupBy("source")
-        .agg(expr("percentile(cr_ppm, 0.5D, __c)").as("__med"))
-      val dev = perDoc.join(broadcast(med), Seq("source"))
-        .withColumn("__dev4",
-          abs(col("cr_ppm") * 4 - col("__med") * 4).cast("long"))
-      val mad = dev.groupBy("source", "__dev4")
-        .agg(count(lit(1)).as("__c"))
-        .groupBy("source")
-        .agg(expr("percentile(__dev4, 0.5D, __c)").as("__mad4"))
-      dev.join(broadcast(mad), Seq("source"))
-        .select(col("doc_id"), col("source"), col("n_bpe"),
-          col("cr_ppm"),
-          (col("__dev4") > col("__mad4") * 3).cast("long")
-            .as("outlier"))
-    }),
-
-    // Quality-classifier DISTILLATION by gradient descent — the
-    // FineWeb-Edu/DCLM move: a cheap linear student learns a slow
-    // teacher's verdicts so the full corpus only ever pays the
-    // student. Teacher = the Gopher rule gate (t46's pass flag);
-    // student = logistic regression over t81's hashed unigram+bigram
-    // features (256 md5 buckets — model size fixed no matter the
-    // vocabulary) plus two capped structural scalars (word count,
-    // stopword hits — see hashedFeaturePpm's comment for why the
-    // student needs them); 8 full-batch GD steps at a 1/step-decayed
-    // rate (see distilledModel). Per step: margins are a ~258-row
-    // broadcast join + per-doc partial-agged sum, gradients one
-    // feature-keyed shuffle; driver state is the weight vector
-    // (q39 k-means / t71 BPE precedent). Joins the engine's
-    // iterative family: k-means (q39), PageRank (t74), BPE (t71).
-    //
-    // Cross-engine exactness: NO transcendental anywhere — the
-    // sigmoid is the rational approximation s(z) = 1/2 + z/(2(1+|z|))
-    // in fixed-point ppm, and every division is integer TRUNCATION
-    // (Spark DIV ≡ DuckDB // ≡ Java / — all toward zero, probed on
-    // negatives), so the unrolled SQL twin reproduces the training
-    // run bit-for-bit. Overflow headroom: per-row |e·x| ≤ 10¹²
-    // pre-division and the summed gradient stays ≤ ~10⁶ per
-    // (doc, bucket) row — decimal territory only past ~10¹² docs.
-    "t115_logreg_distill" -> ((s, dir) => {
-      val (w, bias, _) = distilledModel(s, dir)
-      s.createDataFrame(w.toSeq :+ ("__bias" -> bias))
-        .toDF("b", "w_micro")
-    }),
-
-    // AUDIT of the distilled model (t115's student) against its
-    // teacher: score every doc with the final weights, decide with
-    // t81's keep convention (score_ppm > 500000), and report the
-    // per-source confusion — the acceptance gate a distilled
-    // classifier must pass before it replaces the teacher in the
-    // corpus-wide pass (and the per-source breakdown is what catches
-    // a student that only learned the dominant source's shortcut).
-    // One scoring pass: 256-row weight broadcast → per-doc partial-
-    // agged margin → source rollup; the training run is shared with
-    // t115 via the memo (materialize-once contract).
-    "t116_distill_audit" -> ((s, dir) => {
-      studentVerdicts(s, dir)
-        .join(teacherLabels(s, dir), Seq("doc_id"))
-        .join(T(s, dir, "documents").select("doc_id", "source"),
-          Seq("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("y").as("teacher_pos"),
-          sum("st").as("student_pos"),
-          sum(col("y") * col("st")).as("both_pos"),
-          sum(when(col("y") === col("st"), 1L).otherwise(0L))
-            .as("__agree"))
-        .withColumn("agree_ppm", expr("__agree * 1000000 DIV n_docs"))
-        .drop("__agree")
-    }),
-
-    // Post-gate MIX SHIFT + restore weights: filtering is never
-    // mixture-neutral — the gate drops sources unevenly, and a run
-    // that trains on the survivors silently changes its data mix.
-    // This is the planner table that quantifies the shift (original
-    // vs surviving share per source, ppm) and the per-source restore
-    // weight (milli) a sampler applies to bring the trained mix back
-    // to the pre-gate shares — the rebalance-after-filter step every
-    // mixture-controlled pipeline runs between gating and sampling
-    // (t26/t55 set target mixes; this reconciles a gate against
-    // them). Shapes: the shared memoized student-verdict pass, one
-    // source rollup, scalar-broadcast totals; integer ppm/milli
-    // floor division on non-negative values end to end. A fully
-    // filtered-out source reweights NULL (explicit CASE guard — not
-    // bare DIV 0: DuckDB nulls it but Spark 4's default ANSI mode
-    // THROWS, so an everything-rejected gate needs the guard on
-    // kept_share too) — there is nothing left to upweight.
-    "t117_gate_mix_shift" -> ((s, dir) => {
-      val per = studentVerdicts(s, dir)
-        .join(T(s, dir, "documents").select("doc_id", "source"),
-          Seq("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("st").as("n_kept"))
-      val tot = per.agg(sum("n_docs").as("__tn"),
-        sum("n_kept").as("__tk"))
-      per.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("n_kept"),
-          expr("n_docs * 1000000 DIV __tn").as("orig_share_ppm"),
-          expr("CASE WHEN __tk > 0 THEN n_kept * 1000000 DIV __tk END")
-            .as("kept_share_ppm"),
-          expr("""CASE WHEN n_kept > 0
-              THEN (n_docs * 1000000 DIV __tn) * 1000
-                DIV (n_kept * 1000000 DIV __tk) END""")
-            .as("reweight_milli"))
-    }),
-
-    // JSONL corpus round-trip with corrupt-line quarantine (the
-    // `ingest/Jsonl` source's contract, oracle-gated): documents
-    // serialize through the PRODUCTION serializer (Jsonl.toJsonLines
-    // — the exact to_json the .jsonl.gz sink writes), every 13th
-    // line is truncated mid-object (the killed-writer shard tail
-    // every real corpus contains), and the production parser
-    // (Jsonl.parseLines — PERMISSIVE + corrupt-record column) reads
-    // the stream back. Clean lines must round-trip every field
-    // bit-exactly (unicode text included); corrupt lines must emit
-    // one all-null row with the corrupt flag — a row per input line,
-    // never a silent drop (the accounting identity a corruption-rate
-    // alert needs). Entirely map-side (serialize + mangle + parse in
-    // one projection): no shuffle, trivially 100 TB.
-    "t118_jsonl_roundtrip" -> ((s, dir) => {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val cols = Seq("doc_id", "text", "lang", "n_chars")
-      val lines = T(s, dir, "documents")
-        .select(col("doc_id").as("__id"),
-          to_json(struct(cols.map(col): _*)).as("line"))
-      // not-JSON-from-byte-0 so the whole record quarantines — a
-      // truncation after a parseable prefix would exercise Spark's
-      // partial-result PERMISSIVE semantics (parsed prefix fields
-      // kept, corrupt flag set), which is engine-specific and has no
-      // cross-engine oracle; the spec covers that variant instead
-      val mangled = lines.select(
-        when(pmod(col("__id"), lit(13)) === 0,
-          concat(lit("corrupt!"), substring(col("line"), 1, 9)))
-          .otherwise(col("line")).as("line"))
-      graft.ingest.Jsonl.parseLines(mangled, "line", schema)
-        .select(col("doc_id"), col("text"), col("lang"),
-          col("n_chars"),
-          col(graft.ingest.Jsonl.CorruptCol).isNotNull.as("corrupt"))
-    }),
-
-    // Competence-based curriculum ordering (Bengio et al. 2009;
-    // Platanios et al. 2019 "Competence-based Curriculum Learning"):
-    // the training-order artifact a curriculum run consumes. Docs
-    // band by a difficulty proxy (token count, integer DIV 32 — a
-    // production stack plugs perplexity or the t7 score), order
-    // pseudorandomly WITHIN a band (md5 key — "sort by difficulty,
-    // shuffle within band"), and each band unlocks at the first
-    // training step whose linear competence c(s) = s/100 covers the
-    // band's difficulty-CDF percentile: unlock = ceil(100·cum/total),
-    // whole-band grants for determinism (t64's convention). Shapes:
-    // band/key derive map-side; the CDF comes off the O(bands) table
-    // (never a corpus window); the within-band position rides
-    // twoLevelRank — band is LOW-cardinality (a handful of length
-    // bands hold the whole corpus), exactly the one-task-per-group
-    // trap the two-level scan exists for; unlock steps join back as
-    // a broadcast. All-integer → exact oracle twin.
-    "t119_curriculum_order" -> ((s, dir) => {
-      val d = T(s, dir, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tok"))
-        .withColumn("band", expr("n_tok DIV 32"))
-        .withColumn("key",
-          md5(concat(lit("cur42:"), col("doc_id").cast("string"))))
-      val bands = d.groupBy("band").agg(count(lit(1)).as("__n"))
-      val wcum = Window.orderBy("band")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = bands.agg(sum("__n").as("__tot"))
-      val unlock = bands
-        .withColumn("__cum", sum("__n").over(wcum))
-        .crossJoin(broadcast(tot))
-        .select(col("band"),
-          expr("(100 * __cum + __tot - 1) DIV __tot").as("unlock_step"))
-      Windows.twoLevelRank(d, Seq("band"),
-          expr("conv(substring(key, 1, 2), 16, 10)").cast("long"),
-          Seq(col("key"), col("doc_id")), "pos_in_band")
-        .join(broadcast(unlock), Seq("band"))
-        .select(col("doc_id"), col("n_tok"), col("band"),
-          col("pos_in_band"), col("unlock_step"))
-    }),
-
-    // Gopher-style rule-based quality gate (Rae et al. 2021, table A1):
-    // named per-document heuristics — word count bounds, mean word
-    // length band, alphabetic-word fraction, minimum stopword hits —
-    // each reported individually so a pipeline can tune thresholds,
-    // plus the combined pass flag. Entirely map-side expression work
-    // over the token array: no shuffle, codegen'd, trivially 100 TB.
-    // Complements t7/t21 (scored quality) with the rule-set form real
-    // curation stacks run first.
-    "t46_gopher_rules" -> ((s, dir) => {
-      val toks = TextOps.tokensLower(col("text"))
-      T(s, dir, "documents").select(col("doc_id"),
-        TextOps.gopherNWords(toks).as("n_words"),
-        round(TextOps.gopherMeanLen(toks), 6).as("mean_word_len"),
-        round(TextOps.gopherAlphaFrac(toks), 6).as("alpha_frac"),
-        TextOps.gopherNStop(toks).as("n_stop"),
-        TextOps.gopherPass(toks).cast("long").as("pass"))
-    }),
-
-    // End-to-end curation funnel — the per-stage attrition report every
-    // production pipeline run logs: language gate (t6 kernel) → Gopher
-    // quality rules (t46 predicate) → exact dedup keep-first (d1
-    // convention) → eval-set 3-gram decontamination (t13 convention).
-    // Every stage is the SAME kernel/predicate its standalone query
-    // oracle-verifies, so the funnel cannot drift from the parts.
-    //
-    // Shape: SINGLE-PASS cumulative stage FLAGS, not five chained
-    // sub-frames — naively counting five staged lineages re-executes
-    // the whole pipeline per stage (the last count alone re-runs
-    // everything; ~5× scan cost at 100 TB). Here one corpus lineage
-    // computes s1/s2/s3 flags (the dedup keep-first windows over
-    // (content-hash, s2-survivor) so rank-within-survivors needs no
-    // separate frame), the decontam hit set arrives as a hit-doc
-    // broadcast, and ONE aggregation produces all five counts,
-    // unpivoted to (stage, n_docs). Corpus cost: three scans (flags
-    // pass, the survivors' gram pass, and the eval-gram side — plan-
-    // asserted in PlanAuditSpec), one window shuffle each, one
-    // broadcast semi-join — stage-count-independent. (Locally the staged 5-agg
-    // variant benches ~1 s faster — fewer expressions per row, and
-    // tiny-task stage scheduling dominates at sf0.1 — but it re-scans
-    // the text column once per stage, which is the wrong trade at
-    // IO-bound corpus scale.)
-    "t63_pipeline_funnel" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // the funnel population is the TRAINING universe — eval docs
-      // (doc_id % 97 == 0, t13's convention) are not curation
-      // candidates; without this the 4_decontam count is deflated by
-      // eval docs structurally self-matching their own grams
-      val d = T(s, dir, "documents").where(col("doc_id") % 97 =!= 0)
-      val toks = TextOps.tokensLower(col("text"))
-      val s1f = graft.functions.SketchExpressions
-        .langId(col("text")) === "en"
-      // when(), not &&: CaseWhen branches evaluate lazily per row, so
-      // the four token-array traversals only run for lang survivors —
-      // the single-pass shape keeps the staged pipeline's CPU profile
-      val s2f = when(s1f, TextOps.gopherPass(toks)).otherwise(lit(false))
-      // keep-first among s2 SURVIVORS: partition by (hash, s2-flag) —
-      // non-survivors rank within their own group and stay flagged out
-      val rk = row_number().over(Window
-        .partitionBy(md5(col("text")), s2f).orderBy(col("doc_id")))
-      val flagged = d.select(col("doc_id"),
-        s1f.as("__s1"), (s2f && rk === 1).as("__s3"), s2f.as("__s2"))
-      val evalGrams = T(s, dir, "documents")
-        .where(col("doc_id") % 97 === 0)
-        .select(explode(graft.functions.SketchExpressions
-          .wordShingles(TextOps.tokens(col("text")), 3)).as("g"))
-        .distinct()
-      // hit docs among s3 survivors (re-derived on the gram pass's own
-      // lineage — grams of non-survivors never explode)
-      val hits = d.select(col("doc_id"), (s2f && rk === 1).as("__k"),
-          col("text"))
-        .where(col("__k"))
-        .select(col("doc_id"),
-          explode(graft.functions.SketchExpressions
-            .wordShingles(TextOps.tokens(col("text")), 3)).as("g"))
-        .join(broadcast(evalGrams), Seq("g"))
-        .select("doc_id").distinct()
-      // hit ids are bounded only by ASSUMPTION (eval-term leakage
-      // into boilerplate makes them millions) — no broadcast hint;
-      // AQE broadcasts when the measured set is actually small
-      flagged
-        .join(hits.withColumn("__hit", lit(true)),
-          Seq("doc_id"), "left")
-        .agg(count(lit(1)).as("__n0"),
-          sum(col("__s1").cast("long")).as("__n1"),
-          sum(col("__s2").cast("long")).as("__n2"),
-          sum(col("__s3").cast("long")).as("__n3"),
-          sum((col("__s3") && !coalesce(col("__hit"), lit(false)))
-            .cast("long")).as("__n4"))
-        .select(expr("stack(5, '0_all', __n0, '1_lang_en', __n1, " +
-          "'2_gopher', __n2, '3_exact_dedup', __n3, " +
-          "'4_decontam', __n4) AS (stage, n_docs)"))
-    }),
-
-    // Repetition-budget allocation (Muennighoff et al. 2023, "Scaling
-    // Data-Constrained Language Models"): when data is scarce, repeat
-    // the BEST documents for extra epochs under a token budget instead
-    // of training on junk. Docs bucket by an integer quality proxy
-    // (stopword density in ppm — production plugs the full t7 score or
-    // a learned classifier), highest-quality buckets get a 2nd epoch
-    // while their cumulative tokens fit the extra budget (half the
-    // corpus here); whole-bucket grants keep the rule deterministic.
-    // Shape: one corpus pass to (doc, n_tok, bucket) — all-integer
-    // arithmetic, no cross-engine float ties — a ~100-row bucket frame
-    // for the cumulative window (never a corpus-sized global window),
-    // decisions join back as a broadcast.
-    "t64_repetition_budget" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val toks = TextOps.tokensLower(col("text"))
-      val d = T(s, dir, "documents").select(col("doc_id"),
-          TextOps.gopherNWords(toks).as("n_tok"),
-          TextOps.gopherNStop(toks).as("__ns"))
-        .withColumn("qb", expr("__ns * 1000000L DIV n_tok DIV 10000L"))
-      val buckets = d.groupBy("qb").agg(sum("n_tok").as("__tb"))
-      val wcum = Window.orderBy(col("qb").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // budget from the ~100-row bucket frame, NOT a second corpus
-      // agg — sum of bucket totals ≡ sum of doc tokens (the same
-      // O(vocab)-not-O(corpus) discipline as dsirLm's __tt)
-      val tot = buckets.agg(expr("sum(__tb) DIV 2").as("__budget"))
-      val decisions = buckets
-        .withColumn("__cum", sum("__tb").over(wcum))
-        .crossJoin(broadcast(tot))
-        .select(col("qb"),
-          when(col("__cum") <= col("__budget"), lit(2L)).otherwise(1L)
-            .as("epochs"))
-      d.select(col("doc_id"), col("n_tok"), col("qb"))
-        .join(broadcast(decisions), Seq("qb"))
-        .select(col("doc_id"), col("n_tok"), col("qb"), col("epochs"))
-    }),
-
-    // Canonicalization-then-hash — the step BEFORE every exact-dedup
-    // op on a real corpus: NFC-normalize (composed vs decomposed
-    // accents hash differently without it), lowercase, collapse
-    // whitespace, THEN content-hash. Pure map-side kernel; d1/t13/t49
-    // compose with it by hashing the canonical form instead of the
-    // raw text.
-    "t54_canonical_hash" -> ((s, dir) =>
-      T(s, dir, "documents")
-        .select(col("doc_id"),
-          md5(graft.functions.SketchExpressions
-            .canonicalizeText(col("text"))).as("c_hash"),
-          length(graft.functions.SketchExpressions
-            .canonicalizeText(col("text"))).cast("long").as("n_canon"))),
-
-    // W4 as a true RANGE-interval frame (the one frame type the rest
-    // of the window family doesn't exercise): per-user trailing-hour
-    // sum where the frame is defined by the VALUE of the ordering
-    // column (epoch seconds), not row counts — irregular event
-    // spacing keeps row frames wrong here. Partitioned by user:
-    // shuffles once on the window key, no global window.
-    "q42_range_frame" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("tsec")
-        .rangeBetween(-3599, 0)
-      T(s, dir, "events")
-        .select(col("user_id"), col("ts").cast("long").as("tsec"),
-          col("value"))
-        .select(col("user_id"), col("tsec"),
-          round(col("value"), 6).as("v"),
-          round(sum("value").over(w), 6).as("trail_1h"))
-    }),
-
-    // Incremental-ingest dedup — the operational 100 TB shape: a new
-    // crawl (delta = source 'src0') dedups against the STANDING corpus
-    // without re-clustering it. Exact: content-hash semi vs the
-    // corpus's hash set. Near: the delta's LSH band keys semi-join the
-    // corpus's band keys (t31's cross-corpus surface) — in production
-    // both right-hand sides are persisted indexes maintained
-    // incrementally, so each crawl shuffles only ITS OWN keys; the
-    // corpus is never rescanned per ingest. Output: per-delta-doc
-    // verdict (dup_exact, dup_near, keep).
-    "t49_incremental_ingest" -> ((s, dir) => {
-      val docs = T(s, dir, "documents")
-      val delta = docs.where(col("source") === "src0")
-      val existing = docs.where(col("source") =!= "src0")
-      val exH = existing.select(md5(col("text")).as("h")).distinct()
-        .withColumn("__ex", lit(1L))
-      // kernel shingles (t31's shape): the declarative shingleSet runs
-      // interpreted per element and was 6× the query's wall time; the
-      // MinHash min over the multiset equals the min over the set, so
-      // distinctness is unnecessary
-      def keys(df: DataFrame) = Dedup.lshBandKeys(
-        df
-          // pre-gate ≡ internal size gate (t2's rationale)
-          .where(size(TextOps.tokens(col("text"))) >= 3)
-          .select(col("doc_id"),
-            graft.functions.SketchExpressions
-              .wordShingles(TextOps.tokens(col("text")), 3).as("sh")),
-        "doc_id", "sh", k = 8, bands = 4, preGated = true)
-      val nearIds = keys(delta)
-        .join(keys(existing).select("band", "bh").distinct(),
-          Seq("band", "bh"), "left_semi")
-        .select("doc_id").distinct().withColumn("__near", lit(1L))
-      delta.select(col("doc_id"), md5(col("text")).as("h"))
-        .join(exH, Seq("h"), "left")
-        .join(nearIds, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("__ex"), lit(0L)).as("dup_exact"),
-          coalesce(col("__near"), lit(0L)).as("dup_near"),
-          (coalesce(col("__ex"), lit(0L)) === 0 &&
-            coalesce(col("__near"), lit(0L)) === 0).cast("long").as("keep"))
-    }),
-
-    // Embedding-space covariance (anisotropy / whitening diagnostic):
-    // ONE corpus pass through a custom mergeable TypedImperativeAggregate
-    // (VecCovarianceAgg) whose state is d(d+1)/2+d+1 doubles per
-    // partition — the declarative twin (posexplode ×d² + 4096-group
-    // agg) would multiply every row by d² before the partial agg. The
-    // d×d output explodes into (i, j, cov) rows only AFTER the
-    // aggregate, driver-sized. Retrieval stacks use this matrix to
-    // whiten embeddings before cosine search.
-    "t48_embed_covariance" -> ((s, dir) => {
-      val d = 64
-      T(s, dir, "embeddings")
-        .agg(graft.functions.AggregateExpressions
-          .vecCovariance(col("embedding"), d).as("m"))
-        .select(posexplode(col("m")).as(Seq("k", "c")))
-        .select(expr(s"CAST(k DIV $d AS BIGINT)").as("i"),
-          (col("k") % d).cast("long").as("j"),
-          // + 0.0 folds IEEE −0.0 to +0.0 (a −1e-9 cell rounds to
-          // −0.0; the engines' string forms differ and break the
-          // driver's canonicalized compare)
-          (round(col("c"), 6) + 0.0).as("cov"))
-    }),
-
-    // Embedding whitening (diagonal / z-score): standardize every
-    // dimension against corpus-wide moments — the preprocessing step
-    // that makes cosine retrieval robust to anisotropic embedding
-    // spaces (t48's covariance shows the anisotropy; this removes the
-    // per-dim scale component). The d-sized stats row broadcasts
-    // (crossJoin of ONE row — never a shuffle of the corpus) and the
-    // standardization itself is a map-side zip over each vector.
-    // Output long-form (vec_id, dim, z) for the oracle; a pipeline
-    // would keep the whitened array column.
-    "t50_embed_whiten" -> ((s, dir) => {
-      val e = T(s, dir, "embeddings")
-      val stats = e
-        .select(posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("dim")
-        .agg(avg(col("v")).as("mu"), stddev_pop(col("v")).as("sd"))
-        .agg(collect_list(struct(col("dim"), col("mu"), col("sd")))
-          .as("__st"))
-        .select(array_sort(col("__st")).as("__st"))
-        .select(transform(col("__st"), s => s("mu")).as("mus"),
-          transform(col("__st"), s => s("sd")).as("sds"))
-      e.crossJoin(broadcast(stats))
-        .select(col("vec_id"), posexplode(
-          zip_with(
-            zip_with(col("embedding"), col("mus"),
-              (x, m) => x.cast("double") - m),
-            // degenerate (constant) dims have no z-score: null here,
-            // filtered below — mirrors the oracle's sd > 0 guard
-            col("sds"), (c, sd) => when(sd > 0, c / sd))).as(Seq("dim", "z")))
-        .where(col("z").isNotNull)
-        .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          (round(col("z"), 6) + 0.0).as("z"))
-    }),
-
-    // X1 — the path-dependent depth recurrence (no SQL equivalent →
-    // rows-only check here; semantics golden-tested in UdgDepthSpec).
-    // A smoothed hourly series drives two "sensor installs"; state is
-    // per-sensor via repartition+sortWithinPartitions+mapPartitions.
-    "x1_depth_recurrence" -> ((s, dir) => {
-      val udg = x1UdgSeries(s, dir)
-      Depths.tdrDepth(udg, "ts", "udg", Seq(
-        Depths.Install("tdr1",
-          java.sql.Timestamp.valueOf("2024-01-05 00:00:00"), -0.5),
-        Depths.Install("tdr2",
-          java.sql.Timestamp.valueOf("2024-01-15 00:00:00"), -1.2)))
-        .select(col("sensor"), col("ts"), round(col("depth"), 6).as("depth"))
-    }),
-  )
-
-  /** DuckDB twin of [[stableAvg]] at scale 4 over a column expr. */
-  private def stableAvgSql(col: String): String =
-    s"""CAST((2 * CAST(sum(CAST($col AS DECIMAL(24,8)))
-       |                          * 100000000 AS HUGEINT)
-       |               + count($col) * 10000)
-       |              // (20000 * count($col)) AS DOUBLE) / 10000""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty,
-         round(sum(l_extendedprice), 2) AS sum_base,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc,
-         round(avg(l_quantity), 4) AS avg_qty,
-         count(*) AS n
-         FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-    "q2_dedup_distinct" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-    "q3_dedup_keepfirst" ->
-      """SELECT user_id, event_id, event_type FROM events
-         QUALIFY row_number() OVER (PARTITION BY user_id
-           ORDER BY ts, event_id) = 1""",
-    "q4_clamp" ->
-      """SELECT event_id,
-         CASE WHEN value BETWEEN 0.0 AND 50.0 THEN value END AS value_clamped
-         FROM events""",
-    "q5_hourly" ->
-      s"""SELECT date_trunc('hour', ts) AS hour,
-         ${stableAvgSql("value")} AS avg_value, count(*) AS n
-         FROM events GROUP BY 1""",
-    "q6_rolling_median" ->
-      """SELECT user_id, event_id,
-         round(median(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 172799999999 PRECEDING AND CURRENT ROW), 4)
-           AS med_2d
-         FROM events""",
-    "q6c_rolling_centered" ->
-      """SELECT user_id, event_id,
-         CASE WHEN count(value) OVER w >= 5
-              THEN round(median(value) OVER w, 4) END AS med_c
-         FROM events
-         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-           RANGE BETWEEN 172799999999 PRECEDING AND 172800000000 FOLLOWING)""",
-    "q7_lag_diff" ->
-      """SELECT user_id, event_id,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS dt_us
-         FROM events""",
-    "q8_ffill_limit" ->
-      """WITH base AS (
-           SELECT user_id, event_id, ts,
-             CASE WHEN value <= 30.0 THEN value END AS v FROM events),
-         runs AS (
-           SELECT *,
-             count(v) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run,
-             last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled
-           FROM base)
-         SELECT user_id, event_id,
-           CASE WHEN v IS NOT NULL THEN v
-                WHEN row_number() OVER (PARTITION BY user_id, run
-                  ORDER BY ts, event_id) - 1 <= 3 THEN filled END AS v_filled
-         FROM runs""",
-    "q9_interpolate" ->
-      """WITH base AS (
-           SELECT user_id, event_id, epoch_us(ts) AS t,
-             CASE WHEN value <= 30.0 THEN value END AS v FROM events),
-         ctx AS (
-           SELECT *,
-             last_value(v IGNORE NULLS) OVER wp AS pv,
-             last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-               OVER wp AS pt,
-             first_value(v IGNORE NULLS) OVER wn AS nv,
-             first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-               OVER wn AS nt
-           FROM base
-           WINDOW wp AS (PARTITION BY user_id ORDER BY t, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-           wn AS (PARTITION BY user_id ORDER BY t, event_id
-             ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-         SELECT user_id, event_id,
-           round(CASE WHEN v IS NOT NULL THEN v
-             WHEN pv IS NOT NULL AND nv IS NOT NULL
-               THEN pv + (nv - pv) * (t - pt) / (nt - pt)
-             WHEN pv IS NOT NULL THEN pv END, 6) AS v_interp
-         FROM ctx""",
-    "q10_grid" ->
-      s"""WITH h AS (
-           SELECT event_type, date_trunc('hour', ts) AS hour,
-             ${stableAvgSql("value")} AS v FROM events GROUP BY 1, 2),
-         span AS (SELECT event_type, min(hour) AS t0, max(hour) AS t1
-           FROM h GROUP BY 1),
-         grid AS (SELECT event_type,
-           unnest(generate_series(t0, t1, INTERVAL 1 HOUR)) AS hour
-           FROM span)
-         SELECT g.event_type, g.hour, h.v
-         FROM grid g LEFT JOIN h USING (event_type, hour)""",
-    "q11_join_broadcast" ->
-      """SELECT p_brand,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-         count(*) AS n
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand""",
-    "q12_join_multi" ->
-      """SELECT n_name,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-         count(*) AS n
-         FROM customer
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN orders ON o_custkey = c_custkey
-         JOIN lineitem ON l_orderkey = o_orderkey
-         WHERE o_orderstatus = 'F'
-         GROUP BY n_name""",
-    "q13_asof" ->
-      """WITH clicks AS (
-           SELECT event_id, user_id, ts FROM events
-           WHERE event_type = 'click'),
-         purchases AS (
-           SELECT user_id, ts, value FROM events
-           WHERE event_type = 'purchase'
-           QUALIFY row_number() OVER (PARTITION BY user_id, ts
-             ORDER BY event_id DESC) = 1)
-         SELECT c.event_id, c.user_id, p.value AS last_purchase_value
-         FROM clicks c ASOF LEFT JOIN purchases p
-           ON c.user_id = p.user_id AND p.ts <= c.ts""",
-    "q14_union" ->
-      """SELECT event_id, user_id FROM events
-         UNION ALL BY NAME
-         SELECT event_id, value FROM events""",
-    "q15_antijoin" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-           WHERE o_custkey = c_custkey AND o_orderstatus = 'P')""",
-    "q16_median_mode" ->
-      """WITH med AS (
-           SELECT user_id, round(median(value), 4) AS med
-           FROM events GROUP BY 1),
-         cnt AS (
-           SELECT user_id, event_type, count(*) AS n
-           FROM events GROUP BY 1, 2),
-         md AS (
-           SELECT user_id, event_type AS mode_type FROM cnt
-           QUALIFY row_number() OVER (PARTITION BY user_id
-             ORDER BY n DESC, event_type) = 1)
-         SELECT user_id, med, mode_type FROM med JOIN md USING (user_id)""",
-    "q17_piecewise" ->
-      """SELECT event_id,
-         round(value - CASE
-           WHEN ts >= TIMESTAMP '2024-01-20 00:00:00' THEN 0.75
-           WHEN ts >= TIMESTAMP '2024-01-10 00:00:00' THEN 0.5
-           ELSE 0.0 END, 4) AS value_corrected
-         FROM events""",
-    "q18_calibration" ->
-      """WITH coef(event_type, m, c) AS (
-           VALUES ('click', 2.0, 0.5), ('view', 1.5, -0.2)),
-         fb AS (SELECT avg(m) AS fm, avg(c) AS fc FROM coef)
-         SELECT event_id,
-           round(coalesce(m, fm) * (1 - value) + coalesce(c, fc), 6) AS cal
-         FROM events LEFT JOIN coef USING (event_type), fb""",
-    "q19_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric,
-           l_quantity AS mval FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount
-           FROM lineitem
-         UNION ALL
-         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""",
-    "q20_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey
-           ORDER BY o_totalprice DESC, o_orderkey) AS rn
-         FROM orders
-         QUALIFY rn <= 3""",
-    "q21_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "q22_timeslice" ->
-      """SELECT event_id, ts, value FROM events
-         WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-           AND ts < TIMESTAMP '2024-01-15 00:00:00'""",
-    "q23_daily_profile" ->
-      s"""SELECT event_type, ${stableAvgSql("value")} AS avg_value,
-         count(*) AS n
-         FROM events
-         WHERE date_trunc('day', ts) = TIMESTAMP '2024-01-05 00:00:00'
-         GROUP BY event_type""",
-    "q24_align" ->
-      s"""WITH c AS (
-           SELECT date_trunc('hour', ts) AS hour,
-             ${stableAvgSql("value")} AS click_avg
-           FROM events WHERE event_type = 'click' GROUP BY 1),
-         p AS (
-           SELECT date_trunc('hour', ts) AS hour,
-             ${stableAvgSql("value")} AS purchase_avg
-           FROM events WHERE event_type = 'purchase' GROUP BY 1)
-         SELECT coalesce(c.hour, p.hour) AS hour, click_avg, purchase_avg
-         FROM c FULL JOIN p ON c.hour = p.hour""",
-    "q30_sessions" ->
-      """WITH s AS (
-           SELECT user_id, ts, event_id,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                  > 1800000000 THEN 1 ELSE 0 END AS brk
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s2 AS (
-           SELECT user_id, ts,
-             CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS session_id
-           FROM s)
-         SELECT user_id, session_id,
-           min(ts) AS session_start, max(ts) AS session_end,
-           count(*) AS n_events,
-           epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
-         FROM s2 GROUP BY 1, 2""",
-    "q31_range_join" ->
-      """WITH c AS (
-           SELECT user_id, ts FROM events WHERE event_type = 'click'),
-         p AS (
-           SELECT user_id, ts, event_id AS purchase_id FROM events
-           WHERE event_type = 'purchase')
-         SELECT p.purchase_id, count(c.ts) AS n_clicks
-         FROM p LEFT JOIN c
-           ON c.user_id = p.user_id
-           AND c.ts >= p.ts AND c.ts < p.ts + INTERVAL 1 HOUR
-         GROUP BY 1""",
-    "q34_salted_agg" ->
-      """SELECT event_type, round(sum(value), 2) AS sum_v, count(*) AS n
-         FROM events GROUP BY event_type""",
-    "q35_centroids" ->
-      """SELECT label, d,
-         round(avg(CAST(embedding[d] AS DOUBLE)), 6) AS c
-         FROM embeddings, unnest(generate_series(1, 64)) AS u(d)
-         GROUP BY 1, 2""",
-    "q36_ivf_assign" ->
-      s"""$ivfAssignSql
-         SELECT vec_id, cid FROM a""",
-    "q32_scalar_subquery" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders)""",
-    "q33_in_subquery" ->
-      """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
-         count(*) AS n
-         FROM lineitem
-         WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-           WHERE o_orderstatus = 'P')
-         GROUP BY l_returnflag""",
-    "q25_distinct_count" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users,
-         count(*) AS n FROM events GROUP BY event_type""",
-    "q26_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "q27_quantiles" ->
-      """SELECT event_type,
-         round(quantile_cont(value, 0.25), 4) AS p25,
-         round(quantile_cont(value, 0.5), 4) AS p50,
-         round(quantile_cont(value, 0.9), 4) AS p90
-         FROM events GROUP BY event_type""",
-    "q28_json" ->
-      """SELECT event_type, round(avg(k), 4) AS avg_k, count(*) AS n
-         FROM (SELECT event_type,
-           CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events)
-         GROUP BY event_type""",
-    "q29_strings" ->
-      """SELECT p_partkey, split_part(p_name, ' ', 1) AS w1,
-         upper(p_brand) AS ub, len(p_name) AS n FROM part""",
-    "q37_pivot" ->
-      """SELECT user_id,
-         round(sum(value) FILTER (event_type = 'click'), 2) AS click,
-         round(sum(value) FILTER (event_type = 'error'), 2) AS error,
-         round(sum(value) FILTER (event_type = 'purchase'), 2) AS purchase,
-         round(sum(value) FILTER (event_type = 'signup'), 2) AS signup,
-         round(sum(value) FILTER (event_type = 'view'), 2) AS view
-         FROM events GROUP BY user_id""",
-    "q38_setops" ->
-      """SELECT 'click_not_error' AS op, user_id FROM (
-           SELECT user_id FROM events WHERE event_type = 'click'
-           EXCEPT
-           SELECT user_id FROM events WHERE event_type = 'error')
-         UNION ALL
-         SELECT 'click_and_purchase' AS op, user_id FROM (
-           SELECT user_id FROM events WHERE event_type = 'click'
-           INTERSECT
-           SELECT user_id FROM events WHERE event_type = 'purchase')""",
-    "d1_docs_exact_dedup" ->
-      """SELECT md5(text) AS h, min(doc_id) AS doc_id,
-         count(*) AS n_copies
-         FROM documents GROUP BY 1""",
-    "d2_token_count" ->
-      """SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
-         FROM documents""",
-    "t1_minhash_sig" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents
-           WHERE len(string_split_regex(text, '\s+')) >= 3),
-         sh AS (
-           SELECT doc_id,
-             [array_to_string(toks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(toks)-2)] AS s
-           FROM t)
-         SELECT doc_id,
-           array_to_string(
-             [list_min([md5(k::VARCHAR || '|' || x) FOR x IN s])
-              FOR k IN generate_series(1, 8)], '|') AS mh
-         FROM sh""",
-    "t2_lsh_jaccard" ->
-      raw"""WITH $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sets AS (SELECT doc_id, list_distinct(s) AS ss FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(len(list_filter(x.ss, e -> list_contains(y.ss, e)))
-                      AS DOUBLE)
-             / (len(x.ss) + len(y.ss)
-                - len(list_filter(x.ss, e -> list_contains(y.ss, e)))), 6)
-             AS jac
-         FROM pairs
-         JOIN sets x ON x.doc_id = id_a
-         JOIN sets y ON y.doc_id = id_b""",
-    "t85_jaccard_sweep" ->
-      raw"""WITH $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sets AS (SELECT doc_id, list_distinct(s) AS ss FROM sh),
-         j AS (
-           SELECT CAST(len(list_filter(x.ss, e -> list_contains(y.ss, e)))
-                       AS DOUBLE)
-             / (len(x.ss) + len(y.ss)
-                - len(list_filter(x.ss, e -> list_contains(y.ss, e))))
-             AS jac
-           FROM pairs
-           JOIN sets x ON x.doc_id = id_a
-           JOIN sets y ON y.doc_id = id_b)
-         SELECT CAST(least(floor(jac * 10), 9) AS BIGINT) AS bin,
-           count(*) AS n_pairs
-         FROM j WHERE jac IS NOT NULL
-         GROUP BY 1""",
-    "d3_vocab" ->
-      """SELECT tok, count(*) AS n FROM (
-           SELECT unnest(string_split_regex(lower(text), '\s+')) AS tok
-           FROM documents)
-         WHERE len(tok) > 0
-         GROUP BY tok ORDER BY n DESC, tok LIMIT 20""",
-    "t11_simhash_dedup" ->
-      """WITH t AS (
-           SELECT doc_id,
-             [md5(tok) FOR tok IN string_split_regex(text, '\s+')] AS hs
-           FROM documents),
-         sig AS (
-           SELECT doc_id,
-             array_to_string(
-               [CASE WHEN list_sum(
-                  [CASE WHEN substr(h, i, 1) BETWEEN '8' AND 'f'
-                        THEN 1 ELSE -1 END FOR h IN hs]) > 0
-                THEN '1' ELSE '0' END
-                FOR i IN generate_series(1, 32)], '') AS sh
-           FROM t)
-         SELECT sh, min(doc_id) AS keep_id, count(*) AS n_docs
-         FROM sig GROUP BY sh""",
-    // Transitive closure over the SAME LSH pairs as t2: every node's
-    // cluster id is the min id it can reach (plus itself); documents in
-    // no pair are their own cluster.
-    "t12_dup_clusters" ->
-      s"""$neardupLabelSql
-         SELECT doc_id, cluster_id FROM lbl""",
-    "t86_dedup_savings" ->
-      s"""$neardupLabelSql,
-         tk AS (
-           SELECT doc_id,
-             CAST(len(string_split_regex(text, '\\s+')) AS BIGINT)
-               AS n_tok
-           FROM documents),
-         per AS (
-           SELECT l.cluster_id, count(*) AS sz, sum(tk.n_tok) AS tok,
-             min(l.doc_id) AS keep_id
-           FROM lbl l JOIN tk ON tk.doc_id = l.doc_id
-           GROUP BY 1),
-         kept AS (
-           SELECT p.sz, p.tok, tk.n_tok AS kept_tok
-           FROM per p JOIN tk ON tk.doc_id = p.keep_id)
-         SELECT sz AS cluster_size, count(*) AS n_clusters,
-           CAST(sum(tok) AS BIGINT) AS total_tokens,
-           CAST(sum(tok) - sum(kept_tok) AS BIGINT) AS tokens_saved
-         FROM kept GROUP BY 1""",
-    // The end state of the synthesized crawl, computed directly from
-    // documents: the WARC wrap/parse round-trip is identity on the
-    // augmented text (tags/junk strip back out, whitespace collapses
-    // — the corpus is already single-spaced), the stale capture loses
-    // latest-capture, the mirror loses content-dedup (same text, /q
-    // sorts after /p), so survivors = unblocked docs deduped by
-    // content with keep-min-url, packed in doc_id order.
-    "t87_warc_pipeline" ->
-      raw"""WITH $urlAugSql,
-         hits AS (
-           SELECT DISTINCT doc_id FROM u
-           WHERE lower(domain) IN ('site0.example.org',
-                                   'site3.example.org', 'host2.net')),
-         k0 AS (
-           SELECT doc_id, trim(regexp_replace(aug, '\s+', ' ')) AS text,
-             'https://site' || (doc_id % 7) || '.example.org/p'
-               || doc_id AS url
-           FROM a
-           WHERE doc_id NOT IN (SELECT doc_id FROM hits)),
-         kd AS (
-           SELECT doc_id, text FROM k0
-           QUALIFY row_number()
-             OVER (PARTITION BY md5(text) ORDER BY url) = 1),
-         t AS (
-           SELECT doc_id,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-           FROM kd),
-         c AS (
-           SELECT doc_id, n_tok,
-             COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS start
-           FROM t)
-         SELECT doc_id, n_tok, CAST(start AS BIGINT) AS start,
-           CAST(start // 2048 AS BIGINT) AS first_seq,
-           CAST((start + greatest(n_tok, 1) - 1) // 2048 AS BIGINT)
-             AS last_seq
-         FROM c""",
-    // Sign-bit packing mirrors the Spark polynomial fold exactly: two
-    // 32-dim halves, MSB = lowest dim, so shifts stay under 1<<31.
-    "t88_binary_ann" ->
-      s"""WITH $binaryAnnSql
-         SELECT qid, vec_id, hamming, round(c0, 6) AS cos, rn
-         FROM approx""",
-    // Recall of the sign-bit prefilter against the exact cosine
-    // truth, per probe — the number that justifies (or indicts) the
-    // 16-byte signature. `exact` recomputes the t4 baseline from the
-    // shared `e`/`q` CTEs; hits = |approx ∩ exact| per probe.
-    "t92_binary_recall" ->
-      s"""WITH $binaryAnnSql,
-         x0 AS (
-           SELECT qid, vec_id,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS cx
-           FROM e, q WHERE vec_id <> qid),
-         exact AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY cx DESC, vec_id) AS rn FROM x0)
-           WHERE rn <= 5),
-         hits AS (
-           SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hit
-           FROM approx a JOIN exact x
-             ON a.qid = x.qid AND a.vec_id = x.vec_id
-           GROUP BY 1)
-         SELECT q.qid, CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
-           CAST(COALESCE(n_hit, 0) * 1000000 // 5 AS BIGINT)
-             AS recall_ppm
-         FROM (SELECT DISTINCT qid FROM q) q
-         LEFT JOIN hits ON hits.qid = q.qid""",
-    // Longest-match argmax mirrored as max-of-struct (field-by-field
-    // comparison is the same rule in both engines).
-    "t93_robots_gate" ->
-      """WITH d AS (
-           SELECT doc_id,
-             'site' || (doc_id % 7) || '.example.com' AS host,
-             '/p/' || doc_id AS path
-           FROM documents),
-         rules AS (
-           SELECT 'site' || g || '.example.com' AS host, rtype, prefix
-           FROM generate_series(0, 6) t0(g),
-             (VALUES ('disallow', '/p/', 0), ('allow', '/p/1', 0),
-                     ('disallow', '/p/12', 1)) v(rtype, prefix, evenonly)
-           WHERE evenonly = 0 OR g % 2 = 0),
-         m AS (
-           SELECT doc_id,
-             max(struct_pack(
-               l := len(prefix),
-               a := CASE WHEN rtype = 'allow' THEN 1 ELSE 0 END,
-               p := prefix)) AS mm
-           FROM d JOIN rules ON d.host = rules.host
-             AND starts_with(d.path, rules.prefix)
-           GROUP BY 1)
-         SELECT d.doc_id, d.host,
-           CASE WHEN m.doc_id IS NULL
-                  OR struct_extract(mm, 'a') = 1
-             THEN 'allow' ELSE 'block' END AS verdict,
-           COALESCE(struct_extract(mm, 'p'), '') AS matched
-         FROM d LEFT JOIN m ON d.doc_id = m.doc_id""",
-    // The twin states the canonical key DIRECTLY (both planted
-    // spellings normalize to the bare-host form — the www-strip is
-    // t89's tested seam, not this query's), then mirrors the two
-    // windows; shares the t74 rank CTE block so the schedule and the
-    // rank artifact cannot drift.
-    "t94_frontier_schedule" ->
-      s"""WITH $hostRankSql,
-         f AS (
-           SELECT 'https://site' || (doc_id % 7) || '.example.org/p/'
-               || (doc_id // 14) AS curl,
-             'site' || (doc_id % 7) || '.example.org' AS host,
-             min(doc_id) AS keep_id
-           FROM documents GROUP BY 1, 2),
-         j AS (
-           SELECT f.curl, f.host, f.keep_id,
-             CAST(COALESCE(r3.r, 0) AS BIGINT) AS rank_ppm
-           FROM f LEFT JOIN r3 ON f.host = r3.node),
-         sch AS (
-           SELECT *, row_number() OVER (
-               PARTITION BY host ORDER BY curl) AS fetch_round
-           FROM j)
-         SELECT curl, host, keep_id, rank_ppm,
-           CAST(fetch_round AS BIGINT) AS fetch_round,
-           CAST(row_number() OVER (PARTITION BY fetch_round
-             ORDER BY rank_ppm DESC, host) AS BIGINT) AS pos_in_round
-         FROM sch""",
-    // One-machine twin: per-source window prefix sum where Spark runs
-    // the partitioned two-level scan; same shared token expression.
-    "t96_context_stitch" ->
-      s"""WITH t AS (
-           SELECT doc_id, source, $bpeCountSql AS tok
-           FROM documents),
-         st AS (
-           SELECT *, COALESCE(SUM(tok) OVER (PARTITION BY source
-             ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS start
-           FROM t),
-         p AS (
-           SELECT source, start // 8192 AS ctx, doc_id, tok,
-             CASE WHEN (start + greatest(tok, 1) - 1) // 8192
-               > start // 8192 THEN 1 ELSE 0 END AS spill
-           FROM st)
-         SELECT source, CAST(ctx AS BIGINT) AS ctx,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(tok) AS BIGINT) AS n_tokens,
-           CAST(sum(spill) AS BIGINT) AS n_spill,
-           min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         FROM p GROUP BY 1, 2""",
-    // One-machine KN twin: same tokenization as t53's bigram twin,
-    // same single c3 type table feeding every reaggregated statistic,
-    // the same arithmetic expression tree (greatest(c−D,0) + D·n·p,
-    // then one division) so the doubles are bit-identical before the
-    // shared HALF_UP ppm rounding. split_part on the 3-token string
-    // is exact even with empty tokens (single-space separators).
-    "t97_kn_trigram" ->
-      s"""WITH ${knStatsSql("")},
-         top AS (SELECT tg, c3, ctx12, w23, w3 FROM k
-           ORDER BY c3 DESC, tg LIMIT 50),
-         p AS (SELECT top.tg, top.c3, ctx.c12, ctx.n1ctx,
-             mid.cc23, midctx.ccdot2, midctx.n2w2, uni.n1w3, tot.nbt,
-             uni.n1w3 / tot.nbt AS pc
-           FROM top
-           JOIN ctx USING (ctx12)
-           JOIN mid USING (w23)
-           JOIN midctx ON midctx.w2 = split_part(top.w23,' ',1)
-           JOIN uni ON uni.w3 = top.w3
-           CROSS JOIN tot),
-         p2 AS (SELECT *,
-             (greatest(cc23 - 0.75, 0.0) + 0.75 * n2w2 * pc) / ccdot2
-               AS p2
-           FROM p)
-         SELECT tg, CAST(c3 AS BIGINT) AS c3,
-           CAST(round(((greatest(c3 - 0.75, 0.0) + 0.75 * n1ctx * p2)
-             / c12) * 1000000.0) AS BIGINT) AS kn_ppm,
-           CAST(round(p2 * 1000000.0) AS BIGINT) AS backoff_ppm,
-           CAST(round(pc * 1000000.0) AS BIGINT) AS cont_ppm
-         FROM p2""",
-    // Held-out scorer twin: the SAME shared stats block (trained on
-    // the even split), the same backoff CASE chain and double
-    // expression trees as the Spark side, per-trigram HALF_UP micro
-    // rounding (away from zero on negatives in both engines) before
-    // the order-free BIGINT sum, and a multiplication-form keep gate
-    // (no integer division — Spark div truncates where DuckDB //
-    // floors, and these sums are negative).
-    "t104_kn_doc_ppl" ->
-      s"""WITH ${knStatsSql("WHERE abs(doc_id) % 2 = 0")},
-         ${knDocTrigramsSqlTemplate.replace(
-        "__WHERE__", "WHERE abs(doc_id) % 2 = 1")},
-         s1 AS (SELECT doc_id, tg,
-             split_part(tg,' ',1) || ' ' || split_part(tg,' ',2)
-               AS ctx12,
-             split_part(tg,' ',2) || ' ' || split_part(tg,' ',3)
-               AS w23,
-             split_part(tg,' ',3) AS w3
-           FROM gt),
-         j AS (SELECT s1.doc_id, c3.c3, ctx.c12, ctx.n1ctx, mid.cc23,
-             midctx.ccdot2, midctx.n2w2, uni.n1w3, tot.nbt
-           FROM s1
-           LEFT JOIN c3 USING (tg)
-           LEFT JOIN ctx USING (ctx12)
-           LEFT JOIN mid USING (w23)
-           LEFT JOIN midctx ON midctx.w2 = split_part(s1.w23,' ',1)
-           LEFT JOIN uni ON uni.w3 = s1.w3
-           CROSS JOIN tot),
-         pcs AS (SELECT *,
-             (COALESCE(n1w3, 0) + 0.5) / (nbt + 0.5) AS pc
-           FROM j),
-         p2s AS (SELECT *,
-             CASE WHEN ccdot2 IS NOT NULL THEN
-               (greatest(COALESCE(cc23, 0) - 0.75, 0.0)
-                 + 0.75 * n2w2 * pc) / ccdot2
-             ELSE pc END AS p2
-           FROM pcs),
-         p3s AS (SELECT doc_id,
-             CASE WHEN c12 IS NOT NULL THEN
-               (greatest(COALESCE(c3, 0) - 0.75, 0.0)
-                 + 0.75 * n1ctx * p2) / c12
-             ELSE p2 END AS p3
-           FROM p2s),
-         lp AS (SELECT doc_id,
-             CAST(round(ln(p3) * 1000000.0) AS BIGINT) AS lp_micro
-           FROM p3s)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tg,
-           CAST(sum(lp_micro) AS BIGINT) AS sum_lp_micro,
-           CAST(sum(lp_micro) >= -8000000 * count(*) AS BIGINT) AS keep
-         FROM lp GROUP BY doc_id""",
-    // Data-card twin: the shared t54 hash / t7 score / d6 token-count
-    // expressions (one definition each, so the card cannot drift from
-    // the artifacts it summarizes); integer sum//count means; window
-    // top-1 after GROUP BY for the dominant language.
-    "t105_data_card" ->
-      s"""WITH d AS (
-           SELECT source, lang, n_chars,
-             CAST(round($qScoreSql * 1000000.0) AS BIGINT) AS qm,
-             CAST($bpeCountSql AS BIGINT) AS tok,
-             $canonHashSql AS h
-           FROM documents),
-         a AS (SELECT source, count(*) AS n_docs, sum(tok) AS n_tok,
-             count(DISTINCT h) AS n_uniq, sum(qm) AS sum_qm,
-             sum(n_chars) AS sum_chars
-           FROM d GROUP BY source),
-         l AS (SELECT source, lang,
-             row_number() OVER (PARTITION BY source
-               ORDER BY count(*) DESC, lang) AS rn
-           FROM d GROUP BY source, lang)
-         SELECT a.source, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tok AS BIGINT) AS n_tok,
-           CAST((n_docs - n_uniq) * 1000000 // n_docs AS BIGINT)
-             AS dup_ppm,
-           l.lang AS top_lang,
-           CAST(sum_qm // n_docs AS BIGINT) AS mean_q_micro,
-           CAST((sum_chars * 100) // n_docs AS BIGINT)
-             AS mean_chars_x100
-         FROM a JOIN l ON a.source = l.source AND l.rn = 1""",
-    // Sampler twin: t27's tokenization, the same sqrt(sqrt(c³))
-    // damping (correctly-rounded on both engines), a plain window
-    // cumsum in token order standing in for Spark's two-level scan.
-    "t100_neg_sampling" ->
-      """WITH f AS (
-           SELECT unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         g AS (SELECT term FROM f WHERE len(term) > 0),
-         v AS (SELECT term, count(*) AS c FROM g GROUP BY term),
-         w AS (SELECT term, c,
-             CAST(round(sqrt(sqrt(CAST(c*c*c AS DOUBLE))) * 1000.0)
-               AS BIGINT) AS w_milli
-           FROM v),
-         r AS (SELECT term, c, w_milli,
-             COALESCE(SUM(w_milli) OVER (ORDER BY term
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cum_lo
-           FROM w)
-         SELECT term, CAST(c AS BIGINT) AS c, w_milli,
-           CAST(cum_lo AS BIGINT) AS cum_lo,
-           CAST(cum_lo + w_milli AS BIGINT) AS cum_hi
-         FROM r ORDER BY c DESC, term LIMIT 100""",
-    // FIM twin: identical integer cut arithmetic on doc_id mod n+1,
-    // identical 1-indexed inclusive slices; array_to_string of an
-    // empty DuckDB list is NULL (Spark array_join is '') so every
-    // join is coalesced.
-    "t99_fim_transform" ->
-      """WITH t AS (
-           SELECT doc_id,
-             string_split_regex(lower(COALESCE(text, '')), '\s+') AS toks
-           FROM documents),
-         d AS (
-           SELECT doc_id, toks, len(toks) AS n,
-             CASE WHEN doc_id % 2 = 0 AND len(toks) >= 2
-               THEN 1 ELSE 0 END AS fim,
-             (doc_id * 31 + 7) % (len(toks) + 1) AS c1,
-             (doc_id * 17 + 3) % (len(toks) + 1) AS c2
-           FROM t),
-         e AS (
-           SELECT doc_id, toks, n, fim,
-             least(c1, c2) AS lo, greatest(c1, c2) AS hi
-           FROM d)
-         SELECT doc_id, CAST(fim AS BIGINT) AS fim,
-           CAST(CASE WHEN fim = 1 THEN lo ELSE n END AS BIGINT)
-             AS n_pre,
-           CAST(CASE WHEN fim = 1 THEN hi - lo ELSE 0 END AS BIGINT)
-             AS n_mid,
-           CAST(CASE WHEN fim = 1 THEN n - hi ELSE 0 END AS BIGINT)
-             AS n_suf,
-           CASE WHEN fim = 1 THEN
-             '<fim_prefix>' ||
-             COALESCE(array_to_string(toks[1:lo], ' '), '') ||
-             '<fim_suffix>' ||
-             COALESCE(array_to_string(toks[hi+1:n], ' '), '') ||
-             '<fim_middle>' ||
-             COALESCE(array_to_string(toks[lo+1:hi], ' '), '')
-           ELSE COALESCE(array_to_string(toks, ' '), '') END AS packed
-         FROM e""",
-    // Same canonical-hash expression as the t54 twin; both keep
-    // flags are row_number()=1 windows keyed by the hash, and the
-    // derived counts cast back to BIGINT (sum() widens to HUGEINT).
-    "t98_dedup_scope" ->
-      s"""WITH d AS (
-           SELECT doc_id, doc_id % 3 AS snap,
-             $canonHashSql AS h
-           FROM documents),
-         f AS (SELECT snap,
-             CASE WHEN row_number() OVER (PARTITION BY h
-               ORDER BY snap, doc_id) = 1 THEN 1 ELSE 0 END AS keep_g,
-             CASE WHEN row_number() OVER (PARTITION BY h, snap
-               ORDER BY doc_id) = 1 THEN 1 ELSE 0 END AS keep_s
-           FROM d),
-         a AS (SELECT snap, count(*) AS n_docs,
-             sum(keep_s) AS kept_scoped, sum(keep_g) AS kept_global
-           FROM f GROUP BY snap)
-         SELECT CAST(snap AS BIGINT) AS snap,
-           CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(kept_scoped AS BIGINT) AS kept_scoped,
-           CAST(kept_global AS BIGINT) AS kept_global,
-           CAST(kept_scoped - kept_global AS BIGINT) AS cross_dups,
-           CAST(n_docs - kept_scoped AS BIGINT) AS within_dups,
-           CAST(kept_scoped * 1000000 // n_docs AS BIGINT)
-             AS scoped_keep_ppm,
-           CAST(kept_global * 1000000 // n_docs AS BIGINT)
-             AS global_keep_ppm
-         FROM a""",
-    // Chat-template twin: identical synthetic conversation keys
-    // ((rn-1)//4, alternating roles), the same +1 role-tag token
-    // cost, a per-conversation running sum for the span endpoints,
-    // and ORDER BY turn inside string_agg standing in for Spark's
-    // sort_array(collect_list(struct)). string_agg skips the NULL
-    // user-turn spans exactly as collect_list does; its empty result
-    // is NULL where Spark's array_join gives '', hence the COALESCE.
-    "t101_chat_template" ->
-      """WITH d AS (
-           SELECT doc_id, source, COALESCE(text, '') AS text,
-             row_number() OVER (PARTITION BY source ORDER BY doc_id)
-               AS rn
-           FROM documents),
-         t AS (SELECT source, (rn-1)//4 AS conv, (rn-1)%4 + 1 AS turn,
-             CASE WHEN ((rn-1)%4 + 1) % 2 = 1
-               THEN 'user' ELSE 'assistant' END AS role,
-             len(string_split_regex(lower(text), '\s+')) + 1 AS n_tok,
-             text
-           FROM d),
-         sp AS (SELECT *,
-             sum(n_tok) OVER (PARTITION BY source, conv ORDER BY turn)
-               AS e
-           FROM t)
-         SELECT source, CAST(conv AS BIGINT) AS conv,
-           CAST(count(*) AS BIGINT) AS n_turns,
-           CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-           CAST(sum(CASE WHEN role = 'assistant' THEN n_tok ELSE 0 END)
-             AS BIGINT) AS n_loss_tokens,
-           COALESCE(string_agg(CASE WHEN role = 'assistant'
-             THEN CAST(e - n_tok AS BIGINT) || ':' || CAST(e AS BIGINT)
-             END, ';' ORDER BY turn), '') AS loss_spans,
-           string_agg('<|' || role || '|>' || text, '' ORDER BY turn)
-             AS rendered
-         FROM sp GROUP BY source, conv""",
-    // Schedule twin: the same integer Bresenham quotas — `*` and `//`
-    // are left-associative at equal precedence in both engines, but
-    // both sides parenthesise the product anyway so the expression
-    // tree is identical by construction, not by precedence luck.
-    "t102_batch_schedule" ->
-      """WITH tok AS (
-           SELECT source,
-             CAST(sum(len(string_split_regex(lower(COALESCE(text, '')),
-               '\s+'))) AS BIGINT) AS tok
-           FROM documents GROUP BY source),
-         tot AS (SELECT greatest(CAST(sum(tok) AS BIGINT), 1) AS t_all
-           FROM tok),
-         st AS (SELECT CAST(unnest(generate_series(0, 99)) AS BIGINT)
-           AS step)
-         SELECT step, source,
-           CAST(((step+1)*tok*8) // t_all - (step*tok*8) // t_all
-             AS BIGINT) AS slots,
-           CAST(((step+1)*tok*8) // t_all AS BIGINT) AS cum_slots
-         FROM tok CROSS JOIN tot CROSS JOIN st
-         WHERE ((step+1)*tok*8) // t_all - (step*tok*8) // t_all > 0""",
-    // DPO twin: the shared t7 score expression in exact micro-units
-    // (the score is already 6-dp-rounded, so round(q*1e6) is an exact
-    // integer and ORDER BY qm DESC ≡ Spark's ORDER BY q DESC — both
-    // engines put NULLs last under DESC), the same ⌈n/2⌉ rank offset,
-    // and the same (source, rank) equi self-join.
-    "t103_dpo_pairs" ->
-      s"""WITH q AS (
-           SELECT doc_id, source,
-             CAST(round($qScoreSql * 1000000.0) AS BIGINT) AS qm
-           FROM documents),
-         r AS (SELECT doc_id, source, qm,
-             row_number() OVER (PARTITION BY source
-               ORDER BY qm DESC NULLS LAST, doc_id) AS r,
-             count(*) OVER (PARTITION BY source) AS n
-           FROM q),
-         c AS (SELECT source, r AS pair_id, doc_id AS chosen_doc,
-             qm AS chosen_qm, r + (n - n//2) AS rj
-           FROM r WHERE r <= n//2),
-         j AS (SELECT source, r AS rj, doc_id AS rejected_doc,
-             qm AS rejected_qm
-           FROM r)
-         SELECT c.source, CAST(pair_id AS BIGINT) AS pair_id,
-           chosen_doc, rejected_doc, chosen_qm, rejected_qm,
-           CAST(chosen_qm - rejected_qm AS BIGINT) AS margin_micro,
-           CAST(chosen_qm - rejected_qm >= 50000 AS BIGINT) AS strong
-         FROM c JOIN j ON c.source = j.source AND c.rj = j.rj""",
-    // The twin is the one-machine form of the same selection: a plain
-    // window prefix sum in quality order (DuckDB sorts; Spark's side
-    // is the two-level distributed scan), the same integer threshold
-    // start·4 < total, and the same shared q/token expressions — so
-    // the ORDER the budget cuts in is definitionally identical.
-    "t95_token_budget_select" ->
-      s"""WITH t AS (
-           SELECT doc_id, source,
-             COALESCE($qScoreSql, -1.0) AS q,
-             COALESCE($bpeCountSql, 0) AS tok
-           FROM documents),
-         tot AS (SELECT sum(tok) AS total FROM t),
-         st AS (
-           SELECT *, COALESCE(SUM(tok) OVER (ORDER BY q DESC, doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS start
-           FROM t)
-         SELECT source,
-           CAST(count(CASE WHEN start * 4 < total THEN 1 END) AS BIGINT)
-             AS n_kept,
-           CAST(COALESCE(sum(CASE WHEN start * 4 < total THEN tok END), 0)
-             AS BIGINT) AS tok_kept,
-           CAST(count(CASE WHEN start * 4 < total THEN 1 END) * 1000000
-             // count(*) AS BIGINT) AS kept_ppm
-         FROM st CROSS JOIN tot GROUP BY 1""",
-    // Messy-URL synthesis + canonicalization twin of
-    // TextOps.canonicalUrl. Anchored single-occurrence patterns, so
-    // DuckDB's replace-first ≡ Spark's replace-all; backref is \1
-    // here, $1 there.
-    "t89_url_canonical" ->
-      raw"""WITH m AS (
-           SELECT doc_id,
-             CASE doc_id % 5
-               WHEN 0 THEN 'https://site' || ((doc_id // 5) % 7)
-                 || '.example.com/p/' || (doc_id // 5)
-               WHEN 1 THEN 'HTTPS://Site' || ((doc_id // 5) % 7)
-                 || '.Example.COM/p/' || (doc_id // 5)
-               WHEN 2 THEN 'https://www.site' || ((doc_id // 5) % 7)
-                 || '.example.com:443/p/' || (doc_id // 5)
-               WHEN 3 THEN 'https://site' || ((doc_id // 5) % 7)
-                 || '.example.com/p/' || (doc_id // 5)
-                 || '/?utm_source=feed&utm_medium=rss'
-               ELSE 'https://site' || ((doc_id // 5) % 7)
-                 || '.example.com/p/' || (doc_id // 5)
-                 || '?id=' || ((doc_id // 5) % 7) || '&utm_campaign=x#frag'
-             END AS url
-           FROM documents),
-         c1 AS (SELECT doc_id, url,
-             regexp_replace(url, '#.*$$', '') AS nf FROM m),
-         c2 AS (SELECT doc_id, url,
-             lower(regexp_extract(nf,
-               '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-             regexp_replace(
-               lower(regexp_extract(nf,
-                 '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)),
-               '^www\.', '') AS hostraw,
-             regexp_extract(nf,
-               '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+(.*)$$', 1) AS rest
-           FROM c1),
-         c2b AS (SELECT doc_id, url, scheme, rest,
-             CASE WHEN scheme = 'http'
-                    THEN regexp_replace(hostraw, ':80$$', '')
-                  WHEN scheme = 'https'
-                    THEN regexp_replace(hostraw, ':443$$', '')
-                  ELSE hostraw END AS host
-           FROM c2),
-         c3 AS (SELECT doc_id, url, scheme, host,
-             CASE WHEN p0 = '' THEN '/' ELSE p0 END AS path,
-             regexp_extract(rest, '^[^?]*\?(.*)$$', 1) AS q
-           FROM (SELECT *, regexp_replace(
-               regexp_extract(rest, '^([^?]*)', 1),
-               '(.)/$$', '\1') AS p0 FROM c2b)),
-         c4 AS (SELECT doc_id, url, scheme || '://' || host || path ||
-             CASE WHEN kq = '' THEN '' ELSE '?' || kq END AS curl
-           FROM (SELECT *, COALESCE(array_to_string(list_filter(
-               string_split(q, '&'),
-               p -> NOT starts_with(p, 'utm_')), '&'), '') AS kq
-             FROM c3))
-         SELECT curl, CAST(count(*) AS BIGINT) AS n_dups,
-           min(doc_id) AS keep_id,
-           CAST(count(DISTINCT url) AS BIGINT) AS n_variants
-         FROM c4 GROUP BY 1""",
-    "t90_length_batches" ->
-      raw"""WITH t AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '''(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s'']+'))
-               AS BIGINT) AS n_tok
-           FROM documents),
-         b AS (
-           SELECT doc_id, n_tok,
-             (greatest(n_tok, 1) - 1) // 64 AS bucket
-           FROM t),
-         c AS (
-           SELECT bucket, doc_id, n_tok,
-             COALESCE(SUM(n_tok) OVER (PARTITION BY bucket
-               ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS start
-           FROM b),
-         p AS (SELECT bucket, start // 2048 AS batch, n_tok FROM c)
-         SELECT bucket, CAST(batch AS BIGINT) AS batch,
-           CAST(count(*) AS BIGINT) AS n_seqs,
-           CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-           max(n_tok) AS max_len,
-           CAST((count(*) * max(n_tok) - sum(n_tok)) * 1000000
-             // greatest(count(*) * max(n_tok), 1) AS BIGINT) AS pad_ppm
-         FROM p GROUP BY 1, 2""",
-    // The greedy loop unrolled as pick-1/2/3 CTEs (the bpeTrainIterSql
-    // pattern); 0.7/0.3 literal on both sides — see the Spark comment.
-    "t91_mmr_diversify" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5),
-         cd0 AS (
-           SELECT qid, vec_id, v,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS simq
-           FROM e, q WHERE vec_id <> qid),
-         cd AS (SELECT qid, vec_id, v, simq FROM (
-           SELECT *, row_number() OVER (PARTITION BY qid
-             ORDER BY simq DESC, vec_id) AS rn FROM cd0) WHERE rn <= 10),
-         pr AS (
-           SELECT a.qid, a.vec_id AS id_a, b.vec_id AS id_b,
-             list_sum([a.v[i]*b.v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([a.v[i]*a.v[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([b.v[i]*b.v[i] FOR i IN generate_series(1,64)])))
-             AS sim_ab
-           FROM cd a JOIN cd b
-             ON a.qid = b.qid AND a.vec_id <> b.vec_id),
-         p1 AS (SELECT qid, CAST(1 AS BIGINT) AS pick, vec_id, mmr
-           FROM (SELECT qid, vec_id, simq * 0.7 AS mmr,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY simq * 0.7 DESC, vec_id) AS r FROM cd)
-           WHERE r = 1),
-         r1 AS (SELECT cd.qid, cd.vec_id, cd.simq FROM cd
-           LEFT JOIN p1 ON cd.qid = p1.qid AND cd.vec_id = p1.vec_id
-           WHERE p1.vec_id IS NULL),
-         m2 AS (SELECT r1.qid, r1.vec_id, r1.simq,
-             max(pr.sim_ab) AS ms
-           FROM r1 JOIN pr ON pr.qid = r1.qid AND pr.id_a = r1.vec_id
-           JOIN p1 ON p1.qid = pr.qid AND p1.vec_id = pr.id_b
-           GROUP BY 1, 2, 3),
-         p2 AS (SELECT qid, CAST(2 AS BIGINT) AS pick, vec_id, mmr
-           FROM (SELECT qid, vec_id, simq * 0.7 - ms * 0.3 AS mmr,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY simq * 0.7 - ms * 0.3 DESC, vec_id) AS r
-             FROM m2) WHERE r = 1),
-         sel2 AS (SELECT qid, vec_id FROM p1
-           UNION ALL SELECT qid, vec_id FROM p2),
-         r2 AS (SELECT r1.qid, r1.vec_id, r1.simq FROM r1
-           LEFT JOIN p2 ON r1.qid = p2.qid AND r1.vec_id = p2.vec_id
-           WHERE p2.vec_id IS NULL),
-         m3 AS (SELECT r2.qid, r2.vec_id, r2.simq,
-             max(pr.sim_ab) AS ms
-           FROM r2 JOIN pr ON pr.qid = r2.qid AND pr.id_a = r2.vec_id
-           JOIN sel2 s ON s.qid = pr.qid AND s.vec_id = pr.id_b
-           GROUP BY 1, 2, 3),
-         p3 AS (SELECT qid, CAST(3 AS BIGINT) AS pick, vec_id, mmr
-           FROM (SELECT qid, vec_id, simq * 0.7 - ms * 0.3 AS mmr,
-             row_number() OVER (PARTITION BY qid
-               ORDER BY simq * 0.7 - ms * 0.3 DESC, vec_id) AS r
-             FROM m3) WHERE r = 1)
-         SELECT qid, pick, vec_id, round(mmr, 6) AS mmr FROM (
-           SELECT * FROM p1 UNION ALL SELECT * FROM p2
-           UNION ALL SELECT * FROM p3)""",
-    "t72_cluster_split" ->
-      s"""$neardupLabelSql
-         SELECT doc_id, cluster_id,
-           CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR) || '|csplit'),
-                  1, 2) < 'e6' THEN 'train'
-                WHEN substr(md5(CAST(cluster_id AS VARCHAR) || '|csplit'),
-                  1, 2) < 'f3' THEN 'val'
-                ELSE 'test' END AS split
-         FROM lbl""",
-    "t74_host_pagerank" ->
-      s"""WITH $hostRankSql
-         SELECT node AS host, CAST(r AS BIGINT) AS rank_ppm FROM r3""",
-    "t77_host_curation" ->
-      s"""WITH $hostRankSql,
-         hx AS (
-           SELECT 'site' || (doc_id % 7) || '.example.org' AS host,
-             md5(text) AS h, n_chars
-           FROM documents),
-         bh AS (
-           SELECT host, h, count(*) AS c, sum(n_chars) AS sc
-           FROM hx GROUP BY 1, 2),
-         ph AS (
-           SELECT host, sum(c) AS n_docs,
-             sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS nd,
-             sum(sc) AS sch
-           FROM bh GROUP BY 1)
-         SELECT ph.host, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST((1000000 * nd) // n_docs AS BIGINT) AS dup_ppm,
-           CAST((100 * sch) // n_docs AS BIGINT) AS chars_x100,
-           CAST(coalesce(r.r, 0) AS BIGINT) AS rank_ppm
-         FROM ph LEFT JOIN r3 r ON r.node = ph.host""",
-    "t75_ccnet_buckets" ->
-      raw"""WITH $bigramScoreSql,
-         rk AS (
-           SELECT doc_id, lang, lm_lp,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY lm_lp DESC, doc_id) AS rk,
-             count(*) OVER (PARTITION BY lang) AS nl
-           FROM sc)
-         SELECT doc_id, lang, lm_lp,
-           CASE ((rk - 1) * 3) // nl WHEN 0 THEN 'head'
-                WHEN 1 THEN 'middle' ELSE 'tail' END AS ppl_bucket
-         FROM rk""",
-    "t78_rrf_fusion" ->
-      raw"""WITH $bigramScoreSql,
-         $hostRankSql,
-         rl AS (
-           SELECT doc_id,
-             CAST(row_number() OVER (ORDER BY lm_lp DESC, doc_id)
-               AS BIGINT) AS r_lm
-           FROM sc),
-         hp AS (
-           SELECT node AS host,
-             CAST(row_number() OVER (ORDER BY r DESC, node)
-               AS BIGINT) AS r_host
-           FROM r3),
-         rh AS (
-           SELECT doc_id, r_host
-           FROM (SELECT doc_id,
-                   'site' || (doc_id % 7) || '.example.org' AS host
-                 FROM documents) dh
-           JOIN hp USING (host)),
-         rs AS (
-           SELECT doc_id,
-             CAST(row_number() OVER (ORDER BY n_chars DESC, doc_id)
-               AS BIGINT) AS r_size
-           FROM documents)
-         SELECT rl.doc_id, r_lm, r_host, r_size,
-           1000000 // (60 + r_lm) + 1000000 // (60 + r_host)
-             + 1000000 // (60 + r_size) AS rrf_ppm
-         FROM rl
-         JOIN rs ON rs.doc_id = rl.doc_id
-         JOIN rh ON rh.doc_id = rl.doc_id
-         ORDER BY rrf_ppm DESC, rl.doc_id LIMIT 50""",
-    "t79_cdc_merge" ->
-      """WITH delta AS (
-           SELECT doc_id, text || ' [rev2]' AS text, lang, source,
-             n_chars, 'update' AS op, 1 AS seq
-           FROM documents WHERE doc_id % 10 = 3
-           UNION ALL
-           SELECT doc_id, text, lang, source, n_chars, 'delete', 1
-           FROM documents WHERE doc_id % 10 = 5
-           UNION ALL
-           SELECT doc_id + 1000000, text, lang, source, n_chars,
-             'insert', 1
-           FROM documents WHERE doc_id % 10 = 7
-           UNION ALL
-           SELECT doc_id, text, lang, source, n_chars, 'delete', 2
-           FROM documents WHERE doc_id % 100 = 3),
-         last AS (
-           SELECT * FROM delta
-           QUALIFY row_number() OVER (PARTITION BY doc_id
-             ORDER BY seq DESC, op DESC) = 1),
-         merged AS (
-           SELECT doc_id, text, lang, source FROM documents
-           WHERE doc_id NOT IN (SELECT doc_id FROM last)
-           UNION ALL
-           SELECT doc_id, text, lang, source FROM last
-           WHERE op <> 'delete')
-         SELECT doc_id, md5(text) AS text_md5, lang, source
-         FROM merged""",
-    // t120: one state per as-of offset — last op with seq <= asof per
-    // key (same feed and window as t79's oracle), then the audit
-    // aggregates; asof 0 sees the untouched base
-    // ("asof" is a DuckDB reserved word — ASOF JOIN — hence "av")
-    "t120_time_travel" ->
-      """WITH seqs AS (SELECT unnest([0, 1, 2]) AS av),
-         delta AS (
-           SELECT doc_id, text || ' [rev2]' AS text, lang,
-             'update' AS op, 1 AS seq
-           FROM documents WHERE doc_id % 10 = 3
-           UNION ALL
-           SELECT doc_id, text, lang, 'delete', 1
-           FROM documents WHERE doc_id % 10 = 5
-           UNION ALL
-           SELECT doc_id + 1000000, text, lang, 'insert', 1
-           FROM documents WHERE doc_id % 10 = 7
-           UNION ALL
-           SELECT doc_id, text, lang, 'delete', 2
-           FROM documents WHERE doc_id % 100 = 3),
-         last AS (
-           SELECT sq.av, dl.*
-           FROM seqs sq JOIN delta dl ON dl.seq <= sq.av
-           QUALIFY row_number() OVER (PARTITION BY sq.av, dl.doc_id
-             ORDER BY dl.seq DESC, dl.op DESC) = 1),
-         states AS (
-           SELECT sq.av, b.doc_id, b.text, b.lang
-           FROM seqs sq CROSS JOIN documents b
-           WHERE NOT EXISTS (SELECT 1 FROM last lo
-             WHERE lo.av = sq.av AND lo.doc_id = b.doc_id)
-           UNION ALL
-           SELECT av, doc_id, text, lang FROM last
-           WHERE op <> 'delete')
-         SELECT CAST(av AS BIGINT) AS asof_seq,
-           count(*) AS n_docs,
-           count(DISTINCT lang) AS n_langs,
-           CAST(sum(CAST(('0x' || substr(md5(text), 1, 9))
-             AS UBIGINT)) AS BIGINT) AS content_sum
-         FROM states GROUP BY av""",
-    "t80_line_dedup" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         l AS (
-           SELECT doc_id, CAST(ceil(len(toks) / 10.0) AS BIGINT)
-               AS n_lines,
-             unnest(generate_series(1,
-               CAST(ceil(len(toks) / 10.0) AS INT))) AS pos,
-             unnest([array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')
-                     FOR i IN generate_series(1,
-                       CAST(ceil(len(toks) / 10.0) AS INT))]) AS line
-           FROM t),
-         b AS (
-           SELECT md5(line) AS lh FROM l GROUP BY md5(line)
-           HAVING count(DISTINCT doc_id) > 1)
-         SELECT doc_id,
-           string_agg(line, ' ' ORDER BY pos) AS text_clean,
-           any_value(n_lines) AS n_lines,
-           any_value(n_lines) - count(*) AS n_dropped
-         FROM l WHERE md5(line) NOT IN (SELECT lh FROM b)
-         GROUP BY doc_id""",
-    "t81_hash_classifier" ->
-      s"""WITH $hashClfSql
-         SELECT doc_id, n_feats, score_ppm,
-           CAST(score_ppm > 500000 AS BIGINT) AS keep
-         FROM sc""",
-    // Calibration twin: the shared scorer block, a plain window
-    // row_number standing in for Spark's two-level rank (identical
-    // (score, doc_id) total order), the same equal-mass bin integer
-    // arithmetic, and one bin-cardinality rollup in ppm floor
-    // division.
-    "t107_calibration_bins" ->
-      s"""WITH $hashClfSql,
-         cnt AS (SELECT count(*) AS n FROM sc),
-         r AS (SELECT sc.*, row_number()
-             OVER (ORDER BY score_ppm, doc_id) AS r
-           FROM sc),
-         b AS (SELECT ((r - 1) * 10) // n AS bin, score_ppm,
-             CASE WHEN source IN ('src0', 'src1') THEN 1 ELSE 0 END
-               AS y
-           FROM r CROSS JOIN cnt)
-         SELECT CAST(bin AS BIGINT) AS bin,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(min(score_ppm) AS BIGINT) AS min_pred_ppm,
-           CAST(max(score_ppm) AS BIGINT) AS max_pred_ppm,
-           CAST(sum(score_ppm) // count(*) AS BIGINT) AS mean_pred_ppm,
-           CAST((sum(y) * 1000000) // count(*) AS BIGINT)
-             AS obs_pos_ppm,
-           CAST(abs(sum(score_ppm) // count(*)
-             - (sum(y) * 1000000) // count(*)) AS BIGINT) AS gap_ppm
-         FROM b GROUP BY bin""",
-    "t82_zorder_layout" ->
-      s"""WITH t AS (
-           SELECT event_id, user_id & 65535 AS ux,
-             CAST(floor(value) AS BIGINT) & 65535 AS vx
-           FROM events),
-         z AS (
-           SELECT event_id, ux, vx,
-             ${zSpread("ux")} | (${zSpread("vx")} << 1) AS zkey
-           FROM t)
-         SELECT zkey // 16384 AS file_id, count(*) AS n_rows,
-           min(ux) AS min_user, max(ux) AS max_user,
-           min(vx) AS min_val, max(vx) AS max_val
-         FROM z GROUP BY zkey // 16384""",
-    "t83_chunk_overlap" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id,
-             unnest(generate_series(0, (len(toks) - 1) // 20)) AS chunk_id,
-             unnest([array_to_string(toks[i*20+1:i*20+30], ' ')
-                     FOR i IN generate_series(0, (len(toks) - 1) // 20)])
-               AS chunk_text
-           FROM t)
-         SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, chunk_text,
-           CAST(len(string_split(chunk_text, ' ')) AS BIGINT) AS n_tokens
-         FROM c""",
-    "t76_lsh_recall" ->
-      raw"""WITH $minhashBandsSql,
-         sets AS (SELECT doc_id, list_distinct(s) AS ss FROM sh),
-         truth AS (
-           SELECT a.doc_id AS probe_id, b.doc_id AS other_id
-           FROM sets a JOIN sets b ON a.doc_id <> b.doc_id
-           WHERE a.doc_id % 20 = 0 AND a.doc_id < 2000
-             AND CAST(len(list_filter(a.ss, e -> list_contains(b.ss, e)))
-                      AS DOUBLE)
-             / (len(a.ss) + len(b.ss)
-                - len(list_filter(a.ss, e -> list_contains(b.ss, e))))
-             >= 0.5),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS probe_id, b.doc_id AS other_id
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id <> b.doc_id
-           WHERE a.doc_id % 20 = 0 AND a.doc_id < 2000),
-         nt AS (SELECT count(*) AS n_truth FROM truth),
-         nc AS (SELECT count(*) AS n_cand FROM cand),
-         nh AS (
-           SELECT count(*) AS n_hit FROM truth x
-           WHERE EXISTS (SELECT 1 FROM cand c
-             WHERE c.probe_id = x.probe_id
-               AND c.other_id = x.other_id))
-         SELECT n_truth, n_cand, n_hit,
-           CASE WHEN n_truth > 0
-                THEN (1000000 * n_hit) // n_truth END AS recall_ppm,
-           CASE WHEN n_cand > 0
-                THEN (1000000 * n_hit) // n_cand END AS precision_ppm
-         FROM nt CROSS JOIN nc CROSS JOIN nh""",
-    "t3_simhash" ->
-      """WITH t AS (
-           SELECT doc_id,
-             [md5(tok) FOR tok IN string_split_regex(text, '\s+')] AS hs
-           FROM documents)
-         SELECT doc_id,
-           array_to_string(
-             [CASE WHEN list_sum(
-                [CASE WHEN substr(h, i, 1) BETWEEN '8' AND 'f'
-                      THEN 1 ELSE -1 END FOR h IN hs]) > 0
-              THEN '1' ELSE '0' END
-              FOR i IN generate_series(1, 32)], '') AS sh
-         FROM t""",
-    "t4_knn_cosine" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-         s AS (
-           SELECT qid, vec_id,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS c
-           FROM e, q WHERE qid <> vec_id)
-         SELECT qid, vec_id, round(c, 6) AS cos,
-           row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id)
-             AS rn
-         FROM s QUALIFY rn <= 5""",
-    "t84_hard_negatives" ->
-      """WITH e AS (
-           SELECT vec_id, label,
-             [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         q AS (SELECT vec_id AS qid, label AS qlabel, v AS qv
-               FROM e WHERE vec_id < 10),
-         s AS (
-           SELECT qid, qlabel, vec_id, label,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS c
-           FROM e, q WHERE label <> qlabel)
-         SELECT qid, CAST(qlabel AS BIGINT) AS qlabel, vec_id,
-           CAST(label AS BIGINT) AS label, round(c, 6) AS cos,
-           row_number() OVER (PARTITION BY qid ORDER BY c DESC, vec_id)
-             AS rn
-         FROM s QUALIFY rn <= 5""",
-    "t5_srp_buckets" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings)
-         SELECT array_to_string(
-           [CASE WHEN list_sum(
-              [CASE WHEN substr(md5(p::VARCHAR || '_' || d::VARCHAR), 1, 1)
-                    BETWEEN '8' AND 'f'
-                    THEN v[d] ELSE -v[d] END
-               FOR d IN generate_series(1, 64)]) >= 0
-            THEN '1' ELSE '0' END
-            FOR p IN generate_series(1, 8)], '') AS bucket,
-           count(*) AS n
-         FROM e GROUP BY 1""",
-    "t6_lang_id" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             string_split_regex(lower(text), '\s+') AS tl
-           FROM documents),
-         s AS (
-           SELECT doc_id, text,
-             len(list_filter(tl, x -> list_contains(
-               ['der','die','und','das','ist','nicht','ein','zu'], x)))
-               AS s_de,
-             len(list_filter(tl, x -> list_contains(
-               ['the','and','of','to','in','is','that','it'], x))) AS s_en,
-             len(list_filter(tl, x -> list_contains(
-               ['el','la','de','que','y','los','en','un'], x))) AS s_es,
-             len(list_filter(tl, x -> list_contains(
-               ['le','la','de','et','les','des','un','une'], x))) AS s_fr
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-                WHEN s_de=0 AND s_en=0 AND s_es=0 AND s_fr=0 THEN 'en'
-                WHEN s_de>=s_en AND s_de>=s_es AND s_de>=s_fr THEN 'de'
-                WHEN s_en>=s_de AND s_en>=s_es AND s_en>=s_fr THEN 'en'
-                WHEN s_es>=s_de AND s_es>=s_en AND s_es>=s_fr THEN 'es'
-                ELSE 'fr' END AS lang_pred
-         FROM s""",
-    "t7_quality" ->
-      s"""SELECT doc_id, $qScoreSql AS q_score
-         FROM documents""",
-    "q39_kmeans_step" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         ct AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         asg AS (
-           SELECT vec_id, cid FROM (
-             SELECT e.vec_id, ct.cid,
-               list_sum([(v[i]-cv[i])*(v[i]-cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM e, ct)
-           QUALIFY row_number() OVER (PARTITION BY vec_id
-             ORDER BY dist, cid) = 1)
-         SELECT a.cid, d, round(avg(v[d]), 6) AS c
-         FROM asg a JOIN e USING (vec_id),
-           unnest(generate_series(1, 64)) AS u(d)
-         GROUP BY 1, 2""",
-    // np = the same corpus-scaled plane count as the Spark side:
-    // max(8, ceil_log2(corpus/64)) with ceil_log2(m) = length of
-    // bin(m-1) — integer-exact, no float log at a boundary.
-    "t10_embed_neardup" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         pl AS (
-           SELECT greatest(8, length(bin(
-             greatest((count(*) * 2 + 63) // 64, 2) - 1))) AS np,
-             count(*) * 2 AS nc
-           FROM e),
-         c AS (
-           SELECT * FROM e
-           UNION ALL
-           SELECT vec_id + 100000, list_prepend(v[1] + 0.05, v[2:64])
-           FROM e),
-         -- adaptive banding, MEASURED sweep (r19, after the 1000×
-         -- probe killed the modeled single-shot correction): one
-         -- histogram at np+20 planes; a bucket at q planes is a
-         -- strict PREFIX of the bucket at q' > q, so rolling the
-         -- histogram up by prefix gives the exact pair mass at every
-         -- even step; pick the smallest plane count whose measured
-         -- mass fits the 8·n budget, else the +20 cap
-         hist AS (
-           SELECT array_to_string(
-             [CASE WHEN list_sum(
-                [CASE WHEN substr(md5(p::VARCHAR || '_' || d::VARCHAR),
-                            1, 1) BETWEEN '8' AND 'f'
-                      THEN v[d] ELSE -v[d] END
-                 FOR d IN generate_series(1, 64)]) >= 0
-              THEN '1' ELSE '0' END
-              FOR p IN generate_series(1, np + 20)], '') AS bkt,
-             count(*) AS m
-           FROM c, pl GROUP BY 1),
-         masses AS (
-           SELECT e, coalesce(sum(mg * (mg - 1) // 2), 0) AS mass
-           FROM (
-             SELECT es.e AS e, substr(bkt, 1, pl.np + es.e) AS pb,
-               sum(m) AS mg
-             FROM hist, pl,
-               (SELECT unnest(generate_series(0, 20, 2)) AS e) es
-             GROUP BY 1, 2)
-           GROUP BY 1),
-         pl2 AS (
-           SELECT pl.np + coalesce(
-             (SELECT min(ms.e) FROM masses ms, pl p2
-              WHERE ms.mass <= 8 * greatest(p2.nc, 1)), 20) AS np
-           FROM pl),
-         b AS (
-           SELECT vec_id, v, array_to_string(
-             [CASE WHEN list_sum(
-                [CASE WHEN substr(md5(p::VARCHAR || '_' || d::VARCHAR),
-                            1, 1) BETWEEN '8' AND 'f'
-                      THEN v[d] ELSE -v[d] END
-                 FOR d IN generate_series(1, 64)]) >= 0
-              THEN '1' ELSE '0' END
-              FOR p IN generate_series(1, np)], '') AS bkt
-           FROM c, pl2),
-         s AS (
-           SELECT a.vec_id AS id_a, y.vec_id AS id_b,
-             list_sum([a.v[i]*y.v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([a.v[i]*a.v[i]
-                             FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([y.v[i]*y.v[i]
-                             FOR i IN generate_series(1,64)]))) AS csim
-           FROM b a JOIN b y
-             ON a.bkt = y.bkt AND a.vec_id < y.vec_id)
-         SELECT id_a, id_b, round(csim, 6) AS cos
-         FROM s WHERE csim >= 0.99""",
-    // IVF cells scale with the corpus (k = max(16, n/256)); the
-    // margin arithmetic is pure integers after the per-pair micro
-    // quantization, so sums are order-free on both engines. Shared
-    // CTE blocks: `bitextCandSql` (cell candidates at nProbe=2),
-    // `bitextTop1Sql` (the margin top-1 — serves t137b's sides too).
-    "t137_bitext_margin" ->
-      s"""WITH $bitextBaseSql,
-         ${bitextCandSql("", 2)},
-         ${bitextTop1Sql("u_", "cp")}
-         SELECT x_id, y_id, cm AS cos_micro, margin_ppm FROM u_t1""",
-    // Saturation pre-flight: per-x top-1 cosine + top-4 degeneracy
-    // over a ~2048-x hash-stratified slice of the candidate table
-    // (stride 1 at gate SFs — pfex ≡ ex there); band + degeneracy
-    // fractions, one row, `saturated` null-safe on an empty slice.
-    "t147_miner_preflight" ->
-      s"""WITH $bitextBaseSql,
-         pfss AS (
-           SELECT greatest(1, (SELECT count(*) FROM e) // 2 // 2048)
-             AS st),
-         pfex AS MATERIALIZED (
-           -- high half of the 32-bit Knuth product: low bits of
-           -- vec_id*odd never mix, and the x side is all-even
-           SELECT vec_id, v FROM ex, pfss
-           WHERE ((((vec_id % 1048576) * 2654435761) % 4294967296)
-             // 65536) % pfss.st = 0),
-         ${bitextCandSql("pf", 2, "pfex")},
-         pft4 AS (
-           SELECT x_id, max(cm) AS top1, min(cm) AS mn4,
-             CAST(count(*) AS BIGINT) AS cnt4
-           FROM (
-             SELECT x_id, cm, row_number() OVER (PARTITION BY x_id
-               ORDER BY cm DESC, y_id) AS rn
-             FROM pfcp) z
-           WHERE rn <= 4 GROUP BY x_id),
-         pfa AS (
-           SELECT CAST(count(*) AS BIGINT) AS n_x,
-             CAST(sum(top1) AS BIGINT) AS sum_cm,
-             CAST(sum(CASE WHEN top1 >= 990000 THEN 1 ELSE 0 END)
-               AS BIGINT) AS sat_x,
-             CAST(sum(CASE WHEN cnt4 >= 2 AND mn4 = top1
-                           THEN 1 ELSE 0 END) AS BIGINT) AS deg_x
-           FROM pft4)
-         SELECT n_x, sum_cm // nullif(n_x, 0) AS mean_top1_cm, sat_x,
-           sat_x * 1000000 // nullif(n_x, 0) AS sat_ppm,
-           deg_x, deg_x * 1000000 // nullif(n_x, 0) AS deg_ppm,
-           coalesce(
-             (sat_x * 1000000 // nullif(n_x, 0)) >= 500000 OR
-             (deg_x * 1000000 // nullif(n_x, 0)) >= 500000,
-             false) AS saturated
-         FROM pfa""",
-    // Exact side = all cross-side pairs of the probe slice (x < 400);
-    // approx sides = the cell candidates on the same slice at
-    // nProbe 1 and 2; all run the SAME margin block, recall over
-    // mined-(x,y) overlap, one row per nProbe.
-    "t137b_bitext_recall" ->
-      s"""WITH $bitextBaseSql,
-         ${bitextCandSql("r0", 1)},
-         ${bitextCandSql("r1", 2)},
-         ${bitextCandSql("r2", 4)},
-         bcp0 AS MATERIALIZED (SELECT * FROM r0cp WHERE x_id < 400),
-         bcp1 AS MATERIALIZED (SELECT * FROM r1cp WHERE x_id < 400),
-         bcp2 AS MATERIALIZED (SELECT * FROM r2cp WHERE x_id < 400),
-         ec AS (
-           SELECT a.vec_id AS x_id, y.vec_id AS y_id,
-             CAST(round(
-               list_sum([a.v[i]*y.v[i] FOR i IN generate_series(1,64)]) /
-               (sqrt(list_sum([a.v[i]*a.v[i]
-                               FOR i IN generate_series(1,64)])) *
-                sqrt(list_sum([y.v[i]*y.v[i]
-                               FOR i IN generate_series(1,64)])))
-               * 1000000) AS BIGINT) AS cm
-           FROM e a, e y
-           WHERE a.vec_id % 2 = 0 AND a.vec_id < 400
-             AND y.vec_id % 2 = 1),
-         ecp AS MATERIALIZED (SELECT * FROM ec WHERE cm > 0),
-         ${bitextTop1Sql("a0_", "bcp0")},
-         ${bitextTop1Sql("a1_", "bcp1")},
-         ${bitextTop1Sql("a2_", "bcp2")},
-         ${bitextTop1Sql("ex_", "ecp")}
-         SELECT CAST(1 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM ex_t1) AS n_exact,
-           (SELECT CAST(count(*) AS BIGINT) FROM a0_t1) AS n_approx,
-           CAST((SELECT count(*) FROM ex_t1 JOIN a0_t1 USING (x_id, y_id))
-             * 1000000
-             // greatest((SELECT count(*) FROM ex_t1), 1) AS BIGINT)
-             AS recall_ppm
-         UNION ALL
-         SELECT CAST(2 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM ex_t1) AS n_exact,
-           (SELECT CAST(count(*) AS BIGINT) FROM a1_t1) AS n_approx,
-           CAST((SELECT count(*) FROM ex_t1 JOIN a1_t1 USING (x_id, y_id))
-             * 1000000
-             // greatest((SELECT count(*) FROM ex_t1), 1) AS BIGINT)
-             AS recall_ppm
-         UNION ALL
-         SELECT CAST(4 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM ex_t1) AS n_exact,
-           (SELECT CAST(count(*) AS BIGINT) FROM a2_t1) AS n_approx,
-           CAST((SELECT count(*) FROM ex_t1 JOIN a2_t1 USING (x_id, y_id))
-             * 1000000
-             // greatest((SELECT count(*) FROM ex_t1), 1) AS BIGINT)
-             AS recall_ppm""",
-    // Planted-recall twin: redefines the bitext base CTEs over the
-    // organic ∪ planted-twin corpus (twin = v + 0.75·rotate(v,1) on
-    // the odd side at id+10000001), then reuses the SAME candidate /
-    // margin blocks; recall is overlap with the planted truth.
-    "t137c_bitext_planted" ->
-      s"""WITH eb AS MATERIALIZED (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         tw AS MATERIALIZED (
-           SELECT vec_id + 10000001 AS vec_id,
-             [v[i] + 0.75 * v[(i % 64) + 1]
-              FOR i IN generate_series(1, 64)] AS v
-           FROM eb WHERE vec_id % 2 = 0),
-         e AS MATERIALIZED (
-           SELECT * FROM eb UNION ALL SELECT * FROM tw),
-         kk AS MATERIALIZED (SELECT greatest(16,
-                  3 * (SELECT count(*) FROM eb) // 512) AS k),
-         $bitextIndexSql,
-         ${bitextCandSql("p0", 1)},
-         ${bitextCandSql("p1", 2)},
-         ${bitextCandSql("p2", 4)},
-         sc0 AS MATERIALIZED (SELECT * FROM p0cp WHERE x_id < 4000),
-         sc1 AS MATERIALIZED (SELECT * FROM p1cp WHERE x_id < 4000),
-         sc2 AS MATERIALIZED (SELECT * FROM p2cp WHERE x_id < 4000),
-         ${bitextTop1Sql("m0_", "sc0")},
-         ${bitextTop1Sql("m1_", "sc1")},
-         ${bitextTop1Sql("m2_", "sc2")},
-         truth AS (
-           SELECT vec_id AS x_id, vec_id + 10000001 AS y_id
-           FROM eb WHERE vec_id % 2 = 0 AND vec_id < 4000)
-         SELECT CAST(1 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT) FROM m0_t1) AS n_mined,
-           CAST((SELECT count(*) FROM truth JOIN m0_t1
-               USING (x_id, y_id)) * 1000000
-             // greatest((SELECT count(*) FROM truth), 1) AS BIGINT)
-             AS recall_ppm
-         UNION ALL
-         SELECT CAST(2 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT) FROM m1_t1) AS n_mined,
-           CAST((SELECT count(*) FROM truth JOIN m1_t1
-               USING (x_id, y_id)) * 1000000
-             // greatest((SELECT count(*) FROM truth), 1) AS BIGINT)
-             AS recall_ppm
-         UNION ALL
-         SELECT CAST(4 AS BIGINT) AS nprobe,
-           (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           (SELECT CAST(count(*) AS BIGINT) FROM m2_t1) AS n_mined,
-           CAST((SELECT count(*) FROM truth JOIN m2_t1
-               USING (x_id, y_id)) * 1000000
-             // greatest((SELECT count(*) FROM truth), 1) AS BIGINT)
-             AS recall_ppm""",
-    // twin of t138_hier_assign: the same two-level argmin — supers =
-    // the g = ceil(sqrt(k)) smallest-cid centroids, each centroid
-    // routed to its nearest super, each vector routed super-then-child
-    // with (dist, id) tie-breaks at every level — over the same
-    // corpus-scaled k = max(64, n // 8).
-    "t138_hier_assign" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         p AS (SELECT greatest(64, (SELECT count(*) FROM e) // 8) AS k),
-         p2 AS (SELECT k,
-                  CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS g
-                FROM p),
-         c AS (SELECT vec_id AS cid, v AS cv FROM e
-               WHERE vec_id < (SELECT k FROM p2)),
-         s AS (SELECT cid AS scid, cv AS sv FROM c
-               QUALIFY row_number() OVER (ORDER BY cid) <=
-                 (SELECT g FROM p2)),
-         cs AS (
-           SELECT cid, cv, scid FROM (
-             SELECT c.cid, c.cv, s.scid,
-               list_sum([(cv[i]-sv[i])*(cv[i]-sv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM c, s)
-           QUALIFY row_number() OVER (PARTITION BY cid
-             ORDER BY dist, scid) = 1),
-         a1 AS (
-           SELECT vec_id, v, scid FROM (
-             SELECT e.vec_id, e.v, s.scid,
-               list_sum([(v[i]-sv[i])*(v[i]-sv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM e, s)
-           QUALIFY row_number() OVER (PARTITION BY vec_id
-             ORDER BY dist, scid) = 1),
-         a2 AS (
-           SELECT vec_id, scid, cid, dist FROM (
-             SELECT a1.vec_id, a1.scid, cs.cid,
-               list_sum([(a1.v[i]-cs.cv[i])*(a1.v[i]-cs.cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM a1 JOIN cs ON cs.scid = a1.scid)
-           QUALIFY row_number() OVER (PARTITION BY vec_id
-             ORDER BY dist, cid) = 1)
-         SELECT scid, count(*) AS vecs,
-           count(DISTINCT cid) AS cells,
-           CAST(sum(CAST(round(dist * 1000000) AS BIGINT)) AS BIGINT)
-             AS sum_dist_micro
-         FROM a2 GROUP BY scid""",
-    // SQ8 twins: the same micro-quantized corpus, per-dim min/max
-    // trainer, integer codes, and bin-midpoint reconstruction —
-    // every operation integer, so codes/distances replay bit-exactly.
-    "t140_sq8_encode" ->
-      s"""WITH $sq8BaseSql
-         SELECT vec_id,
-           CAST(list_sum(codes) AS BIGINT) AS code_sum,
-           CAST(list_sum([codes[i] * i
-                          FOR i IN generate_series(1, 64)]) AS BIGINT)
-             AS poscode_sum,
-           CAST(list_sum([(vu[i] - ${sq8ReconSql("codes")}) *
-                          (vu[i] - ${sq8ReconSql("codes")})
-                          FOR i IN generate_series(1, 64)]) AS BIGINT)
-             AS err_sum
-         FROM enc""",
-    "t141_sq8_adc" ->
-      s"""WITH $sq8BaseSql,
-         q AS (SELECT vec_id AS qid, vu AS qu FROM e
-               WHERE vec_id < 10),
-         sc AS (
-           SELECT q.qid, enc.vec_id,
-             CAST(list_sum([(q.qu[i] - ${sq8ReconSql("enc.codes")}) *
-                            (q.qu[i] - ${sq8ReconSql("enc.codes")})
-                            FOR i IN generate_series(1, 64)]) AS BIGINT)
-               AS adc
-           FROM enc, q WHERE q.qid <> enc.vec_id)
-         SELECT qid, vec_id, adc, rn FROM (
-           SELECT *, row_number() OVER (PARTITION BY qid
-             ORDER BY adc, vec_id) AS rn
-           FROM sc) z
-         WHERE rn <= 5""",
-    "t142_sq8_recall" ->
-      s"""WITH $sq8BaseSql,
-         q AS (SELECT vec_id AS qid, vu AS qu FROM e
-               WHERE vec_id < 10),
-         exd AS (
-           SELECT q.qid, e2.vec_id,
-             CAST(list_sum([(q.qu[i] - e2.vu[i]) * (q.qu[i] - e2.vu[i])
-                            FOR i IN generate_series(1, 64)]) AS BIGINT)
-               AS dd
-           FROM e e2, q WHERE q.qid <> e2.vec_id),
-         ext AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dd, vec_id) AS rn FROM exd) z
-           WHERE rn <= 5),
-         apd AS (
-           SELECT q.qid, enc.vec_id,
-             CAST(list_sum([(q.qu[i] - ${sq8ReconSql("enc.codes")}) *
-                            (q.qu[i] - ${sq8ReconSql("enc.codes")})
-                            FOR i IN generate_series(1, 64)]) AS BIGINT)
-               AS dd
-           FROM enc, q WHERE q.qid <> enc.vec_id),
-         apt AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dd, vec_id) AS rn FROM apd) z
-           WHERE rn <= 5)
-         SELECT ext.qid,
-           CAST(count(apt.vec_id) AS BIGINT) AS hits,
-           CAST(count(apt.vec_id) * 1000000 // 5 AS BIGINT)
-             AS recall_ppm
-         FROM ext LEFT JOIN apt USING (qid, vec_id)
-         GROUP BY 1""",
-    // IVF-PQ composite twins: the full index build + probe replayed
-    // (coarse argmin → residuals → per-subspace residual codes →
-    // reconstruction → cell-restricted ADC), distances as the same
-    // index-order double folds, ties on ids.
-    "t143_ivfpq_search" ->
-      s"""WITH $ivfPqBaseSql
-         SELECT qid, vec_id, round(dist, 6) AS adc,
-           row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-             AS rn
-         FROM sadc QUALIFY rn <= 5""",
-    "t144_ivfpq_recall" ->
-      s"""WITH $ivfPqBaseSql,
-         ap50 AS MATERIALIZED (
-           SELECT qid, vec_id, rn FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dist, vec_id) AS rn FROM sadc) z
-           WHERE rn <= 50),
-         apt AS (SELECT qid, vec_id FROM ap50 WHERE rn <= 5),
-         rft AS (
-           SELECT qid, vec_id FROM (
-             SELECT a.qid, a.vec_id,
-               row_number() OVER (PARTITION BY a.qid ORDER BY
-                 list_sum([(q.qv[i] - e2.v[i]) * (q.qv[i] - e2.v[i])
-                           FOR i IN generate_series(1, 64)]),
-                 a.vec_id) AS rn
-             FROM ap50 a JOIN e e2 ON e2.vec_id = a.vec_id
-               JOIN q ON q.qid = a.qid) z
-           WHERE rn <= 5),
-         exd AS (
-           SELECT q.qid, e2.vec_id,
-             list_sum([(q.qv[i] - e2.v[i]) * (q.qv[i] - e2.v[i])
-                       FOR i IN generate_series(1, 64)]) AS dd
-           FROM e e2, q WHERE q.qid <> e2.vec_id),
-         ext AS MATERIALIZED (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dd, vec_id) AS rn FROM exd) z
-           WHERE rn <= 5),
-         ra AS (
-           SELECT ext.qid, CAST(count(apt.vec_id) AS BIGINT)
-             AS hits_adc
-           FROM ext LEFT JOIN apt USING (qid, vec_id) GROUP BY 1),
-         rr AS (
-           SELECT ext.qid, CAST(count(rft.vec_id) AS BIGINT)
-             AS hits_ref
-           FROM ext LEFT JOIN rft USING (qid, vec_id) GROUP BY 1)
-         SELECT qid, hits_adc, hits_ref,
-           CAST(hits_adc * 1000000 // 5 AS BIGINT) AS recall_adc_ppm,
-           CAST(hits_ref * 1000000 // 5 AS BIGINT) AS recall_ref_ppm
-         FROM ra JOIN rr USING (qid)""",
-    // IVF+SQ8 composite twins: t140's encode + the corpus-scaled
-    // floor-dispatched assignment/probes + cell-restricted
-    // integer-micro ADC — bit-exact replay.
-    "t145_ivfsq8_search" ->
-      s"""WITH $ivfSq8BaseSql
-         SELECT qid, vec_id, adc, rn FROM (
-           SELECT *, row_number() OVER (PARTITION BY qid
-             ORDER BY adc, vec_id) AS rn
-           FROM ssc) z
-         WHERE rn <= 5""",
-    "t146_ivfsq8_recall" ->
-      s"""WITH $ivfSq8BaseSql,
-         exd AS (
-           SELECT q.qid, e2.vec_id,
-             CAST(list_sum([(q.qu[i] - e2.vu[i]) * (q.qu[i] - e2.vu[i])
-                            FOR i IN generate_series(1, 64)]) AS BIGINT)
-               AS dd
-           FROM e e2, q WHERE q.qid <> e2.vec_id),
-         ext AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dd, vec_id) AS rn FROM exd) z
-           WHERE rn <= 5),
-         apt AS (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY adc, vec_id) AS rn FROM ssc) z
-           WHERE rn <= 5)
-         SELECT ext.qid,
-           CAST(count(apt.vec_id) AS BIGINT) AS hits,
-           CAST(count(apt.vec_id) * 1000000 // 5 AS BIGINT)
-             AS recall_ppm
-         FROM ext LEFT JOIN apt USING (qid, vec_id)
-         GROUP BY 1""",
-    // refine tier: one k=50 ADC ranking; rank-5 prefix = the ADC
-    // point, the 50 rerank by the exact integer-micro distance
-    "t148_ivfsq8_refine" ->
-      s"""WITH $ivfSq8BaseSql,
-         ap50 AS MATERIALIZED (
-           SELECT qid, vec_id, rn FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY adc, vec_id) AS rn FROM ssc) z
-           WHERE rn <= 50),
-         apt AS (SELECT qid, vec_id FROM ap50 WHERE rn <= 5),
-         rft AS (
-           SELECT qid, vec_id FROM (
-             SELECT a.qid, a.vec_id,
-               row_number() OVER (PARTITION BY a.qid ORDER BY
-                 CAST(list_sum([(q.qu[i] - e2.vu[i]) *
-                                (q.qu[i] - e2.vu[i])
-                                FOR i IN generate_series(1, 64)])
-                   AS BIGINT),
-                 a.vec_id) AS rn
-             FROM ap50 a JOIN enc e2 ON e2.vec_id = a.vec_id
-               JOIN q ON q.qid = a.qid) z
-           WHERE rn <= 5),
-         exd AS (
-           SELECT q.qid, e2.vec_id,
-             CAST(list_sum([(q.qu[i] - e2.vu[i]) * (q.qu[i] - e2.vu[i])
-                            FOR i IN generate_series(1, 64)]) AS BIGINT)
-               AS dd
-           FROM enc e2, q WHERE q.qid <> e2.vec_id),
-         ext AS MATERIALIZED (
-           SELECT qid, vec_id FROM (
-             SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
-               ORDER BY dd, vec_id) AS rn FROM exd) z
-           WHERE rn <= 5),
-         ra AS (
-           SELECT ext.qid, CAST(count(apt.vec_id) AS BIGINT)
-             AS hits_adc
-           FROM ext LEFT JOIN apt USING (qid, vec_id) GROUP BY 1),
-         rr AS (
-           SELECT ext.qid, CAST(count(rft.vec_id) AS BIGINT)
-             AS hits_ref
-           FROM ext LEFT JOIN rft USING (qid, vec_id) GROUP BY 1)
-         SELECT qid, hits_adc, hits_ref,
-           CAST(hits_adc * 1000000 // 5 AS BIGINT) AS recall_adc_ppm,
-           CAST(hits_ref * 1000000 // 5 AS BIGINT) AS recall_ref_ppm
-         FROM ra JOIN rr USING (qid)""",
-    "t9_ivf_probe" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         asg AS (
-           SELECT vec_id, cid FROM (
-             SELECT e.vec_id, c.cid,
-               list_sum([(v[i]-cv[i])*(v[i]-cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM e, c)
-           QUALIFY row_number() OVER (PARTITION BY vec_id
-             ORDER BY dist, cid) = 1),
-         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-         probes AS (
-           SELECT qid, qv, cid FROM (
-             SELECT q.qid, q.qv, c.cid,
-               list_sum([(qv[i]-cv[i])*(qv[i]-cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM q, c)
-           QUALIFY row_number() OVER (PARTITION BY qid
-             ORDER BY dist, cid) <= 2),
-         s AS (
-           SELECT p.qid, e.vec_id,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS csim
-           FROM probes p
-           JOIN asg a ON a.cid = p.cid
-           JOIN e ON e.vec_id = a.vec_id
-           WHERE p.qid <> e.vec_id)
-         SELECT qid, vec_id, round(csim, 6) AS cos,
-           row_number() OVER (PARTITION BY qid ORDER BY csim DESC, vec_id)
-             AS rn
-         FROM s QUALIFY rn <= 5""",
-    "t60_ivf_recall" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-         xs AS (
-           SELECT qid, vec_id,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS cs
-           FROM e, q WHERE qid <> vec_id),
-         exact AS (
-           SELECT qid, vec_id FROM xs
-           QUALIFY row_number() OVER (PARTITION BY qid
-             ORDER BY cs DESC, vec_id) <= 5),
-         c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         asg AS (
-           SELECT vec_id, cid FROM (
-             SELECT e.vec_id, c.cid,
-               list_sum([(v[i]-cv[i])*(v[i]-cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM e, c)
-           QUALIFY row_number() OVER (PARTITION BY vec_id
-             ORDER BY dist, cid) = 1),
-         probes AS (
-           SELECT qid, qv, cid FROM (
-             SELECT q.qid, q.qv, c.cid,
-               list_sum([(qv[i]-cv[i])*(qv[i]-cv[i])
-                         FOR i IN generate_series(1, 64)]) AS dist
-             FROM q, c)
-           QUALIFY row_number() OVER (PARTITION BY qid
-             ORDER BY dist, cid) <= 2),
-         ap AS (
-           SELECT p.qid, e.vec_id,
-             list_sum([qv[i]*v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([qv[i]*qv[i] FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([v[i]*v[i] FOR i IN generate_series(1,64)])))
-             AS csim
-           FROM probes p
-           JOIN asg a ON a.cid = p.cid
-           JOIN e ON e.vec_id = a.vec_id
-           WHERE p.qid <> e.vec_id),
-         approx AS (
-           SELECT qid, vec_id FROM ap
-           QUALIFY row_number() OVER (PARTITION BY qid
-             ORDER BY csim DESC, vec_id) <= 5)
-         SELECT x.qid,
-           round(CAST(count(a.vec_id) AS DOUBLE) / count(*), 6)
-             AS recall_at_5
-         FROM exact x LEFT JOIN approx a
-           ON a.qid = x.qid AND a.vec_id = x.vec_id
-         GROUP BY x.qid""",
-    // X1 as a recursive CTE: the per-sensor melt-out ratchet recurrence
-    // (fs_pp.py:636-641 semantics) stepped row-by-row — the hard gate for
-    // the engine's signature path-dependent operator.
-    "x1_depth_recurrence" ->
-      """WITH RECURSIVE
-         hourly AS (
-           SELECT date_trunc('hour', ts) AS ts,
-             (avg(value) - 30.0) / 10.0 AS udg
-           FROM events WHERE user_id = 0 GROUP BY 1),
-         inst(sensor, at, d0) AS (
-           VALUES ('tdr1', TIMESTAMP '2024-01-05 00:00:00',
-                   CAST(-0.5 AS DOUBLE)),
-                  ('tdr2', TIMESTAMP '2024-01-15 00:00:00',
-                   CAST(-1.2 AS DOUBLE))),
-         ser AS (
-           SELECT sensor, h.ts, udg, d0,
-             row_number() OVER (PARTITION BY sensor ORDER BY h.ts) AS rn
-           FROM hourly h JOIN inst ON h.ts >= at
-           WHERE udg IS NOT NULL),
-         rec AS (
-           SELECT sensor, ts, rn,
-             CASE WHEN d0 >= 0 THEN 0.0 ELSE d0 END AS depth,
-             CASE WHEN d0 >= 0 THEN -udg ELSE d0 - udg END AS off
-           FROM ser WHERE rn = 1
-           UNION ALL
-           SELECT s.sensor, s.ts, s.rn,
-             CASE WHEN s.udg + r.off >= 0
-                  THEN 0.0 ELSE s.udg + r.off END,
-             CASE WHEN s.udg + r.off >= 0 THEN -s.udg ELSE r.off END
-           FROM ser s JOIN rec r
-             ON s.sensor = r.sensor AND s.rn = r.rn + 1)
-         SELECT sensor, ts, round(depth, 6) AS depth FROM rec""",
-    "t8_fingerprint" ->
-      """WITH t AS (
-           SELECT doc_id, text, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         h AS (
-           SELECT doc_id, text,
-             list_sort([md5(array_to_string(toks[i:i+4], ' '))
-                        FOR i IN generate_series(1, len(toks)-4)]) AS hs
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN len(hs) > 0 THEN array_to_string(hs[1:4], '')
-                ELSE md5(text) END AS fp
-         FROM h""",
-    "t13_decontaminate" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             [array_to_string(toks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(toks)-2)] AS s
-           FROM t WHERE len(toks) >= 3),
-         ev AS (
-           SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 97 = 0),
-         tr AS (
-           SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 97 <> 0)
-         SELECT tr.doc_id, count(DISTINCT tr.g) AS n_hits
-         FROM tr JOIN ev ON tr.g = ev.g
-         GROUP BY tr.doc_id""",
-    "t14_tfidf" ->
-      """WITH tf AS (
-           SELECT doc_id, term, count(*) AS tf FROM (
-             SELECT doc_id,
-               unnest(string_split_regex(lower(text), '[^a-z0-9]+'))
-                 AS term
-             FROM documents)
-           WHERE len(term) > 0 GROUP BY doc_id, term),
-         df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         n AS (SELECT count(*) AS n FROM documents),
-         s AS (
-           SELECT doc_id, tf.term,
-             tf * ln(CAST(n AS DOUBLE) / CAST(df AS DOUBLE)) AS sc
-           FROM tf JOIN df USING (term), n)
-         SELECT doc_id, term, round(sc, 6) AS score,
-           row_number() OVER (PARTITION BY doc_id
-             ORDER BY sc DESC, term) AS rn
-         FROM s QUALIFY rn <= 3""",
-    "t15_pii_scrub" ->
-      """WITH a AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0
-                  THEN text || ' contact user' || doc_id
-                       || '@example.com or call 555-010-'
-                       || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                  ELSE text END AS aug
-           FROM documents),
-         b AS (
-           SELECT doc_id, aug,
-             regexp_replace(aug,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-               '<EMAIL>', 'g') AS noemail
-           FROM a)
-         SELECT doc_id,
-           len(regexp_extract_all(aug,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-             AS n_emails,
-           len(regexp_extract_all(noemail,
-             '\+?[0-9][0-9()\s-]{6,}[0-9]')) AS n_phones,
-           len(regexp_replace(noemail,
-             '\+?[0-9][0-9()\s-]{6,}[0-9]', '<PHONE>', 'g'))
-             AS n_scrubbed
-         FROM b""",
-    "t16_dup_ngram_frac" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN [array_to_string(toks[i:i+2], ' ')
-                        FOR i IN generate_series(1, len(toks)-2)]
-                  END AS grams
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN grams IS NOT NULL AND len(grams) > 0
-                THEN round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE)
-                           / CAST(len(grams) AS DOUBLE), 6)
-                END AS dup_frac
-         FROM g""",
-    "d4_hash_sample" ->
-      """SELECT lang, doc_id,
-         row_number() OVER (PARTITION BY lang
-           ORDER BY md5(CAST(doc_id AS VARCHAR) || '|' || text)) AS rn
-         FROM documents
-         QUALIFY rn <= 5""",
-    "t17_train_split" ->
-      """SELECT doc_id,
-         CASE WHEN substr(md5(CAST(doc_id AS VARCHAR) || '|split'), 1, 2)
-                   < 'e6' THEN 'train'
-              WHEN substr(md5(CAST(doc_id AS VARCHAR) || '|split'), 1, 2)
-                   < 'f3' THEN 'val'
-              ELSE 'test' END AS split
-         FROM documents""",
-    "t18_dup_lines" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         l AS (
-           SELECT doc_id,
-             [array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')
-              FOR i IN generate_series(1,
-                CAST(ceil(len(toks) / 10.0) AS INT))] AS ln
-           FROM t)
-         SELECT doc_id,
-           CASE WHEN len(ln) > 0 THEN
-             round(1.0 - CAST(len(list_distinct(ln)) AS DOUBLE)
-                   / CAST(len(ln) AS DOUBLE), 6) END AS dup_line_frac,
-           CASE WHEN list_sum([len(x) FOR x IN ln]) > 0 THEN
-             round(1.0 -
-               CAST(list_sum([len(x) FOR x IN list_distinct(ln)])
-                    AS DOUBLE)
-               / CAST(list_sum([len(x) FOR x IN ln]) AS DOUBLE), 6)
-             END AS dup_char_frac
-         FROM l""",
-    "t19_domain_stats" ->
-      raw"""WITH $urlAugSql
-         SELECT domain, count(*) AS n_urls,
-           count(DISTINCT doc_id) AS n_docs
-         FROM u GROUP BY domain""",
-    "t20_minhash_est" ->
-      raw"""WITH $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sets AS (SELECT doc_id, list_distinct(s) AS ss FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(list_sum(
-             [CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END
-              FOR i IN generate_series(1, 8)]) AS DOUBLE) / 8.0, 6)
-             AS est_jac,
-           round(CAST(len(list_filter(x.ss, e -> list_contains(y.ss, e)))
-                      AS DOUBLE)
-             / (len(x.ss) + len(y.ss)
-                - len(list_filter(x.ss, e -> list_contains(y.ss, e)))), 6)
-             AS jac
-         FROM pairs
-         JOIN mh sa ON sa.doc_id = id_a
-         JOIN mh sb ON sb.doc_id = id_b
-         JOIN sets x ON x.doc_id = id_a
-         JOIN sets y ON y.doc_id = id_b""",
-    "t21_quality_filter" ->
-      """WITH s AS (
-           SELECT doc_id, text,
-             string_split_regex(lower(text), '\s+') AS tl,
-             string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         sig AS (
-           SELECT doc_id, text, toks, tl,
-             len(list_filter(tl, x -> list_contains(
-               ['der','die','und','das','ist','nicht','ein','zu'], x)))
-               AS s_de,
-             len(list_filter(tl, x -> list_contains(
-               ['the','and','of','to','in','is','that','it'], x))) AS s_en,
-             len(list_filter(tl, x -> list_contains(
-               ['el','la','de','que','y','los','en','un'], x))) AS s_es,
-             len(list_filter(tl, x -> list_contains(
-               ['le','la','de','et','les','des','un','une'], x))) AS s_fr
-           FROM s),
-         feat AS (
-           SELECT doc_id,
-             CASE WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]')
-                    THEN 'zh'
-                  WHEN s_de=0 AND s_en=0 AND s_es=0 AND s_fr=0 THEN 'en'
-                  WHEN s_de>=s_en AND s_de>=s_es AND s_de>=s_fr THEN 'de'
-                  WHEN s_en>=s_de AND s_en>=s_es AND s_en>=s_fr THEN 'en'
-                  WHEN s_es>=s_de AND s_es>=s_en AND s_es>=s_fr THEN 'es'
-                  ELSE 'fr' END AS lang_pred,
-             CAST(len(toks) AS BIGINT) AS n_tokens,
-             round(
-               least(CAST(len(toks) AS DOUBLE)/100.0, 1.0) * 0.4
-               + CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                      AS DOUBLE)
-                 / greatest(CAST(len(text) AS DOUBLE), 1.0) * 0.3
-               + CAST(len(list_filter(tl, x -> list_contains(
-                   ['the','and','of','to','in','is','that','it'], x)))
-                   AS DOUBLE)
-                 / greatest(CAST(len(toks) AS DOUBLE), 1.0) * 0.2
-               + least((CAST(len(text) AS DOUBLE)
-                        - len(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                       / greatest(CAST(len(text) AS DOUBLE), 1.0) * 10.0,
-                       1.0) * 0.1, 6) AS q_score,
-             CASE WHEN len(toks) >= 3 THEN
-               round(1.0 - CAST(len(list_distinct(
-                   [array_to_string(toks[i:i+2], ' ')
-                    FOR i IN generate_series(1, len(toks)-2)]))
-                   AS DOUBLE) / CAST(len(toks)-2 AS DOUBLE), 6)
-               END AS dup_frac
-           FROM sig)
-         SELECT doc_id, lang_pred, n_tokens, q_score, dup_frac,
-           CAST(lang_pred = 'en' AND q_score >= 0.5
-             AND (dup_frac IS NULL OR dup_frac <= 0.5)
-             AND n_tokens BETWEEN 10 AND 5000 AS BIGINT) AS keep
-         FROM feat""",
-    "d5_neardup_keep" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id)
-         SELECT CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                     THEN d.doc_id ELSE m.rmin END AS cluster_id,
-           count(*) AS n_docs
-         FROM documents d
-         LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-           ON m.id = d.doc_id
-         GROUP BY 1""",
-    "t56_keep_best" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-         q AS (
-           SELECT doc_id, round(
-             least(CAST(len(string_split_regex(text,'\s+')) AS DOUBLE)
-                   / 100.0, 1.0) * 0.4
-             + CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                    AS DOUBLE)
-               / greatest(CAST(len(text) AS DOUBLE), 1.0) * 0.3
-             + CAST(len(list_filter(string_split_regex(lower(text),'\s+'),
-                 x -> list_contains(
-                   ['the','and','of','to','in','is','that','it'], x)))
-                 AS DOUBLE)
-               / greatest(CAST(len(string_split_regex(text,'\s+'))
-                          AS DOUBLE), 1.0) * 0.2
-             + least((CAST(len(text) AS DOUBLE)
-                      - len(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                     / greatest(CAST(len(text) AS DOUBLE), 1.0) * 10.0,
-                     1.0) * 0.1, 6) AS q_score
-           FROM documents),
-         cl AS (
-           SELECT d.doc_id, q.q_score,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id
-           JOIN q ON q.doc_id = d.doc_id)
-         SELECT cluster_id, doc_id AS kept_doc, q_score AS q_kept
-         FROM cl
-         QUALIFY row_number() OVER (PARTITION BY cluster_id
-           ORDER BY q_score DESC, doc_id) = 1""",
-    "t57_source_dup_rate" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-         cl AS (
-           SELECT d.doc_id, d.source,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id)
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(CAST(cluster_id <> doc_id AS INT)) AS BIGINT)
-             AS n_dup,
-           round(CAST(sum(CAST(cluster_id <> doc_id AS INT)) AS DOUBLE)
-                 / count(*), 6) AS dup_rate
-         FROM cl GROUP BY source""",
-    "d6_bpe_tokens" ->
-      s"""SELECT doc_id, $bpeCountSql AS n_bpe
-         FROM documents""",
-    "t65_tokenizer_fertility" ->
-      """WITH d AS (
-           SELECT source, lang,
-             CAST(strlen(text) AS BIGINT) AS nb,
-             CAST(len(regexp_extract_all(text,
-               '''(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s'']+'))
-               AS BIGINT) AS nt
-           FROM documents)
-         SELECT source, lang,
-           CAST(sum(nb) AS BIGINT) AS n_bytes,
-           CAST(sum(nt) AS BIGINT) AS n_bpe,
-           CAST(sum(nb) * 1000000 // sum(nt) AS BIGINT)
-             AS bytes_per_tok_ppm
-         FROM d GROUP BY source, lang""",
-    "t66_url_blocklist" ->
-      raw"""WITH $urlAugSql,
-         hits AS (
-           SELECT DISTINCT doc_id FROM u
-           WHERE lower(domain) IN ('site0.example.org',
-                                   'site3.example.org', 'host2.net'))
-         SELECT doc_id, lang, source FROM documents
-         WHERE doc_id NOT IN (SELECT doc_id FROM hits)""",
-    "t69_cluster_sample" ->
-      s"""$ivfAssignSql,
-         r AS (
-           SELECT cid, vec_id,
-             CAST(row_number() OVER (PARTITION BY cid
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-               AS BIGINT) AS rk
-           FROM a)
-         SELECT cid, vec_id, rk FROM r WHERE rk <= 4""",
-    "t70_unimax" ->
-      """WITH lt AS (
-           SELECT lang,
-             CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-               AS n_tokens
-           FROM documents GROUP BY lang),
-         c AS (
-           SELECT lang, n_tokens, n_tokens * 3 AS cap FROM lt),
-         r AS (
-           SELECT lang, n_tokens, cap,
-             CAST(row_number() OVER (ORDER BY cap, lang) AS BIGINT)
-               AS idx,
-             COALESCE(sum(cap) OVER (ORDER BY cap, lang
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS cum,
-             CAST(count(*) OVER () AS BIGINT) AS n,
-             sum(n_tokens) OVER () * 2 AS budget
-           FROM c),
-         t AS (
-           SELECT *, (budget - cum) // (n - idx + 1) AS theta FROM r),
-         p AS (
-           SELECT *,
-             min(CASE WHEN theta < cap THEN idx END) OVER () AS pv
-           FROM t),
-         q AS (
-           SELECT *,
-             max(CASE WHEN idx = pv THEN theta END) OVER ()
-               AS ptheta
-           FROM p)
-         SELECT lang, n_tokens, cap,
-           CAST(CASE WHEN pv IS NULL OR idx < pv THEN cap
-                ELSE ptheta END AS BIGINT) AS alloc,
-           CAST((CASE WHEN pv IS NULL OR idx < pv THEN cap
-                 ELSE ptheta END) * 10000 // n_tokens AS BIGINT)
-             AS epochs_bp
-         FROM q""",
-    "t67_train_shuffle" ->
-      """WITH k AS (
-           SELECT doc_id, md5('shuf42:' || doc_id) AS key
-           FROM documents)
-         SELECT doc_id, substr(key, 1, 2) AS shard,
-           CAST(row_number() OVER (PARTITION BY substr(key, 1, 2)
-             ORDER BY key, doc_id) AS BIGINT) AS pos
-         FROM k""",
-    "t68_sequence_pack" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '''(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s'']+'))
-               AS BIGINT) AS n_tok
-           FROM documents),
-         c AS (
-           SELECT doc_id, n_tok,
-             COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS start
-           FROM t)
-         SELECT doc_id, n_tok, CAST(start AS BIGINT) AS start,
-           CAST(start // 2048 AS BIGINT) AS first_seq,
-           CAST((start + greatest(n_tok, 1) - 1) // 2048 AS BIGINT)
-             AS last_seq,
-           CAST((start + greatest(n_tok, 1) - 1) // 2048
-             - start // 2048 AS BIGINT) AS n_splits
-         FROM c""",
-    // The full tokenizer loop in SQL: train 8 merges over the word
-    // table (unrolled CTEs — see bpeTrainIterSql), then read each
-    // word's encoded length straight off the final training state
-    // (for words IN the training vocab, encode ≡ final state — the
-    // standard BPE property, both sides greedy-leftmost per merge in
-    // rank order), and aggregate per doc through the same
-    // explode-join the Spark side uses.
-    "t73_bpe_encode" ->
-      raw"""WITH w0 AS (
-           SELECT tok AS w, CAST(count(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split_regex(lower(text), '\s+'))
-                   AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 GROUP BY 1),
-         st0 AS (
-           SELECT w, cnt,
-             $bpeSep || array_to_string(string_split(w, ''),
-               $bpeSepSep) || $bpeSep AS s
-           FROM w0),
-         ${bpeTrainIterSql(8)},
-         vocab AS (
-           SELECT w,
-             CAST(len(string_split(substr(s, 2, length(s) - 2),
-               $bpeSepSep)) AS BIGINT) AS n_sym
-           FROM st8),
-         doc AS (
-           SELECT doc_id, tok AS w
-           FROM (SELECT doc_id,
-                   unnest(string_split_regex(lower(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(n_sym) AS BIGINT) AS n_bpe,
-           CAST((sum(n_sym) * 10000) // count(*) AS BIGINT)
-             AS fertility_bp
-         FROM doc JOIN vocab USING (w)
-         GROUP BY doc_id""",
-    // t73's training + vocab CTEs, rolled up per source instead of
-    // per doc, plus the whole-word (n_sym = 1) share.
-    "t111_tokenizer_fit" ->
-      raw"""WITH w0 AS (
-           SELECT tok AS w, CAST(count(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split_regex(lower(text), '\s+'))
-                   AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 GROUP BY 1),
-         st0 AS (
-           SELECT w, cnt,
-             $bpeSep || array_to_string(string_split(w, ''),
-               $bpeSepSep) || $bpeSep AS s
-           FROM w0),
-         ${bpeTrainIterSql(8)},
-         vocab AS (
-           SELECT w,
-             CAST(len(string_split(substr(s, 2, length(s) - 2),
-               $bpeSepSep)) AS BIGINT) AS n_sym
-           FROM st8),
-         doc AS (
-           SELECT source, tok AS w
-           FROM (SELECT source,
-                   unnest(string_split_regex(lower(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(n_sym) AS BIGINT) AS n_bpe,
-           CAST(sum(CASE WHEN n_sym = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_whole,
-           CAST((sum(n_sym) * 10000) // count(*) AS BIGINT)
-             AS fertility_bp,
-           CAST((sum(CASE WHEN n_sym = 1 THEN 1 ELSE 0 END) * 1000000)
-             // count(*) AS BIGINT) AS whole_word_ppm
-         FROM doc JOIN vocab USING (w)
-         GROUP BY source""",
-    // Same unrolled training CTEs; the output is the merge table
-    // itself — one row per round's winning pair, read off best1..8.
-    "t71_bpe_train" ->
-      raw"""WITH w0 AS (
-           SELECT tok AS w, CAST(count(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split_regex(lower(text), '\s+'))
-                   AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 GROUP BY 1),
-         st0 AS (
-           SELECT w, cnt,
-             $bpeSep || array_to_string(string_split(w, ''),
-               $bpeSepSep) || $bpeSep AS s
-           FROM w0),
-         ${bpeTrainIterSql(8)}
-         ${(1 to 8).map(i =>
-             s"""SELECT CAST($i AS BIGINT) AS rank, a AS first,
-                b AS second, a || b AS merged, CAST(c AS BIGINT) AS cnt
-                FROM best$i""").mkString("\n         UNION ALL\n         ")}""",
-    "t22_inverted_index" ->
-      """WITH u AS (
-           SELECT DISTINCT doc_id,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         g AS (
-           SELECT term, count(*) AS df, list_sort(list(doc_id)) AS p
-           FROM u WHERE len(term) > 0
-           GROUP BY term)
-         SELECT term, df,
-           CASE WHEN df <= 64 THEN array_to_string(p, ',')
-                ELSE '' END AS postings,
-           CAST(df > 64 AS BIGINT) AS truncated
-         FROM g""",
-    "t23_boilerplate_lines" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         l AS (
-           SELECT doc_id,
-             unnest([array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')
-                     FOR i IN generate_series(1,
-                       CAST(ceil(len(toks) / 10.0) AS INT))]) AS line
-           FROM t)
-         SELECT md5(line) AS line_hash,
-           count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ,
-           min(line) AS line
-         FROM l GROUP BY md5(line)
-         HAVING count(DISTINCT doc_id) > 1""",
-    "t24_seq_packing" ->
-      """WITH t AS (
-           SELECT source, doc_id,
-             CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
-               AS n_tokens
-           FROM documents)
-         SELECT source, doc_id, n_tokens,
-           CAST(floor((sum(n_tokens) OVER (PARTITION BY source
-                 ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                 AND CURRENT ROW) - n_tokens) / 2000.0) AS BIGINT)
-             AS pack_id
-         FROM t""",
-    "t25_quality_shards" ->
-      """WITH q AS (
-           SELECT lang, doc_id, round(
-             least(CAST(len(string_split_regex(text,'\s+')) AS DOUBLE)
-                   / 100.0, 1.0) * 0.4
-             + CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                    AS DOUBLE)
-               / greatest(CAST(len(text) AS DOUBLE), 1.0) * 0.3
-             + CAST(len(list_filter(string_split_regex(lower(text),'\s+'),
-                 x -> list_contains(
-                   ['the','and','of','to','in','is','that','it'], x)))
-                 AS DOUBLE)
-               / greatest(CAST(len(string_split_regex(text,'\s+'))
-                          AS DOUBLE), 1.0) * 0.2
-             + least((CAST(len(text) AS DOUBLE)
-                      - len(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                     / greatest(CAST(len(text) AS DOUBLE), 1.0) * 10.0,
-                     1.0) * 0.1, 6) AS q_score
-           FROM documents)
-         SELECT lang, doc_id, q_score,
-           CAST(ntile(4) OVER (PARTITION BY lang
-             ORDER BY q_score DESC, doc_id) AS BIGINT) AS tier
-         FROM q""",
-    "t26_mix_weights" ->
-      """WITH per AS (
-           SELECT source, count(*) AS n_docs,
-             CAST(sum(CAST(len(string_split_regex(text, '\s+'))
-                  AS BIGINT)) AS BIGINT) AS n_tokens
-           FROM documents GROUP BY source),
-         tot AS (SELECT sum(n_tokens) AS t FROM per)
-         SELECT source, n_docs, n_tokens,
-           round(CAST(n_tokens AS DOUBLE) / CAST(t AS DOUBLE), 6)
-             AS weight
-         FROM per, tot""",
-    "t55_temp_mixing" ->
-      """WITH per AS (
-           SELECT source,
-             CAST(sum(CAST(len(string_split_regex(text, '\s+'))
-                  AS BIGINT)) AS BIGINT) AS n_tokens
-           FROM documents GROUP BY source),
-         tot AS (SELECT sum(n_tokens) AS t FROM per),
-         sc AS (SELECT source, n_tokens,
-                  round(pow(CAST(n_tokens AS DOUBLE)
-                            / CAST(t AS DOUBLE), 0.7), 12) AS pa
-                FROM per, tot),
-         z AS (SELECT sum(pa) AS z FROM sc)
-         SELECT source, n_tokens, round(pa / z, 6) AS temp_weight
-         FROM sc, z""",
-    "t34_paragraph_dedup" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id, i AS pos,
-             md5(array_to_string(toks[(i-1)*10+1:(i-1)*10+10], ' ')) AS h
-           FROM t, unnest(generate_series(1,
-             CAST(ceil(len(toks) / 10.0) AS INT))) AS u(i)),
-         r AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY h ORDER BY doc_id, pos)
-               AS rn
-           FROM c)
-         SELECT doc_id, count(*) AS n_chunks,
-           CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_kept,
-           round(CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*), 6) AS kept_frac
-         FROM r GROUP BY doc_id""",
-    "t35_containment" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             [array_to_string(toks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(toks)-2)] AS s
-           FROM t WHERE len(toks) >= 3),
-         mh AS (
-           SELECT doc_id, s,
-             [list_min([md5(k::VARCHAR || '|' || x) FOR x IN s])
-              FOR k IN generate_series(1, 8)] AS sig
-           FROM sh),
-         bands AS (
-           SELECT doc_id, b, md5(sig[2*b-1] || sig[2*b]) AS bh
-           FROM mh, unnest(generate_series(1, 4)) AS u(b)),
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         ds AS (SELECT doc_id, list_distinct(s) AS ss FROM sh)
-         SELECT id_a, id_b,
-           round(CAST(len(list_intersect(x.ss, y.ss)) AS DOUBLE)
-             / len(x.ss), 6) AS cont_ab,
-           round(CAST(len(list_intersect(x.ss, y.ss)) AS DOUBLE)
-             / len(y.ss), 6) AS cont_ba
-         FROM pairs JOIN ds x ON x.doc_id = id_a
-         JOIN ds y ON y.doc_id = id_b""",
-    // the flags are computed Spark-side against exact aggregates over
-    // the same rows; the oracle contributes the exact group counts and
-    // the expectation that every bound HOLDS — a hash mismatch means an
-    // estimator left its ε envelope
-    "a1b_sketch_bounds" ->
-      """SELECT event_type, count(*) AS n,
-           true AS hll_ok, true AS hllpp_ok, true AS p50_ok
-         FROM events GROUP BY event_type""",
-    // a1's snapped-value fold: in-band estimates emit the exact
-    // answer, so the oracle IS the exact answer (an out-of-band
-    // estimate emits raw and hash-fails — the intended red)
-    "a1_approx_sketches" ->
-      """SELECT event_type, count(*) AS n,
-           count(DISTINCT user_id) AS approx_users,
-           count(DISTINCT user_id) AS approx_users_hllpp,
-           median(value) AS p50_approx
-         FROM events GROUP BY event_type""",
-    "a2_kmv_distinct" ->
-      """WITH u AS (
-           SELECT DISTINCT event_type, md5(user_id::VARCHAR) AS h
-           FROM events),
-         bk AS (
-           SELECT event_type, list_sort(list(h))[1:8] AS bh
-           FROM u GROUP BY event_type)
-         SELECT event_type, array_to_string(bh, ',') AS bottom_hashes,
-           round(CASE WHEN len(bh) < 8 THEN CAST(len(bh) AS DOUBLE)
-             ELSE CAST(7 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE) /
-               CAST(('0x' || substr(bh[8], 1, 13)) AS UBIGINT)::DOUBLE
-             END, 6) AS est_distinct
-         FROM bk""",
-    "t30_bm25" ->
-      """WITH g AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         f AS (SELECT doc_id, term FROM g WHERE len(term) > 0),
-         dl AS (SELECT doc_id, count(*) AS dl FROM f GROUP BY doc_id),
-         st AS (SELECT count(*) AS n,
-                  avg(CAST(dl AS DOUBLE)) AS avgdl FROM dl),
-         tf AS (SELECT doc_id, term, count(*) AS tf
-                FROM f GROUP BY doc_id, term),
-         qt AS (SELECT term, count(*) AS df FROM tf GROUP BY term
-                ORDER BY df DESC, term LIMIT 3)
-         SELECT tf.doc_id,
-           round(sum(
-             ln((n - df + 0.5) / (df + 0.5) + 1.0)
-             * tf * 2.2
-             / (tf + 1.2 * (0.25 + 0.75 * dl.dl / avgdl))), 6) AS bm25
-         FROM tf JOIN qt USING (term) JOIN dl USING (doc_id), st
-         GROUP BY tf.doc_id""",
-    "t31_fuzzy_decontam" ->
-      raw"""WITH $minhashBandsSql,
-         hits AS (
-           SELECT DISTINCT tr.doc_id
-           FROM bands tr JOIN bands be
-             ON tr.b = be.b AND tr.bh = be.bh
-           WHERE tr.doc_id % 20 <> 0 AND be.doc_id % 20 = 0)
-         SELECT d.doc_id,
-           CAST(CASE WHEN h.doc_id IS NULL THEN 0 ELSE 1 END
-             AS BIGINT) AS contaminated
-         FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         WHERE d.doc_id % 20 <> 0""",
-    "t58_neardup_churn" ->
-      raw"""WITH $minhashBandsSql,
-         hits AS (
-           SELECT DISTINCT ad.doc_id
-           FROM bands ad JOIN bands rm
-             ON ad.b = rm.b AND ad.bh = rm.bh
-           WHERE ad.doc_id % 4 = 3 AND rm.doc_id % 4 = 0)
-         SELECT d.doc_id,
-           CAST(CASE WHEN h.doc_id IS NULL THEN 0 ELSE 1 END
-             AS BIGINT) AS recrawl
-         FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-         WHERE d.doc_id % 4 = 3""",
-    "t64_repetition_budget" ->
-      """WITH t AS (
-           SELECT doc_id,
-             string_split_regex(lower(text), '\s+') AS toks
-           FROM documents),
-         d AS (
-           SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_tok,
-             CAST(len(list_filter(toks, x -> x IN ('the','be','to',
-               'of','and','that','have','with','it','in')))
-               AS BIGINT) AS ns
-           FROM t),
-         db AS (
-           SELECT doc_id, n_tok,
-             (ns * 1000000 // n_tok) // 10000 AS qb
-           FROM d),
-         b AS (SELECT qb, sum(n_tok) AS tb FROM db GROUP BY qb),
-         w AS (
-           SELECT qb, sum(tb) OVER (ORDER BY qb DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM b),
-         tot AS (SELECT sum(n_tok) // 2 AS budget FROM db)
-         SELECT db.doc_id, db.n_tok, CAST(db.qb AS BIGINT) AS qb,
-           CAST(CASE WHEN w.cum <= tot.budget THEN 2 ELSE 1 END
-             AS BIGINT) AS epochs
-         FROM db JOIN w USING (qb), tot""",
-    "t63_pipeline_funnel" ->
-      """WITH tl AS (
-           SELECT doc_id, text,
-             string_split_regex(lower(text), '\s+') AS toks
-           FROM documents WHERE doc_id % 97 <> 0),
-         sc AS (
-           SELECT doc_id, text, toks,
-             len(list_filter(toks, x -> list_contains(
-               ['der','die','und','das','ist','nicht','ein','zu'], x)))
-               AS s_de,
-             len(list_filter(toks, x -> list_contains(
-               ['the','and','of','to','in','is','that','it'], x)))
-               AS s_en,
-             len(list_filter(toks, x -> list_contains(
-               ['el','la','de','que','y','los','en','un'], x))) AS s_es,
-             len(list_filter(toks, x -> list_contains(
-               ['le','la','de','et','les','des','un','une'], x)))
-               AS s_fr
-           FROM tl),
-         s1 AS (
-           SELECT doc_id, text, toks FROM sc
-           WHERE (CASE
-               WHEN regexp_matches(text, '[\x{4e00}-\x{9fff}]') THEN 'zh'
-               WHEN s_de=0 AND s_en=0 AND s_es=0 AND s_fr=0 THEN 'en'
-               WHEN s_de>=s_en AND s_de>=s_es AND s_de>=s_fr THEN 'de'
-               WHEN s_en>=s_de AND s_en>=s_es AND s_en>=s_fr THEN 'en'
-               WHEN s_es>=s_de AND s_es>=s_en AND s_es>=s_fr THEN 'es'
-               ELSE 'fr' END) = 'en'),
-         s2 AS (
-           SELECT doc_id, text FROM s1
-           WHERE len(toks) BETWEEN 50 AND 100000
-             AND CAST(list_sum(list_transform(toks, x -> len(x)))
-                 AS DOUBLE) / len(toks) BETWEEN 3 AND 10
-             AND CAST(len(list_filter(toks,
-                 x -> regexp_matches(x, '[a-z]'))) AS DOUBLE)
-               / len(toks) >= 0.8
-             AND len(list_filter(toks, x -> x IN ('the','be','to','of',
-               'and','that','have','with','it','in'))) >= 2),
-         s3 AS (
-           SELECT doc_id, text FROM s2
-           QUALIFY row_number() OVER (PARTITION BY md5(text)
-             ORDER BY doc_id) = 1),
-         rt AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS rtoks
-           FROM documents),
-         evg AS (
-           SELECT DISTINCT unnest(
-             [array_to_string(rtoks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(rtoks)-2)]) AS g
-           FROM rt WHERE doc_id % 97 = 0 AND len(rtoks) >= 3),
-         trg AS (
-           SELECT s3.doc_id, unnest(
-             [array_to_string(rtoks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(rtoks)-2)]) AS g
-           FROM s3 JOIN rt ON rt.doc_id = s3.doc_id
-           WHERE len(rtoks) >= 3),
-         hits AS (
-           SELECT DISTINCT trg.doc_id FROM trg JOIN evg ON trg.g = evg.g),
-         s4 AS (
-           SELECT s3.doc_id FROM s3 LEFT JOIN hits h
-             ON h.doc_id = s3.doc_id
-           WHERE h.doc_id IS NULL)
-         SELECT '0_all' AS stage, count(*) AS n_docs FROM tl
-         UNION ALL SELECT '1_lang_en', count(*) FROM s1
-         UNION ALL SELECT '2_gopher', count(*) FROM s2
-         UNION ALL SELECT '3_exact_dedup', count(*) FROM s3
-         UNION ALL SELECT '4_decontam', count(*) FROM s4""",
-    "t62_semdedup" ->
-      s"""WITH e AS MATERIALIZED (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         dup AS MATERIALIZED (
-           SELECT vec_id + 100000 AS vec_id,
-             list_concat([v[1] + 0.05], v[2:64]) AS v FROM e),
-         corpus AS MATERIALIZED (
-           SELECT * FROM e UNION ALL SELECT * FROM dup),
-         kk AS MATERIALIZED (
-           SELECT greatest(16, count(*) // 256) AS k FROM e),
-         c AS MATERIALIZED (
-           SELECT vec_id AS cid, v AS cv FROM e, kk
-           WHERE vec_id < kk.k),
-         ${scaledAssignSql("t", "corpus", "c", "(SELECT k FROM kk)")},
-         asg AS MATERIALIZED (SELECT vec_id, v, cid FROM tasg),
-         dropped AS (
-           SELECT DISTINCT a.vec_id
-           FROM asg a JOIN asg b
-             ON a.cid = b.cid AND b.vec_id < a.vec_id
-           WHERE
-             list_sum([a.v[i]*b.v[i] FOR i IN generate_series(1,64)]) /
-             (sqrt(list_sum([a.v[i]*a.v[i]
-                             FOR i IN generate_series(1,64)])) *
-              sqrt(list_sum([b.v[i]*b.v[i]
-                             FOR i IN generate_series(1,64)]))) >= 0.99)
-         SELECT a.vec_id, a.cid
-         FROM asg a LEFT JOIN dropped d ON d.vec_id = a.vec_id
-         WHERE d.vec_id IS NULL""",
-    "t61_snapshot_kl" ->
-      """WITH f AS (
-           SELECT source, doc_id,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         g AS (SELECT source, doc_id, term FROM f WHERE len(term) > 0),
-         old AS (SELECT source, term, count(*) AS no FROM g
-                 WHERE doc_id % 4 <> 3 GROUP BY source, term),
-         nw AS (SELECT source, term, count(*) AS nn FROM g
-                WHERE doc_id % 4 <> 0 GROUP BY source, term),
-         vocab AS (
-           SELECT coalesce(old.source, nw.source) AS source,
-             coalesce(old.term, nw.term) AS term, no, nn
-           FROM old FULL OUTER JOIN nw
-             ON old.source = nw.source AND old.term = nw.term),
-         scal AS (
-           SELECT source,
-             CAST(sum(coalesce(no, 0)) AS DOUBLE) AS t_o,
-             CAST(sum(coalesce(nn, 0)) AS DOUBLE) AS t_n,
-             CAST(count(*) AS DOUBLE) AS v
-           FROM vocab GROUP BY source)
-         SELECT source,
-           round(sum(
-             ((CAST(coalesce(nn, 0) AS DOUBLE) + 1.0) / (t_n + v)) *
-             ln(((CAST(coalesce(nn, 0) AS DOUBLE) + 1.0) / (t_n + v)) /
-                ((CAST(coalesce(no, 0) AS DOUBLE) + 1.0) / (t_o + v)))),
-             6) AS kl_new_old
-         FROM vocab JOIN scal USING (source)
-         GROUP BY source""",
-    "t59_dsir_weight" ->
-      """WITH f AS (
-           SELECT doc_id, source,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         g AS (SELECT doc_id, source, term FROM f WHERE len(term) > 0),
-         vs AS (SELECT term, count(*) AS ns FROM g GROUP BY term),
-         vt AS (SELECT term, count(*) AS nt FROM g
-                WHERE source = 'src0' GROUP BY term),
-         tot AS (SELECT
-             (SELECT count(*) FROM g) AS ts,
-             (SELECT count(*) FROM g WHERE source = 'src0') AS tt,
-             (SELECT count(DISTINCT term) FROM g) AS v)
-         SELECT doc_id, count(*) AS n_tok,
-           round(avg(
-             ln((CAST(coalesce(nt, 0) AS DOUBLE) + 1.0) / (tt + v)) -
-             ln((CAST(ns AS DOUBLE) + 1.0) / (ts + v))), 6)
-             AS dsir_logweight
-         FROM g JOIN vs USING (term) LEFT JOIN vt USING (term), tot
-         GROUP BY doc_id""",
-    "t32_stratified_sample" ->
-      """SELECT source, doc_id FROM documents
-         QUALIFY row_number() OVER (PARTITION BY source
-             ORDER BY md5(doc_id::VARCHAR), doc_id)
-           <= ceil(count(*) OVER (PARTITION BY source) * 0.2)""",
-    "t33_doc_chunks" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         c AS (
-           SELECT doc_id,
-             [array_to_string(toks[j*30+1:j*30+40], ' ')
-              FOR j IN generate_series(0,
-                greatest(0, CAST(ceil((len(toks) - 40) / 30.0)
-                              AS INTEGER)))] AS chunks
-           FROM t)
-         SELECT doc_id,
-           CAST(j AS BIGINT) AS chunk_id,
-           CAST(len(string_split(chunks[j], ' ')) AS BIGINT) AS n_tok,
-           md5(chunks[j]) AS chunk_hash
-         FROM c, unnest(generate_series(1, len(chunks))) AS u(j)""",
-    "t28_pq_encode" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         d AS (
-           SELECT e.vec_id, j, cb.cid,
-             list_sum([(e.v[(j-1)*8+i] - cb.cv[(j-1)*8+i])
-                       * (e.v[(j-1)*8+i] - cb.cv[(j-1)*8+i])
-                       FOR i IN generate_series(1, 8)]) AS dist
-           FROM e, cb, unnest(generate_series(1, 8)) AS u(j))
-         SELECT vec_id, CAST(j AS BIGINT) AS j, cid AS code
-         FROM d
-         QUALIFY row_number()
-           OVER (PARTITION BY vec_id, j ORDER BY dist, cid) = 1""",
-    "t29_pq_adc" ->
-      """WITH e AS (
-           SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v
-           FROM embeddings),
-         cb AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 16),
-         d AS (
-           SELECT e.vec_id, j, cb.cid,
-             list_sum([(e.v[(j-1)*8+i] - cb.cv[(j-1)*8+i])
-                       * (e.v[(j-1)*8+i] - cb.cv[(j-1)*8+i])
-                       FOR i IN generate_series(1, 8)]) AS dist
-           FROM e, cb, unnest(generate_series(1, 8)) AS u(j)),
-         codes AS (
-           SELECT vec_id, j, cid FROM d
-           QUALIFY row_number()
-             OVER (PARTITION BY vec_id, j ORDER BY dist, cid) = 1),
-         recon AS (
-           SELECT c.vec_id,
-             flatten(list(b.cv[(c.j-1)*8+1:(c.j-1)*8+8] ORDER BY c.j))
-               AS rv
-           FROM codes c JOIN cb b ON b.cid = c.cid
-           GROUP BY c.vec_id),
-         q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
-         s AS (
-           SELECT q.qid, r.vec_id,
-             list_sum([(q.qv[i] - r.rv[i]) * (q.qv[i] - r.rv[i])
-                       FOR i IN generate_series(1, 64)]) AS dist
-           FROM recon r, q WHERE q.qid <> r.vec_id)
-         SELECT qid, vec_id, round(dist, 6) AS adc,
-           row_number() OVER (PARTITION BY qid ORDER BY dist, vec_id)
-             AS rn
-         FROM s QUALIFY rn <= 5""",
-    "t27_unigram_logprob" ->
-      """WITH f AS (
-           SELECT doc_id,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         g AS (SELECT doc_id, term FROM f WHERE len(term) > 0),
-         v AS (SELECT term, count(*) AS n FROM g GROUP BY term),
-         tot AS (SELECT count(*) AS nn FROM g)
-         SELECT doc_id, count(*) AS n_tok,
-           round(avg(ln(CAST(nn AS DOUBLE) / CAST(n AS DOUBLE))), 6)
-             AS xent
-         FROM g JOIN v USING (term), tot
-         GROUP BY doc_id""",
-    "q40_window_ranks" ->
-      """SELECT event_id, event_type, value,
-         CAST(rank() OVER wv AS BIGINT) AS rnk,
-         CAST(dense_rank() OVER wv AS BIGINT) AS drnk,
-         round(percent_rank() OVER wv, 6) AS prnk,
-         round(cume_dist() OVER wv, 6) AS cd,
-         lead(value) OVER wu AS nxt
-         FROM events
-         WINDOW wv AS (PARTITION BY event_type ORDER BY value),
-           wu AS (PARTITION BY event_type ORDER BY value, event_id)""",
-    "q41_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""",
-    "d7_corpus_stats" ->
-      """SELECT count(*) AS n_docs,
-         count(DISTINCT md5(text)) AS n_unique,
-         CAST(sum(CAST(len(string_split_regex(text, '\s+')) AS BIGINT))
-              AS BIGINT) AS n_tokens,
-         round(avg(round(
-           least(CAST(len(string_split_regex(text,'\s+')) AS DOUBLE)
-                 / 100.0, 1.0) * 0.4
-           + CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                  AS DOUBLE)
-             / greatest(CAST(len(text) AS DOUBLE), 1.0) * 0.3
-           + CAST(len(list_filter(string_split_regex(lower(text),'\s+'),
-               x -> list_contains(
-                 ['the','and','of','to','in','is','that','it'], x)))
-               AS DOUBLE)
-             / greatest(CAST(len(string_split_regex(text,'\s+'))
-                        AS DOUBLE), 1.0) * 0.2
-           + least((CAST(len(text) AS DOUBLE)
-                    - len(regexp_replace(text, '[.,!?;:]', '', 'g')))
-                   / greatest(CAST(len(text) AS DOUBLE), 1.0) * 10.0,
-                   1.0) * 0.1, 6)), 6) AS avg_quality,
-         count(DISTINCT lang) AS n_langs
-         FROM documents""",
-    "t36_heavy_hitters" ->
-      """WITH t AS (
-           SELECT unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         tk AS (SELECT term FROM t WHERE len(term) > 0),
-         n AS (SELECT count(*) AS __n FROM tk)
-         SELECT term, count(*) AS cnt
-         FROM tk, n
-         GROUP BY term, __n
-         HAVING count(*) * 64 > __n""",
-    "t37_bpe_pairs" ->
-      """WITH t AS (
-           SELECT list_filter(string_split_regex(lower(text), '\s+'),
-                              x -> len(x) > 0) AS tk
-           FROM documents),
-         p AS (
-           SELECT unnest([tk[i] || ' ' || tk[i+1]
-                          FOR i IN generate_series(1, len(tk)-1)]) AS pair
-           FROM t WHERE len(tk) >= 2)
-         SELECT pair, count(*) AS cnt FROM p
-         GROUP BY pair ORDER BY cnt DESC, pair LIMIT 20""",
-    "t38_snapshot_diff" ->
-      """WITH old AS (
-           SELECT doc_id, md5(text) AS ho
-           FROM documents WHERE doc_id % 4 <> 3),
-         nw AS (
-           SELECT doc_id,
-             md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2'
-                      ELSE text END) AS hn
-           FROM documents WHERE doc_id % 4 <> 0)
-         SELECT COALESCE(old.doc_id, nw.doc_id) AS doc_id,
-           CASE WHEN ho IS NULL THEN 'added'
-                WHEN hn IS NULL THEN 'removed'
-                WHEN ho <> hn THEN 'changed'
-                ELSE 'unchanged' END AS change
-         FROM old FULL OUTER JOIN nw ON old.doc_id = nw.doc_id
-         WHERE (CASE WHEN ho IS NULL THEN 'added'
-                WHEN hn IS NULL THEN 'removed'
-                WHEN ho <> hn THEN 'changed'
-                ELSE 'unchanged' END) <> 'unchanged'""",
-    "t39_len_histogram" ->
-      """SELECT LEAST(nt // 16, 15) AS bucket,
-           count(*) AS n_docs,
-           CAST(sum(nt) AS BIGINT) AS n_tokens
-         FROM (
-           SELECT CAST(len(list_filter(
-             string_split_regex(lower(text), '\s+'),
-             x -> len(x) > 0)) AS BIGINT) AS nt
-           FROM documents)
-         GROUP BY bucket""",
-    // Bloom prefilter must be invisible in the answer: the oracle is
-    // the EXACT join, identical to t13's.
-    "t40_bloom_decontam" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         sh AS (
-           SELECT doc_id,
-             [array_to_string(toks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(toks)-2)] AS s
-           FROM t WHERE len(toks) >= 3),
-         ev AS (
-           SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 97 = 0),
-         tr AS (
-           SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 97 <> 0)
-         SELECT tr.doc_id, count(DISTINCT tr.g) AS n_hits
-         FROM tr JOIN ev ON tr.g = ev.g
-         GROUP BY tr.doc_id""",
-    "t41_char_entropy" ->
-      """WITH c AS (
-           SELECT doc_id, unnest(string_split(text, '')) AS ch
-           FROM documents),
-         f AS (
-           SELECT doc_id, ch, count(*) AS c FROM c GROUP BY doc_id, ch),
-         s AS (
-           SELECT doc_id, sum(c) AS n,
-             sum(c * log2(c)) AS t
-           FROM f GROUP BY doc_id)
-         SELECT d.doc_id,
-           COALESCE(round(log2(s.n) - s.t / s.n, 6), 0.0) AS entropy
-         FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id""",
-    "t42_weighted_sample" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(len(list_filter(
-               string_split_regex(lower(text), '\s+'),
-               x -> len(x) > 0)) AS DOUBLE) AS w,
-             (CAST(('0x' || substr(
-                 md5(doc_id::VARCHAR || '|ws'), 1, 13)) AS UBIGINT)::DOUBLE
-               + 1) / 4503599627370496.0 AS u
-           FROM documents)
-         SELECT doc_id, CAST(w AS BIGINT) AS n_tokens
-         FROM d WHERE w > 0 ORDER BY ln(u) / w DESC, doc_id LIMIT 25""",
-    "t43_vocab_growth" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         g AS (
-           SELECT doc_id,
-             [array_to_string(toks[i:i+1], ' ')
-              FOR i IN generate_series(1, len(toks)-1)] AS bg
-           FROM t WHERE len(toks) >= 2),
-         f AS (
-           SELECT term, min(doc_id) AS fd
-           FROM (SELECT doc_id, unnest(list_distinct(bg)) AS term FROM g)
-           GROUP BY term),
-         b AS (
-           SELECT fd // 50 AS bucket, count(*) AS new_terms
-           FROM f GROUP BY bucket)
-         SELECT bucket, new_terms,
-           CAST(sum(new_terms) OVER (ORDER BY bucket
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS vocab
-         FROM b""",
-    "t44_dup_spans" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         g AS (
-           SELECT doc_id,
-             unnest([{'p': i,
-                      'g': substr(md5(array_to_string(toks[i:i+7], ' ')),
-                                  1, 16)}
-                     FOR i IN generate_series(1, len(toks)-7)],
-                    recursive := true)
-           FROM f),
-         d AS (SELECT g FROM g GROUP BY g
-               HAVING count(DISTINCT doc_id) >= 2),
-         h AS (SELECT doc_id, p AS pos, p + 7 AS e
-               FROM g JOIN d USING (g)),
-         i AS (SELECT doc_id, pos, e,
-                 CASE WHEN pos > coalesce(max(e) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      -1) + 1
-                      THEN 1 ELSE 0 END AS nw
-               FROM h),
-         j AS (SELECT doc_id, pos, e,
-                 sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-               FROM i)
-         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-           CAST(max(e) AS BIGINT) AS span_end, count(*) AS n_windows
-         FROM j GROUP BY doc_id, isl""",
-    "t45_decontam_spans" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         g AS (
-           SELECT doc_id,
-             unnest([{'p': i,
-                      'g': substr(md5(array_to_string(toks[i:i+7], ' ')),
-                                  1, 16)}
-                     FOR i IN generate_series(1, len(toks)-7)],
-                    recursive := true)
-           FROM f),
-         d AS (SELECT DISTINCT g FROM g WHERE doc_id % 7 = 0),
-         h AS (SELECT doc_id, p AS pos, p + 7 AS e
-               FROM g JOIN d USING (g) WHERE doc_id % 7 <> 0),
-         i AS (SELECT doc_id, pos, e,
-                 CASE WHEN pos > coalesce(max(e) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      -1) + 1
-                      THEN 1 ELSE 0 END AS nw
-               FROM h),
-         j AS (SELECT doc_id, pos, e,
-                 sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-               FROM i)
-         SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-           CAST(max(e) AS BIGINT) AS span_end, count(*) AS n_windows
-         FROM j GROUP BY doc_id, isl""",
-    "t54_canonical_hash" ->
-      """SELECT doc_id,
-           md5(trim(regexp_replace(lower(nfc_normalize(text)),
-               '\s+', ' ', 'g'))) AS c_hash,
-           CAST(len(trim(regexp_replace(lower(nfc_normalize(text)),
-               '\s+', ' ', 'g'))) AS BIGINT) AS n_canon
-         FROM documents""",
-    "q42_range_frame" ->
-      """SELECT user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS tsec,
-           round(value, 6) AS v,
-           round(sum(value) OVER (PARTITION BY user_id
-             ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-             RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW), 6)
-             AS trail_1h
-         FROM events""",
-    "t53_bigram_logprob" ->
-      """WITH t AS (SELECT doc_id, string_split_regex(lower(text), '\s+')
-             AS toks FROM documents),
-         b AS (SELECT doc_id,
-             unnest([array_to_string(toks[i:i+1], ' ')
-                     FOR i IN generate_series(1, len(toks)-1)]) AS bg
-           FROM t WHERE len(toks) >= 2),
-         bgc AS (SELECT bg, count(*) AS cb FROM b GROUP BY bg),
-         u AS (SELECT unnest(toks) AS w FROM t),
-         ugc AS (SELECT w, count(*) AS cu FROM u GROUP BY w)
-         SELECT doc_id, count(*) AS n_bigrams,
-           round(avg(ln(cb::DOUBLE / cu::DOUBLE)), 6) + 0.0 AS avg_lp
-         FROM b JOIN bgc USING (bg)
-         JOIN ugc ON ugc.w = split_part(b.bg, ' ', 1)
-         GROUP BY doc_id""",
-    "t52_source_overlap" ->
-      """WITH t AS (
-           SELECT source, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT source, toks FROM t WHERE len(toks) >= 8),
-         g AS (SELECT DISTINCT source,
-             unnest([substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)
-                     FOR i IN generate_series(1, len(toks)-7)]) AS gh
-           FROM f)
-         SELECT a.source AS source_a, b.source AS source_b,
-           count(DISTINCT a.gh) AS n_shared_grams
-         FROM g a JOIN g b USING (gh)
-         WHERE a.source < b.source
-         GROUP BY 1, 2""",
-    // exact counts over ALL pairs (zero-overlap pairs included — the
-    // estimator emits every a<b pair) + the expectation that every
-    // ε bound HOLDS; the booleans are computed Spark-side against the
-    // exact matrix over the same rows
-    // t52b's snapped-value fold: in-band estimates emit the exact
-    // matrix values, so the oracle is the exact matrix over ALL
-    // source pairs (out-of-band estimates emit raw and hash-fail)
-    "t52b_source_overlap_est" ->
-      """WITH t AS (
-           SELECT source, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT source, toks FROM t WHERE len(toks) >= 8),
-         g AS (SELECT DISTINCT source,
-             unnest([substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)
-                     FOR i IN generate_series(1, len(toks)-7)]) AS gh
-           FROM f),
-         x AS (
-           SELECT a.source AS source_a, b.source AS source_b,
-             count(DISTINCT a.gh) AS nsh
-           FROM g a JOIN g b USING (gh)
-           WHERE a.source < b.source
-           GROUP BY 1, 2),
-         c AS (SELECT source, count(*) AS cg FROM g GROUP BY source),
-         p AS (
-           SELECT a.source AS source_a, b.source AS source_b
-           FROM c a, c b WHERE a.source < b.source)
-         SELECT p.source_a, p.source_b,
-           round(CAST(COALESCE(x.nsh, 0) AS DOUBLE) /
-             (ca.cg + cb.cg - COALESCE(x.nsh, 0)), 6) AS j_est,
-           CAST(COALESCE(x.nsh, 0) AS DOUBLE) AS est_shared_grams,
-           CAST(ca.cg + cb.cg - COALESCE(x.nsh, 0) AS DOUBLE)
-             AS est_union
-         FROM p
-         LEFT JOIN x
-           ON p.source_a = x.source_a AND p.source_b = x.source_b
-         JOIN c ca ON ca.source = p.source_a
-         JOIN c cb ON cb.source = p.source_b""",
-    "t52c_overlap_bounds" ->
-      """WITH t AS (
-           SELECT source, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT source, toks FROM t WHERE len(toks) >= 8),
-         g AS (SELECT DISTINCT source,
-             unnest([substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)
-                     FOR i IN generate_series(1, len(toks)-7)]) AS gh
-           FROM f),
-         x AS (
-           SELECT a.source AS source_a, b.source AS source_b,
-             count(DISTINCT a.gh) AS nsh
-           FROM g a JOIN g b USING (gh)
-           WHERE a.source < b.source
-           GROUP BY 1, 2),
-         s AS (SELECT DISTINCT source FROM g),
-         p AS (
-           SELECT a.source AS source_a, b.source AS source_b
-           FROM s a, s b WHERE a.source < b.source)
-         SELECT p.source_a, p.source_b,
-           CAST(COALESCE(x.nsh, 0) AS BIGINT) AS n_shared_grams,
-           true AS est_ok
-         FROM p LEFT JOIN x
-           ON p.source_a = x.source_a AND p.source_b = x.source_b""",
-    "t108_ngram_novelty" ->
-      raw"""WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         g AS (SELECT DISTINCT doc_id,
-             unnest([substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)
-                     FOR i IN generate_series(1, len(toks)-7)]) AS gh
-           FROM f),
-         d AS (SELECT gh, count(*) AS df FROM g GROUP BY gh)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_novel,
-           CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) * 1000000
-             // count(*) AS BIGINT) AS novel_ppm
-         FROM g JOIN d USING (gh)
-         GROUP BY doc_id""",
-    "t109_copy_flow" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-         lab AS (
-           SELECT d.doc_id,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id),
-         mem AS (
-           SELECT doc_id, cluster_id FROM lab
-           WHERE doc_id <> cluster_id)
-         SELECT oc.source AS origin_source, dc.source AS copy_source,
-           CAST(count(*) AS BIGINT) AS n_copies,
-           CAST(count(DISTINCT mem.cluster_id) AS BIGINT) AS n_clusters
-         FROM mem
-         JOIN documents dc ON dc.doc_id = mem.doc_id
-         JOIN documents oc ON oc.doc_id = mem.cluster_id
-         GROUP BY 1, 2""",
-    "t110_containment" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-         lab AS (
-           SELECT d.doc_id,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id),
-         gf AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         gg AS (SELECT DISTINCT doc_id,
-             unnest([substr(md5(array_to_string(toks[i:i+7], ' ')), 1, 16)
-                     FOR i IN generate_series(1, len(toks)-7)]) AS gh
-           FROM gf),
-         lg AS (
-           SELECT gg.doc_id, lab.cluster_id, gg.gh
-           FROM gg JOIN lab ON lab.doc_id = gg.doc_id),
-         rep AS (SELECT cluster_id, gh FROM lg WHERE doc_id = cluster_id)
-         SELECT m.doc_id, m.cluster_id,
-           CAST(count(*) AS BIGINT) AS n_grams,
-           CAST(sum(CASE WHEN r.gh IS NOT NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_shared,
-           CAST(sum(CASE WHEN r.gh IS NOT NULL THEN 1 ELSE 0 END)
-             * 1000000 // count(*) AS BIGINT) AS containment_ppm
-         FROM lg m LEFT JOIN rep r
-           ON r.cluster_id = m.cluster_id AND r.gh = m.gh
-         WHERE m.doc_id <> m.cluster_id
-         GROUP BY 1, 2""",
-    // Same recursive-CC label block as t109/t110; members then join
-    // 160-char text prefixes and levenshtein stratifies the layer.
-    "t112_edit_layers" ->
-      raw"""WITH RECURSIVE $minhashBandsSql,
-         pairs AS (
-           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           FROM bands a JOIN bands b
-             ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-         sym AS (
-           SELECT id_a AS src, id_b AS dst FROM pairs
-           UNION SELECT id_b, id_a FROM pairs),
-         reach(id, r) AS (
-           SELECT src, dst FROM sym
-           UNION
-           SELECT s.src, r.r FROM sym s JOIN reach r ON s.dst = r.id),
-         lab AS (
-           SELECT d.doc_id,
-             CASE WHEN m.rmin IS NULL OR d.doc_id < m.rmin
-                  THEN d.doc_id ELSE m.rmin END AS cluster_id
-           FROM documents d
-           LEFT JOIN (SELECT id, min(r) AS rmin FROM reach GROUP BY id) m
-             ON m.id = d.doc_id),
-         mem AS (
-           SELECT doc_id, cluster_id FROM lab
-           WHERE doc_id <> cluster_id),
-         px AS (
-           SELECT doc_id, substr(text, 1, 160) AS pt FROM documents),
-         ed AS (
-           SELECT m.doc_id, m.cluster_id,
-             levenshtein(a.pt, b.pt) AS lev,
-             greatest(length(a.pt), length(b.pt)) AS mx
-           FROM mem m
-           JOIN px a ON a.doc_id = m.doc_id
-           JOIN px b ON b.doc_id = m.cluster_id)
-         SELECT doc_id, cluster_id, CAST(lev AS BIGINT) AS lev,
-           CAST(lev * 1000000 // mx AS BIGINT) AS rel_ppm,
-           CASE WHEN lev = 0 THEN 'exact'
-                WHEN lev * 1000000 // mx <= 200000 THEN 'near'
-                ELSE 'template' END AS layer
-         FROM ed""",
-    // Integer milli-token arithmetic — identical closed form on both
-    // sides, so the hash compare is exact with zero rounding.
-    "t113_epoch_alloc" ->
-      raw"""WITH u AS (
-           SELECT source,
-             CAST(sum(len(string_split_regex(text, '\s+'))) AS BIGINT)
-               AS u_tokens
-           FROM documents GROUP BY 1),
-         t AS (SELECT CAST(sum(u_tokens) AS BIGINT) AS tot,
-                 CAST(count(*) AS BIGINT) AS ns FROM u),
-         a AS (
-           SELECT source, u_tokens, tot * 3 // ns AS alloc,
-             least(tot * 3 // ns, u_tokens * 4) AS serve
-           FROM u, t),
-         b AS (SELECT *, serve // u_tokens AS f, serve % u_tokens AS r
-               FROM a)
-         SELECT source, u_tokens, CAST(alloc AS BIGINT) AS alloc,
-           CAST(serve AS BIGINT) AS serve,
-           CAST(serve * 1000 // u_tokens AS BIGINT) AS epochs_milli,
-           CAST(u_tokens * (1000 * f - 100 * f * (f - 1))
-             + r * (1000 - 200 * f) AS BIGINT) AS eff_tok_milli
-         FROM b""",
-    // The MWU loop unrolled over the 4 slices — pure integer ppm
-    // arithmetic (floor division on positives only), bit-exact vs the
-    // Spark driver loop.
-    "t122_doremi_weights" ->
-      raw"""WITH f0 AS (
-           SELECT source, doc_id % 4 AS slice,
-             unnest(string_split_regex(lower(text), '\s+')) AS term
-           FROM documents),
-         f AS (SELECT source, slice, term,
-                 CAST(count(*) AS BIGINT) AS cnt
-               FROM f0 WHERE len(term) > 0 GROUP BY 1, 2, 3),
-         gl AS (SELECT term, CAST(sum(cnt) AS BIGINT) AS ng
-                FROM f GROUP BY 1),
-         gt AS (SELECT CAST(sum(cnt) AS BIGINT) AS ngt FROM f),
-         ow AS (SELECT source, term, CAST(sum(cnt) AS BIGINT) AS no_
-                FROM f GROUP BY 1, 2),
-         ot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS not_
-                FROM f GROUP BY 1),
-         cell AS (
-           SELECT f.source, f.slice,
-             greatest(CAST(
-               sum(f.cnt * (1000000 - (1000000 * gl.ng) // gt.ngt))
-                 // sum(f.cnt)
-               - sum(f.cnt * (1000000 - (1000000 * ow.no_) // ot.not_))
-                 // sum(f.cnt) AS BIGINT), 0) AS excess
-           FROM f JOIN gl USING (term)
-             JOIN ow ON ow.source = f.source AND ow.term = f.term
-             JOIN ot ON ot.source = f.source, gt
-           GROUP BY 1, 2),
-         dom AS (SELECT source FROM ot),
-         sl AS (SELECT unnest([0, 1, 2, 3]) AS slice),
-         c AS (SELECT d.source, s.slice,
-                 CAST(coalesce(cell.excess, 0) AS BIGINT) AS ex
-               FROM dom d CROSS JOIN sl s
-               LEFT JOIN cell ON cell.source = d.source
-                 AND cell.slice = s.slice),
-         w0 AS (SELECT source, CAST(1000000 AS BIGINT) AS w FROM dom),
-         u1 AS (SELECT w0.source, w0.w * (1000000 + c.ex // 2)
-                  // 1000000 AS w
-                FROM w0 JOIN c ON c.source = w0.source AND c.slice = 0),
-         w1 AS (SELECT source, w * 1000000 // (SELECT sum(w) FROM u1)
-                  AS w FROM u1),
-         u2 AS (SELECT w1.source, w1.w * (1000000 + c.ex // 2)
-                  // 1000000 AS w
-                FROM w1 JOIN c ON c.source = w1.source AND c.slice = 1),
-         w2 AS (SELECT source, w * 1000000 // (SELECT sum(w) FROM u2)
-                  AS w FROM u2),
-         u3 AS (SELECT w2.source, w2.w * (1000000 + c.ex // 2)
-                  // 1000000 AS w
-                FROM w2 JOIN c ON c.source = w2.source AND c.slice = 2),
-         w3 AS (SELECT source, w * 1000000 // (SELECT sum(w) FROM u3)
-                  AS w FROM u3),
-         u4 AS (SELECT w3.source, w3.w * (1000000 + c.ex // 2)
-                  // 1000000 AS w
-                FROM w3 JOIN c ON c.source = w3.source AND c.slice = 3),
-         w4 AS (SELECT source, w * 1000000 // (SELECT sum(w) FROM u4)
-                  AS w FROM u4),
-         exs AS (SELECT source, sum(ex) AS excess_micro FROM c
-                 GROUP BY 1)
-         SELECT d.source,
-           CAST(exs.excess_micro AS BIGINT) AS excess_micro,
-           CAST((w1.w + w2.w + w3.w + w4.w) // 4 AS BIGINT)
-             AS weight_ppm
-         FROM dom d
-           JOIN exs ON exs.source = d.source
-           JOIN w1 ON w1.source = d.source
-           JOIN w2 ON w2.source = d.source
-           JOIN w3 ON w3.source = d.source
-           JOIN w4 ON w4.source = d.source""",
-    // The identical 4×1024 CMS counter table rebuilt relationally —
-    // salted-md5 bucket hash matches Spark's conv(substr(md5,1,9))
-    // bit for bit, so every point estimate hash-gates exactly.
-    "t123_cms_counts" ->
-      raw"""WITH tf AS (
-           SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM (
-             SELECT unnest(string_split_regex(lower(text), '\s+'))
-               AS term FROM documents)
-           WHERE len(term) > 0 GROUP BY 1),
-         b AS (
-           SELECT term, cnt, r,
-             CAST(CAST(('0x' || substr(md5(r::VARCHAR || '|' || term),
-               1, 9)) AS UBIGINT) % 1024 AS BIGINT) AS bucket
-           FROM tf, (SELECT unnest([0, 1, 2, 3]) AS r)),
-         counters AS (
-           SELECT r, bucket, CAST(sum(cnt) AS BIGINT) AS c
-           FROM b GROUP BY 1, 2),
-         probes AS (
-           SELECT term, cnt AS exact_cnt FROM tf
-           ORDER BY cnt DESC, term LIMIT 20),
-         pb AS (
-           SELECT p.term, p.exact_cnt, r,
-             CAST(CAST(('0x' || substr(md5(r::VARCHAR || '|' || p.term),
-               1, 9)) AS UBIGINT) % 1024 AS BIGINT) AS bucket
-           FROM probes p, (SELECT unnest([0, 1, 2, 3]) AS r))
-         SELECT pb.term,
-           CAST(min(pb.exact_cnt) AS BIGINT) AS exact_cnt,
-           CAST(min(counters.c) AS BIGINT) AS est_cnt,
-           CAST(min(counters.c) - min(pb.exact_cnt) AS BIGINT)
-             AS overcount
-         FROM pb JOIN counters
-           ON counters.r = pb.r AND counters.bucket = pb.bucket
-         GROUP BY 1""",
-    // The per-shard totals recomputed straight from parquet — the
-    // Spark side must round-trip them through its own TFRecord binary
-    // write + CRC-checked read-back to match.
-    "t124_tfrecord_export" ->
-      raw"""WITH t AS (
-           SELECT doc_id,
-             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS shard,
-             list_transform(
-               list_filter(string_split_regex(lower(text), '\s+'),
-                 t -> len(t) > 0),
-               t -> CAST(('0x' || substr(md5(t), 1, 9)) AS UBIGINT)
-                 ::BIGINT % 32768) AS ids
-           FROM documents)
-         SELECT shard,
-           CAST(count(*) AS BIGINT) AS n_records,
-           CAST(sum(doc_id) AS BIGINT) AS docid_sum,
-           CAST(sum(coalesce(list_sum(ids), 0)) AS BIGINT) AS id_sum,
-           CAST(sum(len(ids)) AS BIGINT) AS token_total,
-           CAST(0 AS BIGINT) AS crc_fail
-         FROM t GROUP BY 1""",
-    // Adjacency via lead() over the same (key, doc_id) order that
-    // defines t67's pos; integer two-step expectation, no float.
-    "t125_shuffle_audit" ->
-      """WITH o AS (
-           SELECT doc_id, source,
-             md5('shuf42:' || doc_id) AS key,
-             substr(md5('shuf42:' || doc_id), 1, 2) AS shard
-           FROM documents),
-         adj AS (
-           SELECT source, lead(source) OVER (PARTITION BY shard
-             ORDER BY key, doc_id) AS nxt
-           FROM o),
-         p AS (
-           SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(CASE WHEN source = nxt THEN 1 ELSE 0 END)
-               AS BIGINT) AS same_pairs
-           FROM adj WHERE nxt IS NOT NULL),
-         c AS (
-           SELECT CAST(sum(ns * (ns - 1)) AS BIGINT) AS num,
-             CAST(sum(ns) AS BIGINT) AS n
-           FROM (SELECT CAST(count(*) AS BIGINT) AS ns
-                 FROM documents GROUP BY source))
-         SELECT n_pairs, same_pairs,
-           same_pairs * 1000000 // greatest(n_pairs, 1) AS same_ppm,
-           (num // n) * 1000000 // greatest(n - 1, 1) AS expected_ppm
-         FROM p, c""",
-    // Tiered twin: exact distinct at/under the 10k cap, the a2 KMV
-    // rebuild above it (256 smallest md5 values — deterministic, so
-    // the sketch tier hash-gates too).
-    "t126_ngram_diversity" ->
-      raw"""WITH t AS (
-           SELECT source, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         g AS (
-           SELECT source, n,
-             unnest(CASE WHEN len(toks) >= n
-               THEN [array_to_string(toks[i:i+n-1], ' ')
-                     FOR i IN generate_series(1, len(toks) - n + 1)]
-               ELSE [] END) AS gram
-           FROM t, (SELECT unnest([1, 2, 3]) AS n)),
-         tot AS (
-           SELECT source, n, CAST(count(*) AS BIGINT) AS total_ngrams
-           FROM g GROUP BY 1, 2),
-         ex AS (
-           SELECT source, n, CAST(count(DISTINCT gram) AS BIGINT) AS ed
-           FROM g GROUP BY 1, 2),
-         u AS (SELECT DISTINCT source, n, md5(gram) AS h FROM g),
-         bk AS (
-           SELECT source, n, list_sort(list(h))[1:256] AS bh
-           FROM u GROUP BY 1, 2),
-         r AS (
-           SELECT tot.source, CAST(tot.n AS BIGINT) AS n,
-             tot.total_ngrams,
-             tot.total_ngrams > 10000 AS sketched,
-             CAST(CASE WHEN tot.total_ngrams <= 10000 THEN ex.ed
-                  WHEN len(bh) < 256 THEN len(bh)
-                  ELSE round(CAST(255 AS DOUBLE)
-                    * CAST(4503599627370496 AS DOUBLE)
-                    / CAST(('0x' || substr(bh[256], 1, 13)) AS UBIGINT)
-                      ::DOUBLE)
-                  END AS BIGINT) AS distinct_ngrams
-           FROM tot JOIN ex USING (source, n) JOIN bk USING (source, n))
-         SELECT source, n, total_ngrams, sketched, distinct_ngrams,
-           distinct_ngrams * 1000000 // total_ngrams AS ttr_ppm
-         FROM r""",
-    // Exact distinct — the Spark side must land inside HLL++'s band
-    // (and snap) for every (source, n) row or the hash fails loudly.
-    "t126b_ttr_sketch" ->
-      raw"""WITH t AS (
-           SELECT source, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         g AS (
-           SELECT source, n,
-             unnest(CASE WHEN len(toks) >= n
-               THEN [array_to_string(toks[i:i+n-1], ' ')
-                     FOR i IN generate_series(1, len(toks) - n + 1)]
-               ELSE [] END) AS gram
-           FROM t, (SELECT unnest([1, 2, 3]) AS n))
-         SELECT source, CAST(n AS BIGINT) AS n,
-           CAST(count(*) AS BIGINT) AS total_ngrams,
-           CAST(count(DISTINCT gram) AS BIGINT) AS distinct_est
-         FROM g GROUP BY 1, 2""",
-    // The three gate twins (t46's gm predicate, t81's sc score, t16's
-    // 3-gram metric as integer ppm) joined per doc, pairs unpivoted.
-    "t127_gate_agreement" ->
-      raw"""WITH $gateFlagsSql,
-         pairs AS (
-           SELECT source, 'gopher_clf' AS pair, g AS a, c AS b
-           FROM gates
-           UNION ALL
-           SELECT source, 'gopher_rep', g, r FROM gates
-           UNION ALL
-           SELECT source, 'clf_rep', c, r FROM gates)
-         SELECT source, pair,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CAST(a AS BIGINT)) AS BIGINT) AS pass_a,
-           CAST(sum(CAST(b AS BIGINT)) AS BIGINT) AS pass_b,
-           CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_agree,
-           CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT)
-             * 1000000 // count(*) AS agree_ppm
-         FROM pairs GROUP BY 1, 2""",
-    "t128_gate_cube" ->
-      raw"""WITH $gateFlagsSql
-         SELECT source,
-           CAST(g AS BIGINT) AS pass_gopher,
-           CAST(c AS BIGINT) AS pass_clf,
-           CAST(r AS BIGINT) AS pass_rep,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS n_tokens
-         FROM gates GROUP BY 1, 2, 3, 4""",
-    // pack_pos via the plain per-cell window the two-level scan must
-    // match; dist reuses the q36 assignment CTEs (fold-order parity).
-    "t129_pack_order" ->
-      s"""$ivfAssignSql,
-         ad AS (
-           SELECT d.vec_id, d.cid, d.dist
-           FROM d JOIN a ON a.vec_id = d.vec_id AND a.cid = d.cid),
-         r AS (
-           SELECT vec_id, cid,
-             CAST(row_number() OVER (PARTITION BY cid
-               ORDER BY dist, vec_id) AS BIGINT) AS pos_in_cell
-           FROM ad),
-         o AS (
-           SELECT cid, CAST(coalesce(sum(cnt) OVER (ORDER BY cid
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS BIGINT) AS off
-           FROM (SELECT cid, count(*) AS cnt FROM ad GROUP BY cid))
-         SELECT r.vec_id, r.cid, r.pos_in_cell,
-           r.pos_in_cell + o.off AS pack_pos
-         FROM r JOIN o USING (cid)""",
-    // Both orderings as plain global windows; the two-level prefix
-    // sums must be indistinguishable from them.
-    "t130_order_coherence" ->
-      raw"""$ivfAssignSql,
-         nt AS (
-           SELECT doc_id AS vec_id,
-             CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
-               AS n_tok
-           FROM documents),
-         ad AS (
-           SELECT d.vec_id, d.cid, d.dist, nt.n_tok
-           FROM d JOIN a ON a.vec_id = d.vec_id AND a.cid = d.cid
-             JOIN nt ON nt.vec_id = d.vec_id),
-         sa AS (
-           SELECT cid, coalesce(sum(n_tok) OVER (
-               ORDER BY md5('shuf42:' || vec_id), vec_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS start
-           FROM ad),
-         pa AS (
-           SELECT cid, coalesce(sum(n_tok) OVER (
-               ORDER BY cid, dist, vec_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS start
-           FROM ad),
-         u AS (
-           SELECT 'shuffle' AS ordering, start // 2048 AS win, cid
-           FROM sa
-           UNION ALL
-           SELECT 'pack', start // 2048, cid FROM pa)
-         SELECT ordering,
-           CAST(count(DISTINCT win) AS BIGINT) AS n_windows,
-           CAST(count(DISTINCT win * 1000000 + cid) AS BIGINT)
-             AS cell_windows,
-           CAST(count(DISTINCT win * 1000000 + cid) AS BIGINT)
-             * 1000000 // count(DISTINCT win) AS cells_per_window_ppm
-         FROM u GROUP BY 1""",
-    // t73's training + vocab CTEs feed per-doc BPE counts; the fence
-    // is median + 3×MAD per source (DuckDB median interpolates at
-    // 0.5 exactly like Spark's percentile(v, 0.5, freq), and every
-    // compared quantity is an integer-valued double — see the Spark
-    // side's comment).
-    "t114_compression_gate" ->
-      raw"""WITH w0 AS (
-           SELECT tok AS w, CAST(count(*) AS BIGINT) AS cnt
-           FROM (SELECT unnest(string_split_regex(lower(text), '\s+'))
-                   AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 GROUP BY 1),
-         st0 AS (
-           SELECT w, cnt,
-             $bpeSep || array_to_string(string_split(w, ''),
-               $bpeSepSep) || $bpeSep AS s
-           FROM w0),
-         ${bpeTrainIterSql(8)},
-         vocab AS (
-           SELECT w,
-             CAST(len(string_split(substr(s, 2, length(s) - 2),
-               $bpeSepSep)) AS BIGINT) AS n_sym
-           FROM st8),
-         doc AS (
-           SELECT doc_id, source, n_chars, tok AS w
-           FROM (SELECT doc_id, source, n_chars,
-                   unnest(string_split_regex(lower(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0),
-         pd AS (
-           SELECT doc_id, source, n_chars,
-             CAST(sum(n_sym) AS BIGINT) AS n_bpe
-           FROM doc JOIN vocab USING (w)
-           GROUP BY 1, 2, 3),
-         pc AS (SELECT *, n_bpe * 1000000 // n_chars AS cr_ppm FROM pd),
-         md AS (SELECT source, median(cr_ppm) AS med FROM pc GROUP BY 1),
-         dv AS (
-           SELECT pc.*, CAST(abs(4 * cr_ppm - CAST(4 * med AS BIGINT))
-             AS BIGINT) AS dev4
-           FROM pc JOIN md USING (source)),
-         m2 AS (SELECT source, median(dev4) AS mad4 FROM dv GROUP BY 1)
-         SELECT doc_id, source, n_bpe, CAST(cr_ppm AS BIGINT) AS cr_ppm,
-           CAST(CASE WHEN dev4 > 3 * mad4 THEN 1 ELSE 0 END AS BIGINT)
-             AS outlier
-         FROM dv JOIN m2 USING (source)""",
-    // The 8-step GD loop UNROLLED (t71's bpeTrainIterSql discipline):
-    // t81's feature CTEs (t/f/h via hashClfSql; its m/sc go unused),
-    // logregBaseSql for the teacher label + feature table, then one
-    // generated round (z/e/w/b CTEs) per step with the decayed-rate
-    // literals baked in. `//` truncates toward zero in DuckDB
-    // exactly like Spark DIV and Java / — probed on negative
-    // operands, which gradients produce.
-    "t115_logreg_distill" ->
-      raw"""WITH $hashClfSql,
-         $logregBaseSql,
-         ${logregStepSql(8)}
-         SELECT b, CAST(w AS BIGINT) AS w_micro FROM w8
-         UNION ALL
-         SELECT '__bias' AS b, CAST(bias AS BIGINT) AS w_micro
-         FROM b8""",
-    // t115's unrolled training CTEs, then one scoring pass with the
-    // final weights and the per-source confusion rollup.
-    "t116_distill_audit" ->
-      raw"""WITH $hashClfSql,
-         $logregBaseSql,
-         ${logregStepSql(8)},
-         zf AS (SELECT x.doc_id, (sum(w * x) // 1000000) + bias AS z
-                FROM x JOIN w8 USING (b), b8 GROUP BY x.doc_id, bias),
-         sf AS (SELECT doc_id,
-                  500000 + (z * 500000 // (1000000 + abs(z))) AS sp
-                FROM zf),
-         j AS (SELECT d.source, l.y,
-                 CASE WHEN sp > 500000 THEN 1 ELSE 0 END AS st
-               FROM sf JOIN lbl l USING (doc_id)
-               JOIN documents d USING (doc_id))
-         SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(y) AS BIGINT) AS teacher_pos,
-           CAST(sum(st) AS BIGINT) AS student_pos,
-           CAST(sum(y * st) AS BIGINT) AS both_pos,
-           CAST(sum(CASE WHEN y = st THEN 1 ELSE 0 END) * 1000000
-             // count(*) AS BIGINT) AS agree_ppm
-         FROM j GROUP BY 1""",
-    // t116's scoring CTEs, then the share/reweight arithmetic over
-    // the per-source rollup.
-    "t117_gate_mix_shift" ->
-      raw"""WITH $hashClfSql,
-         $logregBaseSql,
-         ${logregStepSql(8)},
-         zf AS (SELECT x.doc_id, (sum(w * x) // 1000000) + bias AS z
-                FROM x JOIN w8 USING (b), b8 GROUP BY x.doc_id, bias),
-         sf AS (SELECT doc_id,
-                  500000 + (z * 500000 // (1000000 + abs(z))) AS sp
-                FROM zf),
-         j2 AS (SELECT d.source,
-                 CASE WHEN sp > 500000 THEN 1 ELSE 0 END AS st
-               FROM sf JOIN documents d USING (doc_id)),
-         per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(st) AS BIGINT) AS n_kept
-                 FROM j2 GROUP BY 1),
-         tt AS (SELECT CAST(sum(n_docs) AS BIGINT) AS tn,
-                  CAST(sum(n_kept) AS BIGINT) AS tk FROM per)
-         SELECT source, n_docs, n_kept,
-           CAST(n_docs * 1000000 // tn AS BIGINT) AS orig_share_ppm,
-           CAST(CASE WHEN tk > 0 THEN n_kept * 1000000 // tk END
-             AS BIGINT) AS kept_share_ppm,
-           CAST(CASE WHEN n_kept > 0
-                THEN (n_docs * 1000000 // tn) * 1000
-                  // (n_kept * 1000000 // tk) END AS BIGINT)
-             AS reweight_milli
-         FROM per, tt""",
-    "t121_shard_manifest" ->
-      """WITH d AS (
-           SELECT doc_id, md5('shuf42:' || doc_id) AS key,
-             CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
-               AS n_tok,
-             CAST(('0x' || substr(md5(text), 1, 9)) AS UBIGINT) AS ch
-           FROM documents)
-         SELECT substr(key, 1, 2) AS shard,
-           count(*) AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-           CAST(sum(ch) AS BIGINT) AS content_sum,
-           min(key) AS key_min,
-           max(key) AS key_max
-         FROM d GROUP BY 1""",
-    "t119_curriculum_order" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
-               AS n_tok,
-             md5('cur42:' || doc_id) AS key
-           FROM documents),
-         b AS (SELECT doc_id, n_tok, n_tok // 32 AS band, key FROM d),
-         bt AS (SELECT band, count(*) AS n FROM b GROUP BY band),
-         ct AS (SELECT band,
-             sum(n) OVER (ORDER BY band ROWS BETWEEN UNBOUNDED
-               PRECEDING AND CURRENT ROW) AS cum
-           FROM bt),
-         tt AS (SELECT sum(n) AS tot FROM bt)
-         SELECT doc_id, n_tok, CAST(band AS BIGINT) AS band,
-           CAST(row_number() OVER (PARTITION BY band
-             ORDER BY key, doc_id) AS BIGINT) AS pos_in_band,
-           CAST((100 * cum + tot - 1) // tot AS BIGINT) AS unlock_step
-         FROM b JOIN ct USING (band), tt""",
-    // t118: the round-trip is the identity on clean lines; corrupt
-    // lines (doc_id % 13 = 0, mangled unparseable-from-byte-0) emit
-    // one all-null row with the flag — the oracle needs no JSON at
-    // all, which is the point of gating the PARSED surface
-    "t118_jsonl_roundtrip" ->
-      """SELECT
-           CASE WHEN doc_id % 13 = 0 THEN NULL ELSE doc_id END
-             AS doc_id,
-           CASE WHEN doc_id % 13 = 0 THEN NULL ELSE text END AS text,
-           CASE WHEN doc_id % 13 = 0 THEN NULL ELSE lang END AS lang,
-           CASE WHEN doc_id % 13 = 0 THEN NULL ELSE n_chars END
-             AS n_chars,
-           doc_id % 13 = 0 AS corrupt
-         FROM documents""",
-    "t51_eval_exposure" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         g AS (
-           SELECT doc_id,
-             unnest([{'p': i,
-                      'g': substr(md5(array_to_string(toks[i:i+7], ' ')),
-                                  1, 16)}
-                     FOR i IN generate_series(1, len(toks)-7)],
-                    recursive := true)
-           FROM f),
-         ev AS (SELECT doc_id AS eval_id, g FROM g WHERE doc_id % 7 = 0),
-         tr AS (SELECT DISTINCT doc_id AS train_id, g
-                FROM g WHERE doc_id % 7 <> 0)
-         SELECT eval_id,
-           count(DISTINCT train_id) AS n_train_docs,
-           count(DISTINCT ev.g) AS n_shared_grams
-         FROM ev JOIN tr USING (g)
-         GROUP BY eval_id""",
-    "t50_embed_whiten" ->
-      """WITH u AS (SELECT vec_id, unnest(embedding) AS v,
-             generate_subscripts(embedding, 1) AS i FROM embeddings),
-         st AS (SELECT i, avg(v::DOUBLE) AS mu, stddev_pop(v::DOUBLE) AS sd
-                FROM u GROUP BY i)
-         SELECT vec_id, CAST(u.i - 1 AS BIGINT) AS dim,
-           round((u.v::DOUBLE - mu) / sd, 6) + 0.0 AS z
-         FROM u JOIN st USING (i) WHERE sd > 0""",
-    "t49_incremental_ingest" ->
-      """WITH t AS (SELECT doc_id, source, text,
-             string_split_regex(text, '\s+') AS toks FROM documents),
-         sh AS (SELECT doc_id, source,
-             [array_to_string(toks[i:i+2], ' ')
-              FOR i IN generate_series(1, len(toks)-2)] AS s
-           FROM t WHERE len(toks) >= 3),
-         mh AS (SELECT doc_id, source,
-             [list_min([md5(k::VARCHAR || '|' || x) FOR x IN s])
-              FOR k IN generate_series(1, 8)] AS sig
-           FROM sh),
-         bands AS (SELECT doc_id, source, b,
-             md5(sig[2*b-1] || sig[2*b]) AS bh
-           FROM mh, unnest(generate_series(1, 4)) AS u(b)),
-         near AS (SELECT DISTINCT d.doc_id
-           FROM bands d JOIN bands e ON d.b = e.b AND d.bh = e.bh
-           WHERE d.source = 'src0' AND e.source <> 'src0'),
-         exact AS (SELECT DISTINCT d.doc_id
-           FROM t d JOIN t e ON md5(d.text) = md5(e.text)
-           WHERE d.source = 'src0' AND e.source <> 'src0')
-         SELECT t.doc_id,
-           CAST(x.doc_id IS NOT NULL AS BIGINT) AS dup_exact,
-           CAST(nr.doc_id IS NOT NULL AS BIGINT) AS dup_near,
-           CAST(x.doc_id IS NULL AND nr.doc_id IS NULL AS BIGINT) AS keep
-         FROM t LEFT JOIN exact x ON x.doc_id = t.doc_id
-         LEFT JOIN near nr ON nr.doc_id = t.doc_id
-         WHERE t.source = 'src0'""",
-    "t48_embed_covariance" ->
-      """WITH e AS (
-           SELECT vec_id, unnest(embedding) AS v,
-                  generate_subscripts(embedding, 1) AS i
-           FROM embeddings)
-         SELECT CAST(a.i - 1 AS BIGINT) AS i, CAST(b.i - 1 AS BIGINT) AS j,
-           round(avg(a.v::DOUBLE * b.v::DOUBLE)
-                 - avg(a.v::DOUBLE) * avg(b.v::DOUBLE), 6) + 0.0 AS cov
-         FROM e a JOIN e b USING (vec_id)
-         GROUP BY 1, 2""",
-    "t47_span_redact" ->
-      """WITH t AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS toks
-           FROM documents),
-         f AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 8),
-         g AS (
-           SELECT doc_id,
-             unnest([{'p': i,
-                      'g': substr(md5(array_to_string(toks[i:i+7], ' ')),
-                                  1, 16)}
-                     FOR i IN generate_series(1, len(toks)-7)],
-                    recursive := true)
-           FROM f),
-         d AS (SELECT DISTINCT g FROM g WHERE doc_id % 7 = 0),
-         h AS (SELECT doc_id, p AS pos, p + 7 AS e
-               FROM g JOIN d USING (g) WHERE doc_id % 7 <> 0),
-         i AS (SELECT doc_id, pos, e,
-                 CASE WHEN pos > coalesce(max(e) OVER (
-                        PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      -1) + 1
-                      THEN 1 ELSE 0 END AS nw
-               FROM h),
-         j AS (SELECT doc_id, pos, e,
-                 sum(nw) OVER (PARTITION BY doc_id ORDER BY pos
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-               FROM i),
-         sp AS (SELECT doc_id, min(pos) AS s, max(e) AS e
-                FROM j GROUP BY doc_id, isl),
-         r AS (SELECT doc_id, list({'s': s, 'e': e}) AS spans
-               FROM sp GROUP BY doc_id),
-         base AS (SELECT t.doc_id, t.toks, coalesce(r.spans, []) AS spans
-                  FROM t LEFT JOIN r USING (doc_id)
-                  WHERE t.doc_id % 7 <> 0),
-         k AS (SELECT doc_id,
-                 list_filter(toks, (x, ix) ->
-                   len(list_filter(spans,
-                     s -> ix >= s.s AND ix <= s.e)) = 0) AS kept
-               FROM base)
-         SELECT doc_id, CAST(len(kept) AS BIGINT) AS n_kept,
-           md5(coalesce(array_to_string(kept, ' '), '')) AS redacted_md5
-         FROM k""",
-    "t46_gopher_rules" ->
-      raw"""WITH t AS (
-           SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks
-           FROM documents),
-         $gopherMetricSql
-         SELECT doc_id, CAST(nw AS BIGINT) AS n_words,
-           round(ml, 6) AS mean_word_len, round(af, 6) AS alpha_frac,
-           CAST(ns AS BIGINT) AS n_stop,
-           CAST($gopherPassSql AS BIGINT) AS pass
-         FROM gm""",
-    // The whole release chain, one statement: `releaseChainSql`
-    // (stage twins composed verbatim, scope-isolated) + the trained
-    // unigram tokenizer (t132's EM unrolled) — the exported
-    // `input_ids` are REAL vocab ids, so this gate covers the
-    // tokenizer → export seam end to end. `ids` adds the per-doc
-    // content checksum; per-doc id/piece sums come from the chain's
-    // `tsum` (multiset equality — sums and counts — is exactly what
-    // the decoded-shard aggregates compare).
-    "t131_release_pipeline" ->
-      raw"""WITH $unigramTrainSql,
-         ${unigramViterbiSql(4)},
-         $releaseChainSql,
-         ids AS (
-           SELECT po.*,
-             coalesce(ts.id_sum_doc, 0) AS id_sum_doc,
-             coalesce(ts.np_doc, 0) AS np_doc,
-             -- coalesce: a FULLY-REDACTED doc has kept = [] and
-             -- DuckDB's array_to_string([]) is NULL where Spark's
-             -- concat_ws is '' (t47's twin does the same; first seen
-             -- at 10x, where full-coverage spans survive the budget)
-             CAST(('0x' || substr(md5(coalesce(
-               array_to_string(kept, ' '), '')), 1, 9))
-               AS UBIGINT)::BIGINT AS ch
-           FROM po LEFT JOIN tsum ts USING (doc_id))
-         SELECT shard,
-           CAST(count(*) AS BIGINT) AS n_records,
-           CAST(sum(doc_id) AS BIGINT) AS docid_sum,
-           CAST(sum(id_sum_doc) AS BIGINT) AS id_sum,
-           CAST(sum(np_doc) AS BIGINT) AS token_total,
-           CAST(sum(pos * (doc_id % 997)) AS BIGINT) AS order_sum,
-           CAST(0 AS BIGINT) AS crc_fail,
-           CAST(0 AS BIGINT) AS quarantined,
-           CAST(sum(tok) AS BIGINT) AS n_tokens,
-           CAST(sum(ch) AS BIGINT) AS content_sum,
-           min(key) AS key_min,
-           max(key) AS key_max
-         FROM ids GROUP BY 1""",
-    // Consumer twin: the expected per-shard decode recomputed from
-    // the corpus through the full chain; the match flags are literal
-    // true / crc_fail literal 0 — Spark's values come from the REAL
-    // artifact read, so any torn/truncated/flipped shard hash-fails.
-    // n_tokens/content_sum are recomputed from the CORPUS here while
-    // Spark emits the shipped manifest's values: a manifest lying
-    // about either (the half the r16 consumer didn't check) now
-    // hash-fails too.
-    "t139_release_consume" ->
-      raw"""WITH $unigramTrainSql,
-         ${unigramViterbiSql(4)},
-         $releaseChainSql,
-         ids AS (
-           SELECT po.*,
-             coalesce(ts.id_sum_doc, 0) AS id_sum_doc,
-             coalesce(ts.np_doc, 0) AS np_doc,
-             CAST(('0x' || substr(md5(coalesce(
-               array_to_string(kept, ' '), '')), 1, 9))
-               AS UBIGINT)::BIGINT AS ch
-           FROM po LEFT JOIN tsum ts USING (doc_id))
-         SELECT shard,
-           CAST(count(*) AS BIGINT) AS n_records,
-           CAST(sum(doc_id) AS BIGINT) AS docid_sum,
-           CAST(sum(id_sum_doc) AS BIGINT) AS id_sum,
-           CAST(sum(np_doc) AS BIGINT) AS pieces_total,
-           CAST(0 AS BIGINT) AS crc_fail,
-           true AS records_match,
-           true AS pieces_match,
-           true AS ids_match,
-           true AS keys_match,
-           CAST(sum(tok) AS BIGINT) AS n_tokens,
-           CAST(sum(ch) AS BIGINT) AS content_sum
-         FROM ids GROUP BY 1""",
-    // Data card: scalar aggregates over the SAME chain CTEs.
-    "t135_release_card" ->
-      raw"""WITH $unigramTrainSql,
-         ${unigramViterbiSql(4)},
-         $releaseChainSql,
-         rel AS (
-           SELECT CAST(count(*) AS BIGINT) AS docs_released,
-             CAST(coalesce(sum(tok), 0) AS BIGINT) AS tokens_released,
-             CAST(count(DISTINCT shard) AS BIGINT) AS n_shards
-           FROM po),
-         pcs AS (
-           SELECT CAST(coalesce(sum(np_doc), 0) AS BIGINT)
-             AS pieces_released
-           FROM tsum JOIN po USING (doc_id)),
-         wrd AS (
-           SELECT CAST(count(*) AS BIGINT) AS words_released,
-             CAST(count(DISTINCT w) AS BIGINT) AS distinct_tokens
-           FROM tokx)
-         SELECT
-           (SELECT CAST(count(*) AS BIGINT) FROM documents)
-             AS docs_ingested,
-           (SELECT CAST(count(*) AS BIGINT) FROM gp) AS docs_gate_pass,
-           (SELECT CAST(count(*) AS BIGINT) FROM kb) AS docs_kept_best,
-           rel.docs_released, rel.tokens_released,
-           pcs.pieces_released, wrd.words_released, rel.n_shards,
-           wrd.distinct_tokens,
-           (SELECT CAST(count(*) AS BIGINT) FROM gp)
-             - (SELECT CAST(count(*) AS BIGINT) FROM kb)
-             AS dups_collapsed,
-           pcs.pieces_released * 1000000
-             // greatest(wrd.words_released, 1) AS fertility_ppm,
-           wrd.distinct_tokens * 1000000
-             // greatest(wrd.words_released, 1) AS ttr_ppm,
-           (SELECT CAST(count(*) AS BIGINT) FROM ut3) AS vocab_size,
-           CAST(0 AS BIGINT) AS quarantined
-         FROM rel CROSS JOIN pcs CROSS JOIN wrd""",
-    "t132_unigram_train" ->
-      s"""WITH $unigramTrainSql
-         SELECT p AS piece, CAST(c AS BIGINT) AS cnt, cost FROM ut3""",
-    "t133_unigram_encode" ->
-      raw"""WITH $unigramTrainSql,
-         ${unigramViterbiSql(4)},
-         wst AS (
-           SELECT w, CAST(len(ps) AS BIGINT) AS np,
-             CAST(coalesce(list_sum(list_transform(ps,
-               pp -> CAST(('0x' || substr(md5(pp), 1, 9)) AS UBIGINT)
-                 ::BIGINT % 32768)), 0) AS BIGINT) AS psum
-           FROM ub4_16),
-         dt AS (
-           SELECT doc_id, tok AS w
-           FROM (SELECT doc_id,
-                   unnest(string_split_regex(lower(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 AND len(tok) <= 16)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(np) AS BIGINT) AS n_pieces,
-           CAST(sum(psum) AS BIGINT) AS piece_sum
-         FROM dt JOIN wst USING (w) GROUP BY 1""",
-    "t134_unigram_fertility" ->
-      raw"""WITH $unigramTrainSql,
-         ${unigramViterbiSql(4)},
-         wst AS (
-           SELECT w, CAST(len(ps) AS BIGINT) AS np FROM ub4_16),
-         dt AS (
-           SELECT source, tok AS w
-           FROM (SELECT source,
-                   unnest(string_split_regex(lower(text), '\s+')) AS tok
-                 FROM documents)
-           WHERE len(tok) > 0 AND len(tok) <= 16)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(np) AS BIGINT) AS n_pieces,
-           CAST(sum(np) AS BIGINT) * 1000000 // CAST(count(*) AS BIGINT)
-             AS pieces_per_word_ppm
-         FROM dt JOIN wst USING (w) GROUP BY 1""",
-  )
 }

@@ -49,7 +49,7 @@ object UnigramExpressions {
     // pass the trained table sorted by UTF-8 byte order, so ids are
     // the sorted-piece ranks — the same `row_number() OVER (ORDER BY
     // p)-1` the DuckDB twin assigns under binary collation, for ALL
-    // inputs (the trainer sorts with SparkEntry.utf8Order).
+    // inputs (the trainer sorts with queries.Shared.utf8Order).
     @transient private lazy val pieceId: java.util.HashMap[String, java.lang.Long] = {
       val m = new java.util.HashMap[String, java.lang.Long](pieces.size * 2)
       pieces.zipWithIndex.foreach { case ((p, _), i) =>

@@ -77,15 +77,15 @@ object Dedup {
     * a stale scheme. Output: (idCol, __b, __h).
     *
     * `preGated = true` declares the caller ALREADY excludes
-    * empty/null-shingle rows (e.g. a cheap token-count filter before
-    * the shingle projection, or a materialized gated frame), skipping
-    * the internal size gate. The gate is value-critical when rows can
-    * be empty — signatures of empty sets would band every empty doc
-    * together — but when `shinglesCol` is a LIVE projection, predicate
-    * pushdown inlines the shingle kernel into the gate's Filter and
-    * re-evaluates it per row (measured in the r20 plans: +1 kernel
-    * eval/scan on t2/t35/t85/t31/t58/t20), so pre-gated callers must
-    * be able to opt out. */
+    * empty/null-shingle rows (e.g. `gatedShingles`, or a materialized
+    * gated frame), skipping the internal size gate. The gate is
+    * value-critical when rows can be empty — signatures of empty sets
+    * would band every empty doc together — but when `shinglesCol` is
+    * a LIVE projection, predicate pushdown inlines the shingle kernel
+    * into the gate's Filter and re-evaluates it per row (measured in
+    * the r20 plans: +1 kernel eval/scan on t2/t35/t85/t31/t58/t20),
+    * so pre-gated callers must be able to opt out (`gatedShingles`
+    * gates on the token count instead). */
   private def bandedKeys(df: DataFrame, idCol: String,
                          shinglesCol: String, k: Int,
                          bands: Int,
@@ -436,4 +436,20 @@ object Dedup {
           (a, i) => a + when(h.substr(i, lit(1)).between("8", "f"), 1)
             .otherwise(-1))),
       v => when(v > 0, "1").otherwise("0")))
+
+  /** (`doc_id`, word `n`-shingles of `text` as `shinglesCol`) for the
+    * documents with at least `n` tokens — exactly those whose shingle
+    * set is non-empty (WordShinglesExpr: empty iff fewer than `n`
+    * tokens, null iff tokens null), so the result may go to the LSH
+    * surfaces with `preGated = true`. The gate and the shingle width
+    * come from the one `n`. It filters on the cheap token count: a
+    * `size(shingles) > 0` gate over the live projection lets pushdown
+    * inline the shingle kernel into the filter, one more kernel
+    * evaluation per scan (measured in the r20 plans). */
+  def gatedShingles(df: DataFrame, n: Int, shinglesCol: String): DataFrame = {
+    val tokens = TextOps.tokens(col("text"))
+    df.where(size(tokens) >= n)
+      .select(col("doc_id"), graft.functions.SketchExpressions
+        .wordShingles(tokens, n).as(shinglesCol))
+  }
 }

@@ -464,19 +464,12 @@ object TextOps {
     * 32k-merge vocabulary plans exactly like the toy 8-merge one.
     * (The previous form folded `bpeMergeOnce` once per merge —
     * statically unrolling the table into the plan, linear plan growth;
-    * kept below for training and spec-locked equivalent on trained
-    * tables in BpeKernelSpec.) */
+    * BpeKernelSpec keeps that fold as the kernel's reference on trained
+    * tables.) */
   def bpeEncode(sym: Column,
                 merges: Seq[(String, String, Long)]): Column =
     graft.functions.BpeExpressions.bpeEncode(
       sym, merges.map(m => (m._1, m._2)))
-
-  /** The unrolled fold form of encode — one plan node per merge.
-    * Retained as the independent reference implementation for the
-    * kernel's equivalence spec; production encode is [[bpeEncode]]. */
-  def bpeEncodeUnrolled(sym: Column,
-                        merges: Seq[(String, String, Long)]): Column =
-    merges.foldLeft(sym) { case (c, (a, b, _)) => bpeMergeOnce(c, a, b) }
 
   def bpeTrainMerges(words: DataFrame, wordCol: String, cntCol: String,
                      numMerges: Int): Seq[(String, String, Long)] = {

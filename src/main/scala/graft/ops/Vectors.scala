@@ -17,19 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  /** Declarative reference forms (HOF folds — interpreted per element);
-    * the hot paths below use the single-pass kernels in
-    * `functions.VectorExpressions`, bit-identical by the same index-order
-    * fold (equivalence: SketchExprSpec). */
-  def dotDeclarative(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def normDeclarative(a: Column): Column = sqrt(dotDeclarative(a, a))
-
-  def cosineDeclarative(a: Column, b: Column): Column =
-    dotDeclarative(a, b) / (normDeclarative(a) * normDeclarative(b))
-
+  /** The single-pass kernels of `functions.VectorExpressions`,
+    * bit-identical to the declarative index-order folds (equivalence:
+    * SketchExprSpec). */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot(a, b)
 
@@ -106,25 +96,6 @@ object Vectors {
     ivfAssignWithVec(corpus, centroids, idCol, cidCol, vecCol)
       .select(col(idCol), col(cidCol))
 
-  /** Declarative twin of the map-side assignment (candidate explosion +
-    * windowed argmin with a partial WindowGroupLimit) — kept for the
-    * equivalence spec. */
-  def ivfAssignWindowed(corpus: DataFrame, centroids: DataFrame,
-                        idCol: String, cidCol: String,
-                        vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = centroids.select(col(cidCol).cast("long").as(cidCol),
-      col(vecCol).as("__cv"))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("__dist"), col(cidCol))
-    corpus.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(c))
-      .withColumn("__dist", sqDist(col(vecCol), col("__cv")))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select(col(idCol), col(cidCol))
-  }
-
   // ---- Hierarchical (two-level) coarse quantizer -------------------
   //
   // The flat assignment above scans ALL k centroids per corpus row from
@@ -186,7 +157,7 @@ object Vectors {
     * the duplicate's group is empty AND unroutable-to, consistently on
     * both levels), so no corpus row routes to a childless group. */
   private def hierIndex(centroids: DataFrame, g: Int, cidCol: String,
-                        vecCol: String, dims: Int = -1)
+                        vecCol: String, dims: Int)
       : (DataFrame, DataFrame) = {
     val cd = centroids.select(col(cidCol).cast("long").as(cidCol),
       transform(col(vecCol), x => x.cast("double")).as(vecCol))
@@ -392,7 +363,7 @@ object Vectors {
   /** The SRP ±1 projection matrix: pseudo-random weights derived from
     * md5(plane||'_'||dim) — deterministic, engine-portable, no stored
     * model. Depends only on (plane, dim) → computed ONCE driver-side. */
-  private[ops] def srpWeights(dims: Int, planes: Int): Seq[Seq[Double]] = {
+  private[graft] def srpWeights(dims: Int, planes: Int): Seq[Seq[Double]] = {
     val digest = java.security.MessageDigest.getInstance("MD5")
     (1 to planes).map { p =>
       (1 to dims).map { d =>
@@ -411,26 +382,6 @@ object Vectors {
       graft.functions.VectorExpressions.VecSrpBucketExpr(
         org.apache.spark.sql.GraftColumnBridge.expression(vec),
         srpWeights(dims, planes)))
-
-  /** Declarative twin of `srpBucket` (interpreted HOF fold with 2-D
-    * literal lookups) — kept for the equivalence spec. */
-  def srpBucketDeclarative(vec: Column, dims: Int, planes: Int): Column = {
-    val wLit = typedlit(srpWeights(dims, planes))
-    // fold over min(dims, |vec|) like the kernel (which truncates a
-    // short vector) — element_at past the end would null-poison the
-    // whole accumulator into all-'0' bits and break the documented
-    // bit-identical equivalence. Empty vector: the kernel's 0.0
-    // accumulator signs to all-'1' (sequence(1,0) would run DOWNWARD
-    // and hit index 0, so it cannot express the empty fold).
-    when(size(vec) >= 1,
-      concat_ws("", transform(sequence(lit(1), lit(planes)), p =>
-        when(aggregate(
-          sequence(lit(1), least(lit(dims), size(vec))), lit(0.0),
-          (acc, d) => acc + element_at(element_at(wLit, p), d) *
-            element_at(vec, d).cast("double")) >= 0, "1")
-          .otherwise("0"))))
-      .otherwise(lit("1" * planes))
-  }
 
   /** Bucketed ANN: top-k by cosine searched only within each query's SRP
     * bucket — the 100 TB path (bucket is a map-side label; the join is an

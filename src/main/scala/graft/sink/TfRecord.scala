@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops.TextOps
 
@@ -19,6 +20,14 @@ class BpeKernelSpec extends SparkSpec {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .orderBy("w")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** The unrolled fold form of encode — one plan node per merge (the
+    * encode before the kernel), the kernel's independent reference. */
+  private def bpeEncodeUnrolled(sym: Column,
+                                merges: Seq[(String, String, Long)]): Column =
+    merges.foldLeft(sym) { case (c, (a, b, _)) =>
+      TextOps.bpeMergeOnce(c, a, b)
+    }
 
   /** Reference encode: apply merges once each in rank order, one
     * greedy left-to-right pass per merge, in plain Scala. */
@@ -68,7 +77,7 @@ class BpeKernelSpec extends SparkSpec {
     val df = words.toDF("w", "cnt")
       .select(col("w"),
         TextOps.bpeEncode(split(col("w"), ""), merges).as("kern"),
-        TextOps.bpeEncodeUnrolled(split(col("w"), ""), merges)
+        bpeEncodeUnrolled(split(col("w"), ""), merges)
           .as("fold"))
       .collect()
     df.foreach { r =>
@@ -137,7 +146,7 @@ class BpeKernelSpec extends SparkSpec {
     // and the unrolled fold demonstrably does NOT stay flat (the
     // motivation, kept honest)
     def foldPlanLen(m: Seq[(String, String, Long)]): Int =
-      pdf.select(TextOps.bpeEncodeUnrolled(split(col("w"), ""), m)
+      pdf.select(bpeEncodeUnrolled(split(col("w"), ""), m)
           .as("t"))
         .queryExecution.optimizedPlan.toString.length
     assert(foldPlanLen(merges.take(64)) > 4 * foldPlanLen(merges.take(8)),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.config.Toml
 import graft.ops._
+import graft.queries.Shared
 
 /** Unit specs for the composable ops: windows, rename, piecewise, toml,
   * text/dedup primitives. */
@@ -218,13 +219,13 @@ class OpsSpec extends SparkSpec {
     "4 hex chars, keeps every doc exactly once, positions contiguous") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = SparkEntry.trainShuffle(docs, shardHexWidth = 4).cache()
+    val out = Shared.trainShuffle(docs, shardHexWidth = 4).cache()
     val n = docs.count()
     assert(out.count() == n, "shuffle must be a permutation, not a sample")
     assert(out.select("doc_id").distinct().count() == n)
     // shard = 4-char hex prefix of the width-2 shard's key space:
     // every width-4 shard must nest inside its width-2 parent
-    val w2 = SparkEntry.trainShuffle(docs, shardHexWidth = 2)
+    val w2 = Shared.trainShuffle(docs, shardHexWidth = 2)
       .select(col("doc_id"), col("shard").as("s2"))
     assert(out.join(w2, "doc_id")
       .where(substring(col("shard"), 1, 2) =!= col("s2"))

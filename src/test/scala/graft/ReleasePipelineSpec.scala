@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.ReleaseQueries
 
 /** t131 — the composed release pipeline (ingest → gates → keep-best
   * dedup → span decontam → budget → shuffle → manifest → TFRecord
@@ -40,7 +41,7 @@ class ReleasePipelineSpec extends SparkSpec {
     // serves the MEMOIZED run — identical values, and the published
     // run dir is never written again (a concurrent reader that
     // resolved _latest can never glob a mid-rewrite shard set)
-    val relDir = SparkEntry.releaseRunDirForTest(spark, sfDir)
+    val relDir = ReleaseQueries.releaseRunDirForTest(spark, sfDir)
     def shardStamps(): Map[String, Long] = {
       val d = new java.io.File(s"$relDir/tfrec")
       Option(d.listFiles()).getOrElse(Array.empty)
@@ -68,7 +69,7 @@ class ReleasePipelineSpec extends SparkSpec {
     corpus("alpha").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
-    val dir1 = SparkEntry.releaseRunDirForTest(spark, dir)
+    val dir1 = ReleaseQueries.releaseRunDirForTest(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new java.io.File(dir1).getParent
     assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir1))
@@ -82,7 +83,7 @@ class ReleasePipelineSpec extends SparkSpec {
     corpus("beta").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
-    val dir2 = SparkEntry.releaseRunDirForTest(spark, dir)
+    val dir2 = ReleaseQueries.releaseRunDirForTest(spark, dir)
     assert(dir2 !== dir1, "corpus rewrite did not re-run the chain")
     assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir2))
     val files1After = Option(new java.io.File(s"$dir1/tfrec").listFiles())
@@ -160,7 +161,7 @@ class ReleasePipelineSpec extends SparkSpec {
       spark.sparkContext.applicationId)),
       s"published dir ${latest.get} not owned by this session")
     assert(latest.get ===
-      SparkEntry.releaseRunDirForTest(spark, sfDir))
+      ReleaseQueries.releaseRunDirForTest(spark, sfDir))
     val shards = graft.sink.TfRecord.read(spark, s"${latest.get}/tfrec")
     assert(shards.count() > 0, "published run has no readable shards")
   }
@@ -190,7 +191,7 @@ class ReleasePipelineSpec extends SparkSpec {
     }
     val published = graft.sink.Release.resolveLatest(
       spark.sparkContext.hadoopConfiguration,
-      new java.io.File(SparkEntry.releaseRunDirForTest(spark, dir))
+      new java.io.File(ReleaseQueries.releaseRunDirForTest(spark, dir))
         .getParent).get
     val shards = Option(new java.io.File(s"$published/tfrec")
       .listFiles()).getOrElse(Array.empty)

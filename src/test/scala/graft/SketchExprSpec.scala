@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchExpressions
@@ -190,6 +191,38 @@ class SketchExprSpec extends SparkSpec {
     assert(rep.length === 3 && rep === rep.sorted)
   }
 
+  /** Declarative reference forms of the vector kernels (HOF folds in
+    * array-index order, interpreted per element) — the independent
+    * side of the bit-identity tests below. */
+  private def dotDeclarative(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  private def cosineDeclarative(a: Column, b: Column): Column =
+    dotDeclarative(a, b) / (sqrt(dotDeclarative(a, a)) *
+      sqrt(dotDeclarative(b, b)))
+
+  /** `Vectors.srpBucket` as an interpreted HOF fold with 2-D literal
+    * lookups over the same weight matrix. */
+  private def srpBucketDeclarative(vec: Column, dims: Int,
+                                   planes: Int): Column = {
+    val wLit = typedlit(graft.ops.Vectors.srpWeights(dims, planes))
+    // fold over min(dims, |vec|) like the kernel (which truncates a
+    // short vector) — element_at past the end would null-poison the
+    // whole accumulator into all-'0' bits and break the documented
+    // bit-identical equivalence. Empty vector: the kernel's 0.0
+    // accumulator signs to all-'1' (sequence(1,0) would run DOWNWARD
+    // and hit index 0, so it cannot express the empty fold).
+    when(size(vec) >= 1,
+      concat_ws("", transform(sequence(lit(1), lit(planes)), p =>
+        when(aggregate(
+          sequence(lit(1), least(lit(dims), size(vec))), lit(0.0),
+          (acc, d) => acc + element_at(element_at(wLit, p), d) *
+            element_at(vec, d).cast("double")) >= 0, "1")
+          .otherwise("0"))))
+      .otherwise(lit("1" * planes))
+  }
+
   test("vector kernels == declarative HOF folds, bit-identical") {
     import graft.ops.Vectors
     val rnd = new scala.util.Random(7)
@@ -204,15 +237,15 @@ class SketchExprSpec extends SparkSpec {
     // doubles is exact equality — the kernels must be bit-identical
     val diff = paired.where(
       !(Vectors.dot(col("af"), col("bf")) ===
-        Vectors.dotDeclarative(col("af"), col("bf"))) ||
+        dotDeclarative(col("af"), col("bf"))) ||
       !(Vectors.sqDist(col("af"), col("bf")) ===
         Vectors.sqDistDeclarative(col("af"), col("bf"))) ||
       !(Vectors.cosine(col("af"), col("bf")) ===
-        Vectors.cosineDeclarative(col("af"), col("bf"))) ||
+        cosineDeclarative(col("af"), col("bf"))) ||
       !(Vectors.dot(col("ad"), col("bd")) ===
-        Vectors.dotDeclarative(col("ad"), col("bd"))) ||
+        dotDeclarative(col("ad"), col("bd"))) ||
       !(Vectors.cosine(col("af"), col("bd")) ===
-        Vectors.cosineDeclarative(col("af"), col("bd")))).count()
+        cosineDeclarative(col("af"), col("bd")))).count()
     assert(diff === 0)
   }
 
@@ -277,7 +310,7 @@ class SketchExprSpec extends SparkSpec {
       .toDF("id", "v")
     val both = vecs.select($"id",
       Vectors.srpBucket($"v", 32, 8).as("fast"),
-      Vectors.srpBucketDeclarative($"v", 32, 8).as("slow"))
+      srpBucketDeclarative($"v", 32, 8).as("slow"))
     assert(both.where($"fast" =!= $"slow").count() === 0)
     assert(both.head().getString(1).matches("[01]{8}"))
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Skew, Vectors}
@@ -89,6 +91,23 @@ class SkewVectorsSpec extends SparkSpec {
       s"string ids must fail loud, got: ${ex.getMessage}")
   }
 
+  /** The declarative twin of `Vectors.ivfAssign`: candidate explosion
+    * plus a windowed argmin (ties to the smallest cid). */
+  private def ivfAssignWindowed(corpus: DataFrame, centroids: DataFrame,
+                                idCol: String, cidCol: String,
+                                vecCol: String): DataFrame = {
+    val c = centroids.select(col(cidCol).cast("long").as(cidCol),
+      col(vecCol).as("__cv"))
+    val w = Window.partitionBy(col(idCol))
+      .orderBy(col("__dist"), col(cidCol))
+    corpus.select(col(idCol), col(vecCol))
+      .crossJoin(broadcast(c))
+      .withColumn("__dist", Vectors.sqDist(col(vecCol), col("__cv")))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1)
+      .select(col(idCol), col(cidCol))
+  }
+
   test("map-side IVF assignment == windowed argmin (incl. ties)") {
     val rnd = new scala.util.Random(11)
     val pts = (0 until 200).map(i =>
@@ -100,8 +119,7 @@ class SkewVectorsSpec extends SparkSpec {
         .select($"vec_id".as("cid"), $"embedding"))
     val fast = Vectors.ivfAssign(pts, cent, "vec_id", "cid", "embedding")
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val slow = Vectors.ivfAssignWindowed(pts, cent, "vec_id", "cid",
-      "embedding")
+    val slow = ivfAssignWindowed(pts, cent, "vec_id", "cid", "embedding")
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(fast.toSeq === slow.toSeq)
   }

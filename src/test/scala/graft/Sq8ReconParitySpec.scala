@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.AnnQueries
 
 /** The SQ8 family reconstructs bin midpoints through two code paths:
   * `sq8ReconArr` reads the STORED `codes` column (the search path's
@@ -17,7 +18,7 @@ class Sq8ReconParitySpec extends SparkSpec {
 
   test("sq8ReconArrFromVu ≡ sq8ReconArr over a checkpointed encoded " +
     "frame, every row, every coordinate") {
-    val pair = SparkEntry
+    val pair = AnnQueries
       .sq8ReconPairForTest(spark, "/root/testdata/sf0.001")
     val n = pair.count()
     assert(n > 0, "the fixture corpus must produce encoded rows")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.AnnQueries
 
 /** The measured SRP plane sweep behind t10's adaptive banding (r19,
   * built after the standing 1000× probe killed the modeled
@@ -40,7 +41,7 @@ class SrpSweepSpec extends SparkSpec {
     val base = math.max(8,
       64 - java.lang.Long.numberOfLeadingZeros(
         math.max((4096L + 7) / 8, 2L) - 1)).toInt // ~512 buckets ÷ 4096 rows
-    val picked = SparkEntry.srpPlaneSweep(corpus, "v", base, 4096L)
+    val picked = AnnQueries.srpPlaneSweep(corpus, "v", base, 4096L)
     assert(picked == base,
       s"random corpus at low occupancy must keep base=$base, got $picked")
   }
@@ -58,7 +59,7 @@ class SrpSweepSpec extends SparkSpec {
         ((pmod(hash($"b" * lit(d + 17)), lit(2000))
           .cast("double") - lit(1000.0)) / lit(1000.0))): _*).as("v"))
     val base = 8
-    val picked = SparkEntry.srpPlaneSweep(dense, "v", base, 16384L)
+    val picked = AnnQueries.srpPlaneSweep(dense, "v", base, 16384L)
     assert(picked == base + 20,
       s"exact-replica families defeat any banding depth — the sweep " +
         s"must stop at the cap base+20=${base + 20}, got $picked")
@@ -82,7 +83,7 @@ class SrpSweepSpec extends SparkSpec {
            else lit(0.0)))): _*).as("v"))
       .select($"vec_id", $"v")
     val base = 8
-    val picked = SparkEntry.srpPlaneSweep(mixed, "v", base, n.toLong)
+    val picked = AnnQueries.srpPlaneSweep(mixed, "v", base, n.toLong)
     assert(picked > base, s"jittered families at base=$base must be " +
       s"over an 8/row budget, got picked=$picked")
     assert(picked < base + 20,
@@ -92,7 +93,7 @@ class SrpSweepSpec extends SparkSpec {
     // with cap 0 — i.e. measuring mass exactly at picked−2), must
     // be over budget. Reuse the sweep itself as the measurement:
     // a sweep from base'=picked−2 must NOT stay at its base.
-    val pickedMinus = SparkEntry.srpPlaneSweep(mixed, "v", picked - 2,
+    val pickedMinus = AnnQueries.srpPlaneSweep(mixed, "v", picked - 2,
       n.toLong)
     assert(pickedMinus > picked - 2,
       s"step below the picked depth ($picked) fit the budget too — " +

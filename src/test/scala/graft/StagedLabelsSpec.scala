@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.AnnQueries
 
 /** The staged cluster-label artifact must track corpus CONTENT, not
   * the corpus path: the engine's own CDC/compaction sinks rewrite a
@@ -101,7 +102,7 @@ class StagedLabelsSpec extends SparkSpec {
         (pmod(hash($"id" * lit(d + shift)), lit(1000)).cast("float") /
           lit(70.0f))): _*).as("embedding"))
     def centSum(): (Long, Double) = {
-      val (staged, inline) = SparkEntry.stagedBitextCentsForTest(
+      val (staged, inline) = AnnQueries.stagedBitextCentsForTest(
         spark, dir)
       // staged ≡ inline, bit for bit: the parquet round-trip of the
       // micro-quantized means must not perturb a single double

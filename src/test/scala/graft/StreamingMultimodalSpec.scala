@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Multimodal
 import graft.streaming.Streaming
+import graft.queries.RelationalQueries
 
 class StreamingMultimodalSpec extends SparkSpec {
 
@@ -51,7 +52,7 @@ class StreamingMultimodalSpec extends SparkSpec {
         java.sql.Timestamp.valueOf("2024-01-05 00:00:00"), -0.5),
       Depths.Install("tdr2",
         java.sql.Timestamp.valueOf("2024-01-15 00:00:00"), -1.2))
-    val udg = SparkEntry.x1UdgSeries(spark, dir)
+    val udg = RelationalQueries.x1UdgSeries(spark, dir)
     val batch = Depths.tdrDepth(udg, "ts", "udg", installs)
       .select($"sensor", $"ts", round($"depth", 6).as("depth"))
       .as[(String, java.sql.Timestamp, Double)].collect().toSeq.sorted

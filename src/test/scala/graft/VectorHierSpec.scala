@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
 import graft.ops.Vectors
+import graft.queries.AnnQueries
 
 /** The hierarchical (two-level) IVF coarse quantizer: kernel
   * equivalences, the g = k degenerate case (where two-level routing is
@@ -113,7 +114,7 @@ class VectorHierSpec extends SparkSpec {
     // column-name bug here; keep it pinned at spec scale
     val e = corpus(1300)
     val k = Vectors.HierarchicalFloor // forces the two-level branch
-    val cand = SparkEntry.bitextCandidatesForTest(e, k, nProbe = 2)
+    val cand = AnnQueries.bitextCandidatesForTest(e, k, nProbe = 2)
     assert(cand.columns.toSeq ===
       Seq("x_id", "y_id", "cos_micro", "probe_rank"))
     val rows = cand.collect()
