@@ -1,57 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the NTZ-layout events read casts ts NTZ→LTZ; UTC makes that
-      // value-preserving regardless of the host's TZ (see queries.Shared.T)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Split small files across cores: the default 128 MB split keeps a
-      // whole sf0.1 table in ONE scan task (measured: d3_vocab runs its
-      // scan+explode+partial-agg single-threaded while 31 cores idle).
-      // On a real cluster the input is thousands of row groups anyway —
-      // a small split size reproduces that parallelism at bench scale.
-      .config("spark.sql.files.maxPartitionBytes", s"${1024 * 1024}")
-      // Lazy localCheckpoint blocks from a FINISHED query stay in the
-      // unified manager's protected storage region until their RDD
-      // objects are garbage-collected AND the ContextCleaner drops the
-      // blocks — and the cleaner's own GC trigger defaults to 30 min
-      // (spark.cleaner.periodicGC.interval), far longer than a bench
-      // query. In a multi-query JVM at a memory-tight scale point the
-      // residue shrinks every later query's execution share by up to
-      // storageFraction (measured r19: the 1000×/8 GiB probe set OOMed
-      // t137 on ~2.4 GiB of dead t10/t145 checkpoint blocks, while
-      // t137 alone passed cold at 201 s). A 1-minute interval frees
-      // dead blocks between queries without touching any live ones —
-      // value- and measurement-neutral (each query still computes from
-      // parquet; nothing a query NEEDS is dropped).
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // The generated-class cache (CodeGenerator.cache) holds only 100
-      // entries by default; this suite compiles ~205 query shapes ×
-      // several WholeStageCodegen/ordering/predicate units each, so by
-      // the time a timed pass reaches query i, the class the warmup
-      // pass janino-compiled for it has been evicted and EVERY query
-      // recompiles in BOTH timed passes — pure, repeated driver-side
-      // overhead that exists only because many plans share one JVM.
-      // Sizing the cache to the session's real working set is the
-      // production setting for any multi-query/BI-style session; it is
-      // core-count- and scale-independent (classes are keyed on plan
-      // shape, not data), and measurement-honest: nothing data-derived
-      // is cached, every query still computes from parquet. Measured
-      // on the full suite (same box, same min-of-2 harness, r20): total
-      // 152.0 s → 107.3 s (−29%), 205/205 ok, zero per-query
-      // regressions — EVERY query improved, the sub-second tail alone
-      // 64.9 → 45.9 s. 10000 entries ≈ generated classes for ~10× the
-      // current suite; the cache is bounded and weak-ref'd, so an
-      // oversized value costs nothing.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_ONLY=t44_dup_spans,t45_… restricts the run for local
+    // iteration; the driver never sets it, so round benches stay full.
+    // Checked before the session starts; an empty list times nothing.
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"),
+      "SPARK_GRAFT_ONLY")
+    val failed = GraftSession.run(timeAll(_, sfDir, selected))
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Warms every selected query, times it in two passes and prints the
+    * JSON lines; returns the names of the queries that failed. */
+  private def timeAll(spark: SparkSession, sfDir: String,
+                      selected: Map[String, (SparkSession, String) => DataFrame])
+      : Seq[String] = {
     // Spill accounting for the memory-pressure probes (r14 verdict
     // #5): a run that completes by SPILLING under a small heap is the
     // property that separates "fast at 100×" from "survives a real
@@ -76,17 +41,6 @@ object Bench {
     // execution doesn't (t9_ivf_probe: 8.5 s first run, 1.0 s after).
     // Warmup on sf0.001 cannot precompute sf0.1 work — nothing is
     // cached; only compiled-code state carries over.
-    // SPARK_GRAFT_ONLY=t44_dup_spans,t45_… restricts the run for local
-    // iteration; the driver never sets it, so round benches stay full.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, // a typo'd filter silently timing nothing
-        s"SPARK_GRAFT_ONLY: unknown queries ${unknown.mkString(", ")}")
-    }
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (n, _) => names(n) })
     // warmup dir: env override, else the standard tiny fixture, else
     // the bench dir itself (a slow warmup beats a silent no-op that
     // shifts the JIT cost into pass 1); NonFatal only — swallowing
@@ -99,7 +53,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): (Double, Boolean) = {
       // announce BEFORE running (stderr, not the JSON contract): a
       // hard JVM death (the 8 GiB 100× probe's failure mode) must
       // leave the culprit's name in the log
@@ -202,7 +156,6 @@ object Bench {
       fullJson.getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $fullPath: $e") }
-    spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    failed
   }
 }

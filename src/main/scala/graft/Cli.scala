@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.ingest.Toa5
-import graft.pipeline.{Level1, Site}
+import graft.pipeline.Site
 import graft.sink.{NetCdf, Writers}
 
 /** Operational CLI wrappers — the engine twin of the reference's
@@ -143,29 +143,21 @@ object Cli {
     val a = parse(argv)
     val metafile = a.metafile.getOrElse(
       s"${a.dataRoot}/firn_stations/ppconfig/${a.site}.toml")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // reuse a live session if one exists (tests drive main() in-JVM);
-    // only stop what this run itself created
-    val pre = SparkSession.getDefaultSession
-      .orElse(SparkSession.getActiveSession)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.run { spark =>
       val site = Site.fromToml(spark, metafile, a.dataRoot)
       a.cmd match {
         case "l1" =>
           val out = a.outfile.getOrElse(l1DefaultPath(a.dataRoot, a.site))
           guard(spark, out, a.ow, "Level-1")
           // one read of the bales; written from the cache in the time
-          // order the pass keeps
-          Level1.withProduct(spark, site.sources, site.cfg.tsCol) { l1 =>
+          // order the pass keeps. The row counts around the dedup, as
+          // the reference prints them (fs_pp.py:98-104)
+          val rows = site.withLevel1 { (l1, rows) =>
             Writers.csvSingle(l1, out, sortCols = Seq(site.cfg.tsCol))
+            rows
           }
+          println(s"[cli] level-1 rows: ${rows.in} ingested, ${rows.out} " +
+            "after the keep-first dedup")
           println(s"[cli] level-1 written: $out")
         case "l2" =>
           val outCsv = a.outfile.getOrElse(l2DefaultPath(a.dataRoot, a.site))
@@ -191,6 +183,6 @@ object Cli {
           } finally l2.unpersist()
           println(s"[cli] level-2 written: $outCsv, $outNc")
       }
-    } finally if (pre.isEmpty) spark.stop()
+    }
   }
 }

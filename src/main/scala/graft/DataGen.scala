@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: derive a larger scale factor from an existing testdata
@@ -41,22 +41,12 @@ import org.apache.spark.sql.functions._
   * Writes OUTSIDE the repo (default /tmp/sf1); never touches
   * /root/testdata. */
 object DataGen {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = GraftSession.run { spark =>
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val tables: String => Boolean =
       if (args.length > 4) args(4).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit =
@@ -163,6 +153,5 @@ object DataGen {
     }
 
     println(s"""{"out":"$out","factor":$factor,"src":"$src"}""")
-    spark.stop()
   }
 }

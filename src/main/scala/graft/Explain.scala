@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Plan audit: dump .explain("formatted") of every SparkEntry query so
   * pushdown / broadcast / codegen coverage can be reviewed offline. */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = GraftSession.run { spark =>
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try {
@@ -25,6 +16,5 @@ object Explain {
         System.err.println(s"[explain] $name failed: ${e.getMessage}")
       }
     }
-    spark.stop()
   }
 }

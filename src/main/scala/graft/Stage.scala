@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * CDC/compaction sinks do this) changes the fingerprint and so misses
   * everything built from the old bytes. */
 object Stage {
-  private val Root = "/tmp/graft_staged"
+  private[graft] val Root = "/tmp/graft_staged"
 
   /** Corpus key: a readable sanitised prefix plus an md5 suffix of the
     * RAW dir. Sanitisation alone is lossy ("/tmp/a/b" and "/tmp/a_b"

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus every registered query's oracle in oracle_sql.json, for the
@@ -8,26 +8,17 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional third arg: comma-separated query-name filter (local
-    // iteration aid; the driver always runs the full set)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, // a typo'd filter silently dumping nothing
-        s"Verify: unknown queries ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // iteration aid; the driver always runs the full set), checked
+    // before the session starts
+    val selected = SparkEntry.select(args.lift(2), "Verify")
+    GraftSession.run(dump(_, sfDir, outDir, selected))
+  }
+
+  private def dump(spark: SparkSession, sfDir: String, outDir: String,
+                   selected: Map[String, (SparkSession, String) => DataFrame])
+      : Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -49,6 +40,5 @@ object Verify {
     val json = graft.queries.Query.all
       .map(e => s"${q(e.name)}: ${q(e.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

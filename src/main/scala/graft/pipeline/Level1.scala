@@ -48,54 +48,38 @@ object Level1 {
         serviced = serviced)
   }
 
-  /** Runs the Level-1 pass once into the cache, then hands `f` the
-    * Level-1 product, read from that cache in time order; the cache is
-    * released when `f` returns or throws, even when the session is the
-    * caller's. The bales are read once. */
-  def withProduct[A](spark: SparkSession, sources: Seq[Source],
-                     tsCol: String = "TIMESTAMP")(f: DataFrame => A): A = {
-    val p = keepFirst(ingest(spark, sources, tsCol), tsCol)
-    p.frame.persist()
-    try {
-      p.frame.count()
-      f(p.product)
-    } finally p.frame.unpersist()
-  }
+  /** Rows the Level-1 pass ingested (`in`) and emitted after its
+    * keep-first dedup (`out`). */
+  final case class Rows(in: Long, out: Long)
 
-  /** Observability parity: the reference PRINTS row counts around each
-    * dedup stage (fs_pp.py:98-104). Spark-first equivalent: `Observation`
-    * metrics collected during the job itself, unlike driver-side
-    * count()s. Returns (df, observations) like `run`, so the whole pass
-    * runs once here and `obs.get("rows_in"/"rows_out")` is ready on
-    * return. */
-  def runObserved(spark: SparkSession, sources: Seq[Source],
-                  tsCol: String = "TIMESTAMP")
-                 : (DataFrame, Observation, Observation) = {
+  /** Runs the Level-1 pass once into the cache, then hands `f` the
+    * Level-1 product, read from that cache in time order, and the pass's
+    * row counts; the cache is released when `f` returns or throws, even
+    * when the session is the caller's. The bales are read once.
+    *
+    * The counts are the reference's printed row counts around its dedup
+    * (fs_pp.py:98-104), taken as `Observation` metrics of the one job
+    * that fills the cache rather than as extra driver-side counts. */
+  def withProduct[A](spark: SparkSession, sources: Seq[Source],
+                     tsCol: String = "TIMESTAMP")
+                    (f: (DataFrame, Rows) => A): A = {
     val obsIn = Observation("l1_rows_in")
     val obsOut = Observation("l1_rows_out")
     val p = keepFirst(ingest(spark, sources, tsCol)
       .observe(obsIn, count(lit(1)).as("rows_in")), tsCol)
-    (runOnce(p, p.frame.observe(obsOut, count(lit(1)).as("rows_out"))),
-      obsIn, obsOut)
-  }
-
-  /** The Level-1 product as a plan. Which columns it drops is only
-    * known once the pass has run, so this call runs the whole pass
-    * (scan, exchange, sort and kernel) once to the end, and every
-    * action on the returned plan runs it again from the bales. A caller
-    * that acts on the product once should use `withProduct`, which
-    * reads the bales once. */
-  def run(spark: SparkSession, sources: Seq[Source],
-          tsCol: String = "TIMESTAMP"): DataFrame = {
-    val p = keepFirst(ingest(spark, sources, tsCol), tsCol)
-    runOnce(p, p.frame)
+    val frame = p.frame.observe(obsOut, count(lit(1)).as("rows_out")).persist()
+    try {
+      frame.count()
+      f(frame.drop(Toa5.FileOrderCol +: p.allNull: _*),
+        Rows(obsIn.get("rows_in").asInstanceOf[Long],
+          obsOut.get("rows_out").asInstanceOf[Long]))
+    } finally frame.unpersist()
   }
 
   /** Level-1 as one ordered pass, before its all-null column drop:
     * `frame` holds the first row per timestamp with every ingested
     * column plus `Toa5.FileOrderCol`. Once `frame` has run to the end,
-    * `allNull` names the columns that no ingested row fills and
-    * `product` is the Level-1 product. */
+    * `allNull` names the columns that no ingested row fills. */
   private final class Pass(val frame: DataFrame, cols: Seq[String],
                            probe: NonNullCounts) {
     def allNull: Seq[String] = {
@@ -104,14 +88,6 @@ object Level1 {
         "the end — run `frame` first (an ingest with no rows never does)")
       cols.zip(counts).collect { case (c, 0L) => c }
     }
-    def product: DataFrame = frame.drop(Toa5.FileOrderCol +: allNull: _*)
-  }
-
-  /** Runs `frame` (`p.frame`, perhaps observed) to the end, then
-    * returns `p`'s product. */
-  private def runOnce(p: Pass, frame: DataFrame): DataFrame = {
-    frame.write.format("noop").mode("overwrite").save()
-    p.product
   }
 
   private def ingest(spark: SparkSession, sources: Seq[Source],

@@ -9,14 +9,18 @@ import graft.ops.Udg
   * metafile, then run level0→level1→level2
   * (cassandra_fs_pp/__init__.py:1, fs_pp.py:29-65 `_load_config`,
   * README.md "Metadata files") — but holding DataFrames instead of
-  * mutable eager state. `level1()` runs the Level-1 pass once to learn
-  * which all-null columns it drops (see `Level1.run`); an action on its
-  * result runs the pass again.
+  * mutable eager state. `withLevel1` runs the Level-1 pass once into
+  * the cache (it must run to learn which all-null columns it drops) and
+  * hands the block the product read from that cache, with the pass's
+  * row counts; the cache is released when the block ends (see
+  * `Level1.withProduct`).
   *
   * {{{
   *   val site = Site.fromToml(spark, "/data/ppconfig/fs1.toml", dataRoot)
-  *   val l1 = site.level1()            // runs the Level-1 pass once
-  *   val l2 = site.level2(l1)          // lazy plan
+  *   site.withLevel1 { (l1, rows) =>   // reads the bales once
+  *     val l2 = site.level2(l1)        // lazy plan over the cached l1
+  *     ...                             // act on l2 inside the block
+  *   }
   * }}}
   */
 object Site {
@@ -46,7 +50,8 @@ object Site {
   case class Spec(spark: SparkSession, site: String,
                   sources: Seq[Level1.Source], cfg: Level2.Config,
                   udgTarget: String) {
-    def level1(): DataFrame = Level1.run(spark, sources, cfg.tsCol)
+    def withLevel1[A](f: (DataFrame, Level1.Rows) => A): A =
+      Level1.withProduct(spark, sources, cfg.tsCol)(f)
     def level2(l1: DataFrame): DataFrame = Level2.run(l1, cfg, udgTarget)
   }
 

@@ -99,7 +99,6 @@ object RelationalQueries {
     * would read everything at 100 TB. */
   private def eventsBetween(s: SparkSession, dir: String,
                             lo: String, hi: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // UTC-anchored, NOT java.sql.Timestamp.valueOf (which parses in
     // the JVM default timezone): on a non-UTC host that would shift
     // the nanos-layout window while the NTZ branch and the DuckDB

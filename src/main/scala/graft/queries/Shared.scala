@@ -17,19 +17,19 @@ object Shared {
 
   /** Table loader. The `events` table's `ts` has shipped in two parquet
     * layouts across driver testdata generations, and both must read:
-    *  - timestamp[ns], which Spark 4 only reads as a long
-    *    (spark.sql.legacy.parquet.nanosAsLong) — converted to
+    *  - timestamp[ns], which Spark 4 reads only as a long, under the
+    *    legacy parquet nanos-as-long flag that `GraftSession` sets in
+    *    every session (without it the read fails) — converted to
     *    TimestampType (µs) with integer division (`ns / 1000` as doubles
     *    would lose precision above 2^53; DuckDB likewise truncates
     *    ns → µs, so the engines agree);
     *  - timestamp[us] without UTC adjustment, which Spark reads as
     *    TIMESTAMP_NTZ — cast to TimestampType, value-preserving because
-    *    every entrypoint pins spark.sql.session.timeZone=UTC.
+    *    `GraftSession` pins spark.sql.session.timeZone=UTC.
     * Either way downstream code sees one canonical TimestampType µs
     * column. */
   private[queries] def T(s: SparkSession, dir: String,
                           name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = s.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType match {
       case org.apache.spark.sql.types.LongType =>

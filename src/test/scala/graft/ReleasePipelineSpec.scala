@@ -60,37 +60,37 @@ class ReleasePipelineSpec extends SparkSpec {
   test("an in-place corpus rewrite lands the release in a NEW run " +
     "dir and republishes; the old published dir is never touched") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-release-rebuild").toString
-    def corpus(tag: String) =
-      (0 until 60).map(i => (i.toLong, "web",
-        s"the $tag and of to in is that it document $i"))
-        .toDF("doc_id", "source", "text")
-    corpus("alpha").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
-    val dir1 = ReleaseQueries.releaseRunDirForTest(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new java.io.File(dir1).getParent
-    assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir1))
-    val files1 = Option(new java.io.File(s"$dir1/tfrec").listFiles())
-      .getOrElse(Array.empty)
-      .map(f => f.getName -> f.lastModified()).toMap
-    // rewrite the corpus in place → fingerprint changes → the chain
-    // must re-run into a FRESH dir (memo hit would serve stale data;
-    // reusing dir1 would rewrite a published artifact)
-    Thread.sleep(1100) // fs mtime granularity for the fingerprint
-    corpus("beta").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
-    val dir2 = ReleaseQueries.releaseRunDirForTest(spark, dir)
-    assert(dir2 !== dir1, "corpus rewrite did not re-run the chain")
-    assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir2))
-    val files1After = Option(new java.io.File(s"$dir1/tfrec").listFiles())
-      .getOrElse(Array.empty)
-      .map(f => f.getName -> f.lastModified()).toMap
-    assert(files1After === files1,
-      "republish touched the previously published run dir")
+    withTempCorpus("graft-release-rebuild") { dir =>
+      def corpus(tag: String) =
+        (0 until 60).map(i => (i.toLong, "web",
+          s"the $tag and of to in is that it document $i"))
+          .toDF("doc_id", "source", "text")
+      corpus("alpha").write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+      SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
+      val dir1 = ReleaseQueries.releaseRunDirForTest(spark, dir)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val root = new java.io.File(dir1).getParent
+      assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir1))
+      val files1 = Option(new java.io.File(s"$dir1/tfrec").listFiles())
+        .getOrElse(Array.empty)
+        .map(f => f.getName -> f.lastModified()).toMap
+      // rewrite the corpus in place → fingerprint changes → the chain
+      // must re-run into a FRESH dir (memo hit would serve stale data;
+      // reusing dir1 would rewrite a published artifact)
+      Thread.sleep(1100) // fs mtime granularity for the fingerprint
+      corpus("beta").write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+      SparkEntry.queries("t131_release_pipeline")(spark, dir).collect()
+      val dir2 = ReleaseQueries.releaseRunDirForTest(spark, dir)
+      assert(dir2 !== dir1, "corpus rewrite did not re-run the chain")
+      assert(graft.sink.Release.resolveLatest(conf, root) === Some(dir2))
+      val files1After = Option(new java.io.File(s"$dir1/tfrec").listFiles())
+        .getOrElse(Array.empty)
+        .map(f => f.getName -> f.lastModified()).toMap
+      assert(files1After === files1,
+        "republish touched the previously published run dir")
+    }
   }
 
   test("release dir protocol: run dirs are per-session, the run " +
@@ -174,91 +174,91 @@ class ReleasePipelineSpec extends SparkSpec {
     // corpus is a COPY of sf0.001's documents (a uniform synthetic
     // corpus gates to an empty release: identical quality scores mean
     // nothing clears the self-calibrated median cut).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-release-consume").toString
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def consume() =
-      SparkEntry.queries("t139_release_consume")(spark, dir).collect()
-    val clean = consume()
-    assert(clean.nonEmpty, "consumer saw an empty release")
-    clean.foreach { r =>
-      assert(r.getAs[Long]("crc_fail") === 0L, s"crc_fail in $r")
-      assert(r.getAs[Boolean]("records_match"), s"records in $r")
-      assert(r.getAs[Boolean]("pieces_match"), s"pieces in $r")
-      assert(r.getAs[Boolean]("ids_match"), s"ids in $r")
-      assert(r.getAs[Boolean]("keys_match"), s"keys in $r")
-    }
-    val published = graft.sink.Release.resolveLatest(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(ReleaseQueries.releaseRunDirForTest(spark, dir))
-        .getParent).get
-    val shards = Option(new java.io.File(s"$published/tfrec")
-      .listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".tfrecord")).sortBy(_.getName)
-    assert(shards.length >= 3, s"need ≥3 shards, got ${shards.length}")
-    // drop the Hadoop .crc sidecars of the shards mutated below, so
-    // the OUT-OF-BAND corruption reaches the TFRecord-level CRC32C
-    // instead of tripping ChecksumFileSystem first (TfRecordSpec's
-    // idiom) — a real object store has no sidecars
-    shards.take(3).foreach { f =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(f.getParent, s".${f.getName}.crc"))
-    }
-    // fault 1: flip one byte mid-data in shard 0 → that record's
-    // CRC32C fails → crc_fail > 0 (and the decode is skipped, so the
-    // audit itself survives the garbage bytes)
-    locally {
-      val f = shards(0)
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x41).toByte
-      java.nio.file.Files.write(f.toPath, bytes)
-    }
-    // fault 2: truncate shard 1 → the reader quarantines the torn
-    // tail → recount falls short of the manifest
-    locally {
-      val f = shards(1)
-      val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      java.nio.file.Files.write(f.toPath,
-        java.util.Arrays.copyOf(bytes, bytes.length - 7))
-    }
-    // fault 3: delete shard 2 entirely → manifest row joins nothing
-    assert(shards(2).delete())
-    val faulty = consume().map(r =>
-      r.getString(0) -> r).toMap
-    def name(i: Int) = shards(i).getName.stripSuffix(".tfrecord")
-    assert(faulty(name(0)).getAs[Long]("crc_fail") > 0L,
-      "flipped byte did not surface as crc_fail")
-    val trunc = faulty(name(1))
-    assert(trunc.getAs[Long]("crc_fail") > 0L ||
-      !trunc.getAs[Boolean]("records_match"),
-      "truncated shard surfaced neither as crc_fail nor as a recount " +
-        "mismatch")
-    val gone = faulty(name(2))
-    assert(gone.isNullAt(gone.fieldIndex("records_match")) ||
-      !gone.getAs[Boolean]("records_match"),
-      "deleted shard still records_match=true")
-    assert(gone.getAs[Long]("n_records") === 0L)
-    // fault 4: a CRC-VALID manifest rewrite that lies about the
-    // exported ids — record and piece counts untouched, so the r16
-    // consumer (counts only) passed it; ids_match must now fail on
-    // every shard the earlier faults left intact
-    locally {
-      val m = spark.read.parquet(s"$published/manifest")
-        .withColumn("id_sum", col("id_sum") + lit(1L))
-        .localCheckpoint() // materialize before overwriting the source
-      m.coalesce(1).write.mode("overwrite").parquet(s"$published/manifest")
-    }
-    val lied = consume().map(r => r.getString(0) -> r).toMap
-    val untouched = lied.keySet -- Set(name(0), name(1), name(2))
-    assert(untouched.nonEmpty, "no shard untouched by faults 1-3")
-    untouched.foreach { sh =>
-      val r = lied(sh)
-      assert(!r.getAs[Boolean]("ids_match"),
-        s"manifest id_sum lie not caught on $sh")
-      assert(r.getAs[Boolean]("records_match") &&
-        r.getAs[Boolean]("pieces_match"),
-        s"counts should still match on $sh (the lie is ids-only)")
+    withTempCorpus("graft-release-consume") { dir =>
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def consume() =
+        SparkEntry.queries("t139_release_consume")(spark, dir).collect()
+      val clean = consume()
+      assert(clean.nonEmpty, "consumer saw an empty release")
+      clean.foreach { r =>
+        assert(r.getAs[Long]("crc_fail") === 0L, s"crc_fail in $r")
+        assert(r.getAs[Boolean]("records_match"), s"records in $r")
+        assert(r.getAs[Boolean]("pieces_match"), s"pieces in $r")
+        assert(r.getAs[Boolean]("ids_match"), s"ids in $r")
+        assert(r.getAs[Boolean]("keys_match"), s"keys in $r")
+      }
+      val published = graft.sink.Release.resolveLatest(
+        spark.sparkContext.hadoopConfiguration,
+        new java.io.File(ReleaseQueries.releaseRunDirForTest(spark, dir))
+          .getParent).get
+      val shards = Option(new java.io.File(s"$published/tfrec")
+        .listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.endsWith(".tfrecord")).sortBy(_.getName)
+      assert(shards.length >= 3, s"need ≥3 shards, got ${shards.length}")
+      // drop the Hadoop .crc sidecars of the shards mutated below, so
+      // the OUT-OF-BAND corruption reaches the TFRecord-level CRC32C
+      // instead of tripping ChecksumFileSystem first (TfRecordSpec's
+      // idiom) — a real object store has no sidecars
+      shards.take(3).foreach { f =>
+        java.nio.file.Files.deleteIfExists(
+          java.nio.file.Paths.get(f.getParent, s".${f.getName}.crc"))
+      }
+      // fault 1: flip one byte mid-data in shard 0 → that record's
+      // CRC32C fails → crc_fail > 0 (and the decode is skipped, so the
+      // audit itself survives the garbage bytes)
+      locally {
+        val f = shards(0)
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x41).toByte
+        java.nio.file.Files.write(f.toPath, bytes)
+      }
+      // fault 2: truncate shard 1 → the reader quarantines the torn
+      // tail → recount falls short of the manifest
+      locally {
+        val f = shards(1)
+        val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+        java.nio.file.Files.write(f.toPath,
+          java.util.Arrays.copyOf(bytes, bytes.length - 7))
+      }
+      // fault 3: delete shard 2 entirely → manifest row joins nothing
+      assert(shards(2).delete())
+      val faulty = consume().map(r =>
+        r.getString(0) -> r).toMap
+      def name(i: Int) = shards(i).getName.stripSuffix(".tfrecord")
+      assert(faulty(name(0)).getAs[Long]("crc_fail") > 0L,
+        "flipped byte did not surface as crc_fail")
+      val trunc = faulty(name(1))
+      assert(trunc.getAs[Long]("crc_fail") > 0L ||
+        !trunc.getAs[Boolean]("records_match"),
+        "truncated shard surfaced neither as crc_fail nor as a recount " +
+          "mismatch")
+      val gone = faulty(name(2))
+      assert(gone.isNullAt(gone.fieldIndex("records_match")) ||
+        !gone.getAs[Boolean]("records_match"),
+        "deleted shard still records_match=true")
+      assert(gone.getAs[Long]("n_records") === 0L)
+      // fault 4: a CRC-VALID manifest rewrite that lies about the
+      // exported ids — record and piece counts untouched, so the r16
+      // consumer (counts only) passed it; ids_match must now fail on
+      // every shard the earlier faults left intact
+      locally {
+        val m = spark.read.parquet(s"$published/manifest")
+          .withColumn("id_sum", col("id_sum") + lit(1L))
+          .localCheckpoint() // materialize before overwriting the source
+        m.coalesce(1).write.mode("overwrite").parquet(s"$published/manifest")
+      }
+      val lied = consume().map(r => r.getString(0) -> r).toMap
+      val untouched = lied.keySet -- Set(name(0), name(1), name(2))
+      assert(untouched.nonEmpty, "no shard untouched by faults 1-3")
+      untouched.foreach { sh =>
+        val r = lied(sh)
+        assert(!r.getAs[Boolean]("ids_match"),
+          s"manifest id_sum lie not caught on $sh")
+        assert(r.getAs[Boolean]("records_match") &&
+          r.getAs[Boolean]("pieces_match"),
+          s"counts should still match on $sh (the lie is ids-only)")
+      }
     }
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftExtensions
 import graft.ops.{Joins, Sessions}
 
 class SessionsRangeSpec extends SparkSpec {
@@ -44,7 +43,6 @@ class SessionsRangeSpec extends SparkSpec {
   }
 
   test("SQL extension registration exposes custom functions") {
-    GraftExtensions.register(spark)
     Seq(Tuple1("the quick brown fox jumps")).toDF("text")
       .createOrReplaceTempView("ext_docs")
     val row = spark.sql(
@@ -88,7 +86,6 @@ class SessionsRangeSpec extends SparkSpec {
       .head().getSeq[String](0)
     assert(small === Seq("a", "b"))
     // SQL surface
-    GraftExtensions.register(spark)
     vals.toDF("v").createOrReplaceTempView("kmv_in")
     val viaSql = spark.sql(
       "SELECT graft_bottom_k_strings(md5(v), 8) FROM kmv_in")

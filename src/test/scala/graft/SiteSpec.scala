@@ -27,7 +27,8 @@ class SiteSpec extends SparkSpec {
       (header ++ data).mkString("\n").getBytes("UTF-8"))
   }
 
-  test("TOML-driven site pipeline runs L0→L1→L2") {
+  /** A two-bale site (96 scans) and its TOML metafile. */
+  private def twoBaleSite(): Site.Spec = {
     val root = Files.createTempDirectory("site")
     val sub = Files.createDirectory(root.resolve("fielddata"))
     writeBale(sub, 1, 0 until 48)
@@ -46,22 +47,40 @@ class SiteSpec extends SparkSpec {
         |bales_start = 1
         |bales_stop = 2
         |""".stripMargin)
+    Site.fromToml(spark, toml.toString, root.toString)
+  }
 
-    val site = Site.fromToml(spark, toml.toString, root.toString)
+  test("TOML-driven site pipeline runs L0→L1→L2") {
+    val site = twoBaleSite()
     assert(site.site === "FS_TEST")
     assert(site.udgTarget === "TCDT(m)")
 
-    val l1 = site.level1()
-    assert(l1.count() === 96)
-    val l2 = site.level2(l1).cache()
-    assert(l2.count() === 96)
-    assert(l2.columns.contains("TCDT(m)"))
-    assert(l2.columns.contains("t_air(C)"))
-    assert(l2.columns.contains("EC_1(microS)"))
-    assert(!l2.columns.contains("RECORD"))
-    // normalised UDG ≈ 2.065 - 2.06
-    val udg = l2.agg(avg(col("TCDT(m)"))).head().getDouble(0)
-    assert(math.abs(udg - 0.005) < 1e-6)
+    site.withLevel1 { (l1, _) =>
+      assert(l1.count() === 96)
+      val l2 = site.level2(l1).cache()
+      try {
+        assert(l2.count() === 96)
+        assert(l2.columns.contains("TCDT(m)"))
+        assert(l2.columns.contains("t_air(C)"))
+        assert(l2.columns.contains("EC_1(microS)"))
+        assert(!l2.columns.contains("RECORD"))
+        // normalised UDG ≈ 2.065 - 2.06
+        val udg = l2.agg(avg(col("TCDT(m)"))).head().getDouble(0)
+        assert(math.abs(udg - 0.005) < 1e-6)
+      } finally l2.unpersist()
+    }
+  }
+
+  test("withLevel1 reads the bales in one scan stage, an action on the " +
+    "product included") {
+    val site = twoBaleSite()
+    val (_, scanStages) = jobsAndScanStagesDuring {
+      assert(site.withLevel1 { (l1, _) => l1.count() } === 96)
+    }
+    // the pass into the cache reads the bales; the action reads the
+    // cache. A Level-1 plan that learns its all-null columns by running
+    // the pass, with no cache, reads them again for the action: 2.
+    assert(scanStages === 1, s"the bales were read by $scanStages stages")
   }
 
   test("TOML onefile dataset with serviced discovery") {
@@ -83,7 +102,8 @@ class SiteSpec extends SparkSpec {
         |serviced = true
         |""".stripMargin)
     val site = Site.fromToml(spark, toml.toString, root.toString)
-    val l1 = site.level1()
-    assert(l1.count() === 30) // 24 from the file + 6 serviced
+    site.withLevel1 { (l1, _) =>
+      assert(l1.count() === 30) // 24 from the file + 6 serviced
+    }
   }
 }

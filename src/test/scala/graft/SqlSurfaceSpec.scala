@@ -2,20 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftExtensions, SketchExpressions,
-  BloomExpressions}
+import graft.functions.SketchExpressions
 import graft.ops.TextOps
 
-/** The plain-SQL surface (`GraftExtensions`): every registered
-  * function must be callable from `spark.sql` and agree with its
-  * Column-API twin — a SQL-only user gets the same engine. */
+/** The plain-SQL surface (`GraftExtensions`, which every
+  * `GraftSession` installs): every registered function must be
+  * callable from `spark.sql` and agree with its Column-API twin — a
+  * SQL-only user gets the same engine. */
 class SqlSurfaceSpec extends SparkSpec {
 
   import spark.implicits._
 
   test("bloom filter + might_contain compose in SQL and match the " +
     "Column API") {
-    GraftExtensions.register(spark)
     Seq("a", "b", "c").toDF("w").createOrReplaceTempView("sql_words")
     Seq("a", "x", "c", "y").toDF("probe")
       .createOrReplaceTempView("sql_probes")
@@ -33,7 +32,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("misra_gries in SQL returns the same candidate set as the " +
     "Column API") {
-    GraftExtensions.register(spark)
     val words = Seq.fill(40)("hot") ++ Seq.fill(12)("warm") ++
       (0 until 20).map(i => s"cold$i")
     words.toDF("w").createOrReplaceTempView("sql_mg")
@@ -51,7 +49,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("lang_id / text_stats / token_chunks / window_hashes run in " +
     "SQL and match the Column API on real docs") {
-    GraftExtensions.register(spark)
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(50).createOrReplaceTempView("sql_docs")
     val sql = spark.sql(

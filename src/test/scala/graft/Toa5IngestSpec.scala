@@ -62,34 +62,33 @@ class Toa5IngestSpec extends SparkSpec {
       (10 to 19).map(i => (i + 91, i)))
     writeBale(dir, 3, (20 to 24).map(i => (i + 81, i)))
 
-    val l1 = Level1.run(spark,
-      Seq(Level1.Source(dir.toString, 1, 3))).cache()
-
-    assert(l1.count() === 25) // 25 unique timestamps
-    assert(!l1.columns.contains("AllNan"), "all-NAN column must drop")
-    val first = l1.orderBy("TIMESTAMP").head()
-    val last = l1.orderBy(col("TIMESTAMP").desc).head()
-    assert(first.getAs[java.sql.Timestamp]("TIMESTAMP").toString
-      .startsWith("2021-04-30 18:00"))
-    assert(last.getAs[Long]("RECORD") === 105L)
-    // keep-first: ts index 6 appeared in bale1 (record 7) and bale2
-    // (record 100) — bale1 wins
-    val dup = l1.where(col("TIMESTAMP") === lit(ts(6))).head()
-    assert(dup.getAs[Long]("RECORD") === 7L)
-    // typed columns
-    assert(l1.schema("TCDT").dataType.typeName === "double")
-    assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
+    Level1.withProduct(spark, Seq(Level1.Source(dir.toString, 1, 3))) {
+      (l1, _) =>
+        assert(l1.count() === 25) // 25 unique timestamps
+        assert(!l1.columns.contains("AllNan"), "all-NAN column must drop")
+        val first = l1.orderBy("TIMESTAMP").head()
+        val last = l1.orderBy(col("TIMESTAMP").desc).head()
+        assert(first.getAs[java.sql.Timestamp]("TIMESTAMP").toString
+          .startsWith("2021-04-30 18:00"))
+        assert(last.getAs[Long]("RECORD") === 105L)
+        // keep-first: ts index 6 appeared in bale1 (record 7) and bale2
+        // (record 100) — bale1 wins
+        val dup = l1.where(col("TIMESTAMP") === lit(ts(6))).head()
+        assert(dup.getAs[Long]("RECORD") === 7L)
+        // typed columns
+        assert(l1.schema("TCDT").dataType.typeName === "double")
+        assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
+    }
   }
 
-  test("runObserved reports in/out row counts as job metrics") {
+  test("withProduct reports in/out row counts as job metrics") {
     val dir = Files.createTempDirectory("toa5o")
     writeBale(dir, 1, (0 to 9).map(i => (i + 1, i)))
     writeBale(dir, 2, (5 to 9).map(i => (i + 50, i))) // 5 dup timestamps
-    val (df, obsIn, obsOut) = graft.pipeline.Level1.runObserved(spark,
-      Seq(graft.pipeline.Level1.Source(dir.toString, 1, 2)))
-    df.write.format("noop").mode("overwrite").save()
-    assert(obsIn.get("rows_in") === 15L)
-    assert(obsOut.get("rows_out") === 10L)
+    val rows = Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 2))) { (_, rows) => rows }
+    assert(rows.in === 15L)
+    assert(rows.out === 10L)
   }
 
   test("exact duplicate rows collapse in the keep-first dedup alone") {
@@ -100,12 +99,12 @@ class Toa5IngestSpec extends SparkSpec {
     writeBale(dir, 1, Seq((1, 0), (2, 1), (2, 1), (3, 2), (4, 3)))
     // bale 2 overlaps ts 2..3 (bale 1 wins) and repeats its own ts 4 row
     writeBale(dir, 2, Seq((60, 2), (61, 3), (62, 4), (62, 4), (63, 5)))
-    val (df, obsIn, obsOut) = Level1.runObserved(spark,
-      Seq(Level1.Source(dir.toString, 1, 2)))
-    df.write.format("noop").mode("overwrite").save()
-    assert(obsIn.get("rows_in") === 10L)
-    assert(obsOut.get("rows_out") === 6L)
-    val rows = df.orderBy("TIMESTAMP").collect()
+    val (counts, rows) = Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 2))) { (df, counts) =>
+      (counts, df.orderBy("TIMESTAMP").collect())
+    }
+    assert(counts.in === 10L)
+    assert(counts.out === 6L)
     assert(rows.map(_.getAs[java.sql.Timestamp]("TIMESTAMP").toString
       .take(16)).toSeq === (0 to 5).map(ts))
     assert(rows.map(_.getAs[Long]("RECORD")).toSeq ===
@@ -157,11 +156,13 @@ class Toa5IngestSpec extends SparkSpec {
     writeBale(dir, 2, Seq((50, 4), (51, 5)))
     val b2 = dir.resolve("MainTable2.dat")
     Files.writeString(b2, Files.readString(b2).replace(",NAN", ",7.5"))
-    val l1 = Level1.run(spark, Seq(Level1.Source(dir.toString, 1, 2)))
-    assert(l1.columns.contains("AllNan"))
-    val rows = l1.orderBy("TIMESTAMP").collect()
+    val (cols, rows) = Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 2))) { (l1, _) =>
+      (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
+    }
+    assert(cols.contains("AllNan"))
     assert(rows.map(_.getAs[Long]("RECORD")).toSeq === (1L to 6L).toSeq)
-    assert(rows.forall(_.isNullAt(l1.columns.indexOf("AllNan"))))
+    assert(rows.forall(_.isNullAt(cols.indexOf("AllNan"))))
   }
 
   test("a column only a later source has: the all-null drop and the " +
@@ -185,7 +186,7 @@ class Toa5IngestSpec extends SparkSpec {
       (3 to 4).map(i => i -> Seq(s"-${i + 1}.0", "NAN", s"$i.5")))
     val (cols, rows) = Level1.withProduct(spark, Seq(
       Level1.Source(a.toString, 1, 1), Level1.Source(b.toString, 1, 1))) {
-      l1 => (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
+      (l1, _) => (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
     }
     assert(cols === Seq("TIMESTAMP", "RECORD", "T107_C", "Z"))
     assert(rows.map(r => Option(r.getAs[Any]("Z"))).toSeq ===
@@ -207,9 +208,11 @@ class Toa5IngestSpec extends SparkSpec {
     bale(1, (0 to 3).map(i => (i, -1.0)))
     bale(2, (2 to 5).map(i => (i, -2.0))) // ts 2..3 lose to bale 1
     bale(3, (5 to 6).map(i => (i, -3.0))) // ts 5 loses to bale 2
-    val l1 = Level1.run(spark, Seq(Level1.Source(dir.toString, 1, 3)))
-    assert(!l1.columns.contains("RECORD"))
-    val rows = l1.orderBy("TIMESTAMP").collect()
+    val (cols, rows) = Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 3))) { (l1, _) =>
+      (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
+    }
+    assert(!cols.contains("RECORD"))
     assert(rows.map(_.getAs[Double]("T107_C")).toSeq ===
       Seq(-1.0, -1.0, -1.0, -1.0, -2.0, -2.0, -3.0))
   }
@@ -224,18 +227,20 @@ class Toa5IngestSpec extends SparkSpec {
     Files.move(svDir.resolve("MainTable9.dat"),
       sv.resolve("x_MainTable_sv.dat"))
 
-    val l1 = Level1.run(spark,
-      Seq(Level1.Source(dir.toString, 1, 1, serviced = true)))
-    assert(l1.count() === 15)
-    // ts 8 came from the bale (record 9), not the serviced re-send (208)
-    val r8 = l1.where(col("TIMESTAMP") === lit(ts(8))).head()
-    assert(r8.getAs[Long]("RECORD") === 9L)
+    Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 1, serviced = true))) { (l1, _) =>
+      assert(l1.count() === 15)
+      // ts 8 came from the bale (record 9), not the serviced re-send (208)
+      val r8 = l1.where(col("TIMESTAMP") === lit(ts(8))).head()
+      assert(r8.getAs[Long]("RECORD") === 9L)
+    }
 
     // two matches -> no append
     Files.writeString(sv.resolve("y_MainTable_2.dat"), "junk")
-    val l1b = Level1.run(spark,
-      Seq(Level1.Source(dir.toString, 1, 1, serviced = true)))
-    assert(l1b.count() === 10)
+    Level1.withProduct(spark,
+      Seq(Level1.Source(dir.toString, 1, 1, serviced = true))) { (l1b, _) =>
+      assert(l1b.count() === 10)
+    }
   }
 
   test("UDG filter is key-isolated across stations") {
@@ -287,10 +292,12 @@ class Toa5IngestSpec extends SparkSpec {
     // every bale re-sends timestamp 0 with a record equal to its bale
     // number — keep-first must pick bale 1's record across all 100
     (1 to 100).foreach(n => writeBale(dir, n, Seq((n, 0), (1000 + n, n))))
-    val l1 = Level1.run(spark, Seq(Level1.Source(dir.toString, 1, 100)))
-    assert(l1.count() === 101) // ts 0 + unique ts 1..100
-    assert(l1.where(col("TIMESTAMP") === lit(ts(0))).head()
-      .getAs[Long]("RECORD") === 1L)
+    Level1.withProduct(spark, Seq(Level1.Source(dir.toString, 1, 100))) {
+      (l1, _) =>
+        assert(l1.count() === 101) // ts 0 + unique ts 1..100
+        assert(l1.where(col("TIMESTAMP") === lit(ts(0))).head()
+          .getAs[Long]("RECORD") === 1L)
+    }
     // and the raw read tags files 0..99 in caller order, not glob order
     val raw = Toa5.read(spark, Toa5.balePaths(dir.toString, 1, 100))
     val seqs = raw.select(Toa5.FileOrderCol).distinct().count()
@@ -301,10 +308,11 @@ class Toa5IngestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("toa5one")
     writeBale(dir, 7, (0 to 9).map(i => (i + 1, i)))
     Files.move(dir.resolve("MainTable7.dat"), dir.resolve("single.dat"))
-    val l1 = Level1.run(spark,
-      Seq(Level1.Source.onefile(dir.toString, "single.dat")))
-    assert(l1.count() === 10)
-    assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
+    Level1.withProduct(spark,
+      Seq(Level1.Source.onefile(dir.toString, "single.dat"))) { (l1, _) =>
+      assert(l1.count() === 10)
+      assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
+    }
   }
 
   test("DTC plain-CSV ingest drops housekeeping and types depths") {
