@@ -77,8 +77,11 @@ object GraftSession {
 
   /** Runs `body` in the live session or a new one, and stops the
     * session afterwards only if this call started it: a caller's
-    * session (a spec, or a harness that drives `main` in its own JVM)
-    * outlives the call. */
+    * session (a spec, or a harness that drives `Bench`, `Verify`,
+    * `Explain` or `DataGen` in its own JVM) outlives the call. `Cli`
+    * does not come here: a `Cli` call takes `getOrCreate` and leaves
+    * its session for later calls in the same JVM, and JVM exit stops
+    * it. */
   def run[A](body: SparkSession => A): A = {
     val pre = SparkSession.getDefaultSession
       .orElse(SparkSession.getActiveSession)

@@ -27,7 +27,8 @@ object Ranges {
     * covers `EC(<n>)`, anything else matches only itself. (An earlier
     * generic `family\(n\)` default silently matched NOTHING for the
     * four TDR family keys — TDR columns are named `TDR1_VWC`-style —
-    * so their physical ranges were never applied.) */
+    * so their physical ranges were never applied.) All clamps land in
+    * one `withColumns` projection. */
   def applyValidRanges(df: DataFrame,
                        ranges: Map[String, (Double, Double)],
                        expand: String => String = key => {
@@ -46,9 +47,11 @@ object Ranges {
         val re = expand(key)
         df.columns.filter(_.matches(re)).map(_ -> mm).toSeq
     }
-    targets.foldLeft(df) { case (d, (c, (lo, hi))) =>
-      d.withColumn(c, clampToNull(col(c), lo, hi))
+    // a column two keys match gets both clamps, composed
+    val clamped = targets.groupMap(_._1)(_._2).map { case (c, mms) =>
+      c -> mms.foldLeft(col(c)) { case (e, (lo, hi)) => clampToNull(e, lo, hi) }
     }
+    if (clamped.isEmpty) df else df.withColumns(clamped)
   }
 
   /** P5 — quality-flag mask: keep `value` iff `qmin <= flag <= qmax`,

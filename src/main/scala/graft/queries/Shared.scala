@@ -40,11 +40,6 @@ object Shared {
     }).getOrElse(df)
   }
 
-  /** Near-dup cluster labels for the documents table — the ONE place
-    * the shingle→LSH-star-edge→connected-components pipeline is invoked
-    * (t12/d5/t56/t57 all consume this). Returns (doc_id, cluster_id),
-    * singletons self-labeled. See `Dedup.clusterLabels` for the
-    * materialize-once contract at corpus scale. */
   /** Deterministic train-order shuffle (t67's engine): shard = the
     * first `shardHexWidth` hex chars of md5("shuf42:" + doc_id) →
     * 16^width shards, position = rank within shard. Each shard sorts
@@ -69,6 +64,11 @@ object Shared {
       .select(col("doc_id"), col("shard"), col("pos"))
   }
 
+  /** Near-dup cluster labels for the documents table — the ONE place
+    * the shingle→LSH-star-edge→connected-components pipeline is invoked
+    * (t12/d5/t56/t57 all consume this). Returns (doc_id, cluster_id),
+    * singletons self-labeled. See `Dedup.clusterLabels` for the
+    * materialize-once contract at corpus scale. */
   private[queries] def neardupLabels(s: SparkSession,
                                      dir: String): DataFrame = {
     val docs = T(s, dir, "documents").select(col("doc_id"),

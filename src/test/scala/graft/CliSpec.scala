@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** The operational wrappers: default reference layout, the -ow
@@ -9,50 +9,7 @@ import org.apache.spark.sql.functions._
   * consumes the in-memory L1 plan, not the round-tripped CSV). */
 class CliSpec extends SparkSpec {
 
-  private def ts(i: Int): String =
-    java.time.LocalDateTime.of(2021, 4, 30, 0, 0)
-      .plusMinutes(i.toLong * 15).toString.replace('T', ' ')
-
-  private def writeBale(dir: Path, n: Int, rows: Range): Unit = {
-    val header = Seq(
-      """"TOA5","1","CR800","1","CR800.Std","CPU:t","1","MainTable"""",
-      """"TIMESTAMP","RECORD","T107_C","TCDT","Q","DT","EC(1)","EC(2)"""",
-      """"TS","RN","Deg C","m","","m","mV","mV"""",
-      """"","","Smp","Smp","Smp","Smp","Smp","Smp"""")
-    val data = rows.map { i =>
-      s""""${ts(i)}",${i + 1},${-4.0 + (i % 3) * 0.1},2.065,170,0.4,0.93,0.95"""
-    }
-    Files.write(dir.resolve(s"MainTable$n.dat"),
-      (header ++ data).mkString("\n").getBytes("UTF-8"))
-  }
-
-  private def siteTree(): Path = {
-    val root = Files.createTempDirectory("cli")
-    val sub = Files.createDirectories(root.resolve("fielddata"))
-    writeBale(sub, 1, 0 until 48)
-    writeBale(sub, 2, 48 until 96)
-    Files.createDirectories(root.resolve("firn_stations/ppconfig"))
-    Files.writeString(root.resolve("firn_stations/ppconfig/fs9.toml"),
-      """site = 'fs9'
-        |tz = 'UTC'
-        |[level0_1]
-        |udg_key = 'TCDT'
-        |[level1_2]
-        |remove_columns = ["RECORD", "DT"]
-        |udg_height_change = [[2021-04-30, 2.06]]
-        |[level0.fielddata]
-        |subpath = 'fielddata'
-        |bales_start = 1
-        |bales_stop = 2
-        |""".stripMargin)
-    root
-  }
-
-  /** The Level-1 CSV's single part file. */
-  private def partFile(csvDir: String): Path =
-    Files.list(java.nio.file.Paths.get(csvDir)).toArray
-      .map(_.asInstanceOf[Path])
-      .filter(_.getFileName.toString.startsWith("part-")).head
+  import CliFixture.{partFile, siteTree}
 
   test("l1 + l2 over the default layout; guard refuses, -ow forces") {
     val root = siteTree().toString
@@ -290,5 +247,52 @@ class CliSpec extends SparkSpec {
     val spare = nc.vars.find(_.name == "Spare")
     assert(spare.isDefined, s"no Spare variable in ${nc.vars.map(_.name)}")
     assert(nc.data(spare.get).forall(_.isNaN))
+  }
+
+  test("calls that share the session carry no state from one to the " +
+    "next") {
+    val root = CliFixture.station(Files.createTempDirectory("clishared"),
+      "fsa")
+    CliFixture.station(root, "fsb", extra = Seq("HS", "T_box"))
+    val dataRoot = root.toString
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    /** One call; returns what it printed, after checking that it left
+      * nothing cached. */
+    def call(args: String*): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(Cli.main(args.toArray))
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"${args.mkString(" ")} left a frame in the cache manager")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
+        s"${args.mkString(" ")} left persisted blocks behind")
+      out.toString("UTF-8")
+    }
+    /** l1 then l2 for `site`; returns the printed row counts and the
+      * bytes of the L1 CSV, the L2 CSV and the NetCDF. */
+    def station(site: String, ow: Boolean): (String, Seq[Seq[Byte]]) = {
+      val force = if (ow) Seq("-ow") else Nil
+      val printed = call(Seq("l1", site, "-data_root", dataRoot) ++ force: _*)
+      call(Seq("l2", site, "-data_root", dataRoot) ++ force: _*)
+      val l2 = Cli.l2DefaultPath(dataRoot, site)
+      val files = Seq(partFile(Cli.l1DefaultPath(dataRoot, site)),
+        partFile(l2), java.nio.file.Paths.get(l2.stripSuffix(".csv") + ".nc"))
+      (printed.linesIterator.filter(_.contains("level-1 rows")).mkString,
+        files.map(f => Files.readAllBytes(f).toSeq))
+    }
+    val (rowsA, first) = station("fsa", ow = false)
+    val (_, b) = station("fsb", ow = false)
+    val (rowsA2, again) = station("fsa", ow = true)
+    assert(rowsA === "[cli] level-1 rows: 96 ingested, 96 after the " +
+      "keep-first dedup")
+    // the per-call Observations report this call's rows, not a sum
+    assert(rowsA2 === rowsA)
+    Seq("L1 CSV", "L2 CSV", "NetCDF").zipWithIndex.foreach { case (p, i) =>
+      assert(again(i) === first(i), s"station A's $p changed")
+    }
+    // station B's extra columns reached its products, not A's
+    val header = (bytes: Seq[Byte]) =>
+      new String(bytes.toArray, "UTF-8").linesIterator.next()
+    assert(header(b(1)).contains("HS") && !header(first(1)).contains("HS"))
   }
 }

@@ -215,6 +215,20 @@ class OpsSpec extends SparkSpec {
     assert(out(0).getDouble(2) === 0.7) // EC family still covered
   }
 
+  test("valid ranges: a column two range keys match gets both clamps") {
+    // EC(1) is matched by its own name and by the EC family key; a
+    // value outside either range is null, whichever key comes first
+    val df = Seq((0.7, 0.7), (0.9, 0.9), (0.97, 0.97)).toDF("EC(1)", "EC(2)")
+    val ranges = Seq("EC(1)" -> (0.8, 1.0), "EC" -> (0.5, 0.95))
+    Seq(ranges, ranges.reverse).foreach { rs =>
+      val out = graft.ops.Ranges.applyValidRanges(df, rs.toMap)
+        .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+      // EC(2) gets the family clamp alone
+      assert(out === Seq((None, Some(0.7)), (Some(0.9), Some(0.9)),
+        (None, None)), rs)
+    }
+  }
+
   test("trainShuffle: shard width is a real knob — width 4 shards by " +
     "4 hex chars, keeps every doc exactly once, positions contiguous") {
     val docs = spark.read
