@@ -8,7 +8,8 @@ object Bench {
     // Checked before the session starts; an empty list times nothing.
     val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"),
       "SPARK_GRAFT_ONLY")
-    val failed = GraftSession.run(timeAll(_, sfDir, selected))
+    val failed = GraftSession.run(timeAll(_, sfDir, selected),
+      stopIfStarted = true)
     if (failed.nonEmpty) sys.exit(1)
   }
 

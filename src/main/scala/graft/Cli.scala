@@ -28,14 +28,10 @@ import graft.sink.{NetCdf, Writers}
   * each path, so guards work on any URI the write side accepts, not
   * just the local filesystem.
   *
-  * A call runs in the live session or starts one, and leaves it running
-  * for later calls in the same JVM: a program that runs `l1` and `l2`
-  * over its stations pays one SparkContext start, and its later calls
-  * reuse the generated classes the first compiled. Spark's shutdown
-  * hook stops the session when the JVM exits, so a call from the shell
-  * ends as before. Nothing a call caches outlives it: `l1`'s and `l2`'s
-  * frames are unpersisted in `finally` blocks, and the `ContextCleaner`
-  * drops broadcasts and shuffle files on `GraftSession`'s periodic GC.
+  * A call runs in the JVM's session (`GraftSession.run`), so later calls
+  * in the same JVM (`Stations`) reuse it; `l1`'s and `l2`'s frames are
+  * unpersisted in `finally` blocks, so nothing a call caches outlives
+  * it.
   */
 object Cli {
 
@@ -152,46 +148,46 @@ object Cli {
     val a = parse(argv)
     val metafile = a.metafile.getOrElse(
       s"${a.dataRoot}/firn_stations/ppconfig/${a.site}.toml")
-    // left running for the next call in this JVM; JVM exit stops it
-    val spark = GraftSession.getOrCreate()
-    val site = Site.fromToml(spark, metafile, a.dataRoot)
-    a.cmd match {
-      case "l1" =>
-        val out = a.outfile.getOrElse(l1DefaultPath(a.dataRoot, a.site))
-        guard(spark, out, a.ow, "Level-1")
-        // one read of the bales; written from the cache in the time
-        // order the pass keeps. The row counts around the dedup, as
-        // the reference prints them (fs_pp.py:98-104)
-        val rows = site.withLevel1 { (l1, rows) =>
-          Writers.csvSingle(l1, out, sortCols = Seq(site.cfg.tsCol))
-          rows
-        }
-        println(s"[cli] level-1 rows: ${rows.in} ingested, ${rows.out} " +
-          "after the keep-first dedup")
-        println(s"[cli] level-1 written: $out")
-      case "l2" =>
-        val outCsv = a.outfile.getOrElse(l2DefaultPath(a.dataRoot, a.site))
-        val outNc = outCsv.stripSuffix(".csv") + ".nc"
-        guard(spark, outCsv, a.ow, "Level-2")
-        guard(spark, outNc, a.ow, "Level-2 NetCDF")
-        val l1Path = a.l1file.getOrElse(l1DefaultPath(a.dataRoot, a.site))
-        // ONE Level-2 execution feeds both sinks, as the reference
-        // exports one in-memory dataset (fs_process_l2.py:177-204).
-        // Cached in time order, so both sinks' own time sorts are
-        // satisfied by the cache and do not shuffle again. Released
-        // here: the session outlives the call.
-        val l2 = level2Frame(spark, site, l1Path).persist()
-        try {
-          Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
-          // export-sized driver-side NetCDF (S8) with the reference's
-          // site attribution (fs_process_l2.py:177-192)
-          NetCdf.writeWide(outNc, l2, site.cfg.tsCol,
-            globalAtts = Seq(
-              NetCdf.Att("site", a.site),
-              NetCdf.Att("source", "graft level-2 pipeline"),
-              NetCdf.Att("timezone", "UTC")))
-        } finally l2.unpersist()
-        println(s"[cli] level-2 written: $outCsv, $outNc")
+    GraftSession.run { spark =>
+      val site = Site.fromToml(spark, metafile, a.dataRoot)
+      a.cmd match {
+        case "l1" =>
+          val out = a.outfile.getOrElse(l1DefaultPath(a.dataRoot, a.site))
+          guard(spark, out, a.ow, "Level-1")
+          // one read of the bales; written from the cache in the time
+          // order the pass keeps. The row counts around the dedup, as
+          // the reference prints them (fs_pp.py:98-104)
+          val rows = site.withLevel1 { (l1, rows) =>
+            Writers.csvSingle(l1, out, sortCols = Seq(site.cfg.tsCol))
+            rows
+          }
+          println(s"[cli] level-1 rows: ${rows.in} ingested, ${rows.out} " +
+            "after the keep-first dedup")
+          println(s"[cli] level-1 written: $out")
+        case "l2" =>
+          val outCsv = a.outfile.getOrElse(l2DefaultPath(a.dataRoot, a.site))
+          val outNc = outCsv.stripSuffix(".csv") + ".nc"
+          guard(spark, outCsv, a.ow, "Level-2")
+          guard(spark, outNc, a.ow, "Level-2 NetCDF")
+          val l1Path = a.l1file.getOrElse(l1DefaultPath(a.dataRoot, a.site))
+          // ONE Level-2 execution feeds both sinks, as the reference
+          // exports one in-memory dataset (fs_process_l2.py:177-204).
+          // Cached in time order, so both sinks' own time sorts are
+          // satisfied by the cache and do not shuffle again. Released
+          // here: the session outlives the call.
+          val l2 = level2Frame(spark, site, l1Path).persist()
+          try {
+            Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
+            // export-sized driver-side NetCDF (S8) with the reference's
+            // site attribution (fs_process_l2.py:177-192)
+            NetCdf.writeWide(outNc, l2, site.cfg.tsCol,
+              globalAtts = Seq(
+                NetCdf.Att("site", a.site),
+                NetCdf.Att("source", "graft level-2 pipeline"),
+                NetCdf.Att("timezone", "UTC")))
+          } finally l2.unpersist()
+          println(s"[cli] level-2 written: $outCsv, $outNc")
+      }
     }
   }
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 import graft.functions.GraftExtensions
 
 /** The one session every entry point runs in (`Bench`, `Verify`,
-  * `Cli`, `Explain`, `DataGen`; the specs too): one config, so the plans
-  * `Explain` dumps and `Verify` checks are the plans `Bench` times, and
-  * the engine's SQL functions and optimizer rule in every session. */
+  * `Cli`, `Stations`, `Explain`, `DataGen`; the specs too): one config,
+  * so the plans `Explain` dumps and `Verify` checks are the plans
+  * `Bench` times, and the engine's SQL functions and optimizer rule in
+  * every session. */
 object GraftSession {
 
   /** Cores of the local master: `SPARK_GRAFT_CPUS`, else every
@@ -75,18 +76,24 @@ object GraftSession {
     spark
   }
 
-  /** Runs `body` in the live session or a new one, and stops the
-    * session afterwards only if this call started it: a caller's
-    * session (a spec, or a harness that drives `Bench`, `Verify`,
-    * `Explain` or `DataGen` in its own JVM) outlives the call. `Cli`
-    * does not come here: a `Cli` call takes `getOrCreate` and leaves
-    * its session for later calls in the same JVM, and JVM exit stops
-    * it. */
-  def run[A](body: SparkSession => A): A = {
+  /** Runs `body` in the live session or a new one, and leaves the
+    * session running for later calls in the same JVM: they reuse its
+    * SparkContext and the generated classes it compiled (`Stations`
+    * runs `Cli` l1 and l2 for every station this way), and Spark's
+    * shutdown hook stops it when the JVM exits, so a call from the shell
+    * ends as before. Nothing a call caches may outlive it; broadcasts
+    * and shuffle files go to the `ContextCleaner` on the periodic GC
+    * set above.
+    *
+    * `stopIfStarted` is for `Bench` alone: `perfbench`'s harness runs
+    * `Bench.main` only to capture the SparkConf its context starts with
+    * and then builds its own session with trace listeners, which a
+    * session left running would come back without. */
+  def run[A](body: SparkSession => A, stopIfStarted: Boolean = false): A = {
     val pre = SparkSession.getDefaultSession
       .orElse(SparkSession.getActiveSession)
     val spark = getOrCreate()
     try body(spark)
-    finally if (pre.isEmpty) spark.stop()
+    finally if (stopIfStarted && pre.isEmpty) spark.stop()
   }
 }

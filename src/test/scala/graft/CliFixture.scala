@@ -53,6 +53,13 @@ object CliFixture {
     root
   }
 
+  /** Runs `f` on a new temporary directory, deleted afterwards. */
+  def withTempDir[A](prefix: String)(f: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   /** A new tree holding station fs9. */
   def siteTree(): Path = station(Files.createTempDirectory("cli"), "fs9")
 

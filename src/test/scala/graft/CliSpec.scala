@@ -251,48 +251,80 @@ class CliSpec extends SparkSpec {
 
   test("calls that share the session carry no state from one to the " +
     "next") {
-    val root = CliFixture.station(Files.createTempDirectory("clishared"),
-      "fsa")
-    CliFixture.station(root, "fsb", extra = Seq("HS", "T_box"))
-    val dataRoot = root.toString
-    spark.catalog.clearCache()
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    /** One call; returns what it printed, after checking that it left
-      * nothing cached. */
-    def call(args: String*): String = {
-      val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(out)(Cli.main(args.toArray))
-      assert(spark.sharedState.cacheManager.isEmpty,
-        s"${args.mkString(" ")} left a frame in the cache manager")
-      assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
-        s"${args.mkString(" ")} left persisted blocks behind")
-      out.toString("UTF-8")
+    CliFixture.withTempDir("clishared") { dir =>
+      val root = CliFixture.station(dir, "fsa")
+      CliFixture.station(root, "fsb", extra = Seq("HS", "T_box"))
+      val dataRoot = root.toString
+      spark.catalog.clearCache()
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      /** One call; returns what it printed, after checking that it left
+        * nothing cached. */
+      def call(args: String*): String = {
+        val out = new java.io.ByteArrayOutputStream()
+        Console.withOut(out)(Cli.main(args.toArray))
+        assert(spark.sharedState.cacheManager.isEmpty,
+          s"${args.mkString(" ")} left a frame in the cache manager")
+        assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
+          s"${args.mkString(" ")} left persisted blocks behind")
+        out.toString("UTF-8")
+      }
+      /** l1 then l2 for `site`; returns the printed row counts and the
+        * bytes of the L1 CSV, the L2 CSV and the NetCDF. */
+      def station(site: String, ow: Boolean): (String, Seq[Seq[Byte]]) = {
+        val force = if (ow) Seq("-ow") else Nil
+        val printed = call(Seq("l1", site, "-data_root", dataRoot) ++ force: _*)
+        call(Seq("l2", site, "-data_root", dataRoot) ++ force: _*)
+        val l2 = Cli.l2DefaultPath(dataRoot, site)
+        val files = Seq(partFile(Cli.l1DefaultPath(dataRoot, site)),
+          partFile(l2), java.nio.file.Paths.get(l2.stripSuffix(".csv") + ".nc"))
+        (printed.linesIterator.filter(_.contains("level-1 rows")).mkString,
+          files.map(f => Files.readAllBytes(f).toSeq))
+      }
+      val (rowsA, first) = station("fsa", ow = false)
+      val (_, b) = station("fsb", ow = false)
+      val (rowsA2, again) = station("fsa", ow = true)
+      assert(rowsA === "[cli] level-1 rows: 96 ingested, 96 after the " +
+        "keep-first dedup")
+      // the per-call Observations report this call's rows, not a sum
+      assert(rowsA2 === rowsA)
+      Seq("L1 CSV", "L2 CSV", "NetCDF").zipWithIndex.foreach { case (p, i) =>
+        assert(again(i) === first(i), s"station A's $p changed")
+      }
+      // station B's extra columns reached its products, not A's
+      val header = (bytes: Seq[Byte]) =>
+        new String(bytes.toArray, "UTF-8").linesIterator.next()
+      assert(header(b(1)).contains("HS") && !header(first(1)).contains("HS"))
     }
-    /** l1 then l2 for `site`; returns the printed row counts and the
-      * bytes of the L1 CSV, the L2 CSV and the NetCDF. */
-    def station(site: String, ow: Boolean): (String, Seq[Seq[Byte]]) = {
-      val force = if (ow) Seq("-ow") else Nil
-      val printed = call(Seq("l1", site, "-data_root", dataRoot) ++ force: _*)
-      call(Seq("l2", site, "-data_root", dataRoot) ++ force: _*)
-      val l2 = Cli.l2DefaultPath(dataRoot, site)
-      val files = Seq(partFile(Cli.l1DefaultPath(dataRoot, site)),
-        partFile(l2), java.nio.file.Paths.get(l2.stripSuffix(".csv") + ".nc"))
-      (printed.linesIterator.filter(_.contains("level-1 rows")).mkString,
-        files.map(f => Files.readAllBytes(f).toSeq))
+  }
+
+  test("Stations runs l1 then l2 for every site, writing what separate " +
+    "Cli calls write") {
+    CliFixture.withTempDir("stations") { dir =>
+      val root = CliFixture.station(dir, "fsa")
+      CliFixture.station(root, "fsb", extra = Seq("HS"))
+      val dataRoot = root.toString
+      Stations.main(Array("-data_root", dataRoot, "fsa", "fsb"))
+      Seq("fsa", "fsb").foreach { site =>
+        val l1 = root.resolve(s"alone/$site/l1.csv").toString
+        val l2 = root.resolve(s"alone/$site/l2.csv").toString
+        Cli.main(Array("l1", site, "-data_root", dataRoot, "-outfile", l1))
+        Cli.main(Array("l2", site, "-data_root", dataRoot, "-l1file", l1,
+          "-outfile", l2))
+        val atDefault = Cli.l2DefaultPath(dataRoot, site)
+        Seq(partFile(Cli.l1DefaultPath(dataRoot, site)) -> partFile(l1),
+          partFile(atDefault) -> partFile(l2),
+          java.nio.file.Paths.get(atDefault.stripSuffix(".csv") + ".nc") ->
+            java.nio.file.Paths.get(l2.stripSuffix(".csv") + ".nc"))
+          .foreach { case (got, want) =>
+            assert(Files.readAllBytes(got).toSeq ===
+              Files.readAllBytes(want).toSeq, s"$got differs from $want")
+          }
+      }
+      // Cli's guard holds for every call; -ow reaches every call
+      intercept[java.io.IOException] {
+        Stations.main(Array("-data_root", dataRoot, "fsb"))
+      }
+      Stations.main(Array("-data_root", dataRoot, "-ow", "fsa", "fsb"))
     }
-    val (rowsA, first) = station("fsa", ow = false)
-    val (_, b) = station("fsb", ow = false)
-    val (rowsA2, again) = station("fsa", ow = true)
-    assert(rowsA === "[cli] level-1 rows: 96 ingested, 96 after the " +
-      "keep-first dedup")
-    // the per-call Observations report this call's rows, not a sum
-    assert(rowsA2 === rowsA)
-    Seq("L1 CSV", "L2 CSV", "NetCDF").zipWithIndex.foreach { case (p, i) =>
-      assert(again(i) === first(i), s"station A's $p changed")
-    }
-    // station B's extra columns reached its products, not A's
-    val header = (bytes: Seq[Byte]) =>
-      new String(bytes.toArray, "UTF-8").linesIterator.next()
-    assert(header(b(1)).contains("HS") && !header(first(1)).contains("HS"))
   }
 }
