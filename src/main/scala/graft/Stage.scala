@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Per-corpus staging: the one place that keys, publishes and
-  * revalidates state derived from a corpus snapshot. Reuse is sound
-  * only because every artifact and memo entry is keyed to what it was
-  * computed from: an in-place corpus rewrite (the engine's own
-  * CDC/compaction sinks do this) changes the fingerprint and so misses
-  * everything built from the old bytes. */
+  * revalidates state derived from a corpus snapshot — staged
+  * artifacts, in-JVM memos, and the parquet schema catalog every
+  * query read goes through ([[parquet]]). Reuse is sound only because
+  * every artifact and memo entry is keyed to what it was computed
+  * from: an in-place corpus rewrite (the engine's own CDC/compaction
+  * sinks do this) changes the fingerprint and so misses everything
+  * built from the old bytes. */
 object Stage {
   private[graft] val Root = "/tmp/graft_staged"
 
@@ -23,31 +26,50 @@ object Stage {
         .digest(dir.getBytes("UTF-8"))
         .take(6).map("%02x".format(_)).mkString
 
-  /** Cheap corpus fingerprint: md5 over the (name, length, mtime) of
-    * every file under `dir/<table>.parquet` — pure filesystem
-    * metadata, zero data read, O(#part-files) namenode/listing calls
-    * (the same cost class as planning a scan of the corpus). An
-    * in-place rewrite by the engine's own CDC/compaction sinks
+  /** Cheap corpus fingerprint: md5 over the sorted (path, length,
+    * mtime) of every file under `dir/<table>.parquet` — pure
+    * filesystem metadata, zero data read. See [[fingerprintOf]]. */
+  def fingerprint(s: SparkSession, dir: String,
+                  table: String = "documents"): String =
+    fingerprintOf(s, s"$dir/$table.parquet")
+
+  /** The fingerprint of the file or directory tree at `path`: one
+    * `listStatus` per directory (the same cost class as planning a
+    * scan of it), no block locations or permissions fetched per file.
+    * It lists exactly the files a recursive `listFiles` returns
+    * (hidden and `_`-prefixed files included, checksum files not), so
+    * the hex value, which names staged artifacts, is that formula's.
+    * An in-place rewrite by the engine's own CDC/compaction sinks
     * changes lengths/mtimes, so stale state can't survive it; a pure
     * re-read never invalidates. */
-  def fingerprint(s: SparkSession, dir: String,
-                  table: String = "documents"): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(conf)
+  private def fingerprintOf(s: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val entries = Vector.newBuilder[String]
+    def walk(st: FileStatus): Unit =
+      if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk)
+      else entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+    fs.listStatus(p).foreach(walk)
     val sb = new StringBuilder
-    val it = fs.listFiles(p, true)
-    var entries = List.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      entries = s"${st.getPath}:${st.getLen}:${st.getModificationTime}" ::
-        entries
-    }
-    entries.sorted.foreach(e => sb.append(e).append('\n'))
+    entries.result().sorted.foreach(e => sb.append(e).append('\n'))
     java.security.MessageDigest.getInstance("MD5")
       .digest(sb.toString.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  private val schemas = new Memo[StructType]
+
+  /** The one parquet read of the query registry: the schema of `path`
+    * is inferred (one footer-reading Spark job) once per application
+    * and snapshot of `path`, then every read passes it as a known
+    * schema, which starts no job. Only the schema is reused, never
+    * data or a plan: each call is a fresh relation with its own
+    * expression ids, so self-joins of two reads stay sound. A rewrite
+    * of `path` changes its fingerprint, and the next read infers
+    * again. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemas.at(s, path, Tuple1(path))(
+      s.read.parquet(path).schema)).parquet(path)
 
   /** The staged artifact `name` of `dir`'s current `table` snapshot:
     * returns its directory `<Root>/<key>/<name>/<fp>`, running `build`
@@ -115,12 +137,18 @@ object Stage {
     * has its own instance. */
   final class Memo[V] {
     private val m = new java.util.concurrent.ConcurrentHashMap[
-      (String, String, String), (String, String, V)]()
+      Product, (String, String, V)]()
     def apply(s: SparkSession, dir: String, table: String = "documents",
-              extra: String = "")(build: => V): V = {
+              extra: String = "")(build: => V): V =
+      at(s, s"$dir/$table.parquet", (dir, table, extra))(build)
+
+    /** The entry `key`, valid while the application and the
+      * fingerprint of `path` are unchanged. */
+    private[Stage] def at(s: SparkSession, path: String, key: Product)
+                         (build: => V): V = {
       val app = s.sparkContext.applicationId
-      val fp = fingerprint(s, dir, table)
-      m.compute((dir, table, extra), (_, c) =>
+      val fp = fingerprintOf(s, path)
+      m.compute(key, (_, c) =>
         if (c != null && c._1 == app && c._2 == fp) c else (app, fp, build)
       )._3
     }

@@ -109,7 +109,7 @@ object AnnQueries {
           col("v")), k, "vec_id", "cid", "v")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    s.read.parquet(path).select("cid", "v")
+    Stage.parquet(s, path).select("cid", "v")
   }
 
   /** TEST hook (StagedLabelsSpec): the staged organic-tag centroids

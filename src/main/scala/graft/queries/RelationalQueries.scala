@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Stage
 import graft.ops._
 import Shared._
 
@@ -106,7 +107,7 @@ object RelationalQueries {
     def ns(t: String) =
       java.time.LocalDateTime.parse(t.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000000L
-    val df = s.read.parquet(s"$dir/events.parquet")
+    val df = Stage.parquet(s, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // timestamp[ns] layout
         df.where(col("ts") >= ns(lo) && col("ts") < ns(hi))

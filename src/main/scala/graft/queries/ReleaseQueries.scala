@@ -1024,7 +1024,7 @@ object ReleaseQueries {
         s.sparkContext.hadoopConfiguration, run.relRoot)
         .getOrElse(throw new IllegalStateException(
           s"no published release under ${run.relRoot}"))
-      val man = s.read.parquet(s"$resolved/manifest")
+      val man = Stage.parquet(s, s"$resolved/manifest")
         .select(col("shard"), col("n_records").as("m_records"),
           col("n_pieces").as("m_pieces"), col("id_sum").as("m_id_sum"),
           col("key_min").as("m_key_min"), col("key_max").as("m_key_max"),

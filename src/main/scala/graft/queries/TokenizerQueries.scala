@@ -186,7 +186,7 @@ object TokenizerQueries {
           .toDF("b", "w").coalesce(1).write.mode("overwrite")
           .parquet(tmp)
       }
-      val rows = s.read.parquet(path)
+      val rows = Stage.parquet(s, path)
         .collect().map(r => r.getString(0) -> r.getLong(1))
       val bias = rows.collectFirst { case ("__bias", v) => v }.get
       val w = rows.filterNot(_._1 == "__bias").toMap

@@ -29,10 +29,8 @@ object Writers {
       .option("header", "true").csv(path)
   }
 
-  // escapes control chars too: attrs were curated metadata, but the
-  // manifest feeds DATA values (min/max of arbitrary columns) through
-  // here — a raw newline inside a JSON string breaks both the JSON
-  // and the one-object-per-line JSONL contract
+  // escapes control chars too: attribute values come from callers,
+  // and a raw newline inside a JSON string breaks the JSON
   private def jstr(s: String): String =
     "\"" + s.flatMap {
       case '\\' => "\\\\"
@@ -122,56 +120,6 @@ object Writers {
       else Nil)
     writeSidecar(df.sparkSession.sparkContext.hadoopConfiguration,
       path, "_attrs.json", fields.mkString("{", ", ", "}"))
-  }
-
-  /** Partitioned parquet write + a `_manifest.jsonl` stats sidecar:
-    * one JSON object per partition with its row count and min/max of
-    * the requested columns — the manifest a planner consults to skip
-    * partitions WITHOUT listing/footer-reading them (the lightweight
-    * version of what table formats keep; t82's z-order stats are the
-    * same idea at file grain). The underscore prefix keeps Spark's
-    * directory scan from tripping on the sidecar; the stats pass is
-    * one partial-agged shuffle of partition-count rows, and the
-    * driver-side collect is partition-count-sized (bounded by the
-    * partition-column cardinality, which a partitioned write already
-    * requires to be modest). All values serialize as strings — the
-    * manifest is planner metadata, not a typed table. */
-  def writeWithManifest(df: DataFrame, path: String,
-                        partitionCols: Seq[String],
-                        statsCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    require(partitionCols.nonEmpty, "writeWithManifest needs partition columns")
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    // stats come from the WRITTEN parquet, never from re-evaluating
-    // df: a non-deterministic or source-shifting input would make the
-    // manifest describe rows that are not in the files (a planner
-    // would then prune wrongly) — and the read-back is cheaper anyway
-    // (column-pruned to the partition + stats columns)
-    val spark = df.sparkSession
-    // explicit schema: an EMPTY input writes no part files, and
-    // schema inference over the bare directory would throw — the
-    // manifest for an empty dataset is legitimately empty, not an
-    // error. Partition columns populate from directory names as usual.
-    val written = spark.read.schema(df.schema).parquet(path)
-    val aggs = count(lit(1)).cast("string").as("rows") +:
-      statsCols.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"min_$c"),
-        max(col(c)).cast("string").as(s"max_$c")))
-    val stats = written.groupBy(partitionCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(partitionCols.map(col): _*)
-      .collect()
-    // all-null stats OMIT their key: "" would be indistinguishable
-    // from a legitimate empty-string min/max, and a planner must be
-    // able to tell "no stats — scan" from "bound is empty string"
-    val lines = stats.map { r =>
-      jobj(r.schema.fieldNames.zipWithIndex.flatMap { case (f, i) =>
-        if (r.isNullAt(i)) None else Some(f -> r.get(i).toString)
-      }.toMap)
-    }
-    writeSidecar(spark.sparkContext.hadoopConfiguration,
-      path, "_manifest.jsonl",
-      if (lines.isEmpty) "" else lines.mkString("", "\n", "\n"))
   }
 
   /** Parse the sidecar back: (global attrs, per-variable attrs). A tiny

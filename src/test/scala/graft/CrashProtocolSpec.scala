@@ -245,17 +245,4 @@ class CrashProtocolSpec extends SparkSpec {
     assert(all(4L) === 0L,
       "post-recovery copy must reject against the recovered bitmap")
   }
-
-  test("writeWithManifest: empty input writes an empty manifest, not a crash") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_emptymf")
-      .resolve("docs").toString
-    val empty = Seq.empty[(Long, String, Long)]
-      .toDF("doc_id", "lang", "n_tok")
-    graft.sink.Writers.writeWithManifest(
-      empty, out, Seq("lang"), Seq("doc_id", "n_tok"))
-    val mf = new java.io.File(out, "_manifest.jsonl")
-    assert(mf.exists())
-    assert(java.nio.file.Files.readString(mf.toPath) === "")
-  }
 }

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.functions._
 
 import graft.sink.Writers
 
@@ -83,30 +81,5 @@ class WritersSpec extends SparkSpec {
     Writers.parquetWithAttrs(df, out2, attrs = Map("site" -> "FS2"))
     val (g2, v2) = Writers.readAttrs(out2)
     assert(g2 === Map("site" -> "FS2") && v2.isEmpty)
-  }
-
-  test("writeWithManifest: partitioned write + per-partition stats sidecar") {
-    val out = Files.createTempDirectory("manif").resolve("docs").toString
-    val df = Seq(
-      (1L, "en", 10L), (2L, "en", 30L), (3L, "fr", 5L), (4L, "de", 7L))
-      .toDF("doc_id", "lang", "n_tok")
-    Writers.writeWithManifest(df, out, Seq("lang"), Seq("doc_id", "n_tok"))
-    // the parquet dir still reads cleanly (sidecar is underscore-hidden)
-    val back = spark.read.parquet(out)
-    assert(back.count() === 4)
-    assert(back.where(col("lang") === "en").count() === 2)
-    val lines = Files.readAllLines(
-      java.nio.file.Paths.get(out, "_manifest.jsonl"))
-    assert(lines.size === 3) // one object per partition value
-    val en = lines.asScala.find(_.contains("\"lang\": \"en\"")).get
-    assert(en.contains("\"rows\": \"2\"") &&
-      en.contains("\"min_doc_id\": \"1\"") &&
-      en.contains("\"max_doc_id\": \"2\"") &&
-      en.contains("\"min_n_tok\": \"10\"") &&
-      en.contains("\"max_n_tok\": \"30\""))
-    // NOTE: Spark's hidden-file filter applies to _-prefixed paths
-    // even when named explicitly, so the manifest is deliberately
-    // driver-read planner metadata (Files/line-parse), not a Spark
-    // table — exactly why the parquet scan above coexists with it.
   }
 }
