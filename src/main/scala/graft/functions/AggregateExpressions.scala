@@ -47,7 +47,7 @@ object AggregateExpressions {
     override def nullable: Boolean = false
 
     // UTF8String's natural order IS UTF-8 byte order — the ordering
-    // every other surface here uses (array_sort, DuckDB, utf8Sorted).
+    // every other surface here uses (array_sort, DuckDB).
     // A TreeSet[String] would order by UTF-16 code units, which
     // diverges when supplementary-plane code points meet U+E000..FFFF
     // and would make "the k smallest distinct" engine-dependent.

@@ -426,116 +426,6 @@ object SketchExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Membership probe against a string set baked into the expression
-    * (binary search, O(log n) per probe): the exact tier of streaming
-    * redaction, where `array_contains(lit(set), x)` would linear-scan
-    * the full eval hash set per window. The set travels with the
-    * serialized expression once per task — eval suites are ~10⁵
-    * 16-char hashes ≈ 2 MB, the documented acceptable bound; a
-    * corpus-sized set wants the broadcast-join shape instead.
-    *
-    * The probe array is (re)sorted HERE under UTF8String (UTF-8 byte)
-    * ordering — the order the binary search compares in. Callers must
-    * not pre-sort with Java String ordering and skip this: the two
-    * orders diverge for strings mixing supplementary code points with
-    * chars in U+E000–U+FFFF (surrogate-pair UTF-16 units sort below
-    * E000 as Java chars but their code points hash above in UTF-8),
-    * which would turn binary search into silent false negatives. */
-  case class SortedSetContainsExpr(child: Expression,
-                                   sortedSet: Array[String])
-    extends UnaryExpression with CodegenFallback {
-
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "graft_sorted_set_contains"
-
-    // built once per deserialized expression instance (per task): an
-    // O(n) sortedness check, and a sort ONLY if the caller didn't
-    // pre-sort in byte order — so hot-path callers that pre-sort
-    // (redactStream) pay a linear scan, not an n-log-n sort of up to
-    // 10⁶ strings per task per batch, while arbitrary callers remain
-    // correct
-    @transient private lazy val keys: Array[UTF8String] = {
-      val ks = sortedSet.map(UTF8String.fromString)
-      var inOrder = true
-      var i = 1
-      while (inOrder && i < ks.length) {
-        if (ks(i - 1).compareTo(ks(i)) > 0) inOrder = false
-        i += 1
-      }
-      if (!inOrder)
-        java.util.Arrays.sort(ks,
-          (a: UTF8String, b: UTF8String) => a.compareTo(b))
-      ks
-    }
-
-    protected override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[UTF8String]
-      var lo = 0
-      var hi = keys.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val c = keys(mid).compareTo(v)
-        if (c == 0) return true
-        else if (c < 0) lo = mid + 1
-        else hi = mid - 1
-      }
-      false
-    }
-
-    override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-  }
-
-  /** Binary-search INDEX of `child` in a sorted string array: the
-    * 0-based position, or −1 when absent. `SortedSetContainsExpr`'s
-    * lookup generalized to return WHERE the key sits, so a parallel
-    * plan-literal array can be probed by `element_at(arr, idx + 1)` —
-    * the shape behind per-host rule dispatch (`robotsGateStream`):
-    * O(log hosts) to find the host's slot, then only THAT host's
-    * rules are walked, never the whole rule corpus per row. Same
-    * UTF-8-byte-order (re)sort-on-deserialize contract as the
-    * contains form — callers that also ship a values array aligned to
-    * `sortedSet` MUST pre-sort the pairs together (the expression
-    * sorting alone would silently misalign the values). */
-  case class SortedIndexOfExpr(child: Expression,
-                               sortedSet: Array[String])
-    extends UnaryExpression with CodegenFallback {
-
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "graft_sorted_index_of"
-
-    @transient private lazy val keys: Array[UTF8String] = {
-      val ks = sortedSet.map(UTF8String.fromString)
-      var i = 1
-      while (i < ks.length) {
-        require(ks(i - 1).compareTo(ks(i)) <= 0,
-          "graft_sorted_index_of: probe array is not in UTF-8 byte " +
-            "order — the caller must sort (with any aligned value " +
-            "array) before building the plan; re-sorting here would " +
-            "silently misalign aligned values")
-        i += 1
-      }
-      ks
-    }
-
-    protected override def nullSafeEval(input: Any): Any = {
-      val v = input.asInstanceOf[UTF8String]
-      var lo = 0
-      var hi = keys.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val c = keys(mid).compareTo(v)
-        if (c == 0) return mid
-        else if (c < 0) lo = mid + 1
-        else hi = mid - 1
-      }
-      -1
-    }
-
-    override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-  }
-
   /** Gopher-style repetition signal from a tokens array in one pass: the
     * fraction of word n-grams duplicating an earlier n-gram of the same
     * document, `1 − distinct/total` as a double; null when there are
@@ -742,41 +632,6 @@ object SketchExpressions {
       : Expression = copy(child = newChild)
   }
 
-  /** Deflate compression ratio (compressed/raw bytes) — the
-    * redundancy quality signal production corpus filters pair with
-    * entropy: templated/boilerplate text compresses far below clean
-    * prose, machine-generated noise barely compresses at all. Level 6,
-    * raw-deflate (no gzip header) so the ratio is a pure redundancy
-    * measure. Deterministic for a fixed JDK zlib, but NOT
-    * engine-portable (DuckDB has no deflate) → no SQL oracle; the
-    * invariants are golden-tested in SketchExprSpec and the gate it
-    * feeds (cleanCorpusStream's minCompress) is spec-tested in
-    * StreamingMultimodalSpec. One map-side pass, byte-bounded
-    * scratch. */
-  case class CompressRatioExpr(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "graft_compress_ratio"
-
-    protected override def nullSafeEval(input: Any): Any = {
-      val raw = input.asInstanceOf[UTF8String].getBytes
-      if (raw.isEmpty) return 1.0
-      val d = new java.util.zip.Deflater(6, true)
-      try {
-        d.setInput(raw)
-        d.finish()
-        val buf = new Array[Byte](1024)
-        var total = 0L
-        while (!d.finished()) total += d.deflate(buf)
-        total.toDouble / raw.length
-      } finally d.end()
-    }
-
-    override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-  }
-
   /** Per-document hashed-feature histogram: counts of t81's 256
     * md5-prefix buckets over unigrams + 2-shingles of a TOKENS array,
     * in one pass — array<long>(256), element b = the number of
@@ -875,31 +730,6 @@ object SketchExpressions {
       JaccardExpr(GraftColumnBridge.expression(a),
         GraftColumnBridge.expression(b)))
 
-  /** Binary-search membership of `c` in a string set (sorted
-    * internally under UTF-8 byte order — no pre-sort contract). */
-  def sortedSetContains(c: Column, sortedSet: Array[String]): Column =
-    GraftColumnBridge.column(
-      SortedSetContainsExpr(GraftColumnBridge.expression(c), sortedSet))
-
-  /** 0-based binary-search index of `c` in `sortedSet` (−1 when
-    * absent). The array must ALREADY be in UTF-8 byte order (use
-    * [[utf8Sorted]]) — unlike `sortedSetContains` this never re-sorts,
-    * because callers align a values array to the same order. */
-  def sortedIndexOf(c: Column, sortedSet: Array[String]): Column =
-    GraftColumnBridge.column(
-      SortedIndexOfExpr(GraftColumnBridge.expression(c), sortedSet))
-
-  /** Sort under UTF8String (UTF-8 byte) ordering — the order the
-    * binary-search expressions compare in; Java String ordering
-    * diverges for strings mixing supplementary code points with
-    * U+E000–U+FFFF. */
-  def utf8Sorted(xs: Array[String]): Array[String] = {
-    val ks = xs.map(UTF8String.fromString)
-    java.util.Arrays.sort(ks,
-      (a: UTF8String, b: UTF8String) => a.compareTo(b))
-    ks.map(_.toString)
-  }
-
   /** Takes the raw TOKENS column; shingles, hashes and selects bottom-k
     * in one pass. */
   def bottomKShingleHashes(tokens: Column, n: Int, k: Int): Column =
@@ -923,8 +753,4 @@ object SketchExpressions {
   def charEntropy(text: Column): Column =
     GraftColumnBridge.column(
       CharEntropyExpr(GraftColumnBridge.expression(text)))
-
-  def compressRatio(text: Column): Column =
-    GraftColumnBridge.column(
-      CompressRatioExpr(GraftColumnBridge.expression(text)))
 }

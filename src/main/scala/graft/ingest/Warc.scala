@@ -135,21 +135,6 @@ object Warc {
   def readWarcFiles(spark: SparkSession, pathGlob: String): DataFrame =
     toRecords(spark.read.format("binaryFile").load(pathGlob))
 
-  /** Streaming crawl ingest: segments LANDING in a bucket stream out
-    * as records — `readStream` over the same binaryFile source, the
-    * same shuffle-free parse. Composes directly with the standing
-    * pipeline sinks (`Streaming.appendDedupedStream` /
-    * `cleanCorpusStream` / `dsirScoreStream`): parse here, hand the
-    * frame to the sink of choice. File sources track processed files
-    * in the checkpoint, so a replayed segment re-parses idempotently. */
-  def readWarcStream(spark: SparkSession, pathGlob: String): DataFrame =
-    // streaming file sources require an explicit schema; binaryFile's
-    // is fixed by the format
-    toRecords(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, " +
-        "length BIGINT, content BINARY")
-      .load(pathGlob))
-
   /** Per-URL latest-capture dedup over a crawl-record frame (the
     * re-crawl step: a URL captured in many segments/snapshots keeps
     * only its newest response). Ordering parses WARC-Date as a real
@@ -167,7 +152,7 @@ object Warc {
     // try_to_timestamp, NOT cast: Spark 4 runs ANSI by default, where
     // a malformed crawl-controlled WARC-Date would throw and kill the
     // whole dedup job instead of sorting last as documented (the
-    // Toa5/Dtc try_* convention)
+    // Toa5 try_* convention)
     val w = Window.partitionBy(col("url"))
       .orderBy(try_to_timestamp(col("date")).desc_nulls_last,
         col("date").desc, col("file").desc, col("n_bytes").desc)
@@ -179,9 +164,9 @@ object Warc {
   }
 
   /** (path, content) segment rows → one row per parsed WARC record —
-    * the parse half of `readWarcFiles`/`readWarcStream`, public so
-    * in-memory segments (tests, the t87 synthesized crawl) run the
-    * SAME shuffle-free flatMap as file-backed ones. */
+    * the parse half of `readWarcFiles`, public so in-memory segments
+    * (tests, the t87 synthesized crawl) run the SAME shuffle-free
+    * flatMap as file-backed ones. */
   def records(files: DataFrame): DataFrame = toRecords(files)
 
   private def toRecords(files: DataFrame): DataFrame = {

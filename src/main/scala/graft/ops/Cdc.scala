@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture merge — the standing-corpus MAINTENANCE step
-  * the incremental-ingest family (t49, `appendDedupedStream`) leaves
-  * open: those only ADD novel documents, but a live corpus also takes
+  * the incremental-ingest family (t49) leaves open: those only ADD
+  * novel documents, but a live corpus also takes
   * retractions (takedowns, robots.txt revocations, licensing pulls)
   * and in-place revisions (re-crawled pages). This is the MERGE
   * semantics of a Delta-style upsert expressed as plain joins, so it
@@ -53,8 +53,7 @@ object Cdc {
     // a NULL key is the silent-accretion trap, not just bad data: a
     // null-keyed upsert re-enters the table but can never anti-join
     // back OUT (null never equi-matches), so every replay of the same
-    // feed would add the row AGAIN — the exact null-key accretion bug
-    // the streaming dedup sink fixed in its own guard. Fail loudly.
+    // feed would add the row AGAIN. Fail loudly.
     val checkedId = when(col(idCol).isNotNull, col(idCol))
       .otherwise(raise_error(lit(
         s"applyChanges: NULL $idCol in the change feed — a null key " +

@@ -181,26 +181,15 @@ object Dedup {
     * join, plus the id-keyed anti-join when the dropped set is too
     * big to broadcast (dup-sized, so usually broadcast). At 100 TB,
     * cluster-size skew is the knob: more centroids → smaller cells →
-    * less in-cell pairing. */
+    * less in-cell pairing. `k` is the cell count the caller sized the
+    * index with: at or above `Vectors.HierarchicalFloor` the assignment
+    * routes through the two-level quantizer (the default 0 keeps the
+    * exact flat scan — every gate-SF corpus sits below the floor
+    * anyway). */
   def semDedupKeep(corpus: DataFrame, centroids: DataFrame,
                    idCol: String, cidCol: String, vecCol: String,
                    tau: Double, k: Long = 0L,
-                   dims: Int = -1): DataFrame =
-    semDedupKeepWithVec(corpus, centroids, idCol, cidCol, vecCol, tau,
-      k, dims)
-      .drop(vecCol)
-
-  /** `semDedupKeep` with the vector retained in the output — what a
-    * sink-building consumer (`Streaming.semDedupStream`) needs, saving
-    * it an id-keyed join back to the input per batch. `k` is the cell
-    * count the caller sized the index with: at or above
-    * `Vectors.HierarchicalFloor` the assignment routes through the
-    * two-level quantizer (the default 0 keeps the exact flat scan —
-    * every gate-SF corpus sits below the floor anyway). */
-  def semDedupKeepWithVec(corpus: DataFrame, centroids: DataFrame,
-                          idCol: String, cidCol: String, vecCol: String,
-                          tau: Double, k: Long = 0L,
-                          dims: Int = -1): DataFrame = {
+                   dims: Int = -1): DataFrame = {
     val asg = Vectors.ivfAssignWithVecScaled(corpus, centroids, k, idCol,
       cidCol, vecCol, dims).localCheckpoint(false)
     val a = asg.select(col(cidCol), col(idCol).as("__ida"),
@@ -216,7 +205,7 @@ object Dedup {
       .where(col("__idb") < col("__ida") &&
         !isnan(__cos) && __cos >= tau)
       .select(col("__ida").as(idCol)).distinct()
-    asg.join(dropped, Seq(idCol), "left_anti")
+    asg.join(dropped, Seq(idCol), "left_anti").drop(vecCol)
   }
 
   /** Connected components over an undirected edge list — the clustering
@@ -352,8 +341,7 @@ object Dedup {
     * persist, trivially mergeable with later deltas (KMV is a pure SET
     * sketch: re-aggregating the union of two sketches' elements IS the
     * sketch of the union, idempotent under replays). Consumed by
-    * `kmvOverlapEstimates` (batch t52b) and the streaming standing-
-    * sketch maintainer (`Streaming.sourceSketchStream`). */
+    * `kmvOverlapEstimates` (t52b). */
   def kmvSourceSketches(docs: DataFrame, textCol: String,
                         sourceCol: String, n: Int = 8,
                         k: Int = 256): DataFrame =

@@ -330,7 +330,7 @@ object TextOps {
     * `__tt` target tokens). Built ONCE from the standing corpus —
     * production materializes both frames (vocab is the only
     * corpus-dependent state, O(vocab) not O(corpus)) and scores deltas
-    * against them (`dsirScore` / `Streaming.dsirScoreStream`). */
+    * against them (`dsirScore`). */
   def dsirLm(corpus: DataFrame, textCol: String, sourceCol: String,
              targetSource: String): (DataFrame, DataFrame) = {
     val f = corpus.select(col(sourceCol).as("__src"),
@@ -380,8 +380,7 @@ object TextOps {
     * the reference source); all three tables are vocab-sized (Heaps'
     * law) and broadcastable. Returns (bigram counts (lang, bg, cb),
     * unigram counts (lang, w1, cu), vocab sizes (lang, v)) — the
-    * standing artifact: materialize once, consume from batch scoring
-    * (t75) and the streaming twin (`Streaming.lmScoreStream`) alike. */
+    * standing artifact t75's scoring consumes. */
   def bigramLm(ref: DataFrame, langCol: String,
                textCol: String): (DataFrame, DataFrame, DataFrame) = {
     def toksL = tokensLower(col(textCol))

@@ -23,8 +23,6 @@ object Vectors {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot(a, b)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosine(a, b)
 

@@ -84,10 +84,8 @@ object RelationalQueries {
     round(sum(c.cast("decimal(24,8)")), 2).cast("double")
 
   /** The x1 fixture's smoothed UDG series — the exact input
-    * `Depths.tdrDepth` consumes (also the streaming parity spec's
-    * fixture, StreamingMultimodalSpec). */
-  private[graft] def x1UdgSeries(s: SparkSession,
-                                 dir: String): DataFrame =
+    * `Depths.tdrDepth` consumes. */
+  private def x1UdgSeries(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "events")
       .where(col("user_id") === 0)
       .groupBy(date_trunc("hour", col("ts")).as("ts"))

@@ -314,8 +314,7 @@ object TfRecord {
   def write(df: DataFrame, outDir: String, shardCol: String,
             orderCol: String, int64Cols: Seq[String],
             bytesCols: Seq[String],
-            floatCols: Seq[String] = Nil,
-            clearStale: Boolean = true): DataFrame = {
+            floatCols: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val cols = (Seq(shardCol, orderCol) ++ int64Cols ++ bytesCols ++
@@ -327,14 +326,10 @@ object TfRecord {
     // Driver-side overwrite: clear committed shards and stale temp
     // litter BEFORE the job, so no task attempt ever needs to delete
     // a final file (see the commit-protocol note above).
-    // `clearStale = false` is the streaming-batch contract: each
-    // microbatch APPENDS its own batch-suffixed shard names into a
-    // shared dir, and a batch replay overwrites only its OWN names
-    // (rename onto the identical committed bytes).
     val outPath = new Path(outDir)
     val driverFs =
       outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (clearStale && driverFs.exists(outPath)) {
+    if (driverFs.exists(outPath)) {
       (Option(driverFs.globStatus(new Path(outDir, "*.tfrecord"))) ++
         Option(driverFs.globStatus(new Path(outDir, ".*.tfrecord.*.tmp"))))
         .flatten

@@ -251,37 +251,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("sortedSetContains ≡ array_contains for random sets and probes") {
-    val gen = Gen.zip(
-      Gen.listOfN(20, Gen.choose(0, 40).map(i => f"k$i%02d")),
-      Gen.listOfN(30, Gen.choose(0, 50).map(i => f"k$i%02d")))
-    forAll(gen) { case (set, probes) =>
-      val sorted = set.distinct.sorted.toArray
-      val got = probes.toDF("p")
-        .select(col("p"), graft.functions.SketchExpressions
-          .sortedSetContains(col("p"), sorted).as("got"),
-          array_contains(lit(sorted), col("p")).as("want"))
-        .where(col("got") =!= col("want")).count()
-      assert(got === 0)
-    }
-  }
-
-  test("sortedSetContains is order-correct across the UTF-16/UTF-8 gap") {
-    // U+10000 (surrogate pair) sorts BELOW U+E000 as Java chars but
-    // ABOVE it in UTF-8 bytes — a caller passing a Java-sorted array
-    // used to binary-search in the wrong order and miss members. The
-    // expression now sorts internally under UTF8String order, so every
-    // member must be found regardless of input arrangement.
-    val set = Array("𐀀", "", "a", "é") // U+10000, U+E000, ASCII, Latin-1
-    set.permutations.take(6).foreach { arr =>
-      val missing = set.toSeq.toDF("p")
-        .select(graft.functions.SketchExpressions
-          .sortedSetContains(col("p"), arr).as("got"))
-        .where(!col("got")).count()
-      assert(missing === 0, s"false negatives with input ${arr.toSeq}")
-    }
-  }
-
   test("covariance agg is partition-invariant and matches driver math") {
     val vecsGen = Gen.listOfN(12,
       Gen.listOfN(3, Gen.choose(-5.0, 5.0).map(_.toFloat)))
@@ -701,38 +670,6 @@ class PropertySpec extends SparkSpec {
       assert(sizes.max - sizes.min <= 1,
         s"$lang tercile sizes skewed: $sizes")
     }
-  }
-
-  test("phashNearDup recall is EXACT at Hamming <= 3 vs brute force") {
-    import spark.implicits._
-    // random 64-bit hashes plus planted <=3-bit perturbations: the
-    // 4-band pigeonhole must find EVERY true pair (recall 1.0); the
-    // exact bit_count check keeps precision 1.0 too, so the band join
-    // must equal brute force exactly — the guarantee the scaladoc
-    // claims, locked as a property
-    val rnd = new scala.util.Random(7)
-    val bases = Seq.fill(60)(rnd.nextLong())
-    val perturbed = bases.zipWithIndex.flatMap { case (h, i) =>
-      if (i % 3 == 0) {
-        val flips = 1 + rnd.nextInt(3) // 1..3 bit flips
-        var v = h
-        (1 to flips).foreach(_ => v ^= (1L << rnd.nextInt(64)))
-        Seq(v)
-      } else Nil
-    }
-    val all = (bases ++ perturbed).distinct.zipWithIndex
-      .map { case (h, i) => (i.toLong, h) }
-    val truth = (for {
-      (ia, ha) <- all; (ib, hb) <- all
-      if ia < ib && java.lang.Long.bitCount(ha ^ hb) <= 3
-    } yield (ia, ib)).toSet
-    assert(truth.nonEmpty, "test corpus planted no true pairs")
-    val got = graft.ops.Multimodal
-      .phashNearDup(all.toDF("id", "phash"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === truth,
-      s"band join != brute force: missed ${truth -- got}, " +
-        s"extra ${got -- truth}")
   }
 
   test("t90 batches respect the token budget modulo one straddler") {

@@ -160,49 +160,6 @@ class TfRecordSpec extends SparkSpec {
     }
   }
 
-  test("streaming sink: per-batch file names make a batch replay " +
-    "overwrite itself — no duplicate records; end-to-end through a " +
-    "memory stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-tfrec-stream").toString
-    val sink = graft.streaming.Streaming.tfRecordBatch(
-      dir, "shard", "doc_id", Seq("doc_id", "ids"), Seq("src")) _
-    def batchDf(ids: Long*) =
-      ids.map(i => (i, "s", Seq(i * 10), s"d$i"))
-        .toDF("doc_id", "shard", "ids", "src")
-    sink(batchDf(1L, 2L), 0L)
-    sink(batchDf(3L), 1L)
-    sink(batchDf(3L), 1L) // crash/replay of batch 1: same name, same bytes
-    val all = TfRecord.read(spark, dir)
-      .as[(String, Long, Array[Byte], Boolean)].collect()
-    assert(all.length === 3, "a replayed batch must not duplicate")
-    assert(all.forall(_._4))
-    assert(all.map(_._1).toSet === Set("s-b0", "s-b1"))
-    val ids = all.map(r => TfRecord.decodeExample(r._3)("doc_id"))
-      .collect { case Int64Val(Seq(v)) => v }.sorted
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
-    // end-to-end through a real stream — in its OWN dir: an outDir
-    // belongs to one checkpoint lineage (batch ids name the files, so
-    // a second stream restarting at batch 0 would rightly overwrite)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-tfrec-stream2").toString
-    val input = MemoryStream[(Long, String, Seq[Long], String)]
-    val q = graft.streaming.Streaming.tfRecordStreamSink(
-      input.toDF.toDF("doc_id", "shard", "ids", "src"), dir2,
-      "shard", "doc_id", Seq("doc_id", "ids"), Seq("src")).start()
-    input.addData((10L, "s", Seq(100L), "x"))
-    q.processAllAvailable()
-    input.addData((11L, "s", Seq(110L), "y"))
-    q.processAllAvailable(); q.stop()
-    val got = TfRecord.read(spark, dir2)
-      .as[(String, Long, Array[Byte], Boolean)].collect()
-    assert(got.length === 2 && got.forall(_._4),
-      s"one record per stream batch: ${got.length}")
-    assert(got.map(_._1).toSet === Set("s-b0", "s-b1"))
-  }
-
   test("shard names must be safe path segments") {
     val df = Seq((1L, "a/b", Seq(1L), "x"))
       .toDF("doc_id", "shard", "ids", "src")

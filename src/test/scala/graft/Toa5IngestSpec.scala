@@ -315,24 +315,6 @@ class Toa5IngestSpec extends SparkSpec {
     }
   }
 
-  test("DTC plain-CSV ingest drops housekeeping and types depths") {
-    val dir = Files.createTempDirectory("dtc")
-    val csv = Seq(
-      "datetime,timezone,Battery (V),Panel Temp (C),0.5 m,1.0 m,2.0 m",
-      "2023-06-01 00:00:00,UTC,12.4,21.0,-0.1,-2.5,-5.75",
-      "2023-06-01 01:00:00,UTC,12.3,20.5,-0.2,-2.4,bad",
-    ).mkString("\n")
-    Files.writeString(dir.resolve("beadedcloud_fs1.csv"), csv)
-    val df = graft.ingest.Dtc.read(spark,
-      dir.resolve("beadedcloud_fs1.csv").toString)
-    assert(df.columns.toSeq === Seq("time", "0.5 m", "1.0 m", "2.0 m"))
-    assert(df.schema("time").dataType.typeName === "timestamp")
-    assert(df.schema("2.0 m").dataType.typeName === "double")
-    val rows = df.orderBy("time").collect()
-    assert(rows(0).getDouble(3) === -5.75)
-    assert(rows(1).isNullAt(3)) // dirty cell nulls, not throws
-  }
-
   test("nrows cap applies per source") {
     val dir = Files.createTempDirectory("toa5b")
     writeBale(dir, 1, (0 to 9).map(i => (i + 1, i)))

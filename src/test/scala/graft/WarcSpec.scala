@@ -106,27 +106,6 @@ class WarcSpec extends SparkSpec {
     assert(rs2.head.payload.toSeq === payload.toSeq)
   }
 
-  test("warc: readWarcStream streams records as segments land") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("warcs")
-    java.nio.file.Files.write(dir.resolve("seg-0.warc"),
-      rec("response", "https://example.com/s0", http))
-    val q = Warc.readWarcStream(spark, dir.toString)
-      .select("url", "warc_type")
-      .writeStream.format("memory").queryName("warcstream")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    // a new segment lands mid-stream and is picked up incrementally
-    java.nio.file.Files.write(dir.resolve("seg-1.warc"),
-      rec("response", "https://example.com/s1", http))
-    q.processAllAvailable()
-    q.stop()
-    val urls = spark.table("warcstream").select(col("url"))
-      .collect().map(_.getString(0)).sorted.toSeq
-    assert(urls === Seq("https://example.com/s0",
-      "https://example.com/s1"))
-  }
-
   test("warc → documents: httpBody + htmlToText extract clean text") {
     import org.apache.spark.sql.functions.col
     import graft.ops.TextOps
