@@ -1,510 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured-Streaming counterparts of the batch pipeline (SURVEY §2.10:
-  * the reference is batch-only; these make the same semantics incremental).
-  *
-  * - L0→L1 ingest is naturally incremental: `readStream` over the landing
-  *   directory, timestamp dedup with a watermark bounding state.
-  * - The X1 depth recurrence is per-key linear state — exactly
-  *   `flatMapGroupsWithState`: same step function as the batch
-  *   `mapPartitions`, state = the running offset.
-  */
+/** Structured-Streaming append sinks with sink-owned state: the
+  * content, frontier and image dedup appends, the novelty gate, and
+  * the compaction that rewrites their small files under a lease (the
+  * temp-swap protocol `CrashProtocolSpec` fault-injects). No entry
+  * point runs them; they are the last unreachable main code, kept
+  * with their specs until their own removal. */
 object Streaming {
-
-  /** D1/D2 streaming dedup: first row per timestamp wins within the
-    * watermark horizon; late duplicates beyond `watermark` age out of
-    * state (bounded memory — the batch keep-first total order is
-    * unachievable unboundedly in a stream; the watermark IS the contract). */
-  def dedupStream(in: DataFrame, tsCol: String,
-                  watermark: String = "1 hour"): DataFrame =
-    in.withWatermark(tsCol, watermark).dropDuplicates(Seq(tsCol))
-
-  /** A4 streaming: tumbling 1-hour aggregate with a watermark bounding
-    * state (the incremental form of the batch q5_hourly). In append
-    * mode a window emits exactly once, when the watermark passes its
-    * end — mergeable partials until then, like the batch map-side
-    * combine but over time. */
-  def hourlyAgg(in: DataFrame, tsCol: String, valCol: String,
-                watermark: String = "2 hours"): DataFrame =
-    in.withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), "1 hour").as("w"))
-      .agg(avg(col(valCol)).as("avg_value"), count(lit(1)).as("n"))
-      .select(col("w.start").as("hour"), col("avg_value"), col("n"))
-
-  /** Sessionization streaming twin of the batch q30: native session
-    * windows (gap-based), state bounded by the watermark. */
-  def sessionStats(in: DataFrame, tsCol: String, keyCols: Seq[String],
-                   gap: String = "30 minutes",
-                   watermark: String = "1 hour"): DataFrame =
-    in.withWatermark(tsCol, watermark)
-      .groupBy((keyCols.map(col) :+
-        session_window(col(tsCol), gap).as("w")): _*)
-      .agg(count(lit(1)).as("n_events"))
-      .select((keyCols.map(col) :+ col("w.start").as("session_start") :+
-        col("w.end").as("session_end") :+ col("n_events")): _*)
-
-  /** Streaming corpus hygiene — the incremental form of the batch
-    * d1 + t21 pipeline: exact content dedup within the watermark
-    * horizon (state keyed by content hash, evicted as the watermark
-    * advances — `dropDuplicatesWithinWatermark` is exactly this
-    * contract) followed by the quality/language gates. The kernels are
-    * stateless map-side work per microbatch; only the dedup holds
-    * state, and it is bounded. */
-  def cleanCorpusStream(in: DataFrame, tsCol: String, textCol: String,
-                        watermark: String = "1 hour",
-                        minQuality: Double = 0.5,
-                        minCompress: Double = 0.02): DataFrame = {
-    import graft.functions.SketchExpressions
-    in.withWatermark(tsCol, watermark)
-      .withColumn("__h", md5(col(textCol)))
-      .dropDuplicatesWithinWatermark(Seq("__h"))
-      .withColumn("__st", SketchExpressions.textStats(col(textCol)))
-      .withColumn("lang_pred", SketchExpressions.langId(col(textCol)))
-      .withColumn("q_score", graft.ops.TextOps.qualityScoreFrom(col("__st")))
-      // redundancy gate paired with the quality score: deflate ratio
-      // below the floor means near-pure repetition (a templated page,
-      // a stuck sensor dumping one token) that the stopword/length
-      // formula can score deceptively well. Prose sits ~0.4; the
-      // default floor only fires on pathological boilerplate.
-      .withColumn("c_ratio", SketchExpressions.compressRatio(col(textCol)))
-      .where(col("q_score") >= minQuality && col("c_ratio") >= minCompress)
-      .drop("__st", "__h")
-  }
-
-  /** Streaming NEAR-dup gate: first document per 32-bit SimHash
-    * signature wins within the watermark horizon — the incremental
-    * form of the batch t11 signature-cluster dedup. Near-identical
-    * texts collapse onto one signature map-side (single-pass kernel),
-    * so state is one entry per distinct signature, bounded by the
-    * watermark. Exact-dup streaming is `cleanCorpusStream`'s md5 key;
-    * this catches the small-edit duplicates md5 misses. */
-  def neardupStream(in: DataFrame, tsCol: String, textCol: String,
-                    watermark: String = "1 hour"): DataFrame = {
-    import graft.functions.SketchExpressions
-    in.withWatermark(tsCol, watermark)
-      .withColumn("__sh", SketchExpressions.simhash32(
-        graft.ops.TextOps.tokens(col(textCol))))
-      .dropDuplicatesWithinWatermark(Seq("__sh"))
-      .drop("__sh")
-  }
-
-  /** Streaming decontamination gate: quarantine any streamed document
-    * sharing a word 3-gram with the (static) eval/benchmark set. The
-    * eval grams fold into ONE Bloom bitmap at stream-definition time
-    * (a single static action); each microbatch then tests its grams
-    * against the bitmap as a LITERAL — pure map-side, no state, no
-    * stream-static join, so the gate costs a scan at any rate.
-    * Contract: a Bloom filter has no false negatives, so every truly
-    * contaminated document is flagged; false positives (~(1-e^(-kn/m))^k)
-    * quarantine a few clean documents for the exact batch confirm
-    * (t40's join) downstream — `keepClean` picks which side streams on. */
-  def decontaminateStream(in: DataFrame, textCol: String,
-                          evalGrams: DataFrame, gramCol: String = "g",
-                          numBits: Int = 1 << 19, numHashes: Int = 5,
-                          keepClean: Boolean = true): DataFrame = {
-    import graft.functions.{BloomExpressions, SketchExpressions}
-    val bitmap = evalGrams
-      .agg(BloomExpressions.bloomFilter(col(gramCol), numBits, numHashes))
-      .head().getSeq[Long](0).toArray
-    // null text ⇒ exists(...) is null, which `where` drops from BOTH
-    // the keep and the reject side — a silently vanished row. A null
-    // document can't be contaminated: treat it as a non-hit.
-    val hit = coalesce(exists(
-      SketchExpressions.wordShingles(
-        graft.ops.TextOps.tokens(col(textCol)), 3),
-      g => BloomExpressions.bloomMightContain(lit(bitmap), g)), lit(false))
-    in.where(if (keepClean) !hit else hit)
-  }
-
-  /** Streaming URL/domain blocklist gate — the stateless twin of the
-    * batch t66 filter, sitting right after WARC extraction in the
-    * live-ingest path: drop (or keep only) documents citing a blocked
-    * domain. Matching is case-normalized on BOTH sides (hostnames are
-    * case-insensitive, RFC 4343) and probes the sorted blocklist by
-    * binary search — O(domains·log n) per row, NOT an O(n) scan of
-    * the list per document (`arrays_overlap` against a big literal
-    * hashes the smaller side and WALKS the larger — wrong shape).
-    * The list rides in the plan as one sorted array literal; the size
-    * guard keeps a mis-pointed "blocklist" from bloating every task's
-    * plan — UT1-scale lists (~4M) belong in the batch t66 broadcast
-    * join, or shard this gate per list segment. Null text extracts no
-    * domains and passes as a non-hit, same contract as
-    * decontaminateStream. */
-  def blocklistStream(in: DataFrame, textCol: String,
-                      blockedDomains: Seq[String],
-                      keepClean: Boolean = true): DataFrame = {
-    require(blockedDomains.size <= 1000000,
-      s"blocklist has ${blockedDomains.size} entries — the plan-literal " +
-        "gate is for bounded lists; use the batch broadcast join at " +
-        "this size")
-    val norm = blockedDomains
-      .map(_.toLowerCase(java.util.Locale.ROOT)).distinct.toArray
-    val hit = coalesce(exists(
-      graft.ops.TextOps.urlDomains(col(textCol)),
-      d => graft.functions.SketchExpressions
-        .sortedSetContains(lower(d), norm)),
-      lit(false))
-    in.where(if (keepClean) !hit else hit)
-  }
-
-  /** Streaming robots-exclusion gate — the stateless twin of the
-    * batch t93 gate, for the frontier path (discover → canonicalize →
-    * THIS → fetch). Rules are (authority, allow?, pathPrefix):
-    * RFC 9309 scopes robots per AUTHORITY, port included, so the key
-    * is `host[:port]` — lowercased, with the scheme's own default
-    * port dropped (`canonicalUrl`'s convention: http:80/https:443
-    * collapse, a non-default port is a different robots scope and
-    * must appear in the rule verbatim). URL userinfo (`user@…`) is
-    * not part of the scope and is stripped before matching. Per row,
-    * dispatch is a BINARY SEARCH of the sorted authority array
-    * (`sortedIndexOf`) into a parallel per-authority rule array —
-    * O(log authorities) + that authority's own rules, never a walk of
-    * the whole rule corpus per row (the linear-scan shape
-    * `blocklistStream`'s doc rejects). The longest-match winner folds
-    * out of a higher-order aggregate over the matching rules (length
-    * ties go to allow, no match allows — the Google semantics,
-    * identical to t93's argmax-by-struct). Entirely within the row:
-    * no join, no state, no shuffle. */
-  def robotsGateStream(in: DataFrame, urlCol: String,
-                       rules: Seq[(String, Boolean, String)],
-                       keepAllowed: Boolean = true): DataFrame = {
-    import graft.functions.SketchExpressions
-    require(rules.size <= 100000,
-      s"rule table has ${rules.size} entries — the plan-literal gate " +
-        "is for robots-sized lists; use the batch broadcast join (t93)")
-    // group driver-side by CANONICAL authority — lowercased AND
-    // default-port-collapsed, the same normalization the URL side
-    // gets below, so a rule keyed "host:443"/"host:80" (natural when
-    // a robots corpus is keyed by origin) matches instead of being
-    // silently dead. Corner: after collapsing, a rule meant for the
-    // UNUSUAL scheme/port pairing (http on 443, https on 80) is not
-    // representable — those URLs keep their port (non-default for
-    // their scheme) and match only a ported rule, which this collapse
-    // just removed; acceptable, because a robots corpus keys by the
-    // fetched origin and those pairings don't occur in one.
-    def canonAuth(a: String): String = a
-      .toLowerCase(java.util.Locale.ROOT)
-      .replaceFirst(":(80|443)$", "")
-    val grouped = rules.groupBy(r => canonAuth(r._1)).toArray
-    val hostOrder = SketchExpressions.utf8Sorted(grouped.map(_._1))
-      .zipWithIndex.toMap
-    val sortedGroups = grouped.sortBy(g => hostOrder(g._1))
-    val hosts: Array[String] = sortedGroups.map(_._1)
-    val ruleSlices = array(sortedGroups.map { case (_, rs) =>
-      array(rs.map { case (_, allow, p) =>
-        struct(lit(if (allow) 1 else 0).as("a"), lit(p).as("p"))
-      }: _*)
-    }: _*)
-    val noRules = array().cast("array<struct<a:int,p:string>>")
-    val authRaw = lower(regexp_replace(regexp_extract(col(urlCol),
-      "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1), "^[^/@]*@", ""))
-    val scheme = lower(regexp_extract(col(urlCol),
-      "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val auth = when(scheme === "http", regexp_replace(authRaw, ":80$", ""))
-      .when(scheme === "https", regexp_replace(authRaw, ":443$", ""))
-      .otherwise(authRaw)
-    // RFC 9309 §2.2.2: an EMPTY path is evaluated as "/" — without
-    // the normalization a root URL ("http://h", no trailing slash)
-    // matches no "/"-prefixed rule, so even disallow-all ALLOWED the
-    // host root through the gate
-    val path0 = regexp_extract(col(urlCol),
-      "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-    val path = when(path0 === "", "/").otherwise(path0)
-    // ONE reference to the binary search: Columns are expression
-    // trees, not bound values, and SortedIndexOfExpr is interpreted
-    // (CodegenFallback — no whole-stage CSE), so `when(idx >= 0, …,
-    // element_at(…, idx + 1))` would run the O(log hosts) search
-    // twice per row. Prepending the no-match slice at position 1 and
-    // shifting the index by 2 makes the miss case (idx = −1 → slot 1)
-    // a plain array read on the same single index expression.
-    val idx = SketchExpressions.sortedIndexOf(auth, hosts)
-    val hostRules =
-      if (hosts.isEmpty) noRules
-      else element_at(concat(array(noRules), ruleSlices), idx + 2)
-    val matches = filter(hostRules,
-      r => path.startsWith(r.getField("p")))
-    val best = aggregate(matches,
-      struct(lit(-1).as("l"), lit(1).as("a"), lit("").as("p")),
-      (acc, r) => {
-        val rl = length(r.getField("p"))
-        val better = rl > acc.getField("l") ||
-          (rl === acc.getField("l") && r.getField("a") > acc.getField("a"))
-        when(better, struct(rl.as("l"), r.getField("a").as("a"),
-          r.getField("p").as("p"))).otherwise(acc)
-      })
-    // null URLs pass through as NON-HITS (allowed), the module's
-    // null contract (blocklistStream/decontaminateStream coalesce the
-    // same way) — a bare where(null) would silently drop the row
-    // from BOTH sides of the gate
-    val allowed =
-      coalesce(best.getField("a") === 1, lit(true)) // no match allows
-    in.where(if (keepAllowed) allowed else !allowed)
-  }
-
-  /** Streaming QUALITY SCORING with the standing distilled
-    * classifier — the serve side of t115's train-offline pattern
-    * (FineWeb-Edu's production shape: the slow teacher never sees
-    * the firehose, only the linear student does). The model (bucket
-    * → w_micro, from the t115 artifact) ships as plan literals: a
-    * sorted hashed-bucket array + parallel weight array, per-row
-    * dispatch ONE binary search per DISTINCT bucket (≤256) into the
-    * weight slot — no join, no state, no shuffle; the two
-    * structural weights are plain literal terms. The in-row
-    * arithmetic replays the batch scoring EXACTLY — per-bucket ppm
-    * truncation against the doc's hashed-feature total, micro-unit
-    * dot, rational sigmoid, every division a true integer DIV — so
-    * a document receives the SAME verdict streaming or batch
-    * (spec-locked against t116's decision column). Per-row cost is
-    * O(distinct buckets × features) for the occurrence counts —
-    * bounded by 256·|feats|, the price of statelessness. Null text
-    * scores null and keeps=false (the batch pass never scores those
-    * docs). Output: `in` + (score_ppm, keep) — callers filter. */
-  def qualityScoreStream(in: DataFrame, textCol: String,
-                         model: Seq[(String, Long)],
-                         biasMicro: Long): DataFrame = {
-    import graft.functions.SketchExpressions
-    import org.apache.spark.sql.GraftColumnBridge.{column => C,
-      expression => E}
-    def idiv(a: Column, b: Column): Column = C(
-      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        E(a), E(b)))
-    require(model.size <= 1000000,
-      s"model has ${model.size} buckets — the plan-literal gate is " +
-        "for hashed-vocabulary sizes; use the batch broadcast join " +
-        "(t116) at this size")
-    val hashedW = model.filter(!_._1.startsWith("_")).toMap
-    val buckets = SketchExpressions.utf8Sorted(hashedW.keys.toArray)
-    // ONE miss slot at position 1 (idx = −1 → slot 1 reads 0), then
-    // the weights in bucket-sort order — the robotsGateStream idx+2
-    // single-lookup pattern
-    val wArr = array(lit(0L) +:
-      buckets.map(b => lit(hashedW(b))): _*)
-    val wNw = model.toMap.getOrElse("_nw", 0L)
-    val wNs = model.toMap.getOrElse("_ns", 0L)
-    val toks = graft.ops.TextOps.tokensLower(col(textCol))
-    val feats = concat(toks, SketchExpressions.wordShingles(toks, 2))
-    val bs = transform(feats, f => substring(md5(f), 1, 2))
-    val n = size(bs).cast("long")
-    val hdot = aggregate(array_distinct(bs), lit(0L), (acc, b) => {
-      val w = element_at(wArr,
-        SketchExpressions.sortedIndexOf(b, buckets) + 2)
-      val c = size(filter(bs, f => f === b)).cast("long")
-      acc + w * idiv(c * lit(1000000L), n)
-    })
-    val sdot = lit(wNw) *
-      (least(graft.ops.TextOps.gopherNWords(toks), lit(500))
-        * 2000L).cast("long") +
-      lit(wNs) *
-      (least(graft.ops.TextOps.gopherNStop(toks), lit(20))
-        * 50000L).cast("long")
-    val z = idiv(hdot + sdot, lit(1000000L)) + lit(biasMicro)
-    val sp = lit(500000L) +
-      idiv(z * lit(500000L), lit(1000000L) + abs(z))
-    // keep references the BOUND column: CodegenFallback does no CSE,
-    // so re-embedding `sp` would evaluate the whole O(buckets ×
-    // features) scoring tree twice per row (the redactStream
-    // bind-before-reuse convention)
-    in.withColumn("score_ppm", sp)
-      .withColumn("keep",
-        coalesce(col("score_ppm") > lit(500000L), lit(false)))
-  }
-
-  /** Streaming LINE-LEVEL DEDUP — the stateless twin of the batch
-    * t80_line_dedup rewrite: drop every pseudo-line whose hash is in
-    * the standing boilerplate set (built once by the batch
-    * line-df pass over the standing corpus), entirely within the row —
-    * no explode, no reassembly shuffle, no stream-side state. The set
-    * is driver-collected with the redactStream bound-before-collect
-    * guard (a mis-pointed "boilerplate" frame — say the full line-df
-    * table — fails loud, before materialization) and probed per chunk
-    * by binary search. Docs whose every line is boilerplate drop
-    * (the batch operator's fold-in of the drop-empty-docs step);
-    * null text passes through with a null rewrite, the
-    * decontaminateStream null contract. */
-  def lineDedupStream(in: DataFrame, textCol: String,
-                      boilerplateHashes: DataFrame, lhCol: String = "lh",
-                      w: Int = 10, outCol: String = "text_clean",
-                      maxHashes: Int = 100000): DataFrame = {
-    import graft.functions.SketchExpressions
-    val hs: Array[String] = boilerplateHashes.select(col(lhCol))
-      .distinct().limit(maxHashes + 1).collect()
-      .map(r => org.apache.spark.unsafe.types.UTF8String
-        .fromString(r.getString(0)))
-      .sortWith(_.compareTo(_) < 0).map(_.toString)
-    // default cap 10^5: consistent with SortedSetContainsExpr's own
-    // documented plan-literal bound (~10^5 hashes / low MB) — these
-    // are 32-char md5 strings shipped with every task; a bigger
-    // standing set wants the batch broadcast-join rewrite (t80)
-    require(hs.length <= maxHashes,
-      s"lineDedupStream: boilerplate hash set exceeds $maxHashes " +
-        "entries — it ships to every task as a literal. The set is " +
-        "df>1 lines only; a set this large is almost certainly the " +
-        "full line-df table, not the boilerplate subset.")
-    // NO empty-set passthrough short-circuit: the rewrite normalizes
-    // whitespace (chunks rejoined with single spaces) and drops
-    // emptied docs, so a passthrough would make the SAME row hash
-    // differently across microbatches as the standing set transitions
-    // empty -> non-empty. An empty set just keeps every chunk.
-    // Bound ONCE in a working projection (the redactStream precedent:
-    // no CSE inside lambda trees — two references would tokenize,
-    // chunk, and probe every row twice)
-    require(!in.columns.contains("__graft_kept"),
-      "input already has a __graft_kept column — it would be " +
-        "clobbered by the line-dedup working projection")
-    in.withColumn("__graft_kept", filter(
-        graft.functions.SketchExpressions
-          .tokenChunks(graft.ops.TextOps.tokens(col(textCol)), w),
-        c => !SketchExpressions.sortedSetContains(md5(c), hs)))
-      .withColumn(outCol,
-        when(col(textCol).isNull, lit(null: String))
-          .otherwise(concat_ws(" ", col("__graft_kept"))))
-      .where(col(textCol).isNull || size(col("__graft_kept")) > 0)
-      .drop("__graft_kept")
-  }
-
-  /** Streaming twin of the t81 hashed-feature quality classifier:
-    * score a live feed against the standing 256-bucket model (trained
-    * once by the batch pass; bucket → integer-ppm purity weight). The
-    * model rides as a map literal — 256 entries regardless of corpus
-    * vocabulary, THE point of the hashing trick — so scoring is pure
-    * map-side arithmetic: no join, no shuffle, no state; same integer
-    * floor-division semantics as the batch query (features whose
-    * bucket the model never saw are excluded from numerator AND
-    * denominator, matching the batch inner join). Rows with null or
-    * featureless text emit a null score (the batch pass emits no row —
-    * a stream must not silently drop data rows, so the null score
-    * marks them instead; spec-asserted). */
-  def classifierScoreStream(in: DataFrame, textCol: String,
-                            model: DataFrame, bCol: String = "b",
-                            wCol: String = "w_ppm",
-                            maxBuckets: Int = 65536): DataFrame = {
-    val rows = model.select(col(bCol), col(wCol))
-      .limit(maxBuckets + 1).collect()
-    require(rows.length <= maxBuckets,
-      s"classifierScoreStream: model has >$maxBuckets buckets — not a " +
-        "hashed-bucket model; at that size use the batch broadcast join")
-    require(rows.nonEmpty, "classifierScoreStream: empty model")
-    val wmap = map_from_arrays(
-      lit(rows.map(_.getString(0))),
-      lit(rows.map(_.getLong(1))))
-    val toks = graft.ops.TextOps.tokensLower(col(textCol))
-    val feats = concat(toks,
-      graft.functions.SketchExpressions.wordShingles(toks, 2))
-    // Hash each feature ONCE: map features → model weights up front,
-    // keep the non-null (bucket-hit) weights, and bind THAT array in
-    // its own projection (the redactStream precedent: no CSE inside
-    // lambda trees) — n_feats is its size, the sum never rehashes.
-    require(!in.columns.contains("__graft_ws") &&
-      !in.columns.contains("__graft_sw"),
-      "input already has a __graft_ws/__graft_sw column — it would be " +
-        "clobbered by the classifier's working projections")
-    in.withColumn("__graft_ws", filter(
-        transform(feats, f => element_at(wmap, substring(md5(f), 1, 2))),
-        w => w.isNotNull))
-      .withColumn("n_feats",
-        coalesce(size(col("__graft_ws")), lit(0)).cast("long"))
-      .withColumn("__graft_sw",
-        aggregate(col("__graft_ws"), lit(0L), (acc, w) => acc + w))
-      .withColumn("score_ppm",
-        when(col("n_feats") > 0, expr("__graft_sw div n_feats")))
-      .withColumn("keep",
-        when(col("n_feats") > 0,
-          (col("score_ppm") > 500000L).cast("long")))
-      .drop("__graft_ws", "__graft_sw")
-  }
-
-  /** Streaming SPAN REDACTION — the stateless twin of the batch
-    * t45→t47 pipeline: instead of quarantining whole documents
-    * (decontaminateStream), rewrite each one with its contaminated
-    * token ranges removed, entirely within the row — no explode, no
-    * stream-side state, no stream-static join, so it runs at any rate.
-    *
-    * Two-tier check, mirroring t40's shape: a Bloom bitmap literal
-    * (no false negatives) gates a per-window EXACT membership test
-    * against the eval window-hash set literal, so the O(|eval|)
-    * array_contains scan only runs for documents the Bloom layer
-    * already flagged — the overwhelmingly-clean stream pays one
-    * map-side Bloom probe per window. Span merging is implicit: a
-    * token is dropped iff ANY hit window covers it (coverage union ≡
-    * merged spans). Both literals fold at stream-definition time from
-    * one static action each; Spark's lambda index is 0-based, hence
-    * the i+1 against 1-based window positions. */
-  def redactStream(in: DataFrame, textCol: String,
-                   evalWindowHashes: DataFrame, ghCol: String = "gh",
-                   n: Int = 8, numBits: Int = 1 << 19,
-                   numHashes: Int = 5,
-                   outCol: String = "text_clean",
-                   maxEvalHashes: Int = 1000000): DataFrame = {
-    import graft.functions.{BloomExpressions, SketchExpressions}
-    // The exact tier is a DRIVER-COLLECTED literal, bounded by the
-    // eval-suite size by design. A mis-pointed "eval" table (say, the
-    // corpus itself) must fail LOUD — and BEFORE the driver
-    // materializes it: the limit(cap+1) pushes the bound into the
-    // query, so the collect is ≤ cap+1 rows no matter what the frame
-    // is, and one extra row is proof of overflow. Pre-sorted ONCE here
-    // in UTF-8 byte order (the expression's comparison order) so the
-    // membership expression's per-task sortedness check passes without
-    // re-sorting in every task.
-    val hashes: Array[String] = evalWindowHashes.select(col(ghCol))
-      .distinct().limit(maxEvalHashes + 1).collect()
-      .map(r => org.apache.spark.unsafe.types.UTF8String
-        .fromString(r.getString(0)))
-      .sortWith(_.compareTo(_) < 0).map(_.toString)
-    require(hashes.length <= maxEvalHashes,
-      s"redactStream: eval window-hash set exceeds $maxEvalHashes " +
-        "entries. The exact tier ships this set to every " +
-        "task as a literal; a set this large is almost certainly a " +
-        "mis-pointed eval table. For document-level gating at corpus " +
-        "scale use decontaminateStream (Bloom-only, no exact literal), " +
-        "or raise maxEvalHashes deliberately.")
-    // Empty eval set: nothing can ever match — short-circuit to a
-    // passthrough column instead of window-hashing every document
-    // against a set with no members.
-    if (hashes.isEmpty) return in.withColumn(outCol, col(textCol))
-    val bitmap = evalWindowHashes
-      .agg(BloomExpressions.bloomFilter(col(ghCol), numBits, numHashes))
-      .head().getSeq[Long](0).toArray
-    val toks = graft.ops.TextOps.tokens(col(textCol))
-    // Bind the window-hash array ONCE in its own projection: every row
-    // pays exactly one hashing pass (the Bloom probe references the
-    // bound array; the exact tier re-reads it, not re-derives it).
-    // Inlining `ws` at each use would re-run the kernel per reference
-    // under CodegenFallback — Spark does no CSE inside lambda trees,
-    // and CollapseProject keeps non-cheap multi-referenced projections
-    // in their own node, which is exactly what this relies on.
-    val wsRef = col("__graft_ws")
-    // null text ⇒ null exists ⇒ treat as clean passthrough (same
-    // contract as decontaminateStream)
-    val maybeHit = coalesce(exists(wsRef,
-      w => BloomExpressions.bloomMightContain(lit(bitmap), w("gh"))),
-      lit(false))
-    // exact tier: binary search against the sorted eval set — O(log n)
-    // per window, vs array_contains' full scan
-    val hitPos = transform(
-      filter(wsRef, w => SketchExpressions.sortedSetContains(w("gh"), hashes)),
-      w => w("pos"))
-    val kept = filter(toks, (t, i) =>
-      !exists(hitPos, p => (i + 1) >= p && (i + 1) <= p + (n - 1)))
-    // Nested when, not `maybeHit && size(hitPos) > 0`: CaseWhen
-    // branches evaluate lazily per row, so Bloom-clean documents never
-    // run the exact tier at all — and a Bloom FALSE POSITIVE (inner
-    // branch, no exact hit) must pass through byte-identical, not get
-    // whitespace-normalized by an unconditional token re-join.
-    require(!in.columns.contains("__graft_ws"),
-      "input already has a __graft_ws column — it would be silently " +
-        "clobbered by the working window-hash projection and dropped")
-    in.withColumn("__graft_ws", SketchExpressions.windowHashes(toks, n))
-      .withColumn(outCol,
-        when(maybeHit,
-          when(size(hitPos) > 0, concat_ws(" ", kept))
-            .otherwise(col(textCol)))
-          .otherwise(col(textCol)))
-      .drop("__graft_ws")
-  }
 
   /** Sink-owned-state probe shared by the foreachBatch maintainers.
     * Hadoop FS, not java.io.File: the sink can be HDFS/object storage,
@@ -517,17 +22,6 @@ object Streaming {
     fs.exists(p) &&
       fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
 
-  /** Partitioned-sink state probe shared by the foreachBatch
-    * maintainers (`foldHostRankBatch`, `mergeCdcBatch`): a sink
-    * "exists" only when it holds at least one `prefix`-named partition
-    * directory — a dir with just _SUCCESS/_temporary (empty first
-    * batch, crashed write, fully-emptied corpus) must route to the
-    * bootstrap path, not a schema-inference crash. */
-  private def hasPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-                               p: org.apache.hadoop.fs.Path,
-                               prefix: String): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith(prefix))
 
   /** Incremental corpus append with SINK-OWNED dedup state — the
     * operational ingest loop (t49's streaming form): each microbatch
@@ -766,11 +260,11 @@ object Streaming {
     }
 
   /** Small-file compaction for the append sinks (appendDedupedStream,
-    * imageDedupStream, the score sinks): every microbatch appends its
+    * imageDedupStream): every microbatch appends its
     * own part files, so a long-lived sink accretes thousands of tiny
     * files and the "seen"-key scan pays a per-file open cost that
     * eventually dwarfs the read. Rewrites the sink into `targetFiles`
-    * files via the sourceSketchStream temp-swap (write complete temp →
+    * files via the temp-swap (write complete temp →
     * delete old → rename; a complete orphan temp from a previous crash
     * is promoted first), so every crash point leaves a readable sink
     * on an atomic-rename filesystem. Run from a MAINTENANCE schedule,
@@ -869,238 +363,6 @@ object Streaming {
     }
   }
 
-  /** Standing per-source KMV overlap sketches maintained incrementally
-    * — t52b's operational form. Each microbatch sketches only ITS OWN
-    * rows (one text pass, O(k) mergeable state per source), then folds
-    * them into the standing sketch table by exploding both sides'
-    * bottom-k sets and re-aggregating: a (sources × k)-sized job,
-    * never a corpus re-scan. KMV is a pure SET sketch — the k-minima
-    * of a union depend only on the element set — so the merge is
-    * idempotent and commutative: replaying a batch after a restart
-    * cannot corrupt the standing state. Pairwise feed-redundancy
-    * estimates then come from `Dedup.kmvOverlapEstimates` over the
-    * sink at ~zero cost, answering "should I ingest this feed" while
-    * the feed is still streaming in.
-    *
-    * The swap is crash-safe ON AN ATOMIC-RENAME FILESYSTEM (local,
-    * HDFS): the merged table is written to a sibling temp dir (so the
-    * lazy read of the old sink completes against intact files), then
-    * delete-old + rename-temp. At every crash point the state
-    * survives — mid-temp-write leaves the old sink untouched (a stale
-    * temp is cleared by the next overwrite); between delete and rename
-    * the completed temp (with _SUCCESS) is recovered on the next
-    * batch; a replayed batch re-merges idempotently. On an object
-    * store, where rename is a non-atomic per-file copy, this layout is
-    * NOT crash-safe — use a versioned-directory + manifest-pointer
-    * layout there instead (a small-object PUT is atomic). */
-  def sourceSketchStream(in: DataFrame, textCol: String,
-                         sourceCol: String, sinkPath: String,
-                         n: Int = 8, k: Int = 256) = {
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val bSk = graft.ops.Dedup
-          .kmvSourceSketches(batch, textCol, sourceCol, n, k)
-        // same has-data probe as appendDedupedStream: Hadoop FS (the
-        // sink can be object storage), and only a dir with part files
-        // counts (schema inference fails on an empty dir); shared
-        // swap protocol (normalized sibling temp + orphan promotion)
-        val (fs, hPath, tmp) = sinkPaths(spark, sinkPath)
-        promoteOrphanTemp(fs, hPath, tmp)
-        val merged =
-          if (hasPartFiles(fs, hPath)) {
-            val standing = spark.read.parquet(sinkPath)
-            // sketches built under a different k must not merge: a
-            // bottom-k re-agg over a smaller-k standing table silently
-            // caps the result at the OLD k (discarded ranks are gone).
-            // The sketch table is sources-sized — a 1-row probe, not a
-            // data-sized action. An all-rows-empty standing table
-            // (possible when every doc so far was shorter than n
-            // tokens) has a null min — nothing to conflict with.
-            val kHead = standing.agg(min(col("k"))).head
-            if (!kHead.isNullAt(0)) {
-              val standingK = kHead.getInt(0)
-              require(standingK == k,
-                s"sourceSketchStream: standing sketches were built " +
-                  s"with k=$standingK, stream configured with k=$k — " +
-                  "rebuild the standing table or match its k")
-            }
-            standing
-              .select(col("source"), explode(col("sk")).as("__h"))
-              .unionByName(
-                bSk.select(col("source"), explode(col("sk")).as("__h")))
-              .groupBy("source")
-              .agg(graft.functions.AggregateExpressions
-                .bottomKStrings(col("__h"), k).as("sk"))
-              .withColumn("k", lit(k))
-          } else bSk
-        // the write job reads the OLD sink while producing the temp —
-        // the sink is only deleted once the replacement is durable
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        swapInTemp(fs, hPath, tmp)
-        ()
-    }
-  }
-
-  /** Incremental t105 data card — the release card maintained AS THE
-    * CORPUS ARRIVES instead of recomputed per release. Sink-owned
-    * state in `sourceSketchStream`'s mold: the standing table holds
-    * one row per (source, lang) of MERGEABLE statistics — doc/token/
-    * char/quality sums merge by addition (exact BIGINTs, no double
-    * summation); the distinct-hash term is a bottom-k KMV sketch of
-    * the t54 canonical md5 (mergeable by union + re-bottom-k; exact
-    * below k, a2's (k−1)/h_k estimator above). Per batch: batch-local
-    * agg, unionByName with the standing (source, lang)-sized table,
-    * re-agg, temp-swap — never a corpus rescan. Render with
-    * [[readDataCard]].
-    *
-    * Replay idempotence: unlike the KMV-only sourceSketchStream
-    * (where re-merging a batch is a set-union no-op), the additive
-    * sums here WOULD double-count a replayed microbatch — so the
-    * standing table carries the last merged batchId and the fold
-    * skips any batch at or below it (foldHostRankBatch's batchId
-    * keying, in column form). The guard holds across the temp-swap
-    * crash window: a swap that completed before the checkpoint
-    * committed leaves last_batch == the replayed id, and the orphan
-    * promote recovers the swap's own crash window first. Like
-    * hostRankStream, the contract needs a DURABLE stream checkpoint —
-    * a temp checkpoint renumbers batches from 0 and the guard would
-    * wrongly skip real early batches. */
-  def dataCardStream(in: DataFrame, textCol: String, sourceCol: String,
-                     langCol: String, charsCol: String,
-                     sinkPath: String, k: Int = 256) = {
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val enriched = batch.select(
-          col(sourceCol).as("source"), col(langCol).as("lang"),
-          col(charsCol).cast("long").as("n_chars"),
-          graft.functions.SketchExpressions.textStats(col(textCol))
-            .as("__st"),
-          graft.ops.TextOps.bpeTokenCount(col(textCol)).cast("long")
-            .as("tok"),
-          md5(graft.functions.SketchExpressions
-            .canonicalizeText(col(textCol))).as("h"))
-          .withColumn("qm", round(graft.ops.TextOps
-            .qualityScoreFrom(col("__st")) * lit(1000000.0))
-            .cast("long"))
-        val bAgg = enriched.groupBy("source", "lang").agg(
-          count(lit(1)).as("n_docs"), sum("tok").as("sum_tok"),
-          sum("qm").as("sum_qm"), sum("n_chars").as("sum_chars"),
-          graft.functions.AggregateExpressions
-            .bottomKStrings(col("h"), k).as("sk"))
-          .withColumn("k", lit(k))
-          .withColumn("last_batch", lit(batchId))
-        val (fs, hPath, tmp) = sinkPaths(spark, sinkPath)
-        promoteOrphanTemp(fs, hPath, tmp)
-        val mergedOpt =
-          if (hasPartFiles(fs, hPath)) {
-            val standing = spark.read.parquet(sinkPath)
-            // same k-compatibility guard as sourceSketchStream: a
-            // smaller-k standing sketch silently caps the merge
-            val kHead = standing.agg(min(col("k"))).head
-            if (!kHead.isNullAt(0)) {
-              val standingK = kHead.getInt(0)
-              require(standingK == k,
-                s"dataCardStream: standing card was built with " +
-                  s"k=$standingK, stream configured with k=$k — " +
-                  "rebuild the standing table or match its k")
-            }
-            // replay guard: a batch already folded into the standing
-            // sums must not fold twice (see scaladoc). A standing
-            // card written before the guard existed has no
-            // last_batch column — treat it as -1 (merge everything)
-            // instead of crashing the stream on an unresolved column
-            val lastMerged =
-              if (!standing.columns.contains("last_batch")) -1L
-              else {
-                val lbHead = standing.agg(max(col("last_batch"))).head
-                if (lbHead.isNullAt(0)) -1L else lbHead.getLong(0)
-              }
-            if (batchId <= lastMerged) None
-            else {
-              val u = standing.unionByName(bAgg,
-                allowMissingColumns = true)
-              // two (source, lang)-sized aggs, NOT one: exploding the
-              // sketch before a combined agg would multiply the sums
-              // by the sketch size
-              val sums = u.groupBy("source", "lang").agg(
-                sum("n_docs").as("n_docs"), sum("sum_tok").as("sum_tok"),
-                sum("sum_qm").as("sum_qm"),
-                sum("sum_chars").as("sum_chars"))
-              val sks = u
-                .select(col("source"), col("lang"),
-                  explode(col("sk")).as("__h"))
-                .groupBy("source", "lang")
-                .agg(graft.functions.AggregateExpressions
-                  .bottomKStrings(col("__h"), k).as("sk"))
-              // left + coalesce: an all-null-text group has an empty
-              // sketch, which explode drops entirely
-              Some(sums.join(sks, Seq("source", "lang"), "left")
-                .withColumn("sk",
-                  coalesce(col("sk"), array().cast("array<string>")))
-                .withColumn("k", lit(k))
-                .withColumn("last_batch", lit(batchId)))
-            }
-          } else Some(bAgg)
-        mergedOpt.foreach { merged =>
-          merged.write.mode("overwrite").parquet(tmp.toString)
-          swapInTemp(fs, hPath, tmp)
-        }
-        ()
-    }
-  }
-
-  /** Render the standing [[dataCardStream]] table in t105's shape:
-    * per-source rollup, deterministic top-1 language (docs desc,
-    * lang), integer-ratio means, and `dup_ppm_est` from the merged
-    * KMV sketch — IDENTICAL to batch t105's exact `dup_ppm` whenever
-    * the per-source distinct count is under k. */
-  def readDataCard(spark: org.apache.spark.sql.SparkSession,
-                   sinkPath: String): DataFrame = {
-    val st = spark.read.parquet(sinkPath)
-    val kHead = st.agg(min(col("k"))).head
-    require(!kHead.isNullAt(0), s"readDataCard: $sinkPath is empty")
-    val k = kHead.getInt(0)
-    val sums = st.groupBy("source").agg(
-      sum("n_docs").as("n_docs"), sum("sum_tok").as("n_tok"),
-      sum("sum_qm").as("sum_qm"), sum("sum_chars").as("sum_chars"))
-    val sks = st.select(col("source"), explode(col("sk")).as("__h"))
-      .groupBy("source")
-      .agg(graft.functions.AggregateExpressions
-        .bottomKStrings(col("__h"), k).as("sk"))
-    // asc_nulls_last mirrors batch t105's tiebreak (DuckDB's ASC is
-    // NULLS LAST; Spark's default is NULLS FIRST)
-    val langTop = st.groupBy("source", "lang")
-      .agg(sum("n_docs").as("lc"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("source")
-          .orderBy(col("lc").desc, col("lang").asc_nulls_last)))
-      .where(col("rn") === 1)
-      .select(col("source"), col("lang").as("top_lang"))
-    sums.join(sks, Seq("source"), "left")
-      .join(broadcast(langTop), Seq("source"))
-      // CONVENTION (shared with batch t105, spec-locked equal): a
-      // source whose docs are all null/gram-less has est_uniq 0 and
-      // reads as dup_ppm_est = 10⁶ — "no unique content evidence"
-      // counts as duplication by the n_docs − n_uniq definition on
-      // BOTH paths; changing it here alone would break the ≡-batch
-      // contract
-      .withColumn("est_uniq",
-        when(coalesce(size(col("sk")), lit(0)) < k,
-          coalesce(size(col("sk")), lit(0)).cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(4503599627370496.0) /
-            conv(substring(element_at(col("sk"), k), 1, 13), 16, 10)
-              .cast("double")))
-      .select(col("source"), col("n_docs"), col("n_tok"),
-        greatest(lit(0L),
-          expr("(n_docs - CAST(round(est_uniq) AS BIGINT)) " +
-            "* 1000000 div n_docs")).as("dup_ppm_est"),
-        col("top_lang"),
-        expr("sum_qm div n_docs").as("mean_q_micro"),
-        expr("(sum_chars * 100) div n_docs").as("mean_chars_x100"))
-  }
-
   /** Online NOVELTY gate — batch t108's operational form: admit a
     * document only if at least `minNovelPpm` of its n-gram TYPES are
     * unseen so far, then fold the admitted documents' grams into a
@@ -1127,8 +389,7 @@ object Streaming {
     *    novelty evidence: they are NOT admitted (report row with
     *    n_grams = 0, admitted = 0).
     *  - Replay: admissions write under batch_id=<id> with dynamic
-    *    partition overwrite (the foldHostRankBatch pattern — a replay
-    *    overwrites its own partition), and the standing bitmap
+    *    partition overwrite (a replay overwrites its own partition), and the standing bitmap
     *    carries the last folded batchId: a batch at or below it is
     *    SKIPPED entirely. The guard is load-bearing, not bookkeeping
     *    — if a replayed batch re-probed a bloom that already folded
@@ -1255,441 +516,4 @@ object Streaming {
         ()
     }
   }
-
-  /** Incremental SemDeDup — t62's operational form: each microbatch of
-    * embeddings is (1) deduped WITHIN the batch by the same
-    * cluster-scoped keep-min rule (`Dedup.semDedupKeep`), then
-    * (2) checked against the STANDING sink cell-by-cell — a batch row
-    * with cosine ≥ τ against any already-kept vector in its cell is
-    * dropped (standing wins, regardless of id), and survivors append
-    * with their cell id. Sink-owned state like `appendDedupedStream`:
-    * the standing side is re-read per batch but joined ONLY on the
-    * batch's cells, so the work is batch × cell-sized, never
-    * sink-sized; restarts are idempotent for true duplicates (a
-    * replayed survivor matches itself in the sink ≥ τ and drops).
-    * Centroids are the caller's broadcast-sized side — the same
-    * coarse quantizer the batch path uses. */
-  def semDedupStream(in: DataFrame, idCol: String, vecCol: String,
-                     centroids: DataFrame, cidCol: String, tau: Double,
-                     sinkPath: String) =
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        guardCompactionLease(spark, sinkPath, "semDedupStream")
-        val kept = graft.ops.Dedup.semDedupKeepWithVec(batch, centroids,
-          idCol, cidCol, vecCol, tau)
-        val hPath = new org.apache.hadoop.fs.Path(sinkPath)
-        val fs = hPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val novel =
-          if (hasPartFiles(fs, hPath)) {
-            val standing = spark.read.parquet(sinkPath)
-              .select(col(cidCol), col(vecCol).as("__sv"))
-            val hit = kept.join(standing, Seq(cidCol))
-              .where(graft.ops.Vectors.cosine(col(vecCol), col("__sv"))
-                >= tau)
-              .select(col(idCol)).distinct()
-            kept.join(hit, Seq(idCol), "left_anti")
-          } else kept
-        novel.select(col(idCol), col(cidCol), col(vecCol))
-          .write.mode("append").parquet(sinkPath)
-        ()
-    }
-
-  /** DSIR scoring of a live feed — t59's operational form: each
-    * microbatch scores its documents against a STANDING target/corpus
-    * unigram LM (`TextOps.dsirLm` over the standing corpus, which the
-    * caller should MATERIALIZE — parquet or cached — so the corpus is
-    * not re-aggregated per batch; the LM is O(vocab) state, never
-    * O(corpus)). foreachBatch because per-doc aggregation over the
-    * exploded tokens is batch-local — no streaming state to bound, and
-    * every shuffle is batch-sized ⋈ vocab-sized. Tokens the standing
-    * LM never saw take the smoothed OOV ratio (see `dsirScore`).
-    * Replayed batches append duplicate score rows keyed by the same
-    * id — downstream consumers dedup on id, same contract as any
-    * at-least-once scoring sink. */
-  def dsirScoreStream(in: DataFrame, idCol: String, textCol: String,
-                      vocab: DataFrame, scalars: DataFrame,
-                      sinkPath: String) =
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        guardCompactionLease(batch.sparkSession, sinkPath,
-          "dsirScoreStream")
-        graft.ops.TextOps.dsirScore(batch, idCol, textCol, vocab, scalars)
-          .write.mode("append").parquet(sinkPath)
-        ()
-    }
-
-  /** CCNet-scoring twin of `dsirScoreStream`: score a live feed per
-    * microbatch against the standing per-language reference bigram LM
-    * (`TextOps.bigramLm`, materialized once — vocab-sized tables the
-    * batch scorer broadcasts). Same sink-owned append contract as the
-    * other foreachBatch sinks; the stream's scores ARE the batch
-    * operator's scores on the same rows (spec-asserted). */
-  def lmScoreStream(in: DataFrame, idCol: String, langCol: String,
-                    textCol: String, bg0: DataFrame, ug0: DataFrame,
-                    vsz: DataFrame, sinkPath: String) =
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        guardCompactionLease(batch.sparkSession, sinkPath,
-          "lmScoreStream")
-        graft.ops.TextOps.bigramLmScore(batch, idCol, langCol, textCol,
-          bg0, ug0, vsz)
-          .write.mode("append").parquet(sinkPath)
-        ()
-    }
-
-  /** One microbatch of the live host-rank fold (factored out of
-    * `hostRankStream` so replay idempotence and compaction are
-    * directly testable): the batch's (src, dst) citation pairs
-    * aggregate to per-batch edge weights written under
-    * `batch_id=<id>` with DYNAMIC partition overwrite, scoped to THIS
-    * write via the writer option (a session-conf flip would race
-    * concurrent streams: another stream's finally-restore mid-write
-    * would flip this write to static mode and wipe every other
-    * partition). Structured Streaming re-delivers a replayed batch
-    * under the SAME batchId, so the replay overwrites its own
-    * partition instead of double-counting — the canonical idempotent-
-    * foreachBatch pattern, which only holds with a DURABLE stream
-    * checkpoint (`hostRankStream` requires one: a temp checkpoint
-    * renumbers batches from 0 on restart and double-counts history).
-    *
-    * Partition growth is BOUNDED: once the sink holds more than
-    * `compactAfter` batch partitions, everything older than
-    * `keepRecent` batches folds into the consolidated `batch_id=-1`
-    * partition via the sourceSketchStream temp-swap (write complete
-    * temp, delete old, rename; recovery promotes a complete orphan
-    * temp at the next call) — so the standing read stays
-    * O(hosts + keepRecent) for the stream's whole lifetime.
-    * `keepRecent` must cover the redelivery window (foreachBatch
-    * re-runs at most the last uncommitted batch, so the default of 8
-    * is generous); a compacted batch's replay would re-add its
-    * partition, which the checkpoint contract prevents. */
-  def foldHostRankBatch(batch: DataFrame, batchId: Long, srcCol: String,
-                        dstCol: String, edgesSink: String,
-                        ranksSink: String, iters: Int = 3,
-                        compactAfter: Int = 64,
-                        keepRecent: Int = 8): Unit = {
-    val spark = batch.sparkSession
-    val (fs, hPath, tmp) = sinkPaths(spark, edgesSink)
-    // recovery: death between delete-old and rename-temp left a
-    // COMPLETE temp (has _SUCCESS) and no sink — promote it first
-    if (!fs.exists(hPath) && fs.exists(tmp) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
-        !fs.rename(tmp, hPath))
-      // unchecked, a false return would let this batch's overwrite
-      // bootstrap a FRESH sink and strand the whole edge history in
-      // the temp (the orphan predicate could never fire again)
-      throw new java.io.IOException(
-        s"foldHostRankBatch: orphan promote rename($tmp, $hPath) " +
-          "returned false — edge history stranded; fix the filesystem " +
-          "and rerun")
-    batch.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(edgesSink)
-    // an all-self-citation (or empty) first batch writes no part
-    // files; reading the sink would fail schema inference, and there
-    // is nothing to rank yet
-    if (!hasPartitionDirs(fs, hPath, "batch_id=")) return
-    val nParts = fs.listStatus(hPath)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    if (nParts > compactAfter) {
-      val all = spark.read.parquet(edgesSink)
-      val cutoff = batchId - keepRecent
-      val folded = all.where(col("batch_id") <= cutoff)
-        .groupBy("src", "dst").agg(sum("w").as("w"))
-        .withColumn("batch_id", lit(-1L))
-      val compacted = folded
-        .unionByName(all.where(col("batch_id") > cutoff))
-      if (fs.exists(tmp) && !fs.delete(tmp, true))
-        throw new java.io.IOException(
-          s"foldHostRankBatch: clearing stale temp $tmp returned false")
-      compacted.write.partitionBy("batch_id").parquet(tmp.toString)
-      // shared commit half: guarantees the _SUCCESS marker the
-      // promote-on-recovery predicate above keys on, independent of
-      // the committer's marksuccessfuljobs setting
-      swapInTemp(fs, hPath, tmp)
-    }
-    val standing = spark.read.parquet(edgesSink)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    // ranks are a DERIVED cache, not state: the crash-safe store is
-    // the batchId-partitioned edge sink; a torn ranks write self-heals
-    // on the next batch's rebuild (unlike sourceSketchStream, whose
-    // sink IS the state and needs the temp-swap)
-    graft.ops.Graph.pageRankPpm(standing, "src", "dst", "w", iters)
-      .write.mode("overwrite").parquet(ranksSink)
-  }
-
-  /** Live host-rank maintenance — the streaming twin of the t74/t77
-    * rank artifact over the crawl path (readWarcStream → extraction →
-    * (src, dst) citation pairs → this): every microbatch folds its
-    * edges into the standing table and refreshes the rank artifact
-    * downstream curation joins (t77's shape) read. Per batch the
-    * re-rank costs iters × (host-cardinality join + agg) — hosts, not
-    * documents, so a continuous refresh is affordable at crawl scale.
-    * `checkpointDir` is REQUIRED (not optional) because the replay
-    * idempotence of the edge fold rests on stable batch ids — see
-    * `foldHostRankBatch`. */
-  def hostRankStream(in: DataFrame, srcCol: String, dstCol: String,
-                     edgesSink: String, ranksSink: String,
-                     checkpointDir: String, iters: Int = 3) =
-    in.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: DataFrame, batchId: Long) =>
-          foldHostRankBatch(batch, batchId, srcCol, dstCol, edgesSink,
-            ranksSink, iters)
-      }
-
-  /** Continuous CDC maintenance of a bucket-partitioned standing
-    * corpus — `Cdc.applyChanges` as a stream (the operational form of
-    * t79): each microbatch of change rows merges into ONLY the
-    * key-buckets it touches. The base lives partitioned by
-    * `__kb = pmod(xxhash64(key), nBuckets)`; the delta's touched
-    * bucket set (≤ nBuckets values — a bounded driver collect, like
-    * the q39 centroid scalars) prunes the base read down to affected
-    * partitions, and the merged slice rewrites just those partitions
-    * via per-write dynamic overwrite — the bare-parquet answer to
-    * merge-on-read table formats. The rewrite is delta-proportional
-    * ONLY if nBuckets outnumbers the per-batch distinct-key count:
-    * random keys saturate all buckets at ~1.5k distinct keys per 256
-    * buckets (coupon collector), at which point every merge is a full
-    * corpus rewrite. Size nBuckets ≈ corpus_size / target_rewrite
-    * (e.g. 10⁴–10⁵ at 100 TB so one bucket is a few GB and a batch
-    * rewrites batch-keys × bucket-size bytes); the 256 default suits
-    * mid-size corpora and tests, not the 100 TB point.
-    *
-    * Replays need no batch-id machinery: SCD-1 merge is IDEMPOTENT
-    * (re-applied update rewrites the same row, re-applied delete
-    * no-ops, re-applied insert upserts), so re-delivering a batch
-    * against the already-merged base converges to the same state —
-    * spec-asserted. First batch bootstraps the base from the delta's
-    * non-delete rows. */
-  def cdcMergeStream(in: DataFrame, basePath: String, idCol: String,
-                     opCol: String, seqCol: String,
-                     checkpointDir: String,
-                     nBuckets: Int = 256) =
-    in.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (delta: DataFrame, _: Long) =>
-        mergeCdcBatch(delta, basePath, idCol, opCol, seqCol, nBuckets)
-      }
-
-  /** One microbatch of `cdcMergeStream` (factored for direct replay
-    * testing). ONE code path for bootstrap and merge: when no
-    * standing partitions exist (first batch, crashed write, or a
-    * corpus fully emptied by deletes) the base slice is simply empty,
-    * and the dynamic-overwrite write creates the partitions — no
-    * ErrorIfExists wedge state. The standing table persists each
-    * row's winning change order as `__seq`, and the base slice joins
-    * the merge as a pseudo-update at its stored seq — so a STALE
-    * straggler (an update whose seq is lower than the standing row's)
-    * loses to the base instead of blindly overwriting it. Deletes are
-    * NOT tombstoned: a straggler older than an applied delete
-    * re-inserts its row (full out-of-order-delete protection needs a
-    * tombstone table — documented limitation, as in most bare-file
-    * CDC folds). `nBuckets` is persisted in a `_graft_nbuckets`
-    * marker and re-validated on every merge (the sourceSketchStream
-    * k-guard): merging under a different bucket count would strand
-    * standing rows in partitions the pruned read never visits —
-    * silent duplicate keys and missed deletes. */
-  def mergeCdcBatch(delta: DataFrame, basePath: String, idCol: String,
-                    opCol: String, seqCol: String,
-                    nBuckets: Int): Unit = {
-    val spark = delta.sparkSession
-    require(!delta.columns.contains("__kb") &&
-        !delta.columns.contains("__seq"),
-      "mergeCdcBatch: the feed already has a __kb/__seq column — it " +
-        "would be clobbered (rename it)")
-    val hPath = new org.apache.hadoop.fs.Path(basePath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one eager materialization: the touched-set collect and the merge
-    // both consume the batch — without it the source re-reads and
-    // re-hashes every batch row twice per trigger
-    val d = delta
-      .withColumn("__kb", pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)))
-      .withColumn("__seq", col(seqCol))
-      .localCheckpoint(eager = true)
-    // touched buckets: bounded by nBuckets — a scalar-sized collect
-    val touched = d.select("__kb").distinct().collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val marker = new org.apache.hadoop.fs.Path(hPath, "_graft_nbuckets")
-    if (fs.exists(marker)) {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(fs.open(marker), "UTF-8"))
-      val stored = try in.readLine().trim.toInt finally in.close()
-      require(stored == nBuckets,
-        s"mergeCdcBatch: standing corpus was bucketed with " +
-          s"nBuckets=$stored, stream configured with $nBuckets — " +
-          "rebucket the corpus or match its layout")
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(nBuckets.toString.getBytes("UTF-8"))
-      finally out.close()
-    }
-    val dataCols = delta.columns
-      .filterNot(c => c == opCol || c == seqCol)
-    val storedCols = (dataCols :+ "__seq" :+ "__kb").map(col)
-    val feedCols = storedCols :+ col(opCol) :+ col(seqCol)
-    val basePseudo =
-      if (hasPartitionDirs(fs, hPath, "__kb="))
-        spark.read.parquet(basePath)
-          .where(col("__kb").isin(touched: _*)) // partition-pruned scan
-          .withColumn(opCol, lit("update"))
-          .withColumn(seqCol, col("__seq"))
-      else d.where(lit(false)) // empty, schema-complete
-    // EAGER materialization before the write: the merged slice reads
-    // the very partitions the write overwrites (Spark rejects lazy
-    // self-overwrite); the checkpoint is slice-sized —
-    // delta-proportional, the whole point of the bucket pruning
-    val merged = graft.ops.Cdc.applyChanges(
-        d.where(lit(false)).select(storedCols: _*),
-        basePseudo.select(feedCols: _*).unionByName(d.select(feedCols: _*)),
-        idCol, opCol, seqCol)
-      .localCheckpoint(eager = true)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__kb")
-      .parquet(basePath)
-    // dynamic overwrite only replaces partitions PRESENT in the
-    // output: a bucket whose last row was deleted never appears, so
-    // its stale partition would survive — drop emptied buckets
-    // explicitly (replay-safe: re-running the delete is a no-op)
-    val remaining = merged.select("__kb").distinct()
-      .collect().map(_.getLong(0)).toSet
-    touched.filterNot(remaining).foreach { b =>
-      val dir = new org.apache.hadoop.fs.Path(s"$basePath/__kb=$b")
-      // checked: a silently-surviving emptied bucket RESURRECTS
-      // deleted rows on the next read — data corruption, not cleanup
-      if (fs.exists(dir) && !fs.delete(dir, true))
-        throw new java.io.IOException(
-          s"mergeCdcBatch: delete of emptied bucket $dir returned " +
-            "false — deleted rows would resurface; fix and rerun " +
-            "(replay-safe)")
-    }
-  }
-
-  /** Stream-static enrichment: every microbatch left-joins the static
-    * dimension, broadcast so the stream side never shuffles — the
-    * standard shape for attaching source mixing weights / calibration
-    * parameters to a live feed. Stateless (no watermark): Spark
-    * re-plans the static side per microbatch, so a dimension re-read
-    * through a view picks up updates between batches. */
-  def enrichStream(in: DataFrame, dim: DataFrame,
-                   keys: Seq[String]): DataFrame =
-    in.join(broadcast(dim), keys, "left")
-
-  case class BudgetDoc(source: String, doc_id: Long, tok: Long)
-  case class AdmitOut(source: String, doc_id: Long, tok: Long, start: Long)
-
-  /** t95's admission rule as a stream: per-source token budgets over a
-    * live feed. The batch t95 takes the best-quality PREFIX of the
-    * whole corpus — a stream cannot sort the future, so the streaming
-    * contract is FIFO admission (arrival order; doc_id within a
-    * microbatch, for replay determinism): a document is admitted iff
-    * the tokens already admitted for its source are STRICTLY under
-    * the budget — t95's exact cut (`start·4 < total` there, `start <
-    * budget` here), so the boundary document that straddles the
-    * budget is admitted and everything after it is not. State = ONE
-    * long per source (tokens admitted so far) — bounded by source
-    * cardinality, no timeout needed; `start` in the output is the
-    * admitted document's per-source token offset, the same packing
-    * coordinate the batch query reports. Quality-ORDERED budget
-    * selection in a streaming setting is a periodic batch re-rank
-    * over the admitted sink (t95 on the sink path); this gate is the
-    * ingest-side form that stops paying for tokens past the budget. */
-  def budgetAdmitStream(in: Dataset[BudgetDoc],
-                        budget: Long): Dataset[AdmitOut] = {
-    import in.sparkSession.implicits._
-    require(budget > 0, s"budgetAdmitStream: budget must be positive, got $budget")
-    in.groupByKey(_.source)
-      .flatMapGroupsWithState[Long, AdmitOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (source, rows, state: GroupState[Long]) =>
-          var used = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_.doc_id).flatMap { d =>
-            if (used < budget) {
-              val admitted = AdmitOut(source, d.doc_id, d.tok, used)
-              used += math.max(d.tok, 0L)
-              Some(admitted)
-            } else None
-          }
-          state.update(used)
-          out.iterator
-      }
-  }
-
-  case class UdgReading(sensor: String, ts: java.sql.Timestamp, udg: Double)
-  /** One TFRecord streaming microbatch — S11's streaming form, shared
-    * by `tfRecordStreamSink` and its replay spec: the batch writes
-    * shard files under DETERMINISTIC (shard, batchId) names
-    * (`<shard>-b<batchId>.tfrecord`), so a crash/replay of the same
-    * batch OVERWRITES its own files instead of duplicating records —
-    * exactly-once rests on name idempotence, the same property
-    * Spark's file sinks get from their commit manifest. No compaction
-    * lease needed: unlike the parquet append sinks nothing ever
-    * rewrites or deletes an existing batch's files out from under a
-    * writer, and batch file names never collide across batches. */
-  def tfRecordBatch(outDir: String, shardCol: String, orderCol: String,
-                    int64Cols: Seq[String], bytesCols: Seq[String])
-                   (batch: DataFrame, batchId: Long): Unit = {
-    // clearStale = false: the dir is shared across batches — a
-    // replay overwrites only its OWN batch-suffixed names; clearing
-    // the whole dir would drop earlier batches' shards
-    graft.sink.TfRecord.write(
-      batch.withColumn(shardCol,
-        concat(col(shardCol), lit("-b"), lit(batchId))),
-      outDir, shardCol, orderCol, int64Cols, bytesCols,
-      floatCols = Nil, clearStale = false)
-    ()
-  }
-
-  /** Streaming TFRecord export: docs stream in, each microbatch lands
-    * as its own set of shard files (see `tfRecordBatch`). Readers use
-    * `TfRecord.read` — the batch suffix keeps every delivery
-    * addressable, and a training run's file list IS its data
-    * manifest. */
-  def tfRecordStreamSink(in: DataFrame, outDir: String,
-                         shardCol: String, orderCol: String,
-                         int64Cols: Seq[String], bytesCols: Seq[String]) =
-    in.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        tfRecordBatch(outDir, shardCol, orderCol, int64Cols,
-          bytesCols)(batch, batchId)
-    }
-
-  case class DepthOut(sensor: String, ts: java.sql.Timestamp, depth: Double)
-  case class X1State(offset: Double, initialized: Boolean)
-
-  /** X1 as a streaming operator. Events must arrive in order per key
-    * (or be re-sorted upstream per microbatch); `installDepths` seeds the
-    * offset at a sensor's first reading. */
-  def depthRecurrence(in: Dataset[UdgReading],
-                      installDepths: Map[String, Double])
-                     : Dataset[DepthOut] = {
-    import in.sparkSession.implicits._
-    in.groupByKey(_.sensor)
-      .flatMapGroupsWithState[X1State, DepthOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (sensor, rows, state: GroupState[X1State]) =>
-          val sorted = rows.toSeq.sortBy(_.ts.getTime)
-          var st = state.getOption.getOrElse(X1State(0.0, initialized = false))
-          val out = sorted.map { r =>
-            if (!st.initialized)
-              st = X1State(installDepths.getOrElse(sensor, 0.0) - r.udg,
-                initialized = true)
-            var d = r.udg + st.offset
-            if (d >= 0.0) { d = 0.0; st = st.copy(offset = -r.udg) }
-            DepthOut(sensor, r.ts, d)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
 }
-

@@ -253,4 +253,15 @@ class EdgeCaseSpec extends SparkSpec {
         -1.0))) // installed after the series ends
     assert(out.count() === 0)
   }
+
+  test("perceptual-hash pipelines accept empty input") {
+    val noHashes = Seq.empty[(Long, Long)].toDF("id", "phash")
+    assert(Multimodal.phashNearDup(noHashes).count() === 0)
+    assert(Multimodal.phashClusters(noHashes).count() === 0)
+    val noRows = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      Multimodal.Schema)
+    assert(Multimodal.imageDHash(noRows).count() === 0)
+    assert(Multimodal.audioEnvHash(noRows).count() === 0)
+  }
 }

@@ -672,6 +672,38 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("phashNearDup recall is EXACT at Hamming <= 3 vs brute force") {
+    import spark.implicits._
+    // random 64-bit hashes plus planted <=3-bit perturbations: the
+    // 4-band pigeonhole must find EVERY true pair (recall 1.0); the
+    // exact bit_count check keeps precision 1.0 too, so the band join
+    // must equal brute force exactly — the guarantee the scaladoc
+    // claims, locked as a property
+    val rnd = new scala.util.Random(7)
+    val bases = Seq.fill(60)(rnd.nextLong())
+    val perturbed = bases.zipWithIndex.flatMap { case (h, i) =>
+      if (i % 3 == 0) {
+        val flips = 1 + rnd.nextInt(3) // 1..3 bit flips
+        var v = h
+        (1 to flips).foreach(_ => v ^= (1L << rnd.nextInt(64)))
+        Seq(v)
+      } else Nil
+    }
+    val all = (bases ++ perturbed).distinct.zipWithIndex
+      .map { case (h, i) => (i.toLong, h) }
+    val truth = (for {
+      (ia, ha) <- all; (ib, hb) <- all
+      if ia < ib && java.lang.Long.bitCount(ha ^ hb) <= 3
+    } yield (ia, ib)).toSet
+    assert(truth.nonEmpty, "test corpus planted no true pairs")
+    val got = graft.ops.Multimodal
+      .phashNearDup(all.toDF("id", "phash"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === truth,
+      s"band join != brute force: missed ${truth -- got}, " +
+        s"extra ${got -- truth}")
+  }
+
   test("t90 batches respect the token budget modulo one straddler") {
     // assignment is by START position, so a batch's token sum can
     // exceed the budget only by the tail of its last (straddling)

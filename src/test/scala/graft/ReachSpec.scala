@@ -18,6 +18,13 @@ class ReachSpec extends AnyFunSuite {
   private val entryPoints = Seq("Bench", "Verify", "Cli", "Stations",
     "Explain", "DataGen", "SparkEntry")
 
+  /** Unreachable files whose removal is scheduled (ROADMAP direction
+    * 6): the streaming append sinks and the media decoders they feed
+    * on. Each must still exist and still be unreached, so the set can
+    * only shrink. */
+  private val pendingRemoval = Set("graft.ops.Multimodal",
+    "graft.streaming.Streaming")
+
   /** Each main class → the main classes it references. */
   private def classGraph(classes: String): Map[String, Set[String]] = {
     val out = new StringWriter
@@ -50,8 +57,12 @@ class ReachSpec extends AnyFunSuite {
       seen ++= frontier
     }
     def top(c: String) = c.takeWhile(_ != '$')
-    val unreached = (graph.keySet.map(top) -- seen.map(top)).toSeq.sorted
-    assert(unreached.isEmpty, "top-level main classes that no entry " +
-      s"point reaches: ${unreached.mkString(", ")}")
+    val unreached = graph.keySet.map(top) -- seen.map(top)
+    val stale = pendingRemoval -- unreached
+    assert(stale.isEmpty, "pendingRemoval names classes that are gone " +
+      s"or reached: ${stale.toSeq.sorted.mkString(", ")}")
+    val dead = (unreached -- pendingRemoval).toSeq.sorted
+    assert(dead.isEmpty, "top-level main classes that no entry " +
+      s"point reaches: ${dead.mkString(", ")}")
   }
 }
