@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.ingest.Toa5
-import graft.pipeline.Site
+import graft.pipeline.{Collect, Site}
 import graft.sink.{NetCdf, Writers}
 
 /** Operational CLI wrappers — the engine twin of the reference's
@@ -29,9 +29,10 @@ import graft.sink.{NetCdf, Writers}
   * just the local filesystem.
   *
   * A call runs in the JVM's session (`GraftSession.run`), so later calls
-  * in the same JVM (`Stations`) reuse it; `l1`'s and `l2`'s frames are
-  * unpersisted in `finally` blocks, so nothing a call caches outlives
-  * it.
+  * in the same JVM (`Stations`) reuse it. Each call runs its pipeline as
+  * one query, collects the product to the driver once and writes every
+  * product of the call from that copy, through the FileSystem of each
+  * output path; it caches nothing, so nothing outlives the call.
   */
 object Cli {
 
@@ -120,7 +121,7 @@ object Cli {
       .coalesce(1)
   }
 
-  /** The Level-2 frame `l2` persists: the site's Level-2 plan over the
+  /** The Level-2 frame `l2` collects: the site's Level-2 plan over the
     * Level-1 CSV at `l1Path`, in time order (the order its UDG pass
     * keeps, so the sort adds no work). */
   private[graft] def level2Frame(spark: SparkSession, site: Site.Spec,
@@ -154,15 +155,13 @@ object Cli {
         case "l1" =>
           val out = a.outfile.getOrElse(l1DefaultPath(a.dataRoot, a.site))
           guard(spark, out, a.ow, "Level-1")
-          // one read of the bales; written from the cache in the time
-          // order the pass keeps. The row counts around the dedup, as
-          // the reference prints them (fs_pp.py:98-104)
-          val rows = site.withLevel1 { (l1, rows) =>
-            Writers.csvSingle(l1, out, sortCols = Seq(site.cfg.tsCol))
-            rows
-          }
-          println(s"[cli] level-1 rows: ${rows.in} ingested, ${rows.out} " +
-            "after the keep-first dedup")
+          // one read of the bales, collected in time order. The row
+          // counts around the dedup, as the reference prints them
+          // (fs_pp.py:98-104)
+          val l1 = site.level1()
+          Writers.csvSingle(spark, l1.schema, l1.rows, out)
+          println(s"[cli] level-1 rows: ${l1.counts.in} ingested, " +
+            s"${l1.counts.out} after the keep-first dedup")
           println(s"[cli] level-1 written: $out")
         case "l2" =>
           val outCsv = a.outfile.getOrElse(l2DefaultPath(a.dataRoot, a.site))
@@ -170,22 +169,23 @@ object Cli {
           guard(spark, outCsv, a.ow, "Level-2")
           guard(spark, outNc, a.ow, "Level-2 NetCDF")
           val l1Path = a.l1file.getOrElse(l1DefaultPath(a.dataRoot, a.site))
-          // ONE Level-2 execution feeds both sinks, as the reference
-          // exports one in-memory dataset (fs_process_l2.py:177-204).
-          // Cached in time order, so both sinks' own time sorts are
-          // satisfied by the cache and do not shuffle again. Released
-          // here: the session outlives the call.
-          val l2 = level2Frame(spark, site, l1Path).persist()
-          try {
-            Writers.csvSingle(l2, outCsv, sortCols = Seq(site.cfg.tsCol))
-            // export-sized driver-side NetCDF (S8) with the reference's
-            // site attribution (fs_process_l2.py:177-192)
-            NetCdf.writeWide(outNc, l2, site.cfg.tsCol,
-              globalAtts = Seq(
-                NetCdf.Att("site", a.site),
-                NetCdf.Att("source", "graft level-2 pipeline"),
-                NetCdf.Att("timezone", "UTC")))
-          } finally l2.unpersist()
+          // ONE Level-2 execution, collected once in time order, feeds
+          // both sinks, as the reference exports one in-memory dataset
+          // (fs_process_l2.py:177-204)
+          val l2 = level2Frame(spark, site, l1Path)
+          val rows = Collect.rows(l2)
+          // the NetCDF first: its checks are the only ones that can
+          // refuse these rows, and they run before it opens a file, so a
+          // refused product writes neither file. Export-sized driver-side
+          // NetCDF (S8) with the reference's site attribution
+          // (fs_process_l2.py:177-192)
+          NetCdf.writeWide(spark.sparkContext.hadoopConfiguration, outNc,
+            l2.schema, rows, site.cfg.tsCol,
+            globalAtts = Seq(
+              NetCdf.Att("site", a.site),
+              NetCdf.Att("source", "graft level-2 pipeline"),
+              NetCdf.Att("timezone", "UTC")))
+          Writers.csvSingle(spark, l2.schema, rows, outCsv)
           println(s"[cli] level-2 written: $outCsv, $outNc")
       }
     }

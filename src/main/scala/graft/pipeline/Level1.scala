@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.AccumulatorV2
 
 import graft.ingest.Toa5
@@ -25,6 +26,9 @@ import graft.plans.{OrderedKernel, RowKernel}
   * all-NaN columns before it dedups. The reference's full-row dedup
   * needs no step of its own: exact duplicate rows share a timestamp, so
   * keep-first already collapses them to one of several identical rows.
+  * `product` collects the kernel's rows to the driver in that one query
+  * and drops the all-null columns there, so nothing is cached and the
+  * bales are read once.
   */
 object Level1 {
 
@@ -52,28 +56,40 @@ object Level1 {
     * keep-first dedup (`out`). */
   final case class Rows(in: Long, out: Long)
 
-  /** Runs the Level-1 pass once into the cache, then hands `f` the
-    * Level-1 product, read from that cache in time order, and the pass's
-    * row counts; the cache is released when `f` returns or throws, even
-    * when the session is the caller's. The bales are read once.
+  /** The Level-1 product on the driver: `schema` without the columns
+    * no ingested row fills and without `Toa5.FileOrderCol`, `rows` in
+    * time order, and the pass's row counts. */
+  final case class Product(schema: StructType, rows: Array[InternalRow],
+                           counts: Rows)
+
+  /** Runs the Level-1 pass as one query, collecting its rows to the
+    * driver once, then drops the all-null columns, which only the
+    * finished pass names, and the file order column by a projection of
+    * the collected rows. The bales are read once.
     *
     * The counts are the reference's printed row counts around its dedup
-    * (fs_pp.py:98-104), taken as `Observation` metrics of the one job
-    * that fills the cache rather than as extra driver-side counts. */
-  def withProduct[A](spark: SparkSession, sources: Seq[Source],
-                     tsCol: String = "TIMESTAMP")
-                    (f: (DataFrame, Rows) => A): A = {
+    * (fs_pp.py:98-104), taken as `Observation` metrics of that one query
+    * rather than as extra driver-side counts. */
+  def product(spark: SparkSession, sources: Seq[Source],
+              tsCol: String = "TIMESTAMP"): Product = {
     val obsIn = Observation("l1_rows_in")
     val obsOut = Observation("l1_rows_out")
     val p = keepFirst(ingest(spark, sources, tsCol)
       .observe(obsIn, count(lit(1)).as("rows_in")), tsCol)
-    val frame = p.frame.observe(obsOut, count(lit(1)).as("rows_out")).persist()
-    try {
-      frame.count()
-      f(frame.drop(Toa5.FileOrderCol +: p.allNull: _*),
-        Rows(obsIn.get("rows_in").asInstanceOf[Long],
-          obsOut.get("rows_out").asInstanceOf[Long]))
-    } finally frame.unpersist()
+    val frame = p.frame.observe(obsOut, count(lit(1)).as("rows_out"))
+    val collected = Collect.rows(frame)
+    val dropped = (Toa5.FileOrderCol +: p.allNull).toSet
+    val kept = frame.schema.fields.indices
+      .filterNot(i => dropped(frame.schema(i).name))
+    val schema = StructType(kept.map(frame.schema(_)))
+    Product(schema,
+      collected.map { r =>
+        val row = ProjectingInternalRow(schema, kept)
+        row.project(r)
+        row
+      },
+      Rows(obsIn.get("rows_in").asInstanceOf[Long],
+        obsOut.get("rows_out").asInstanceOf[Long]))
   }
 
   /** Level-1 as one ordered pass, before its all-null column drop:

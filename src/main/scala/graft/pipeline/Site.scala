@@ -9,18 +9,17 @@ import graft.ops.Udg
   * metafile, then run level0→level1→level2
   * (cassandra_fs_pp/__init__.py:1, fs_pp.py:29-65 `_load_config`,
   * README.md "Metadata files") — but holding DataFrames instead of
-  * mutable eager state. `withLevel1` runs the Level-1 pass once into
-  * the cache (it must run to learn which all-null columns it drops) and
-  * hands the block the product read from that cache, with the pass's
-  * row counts; the cache is released when the block ends (see
-  * `Level1.withProduct`).
+  * mutable eager state. `level1` runs the Level-1 pass as one query
+  * (it must run to learn which all-null columns it drops) and returns
+  * the product collected on the driver, with the pass's row counts (see
+  * `Level1.product`); `level2` is a lazy plan over a Level-1 frame,
+  * which `Cli` reads back from the Level-1 CSV.
   *
   * {{{
   *   val site = Site.fromToml(spark, "/data/ppconfig/fs1.toml", dataRoot)
-  *   site.withLevel1 { (l1, rows) =>   // reads the bales once
-  *     val l2 = site.level2(l1)        // lazy plan over the cached l1
-  *     ...                             // act on l2 inside the block
-  *   }
+  *   val l1 = site.level1()              // reads the bales once
+  *   Writers.csvSingle(spark, l1.schema, l1.rows, l1Csv)
+  *   val l2 = site.level2(Cli.loadL1(spark, l1Csv, site.cfg.tsCol))
   * }}}
   */
 object Site {
@@ -50,8 +49,7 @@ object Site {
   case class Spec(spark: SparkSession, site: String,
                   sources: Seq[Level1.Source], cfg: Level2.Config,
                   udgTarget: String) {
-    def withLevel1[A](f: (DataFrame, Level1.Rows) => A): A =
-      Level1.withProduct(spark, sources, cfg.tsCol)(f)
+    def level1(): Level1.Product = Level1.product(spark, sources, cfg.tsCol)
     def level2(l1: DataFrame): DataFrame = Level2.run(l1, cfg, udgTarget)
   }
 

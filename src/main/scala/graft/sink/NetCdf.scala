@@ -1,6 +1,11 @@
 package graft.sink
 
-import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream}
+import java.io.{BufferedOutputStream, DataOutputStream}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
 
 /** Pure-Scala writer for the NetCDF classic binary format (CDF-1),
   * closing the reference's one remaining binary-sink gap
@@ -52,20 +57,20 @@ object NetCdf {
                  ncType: Int, data: Array[Double])
   case class Dataset(dims: Seq[Dim], atts: Seq[Att], vars: Seq[Var])
 
-  /** Driver-side bridge from an export-sized wide DataFrame (the
-    * Level-2 result shape): `timeCol` becomes the time coordinate
-    * (seconds since epoch, CF units attr), every other numeric column
-    * a 1-D NC_DOUBLE variable over time; nulls encode as NaN (the
-    * same choice xarray makes for float data). Bounded by a collect —
-    * identical contract to the reference's in-memory xarray export;
-    * the distributed path stays Parquet + sidecar. */
-  def writeWide(path: String, df: org.apache.spark.sql.DataFrame,
-                timeCol: String,
+  /** Driver-side bridge from an export-sized wide product (the Level-2
+    * result shape, collected once by `Collect.rows`): `timeCol`
+    * becomes the time coordinate (seconds since epoch, CF units attr),
+    * every other numeric column a 1-D NC_DOUBLE variable over time;
+    * nulls encode as NaN (the same choice xarray makes for float data).
+    * `rows` must come in time order: the coordinate is written as given.
+    * Every check on the values runs before `path` is opened — the
+    * reference's in-memory xarray export; the distributed path stays
+    * Parquet + sidecar. */
+  def writeWide(conf: Configuration, path: String, schema: StructType,
+                rows: Array[InternalRow], timeCol: String,
                 globalAtts: Seq[Att] = Nil,
                 varAtts: Map[String, Seq[Att]] = Map.empty,
                 fixedPointCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types._
     // DecimalType included: it is the engine's own fixed-point S8
     // representation — silently dropping it would "export" a file
     // missing variables
@@ -75,45 +80,25 @@ object NetCdf {
       case _: DecimalType => true
       case _ => false
     }
-    val fields = df.schema.fields
-      .filter(f => f.name != timeCol && isNumeric(f.dataType))
-    val rows = df
-      .select((timeCol +: fields.map(_.name).toSeq).map(col): _*)
-      .orderBy(col(timeCol)).collect()
+    val fields = schema.fields.zipWithIndex
+      .filter { case (f, _) => f.name != timeCol && isNumeric(f.dataType) }
     require(rows.nonEmpty, "netcdf export of an empty frame")
-    val times = rows.map { r =>
-      r.get(0) match {
-        case t: java.sql.Timestamp => t.getTime / 1000.0
-        case x: Number => x.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"unsupported time value $other")
-      }
+    val t = schema.fieldIndex(timeCol)
+    val time: InternalRow => Double = schema(t).dataType match {
+      // as java.sql.Timestamp.getTime: whole milliseconds
+      case TimestampType => r => Math.floorDiv(r.getLong(t), 1000L) / 1000.0
+      case dt if isNumeric(dt) => r => value(r, t, schema(t))
+      case other => throw new IllegalArgumentException(
+        s"$timeCol: unsupported time type $other")
     }
-    def colData(i: Int): Array[Double] = rows.map { r =>
-      if (r.isNullAt(i + 1)) Double.NaN
-      else r.get(i + 1) match {
-        // NetCDF classic has no int64: a long above 2^53 would coerce
-        // through double with silent precision loss — reject it
-        case l: java.lang.Long =>
-          // two-sided compare, not math.abs: abs(Long.MinValue) is
-          // NEGATIVE and would slip through the magnitude guard
-          require(l > -(1L << 53) && l <= (1L << 53),
-            s"${fields(i).name}: long value $l not exact in NC_DOUBLE")
-          l.toDouble
-        case d: java.math.BigDecimal =>
-          // same hazard as the long case: >15 significant decimal
-          // digits silently lose digits through a double — fail loud.
-          // stripTrailingZeros first: scale padding (123456.0000000000
-          // in a decimal(20,10) column) is not significance.
-          // (≤15 digits round-trip; the inherent binary approximation
-          // of e.g. 0.1 is standard decimal→double conversion, kept.)
-          require(d.stripTrailingZeros().precision <= 15,
-            s"${fields(i).name}: decimal $d not exact in NC_DOUBLE")
-          d.doubleValue()
-        case n: Number => n.doubleValue()
-        case other => throw new IllegalArgumentException(
-          s"${fields(i).name}: unsupported value $other")
-      }
+    val times = rows.map { r =>
+      require(!r.isNullAt(t), s"$timeCol: null time value")
+      time(r)
+    }
+    require(times.indices.drop(1).forall(i => times(i - 1) <= times(i)),
+      s"$timeCol: rows are not in time order")
+    def colData(f: StructField, i: Int): Array[Double] = rows.map { r =>
+      if (r.isNullAt(i)) Double.NaN else value(r, i, f)
     }
     val timeVar = Var(timeCol, Seq(0),
       Seq(Att("units", "seconds since 1970-01-01 00:00:00"),
@@ -121,14 +106,14 @@ object NetCdf {
     // the reference's per-variable encoding (fs_process_l2.py:196-200):
     // int32 with scale_factor=0.001 and _FillValue=-9999 — a CF reader
     // reconstructs value = int * scale_factor, fill where -9999
-    val dataVars = fields.zipWithIndex.map { case (f, i) =>
+    val dataVars = fields.map { case (f, i) =>
       if (fixedPointCols.contains(f.name))
         Var(f.name, Seq(0),
           varAtts.getOrElse(f.name, Nil) ++
             Seq(Att.dbl("scale_factor", 0.001),
               Att.int("_FillValue", -9999)),
           NcInt,
-          colData(i).map { d =>
+          colData(f, i).map { d =>
             if (d.isNaN) -9999.0
             else {
               // half-even like the reference encoder (xarray applies
@@ -148,11 +133,44 @@ object NetCdf {
           })
       else
         Var(f.name, Seq(0), varAtts.getOrElse(f.name, Nil), NcDouble,
-          colData(i))
+          colData(f, i))
     }
-    write(path, Dataset(Seq(Dim(timeCol, rows.length)), globalAtts,
+    write(conf, path, Dataset(Seq(Dim(timeCol, rows.length)), globalAtts,
       timeVar +: dataVars.toSeq))
   }
+
+  /** A numeric cell as the NC_DOUBLE it is stored as; fails on a value
+    * a double cannot hold exactly. */
+  private def value(r: InternalRow, i: Int, f: StructField): Double =
+    f.dataType match {
+      case DoubleType => r.getDouble(i)
+      case FloatType => r.getFloat(i).toDouble
+      case IntegerType => r.getInt(i).toDouble
+      case ShortType => r.getShort(i).toDouble
+      case ByteType => r.getByte(i).toDouble
+      case LongType =>
+        // NetCDF classic has no int64: a long above 2^53 would coerce
+        // through double with silent precision loss — reject it
+        val l = r.getLong(i)
+        // two-sided compare, not math.abs: abs(Long.MinValue) is
+        // NEGATIVE and would slip through the magnitude guard
+        require(l > -(1L << 53) && l <= (1L << 53),
+          s"${f.name}: long value $l not exact in NC_DOUBLE")
+        l.toDouble
+      case dt: DecimalType =>
+        val d = r.getDecimal(i, dt.precision, dt.scale).toJavaBigDecimal
+        // same hazard as the long case: >15 significant decimal
+        // digits silently lose digits through a double — fail loud.
+        // stripTrailingZeros first: scale padding (123456.0000000000
+        // in a decimal(20,10) column) is not significance.
+        // (≤15 digits round-trip; the inherent binary approximation
+        // of e.g. 0.1 is standard decimal→double conversion, kept.)
+        require(d.stripTrailingZeros().precision <= 15,
+          s"${f.name}: decimal $d not exact in NC_DOUBLE")
+        d.doubleValue()
+      case other => throw new IllegalArgumentException(
+        s"${f.name}: unsupported type $other")
+    }
 
   private val TagDim = 0x0A
   private val TagVar = 0x0B
@@ -205,7 +223,10 @@ object NetCdf {
     4 + 4 + dimList + attListBytes(ds.atts) + varList
   }
 
-  def write(path: String, ds: Dataset): Unit = {
+  /** Writes `ds` to `path` through the Hadoop FileSystem of its URI,
+    * under a hidden name renamed into place (`Writers.commitFile`), once
+    * every shape, type and offset check has passed. */
+  def write(conf: Configuration, path: String, ds: Dataset): Unit = {
     require(ds.dims.forall(_.length > 0),
       "record (unlimited) dimensions are out of scope for this sink")
     ds.vars.foreach { v =>
@@ -228,9 +249,8 @@ object NetCdf {
         s"${v.name}: file exceeds the CDF-1 32-bit offset format")
       end
     }
-    val out = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(path)))
-    try {
+    Writers.commitFile(conf, new Path(path)) { os =>
+      val out = new DataOutputStream(new BufferedOutputStream(os))
       def writeName(s: String): Unit = {
         val b = s.getBytes("UTF-8")
         out.writeInt(b.length); out.write(b)
@@ -300,6 +320,7 @@ object NetCdf {
         }
         (0 until pad4(written.toInt)).foreach(_ => out.writeByte(0))
       }
-    } finally out.close()
+      out.flush()
+    }
   }
 }

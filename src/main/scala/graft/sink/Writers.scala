@@ -1,6 +1,11 @@
 package graft.sink
 
-import org.apache.spark.sql.DataFrame
+import java.io.{IOException, OutputStream, OutputStreamWriter}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -17,16 +22,52 @@ import org.apache.hadoop.fs.Path
   */
 object Writers {
 
-  /** S4 — single continuous CSV (a stated product property of level-1;
-    * the coalesce(1) is the point, not an accident — callers at scale
-    * should use partitioned parquet instead). */
-  def csvSingle(df: DataFrame, path: String,
-                sortCols: Seq[String] = Nil): Unit = {
-    val sorted = if (sortCols.nonEmpty)
-      df.orderBy(sortCols.map(org.apache.spark.sql.functions.col): _*)
-    else df
-    sorted.coalesce(1).write.mode("overwrite")
-      .option("header", "true").csv(path)
+  /** S4 — the product as ONE continuous CSV file, `part-00000.csv`
+    * under the directory `path` (a stated product property of level-1;
+    * callers at scale should use partitioned parquet instead), with
+    * `_SUCCESS` beside it once it is in place; an existing `path` is
+    * replaced. The rows are written in the order given, by the
+    * generator Spark's own CSV writer runs in its task, with the options
+    * that writer builds for `header = true` under the session time zone:
+    * the bytes are the ones `coalesce(1).write.csv` writes. */
+  def csvSingle(spark: SparkSession, schema: StructType,
+                rows: Array[InternalRow], path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    if (fs.exists(dir) && !fs.delete(dir, true))
+      throw new IOException(s"could not delete $dir")
+    // columnPruning is a read-side setting
+    val options = new CSVOptions(Map("header" -> "true"),
+      columnPruning = false, spark.conf.get("spark.sql.session.timeZone"))
+    commitFile(conf, new Path(dir, "part-00000.csv")) { out =>
+      val gen = new UnivocityGenerator(schema,
+        new OutputStreamWriter(out, options.charset), options)
+      gen.writeHeaders()
+      rows.foreach(gen.write)
+      gen.flush()
+    }
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** Writes the file `path` through the Hadoop FileSystem of its URI:
+    * `write` fills a hidden sibling, which then replaces `path` by a
+    * rename, so `path` is untouched until the write has finished. A
+    * failure removes the sibling. */
+  private[sink] def commitFile(conf: Configuration, path: Path)
+                              (write: OutputStream => Unit): Unit = {
+    val fs = path.getFileSystem(conf)
+    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+    try {
+      val out = fs.create(tmp, true)
+      try write(out) finally out.close()
+      if (fs.exists(path) && !fs.delete(path, false))
+        throw new IOException(s"could not delete $path")
+      if (!fs.rename(tmp, path))
+        throw new IOException(s"could not rename $tmp to $path")
+    } catch {
+      case e: Throwable => fs.delete(tmp, false); throw e
+    }
   }
 
   // escapes control chars too: attribute values come from callers,

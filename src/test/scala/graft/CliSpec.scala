@@ -11,6 +11,46 @@ class CliSpec extends SparkSpec {
 
   import CliFixture.{partFile, siteTree}
 
+  /** The queries `body` ran in the shared session (one per SQL
+    * execution), the jobs they ran and how many of those jobs' stages
+    * read files. */
+  private def queriesDuring(body: => Unit)
+      : (Seq[org.apache.spark.sql.execution.QueryExecution], Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val starts = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => started.incrementAndGet()
+        case _ => ()
+      }
+    }
+    val ends = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        done.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        done.add(qe)
+    }
+    spark.sparkContext.addSparkListener(starts)
+    spark.listenerManager.register(ends)
+    try {
+      // the starts precede their jobs on the listener bus, which
+      // jobsAndScanStagesDuring drains up to the last job's end
+      val (jobs, scans) = jobsAndScanStagesDuring(body)
+      val deadline = System.nanoTime() + 30000000000L
+      while (done.size < started.get && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      import scala.jdk.CollectionConverters._
+      (done.asScala.toSeq, jobs, scans)
+    } finally {
+      spark.listenerManager.unregister(ends)
+      spark.sparkContext.removeSparkListener(starts)
+    }
+  }
+
   test("l1 + l2 over the default layout; guard refuses, -ow forces") {
     val root = siteTree().toString
     Cli.main(Array("l1", "fs9", "-data_root", root))
@@ -53,12 +93,16 @@ class CliSpec extends SparkSpec {
     // start from an empty cache so the checks below see only Cli's
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val jobs = jobsDuring { Cli.main(Array("l2", "fs9", "-data_root", root)) }
-    // 4 on this fixture: the adaptive stages of ONE Level-2 execution
-    // into the time-sorted cache, and the two sinks reading it. The
-    // window-chain UDG filter with its join back and final dedup ran
-    // 13.
-    assert(jobs <= 4, s"Cli l2 ran $jobs jobs")
+    val (queries, jobs, _) = queriesDuring {
+      Cli.main(Array("l2", "fs9", "-data_root", root))
+    }
+    // ONE Level-2 execution, collected once; neither sink runs a job.
+    // 1 on this fixture: the Level-1 CSV is one partition, so the plan
+    // has no exchange. A cache fill with a CSV write job and a NetCDF
+    // collect from the cache ran 4; the window-chain UDG filter with
+    // its join back and final dedup ran 13.
+    assert(queries.size === 1, s"Cli l2 ran ${queries.size} queries")
+    assert(jobs <= 1, s"Cli l2 ran $jobs jobs")
     assert(spark.sharedState.cacheManager.isEmpty,
       "Cli l2 left its Level-2 frame in the cache manager")
     assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
@@ -91,32 +135,28 @@ class CliSpec extends SparkSpec {
     val root = siteTree().toString
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (jobs, scanStages) = jobsAndScanStagesDuring {
+    val (queries, jobs, scanStages) = queriesDuring {
       Cli.main(Array("l1", "fs9", "-data_root", root))
     }
-    // 5 on this fixture: the broadcast file-order map; the count
-    // that fills the cache (the exchange's map stage, the kernel
-    // into the cache, the final count); the write from the cache.
-    // A null-column aggregate before a window dedup ran 8.
-    assert(jobs <= 5, s"Cli l1 ran $jobs jobs")
+    // 3 on this fixture: the broadcast file-order map, the exchange's
+    // map stage and the kernel's collect. The pass into a cache, with
+    // its count and a CSV write job from the cache, ran 5; a
+    // null-column aggregate before a window dedup ran 8.
+    assert(queries.size === 1, s"Cli l1 ran ${queries.size} queries")
+    assert(jobs <= 3, s"Cli l1 ran $jobs jobs")
     assert(scanStages === 1, "the bales must be read by one stage")
     assert(spark.sharedState.cacheManager.isEmpty,
       "Cli l1 left its Level-1 frame in the cache manager")
     assert(spark.sparkContext.getPersistentRDDs.keySet === rddsBefore,
       "Cli l1 left persisted blocks behind")
 
-    // the plan withProduct caches, under the product's cache scan
+    // the plan of the one query Cli l1 collected
     val plans = new AdaptiveSparkPlanHelper {}
-    val site = graft.pipeline.Site.fromToml(spark,
-      s"$root/firn_stations/ppconfig/fs9.toml", root)
-    val cached = site.withLevel1 { (l1, _) =>
-      plans.collect(l1.queryExecution.executedPlan) {
-        case s: InMemoryTableScanExec => s.relation.cachedPlan
-      }
-    }
-    assert(cached.size === 1, cached.toString)
-    assert(plans.collect(cached.head) { case w: WindowExec => w }.isEmpty,
-      cached.head.toString)
+    val plan = queries.head.executedPlan
+    assert(plans.collect(plan) { case w: WindowExec => w }.isEmpty,
+      plan.toString)
+    assert(plans.collect(plan) { case s: InMemoryTableScanExec => s }
+      .isEmpty, plan.toString)
   }
 
   test("the Level-2 plan sorts once, below its UDG kernel, and shuffles " +
@@ -166,6 +206,29 @@ class CliSpec extends SparkSpec {
       case j: BroadcastHashJoinExec => j
     }
     assert(banned.isEmpty, plan.toString)
+  }
+
+  test("l1 and l2 write through the FileSystem of a file: URI outfile") {
+    val root = siteTree().toString
+    val dir = Files.createTempDirectory("cliuri")
+    val l1 = s"file://$dir/l1/fs9.csv"
+    val l2 = s"file://$dir/l2/fs9.csv"
+    Cli.main(Array("l1", "fs9", "-data_root", root, "-outfile", l1))
+    Cli.main(Array("l2", "fs9", "-data_root", root, "-l1file", l1,
+      "-outfile", l2))
+    Seq("l1", "l2").foreach { p =>
+      assert(Files.exists(partFile(s"$dir/$p/fs9.csv")), p)
+      assert(Files.exists(dir.resolve(s"$p/fs9.csv/_SUCCESS")), p)
+    }
+    assert(NcReader.read(s"$dir/l2/fs9.nc").dims === Seq(("TIMESTAMP", 96)))
+    // the guard resolves the same FileSystem for the NetCDF
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      dir.resolve("l2/fs9.csv").toFile)
+    val e = intercept[java.io.IOException] {
+      Cli.main(Array("l2", "fs9", "-data_root", root, "-l1file", l1,
+        "-outfile", l2))
+    }
+    assert(e.getMessage.contains("NetCDF"), e.getMessage)
   }
 
   /** Level-2 over a hand-made Level-1 CSV built from `lines` (header

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+
+import graft.pipeline.Collect
 import graft.sink.NetCdf
 import graft.sink.NetCdf.{Att, Dim, Dataset => NcDataset, Var => NcVar}
 
@@ -10,6 +13,17 @@ import graft.sink.NetCdf.{Att, Dim, Dataset => NcDataset, Var => NcVar}
   * off the Unidata classic-format spec — it shares no code with the
   * writer), plus structural golden assertions on the raw bytes. */
 class NetCdfSpec extends SparkSpec {
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** `NetCdf.writeWide` over `df`'s rows, collected in time order. */
+  private def writeWide(path: String, df: DataFrame, timeCol: String,
+                        globalAtts: Seq[Att] = Nil,
+                        varAtts: Map[String, Seq[Att]] = Map.empty,
+                        fixedPointCols: Seq[String] = Nil): Unit =
+    NetCdf.writeWide(conf, path, df.schema,
+      Collect.rows(df.orderBy(timeCol)), timeCol, globalAtts,
+      varAtts, fixedPointCols)
 
   test("netcdf: level2-shaped dataset round-trips byte-exactly") {
     // the reference's export shape: time coordinate, a (time × sensor)
@@ -31,7 +45,7 @@ class NetCdfSpec extends SparkSpec {
         NcVar("dtc1_install_depth", Seq(1), Seq(Att("units", "m")),
           NetCdf.NcFloat, Array(-0.5, -1.5)),
         NcVar("Q", Seq(0), Nil, NetCdf.NcInt, Array(1, 2, 3))))
-    NetCdf.write(path, ds)
+    NetCdf.write(conf, path, ds)
     val r = NcReader.read(path)
     assert(r.numrecs === 0)
     assert(r.dims === Seq(("time", 3), ("dtc1_sensor", 2)))
@@ -63,7 +77,7 @@ class NetCdfSpec extends SparkSpec {
       (new java.sql.Timestamp(900000L), None, 20L),
       (new java.sql.Timestamp(1800000L), Some(-2.5), 30L))
       .toDF("ts", "udg", "rec")
-    NetCdf.writeWide(path, df, "ts",
+    writeWide(path, df, "ts",
       globalAtts = Seq(Att("site", "fs1")),
       varAtts = Map("udg" -> Seq(Att("units", "m"))))
     val r = NcReader.read(path)
@@ -88,7 +102,7 @@ class NetCdfSpec extends SparkSpec {
       (new java.sql.Timestamp(900000L), BigDecimal("-2.125")))
       .toDF("ts", "dec").withColumn("dec",
         col("dec").cast("decimal(12,3)"))
-    NetCdf.writeWide(dir + "/dec.nc", df, "ts")
+    writeWide(dir + "/dec.nc", df, "ts")
     val r = NcReader.read(dir + "/dec.nc")
     assert(r.vars.map(_.name) === Seq("ts", "dec"))
     assert(r.data(r.vars(1)).toSeq === Seq(1.25, -2.125))
@@ -97,7 +111,7 @@ class NetCdfSpec extends SparkSpec {
     val big = Seq((new java.sql.Timestamp(0L), 3.0e6))
       .toDF("ts", "v")
     val e1 = intercept[IllegalArgumentException] {
-      NetCdf.writeWide(dir + "/of.nc", big, "ts",
+      writeWide(dir + "/of.nc", big, "ts",
         fixedPointCols = Seq("v"))
     }
     assert(e1.getMessage.contains("int32 fixed-point range"))
@@ -105,7 +119,7 @@ class NetCdfSpec extends SparkSpec {
     val bigLong = Seq((new java.sql.Timestamp(0L), (1L << 53) + 1L))
       .toDF("ts", "n")
     val e2 = intercept[IllegalArgumentException] {
-      NetCdf.writeWide(dir + "/lg.nc", bigLong, "ts")
+      writeWide(dir + "/lg.nc", bigLong, "ts")
     }
     assert(e2.getMessage.contains("not exact in NC_DOUBLE"))
     // decimal with >15 significant digits would silently lose digits
@@ -114,12 +128,12 @@ class NetCdfSpec extends SparkSpec {
       BigDecimal("1234567.1234567891")))
       .toDF("ts", "d").withColumn("d", col("d").cast("decimal(20,10)"))
     val e3 = intercept[IllegalArgumentException] {
-      NetCdf.writeWide(dir + "/bd.nc", bigDec, "ts")
+      writeWide(dir + "/bd.nc", bigDec, "ts")
     }
     assert(e3.getMessage.contains("not exact in NC_DOUBLE"))
     // string columns are skipped (not representable), never fatal
     val mixed = df.withColumn("label", expr("'x'"))
-    NetCdf.writeWide(dir + "/mix.nc", mixed, "ts")
+    writeWide(dir + "/mix.nc", mixed, "ts")
     assert(NcReader.read(dir + "/mix.nc").vars.map(_.name) === Seq("ts", "dec"))
   }
 
@@ -133,7 +147,7 @@ class NetCdfSpec extends SparkSpec {
       (new java.sql.Timestamp(900000L), None),
       (new java.sql.Timestamp(1800000L), Some(-2.5)))
       .toDF("ts", "udg")
-    NetCdf.writeWide(path, df, "ts",
+    writeWide(path, df, "ts",
       varAtts = Map("udg" -> Seq(Att("units", "m"))),
       fixedPointCols = Seq("udg"))
     val r = NcReader.read(path)
@@ -151,9 +165,30 @@ class NetCdfSpec extends SparkSpec {
     val collide = Seq((new java.sql.Timestamp(0L), -9.999))
       .toDF("ts", "udg")
     val e = intercept[IllegalArgumentException] {
-      NetCdf.writeWide(path + ".c", collide, "ts",
+      writeWide(path + ".c", collide, "ts",
         fixedPointCols = Seq("udg"))
     }
     assert(e.getMessage.contains("_FillValue"))
+  }
+
+  test("netcdf: writeWide writes collected rows with no Spark job, and " +
+    "refuses rows out of time order before it opens the file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("nc")
+    val df = Seq((new java.sql.Timestamp(900000L), 2.0),
+      (new java.sql.Timestamp(0L), 1.0)).toDF("ts", "v")
+    val sorted = Collect.rows(df.orderBy("ts"))
+    val path = dir.resolve("rows.nc").toString
+    assert(jobsDuring(NetCdf.writeWide(conf, path, df.schema, sorted,
+      "ts")) === 0)
+    assert(NcReader.read(path).atts.isEmpty)
+    val e = intercept[IllegalArgumentException] {
+      NetCdf.writeWide(conf, dir.resolve("unsorted.nc").toString,
+        df.schema, sorted.reverse, "ts")
+    }
+    assert(e.getMessage.contains("not in time order"))
+    // nothing of the refused file, not even its hidden temporary
+    assert(Files.list(dir).toArray.map(_.toString.split('/').last)
+      .filterNot(_.endsWith(".crc")).toSeq === Seq("rows.nc"))
   }
 }

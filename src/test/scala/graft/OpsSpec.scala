@@ -107,7 +107,8 @@ class OpsSpec extends SparkSpec {
   test("S4/S5 — single-file CSV sink round-trips") {
     val dir = java.nio.file.Files.createTempDirectory("csv").toString + "/l1"
     val df = Seq((t(0), 1.5), (t(1), 2.5)).toDF("ts", "v")
-    graft.sink.Writers.csvSingle(df, dir, sortCols = Seq("ts"))
+    graft.sink.Writers.csvSingle(spark, df.schema,
+      graft.pipeline.Collect.rows(df.orderBy("ts")), dir)
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".csv"))
     assert(files.length === 1, "level-1 product is ONE continuous csv")

@@ -55,31 +55,30 @@ class SiteSpec extends SparkSpec {
     assert(site.site === "FS_TEST")
     assert(site.udgTarget === "TCDT(m)")
 
-    site.withLevel1 { (l1, _) =>
-      assert(l1.count() === 96)
-      val l2 = site.level2(l1).cache()
-      try {
-        assert(l2.count() === 96)
-        assert(l2.columns.contains("TCDT(m)"))
-        assert(l2.columns.contains("t_air(C)"))
-        assert(l2.columns.contains("EC_1(microS)"))
-        assert(!l2.columns.contains("RECORD"))
-        // normalised UDG ≈ 2.065 - 2.06
-        val udg = l2.agg(avg(col("TCDT(m)"))).head().getDouble(0)
-        assert(math.abs(udg - 0.005) < 1e-6)
-      } finally l2.unpersist()
-    }
+    val p = site.level1()
+    assert(p.rows.length === 96)
+    val l2 = site.level2(frameOf(p.schema, p.rows)).cache()
+    try {
+      assert(l2.count() === 96)
+      assert(l2.columns.contains("TCDT(m)"))
+      assert(l2.columns.contains("t_air(C)"))
+      assert(l2.columns.contains("EC_1(microS)"))
+      assert(!l2.columns.contains("RECORD"))
+      // normalised UDG ≈ 2.065 - 2.06
+      val udg = l2.agg(avg(col("TCDT(m)"))).head().getDouble(0)
+      assert(math.abs(udg - 0.005) < 1e-6)
+    } finally l2.unpersist()
   }
 
-  test("withLevel1 reads the bales in one scan stage, an action on the " +
+  test("level1 reads the bales in one scan stage, an action on the " +
     "product included") {
     val site = twoBaleSite()
     val (_, scanStages) = jobsAndScanStagesDuring {
-      assert(site.withLevel1 { (l1, _) => l1.count() } === 96)
+      assert(site.level1().rows.length === 96)
     }
-    // the pass into the cache reads the bales; the action reads the
-    // cache. A Level-1 plan that learns its all-null columns by running
-    // the pass, with no cache, reads them again for the action: 2.
+    // the one query reads the bales; the product is on the driver. A
+    // Level-1 plan that learns its all-null columns by running the
+    // pass, then runs it again for the action, reads them twice.
     assert(scanStages === 1, s"the bales were read by $scanStages stages")
   }
 
@@ -102,8 +101,7 @@ class SiteSpec extends SparkSpec {
         |serviced = true
         |""".stripMargin)
     val site = Site.fromToml(spark, toml.toString, root.toString)
-    site.withLevel1 { (l1, _) =>
-      assert(l1.count() === 30) // 24 from the file + 6 serviced
-    }
+    // 24 from the file + 6 serviced
+    assert(site.level1().rows.length === 30)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,6 +44,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         Thread.sleep(20)
       (jobs.size, scanStages.get)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A frame over rows collected on the driver (`Collect.rows`,
+    * `Level1.product`), so specs can query them. */
+  def frameOf(schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(toRow(_).asInstanceOf[Row]): _*),
+      schema)
   }
 
   /** Runs `body` on a new temp corpus directory named after `prefix`,

@@ -13,6 +13,12 @@ import graft.pipeline.Level1
   * the null-column drop. */
 class Toa5IngestSpec extends SparkSpec {
 
+  /** The Level-1 product of `sources`, as a frame to query. */
+  private def l1Frame(sources: Seq[Level1.Source]) = {
+    val p = Level1.product(spark, sources)
+    frameOf(p.schema, p.rows)
+  }
+
   private def ts(minOffset: Int): String =
     java.time.LocalDateTime.of(2021, 4, 30, 18, 0)
       .plusMinutes(minOffset.toLong * 15).toString.replace('T', ' ')
@@ -62,31 +68,29 @@ class Toa5IngestSpec extends SparkSpec {
       (10 to 19).map(i => (i + 91, i)))
     writeBale(dir, 3, (20 to 24).map(i => (i + 81, i)))
 
-    Level1.withProduct(spark, Seq(Level1.Source(dir.toString, 1, 3))) {
-      (l1, _) =>
-        assert(l1.count() === 25) // 25 unique timestamps
-        assert(!l1.columns.contains("AllNan"), "all-NAN column must drop")
-        val first = l1.orderBy("TIMESTAMP").head()
-        val last = l1.orderBy(col("TIMESTAMP").desc).head()
-        assert(first.getAs[java.sql.Timestamp]("TIMESTAMP").toString
-          .startsWith("2021-04-30 18:00"))
-        assert(last.getAs[Long]("RECORD") === 105L)
-        // keep-first: ts index 6 appeared in bale1 (record 7) and bale2
-        // (record 100) — bale1 wins
-        val dup = l1.where(col("TIMESTAMP") === lit(ts(6))).head()
-        assert(dup.getAs[Long]("RECORD") === 7L)
-        // typed columns
-        assert(l1.schema("TCDT").dataType.typeName === "double")
-        assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
-    }
+    val l1 = l1Frame(Seq(Level1.Source(dir.toString, 1, 3)))
+    assert(l1.count() === 25) // 25 unique timestamps
+    assert(!l1.columns.contains("AllNan"), "all-NAN column must drop")
+    val first = l1.orderBy("TIMESTAMP").head()
+    val last = l1.orderBy(col("TIMESTAMP").desc).head()
+    assert(first.getAs[java.sql.Timestamp]("TIMESTAMP").toString
+      .startsWith("2021-04-30 18:00"))
+    assert(last.getAs[Long]("RECORD") === 105L)
+    // keep-first: ts index 6 appeared in bale1 (record 7) and bale2
+    // (record 100) — bale1 wins
+    val dup = l1.where(col("TIMESTAMP") === lit(ts(6))).head()
+    assert(dup.getAs[Long]("RECORD") === 7L)
+    // typed columns
+    assert(l1.schema("TCDT").dataType.typeName === "double")
+    assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
   }
 
-  test("withProduct reports in/out row counts as job metrics") {
+  test("the Level-1 product reports in/out row counts as job metrics") {
     val dir = Files.createTempDirectory("toa5o")
     writeBale(dir, 1, (0 to 9).map(i => (i + 1, i)))
     writeBale(dir, 2, (5 to 9).map(i => (i + 50, i))) // 5 dup timestamps
-    val rows = Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 2))) { (_, rows) => rows }
+    val rows = Level1.product(spark,
+      Seq(Level1.Source(dir.toString, 1, 2))).counts
     assert(rows.in === 15L)
     assert(rows.out === 10L)
   }
@@ -99,9 +103,9 @@ class Toa5IngestSpec extends SparkSpec {
     writeBale(dir, 1, Seq((1, 0), (2, 1), (2, 1), (3, 2), (4, 3)))
     // bale 2 overlaps ts 2..3 (bale 1 wins) and repeats its own ts 4 row
     writeBale(dir, 2, Seq((60, 2), (61, 3), (62, 4), (62, 4), (63, 5)))
-    val (counts, rows) = Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 2))) { (df, counts) =>
-      (counts, df.orderBy("TIMESTAMP").collect())
+    val (counts, rows) = {
+      val p = Level1.product(spark, Seq(Level1.Source(dir.toString, 1, 2)))
+      (p.counts, frameOf(p.schema, p.rows).orderBy("TIMESTAMP").collect())
     }
     assert(counts.in === 10L)
     assert(counts.out === 6L)
@@ -156,8 +160,8 @@ class Toa5IngestSpec extends SparkSpec {
     writeBale(dir, 2, Seq((50, 4), (51, 5)))
     val b2 = dir.resolve("MainTable2.dat")
     Files.writeString(b2, Files.readString(b2).replace(",NAN", ",7.5"))
-    val (cols, rows) = Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 2))) { (l1, _) =>
+    val (cols, rows) = {
+      val l1 = l1Frame(Seq(Level1.Source(dir.toString, 1, 2)))
       (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
     }
     assert(cols.contains("AllNan"))
@@ -184,9 +188,10 @@ class Toa5IngestSpec extends SparkSpec {
     // union puts both after the file order column
     bale(b, Seq("TIMESTAMP", "RECORD", "T107_C", "Y", "Z"),
       (3 to 4).map(i => i -> Seq(s"-${i + 1}.0", "NAN", s"$i.5")))
-    val (cols, rows) = Level1.withProduct(spark, Seq(
-      Level1.Source(a.toString, 1, 1), Level1.Source(b.toString, 1, 1))) {
-      (l1, _) => (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
+    val (cols, rows) = {
+      val l1 = l1Frame(Seq(
+        Level1.Source(a.toString, 1, 1), Level1.Source(b.toString, 1, 1)))
+      (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
     }
     assert(cols === Seq("TIMESTAMP", "RECORD", "T107_C", "Z"))
     assert(rows.map(r => Option(r.getAs[Any]("Z"))).toSeq ===
@@ -208,8 +213,8 @@ class Toa5IngestSpec extends SparkSpec {
     bale(1, (0 to 3).map(i => (i, -1.0)))
     bale(2, (2 to 5).map(i => (i, -2.0))) // ts 2..3 lose to bale 1
     bale(3, (5 to 6).map(i => (i, -3.0))) // ts 5 loses to bale 2
-    val (cols, rows) = Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 3))) { (l1, _) =>
+    val (cols, rows) = {
+      val l1 = l1Frame(Seq(Level1.Source(dir.toString, 1, 3)))
       (l1.columns.toSeq, l1.orderBy("TIMESTAMP").collect())
     }
     assert(!cols.contains("RECORD"))
@@ -227,20 +232,16 @@ class Toa5IngestSpec extends SparkSpec {
     Files.move(svDir.resolve("MainTable9.dat"),
       sv.resolve("x_MainTable_sv.dat"))
 
-    Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 1, serviced = true))) { (l1, _) =>
-      assert(l1.count() === 15)
-      // ts 8 came from the bale (record 9), not the serviced re-send (208)
-      val r8 = l1.where(col("TIMESTAMP") === lit(ts(8))).head()
-      assert(r8.getAs[Long]("RECORD") === 9L)
-    }
+    val l1 = l1Frame(Seq(Level1.Source(dir.toString, 1, 1, serviced = true)))
+    assert(l1.count() === 15)
+    // ts 8 came from the bale (record 9), not the serviced re-send (208)
+    val r8 = l1.where(col("TIMESTAMP") === lit(ts(8))).head()
+    assert(r8.getAs[Long]("RECORD") === 9L)
 
     // two matches -> no append
     Files.writeString(sv.resolve("y_MainTable_2.dat"), "junk")
-    Level1.withProduct(spark,
-      Seq(Level1.Source(dir.toString, 1, 1, serviced = true))) { (l1b, _) =>
-      assert(l1b.count() === 10)
-    }
+    val l1b = l1Frame(Seq(Level1.Source(dir.toString, 1, 1, serviced = true)))
+    assert(l1b.count() === 10)
   }
 
   test("UDG filter is key-isolated across stations") {
@@ -292,12 +293,10 @@ class Toa5IngestSpec extends SparkSpec {
     // every bale re-sends timestamp 0 with a record equal to its bale
     // number — keep-first must pick bale 1's record across all 100
     (1 to 100).foreach(n => writeBale(dir, n, Seq((n, 0), (1000 + n, n))))
-    Level1.withProduct(spark, Seq(Level1.Source(dir.toString, 1, 100))) {
-      (l1, _) =>
-        assert(l1.count() === 101) // ts 0 + unique ts 1..100
-        assert(l1.where(col("TIMESTAMP") === lit(ts(0))).head()
-          .getAs[Long]("RECORD") === 1L)
-    }
+    val l1 = l1Frame(Seq(Level1.Source(dir.toString, 1, 100)))
+    assert(l1.count() === 101) // ts 0 + unique ts 1..100
+    assert(l1.where(col("TIMESTAMP") === lit(ts(0))).head()
+      .getAs[Long]("RECORD") === 1L)
     // and the raw read tags files 0..99 in caller order, not glob order
     val raw = Toa5.read(spark, Toa5.balePaths(dir.toString, 1, 100))
     val seqs = raw.select(Toa5.FileOrderCol).distinct().count()
@@ -308,11 +307,9 @@ class Toa5IngestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("toa5one")
     writeBale(dir, 7, (0 to 9).map(i => (i + 1, i)))
     Files.move(dir.resolve("MainTable7.dat"), dir.resolve("single.dat"))
-    Level1.withProduct(spark,
-      Seq(Level1.Source.onefile(dir.toString, "single.dat"))) { (l1, _) =>
-      assert(l1.count() === 10)
-      assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
-    }
+    val l1 = l1Frame(Seq(Level1.Source.onefile(dir.toString, "single.dat")))
+    assert(l1.count() === 10)
+    assert(l1.schema("TIMESTAMP").dataType.typeName === "timestamp")
   }
 
   test("nrows cap applies per source") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.pipeline.Collect
 import graft.sink.Writers
 
 /** S8/S9 — Parquet+sidecar sink and time-sliced scan with partition
@@ -81,5 +82,67 @@ class WritersSpec extends SparkSpec {
     Writers.parquetWithAttrs(df, out2, attrs = Map("site" -> "FS2"))
     val (g2, v2) = Writers.readAttrs(out2)
     assert(g2 === Map("site" -> "FS2") && v2.isEmpty)
+  }
+
+  /** The bytes of the one `part-*.csv` file under the CSV directory `dir`. */
+  private def csvPart(dir: String): Seq[Byte] = {
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(parts.length === 1, parts.toSeq)
+    Files.readAllBytes(parts.head.toPath).toSeq
+  }
+
+  test("csvSingle writes the bytes Spark's own single-file CSV writer " +
+    "writes") {
+    import org.apache.spark.sql.functions.col
+    val t0 = java.sql.Timestamp.valueOf("2021-04-30 00:00:00").getTime
+    def at(ms: Long, nanos: Int) = {
+      val t = new java.sql.Timestamp(t0 + ms); t.setNanos(nanos); t
+    }
+    // null, NaN, ±Infinity, sub-second timestamps, text that needs quotes
+    val df = Seq(
+      (at(0, 0), Some(1.5), Some(1L), "a"),
+      (at(1000, 123000), None, None, "b,c"),
+      (at(2000, 500000000), Some(Double.NaN), Some(-3L), "say \"hi\""),
+      (at(3000, 999999000), Some(Double.PositiveInfinity), Some(0L), ""),
+      (at(-86400000L, 1000), Some(Double.NegativeInfinity), Some(7L), null))
+      .toDF("ts", "v", "n", "s")
+    val root = Files.createTempDirectory("csvbytes")
+    Seq("rows" -> df, "empty" -> df.where(col("n") > 100)).foreach {
+      case (name, frame) =>
+        val spark1 = root.resolve(s"$name-spark").toString
+        val ours = root.resolve(s"$name-ours").toString
+        frame.coalesce(1).write.option("header", "true").csv(spark1)
+        Writers.csvSingle(spark, frame.schema, Collect.rows(frame), ours)
+        assert(new String(csvPart(ours).toArray, "UTF-8") ===
+          new String(csvPart(spark1).toArray, "UTF-8"), name)
+        assert(csvPart(ours) === csvPart(spark1), name)
+        assert(new java.io.File(ours, "_SUCCESS").isFile, name)
+    }
+  }
+
+  test("csvSingle replaces the product, with _SUCCESS last; a write " +
+    "that fails leaves neither a part file nor its temporary") {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val out = Files.createTempDirectory("csvcommit").resolve("out.csv")
+    val df = Seq((1, 2.5), (2, 3.5)).toDF("k", "v")
+    val rows = Collect.rows(df.orderBy("k"))
+    Writers.csvSingle(spark, df.schema, rows, out.toString)
+    // an overwrite replaces the old product; nothing else is left
+    Writers.csvSingle(spark, df.schema, rows.take(1), out.toString)
+    def visible = out.toFile.list().filterNot(_.endsWith(".crc")).sorted.toSeq
+    assert(visible === Seq("_SUCCESS", "part-00000.csv"))
+    assert(new String(csvPart(out.toString).toArray, "UTF-8") ===
+      "k,v\n1,2.5\n")
+    // a row that fails as the generator reads it
+    val bad = new GenericInternalRow(Array[Any](3, 4.5)) {
+      override def isNullAt(i: Int): Boolean =
+        throw new IllegalStateException("unreadable row")
+    }
+    intercept[IllegalStateException] {
+      Writers.csvSingle(spark, df.schema, rows :+ bad, out.toString)
+    }
+    assert(visible === Nil)
+    assert(out.toFile.list().filter(_.contains("part-")).isEmpty)
   }
 }
