@@ -232,8 +232,8 @@ object BloomExpressions {
       GraftColumnBridge.expression(bits),
       GraftColumnBridge.expression(v)))
 
-  /** The header word a bitmap built with `numHashes` carries in word
-    * 0 — for persisted-bitmap compatibility guards (a standing sketch
-    * outlives the code that built it). */
+  /** The header word of a bitmap built with `numHashes`. Its one
+    * caller is the benchmark's kernel microbench; it goes once ROADMAP
+    * direction 3 builds that header inside the harness. */
   def headerWord(numHashes: Int): Long = BloomHash.header(numHashes)
 }

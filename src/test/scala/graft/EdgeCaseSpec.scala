@@ -254,14 +254,27 @@ class EdgeCaseSpec extends SparkSpec {
     assert(out.count() === 0)
   }
 
-  test("perceptual-hash pipelines accept empty input") {
-    val noHashes = Seq.empty[(Long, Long)].toDF("id", "phash")
-    assert(Multimodal.phashNearDup(noHashes).count() === 0)
-    assert(Multimodal.phashClusters(noHashes).count() === 0)
-    val noRows = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Multimodal.Schema)
-    assert(Multimodal.imageDHash(noRows).count() === 0)
-    assert(Multimodal.audioEnvHash(noRows).count() === 0)
+  test("t81 scores empty, whitespace-only and one-token text with " +
+    "n_feats >= 1 and drops null text") {
+    // `sw div n_feats` carries no guard: for non-null text Spark's
+    // split returns at least one token, so the histogram counts at
+    // least one unigram, and the scorer filters null text. Under the
+    // session's default ANSI mode a zero divisor would fail the query
+    // with DIVIDE_BY_ZERO; this case pins that it cannot happen.
+    assert(spark.sessionState.conf.ansiEnabled)
+    withTempCorpus("graft-t81-degenerate") { dir =>
+      Seq[(Long, String, String)]((1L, "src0", ""), (2L, "src1", "   "),
+        (3L, "web", "word"), (4L, "web", null))
+        .toDF("doc_id", "source", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      val rows = SparkEntry.queries("t81_hash_classifier")(spark, dir)
+        .collect()
+      assert(rows.map(_.getAs[Long]("doc_id")).sorted.toSeq ===
+        Seq(1L, 2L, 3L))
+      rows.foreach { r =>
+        assert(r.getAs[Long]("n_feats") >= 1, s"no features: $r")
+        assert(!r.isNullAt(r.fieldIndex("score_ppm")), s"no score: $r")
+      }
+    }
   }
 }
